@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,20 +47,42 @@ object TimeSeriesOps {
 
   /** Align observed samples onto the union of (grid ∪ observed) instants
     * (reference J1: reindex over union of original + grid timestamps,
-    * training_preprocessing.py:134-148). Full-outer join on (key, tick);
-    * `_on_grid` / `is_real` flags derive from which side matched.
-    * The join keys carry the series key, so at scale this is a co-partitioned
-    * sort-merge join per series, not a global one.
+    * training_preprocessing.py:134-148); the grid is [[timeGrid]]'s, from
+    * each series' first tick in steps of `stepTick`.
+    *
+    * One pass over the series sorted by (key, tick), no join and no second
+    * read of `samples`: a single window carries the series minimum and the
+    * previous tick, and one `explode` emits every real row together with
+    * the on-grid ticks strictly between the previous tick and its own. The
+    * synthetic rows carry the key and the tick, every other column null.
+    * Adds `is_real` (an input row) and `_on_grid` (the tick is a grid
+    * instant). `tick` must be integral; a row with a null tick passes
+    * through as a real, off-grid row.
     */
   def gridAlign(samples: DataFrame, key: Seq[String], tick: String,
                 stepTick: Long): DataFrame = {
-    val grid = timeGrid(samples, key, col(tick), stepTick, gridName = tick)
-      .withColumn("_on_grid", lit(true))
-    val real = samples.withColumn("is_real", lit(true))
-    real
-      .join(grid, key :+ tick, "full_outer")
-      .withColumn("_on_grid", coalesce(col("_on_grid"), lit(false)))
-      .withColumn("is_real", coalesce(col("is_real"), lit(false)))
+    val w = Window.partitionBy(key.map(col): _*).orderBy(col(tick))
+    val t = col(tick).cast("long")
+    val step = lit(stepTick)
+    val scanned = samples.select(col("*"),
+      min(t).over(w).as("__t0"), lag(t, 1).over(w).as("__prev"))
+    val (t0, prev) = (col("__t0"), col("__prev"))
+    // [lo, hi]: the grid ticks strictly between the previous tick and this one
+    val lo = prev - pmod(prev - t0, step) + step
+    val hi = t - 1 - pmod(t - 1 - t0, step)
+    val between = when(prev.isNotNull && lo <= hi, sequence(lo, hi, step))
+      .otherwise(array().cast("array<long>"))
+    val emitted = concat(
+      transform(between, g => struct(g.as("t"), lit(false).as("real"))),
+      array(struct(t.as("t"), lit(true).as("real"))))
+    val real = col("__e.real")
+    val rest = samples.columns.filterNot(c => key.contains(c) || c == tick)
+    scanned.select(col("*"), explode(emitted).as("__e"))
+      .select(key.map(col) ++
+        Seq(col("__e.t").cast(samples.schema(tick).dataType).as(tick)) ++
+        rest.map(c => when(real, col(c)).as(c)) ++
+        Seq(real.as("is_real"),
+          coalesce(pmod(col("__e.t") - t0, step) === 0, lit(false)).as("_on_grid")): _*)
   }
 
   /** Index-weighted linear interpolation of `valueCols` over `tick`, per
@@ -91,10 +115,8 @@ object TimeSeriesOps {
     val wNext = Window.partitionBy(key.map(col): _*).orderBy(col(tick).desc)
       .rowsBetween(Window.unboundedPreceding, 0)
     val state = call_function("interp_state", (col(tick) +: valueCols.map(col)): _*)
-    val st = df
-      .withColumn("__fwd", state.over(wPrev))
-      .withColumn("__bwd", state.over(wNext))
-    val out = valueCols.zipWithIndex.foldLeft(st) { case (acc, (c, i)) =>
+    val st = df.select(col("*"), state.over(wPrev).as("__fwd"), state.over(wNext).as("__bwd"))
+    val interped = valueCols.zipWithIndex.map { case (c, i) =>
       val v = col(c)
       val prevV = col(s"__fwd.v$i"); val prevT = col(s"__fwd.t$i")
       val nextV = col(s"__bwd.v$i"); val nextT = col(s"__bwd.t$i")
@@ -104,9 +126,10 @@ object TimeSeriesOps {
         .when(prevV.isNotNull && nextV.isNotNull,
           prevV.cast("double") + (nextV.cast("double") - prevV.cast("double")) * frac)
         .otherwise(coalesce(prevV, nextV).cast("double"))
-      acc.withColumn(c + suffix, interp)
+      (c + suffix) -> interp
     }
-    out.drop("__fwd", "__bwd")
+    // one projection: a withColumn per column re-analyzes the plan each time
+    st.withColumns(ListMap(interped: _*)).drop("__fwd", "__bwd")
   }
 
   /** Distance (in ticks) between the neighbouring *real* samples around each
@@ -135,9 +158,8 @@ object TimeSeriesOps {
   def voidWideGaps(df: DataFrame, valueCols: Seq[String], maxGap: Long,
                    applyTo: Column): DataFrame = {
     val tooWide = applyTo && col("gap_span").isNotNull && (col("gap_span") > maxGap)
-    valueCols.foldLeft(df) { (acc, c) =>
-      acc.withColumn(c, when(tooWide, lit(null)).otherwise(col(c)))
-    }
+    df.withColumns(ListMap(valueCols.map(c =>
+      c -> when(tooWide, lit(null)).otherwise(col(c))): _*))
   }
 
   /** Forward-fill nulls per series in tick order, optionally zero-filling

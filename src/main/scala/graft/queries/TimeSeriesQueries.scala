@@ -57,8 +57,8 @@ object TimeSeriesQueries extends QueryPack {
        |  ${r4Sql("avg(value)")} AS hr_avg
        |FROM events GROUP BY 1, 2""".stripMargin
 
-  /** Aligned = hourly series full-outer-joined onto the per-user hour grid
-    * (J1); `is_real` marks hours that had events.
+  /** Aligned = hourly series aligned onto the per-user hour grid (J1);
+    * `is_real` marks hours that had events.
     */
   private def aligned(s: SparkSession, dir: String): DataFrame =
     TimeSeriesOps.gridAlign(hourly(s, dir), Seq("user_id"), "h", 1L)
@@ -122,7 +122,7 @@ object TimeSeriesQueries extends QueryPack {
         .orderBy(col("user_id"), col("grid_h"))
     }),
 
-    // J1: full-outer align of observed samples onto the grid with
+    // J1: one-pass align of observed samples onto the grid with
     // _on_grid / is_real flags (reference reindex union,
     // training_preprocessing.py:134-148).
     "j1_grid_align" -> ((s, dir) => {

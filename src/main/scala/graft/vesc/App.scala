@@ -52,19 +52,21 @@ object App {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** One upload batch → refreshed serving artifacts. The figure is the
-    * full Plotly JSON contract ([[Export.timelineBarsJson]]); the
-    * sidecar `last_refresh.json` (batch id + row count) is what a client
-    * — and the e2e spec — polls to know the refresh landed, instead of
-    * diffing figure bytes.
+  /** One upload batch → refreshed serving artifacts. The timeline is
+    * evaluated once: its rows are collected ([[Export.displayRows]]), and
+    * both artifacts come from them. The figure is the full Plotly JSON
+    * contract ([[Export.renderBars]]); the sidecar `last_refresh.json`
+    * (batch id + row count, which is the figure's bar count) is what a
+    * client — and the e2e spec — polls to know the refresh landed, instead
+    * of diffing figure bytes.
     */
   private[vesc] def refresh(exportDir: Path, timeline: DataFrame,
                             batchId: Long): Unit = {
     Files.createDirectories(exportDir)
-    val figure = Export.timelineBarsJson(timeline)
-    atomicWrite(exportDir.resolve("timeline_bars.json"), figure)
+    val display = Export.displayRows(timeline)
+    atomicWrite(exportDir.resolve("timeline_bars.json"), Export.renderBars(display))
     atomicWrite(exportDir.resolve("last_refresh.json"),
-      s"""{"batch":$batchId,"rows":${timeline.count()}}""")
+      s"""{"batch":$batchId,"rows":${display.rows.length}}""")
   }
 
   /** Start the loop: serving on `host:port` (0 = ephemeral), uploads
@@ -91,14 +93,7 @@ object App {
     */
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: App <exportDir> <uploadDir> [port] [host]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("vesc-app")
     val handles = start(spark,
       java.nio.file.Paths.get(args(0)), java.nio.file.Paths.get(args(1)),
       if (args.length > 2) args(2).toInt else 8080,

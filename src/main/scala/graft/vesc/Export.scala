@@ -3,7 +3,7 @@ package graft.vesc
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Rendered-deliverable export — the reference's last mile. The engine's
@@ -64,10 +64,33 @@ object Export {
     if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString
     else d.toString
 
+  /** A collected display timeline: its `cf_*` columns, sorted by name, and
+    * one row per bar, (tsec, cf_* …) in that column order, sorted by tsec.
+    */
+  final case class DisplayRows(cfCols: Seq[String], rows: Array[Row])
+
+  /** Collects a display timeline in one job. The timeline is small (2
+    * rows/sec of ride after the A6 downsample), so it is sorted here
+    * rather than by a range-partitioned Spark sort, which costs a
+    * sampling job and a shuffle.
+    */
+  def displayRows(timeline: DataFrame): DisplayRows = {
+    val cfCols = timeline.columns.filter(_.startsWith("cf_")).toSeq.sorted
+    val rows = timeline.select((col("tsec") +: cfCols.map(col)): _*).collect()
+    DisplayRows(cfCols, rows.sortBy(_.getDouble(0)))
+  }
+
   /** Plotly figure JSON for one ride's display timeline (already rebased,
     * conflict-suppressed, downsampled — [[Postprocess.displayTimeline]]
-    * output). Behaviors with no value above the display threshold still get
-    * a trace (all-null y), like the reference's always-added Bar.
+    * output): [[displayRows]] then [[renderBars]].
+    */
+  def timelineBarsJson(timeline: DataFrame, stack: Boolean = false,
+                       classes: Option[Seq[String]] = None): String =
+    renderBars(displayRows(timeline), stack, classes)
+
+  /** The figure for collected display rows. Behaviors with no value above
+    * the display threshold still get a trace (all-null y), like the
+    * reference's always-added Bar.
     *
     * `stack` mirrors the reference's "Stack bars vertically" checkbox
     * (app.py:331,355 — `barmode=("stack" if stack else "overlay")`);
@@ -76,18 +99,13 @@ object Export {
     * reference's export-everything/overlay behavior so existing callers
     * (App streaming loop, CLI) are unchanged.
     */
-  def timelineBarsJson(timeline: DataFrame, stack: Boolean = false,
-                       classes: Option[Seq[String]] = None): String = {
+  def renderBars(display: DisplayRows, stack: Boolean = false,
+                 classes: Option[Seq[String]] = None): String = {
     val selected = classes.map(_.toSet)
-    val cfCols = timeline.columns.filter(_.startsWith("cf_")).toSeq.sorted
-      .filter(c => selected.forall(_.contains(c)))
-    val rows = timeline.select(
-        (col("tsec") +: cfCols.map(col)): _*)
-      .orderBy(col("tsec"))
-      .collect()
+    val rows = display.rows
     val tsec = rows.map(_.getDouble(0))
     val barWidth = math.max(1e-3, 0.9 * DisplayDt)
-    val traces = cfCols.zipWithIndex.map { case (b, i) =>
+    val traces = display.cfCols.zipWithIndex.collect { case (b, i) if selected.forall(_.contains(b)) =>
       val ys = rows.map(r => if (r.isNullAt(i + 1)) Double.NaN else r.getDouble(i + 1))
       val yJson = ys.map(v =>
         if (v.isNaN || v <= MinDisplayThresh) "null" else jnum(v)).mkString("[", ",", "]")
@@ -152,14 +170,7 @@ object Export {
       "usage: Export <outDir> <rawLog.csv>... [--metrics=<labeledScoredParquet>]")
     val outDir = positional.head
     val rawPaths = positional.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate("vesc-export")
 
     val timeline = VescPipeline.analyze(spark, rawPaths)
     timeline.write.mode("overwrite").option("header", "true")

@@ -1,6 +1,6 @@
 package graft.vesc
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,27 +19,23 @@ object Postprocess {
 
   /** Display downsample: consecutive blocks of `step` windows are averaged;
     * step = round(0.5 / median(diff tsec)); the tail remainder is dropped
-    * (reference app.py:221-243).
+    * (reference app.py:221-243). The per-ride median spacing (exact
+    * `percentile` over the ride's diffs) and the ride's row count are
+    * window aggregates over the ride partition the diffs were computed in,
+    * so the scored input is read once: no aggregate joined back.
     */
   def downsampleForDisplay(scored: DataFrame, scoreCols: Seq[String],
                            displayDt: Double = 0.5): DataFrame = {
     val w = Window.partitionBy(col("ride_id")).orderBy(col("tsec"))
-    val withDiff = scored
-      .withColumn("__diff", col("tsec") - lag(col("tsec"), 1).over(w))
-      .withColumn("__rn", row_number().over(w) - 1)
-    // per-ride median spacing (exact, via percentile on the tiny diff set)
-    val med = withDiff
-      .groupBy(col("ride_id"))
-      .agg(expr("percentile(__diff, 0.5)").as("__base_dt"))
-    val stepped = withDiff.join(broadcast(med), "ride_id")
-      .withColumn("__step",
-        greatest(lit(1), round(lit(displayDt) / col("__base_dt")).cast("int")))
-    val wCnt = Window.partitionBy(col("ride_id"))
-    val blocks = stepped
-      .withColumn("__n", count(lit(1)).over(wCnt))
-      .withColumn("__keep",
-        col("__rn") < (col("__n") - pmod(col("__n"), col("__step"))))
-      .filter(col("__keep"))
+    val wAll = Window.partitionBy(col("ride_id"))
+    val withDiff = scored.select(col("*"),
+      (col("tsec") - lag(col("tsec"), 1).over(w)).as("__diff"),
+      (row_number().over(w) - 1).as("__rn"))
+    val step = greatest(lit(1),
+      round(lit(displayDt) / percentile(col("__diff"), lit(0.5)).over(wAll)).cast("int"))
+    val blocks = withDiff
+      .select(col("*"), step.as("__step"), count(lit(1)).over(wAll).as("__n"))
+      .filter(col("__rn") < (col("__n") - pmod(col("__n"), col("__step"))))
       .withColumn("__block", (col("__rn") / col("__step")).cast("long"))
     blocks
       .groupBy(col("ride_id"), col("__block"))
@@ -51,8 +47,8 @@ object Postprocess {
   /** Full display pipeline: rebase → suppress conflicts → downsample. */
   def displayTimeline(scored: DataFrame): DataFrame = {
     val scoreCols = scored.columns.filter(_.startsWith("score_")).toSeq
-    val renamed = scoreCols.foldLeft(scored)((df, c) =>
-      df.withColumnRenamed(c, "cf_" + c.stripPrefix("score_")))
+    val renamed = scored.withColumnsRenamed(
+      scoreCols.map(c => c -> ("cf_" + c.stripPrefix("score_"))).toMap)
     val cfCols = VescSchema.ConfidenceCols.filter(renamed.columns.contains)
     val suppressed = ExclusivityRules.suppressConflicts(renamed)
     downsampleForDisplay(rebaseSeconds(suppressed), cfCols)

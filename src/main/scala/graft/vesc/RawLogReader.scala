@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
 object RawLogReader {
 
   /** Read raw logs. Every column is read as string and cast to double
-    * (malformed cells → null, the `errors="coerce"` semantics); the
+    * with `try_cast` (malformed cells → null, the `errors="coerce"`
+    * semantics; a plain cast throws on them under ANSI mode); the
     * ride date comes from the `YYYY-MM-DD` in the filename and the ride id
     * from a `ride log NN` parent directory (overridable).
     */
@@ -30,7 +31,7 @@ object RawLogReader {
 
     val present = channels.filter(raw.columns.contains)
     val cast = raw.select(
-      present.map(c => col(c).cast("double").as(c)) :+ col("__file"): _*)
+      present.map(c => col(c).try_cast("double").as(c)) :+ col("__file"): _*)
 
     // F1: date from filename → midnight UTC; F3: ts_utc = midnight + ms_today
     val datePart = regexp_extract(col("__file"), "(\\d{4})-(\\d{2})-(\\d{2})", 0)

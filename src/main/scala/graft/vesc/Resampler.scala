@@ -14,11 +14,12 @@ import graft.ops.TimeSeriesOps
   * two WindowExec passes — forward and backward frames):
   *
   *  1. keep-first dedup on ms_today in file order (P6 — order-defined)
-  *  2. 100 ms grid from first to last timestamp (W4, `sequence`+`explode`)
-  *  3. full-outer align onto grid ∪ original instants (J1)
-  *  4. index-weighted linear interpolation, both-direction edge fill (W6)
-  *  5. strict-`>` 250 ms gap voiding of synthetic on-grid rows (W7/W8/P10)
-  *  6. grid filter + elapsed counter + timestamp rebuild + renumber
+  *  2. 100 ms grid from first to last timestamp (W4) aligned with the
+  *     original instants (J1), in one pass: `sequence`+`explode` of the grid
+  *     instants between consecutive samples
+  *  3. index-weighted linear interpolation, both-direction edge fill (W6)
+  *  4. strict-`>` 250 ms gap voiding of synthetic on-grid rows (W7/W8/P10)
+  *  5. grid filter + elapsed counter + timestamp rebuild + renumber
   *     (P7/W9/W10/W3) and normative column order (P3)
   *
   * Deliberate deviation from the reference: `ride_id` stays populated on
@@ -41,7 +42,7 @@ object Resampler {
     val deduped = TimeSeriesOps.dedupKeepFirst(
       df, Seq("ride_id", "ms_today"), col("sample_idx"))
 
-    // grid ∪ original align (J1). ms_today is the long tick.
+    // grid ∪ original align (W4 + J1). ms_today is the long tick.
     val aligned = TimeSeriesOps.gridAlign(
       deduped.withColumn("ms_today", col("ms_today").cast("long")),
       key, "ms_today", stepMs)

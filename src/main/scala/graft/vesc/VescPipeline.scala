@@ -5,9 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end pipelines — the reference's three entry points (SURVEY §3)
   * as single lazy DataFrame DAGs. The reference materializes CSV between
-  * stages (app.py:113-120); here Catalyst plans the whole flow at once and
-  * the only exchanges are the per-ride shuffle (resample + windows share
-  * it) and the final tiny display aggregation.
+  * stages (app.py:113-120); here Catalyst plans the whole flow at once.
+  * [[analyze]] reads its logs in one scan and scores each window once, with
+  * no join: its exchanges are the reader's per-log numbering, the
+  * keep-first dedup on (ride, ms_today) and the per-ride layout that the
+  * grid, windows, scores and display post-processing all share
+  * (AnalyzeOnceSpec pins this shape).
   */
 object VescPipeline {
 
