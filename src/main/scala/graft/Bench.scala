@@ -4,8 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry: runs every SparkEntry query against
   * $SPARK_GRAFT_SF_DIR, forcing full evaluation through the noop sink
   * (a bare count() lets Catalyst prune the projections being measured).
@@ -94,7 +92,6 @@ object Bench {
     val wallStart = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - wallStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // 5 interleaved passes by default: this VM stalls for minutes at a
     // stretch, and a median needs ⌈runs/2⌉ clean samples per query to
     // survive a stall stripe — 3 passes leave no margin for two stalls
@@ -111,15 +108,7 @@ object Bench {
     // keep the full count — 3 clean samples median a heavy row fine, and
     // the saved budget buys the cheap rows their stall margin
     val heavyS = sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAVY_S", "5").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate("graft-bench")
 
     // Warm-up: touch every table once so first-query numbers measure the
     // query, not parquet footer reads + codegen classloading.
@@ -137,21 +126,6 @@ object Bench {
       if (wanted.isEmpty)
         SparkEntry.queries.toSeq.filterNot(_._1.startsWith("v_")).sortBy(_._1)
       else SparkEntry.queries.filter(kv => wanted.contains(kv._1)).toSeq.sortBy(_._1)
-
-    // JSON string escape incl. control characters: error messages carry
-    // newlines (multi-line Spark exceptions) and a raw \n inside a JSON
-    // string makes the whole artifact unparseable — exactly the failure
-    // this rewrite exists to prevent.
-    def jstr(s: String): String = {
-      val sb = new StringBuilder("\"")
-      s.foreach {
-        case '\\' => sb.append("\\\\")
-        case '"' => sb.append("\\\"")
-        case c if c < ' ' => sb.append("\\u%04x".format(c.toInt))
-        case c => sb.append(c)
-      }
-      sb.append('"').toString
-    }
 
     // ---- shared mutable state read by the flusher / shutdown hook ----
     @volatile var shuttingDown = false
@@ -180,9 +154,9 @@ object Bench {
         selected.map { case (name, _) => name -> rowValue(samples(name)) }
       } ++ streaming.map(r => "streaming_resample" -> r.seconds) ++
         neardup.map(r => "streaming_neardup" -> r.seconds)
-      val qs = results.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+      val qs = results.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
       val errJson = errorOrder.synchronized {
-        errorOrder.map(k => jstr(k) + ":" + jstr(errors.get(k))).mkString("{", ",", "}")
+        errorOrder.map(k => Json.str(k) + ":" + Json.str(errors.get(k))).mkString("{", ",", "}")
       }
       val streamJson = streaming.map(r =>
         s""","streaming":{"input_rows":${r.inputRows},"output_rows":${r.outputRows},""" +
@@ -204,7 +178,7 @@ object Bench {
         s""""passes_completed":$passesCompleted,"samples_min":$sMin,""" +
         s""""samples_max":$sMax,"budget_s":$budgetS,"budget_hit":$budgetHit,""" +
         s""""wall_s":${math.floor(elapsedS * 10) / 10},""" +
-        s""""queries":$qs,"errors":$errJson$streamJson,"sf":${jstr(sfDir)}}"""
+        s""""queries":$qs,"errors":$errJson$streamJson,"sf":${Json.str(sfDir)}}"""
     }
 
     /** Atomic flush: write to a sibling tmp file, then ATOMIC_MOVE over the
@@ -232,7 +206,7 @@ object Bench {
         neardup.map(r => "streaming_neardup" -> r.seconds)
       val total = results.collect { case (_, v) if v >= 0 => v }.sum
       val slow = results.filter(_._2 >= 0).sortBy(-_._2).take(12)
-        .map { case (k, v) => jstr(k) + ":" + (math.floor(v * 1000) / 1000) }
+        .map { case (k, v) => Json.str(k) + ":" + (math.floor(v * 1000) / 1000) }
         .mkString("{", ",", "}")
       val fullMd5 = java.security.MessageDigest.getInstance("MD5")
         .digest(line.getBytes(StandardCharsets.UTF_8))
@@ -243,7 +217,7 @@ object Bench {
         s""""n_errors":${errors.size},"queries":$slow""" +
         streaming.map(r => s""","streaming_state_bounded":${r.maxStateRows <= r.activeRideBound}""").getOrElse("") +
         neardup.map(r => s""","neardup_state_bounded":${r.maxStateRows <= r.bandKeyBound}""").getOrElse("") +
-        s""","full":${jstr(outPath)},"full_md5":${jstr(fullMd5)},"sf":${jstr(sfDir)}}"""
+        s""","full":${Json.str(outPath)},"full_md5":${Json.str(fullMd5)},"sf":${Json.str(sfDir)}}"""
     }
 
     // Printed exactly once — by the shutdown hook on SIGTERM, or at the end
@@ -407,7 +381,6 @@ object Bench {
   private def remeasure(names: Array[String]): Unit = {
     require(names.nonEmpty, "--remeasure needs at least one query name")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt.max(1)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")
     val unknown = names.filterNot(SparkEntry.queries.contains)
@@ -415,15 +388,7 @@ object Bench {
     val targets = names.toSeq.distinct.sorted
     val controls = ControlQueries.filter(SparkEntry.queries.contains)
       .filterNot(targets.contains)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate("graft-bench")
     val all = (targets ++ controls).map(n => n -> SparkEntry.queries(n))
     // untimed warm-up, then interleaved passes — same discipline as the
     // full suite, on a set small enough to stay quiet
@@ -454,7 +419,7 @@ object Bench {
     }
     val medians = (targets ++ controls).map(n => n -> median(samples(n))).toMap
     // patch the artifact in place, preserving everything else
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val m = Json.mapper
     val rootNode = m.readTree(Files.readAllBytes(Paths.get(outPath)))
     val root = rootNode.asInstanceOf[
       com.fasterxml.jackson.databind.node.ObjectNode]
@@ -486,12 +451,12 @@ object Bench {
     writeAtomic(outPath, m.writeValueAsString(root))
     val block = targets.map { t =>
       val (_, old, nw) = patched.find(_._1 == t).get
-      s""""$t":{"old":${math.floor(old * 1000) / 1000},"new":${
+      s"""${Json.str(t)}:{"old":${math.floor(old * 1000) / 1000},"new":${
         math.floor(nw * 1000) / 1000}}"""
     }.mkString("{", ",", "}")
-    val ctrlJson = controlRatios.map { case (c, r) => s""""$c":$r""" }
+    val ctrlJson = controlRatios.map { case (c, r) => s"""${Json.str(c)}:$r""" }
       .mkString("{", ",", "}")
     println(s"""{"remeasure":$block,"control_ratios":$ctrlJson,""" +
-      s""""runs":$runs,"artifact":"$outPath"}""")
+      s""""runs":$runs,"artifact":${Json.str(outPath)}}""")
   }
 }

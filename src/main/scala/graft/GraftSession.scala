@@ -2,12 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard configuration.
+/** The only session factory: every main, the test suites and the
+  * perfbench harness build their session here, so the engine that is
+  * verified, tested and benchmarked is one engine — the same AQE and skew
+  * join settings and the same [[GraftExtensions]] function catalog.
   *
   * Local mode is the test harness; the settings are chosen so the same code
   * paths (AQE, partial aggregation, broadcast joins) are exercised the way a
   * multi-executor cluster would run them. On a real cluster only
-  * `master`/memory settings change.
+  * `master`/memory settings change. Callers add only their own
+  * non-engine settings (the tests' warehouse dir, for example).
   */
 object GraftSession {
   def builder(appName: String = "graft", cpus: String = "32"): SparkSession.Builder =
@@ -15,8 +19,8 @@ object GraftSession {
       .builder()
       .appName(appName)
       .master(s"local[$cpus]")
-      // native expressions (simhash64, vec_dot, cosine_sim, …) resolve in
-      // SQL on every session of this context
+      // the native function catalog resolves in SQL on every session of
+      // this context
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Derives a larger scale factor from an existing test-data directory by
@@ -76,16 +76,10 @@ object ScaleUp {
     val k = if (args.length > 2) args(2).toInt else 10
     val adversarial = args.length > 3 && args(3) == "adversarial"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // write µs-annotated timestamps (the current testdata generation's
-      // layout), not Spark's legacy INT96 default
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate("graft-scaleup")
+    // write µs-annotated timestamps (the current testdata generation's
+    // layout), not Spark's legacy INT96 default
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     val docs = Tables.documents(spark, src)
     val sep = "\u0001" // token-suffix separator; must be absent from the source

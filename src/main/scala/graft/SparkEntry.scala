@@ -35,18 +35,17 @@ object SparkEntry {
   /** Flagship query; driver smoke-checks rows>0. The engine's headline is
     * the reference's production query — raw ride log → scored, suppressed,
     * downsampled behavior timeline with the bundled CNN (app.py:354-366 as
-    * one lazy DAG). Falls back to the TPC-H-style pricing summary if the
-    * reference demo log is unavailable.
+    * one lazy DAG). Falls back to the TPC-H-style pricing summary only when
+    * the reference demo log is absent; a failed or empty analysis throws.
     */
   def entry(spark: SparkSession): DataFrame = {
     val demo = "/root/reference/DEMO_LOGS/2025-09-28_13-59-59.csv"
-    try {
-      require(new java.io.File(demo).exists())
+    if (!new java.io.File(demo).exists())
+      queries("q1_agg")(spark, "/root/testdata/sf0.001")
+    else {
       val t = graft.vesc.VescPipeline.analyze(spark, Seq(demo))
-      require(t.limit(1).count() > 0)
+      require(t.limit(1).count() > 0, s"VESC analysis of $demo returned no rows")
       t
-    } catch {
-      case _: Throwable => queries("q1_agg")(spark, "/root/testdata/sf0.001")
     }
   }
 

@@ -56,10 +56,6 @@ object AiffStats {
     StructField("sample_rate", IntegerType, nullable = false),
     StructField("bits", IntegerType, nullable = false)))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_aiff_stats", exprs => AiffStats(exprs.head), "built-in")
-
   @inline private def u16(b: Array[Byte], i: Int): Int =
     ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
   @inline private def u32(b: Array[Byte], i: Int): Long =

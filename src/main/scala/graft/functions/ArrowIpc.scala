@@ -46,17 +46,6 @@ object ArrowIpc {
   }
   private def fail(): Nothing = throw Corrupt
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "arrow_audit", exprs => ArrowAudit(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "arrow_col_i64", exprs => ArrowColI64(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "arrow_col_f64", exprs => ArrowColF64(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "arrow_col_str", exprs => ArrowColStr(exprs(0), exprs(1)), "built-in")
-  }
-
   val auditSchema: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
     StructField("n_batches", IntegerType, nullable = false),

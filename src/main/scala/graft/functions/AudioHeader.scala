@@ -55,11 +55,6 @@ object AudioHeader {
     StructField("sample_rate", IntegerType, nullable = false),
     StructField("bits_per_sample", IntegerType, nullable = false)))
 
-  /** Register `audio_header(binary)` on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_header", exprs => AudioHeader(exprs.head), "built-in")
-
   // shared overflow-safe readers (Long returns — see graft.functions.Bytes)
   private def le16(b: Array[Byte], i: Int): Int = Bytes.le16(b, i).toInt
   private def le32(b: Array[Byte], i: Int): Long = Bytes.le32(b, i)

@@ -77,17 +77,6 @@ object AudioMel {
     * other decode ceiling here. */
   val MaxFrames: Int = 4096
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_mel", exprs => AudioMelExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_mel_frames", exprs => AudioMelFramesExpr(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_frame_energy", exprs => AudioFrameEnergyExpr(exprs.head),
-      "built-in")
-  }
-
   @inline private def le16u(b: Array[Byte], p: Int): Int =
     (b(p) & 0xFF) | ((b(p + 1) & 0xFF) << 8)
   @inline private def le32(b: Array[Byte], p: Int): Long =

@@ -69,11 +69,6 @@ object AudioPcmStats {
     StructField("sum_sq", LongType, nullable = false),
     StructField("zero_crossings", IntegerType, nullable = false)))
 
-  /** Register `audio_pcm_stats(binary)` on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_pcm_stats", exprs => AudioPcmStats(exprs.head), "built-in")
-
   private def le16u(b: Array[Byte], i: Int): Int = Bytes.le16(b, i).toInt
   private def le32(b: Array[Byte], i: Int): Long = Bytes.le32(b, i)
 
@@ -255,12 +250,6 @@ case class AudioPcmDownmix(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object AudioPcmDownmix {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_pcm_downmix", exprs => AudioPcmDownmix(exprs.head), "built-in")
-}
-
 /** `audio_g711_stats(bin)` — [[AudioPcmStats]]'s stats contract over
   * G.711 μ-law / A-law companded mono WAV; see
   * [[AudioPcmStats.statsG711]].
@@ -283,12 +272,6 @@ case class AudioG711Stats(child: Expression) extends UnaryExpression {
     """)
   override protected def withNewChildInternal(newChild: Expression): AudioG711Stats =
     copy(child = newChild)
-}
-
-object AudioG711Stats {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_g711_stats", exprs => AudioG711Stats(exprs.head), "built-in")
 }
 
 /** `audio_flac_stats(bin)` — the [[AudioPcmStats]] stats struct decoded
@@ -337,10 +320,6 @@ case class AudioFlacStats(child: Expression) extends UnaryExpression {
 }
 
 object AudioFlacStats {
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_flac_stats", exprs => AudioFlacStats(exprs.head), "built-in")
 
   /** Control-flow signal for malformed streams — refuse-to-null, never a
     * garbage number. Stackless singleton: thrown only on bad input, and

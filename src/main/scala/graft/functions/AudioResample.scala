@@ -96,11 +96,6 @@ object AudioResample {
     System.arraycopy(data, 0, out, 44, data.length)
     out
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_resample", exprs => AudioResampleExpr(exprs(0), exprs(1)),
-      "built-in")
 }
 
 /** See [[AudioResample]]. */

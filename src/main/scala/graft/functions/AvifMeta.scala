@@ -31,10 +31,6 @@ object AvifMeta {
 
   private val ImageBrands = Set("avif", "avis", "heic", "heix", "mif1")
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "avif_meta", exprs => AvifMetaExpr(exprs.head), "built-in")
-
   @inline private def be32(b: Array[Byte], i: Int): Long =
     ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
       ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)

@@ -75,10 +75,6 @@ object Bzip2 {
     def atEnd: Boolean = (pos >>> 3) >= b.length
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bzip2_decompress", exprs => Bunzip2All(exprs.head), "built-in")
-
   /** Decompress every concatenated bzip2 stream, or null. */
   def decompressAll(b: Array[Byte]): Array[Byte] =
     try decompressOrFail(b)

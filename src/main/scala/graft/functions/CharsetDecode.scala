@@ -50,16 +50,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object CharsetDecode {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction(
-      "charset_detect", exprs => CharsetDetect(exprs(0), exprs(1)), "built-in")
-    r.createOrReplaceTempFunction(
-      "charset_decode", exprs => CharsetDecodeExpr(exprs(0), exprs(1)), "built-in")
-    r.createOrReplaceTempFunction(
-      "charset_encode", exprs => CharsetEncodeExpr(exprs(0), exprs(1)), "built-in")
-  }
-
   /** WHATWG index for windows-1252, rows 0x80–0x9F (the rest is
     * ISO-8859-1 = Unicode identity). Five unassigned slots (0x81, 0x8D,
     * 0x8F, 0x90, 0x9D) pass through as the C1 controls, per the spec.

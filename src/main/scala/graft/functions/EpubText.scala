@@ -44,14 +44,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object EpubText {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "epub_text", exprs => EpubTextExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "epub_doc", exprs => EpubDocExpr(exprs.head), "built-in")
-  }
-
   private object Corrupt extends RuntimeException {
     override def fillInStackTrace(): Throwable = this
   }

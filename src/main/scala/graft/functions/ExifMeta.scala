@@ -50,14 +50,6 @@ case class JpegExifOrientation(child: Expression) extends UnaryExpression {
 
 object ExifMeta {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_exif_orientation", exprs => JpegExifOrientation(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_gps", exprs => JpegGps(exprs.head), "built-in")
-  }
-
   val gpsSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("lat_micro",

@@ -53,10 +53,6 @@ object FeedParse {
     StructField("published", StringType, nullable = true))),
     containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "feed_items", exprs => FeedItems(exprs.head), "built-in")
-
   def items(in: UTF8String): GenericArrayData = {
     val s = in.toString
     val atom = tagIndex(s, "feed", 0) >= 0

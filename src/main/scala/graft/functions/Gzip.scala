@@ -28,15 +28,6 @@ object Gzip {
     */
   val MaxInflatedBytes: Int = 64 << 20
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gzip_member", exprs => GzipMember(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gunzip_all", exprs => GunzipAll(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "codec_probe", exprs => CodecProbe(exprs.head), "built-in")
-  }
-
   /** One deterministic gzip member (RFC 1952): fixed header — MTIME=0,
     * XFL=0, OS=255 (unknown) — so equal payloads produce equal bytes on
     * any JVM; DEFLATE at the default level; CRC32 + ISIZE trailer.

@@ -62,10 +62,6 @@ object HtmlBlocks {
     StructField("link_chars", IntegerType, nullable = false))),
     containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_blocks", exprs => HtmlBlocks(exprs.head), "built-in")
-
   private val BlockTags: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String]()
     Seq("p", "div", "h1", "h2", "h3", "h4", "h5", "h6", "li", "ul", "ol",

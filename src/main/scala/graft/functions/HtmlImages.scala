@@ -48,10 +48,6 @@ case class HtmlImages(child: Expression) extends UnaryExpression {
 
 object HtmlImages {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_images", exprs => HtmlImages(exprs.head), "built-in")
-
   def extract(in: UTF8String): GenericArrayData = {
     val s = in.toString
     val n = s.length

@@ -40,13 +40,6 @@ case class HtmlLinks(child: Expression) extends UnaryExpression {
 
 object HtmlLinks {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_links", exprs => HtmlLinks(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_anchors", exprs => HtmlAnchors(exprs.head), "built-in")
-  }
-
   private val Containers = Array("script", "style", "noscript", "template")
 
   def extract(in: UTF8String): GenericArrayData = {

@@ -48,13 +48,6 @@ object HtmlMeta {
     StructField("lang", StringType, nullable = true),
     StructField("meta_robots", StringType, nullable = true)))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_meta", exprs => HtmlMeta(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_og", exprs => HtmlOg(exprs.head), "built-in")
-  }
-
   /** `html_og` output: OpenGraph / twitter-card properties in document
     * order, first occurrence per key.
     */
@@ -254,10 +247,6 @@ case class HtmlJsonLd(child: Expression) extends UnaryExpression {
 }
 
 object HtmlJsonLd {
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_jsonld", exprs => HtmlJsonLd(exprs.head), "built-in")
 
   def extract(html: org.apache.spark.unsafe.types.UTF8String)
       : org.apache.spark.sql.catalyst.util.GenericArrayData = {

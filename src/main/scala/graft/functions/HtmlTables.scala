@@ -32,10 +32,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object HtmlTables {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_tables", exprs => HtmlTablesExpr(exprs.head), "built-in")
-
   val rowSchema: StructType = StructType(Seq(
     StructField("tbl", IntegerType, nullable = false),
     StructField("row", IntegerType, nullable = false),

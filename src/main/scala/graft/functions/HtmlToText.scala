@@ -54,10 +54,6 @@ case class HtmlToText(child: Expression) extends UnaryExpression {
 
 object HtmlToText {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "html_to_text", exprs => HtmlToText(exprs.head), "built-in")
-
   /** Elements whose content is invisible (or metadata, for `title`) and
     * must drop whole — corpus text is body prose, not page chrome.
     */

@@ -30,10 +30,6 @@ object IcoMeta {
     StructField("is_png", BooleanType, nullable = false)))
   val entriesType: DataType = ArrayType(entrySchema, containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ico_entries", exprs => IcoEntriesExpr(exprs.head), "built-in")
-
   private object Corrupt extends RuntimeException {
     override def fillInStackTrace(): Throwable = this
   }

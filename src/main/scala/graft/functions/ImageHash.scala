@@ -113,19 +113,6 @@ case class DHash64(child: Expression) extends ImageHash64 {
 
 object ImageHash {
 
-  /** Register the hashes + resize on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_ahash", exprs => AHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_dhash", exprs => DHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_resize_gray", exprs => ImageResizeGray(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_phash", exprs => PHash64(exprs.head), "built-in")
-  }
-
   /** Decoded grayscale image: row-major top-down `gray(y*w + x)`. */
   private final class Gray(val w: Int, val h: Int, val px: Array[Int])
 

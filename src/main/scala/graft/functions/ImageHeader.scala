@@ -68,11 +68,6 @@ object ImageHeader {
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false)))
 
-  /** Register `image_header(binary)` on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_header", exprs => ImageHeader(exprs.head), "built-in")
-
   // shared overflow-safe readers (Long returns — see graft.functions.Bytes)
   private def be16(b: Array[Byte], i: Int): Int = Bytes.be16(b, i).toInt
   private def be32(b: Array[Byte], i: Int): Int = Bytes.be32(b, i).toInt

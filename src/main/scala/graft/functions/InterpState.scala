@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, CreateNamedStruct, Expression, If, IsNull, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
@@ -28,6 +26,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * WindowExec's AggregateProcessor, evaluation order per row identical to
   * the separate `last()` calls, so results are bit-identical (asserted by
   * InterpStateSpec against the unfused formulation).
+  *
+  * SQL name `interp_state`, installed on every session by the
+  * [[graft.GraftExtensions]] catalog.
   */
 case class InterpState(tick: Expression, values: Seq[Expression])
     extends DeclarativeAggregate {
@@ -77,17 +78,4 @@ case class InterpState(tick: Expression, values: Seq[Expression])
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): InterpState =
     copy(tick = newChildren.head, values = newChildren.tail)
-}
-
-object InterpState {
-  /** Register `interp_state` on a session (idempotent) — same registry
-    * route as [[VectorExprs.register]]; [[graft.GraftExtensions]] installs
-    * it session-wide.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("interp_state")))
-      reg.createOrReplaceTempFunction(
-        "interp_state", es => InterpState(es.head, es.tail), "built-in")
-  }
 }

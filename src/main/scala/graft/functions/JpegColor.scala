@@ -62,10 +62,6 @@ object JpegColorStats {
     StructField("n_blocks_y", LongType, nullable = false),
     StructField("n_blocks_c", LongType, nullable = false)))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_color_stats", exprs => JpegColorStats(exprs.head), "built-in")
-
   def eval(b: Array[Byte]): GenericInternalRow = {
     val st = JpegDecode.decodeColor(b)
     if (st == null) null
@@ -125,10 +121,6 @@ object JpegRgbStats {
     StructField("sat_mean_milli", LongType, nullable = false),
     StructField("rg_abs_mean_milli", LongType, nullable = false),
     StructField("yb2_abs_mean_milli", LongType, nullable = false)))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jpeg_rgb_stats", exprs => JpegRgbStats(exprs.head), "built-in")
 
   def eval(b: Array[Byte]): GenericInternalRow = {
     val st = JpegDecode.decodeRgb(b)

@@ -82,10 +82,6 @@ object Lz4 {
     h
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lz4_decompress", exprs => Lz4Decompress(exprs.head), "built-in")
-
   def decompressAll(b: Array[Byte]): Array[Byte] =
     try decompressOrFail(b)
     catch {

@@ -41,13 +41,6 @@ object MimeText {
     StructField("text", StringType, nullable = false),
     StructField("n_parts", IntegerType, nullable = false)))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "eml_text", exprs => EmlText(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mbox_messages", exprs => MboxMessages(exprs.head), "built-in")
-  }
-
   private object Corrupt extends RuntimeException {
     override def fillInStackTrace(): Throwable = this
   }

@@ -52,22 +52,6 @@ case class MinHashSig(child: Expression, shingleN: Int, numHashes: Int)
 
 object MinHashSig {
 
-  /** Register `graft_minhash_sig(tokens, shingleN, numHashes)` (literal
-    * ints) on a session — idempotent; called by every consumer right
-    * before building its plan.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => {
-        def intLit(e: Expression, what: String): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash_sig $what must be an integer literal, got $other")
-        }
-        MinHashSig(exprs(0), intLit(exprs(1), "shingleN"),
-          intLit(exprs(2), "numHashes"))
-      }, "built-in")
-
   private val Hex = "0123456789abcdef".toCharArray
 
   /** Invoked from both interpreted eval and generated code. */

@@ -32,21 +32,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object MpegMeta {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_mpeg_meta", exprs => MpegAudioMeta(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_adts_meta", exprs => AdtsAudioMeta(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mp3_sideinfo", exprs => Mp3SideInfo(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mp3_xing", exprs => Mp3Xing(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "id3_tags", exprs => Id3Tags(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "id3v1_tags", exprs => Id3v1Tags(exprs.head), "built-in")
-  }
-
   val schema: StructType = StructType(Seq(
     StructField("version", StringType),
     StructField("layer", IntegerType),

@@ -47,10 +47,6 @@ object MsAdpcm {
 
   private val MaxSamples = 1 << 24
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "msadpcm_to_pcm", exprs => MsAdpcmToPcm(exprs.head), "built-in")
-
   def decode(b: Array[Byte]): Array[Byte] = {
     if (b == null || b.length < 12) return null
     if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&

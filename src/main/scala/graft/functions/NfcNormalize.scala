@@ -37,10 +37,6 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
 object NfcNormalize {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "built-in")
-
   def normalize(s: UTF8String): UTF8String = {
     val str = s.toString
     if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s

@@ -37,13 +37,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object OggMeta {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_ogg_meta", exprs => OggAudioMeta(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_ogg_tags", exprs => OggAudioTags(exprs.head), "built-in")
-  }
-
   val schema: StructType = StructType(Seq(
     StructField("codec", StringType),
     StructField("channels", IntegerType),

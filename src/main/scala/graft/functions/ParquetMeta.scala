@@ -30,10 +30,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ParquetMeta {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parquet_footer", exprs => ParquetFooter(exprs.head), "built-in")
-
   val columnSchema: StructType = StructType(Seq(
     StructField("rg_idx", IntegerType, nullable = false),
     StructField("path", StringType, nullable = false),

@@ -53,13 +53,6 @@ object PdfText {
     */
   val MaxPages: Int = 8192
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pdf_text", exprs => PdfTextExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pdf_doc", exprs => PdfDocExpr(exprs.head), "built-in")
-  }
-
   private object Corrupt extends RuntimeException {
     override def fillInStackTrace(): Throwable = this
   }

@@ -44,11 +44,6 @@ case class PngEncodeGray(first: Expression, second: Expression, third: Expressio
 
 object PngEncodeGray {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_encode_gray", exprs => PngEncodeGray(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-
   def encode(grays: ArrayData, w: Int, h: Int): Array[Byte] = {
     if (w < 1 || h < 1 || w > 4096 || h > 4096) return null
     if (grays.numElements() != w * h) return null

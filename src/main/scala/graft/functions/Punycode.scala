@@ -131,10 +131,6 @@ object Punycode {
     val d = decodeHost(host.toString)
     if (d == null) null else UTF8String.fromString(d)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "idn_decode", exprs => IdnDecodeExpr(exprs.head), "built-in")
 }
 
 /** `idn_decode(host: string) → string` — see [[Punycode]]. */

@@ -41,18 +41,6 @@ object RobotsTxt {
 
   val schema: DataType = ArrayType(ruleSchema, containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "robots_rules", exprs => RobotsRules(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "robots_match_len", exprs => RobotsMatchLen(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "robots_sitemaps", exprs => RobotsSitemaps(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "robots_crawl_delay", exprs => RobotsCrawlDelay(exprs(0), exprs(1)),
-      "built-in")
-  }
-
   /** `Crawl-delay:` for one agent — the de-facto politeness-interval
     * extension (not in RFC 9309 but honored by most large crawlers):
     * group selection matches the RULES parser exactly (consecutive

@@ -31,10 +31,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object RtfText {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rtf_text", exprs => RtfTextExpr(exprs.head), "built-in")
-
   private val DropDests = Set("fonttbl", "colortbl", "stylesheet", "info",
     "pict", "header", "headerl", "headerr", "headerf", "footer", "footerl",
     "footerr", "footerf", "ftnsep", "ftnsepc")

@@ -45,10 +45,6 @@ case class SentenceSplit(child: Expression) extends UnaryExpression {
 
 object SentenceSplit {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sentence_split", exprs => SentenceSplit(exprs.head), "built-in")
-
   /** Tokens whose trailing period is part of the token, not a boundary.
     * Deliberately small and fixed — a learned list would make output
     * engine-version-dependent. */

@@ -19,9 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * WholeStageCodegen scan-side, which is the shape that survives a 100 TB
   * corpus. Codegen emits a single static call (the same pattern Spark's own
   * hash expressions use).
+  *
+  * The width is fixed at 60 bits. SQL name `simhash64`, installed on every
+  * session by the [[graft.GraftExtensions]] catalog.
   */
-case class SimHash64(child: Expression, bits: Int)
-    extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
   override def checkInputDataTypes() =
@@ -30,11 +32,11 @@ case class SimHash64(child: Expression, bits: Int)
       s"simhash64 needs array<string>, got ${child.dataType}")
 
   override def nullSafeEval(input: Any): Any =
-    SimHash64.compute(input.asInstanceOf[ArrayData], bits)
+    SimHash64.compute(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHash64.compute($c, $bits);")
+      s"${ev.value} = graft.functions.SimHash64.compute($c);")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
@@ -42,19 +44,14 @@ case class SimHash64(child: Expression, bits: Int)
 
 object SimHash64 {
 
-  /** Register `simhash64(array<string>)` for SQL/expr use on a session
-    * (idempotent). Spark 4's Column wraps ColumnNodes, so the function
-    * registry + `expr()` is the stable way to surface a custom Expression.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession, bits: Int = 60): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head, bits), "built-in")
+  /** Fingerprint width: the 60 bits of a token's first 15 md5 hex chars. */
+  private val Bits = 60
 
   /** Invoked from both interpreted eval and generated code. */
-  def compute(tokens: ArrayData, bits: Int): Long = {
+  def compute(tokens: ArrayData): Long = {
     val n = tokens.numElements()
     val seen = new java.util.HashSet[UTF8String]()
-    val sums = new Array[Int](bits)
+    val sums = new Array[Int](Bits)
     val md = java.security.MessageDigest.getInstance("MD5")
     var i = 0
     while (i < n) {
@@ -69,7 +66,7 @@ object SimHash64 {
           while (b < 7) { h = (h << 8) | (digest(b) & 0xffL); b += 1 }
           h = (h << 4) | ((digest(7) & 0xf0L) >> 4)
           var bit = 0
-          while (bit < bits) {
+          while (bit < Bits) {
             if (((h >> bit) & 1L) == 1L) sums(bit) += 1 else sums(bit) -= 1
             bit += 1
           }
@@ -79,7 +76,7 @@ object SimHash64 {
     }
     var fp = 0L
     var bit = 0
-    while (bit < bits) {
+    while (bit < Bits) {
       if (sums(bit) > 0) fp |= (1L << bit)
       bit += 1
     }

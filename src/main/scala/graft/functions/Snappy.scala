@@ -31,10 +31,6 @@ object Snappy {
   private final class Fail extends RuntimeException(null, null, false, false)
   private def fail(): Nothing = throw new Fail
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "snappy_decompress", exprs => SnappyDecompress(exprs.head), "built-in")
-
   def decompressAny(b: Array[Byte]): Array[Byte] =
     try {
       if (b == null) null

@@ -66,10 +66,6 @@ object SubtitleCues {
     StructField("text", StringType, nullable = false))),
     containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "subtitle_cues", exprs => SubtitleCues(exprs.head), "built-in")
-
   /** All cues in document order, or null on malformed timing. */
   def parse(in: UTF8String): GenericArrayData = {
     var s = in.toString

@@ -28,10 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object SvgText {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "svg_text", exprs => SvgTextExpr(exprs.head), "built-in")
-
   private def tagAt(s: String, i: Int, name: String): Boolean =
     s.regionMatches(true, i + 1, name, 0, name.length) && {
       val a = i + 1 + name.length

@@ -43,18 +43,6 @@ object TarWalk {
     StructField("size", LongType, nullable = false)))
   val entriesType: DataType = ArrayType(entrySchema, containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "tar_entries", exprs => TarEntriesExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "tar_entry", exprs => TarEntryExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "tar_pack", exprs => TarPackExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "tar_build", exprs => TarBuildExpr(exprs.head), "built-in")
-  }
-
   private object Corrupt extends RuntimeException {
     override def fillInStackTrace(): Throwable = this
   }

@@ -90,10 +90,6 @@ case class TexText(child: Expression) extends UnaryExpression {
 
 object TexText {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tex_text", exprs => TexText(exprs.head), "built-in")
-
   private val Floats = Set(
     "figure", "figure*", "table", "table*", "wrapfigure", "wraptable",
     "sidewaysfigure", "sidewaystable")

@@ -48,11 +48,6 @@ object TfExample {
 
   val schema: DataType = ArrayType(featureSchema, containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tf_example_features", exprs => TfExampleFeatures(exprs.head),
-      "built-in")
-
   private object Corrupt extends RuntimeException {
     override def fillInStackTrace(): Throwable = this
   }

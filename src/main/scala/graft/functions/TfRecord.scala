@@ -28,14 +28,6 @@ object TfRecord {
     StructField("n_bytes", LongType, nullable = false),
     StructField("payload_md5", StringType, nullable = false))), false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tfrecord_entries", exprs => TfRecordEntries(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tfrecord_payloads", exprs => TfRecordPayloads(exprs.head),
-      "built-in")
-  }
-
   private def maskedCrc(d: Array[Byte], from: Int, len: Int): Long = {
     val c = new java.util.zip.CRC32C
     c.update(d, from, len)

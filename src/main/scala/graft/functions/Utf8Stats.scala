@@ -71,10 +71,6 @@ object Utf8Stats {
     StructField("n_invalid", IntegerType, nullable = false),
     StructField("n_replacement", IntegerType, nullable = false)))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "utf8_stats", exprs => Utf8Stats(exprs.head), "built-in")
-
   /** Invoked from both interpreted eval and generated code. */
   def stats(b: Array[Byte]): InternalRow = {
     val n = b.length

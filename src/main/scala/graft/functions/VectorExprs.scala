@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -22,6 +21,9 @@ import org.apache.spark.sql.types._
   * Null semantics mirror the HOF form: null array → null (nullSafeEval);
   * length mismatch or any null element → null (zip_with pads with null and
   * `acc + null` poisons the fold).
+  *
+  * SQL names `vec_dot`, `vec_norm_l2`, `cosine_sim` and `vec_dot_int`,
+  * installed on every session by the [[graft.GraftExtensions]] catalog.
   */
 private[graft] object VectorKind {
   val Float = 0; val Double = 1; val Int = 2; val Long = 3
@@ -192,21 +194,4 @@ case class L2Norm(child: Expression) extends UnaryExpression {
     })
   override protected def withNewChildInternal(newChild: Expression): L2Norm =
     copy(child = newChild)
-}
-
-object VectorExprs {
-  /** Register the vector functions on a session (idempotent) — the same
-    * registry route as [[SimHash64.register]]; [[graft.GraftExtensions]]
-    * installs them session-wide via `spark.sql.extensions`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def put(name: String, builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    put("vec_dot", es => DotProduct(es(0), es(1)))
-    put("cosine_sim", es => CosineSim(es(0), es(1)))
-    put("vec_dot_int", es => DotProductInt(es(0), es(1)))
-    put("vec_norm_l2", es => L2Norm(es.head))
-  }
 }

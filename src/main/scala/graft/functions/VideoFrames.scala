@@ -85,17 +85,6 @@ object VideoFrames {
     StructField("fhash", LongType, nullable = false))),
     containsNull = false)
 
-  /** Register `video_frame_sample(binary, int)` and
-    * `video_frame_ahash(binary, int)` on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "video_frame_sample", exprs => VideoFrameSample(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "video_frame_ahash", exprs => VideoFrameAHash(exprs(0), exprs(1)),
-      "built-in")
-  }
-
   private def isDigit(c: Byte): Boolean = c >= '0' && c <= '9'
 
   /** Exact integer luma of pixel triple at `i` ([[ImageHash]] weights;

@@ -54,11 +54,6 @@ object VideoHeader {
     StructField("height", IntegerType, nullable = false),
     StructField("duration_ms", LongType, nullable = false)))
 
-  /** Register `video_header(binary)` on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "video_header", exprs => VideoHeader(exprs.head), "built-in")
-
   // shared overflow-safe readers (Long returns — see graft.functions.Bytes)
   private def be32(b: Array[Byte], i: Int): Long = Bytes.be32(b, i)
   private def be64(b: Array[Byte], i: Int): Long = Bytes.be64(b, i)

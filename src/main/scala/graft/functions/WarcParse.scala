@@ -46,25 +46,6 @@ object WarcParse {
 
   val schema: DataType = ArrayType(recordSchema, containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "warc_records", exprs => WarcRecords(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "http_body", exprs => HttpBody(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "http_status", exprs => HttpStatus(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "http_header", exprs => HttpHeader(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "http_entity", exprs => HttpEntity(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "http_entity_verdict", exprs => HttpEntityVerdict(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "http_chunk_frame", exprs => HttpChunkFrame(exprs(0), exprs(1)),
-      "built-in")
-  }
-
   /** One HTTP header's value from a response payload: the header block
     * (up to CRLFCRLF, bytes decoded Latin-1 — header bytes are ASCII
     * in practice and Latin-1 never fails), status line skipped, names

@@ -35,10 +35,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object WebmMeta {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "video_webm_meta", exprs => WebmVideoMeta(exprs.head), "built-in")
-
   val schema: StructType = StructType(Seq(
     StructField("doc_type", StringType),
     StructField("duration_ms", LongType),

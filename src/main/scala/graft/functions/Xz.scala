@@ -74,10 +74,6 @@ object Xz {
     c.getValue
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "xz_decompress", exprs => XzDecompress(exprs.head), "built-in")
-
   def decompressAll(b: Array[Byte]): Array[Byte] =
     try decompressOrFail(b)
     catch {

@@ -46,10 +46,6 @@ object ZOrderExprs {
         s"zorder2: inputs must be in [0, 2^31), got ($a, $b)")
     spread(a) | (spread(b) << 1)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder2", exprs => ZOrder2Expr(exprs(0), exprs(1)), "built-in")
 }
 
 /** `zorder2(a: long, b: long) → long` — see [[ZOrderExprs]]. */

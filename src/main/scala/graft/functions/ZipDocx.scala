@@ -72,26 +72,6 @@ object ZipDocx {
     StructField("crc_ok", BooleanType, nullable = false)))
   val entriesType: DataType = ArrayType(entrySchema, containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "zip_entries", exprs => ZipEntriesExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "zip_entry", exprs => ZipEntryExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "docx_text", exprs => DocxTextExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "docx_doc", exprs => DocxDocExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "xlsx_text", exprs => XlsxTextExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "xlsx_doc", exprs => XlsxDocExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pptx_text", exprs => PptxTextExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pptx_doc", exprs => PptxDocExpr(exprs.head), "built-in")
-  }
-
   private object Corrupt extends RuntimeException {
     override def fillInStackTrace(): Throwable = this
   }

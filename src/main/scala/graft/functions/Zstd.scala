@@ -44,18 +44,6 @@ object Zstd {
     */
   val MaxWindowBytes: Long = Gzip.MaxInflatedBytes.toLong
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zunstd_all", exprs => ZstdDecompress(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zstd_frame", exprs => ZstdFrame(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "decompress_any", exprs => DecompressAny(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zunstd_dict", exprs => ZstdDecompressDict(exprs(0), exprs(1)),
-      "built-in")
-  }
-
   /** Codec-routing decompression for the crawl read path: gzip magic →
     * [[Gzip.inflateAll]], zstd frame/skippable magic →
     * [[decompressAll]], empty → empty (a zero-record file), anything

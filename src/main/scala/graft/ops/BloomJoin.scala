@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.BloomExprs
 
 /** Bloom-pruned semi join: build a bloom filter over the (filtered) build
   * side's keys, broadcast the sketch, drop probe rows that cannot match
@@ -31,7 +30,6 @@ object BloomJoin {
   def bloomPrunedSemiJoin(big: DataFrame, bigKey: Column,
                           small: DataFrame, smallKey: Column,
                           expectedItems: Long = 1000000L): DataFrame = {
-    BloomExprs.register(big.sparkSession)
     // `might_contain` requires its sketch input to be a CONSTANT or scalar
     // subquery (BloomFilterMightContain's type check), so the one-row
     // aggregate is materialized eagerly and embedded as a binary literal —

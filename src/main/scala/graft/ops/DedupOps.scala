@@ -93,14 +93,9 @@ object DedupOps {
     * the first cut used `transform`/`array_min` higher-order functions,
     * which are CodegenFallback (fully interpreted) and re-built the
     * shingle array once per hash: 15.6 s at sf0.1 vs 1.0 s native.
-    * Registration is idempotent and needs an active session at
-    * plan-BUILD time (both batch query builders and the streaming
-    * wiring have one).
     */
   def minhashSignatureRow(textCol: Column, shingleN: Int,
                           numHashes: Int): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.MinHashSig.register)
     call_function("graft_minhash_sig", TextOps.tokens(textCol),
       lit(shingleN), lit(numHashes))
   }

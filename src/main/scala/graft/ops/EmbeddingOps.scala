@@ -1,10 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-
-import graft.functions.VectorExprs
 
 /** Vector similarity-search operators over an `array<float>` embedding
   * column: brute-force cosine top-k as the exact baseline, and an
@@ -29,6 +27,10 @@ import graft.functions.VectorExprs
   */
 object EmbeddingOps {
 
+  // Spark 4 Columns wrap ColumnNodes, not Expressions, so the native vector
+  // expressions surface through `call_function` of their catalog names
+  // (installed on every session by graft.GraftExtensions).
+
   /** Σ aᵢ·bᵢ, sequential left fold in doubles — the native codegen'd
     * [[graft.functions.DotProduct]] Expression. Bit-identical to the HOF
     * formulation [[dotHof]] (same element order, same double accumulator;
@@ -36,34 +38,14 @@ object EmbeddingOps {
     * but compiles to a tight primitive loop inside WholeStageCodegen
     * instead of one boxed lambda call per element.
     */
-  def dot(a: Column, b: Column): Column = native("vec_dot", a, b)
+  def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
-  def l2Norm(a: Column): Column = native("vec_norm_l2", a)
+  def l2Norm(a: Column): Column = call_function("vec_norm_l2", a)
 
   /** One fused pass over both arrays (dot + both norms in a single loop);
     * same floating evaluation order as `dotHof / (l2NormHof · l2NormHof)`.
     */
-  def cosine(a: Column, b: Column): Column = native("cosine_sim", a, b)
-
-  /** Spark 4 Columns wrap ColumnNodes, not Expressions, so the stable way
-    * to surface a custom Expression through the typed API is the function
-    * registry + `call_function` (resolved at analysis). Self-registers on
-    * the active session (idempotent map put) so plain sessions work too —
-    * sessions built with `spark.sql.extensions=graft.GraftExtensions` get
-    * the same builders injected context-wide.
-    *
-    * The active session is a FALLBACK for bare-Column composition; every
-    * DataFrame-taking operator below additionally registers on the frame's
-    * OWN session (`reg`) — the one whose analyzer resolves the plan, which
-    * inside a streaming micro-batch is not the thread's active session
-    * (same fix as TimeSeriesOps.interpolateLinear).
-    */
-  private def native(name: String, cols: Column*): Column = {
-    SparkSession.getActiveSession.foreach(VectorExprs.register)
-    call_function(name, cols: _*)
-  }
-
-  private def reg(df: DataFrame): Unit = VectorExprs.register(df.sparkSession)
+  def cosine(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 
   /** Reference `zip_with`+`aggregate` formulation of [[dot]] — interpreted
     * lambda per element; kept as the independent parity oracle for
@@ -161,7 +143,6 @@ object EmbeddingOps {
   def cosinePairs(emb: DataFrame, idCol: String, vecCol: String,
                   bucketCol: String, minCos: Double,
                   roundDigits: Int = 4, maxBlock: Int = 1000): DataFrame = {
-    reg(emb)
     val scale = math.pow(10, roundDigits)
     // norms once per ROW before the join — recomputing them per PAIR would
     // triple the work of every block
@@ -183,7 +164,6 @@ object EmbeddingOps {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int, roundDigits: Int = 4): DataFrame = {
-    reg(corpus)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val scale = math.pow(10, roundDigits)
     val scored = corpus.join(broadcast(q))
@@ -199,7 +179,6 @@ object EmbeddingOps {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, clusterCol: String, k: Int,
               roundDigits: Int = 4): DataFrame = {
-    reg(corpus)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       col(clusterCol).as("__qc"))
     val scale = math.pow(10, roundDigits)
@@ -245,7 +224,6 @@ object EmbeddingOps {
   def probeAssignments(queries: DataFrame, idCol: String, vecCol: String,
                        centroids: DataFrame, nprobe: Int,
                        roundDigits: Int = 4): DataFrame = {
-    reg(queries)
     val scale = math.pow(10, roundDigits)
     val scored = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
@@ -272,7 +250,6 @@ object EmbeddingOps {
   def ivfTopKProbed(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, clusterCol: String, probes: DataFrame,
                     k: Int, roundDigits: Int = 4): DataFrame = {
-    reg(corpus)
     val scale = math.pow(10, roundDigits)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     // probe-side cluster under a reserved name: a corpus clusterCol that is
@@ -341,7 +318,6 @@ object EmbeddingOps {
                                 idCol: String, vecCol: String,
                                 clusterCol: Option[String], k: Int,
                                 oversample: Int, roundDigits: Int): DataFrame = {
-    reg(corpus)
     val maxAbsDf = corpus.agg(
       max(array_max(transform(col(vecCol), x => abs(x.cast("double"))))).as("__maxabs"))
     def qz(v: Column) = transform(v, x =>
@@ -402,7 +378,6 @@ object EmbeddingOps {
                  vecCol: String, bucketCol: String, k: Int = 4,
                  minMarginE4: Long = 10100L): DataFrame = {
     require(k > 0)
-    reg(src)
     val a = src.select(col(bucketCol).as("__b"), col(idCol).as("src_id"),
       col(vecCol).as("__xv"))
     val b = tgt.select(col(bucketCol).as("__b"), col(idCol).as("tgt_id"),
@@ -495,7 +470,6 @@ object EmbeddingOps {
   def maxEvalCosine(train: DataFrame, eval: DataFrame, idCol: String,
                     vecCol: String, roundDigits: Int = 4,
                     maxEvalRows: Long = 100000L): DataFrame = {
-    reg(train)
     val evalCount = eval.limit(Math.toIntExact(maxEvalRows) + 1).count()
     require(evalCount <= maxEvalRows,
       s"maxEvalCosine eval side exceeds $maxEvalRows rows — it is broadcast " +

@@ -37,7 +37,6 @@ object MultimodalOps {
     * null for non-images). Pure codegen'd expressions, no UDF.
     */
   def withMediaMeta(df: DataFrame, binCol: String): DataFrame = {
-    graft.functions.ImageHeader.register(df.sparkSession)
     df.withColumn(binCol + "_meta", struct(
       when(hex(substring(col(binCol), 1, 2)) === "FFD8", "image/jpeg")
         .when(hex(substring(col(binCol), 1, 4)) === "89504E47", "image/png")

@@ -1293,8 +1293,6 @@ object TextQualityOps {
     */
   def compressionRatio(df: DataFrame, docId: String, textCol: String,
                        minBytes: Int = 32): DataFrame = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.Gzip.register)
     val raw = octet_length(col(textCol).cast("binary"))
     val member = call_function("gzip_member", col(textCol).cast("binary"))
     val deflated = octet_length(member)

@@ -6,8 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.InterpState
-
 /** Generic, scale-oriented time-series operators.
   *
   * All operators are expressed as declarative DataFrame transforms (window
@@ -104,12 +102,6 @@ object TimeSeriesOps {
     */
   def interpolateLinear(df: DataFrame, key: Seq[String], tick: String,
                         valueCols: Seq[String], suffix: String = ""): DataFrame = {
-    // Register on the session that will ANALYZE this plan (df's own), not
-    // the thread's active session — inside a streaming micro-batch the
-    // active session is the stream's clone, and registering there leaves
-    // `call_function` unresolvable when the outer session analyzes the plan
-    // (caught by StreamingSpec's foreachBatch e2e).
-    InterpState.register(df.sparkSession)
     val wPrev = Window.partitionBy(key.map(col): _*).orderBy(col(tick))
       .rowsBetween(Window.unboundedPreceding, 0)
     val wNext = Window.partitionBy(key.map(col): _*).orderBy(col(tick).desc)

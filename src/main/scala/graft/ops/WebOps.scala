@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-import graft.functions.{Gzip, HtmlToText, RobotsTxt, WarcParse}
 
 /** Web-crawl ingestion: WARC record assembly/parsing and HTML text
   * extraction — the first mile of a 100 TB training-data pipeline.
@@ -26,28 +24,6 @@ import graft.functions.{Gzip, HtmlToText, RobotsTxt, WarcParse}
   * discarded before the first shuffle.
   */
 object WebOps {
-
-  /** Idempotent; needed at plan-build time (same posture as
-    * [[DedupOps.minhashSignatureRow]]'s registration).
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    Gzip.register(spark); WarcParse.register(spark); HtmlToText.register(spark)
-    RobotsTxt.register(spark); graft.functions.HtmlLinks.register(spark)
-    graft.functions.HtmlImages.register(spark)
-    graft.functions.SubtitleCues.register(spark)
-    graft.functions.HtmlSegments.register(spark)
-    graft.functions.HtmlMeta.register(spark); graft.functions.Zstd.register(spark)
-    graft.functions.CharsetDecode.register(spark)
-    graft.functions.Bzip2.register(spark)
-    graft.functions.Xz.register(spark)
-    graft.functions.Lz4.register(spark)
-    graft.functions.Snappy.register(spark)
-    graft.functions.MimeText.register(spark)
-    graft.functions.RtfText.register(spark)
-  }
-
-  private def registered(): Unit =
-    SparkSession.getActiveSession.foreach(registerAll)
 
   /** Deterministic synthetic URL for a document row — includes multi-part
     * public-suffix hosts so registered-domain grouping is exercised.
@@ -116,7 +92,6 @@ object WebOps {
   def buildEncodedRecord(docId: Column, url: Column, html: Column,
                          chunked: Boolean, gzipBody: Boolean,
                          chunkSize: Int = 61): Column = {
-    registered()
     val raw = html.cast("binary")
     val entity = if (gzipBody) call_function("gzip_member", raw) else raw
     val wire = if (chunked)
@@ -206,7 +181,6 @@ object WebOps {
     */
   def buildCrawlFiles(records: DataFrame, docId: Column, record: Column,
       perFile: Int, codec: String = "gzip"): DataFrame = {
-    registered()
     val memberFn = codec match {
       case "gzip" => "gzip_member"
       case "zstd" => "zstd_frame" // record-at-time frames, same layout
@@ -245,7 +219,6 @@ object WebOps {
     * parsed.
     */
   def extractRecords(files: DataFrame, blob: Column): DataFrame = {
-    registered()
     files
       .select(explode(call_function("warc_records",
         call_function("decompress_any", blob))).as("rec"))
@@ -281,7 +254,6 @@ object WebOps {
     * in a gzip pipeline) must fail loudly, not shrink silently.
     */
   def extractPages(files: DataFrame, blob: Column): DataFrame = {
-    registered()
     // the ENTITY, not the raw body: a chunked or gzip'd capture must
     // never leak framing/compressed bytes into corpus text — refusals
     // (entity_verdict != 'ok') contribute zero rows here and are
@@ -304,7 +276,6 @@ object WebOps {
     * shuffle — charset handling must never change the plan shape.
     */
   def extractPagesCharset(files: DataFrame, blob: Column): DataFrame = {
-    registered()
     extractRecords(files, blob)
       .filter(col("http_status") === 200 && col("entity_verdict") === "ok")
       .withColumn("__ct",
@@ -323,7 +294,6 @@ object WebOps {
     * one bounded agg (≤ verdict classes × files rows pre-agg).
     */
   def httpAudit(files: DataFrame, blob: Column): DataFrame = {
-    registered()
     extractRecords(files, blob)
       .filter(col("warc_type") === "response")
       .groupBy(col("entity_verdict"))
@@ -356,9 +326,6 @@ object WebOps {
     */
   def webdatasetSamples(shards: DataFrame, idCol: Column, blob: Column,
                         requiredExts: Seq[String]): DataFrame = {
-    registered()
-    graft.functions.TarWalk.register(
-      SparkSession.getActiveSession.getOrElse(shards.sparkSession))
     shards
       .select(idCol.as("shard_id"),
         explode(call_function("tar_entries", blob)).as("__e"))
@@ -402,8 +369,6 @@ object WebOps {
   def webdatasetWrite(samples: DataFrame, shardCol: Column,
                       sampleKeyCol: Column, extCol: Column,
                       blobCol: Column): DataFrame = {
-    graft.functions.TarWalk.register(
-      SparkSession.getActiveSession.getOrElse(samples.sparkSession))
     samples
       .select(shardCol.as("shard_id"),
         concat(sampleKeyCol, lit("."), extCol).as("__name"),
@@ -419,7 +384,6 @@ object WebOps {
   }
 
   def segmentAudit(files: DataFrame, idCol: Column, blob: Column): DataFrame = {
-    registered()
     files
       .select(idCol.as("segment_id"), blob.as("__b"))
       .withColumn("codec", call_function("codec_probe", col("__b")))
@@ -490,14 +454,12 @@ object WebOps {
     * at any crawl scale.
     */
   def robotsRuleArrays(robots: DataFrame, agent: String): DataFrame = {
-    registered()
     agentRuleGroup(robots, agent)
       .groupBy(col("host"))
       .agg(collect_list(struct(col("allow"), col("rule_path"))).as("rules"))
   }
 
   def robotsFilter(urls: DataFrame, robots: DataFrame, agent: String): DataFrame = {
-    registered()
     val group = agentRuleGroup(robots, agent)
     val verdicts = urls
       .join(group, Seq("host"), "left")

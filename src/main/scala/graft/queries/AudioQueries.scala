@@ -402,7 +402,6 @@ object AudioQueries extends QueryPack {
     // size undefined — the whole-or-refuse posture). The oracle states
     // every output as a closed form of doc_id.
     "mm_audio_mp3_meta" -> ((s, dir) => {
-      graft.functions.MpegMeta.register(s)
       val frameCase = "CASE doc_id % 6 " + mp3Cfgs.zipWithIndex
         .map { case (c, i) => s"WHEN $i THEN '${c.frameHex}'" }
         .mkString(" ") + " END"
@@ -441,7 +440,6 @@ object AudioQueries extends QueryPack {
     // sampling-frequency index and must refuse to null. The oracle
     // states every output as a closed form of doc_id.
     "mm_audio_adts_meta" -> ((s, dir) => {
-      graft.functions.MpegMeta.register(s)
       val frameCase = "CASE doc_id % 4 " + adtsCfgs.zipWithIndex
         .map { case (c, i) => s"WHEN $i THEN '${c.frameHex}'" }
         .mkString(" ") + " END"
@@ -471,7 +469,6 @@ object AudioQueries extends QueryPack {
     // a stale CRC and must refuse to null. The oracle states every
     // output as a closed form of doc_id.
     "mm_audio_ogg_meta" -> ((s, dir) => {
-      graft.functions.OggMeta.register(s)
       val streamCase = "CASE (doc_id % 4) * 3 + (doc_id % 3) " +
         (for (c <- 0 until 4; n <- 0 until 3)
           yield s"WHEN ${c * 3 + n} THEN '${oggCfgs(c).streamHex(n + 1)}'")
@@ -507,7 +504,6 @@ object AudioQueries extends QueryPack {
     // comment with no '=' both refuse to null. The oracle replays
     // vendor/tag digests as closed forms of doc_id.
     "mm_audio_ogg_tags" -> ((s, dir) => {
-      graft.functions.OggMeta.register(s)
       val langs = Seq("en", "de", "fr", "ja")
       def commentsOf(c: Int): Seq[String] = Seq(
         s"TITLE=Track $c", s"ARTIST=Artist №$c", s"LANGUAGE=${langs(c)}",
@@ -556,7 +552,6 @@ object AudioQueries extends QueryPack {
     // non-syncsafe v2.4 frame-size refusal. The oracle replays
     // version/count/tag digests as closed forms.
     "mm_audio_id3_tags" -> ((s, dir) => {
-      graft.functions.MpegMeta.register(s)
       val c0 = id3Hex(3, Seq(
         ("TIT2", 0, "Track 0\u0000"), ("TPE1", 0, "Artist 0"),
         ("TALB", 0, "Album zero"), ("TLAN", 0, "eng"),
@@ -599,7 +594,6 @@ object AudioQueries extends QueryPack {
     // comment, blank-padded fields) + a no-TAG refusal; closed-form
     // oracle.
     "mm_audio_id3v1" -> ((s, dir) => {
-      graft.functions.MpegMeta.register(s)
       def pad(sql: String, len: Int): String =
         s"rpad(substr($sql, 1, $len), $len, chr(0))"
       def hx(sql: String): String = s"hex(encode($sql, 'ISO-8859-1'))"
@@ -656,7 +650,6 @@ object AudioQueries extends QueryPack {
     // shape: the front tag still parses while the frame walk and the
     // tail refuse.
     "mm_audio_mp3_tagged_e2e" -> ((s, dir) => {
-      graft.functions.MpegMeta.register(s)
       val v2c0 = id3Hex(3, Seq(("TIT2", 0, "Front zero"),
         ("TLAN", 0, "eng")))
       val v2c1 = id3Hex(4, Seq(("TIT2", 3, "Front ☃ one"),
@@ -693,7 +686,6 @@ object AudioQueries extends QueryPack {
     }),
 
     "mm_audio_meta" -> ((s, dir) => {
-      graft.functions.AudioHeader.register(s)
       val chSql = "(CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 1 END)"
       val rateSql = "(doc_id % 8 * 4000 + 8000)"
       val wavHex =
@@ -730,7 +722,6 @@ object AudioQueries extends QueryPack {
     // same doc_id-derived formula. RMS is the only float, computed from
     // the exact integers and rounded on both sides.
     "mm_audio_features" -> ((s, dir) => {
-      graft.functions.AudioPcmStats.register(s)
       val nSql = "(doc_id % 17 + 24)"
       val leSampleSql = MmFixtures.leSample16(MmFixtures.statsSampleSql("k"))
       val wavHex = // JUNK chunk before fmt forces the chunk walk
@@ -761,8 +752,6 @@ object AudioQueries extends QueryPack {
     // the interpolation arithmetic, the emitted RIFF container
     // (octet_length = 44 + 2·n_out), and the stats decode in one hash.
     "mm_audio_resample" -> ((s, dir) => {
-      graft.functions.AudioPcmStats.register(s)
-      graft.functions.AudioResample.register(s)
       val nSql = "(doc_id % 17 + 24)"
       val wavHex = MmFixtures.wav16kHex(nSql, MmFixtures.statsSampleSql("k"))
       Tables.documents(s, dir)
@@ -790,7 +779,6 @@ object AudioQueries extends QueryPack {
     // replays the whole pipeline from the same doc_id waveform with the
     // basis values as literals.
     "mm_audio_mel" -> ((s, dir) => {
-      graft.functions.AudioMel.register(s)
       val nSql = "(doc_id % 80 + 24)"
       val wavHex = MmFixtures.wav16kHex(nSql, MmFixtures.statsSampleSql("k"))
       Tables.documents(s, dir)
@@ -807,7 +795,6 @@ object AudioQueries extends QueryPack {
     // grain), tail zero-padded — mm_audio_mel is exactly frame 0. The
     // oracle adds the frame dimension to the same basis-literal replay.
     "mm_audio_spectrogram" -> ((s, dir) => {
-      graft.functions.AudioMel.register(s)
       val nSql = "(doc_id % 80 + 24)"
       val wavHex = MmFixtures.wav16kHex(nSql, MmFixtures.statsSampleSql("k"))
       Tables.documents(s, dir)
@@ -835,7 +822,6 @@ object AudioQueries extends QueryPack {
     // the oracle, which replays every sample, energy, the mean, the
     // island grouping, and the floor.
     "mm_audio_vad" -> ((s, dir) => {
-      graft.functions.AudioMel.register(s)
       val wavHex = MmFixtures.vadBurstWavHex
       // frame-energy table materializes once — it feeds both the
       // per-clip mean and the activity filter
@@ -877,8 +863,6 @@ object AudioQueries extends QueryPack {
     // parity-phased bursts; the oracle replays sample energies, cue
     // spans, and the rollup.
     "mm_subtitle_align" -> ((s, dir) => {
-      graft.functions.AudioMel.register(s)
-      graft.functions.SubtitleCues.register(s)
       val wavHex = MmFixtures.vadBurstWavHex
       def ts(ms: String) = MmFixtures.vttTs(ms)
       def cueSql(c: Int) = {
@@ -922,8 +906,6 @@ object AudioQueries extends QueryPack {
     // bursts, a third sits on silence and must drop. The oracle replays
     // every sample, energy, span, the gate, and the digest.
     "mm_speech_e2e" -> ((s, dir) => {
-      graft.functions.AudioMel.register(s)
-      graft.functions.SubtitleCues.register(s)
       val wavHex = MmFixtures.vadBurstWavHex
       def ts(ms: String) = MmFixtures.vttTs(ms)
       def cueSql(st: String, label: String) =
@@ -982,7 +964,6 @@ object AudioQueries extends QueryPack {
     // The oracle replays PCM → fixed-point DFT (shared basis literals)
     // → mel energies → every delta bit → bands → hamming → rollup.
     "mm_audio_dedup" -> ((s, dir) => {
-      graft.functions.AudioMel.register(s)
       val gSql = "(doc_id div 2)"
       val seedSql = s"(($gSql * 48271) % 65537)"
       val sEvenSql = s"((($seedSql * (k + 7)) % 65537) % 4001 - 2000)"
@@ -1023,7 +1004,6 @@ object AudioQueries extends QueryPack {
     // integer arithmetic, so the oracle replays byte → linear → stats
     // without parsing the container.
     "mm_audio_g711" -> ((s, dir) => {
-      graft.functions.AudioG711Stats.register(s)
       val nSql = "(doc_id % 15 + 20)"
       val tagSql = "(CASE WHEN doc_id % 2 = 0 THEN 7 ELSE 6 END)"
       val byteSql = "((doc_id * 31 + k * 97) % 256)"
@@ -1057,7 +1037,6 @@ object AudioQueries extends QueryPack {
     // (doc_id, k) so the oracle replays stats without parsing a byte —
     // a wrong endianness or sign model breaks peak/rms/zc loudly.
     "mm_audio_aiff" -> ((s, dir) => {
-      graft.functions.AiffStats.register(s)
       def be(x: String, bytes: Int) = s"lpad(hex($x), ${2 * bytes}, '0')"
       val bitsSql = "(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 16 WHEN 1 THEN 8 ELSE 24 END)"
       val bpsSql = "(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 2 WHEN 1 THEN 1 ELSE 3 END)"
@@ -1103,7 +1082,6 @@ object AudioQueries extends QueryPack {
     // like Java int division — the reason downmix is truncation, not
     // floor), never parsing a byte.
     "mm_audio_stereo" -> ((s, dir) => {
-      graft.functions.AudioPcmDownmix.register(s)
       val nSql = "(doc_id % 13 + 20)"
       val lSql = "((doc_id * 37 + k * 451) % 4001 - 2000)"
       val rSql = "((doc_id * 53 + k * 293) % 3001 - 1500)"
@@ -1137,7 +1115,6 @@ object AudioQueries extends QueryPack {
     // wrong sign-extension or centering is a loud hash break, and the
     // oracle replays the exact integer stats from the formula.
     "mm_audio_widths" -> ((s, dir) => {
-      graft.functions.AudioPcmStats.register(s)
       val bitsSql = "(CASE doc_id % 3 WHEN 0 THEN 8 WHEN 1 THEN 16 ELSE 24 END)"
       val mSql = "(CASE doc_id % 3 WHEN 0 THEN 120 WHEN 1 THEN 2000 ELSE 1500000 END)"
       val nSql = "(doc_id % 11 + 16)"
@@ -1181,7 +1158,6 @@ object AudioQueries extends QueryPack {
     // oracle replays the sample arithmetic: the constant run
     // contributes c copies, crossings only at run boundaries.
     "mm_audio_flac" -> ((s, dir) => {
-      graft.functions.AudioFlacStats.register(s)
       def be(x: String, bytes: Int) = (bytes - 1 to 0 by -1)
         .map(n => s"lpad(hex(($x) div ${1L << (8 * n)} % 256), 2, '0')")
         .mkString("concat(", ", ", ")")
@@ -1225,7 +1201,6 @@ object AudioQueries extends QueryPack {
     // touches a byte: any drift in Rice decoding, partition walking,
     // warmup handling or predictor arithmetic breaks the hash.
     "mm_audio_flac_rice" -> ((s, dir) => {
-      graft.functions.AudioFlacStats.register(s)
       import s.implicits._
       flacRiceFixtures.toDF("img", "seed", "n", "hex")
         .selectExpr("img", "audio_flac_stats(unhex(hex)) AS st")
@@ -1245,7 +1220,6 @@ object AudioQueries extends QueryPack {
     // Committed fixtures from the independent encoder; the oracle
     // replays both channel formulas, the downmix, and the stats.
     "mm_audio_flac_stereo" -> ((s, dir) => {
-      graft.functions.AudioFlacStats.register(s)
       import s.implicits._
       flacStereoFixtures.toDF("img", "seed", "n", "hex")
         .selectExpr("img", "audio_flac_stats(unhex(hex)) AS st")

@@ -149,7 +149,6 @@ object CorpusQueries extends QueryPack {
     // the strict decoder (overlong/surrogate/truncation policy) breaks
     // the hash.
     "text_utf8_stats" -> ((s, dir) => {
-      graft.functions.Utf8Stats.register(s)
       val tail = expr(
         """CASE CAST(doc_id % 4 AS INT)
           |  WHEN 1 THEN repeat('C3A9', CAST(doc_id % 5 + 1 AS INT))
@@ -355,7 +354,6 @@ object CorpusQueries extends QueryPack {
     // of the normalized text pins the exact bytes against DuckDB's own
     // nfc_normalize — two independent implementations of UAX#15.
     "text_nfc_normalize" -> ((s, dir) => {
-      graft.functions.NfcNormalize.register(s)
       Tables.documents(s, dir)
         .select(col("doc_id"),
           concat(col("text"), lit(" café ã")).as("dirty"))
@@ -533,7 +531,6 @@ object CorpusQueries extends QueryPack {
     // rule into one constructed paragraph per doc; the oracle states
     // all four sentences closed-form.
     "text_sentences" -> ((s, dir) => {
-      graft.functions.SentenceSplit.register(s)
       val text = concat(
         lit("Alpha w"), col("doc_id").cast("string"),
         lit(". Dr. Smith met Ms. Jones at 3.14 pm!  Next part "),

@@ -112,7 +112,6 @@ object DataPipelineQueries extends QueryPack {
     // formulation (TextOps.simhash) computes the same values and is
     // equality-tested against this in SimHash64Spec.
     "dedup_simhash" -> ((s, dir) => {
-      graft.functions.SimHash64.register(s, SIMHASH_BITS)
       Tables.documents(s, dir)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
         .selectExpr("doc_id", "simhash64(__toks) AS simhash")
@@ -125,7 +124,6 @@ object DataPipelineQueries extends QueryPack {
     // pair within hamming ≤ 3 shares a band), then the exact popcount
     // filter keeps true near-dups.
     "dedup_simhash_hamming" -> ((s, dir) => {
-      graft.functions.SimHash64.register(s, SIMHASH_BITS)
       val fp = Tables.documents(s, dir)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
         .selectExpr("doc_id", "simhash64(__toks) AS fp")
@@ -309,7 +307,6 @@ object DataPipelineQueries extends QueryPack {
     // the final intersection — so a composition bug anywhere (the
     // web_corpus_e2e lesson) breaks the hash.
     "corpus_e2e_curate2" -> ((s, dir) => {
-      graft.functions.Utf8Stats.register(s)
       val docs = Tables.documents(s, dir)
       val pairs = DedupOps.minhashCandidates(docs, "doc_id", "text",
         shingleN = 3, numHashes = 8, bands = 4)
@@ -348,7 +345,6 @@ object DataPipelineQueries extends QueryPack {
     // counts, count-of-counts discounts), the bucket thresholds, and
     // the final intersection.
     "corpus_e2e_curate3" -> ((s, dir) => {
-      graft.functions.Utf8Stats.register(s)
       val docs = Tables.documents(s, dir)
       val pairs = DedupOps.minhashCandidates(docs, "doc_id", "text",
         shingleN = 3, numHashes = 8, bands = 4)

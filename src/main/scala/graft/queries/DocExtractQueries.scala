@@ -35,7 +35,6 @@ object DocExtractQueries extends QueryPack {
     // the expected extraction as a closed form of (doc_id, first word,
     // source) — it never sees TeX.
     "web_tex_extract" -> ((s, dir) => {
-      graft.functions.TexText.register(s)
       val did = col("doc_id").cast("string")
       val w0 = element_at(split(trim(col("text")), "\\s+"), 1)
       val nl = lit("\n")
@@ -84,7 +83,6 @@ object DocExtractQueries extends QueryPack {
     // source); any drift in WARC framing of non-HTTP payloads, the
     // JSON round trip, or link explosion breaks the hash.
     "web_wat_extract" -> ((s, dir) => {
-      WebOps.registerAll(s)
       val docUrl = WebOps.syntheticUrl(col("doc_id"), col("source"))
       val w0 = element_at(split(trim(col("text")), "\\s+"), 1)
       val title = concat(lit("Doc "), col("doc_id").cast("string"),

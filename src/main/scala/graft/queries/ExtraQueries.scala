@@ -324,7 +324,6 @@ object ExtraQueries extends QueryPack {
     // dims flooring; a percentage width and a 3-number viewBox refuse
     // to null. Ground truth is arithmetic, as in mm_image_meta.
     "mm_image_svg_meta" -> ((s, dir) => {
-      graft.functions.ImageHeader.register(s)
       val w = (col("doc_id") % 640 + 1).cast("int").cast("string")
       val h = (col("doc_id") % 480 + 1).cast("int").cast("string")
       val svg0 = concat(
@@ -368,7 +367,6 @@ object ExtraQueries extends QueryPack {
     // html_to_text reference rules so SVG text dedups identically to
     // HTML text. Non-SVG bytes refuse to null.
     "mm_image_svg_text" -> ((s, dir) => {
-      graft.functions.SvgText.register(s)
       val id = col("doc_id").cast("string")
       val svg = concat(
         lit("<?xml version=\"1.0\"?>\n<svg xmlns=\"http://www.w3.org/2000/svg\">"),
@@ -400,7 +398,6 @@ object ExtraQueries extends QueryPack {
     // varies per row (id%5 padding bytes). One codegen'd scan-side
     // expression; no UDF, no shuffle.
     "mm_image_meta" -> ((s, dir) => {
-      graft.functions.ImageHeader.register(s)
       val w = (col("doc_id") % 640 + 1).cast("int")
       val h = (col("doc_id") % 480 + 1).cast("int")
       val be16 = (c: Column) => lpad(hex(c), 4, "0")
@@ -433,7 +430,6 @@ object ExtraQueries extends QueryPack {
     // image_header's IFD0 walk; doc_id%7=0 rows carry magic 43 and must
     // refuse to null. The oracle states width/height by arithmetic.
     "mm_image_tiff_meta" -> ((s, dir) => {
-      graft.functions.ImageHeader.register(s)
       def be(x: String, bytes: Int) = s"lpad(hex($x), ${2 * bytes}, '0')"
       val wS = "(doc_id % 800 + 1)"
       val hS = "(doc_id % 600 + 1)"
@@ -483,7 +479,6 @@ object ExtraQueries extends QueryPack {
     // (img, x, y) the oracle restates without touching a byte.
     "mm_image_webp" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.ImageHash.register(s)
       webpFixtures.toDF("img", "blob_hex")
         .selectExpr("img", "image_resize_gray(unhex(blob_hex), 16, 12) AS g")
         .select(col("img"), posexplode(col("g")).as(Seq("pos", "gray")))
@@ -499,7 +494,6 @@ object ExtraQueries extends QueryPack {
     // doc_id%8=0 rows carry doctype 'webp' and must refuse to null. The
     // oracle states every output as a closed form of doc_id.
     "mm_video_webm_meta" -> ((s, dir) => {
-      graft.functions.WebmMeta.register(s)
       val streamCase = "CASE doc_id % 4 " + webmCfgs.zipWithIndex
         .map { case (c, i) => s"WHEN $i THEN '${c._1}'" }
         .mkString(" ") + " END"
@@ -531,7 +525,6 @@ object ExtraQueries extends QueryPack {
     // exercised), AVI fixtures force the RIFF LIST(hdrl) -> avih path.
     // All parameters derive from doc_id; the oracle is pure arithmetic.
     "mm_video_meta" -> ((s, dir) => {
-      graft.functions.VideoHeader.register(s)
       val wSql = "(doc_id % 1280 + 16)"
       val hSql = "(doc_id % 720 + 16)"
       def be32(x: String) = s"lpad(hex($x), 8, '0')"
@@ -573,7 +566,6 @@ object ExtraQueries extends QueryPack {
     // the same injected integer basis — sign structure, median pick,
     // and bit layout all certified, no libm on either side.
     "mm_image_phash" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
       // The pixel formula depends on doc_id ONLY through `doc_id % 97`,
       // so the corpus holds at most 97 distinct BMPs: synthesize +
       // decode + DCT once per residue and broadcast-join the 8-byte
@@ -607,7 +599,6 @@ object ExtraQueries extends QueryPack {
     // template: 4×16-bit hamming bands, equi-join, filter before
     // distinct so only true near-dups shuffle.
     "mm_image_dedup" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
       // materialize the 24-byte-per-doc hash table ONCE before the
       // self-join: without this the full BMP synthesis + decode lineage
       // re-runs on BOTH join sides (measured 19 s → the fixture build,
@@ -652,8 +643,6 @@ object ExtraQueries extends QueryPack {
     // no cartesian; the hash table materializes once (localCheckpoint)
     // so BMP synthesis+decode lineage doesn't re-run under the join.
     "web_image_text_pairs" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
-      graft.functions.HtmlImages.register(s)
       val docs = Tables.documents(s, dir)
       val n = docs.count()
       def k(off: Int) = pmod(col("doc_id") + off, lit(n)).cast("string")
@@ -697,8 +686,6 @@ object ExtraQueries extends QueryPack {
     // other reference (a third of the pages publish it relative — real
     // pages do). Commented-out og decoys must not pair.
     "web_og_image_pairs" -> ((s, dir) => {
-      graft.ops.WebOps.registerAll(s)
-      graft.functions.HtmlImages.register(s)
       val docs = Tables.documents(s, dir)
       val n = docs.count()
       def k(off: Int) = pmod(col("doc_id") + off, lit(n)).cast("string")
@@ -761,8 +748,6 @@ object ExtraQueries extends QueryPack {
     // construction closed-form (never a container byte), the host-
     // varied resolution, the full integer aHash, and the digest.
     "web_interleaved_e2e" -> ((s, dir) => {
-      graft.ops.WebOps.registerAll(s)
-      graft.functions.ImageHash.register(s)
       val docs = Tables.documents(s, dir)
       val n = docs.count()
       def k(off: Int) = pmod(col("doc_id") + off, lit(n)).cast("string")
@@ -828,8 +813,6 @@ object ExtraQueries extends QueryPack {
     // Fixture: four images per page, one per rule; the oracle replays
     // extraction, resolution, the hash join, and each rule closed-form.
     "web_image_text_filter" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
-      graft.functions.HtmlImages.register(s)
       val docs = Tables.documents(s, dir)
       val n = docs.count()
       def k(off: Int) = pmod(col("doc_id") + off, lit(n)).cast("string")
@@ -877,7 +860,6 @@ object ExtraQueries extends QueryPack {
     // parity, every 9th a non-image mp42 brand that must refuse);
     // the oracle states brand/width/height as closed forms.
     "mm_image_avif_meta" -> ((s, dir) => {
-      graft.functions.AvifMeta.register(s)
       val hexSql =
         s"""concat('00000014', '66747970',
            |  CASE WHEN doc_id % 9 = 0 THEN '6D703432'
@@ -907,7 +889,6 @@ object ExtraQueries extends QueryPack {
     // with per-term truncating division, so the oracle replays the
     // arithmetic as closed forms of doc_id.
     "mm_image_gps" -> ((s, dir) => {
-      graft.functions.ExifMeta.register(s)
       val hexSql =
         s"""CASE WHEN doc_id % 9 = 0 THEN
            |  concat('FFD8', 'FFE000104A46494600010100000100010000', 'FFD9')
@@ -946,7 +927,6 @@ object ExtraQueries extends QueryPack {
     // every field as a closed form of (doc_id, idx) — the walker is
     // certified without the oracle parsing a byte.
     "mm_image_ico" -> ((s, dir) => {
-      graft.functions.IcoMeta.register(s)
       val nSql = "(doc_id % 3 + 1)"
       val dirSql =
         s"""array_join(transform(sequence(0, $nSql - 1), i -> concat(
@@ -980,7 +960,6 @@ object ExtraQueries extends QueryPack {
     // truth from the same doc_id-derived formula). Only sampled frames'
     // bytes are read — the curation shape for video at scale.
     "mm_video_framesample" -> ((s, dir) => {
-      graft.functions.VideoFrames.register(s)
       val fSql = "(doc_id % 6 + 4)"
       val vSql = "((doc_id * 13 + t * 17 + x * 7 + y * 29) % 256)"
       val frameHex = MmFixtures.aviFrameHex(2, 8, vSql)
@@ -1003,7 +982,6 @@ object ExtraQueries extends QueryPack {
     // pixels are r=g=b=v so luma == v and the oracle replays the
     // doc_id-derived mosaic formula, never a byte.
     "mm_video_framesample_mp4" -> ((s, dir) => {
-      graft.functions.VideoFrames.register(s)
       def be(x: String, bytes: Int) = (bytes - 1 to 0 by -1)
         .map(n => s"lpad(hex(($x) div ${1L << (8 * n)} % 256), 2, '0')")
         .mkString("concat(", ", ", ")")
@@ -1047,7 +1025,6 @@ object ExtraQueries extends QueryPack {
     // known place. The oracle replays both pattern hashes bit-for-bit
     // and the threshold — it never assumes the cut, it re-derives it.
     "mm_video_scenes" -> ((s, dir) => {
-      graft.functions.VideoFrames.register(s)
       val cSql = "(doc_id % 5 + 2)"
       val vSql = s"(CASE WHEN t < $cSql" +
         s" THEN (((doc_id * 48271) % 65537) * (y * 8 + x + 1)) % 65537 % 200" +
@@ -1089,7 +1066,6 @@ object ExtraQueries extends QueryPack {
     // re-encoded-clip shape. The oracle replays pixels → frame means →
     // every hash bit → bands → hamming → the pair rollup.
     "mm_video_dedup" -> ((s, dir) => {
-      graft.functions.VideoFrames.register(s)
       // aHash is brightness-shift-invariant by design, so an ADDITIVE
       // g-term would give unrelated videos identical sign structure
       // (measured: 63k pairs for 500 docs). The Lehmer-style multiplier
@@ -1141,7 +1117,6 @@ object ExtraQueries extends QueryPack {
     // block values and the oracle must replay the real floor-division
     // grid arithmetic, not just echo block constants.
     "mm_image_resize" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
       Tables.documents(s, dir)
         .selectExpr("doc_id", s"unhex(concat('$bmpHdrHex', $bmpPixelsSql)) AS blob")
         .selectExpr("doc_id",
@@ -1162,8 +1137,6 @@ object ExtraQueries extends QueryPack {
     // shape: encode+decode live in one projection between scan and
     // explode — blobs never shuffle.
     "mm_image_png" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
-      graft.functions.PngEncodeGray.register(s)
       Tables.embeddings(s, dir)
         .selectExpr("vec_id",
           "transform(embedding, e -> CAST(CAST(floor(abs(CAST(e AS DOUBLE)) " +
@@ -1186,7 +1159,6 @@ object ExtraQueries extends QueryPack {
     // the hash. AC-rich and real-encoder coverage lives in JpegPixelSpec
     // (±1 vs the JDK ImageIO codec both ways).
     "mm_image_jpeg" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
       import s.implicits._
       Seq(("gray_blocks", jpegGrayBlocksHex, 4, 3),
           ("blocks420", jpegBlocks420Hex, 4, 4))
@@ -1214,7 +1186,6 @@ object ExtraQueries extends QueryPack {
     // dims, extended VP8X 24-bit canvas) by doc_id%3, dims from the doc
     // formula. The oracle replays format/width/height from construction.
     "mm_image_webp_meta" -> ((s, dir) => {
-      graft.functions.ImageHeader.register(s)
       val wSql = "(doc_id % 300 + 16)"
       val hSql = "(doc_id % 200 + 16)"
       val hexSql =
@@ -1246,7 +1217,6 @@ object ExtraQueries extends QueryPack {
     // construction rule; any drift in the marker walk, byte-order
     // handling, or IFD scan breaks the hash.
     "mm_image_exif" -> ((s, dir) => {
-      graft.functions.ExifMeta.register(s)
       val vSql = "(doc_id % 8 + 1)"
       val hexSql =
         s"""CASE
@@ -1276,7 +1246,6 @@ object ExtraQueries extends QueryPack {
     // Interlace/local-table/KwKwK/ImageIO cross-checks live in
     // GifPixelSpec.
     "mm_image_gif" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
       import s.implicits._
       Seq(("gif_blocks", gifBlocksHex)).toDF("img", "hex")
         .selectExpr("img",
@@ -1285,7 +1254,6 @@ object ExtraQueries extends QueryPack {
     }),
 
     "mm_image_jpeg_prog" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
       import s.implicits._
       Seq(("prog_blocks", jpegProgBlocksHex)).toDF("img", "hex")
         .selectExpr("img",

@@ -106,8 +106,6 @@ object MediaQueries extends QueryPack {
     // freedom, so one hash certifies decode, container round trip, and
     // stats. Independent-encoder exactness is pinned in ImaAdpcmSpec.
     "mm_audio_adpcm_pcm" -> ((s, dir) => {
-      graft.functions.ImaAdpcm.register(s)
-      graft.functions.AudioPcmStats.register(s)
       import MmFixtures.le
       def delta(k: String) = s"((doc_id * 7 + ($k) * 13) % 16)"
       val nibbles = s"array_join(transform(sequence(0, 15), j -> " +
@@ -144,8 +142,6 @@ object MediaQueries extends QueryPack {
     // round trip, and stats. Independent-encoder exactness is pinned
     // in MsAdpcmSpec.
     "mm_audio_msadpcm_pcm" -> ((s, dir) => {
-      graft.functions.MsAdpcm.register(s)
-      graft.functions.AudioPcmStats.register(s)
       import MmFixtures.{le, leSample16}
       def nib(k: String) = s"((doc_id * 7 + ($k) * 13) % 16)"
       val nibbles = s"array_join(transform(sequence(0, 15), j -> " +
@@ -190,7 +186,6 @@ object MediaQueries extends QueryPack {
     // mid-reservoir shows its main_data_begin as deficit). The oracle
     // states every field and the per-frame deficit as closed forms.
     "mm_audio_mp3_sideinfo" -> ((s, dir) => {
-      graft.functions.MpegMeta.register(s)
       val frameCase = "CASE doc_id % 6 " + siCfgs.zipWithIndex
         .map { case (c, i) => s"WHEN $i THEN '${c.frameHex}'" }
         .mkString(" ") + " END"
@@ -226,7 +221,6 @@ object MediaQueries extends QueryPack {
     // flag-dependent fields (frames/bytes/TOC/quality) by doc_id%4,
     // the Info variant for doc_id%5=0. Closed-form oracle.
     "mm_audio_mp3_xing" -> ((s, dir) => {
-      graft.functions.MpegMeta.register(s)
       val tocHex = (0 until 100)
         .map(i => f"${i * 255 / 100}%02X").mkString
       val did = "CAST(doc_id AS STRING)"
@@ -272,7 +266,6 @@ object MediaQueries extends QueryPack {
     // replays every mean from the generator's block formulas over
     // generate_series — no literal result dumps.
     "mm_image_jpeg_color" -> ((s, dir) => {
-      graft.functions.JpegColorStats.register(s)
       import s.implicits._
       Seq(("colorstats420", colorstats420Hex),
           ("blocks420", ExtraQueries.jpegBlocks420Hex),
@@ -299,7 +292,6 @@ object MediaQueries extends QueryPack {
     // cell arithmetic. Real-file agreement with ImageIO is pinned in
     // JpegRgbStatsSpec.
     "mm_image_rgb_stats" -> ((s, dir) => {
-      graft.functions.JpegRgbStats.register(s)
       import s.implicits._
       Seq(("colorstats420", colorstats420Hex),
           ("blocks420", ExtraQueries.jpegBlocks420Hex),
@@ -335,8 +327,6 @@ object MediaQueries extends QueryPack {
     // in PNG round-trip, resize arithmetic, feature hashing, or a GD
     // round breaks the hash.
     "mm_clip_gate_train" -> ((s, dir) => {
-      graft.functions.ImageHash.register(s)
-      graft.functions.PngEncodeGray.register(s)
       val base = Tables.embeddings(s, dir)
         .selectExpr("vec_id",
           "transform(embedding, e -> CAST(CAST(floor(abs(CAST(e AS DOUBLE))" +

@@ -34,7 +34,6 @@ object ScaleQueries extends QueryPack {
     // certified against an independent arithmetic derivation
     // (ZOrderSpec machine-asserts the row-group pruning win itself).
     "src_zorder_layout" -> ((s, dir) => {
-      graft.functions.ZOrderExprs.register(s)
       val li = Tables.lineitem(s, dir)
         .select(col("l_partkey"), col("l_suppkey"))
       val stats = li.agg(

@@ -512,7 +512,6 @@ object StreamingPipeline {
     * are sized for.
     */
   def crawlStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.WebOps.registerAll(spark)
     graft.ops.WebOps.extractPages(crawlFiles(spark, dir), col("content"))
   }
 
@@ -527,9 +526,6 @@ object StreamingPipeline {
     * crawl. Output: (uri, fmt, doc_text).
     */
   def docFormatsStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.WebOps.registerAll(spark)
-    graft.functions.PdfText.register(spark)
-    graft.functions.ZipDocx.register(spark)
     val recs = crawlFiles(spark, dir)
       .select(explode(call_function("warc_records",
         call_function("decompress_any", col("content")))).as("rec"))
@@ -568,8 +564,6 @@ object StreamingPipeline {
     * Output: (src, fmt, n_rows) — one row per shard file.
     */
   def shardStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrowIpc.register(spark)
-    graft.functions.TfRecord.register(spark)
     shardProject(crawlFiles(spark, dir))
   }
 
@@ -622,7 +616,6 @@ object StreamingPipeline {
     */
   def frontierStream(spark: SparkSession, dir: String,
                      retention: String = "10 minutes"): DataFrame = {
-    graft.ops.WebOps.registerAll(spark)
     discoveredUrls(spark, dir)
       .withWatermark("seg_time", retention)
       .dropDuplicatesWithinWatermark("url")
@@ -746,7 +739,6 @@ object StreamingPipeline {
                            robots: DataFrame, agent: String,
                            perDomainCap: Int,
                            retention: String = "10 minutes"): DataFrame = {
-    graft.ops.WebOps.registerAll(spark)
     import spark.implicits._
     val retainMs = intervalMs(retention)
     val ruleArrays = broadcast(

@@ -98,7 +98,8 @@ object App {
       java.nio.file.Paths.get(args(0)), java.nio.file.Paths.get(args(1)),
       if (args.length > 2) args(2).toInt else 8080,
       if (args.length > 3) args(3) else "127.0.0.1")
-    println(s"""{"serving":"${args(0)}","uploads":"${args(1)}","port":${handles.port}}""")
+    println(s"""{"serving":${graft.Json.str(args(0))},""" +
+      s""""uploads":${graft.Json.str(args(1))},"port":${handles.port}}""")
     handles.query.awaitTermination()
   }
 }

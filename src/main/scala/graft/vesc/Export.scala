@@ -193,7 +193,7 @@ object Export {
       Files.write(Paths.get(s"$outDir/reliability.png"), Figures.reliabilityPng(
         rel.collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq))
     }
-    println(s"""{"exported":"$outDir","rides":${rawPaths.length}}""")
+    println(s"""{"exported":${graft.Json.str(outDir)},"rides":${rawPaths.length}}""")
     spark.stop()
   }
 }

@@ -315,7 +315,8 @@ object Serve {
     val port = if (args.length > 1) args(1).toInt else 8080
     val host = if (args.length > 2) args(2) else "127.0.0.1"
     val server = start(dir, port, host)
-    println(s"""{"serving":"${dir.toAbsolutePath}","port":${server.getAddress.getPort}}""")
+    println(s"""{"serving":${graft.Json.str(dir.toAbsolutePath.toString)},""" +
+      s""""port":${server.getAddress.getPort}}""")
     Thread.currentThread.join() // serve until killed
   }
 }

@@ -88,7 +88,6 @@ class AudioPcmSpec extends SparkSuite {
   }
 
   test("codegen and interpreted paths agree on the fixture query shape") {
-    AudioPcmStats.register(spark)
     import spark.implicits._
     val df = Seq((1L, wav(Seq(10, -10, 20))), (2L, wav(Seq(0, 0, 0))))
       .toDF("id", "blob")
@@ -372,7 +371,6 @@ class AudioPcmSpec extends SparkSuite {
         (tone + noise) * scaleNum / scaleDen
       }
     import spark.implicits._
-    AudioMel.register(spark)
     val df = Seq(
       (0L, wav(modTone(8, 1, 1))),
       (1L, wav(modTone(8, 3, 4))), // same tone at 3/4 loudness

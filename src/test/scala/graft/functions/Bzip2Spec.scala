@@ -27,7 +27,6 @@ class Bzip2Spec extends SparkSuite {
   }
 
   test("SQL surface composes with codec dispatch") {
-    Bzip2.register(spark)
     import spark.implicits._
     val rows = Names.map(n => (n, fixture(n + ".bz2")))
       .toDF("name", "blob")

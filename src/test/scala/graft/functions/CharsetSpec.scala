@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
 class CharsetSpec extends SparkSuite {
 
   private def detect(bytes: Array[Byte], ct: String): String = {
-    CharsetDecode.register(spark)
     import spark.implicits._
     Seq((bytes, ct)).toDF("b", "ct")
       .select(call_function("charset_detect", col("b"), col("ct")))
@@ -20,7 +19,6 @@ class CharsetSpec extends SparkSuite {
   }
 
   private def decode(bytes: Array[Byte], name: String): String = {
-    CharsetDecode.register(spark)
     import spark.implicits._
     val r = Seq((bytes, name)).toDF("b", "n")
       .select(call_function("charset_decode", col("b"), col("n"))).head
@@ -28,7 +26,6 @@ class CharsetSpec extends SparkSuite {
   }
 
   private def encode(text: String, name: String): Array[Byte] = {
-    CharsetDecode.register(spark)
     import spark.implicits._
     val r = Seq((text, name)).toDF("t", "n")
       .select(call_function("charset_encode", col("t"), col("n"))).head

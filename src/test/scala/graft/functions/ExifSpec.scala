@@ -56,7 +56,6 @@ class ExifSpec extends SparkSuite {
   }
 
   test("registered expression works through SQL incl. null rows") {
-    ExifMeta.register(spark)
     import spark.implicits._
     val rows = Seq(
       (1L, hexBytes(exifLE(5))),

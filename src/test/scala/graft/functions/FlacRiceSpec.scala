@@ -42,7 +42,6 @@ class FlacRiceSpec extends SparkSuite {
   }
 
   test("decode works through the registered expression on a DataFrame") {
-    AudioFlacStats.register(spark)
     import spark.implicits._
     val df = cases.map { case (name, seed, n) =>
       (name, seed, n, fixture(name)) }.toDF("name", "seed", "n", "blob")

@@ -31,7 +31,6 @@ class GifPixelSpec extends SparkSuite {
   }
 
   private def decodeViaSql(blob: Array[Byte], gw: Int, gh: Int): Option[Array[Int]] = {
-    ImageHash.register(spark)
     import spark.implicits._
     val row = Seq(Tuple1(blob)).toDF("blob")
       .selectExpr(s"image_resize_gray(blob, $gw, $gh) AS g")
@@ -94,7 +93,6 @@ class GifPixelSpec extends SparkSuite {
   }
 
   test("mosaic hashes identically from GIF and BMP containers") {
-    ImageHash.register(spark)
     import spark.implicits._
     val (w, h, grays) = expectedGrays("gif_blocks")
     val stride = (w * 3 + 3) & ~3

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
 class HtmlBlocksSpec extends SparkSuite {
 
   private def blocks(html: String): Seq[(String, Int, Int)] = {
-    HtmlBlocks.register(spark)
     import spark.implicits._
     Seq(html).toDF("h")
       .select(explode(call_function("html_blocks", col("h"))).as("b"))

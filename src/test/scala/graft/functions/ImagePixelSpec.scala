@@ -29,7 +29,6 @@ class ImagePixelSpec extends SparkSuite {
   }
 
   private def decodeViaSql(blob: Array[Byte], gw: Int, gh: Int): Option[Array[Int]] = {
-    ImageHash.register(spark)
     import spark.implicits._
     val row = Seq(Tuple1(blob)).toDF("blob")
       .selectExpr(s"image_resize_gray(blob, $gw, $gh) AS g")
@@ -59,7 +58,6 @@ class ImagePixelSpec extends SparkSuite {
   test("decoder never throws on adversarial bytes — null only") {
     // deterministic xorshift garbage, plus structured corruptions of a
     // valid PNG: every outcome must be null or a value, never an exception
-    ImageHash.register(spark)
     import spark.implicits._
     var x = 0x9E3779B97F4A7C15L
     def nextBytes(n: Int): Array[Byte] = {
@@ -116,7 +114,6 @@ class ImagePixelSpec extends SparkSuite {
     }
     val png = graft.vesc.Png.encode(w, h, px)
 
-    ImageHash.register(spark)
     import spark.implicits._
     val got = Seq(("bmp", bmp), ("png", png)).toDF("fmt", "blob")
       .selectExpr("fmt", "image_ahash(blob) AS a", "image_dhash(blob) AS d",

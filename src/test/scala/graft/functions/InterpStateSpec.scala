@@ -84,7 +84,6 @@ class InterpStateSpec extends SparkSuite {
       (1L, 10L, Option.empty[Double]), (1L, 20L, Some(42.5)),
       (1L, 30L, Option.empty[Double]), (2L, 10L, Option.empty[Double])
     ).toDF("g", "tk", "v").repartition(4)
-    InterpState.register(spark)
     val out = df.groupBy(col("g"))
       .agg(expr("interp_state(tk, v)").as("s"))
       .select(col("g"), col("s.v0"), col("s.t0"))

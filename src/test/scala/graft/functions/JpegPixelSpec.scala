@@ -35,7 +35,6 @@ class JpegPixelSpec extends SparkSuite {
   }
 
   private def decodeViaSql(blob: Array[Byte], gw: Int, gh: Int): Option[Array[Int]] = {
-    ImageHash.register(spark)
     import spark.implicits._
     val row = Seq(Tuple1(blob)).toDF("blob")
       .selectExpr(s"image_resize_gray(blob, $gw, $gh) AS g")
@@ -136,7 +135,6 @@ class JpegPixelSpec extends SparkSuite {
   }
 
   test("DC-only mosaic hashes identically from JPEG and from BMP (format transparency)") {
-    ImageHash.register(spark)
     import spark.implicits._
     val (w, h, grays) = expectedGrays("gray_blocks")
     // synthesize the same raster as a bottom-up 24-bit BMP
@@ -235,7 +233,6 @@ class JpegPixelSpec extends SparkSuite {
 
   private def colorStats(blob: Array[Byte])
       : Option[(Int, Int, Long, Long, Long, Long, Long, Long)] = {
-    JpegColorStats.register(spark)
     import spark.implicits._
     val row = Seq(Tuple1(blob)).toDF("blob")
       .selectExpr("jpeg_color_stats(blob) AS st").collect()(0)

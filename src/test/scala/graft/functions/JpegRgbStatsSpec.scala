@@ -116,7 +116,6 @@ class JpegRgbStatsSpec extends SparkSuite {
   }
 
   test("SQL surface: jpeg_rgb_stats struct round-trips") {
-    JpegRgbStats.register(spark)
     import spark.implicits._
     val row = Seq(Tuple1(fixture("color444.jpg"))).toDF("blob")
       .selectExpr("jpeg_rgb_stats(blob) AS st")

@@ -35,7 +35,6 @@ class Lz4Spec extends SparkSuite {
   }
 
   test("SQL surface: lz4_decompress") {
-    Lz4.register(spark)
     import spark.implicits._
     val rows = Names.map(n => (n, fixture(n + ".lz4")))
       .toDF("name", "blob")

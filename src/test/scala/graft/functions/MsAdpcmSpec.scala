@@ -41,8 +41,6 @@ class MsAdpcmSpec extends SparkSuite {
   }
 
   test("stats composition: msadpcm_to_pcm feeds audio_pcm_stats exactly") {
-    MsAdpcm.register(spark)
-    AudioPcmStats.register(spark)
     import spark.implicits._
     val exp = expectedPcm("edges_3blk.wav")
     val row = Seq(Tuple1(fixture("edges_3blk.wav"))).toDF("blob")

@@ -34,7 +34,6 @@ class PHashSpec extends SparkSuite {
   }
 
   private def phashOf(b: Array[Byte]): Option[Long] = {
-    ImageHash.register(spark)
     import spark.implicits._
     val r = Seq(b).toDF("b")
       .selectExpr("image_phash(b) AS h").head

@@ -58,7 +58,6 @@ class PunycodeSpec extends SparkSuite {
   }
 
   test("expression: codegen path + null propagation") {
-    Punycode.register(spark)
     import spark.implicits._
     val r = Seq(("xn--bcher-kva.example", "x.example"))
       .toDF("a", "b")

@@ -12,7 +12,6 @@ class SimHash64Spec extends SparkSuite {
 
   test("native expression == aggregate formulation on sf0.001 documents") {
     val docs = Tables.documents(spark, sf("sf0.001"))
-    SimHash64.register(spark, 60)
     val native = docs
       .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
       .selectExpr("doc_id", "simhash64(__toks) AS simhash")
@@ -27,7 +26,6 @@ class SimHash64Spec extends SparkSuite {
 
   test("duplicate tokens don't change the fingerprint (distinct semantics)") {
     import spark.implicits._
-    SimHash64.register(spark, 60)
     val df = Seq((1L, "a b c a b c a"), (2L, "a b c")).toDF("id", "text")
       .select(col("id"), TextOps.tokens(col("text")).as("__toks"))
       .selectExpr("id", "simhash64(__toks) AS fp")

@@ -71,7 +71,6 @@ class SnappySpec extends SparkSuite {
   }
 
   test("SQL surface + refusal matrix") {
-    Snappy.register(spark)
     import spark.implicits._
     val raw = "compose me through sql please".getBytes("UTF-8")
     val blob = org.xerial.snappy.Snappy.compress(raw)

@@ -40,7 +40,6 @@ class TfRecordSpec extends SparkSuite {
   }
 
   test("SQL surface: shard inventory via explode") {
-    TfRecord.register(spark)
     import spark.implicits._
     val rows = Seq(Tuple1(fixture("many_small.tfrecord"))).toDF("blob")
       .selectExpr("explode(tfrecord_entries(blob)) AS e")

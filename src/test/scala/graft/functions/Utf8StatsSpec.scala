@@ -65,7 +65,6 @@ class Utf8StatsSpec extends SparkSuite {
   }
 
   test("registered expression works through SQL") {
-    Utf8Stats.register(spark)
     import spark.implicits._
     val r = Seq(Tuple1(Array[Byte](0x61, 0xFF.toByte, 0x62)))
       .toDF("b").selectExpr("utf8_stats(b) AS st")

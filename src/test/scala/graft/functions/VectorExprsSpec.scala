@@ -19,8 +19,6 @@ import graft.ops.EmbeddingOps
 class VectorExprsSpec extends SparkSuite {
   import spark.implicits._
 
-  VectorExprs.register(spark) // SQL names (test session has no GraftExtensions)
-
   private val rng = new scala.util.Random(42)
   private def vecF(n: Int): Array[Float]  = Array.fill(n)(rng.nextFloat() * 4f - 2f)
   private def vecD(n: Int): Array[Double] = Array.fill(n)(rng.nextDouble() * 4 - 2)

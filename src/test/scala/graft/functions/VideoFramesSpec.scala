@@ -181,7 +181,6 @@ class VideoFramesSpec extends SparkSuite {
   }
 
   test("codegen path agrees through the SQL surface") {
-    VideoFrames.register(spark)
     import spark.implicits._
     val rows = Seq((1L, avi(Seq("00db" -> gray(10, 20), "00db" -> gray(30, 40)))))
       .toDF("id", "blob")
@@ -226,7 +225,6 @@ class VideoFramesSpec extends SparkSuite {
   }
 
   test("frame ahash codegen path through the SQL surface") {
-    VideoFrames.register(spark)
     import spark.implicits._
     val rows = Seq((1L, avi(Seq("00db" -> gray(10, 20, 30, 200),
         "00db" -> gray(1, 2, 3)))))

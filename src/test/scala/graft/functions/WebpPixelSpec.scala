@@ -28,7 +28,6 @@ class WebpPixelSpec extends SparkSuite {
     new String(fixture(name + ".webp.grays"), "UTF-8").trim.split(",").map(_.toInt)
 
   private def decodeViaSql(blob: Array[Byte]): Option[Array[Int]] = {
-    ImageHash.register(spark)
     import spark.implicits._
     val row = Seq(Tuple1(blob)).toDF("blob")
       .selectExpr(s"image_resize_gray(blob, $W, $H) AS g")
@@ -51,7 +50,6 @@ class WebpPixelSpec extends SparkSuite {
 
   test("format transparency: the same mosaic hashes identically from WebP and BMP") {
     import spark.implicits._
-    ImageHash.register(spark)
     // 24-bit bottom-up BMP of the literals-fixture mosaic
     val stride = (W * 3 + 3) & ~3
     val data = new Array[Byte](54 + stride * H)

@@ -29,7 +29,6 @@ class XzSpec extends SparkSuite {
   }
 
   test("SQL surface: xz_decompress") {
-    Xz.register(spark)
     import spark.implicits._
     val rows = Names.map(n => (n, fixture(n + ".xz")))
       .toDF("name", "blob")

@@ -44,7 +44,6 @@ class ZOrderSpec extends SparkSuite {
   test("out-of-range input fails loudly, null propagates") {
     intercept[IllegalArgumentException](ZOrderExprs.z2(-1L, 0L))
     intercept[IllegalArgumentException](ZOrderExprs.z2(0L, 1L << 31))
-    ZOrderExprs.register(spark)
     val r = Seq((1L, 2L)).toDF("a", "b")
       .selectExpr("zorder2(a, b) AS z", "zorder2(a, CAST(NULL AS BIGINT)) AS zn")
       .collect()(0)
@@ -95,7 +94,6 @@ class ZOrderSpec extends SparkSuite {
       min(col("l_suppkey")).as("smin"), max(col("l_suppkey")).as("smax"))
     val Array(pmin, pmax, smin, smax) =
       stats.collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
-    ZOrderExprs.register(spark)
     val keyed = li.crossJoin(broadcast(stats))
       .withColumn("pb", expr("((l_partkey - pmin) * 65536) div (pmax - pmin + 1)"))
       .withColumn("sb", expr("((l_suppkey - smin) * 65536) div (smax - smin + 1)"))

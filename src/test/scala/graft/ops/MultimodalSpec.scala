@@ -43,7 +43,6 @@ class MultimodalSpec extends SparkSuite {
 
   private def parseDf(blobs: Seq[(Long, Array[Byte])]) = {
     import spark.implicits._
-    graft.functions.ImageHeader.register(spark)
     blobs.toDF("id", "blob")
       .selectExpr("id", "image_header(blob) AS m")
       .select(col("id"), col("m.format"), col("m.width"), col("m.height"))
@@ -151,7 +150,6 @@ class MultimodalSpec extends SparkSuite {
 
   private def parseAudioDf(blobs: Seq[(Long, Array[Byte])]) = {
     import spark.implicits._
-    graft.functions.AudioHeader.register(spark)
     blobs.toDF("id", "blob")
       .selectExpr("id", "audio_header(blob) AS m")
       .select(col("id"), col("m.format"), col("m.channels"),
@@ -194,7 +192,6 @@ class MultimodalSpec extends SparkSuite {
 
   private def parseVideoDf(blobs: Seq[(Long, Array[Byte])]) = {
     import spark.implicits._
-    graft.functions.VideoHeader.register(spark)
     blobs.toDF("id", "blob")
       .selectExpr("id", "video_header(blob) AS m")
       .select(col("id"), col("m.format"), col("m.width"), col("m.height"),
@@ -306,7 +303,6 @@ class MultimodalSpec extends SparkSuite {
 
   private def hashDf(blobs: Seq[(Long, Array[Byte])]) = {
     import spark.implicits._
-    graft.functions.ImageHash.register(spark)
     blobs.toDF("id", "blob")
       .selectExpr("id", "image_ahash(blob) AS a", "image_dhash(blob) AS d")
       .collect()
@@ -406,7 +402,6 @@ class MultimodalSpec extends SparkSuite {
   }
 
   test("image_resize_gray: exact block means, grid cells cut across pattern blocks") {
-    graft.functions.ImageHash.register(spark)
     import spark.implicits._
     // 12-px-wide cells over 9-px-wide constant blocks: cell 0 mixes 9 px
     // of block 0 and 3 px of block 1 per row → mean is the weighted mix

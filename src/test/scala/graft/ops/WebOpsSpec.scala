@@ -248,7 +248,6 @@ class WebOpsSpec extends SparkSuite {
 
   test("malformed zstd and unknown blobs quarantine loudly; VALID zstd decodes") {
     import spark.implicits._
-    graft.functions.Gzip.register(spark)
     val goodGz = graft.functions.Gzip.compress("payload".getBytes("UTF-8"))
     val corruptGz = goodGz.clone()
     corruptGz(corruptGz.length - 5) = (corruptGz(corruptGz.length - 5) ^ 0x7f).toByte

@@ -535,8 +535,6 @@ class StreamingSpec extends SparkSuite {
   test("format-dispatch stream: html/pdf/docx/xlsx/pptx route incrementally") {
     import spark.implicits._
     import graft.ops.WebOps
-    graft.functions.PdfText.register(spark)
-    graft.functions.ZipDocx.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("fmt_in_")
     val docs = (0L until 10L).map(i => (i, s"dispatch body $i words"))
       .toDF("doc_id", "text")
