@@ -56,22 +56,14 @@ object AiffStats {
     StructField("sample_rate", IntegerType, nullable = false),
     StructField("bits", IntegerType, nullable = false)))
 
-  @inline private def u16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  @inline private def u32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-
   /** 80-bit IEEE 754 extended → exact non-negative integer Hz, or -1.
     * value = mantissa (explicit integer bit) × 2^(exp − 16383 − 63);
     * refuses sign, non-integral, zero, and > Int.MaxValue rates.
     */
   private def extendedToHz(b: Array[Byte], i: Int): Int = {
     if ((b(i) & 0x80) != 0) return -1 // negative rate
-    val exp = ((b(i) & 0x7f) << 8) | (b(i + 1) & 0xff)
-    var mant = 0L
-    var k = 0
-    while (k < 8) { mant = (mant << 8) | (b(i + 2 + k) & 0xffL); k += 1 }
+    val exp = Bytes.be16(b, i).toInt & 0x7fff
+    val mant = Bytes.be64(b, i + 2)
     if (mant == 0) return -1
     val shift = 16383 + 63 - exp
     if (shift < 0 || shift > 63) return -1
@@ -85,7 +77,7 @@ object AiffStats {
     if (!(b(0) == 'F' && b(1) == 'O' && b(2) == 'R' && b(3) == 'M' &&
           b(8) == 'A' && b(9) == 'I' && b(10) == 'F' && b(11) == 'F'))
       return null
-    if (u32(b, 4) != b.length - 8) return null
+    if (Bytes.be32(b, 4) != b.length - 8) return null
     var p = 12
     var frames = -1
     var bits = 0
@@ -93,21 +85,21 @@ object AiffStats {
     var dataAt = -1
     var dataLen = -1L
     while (p + 8 <= b.length) {
-      val size = u32(b, p + 4)
+      val size = Bytes.be32(b, p + 4)
       if (size < 0 || p + 8L + size > b.length) return null
       if (b(p) == 'C' && b(p + 1) == 'O' && b(p + 2) == 'M' &&
           b(p + 3) == 'M') {
         if (size < 18) return null
-        if (u16(b, p + 8) != 1) return null // mono only
-        frames = u32(b, p + 10).toInt
-        bits = u16(b, p + 14)
+        if (Bytes.be16(b, p + 8) != 1) return null // mono only
+        frames = Bytes.be32(b, p + 10).toInt
+        bits = Bytes.be16(b, p + 14).toInt
         if (bits != 8 && bits != 16 && bits != 24) return null
         rate = extendedToHz(b, p + 16)
         if (rate < 0) return null
       } else if (b(p) == 'S' && b(p + 1) == 'S' && b(p + 2) == 'N' &&
                  b(p + 3) == 'D') {
         if (size < 8) return null
-        val offset = u32(b, p + 8)
+        val offset = Bytes.be32(b, p + 8)
         if (offset < 0 || 8 + offset > size) return null
         dataAt = (p + 16 + offset).toInt
         dataLen = size - 8 - offset
@@ -126,7 +118,7 @@ object AiffStats {
       val i = dataAt + bps * k
       val s = bps match {
         case 1 => b(i).toInt // 8-bit AIFF is SIGNED (unlike WAV)
-        case 2 => (b(i) << 8) | (b(i + 1) & 0xff)
+        case 2 => Bytes.be16(b, i).toShort.toInt
         case _ => (b(i) << 16) | ((b(i + 1) & 0xff) << 8) | (b(i + 2) & 0xff)
       }
       val a = if (s < 0) -s else s

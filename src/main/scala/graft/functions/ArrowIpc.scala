@@ -41,10 +41,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ArrowIpc {
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   val auditSchema: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -62,45 +59,37 @@ object ArrowIpc {
   // flatbuffers mini-reader (little-endian)
   // ---------------------------------------------------------------
 
-  private final class Fb(val b: Array[Byte], val base: Int, val end: Int) {
-    def u8(i: Int): Int = { chk(i, 1); b(i) & 0xff }
-    def i16(i: Int): Int = { chk(i, 2); (b(i) & 0xff) | (b(i + 1) << 8) }
-    def u16(i: Int): Int = { chk(i, 2); (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) }
-    def i32(i: Int): Int = { chk(i, 4)
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-        ((b(i + 2) & 0xff) << 16) | (b(i + 3) << 24) }
-    def i64(i: Int): Long = { chk(i, 8)
-      (i32(i) & 0xffffffffL) | (i32(i + 4).toLong << 32) }
-    // long arithmetic: a crafted offset near Int.MaxValue must not wrap
-    // the sum negative and slip past the bound (whole-or-refuse demands
-    // Corrupt, not an escaping IndexOutOfBoundsException)
-    private def chk(i: Int, n: Int): Unit =
-      if (i < base || i.toLong + n > end) fail()
+  /** Every read is checked against the message window `[lo, hi)`
+    * (whole-or-refuse demands Corrupt, not an escaping
+    * IndexOutOfBoundsException).
+    */
+  private final class Fb(msg: Array[Byte], from: Int, until: Int)
+      extends Bytes.Window(msg, from, until) {
 
     /** root table position */
-    def root: Int = { val t = base + i32(base); if (t <= base) fail(); t }
+    def root: Int = { val t = lo + le32(lo).toInt; if (t <= lo) fail(); t }
 
     /** absolute position of field `slot`'s data in table `t`, or -1. */
     def field(t: Int, slot: Int): Int = {
-      val vt = t - i32(t) // soffset: vtable may sit before OR after
-      if (vt < base || vt + 4 > end) fail()
-      val vtSize = u16(vt)
+      val vt = t - le32(t).toInt // soffset: vtable may sit before OR after
+      if (vt < lo || vt + 4 > hi) fail()
+      val vtSize = le16(vt).toInt
       val off = 4 + slot * 2
       if (off + 2 > vtSize) return -1
-      val fo = u16(vt + off)
+      val fo = le16(vt + off).toInt
       if (fo == 0) -1 else t + fo
     }
-    def tableAt(pos: Int): Int = { val o = i32(pos); if (o <= 0) fail(); pos + o }
+    def tableAt(pos: Int): Int = { val o = le32(pos).toInt; if (o <= 0) fail(); pos + o }
     def str(pos: Int): String = {
-      val s = pos + i32(pos)
-      val n = i32(s)
-      if (n < 0 || s.toLong + 4 + n > end) fail()
+      val s = pos + le32(pos).toInt
+      val n = le32(s).toInt
+      if (n < 0 || s.toLong + 4 + n > hi) fail()
       new String(b, s + 4, n, java.nio.charset.StandardCharsets.UTF_8)
     }
     /** vector position → (element-0 position, length) */
     def vec(pos: Int): (Int, Int) = {
-      val v = pos + i32(pos)
-      val n = i32(v)
+      val v = pos + le32(pos).toInt
+      val n = le32(v).toInt
       if (n < 0) fail()
       (v + 4, n)
     }
@@ -117,7 +106,7 @@ object ArrowIpc {
     val schema = schemaPos
     // big-endian buffers are valid Arrow but not this reader's subset
     val endianness = {
-      val p = fb.field(schema, 0); if (p < 0) 0 else fb.i16(p)
+      val p = fb.field(schema, 0); if (p < 0) 0 else fb.le16(p).toShort.toInt
     }
     if (endianness != 0) fail()
     val fieldsPos = fb.field(schema, 1)
@@ -139,13 +128,13 @@ object ArrowIpc {
       val (tn, ok) = tt match {
         case 2 => // Int
           val t = fb.tableAt(tv)
-          val bw = { val p = fb.field(t, 0); if (p < 0) 0 else fb.i32(p) }
+          val bw = { val p = fb.field(t, 0); if (p < 0) 0 else fb.le32(p).toInt }
           val signed = { val p = fb.field(t, 1); p >= 0 && fb.u8(p) != 0 }
           ((if (signed) "int" else "uint") + bw,
             Seq(8, 16, 32, 64).contains(bw))
         case 3 => // FloatingPoint
           val t = fb.tableAt(tv)
-          val prec = { val p = fb.field(t, 0); if (p < 0) 0 else fb.i16(p) }
+          val prec = { val p = fb.field(t, 0); if (p < 0) 0 else fb.le16(p).toShort.toInt }
           prec match {
             case 1 => ("float32", true)
             case 2 => ("float64", true)
@@ -173,7 +162,7 @@ object ArrowIpc {
       bodyFrom: Int, bodyLen: Long,
       compressionSeen: Array[String]): Batch = {
     val rb = rbPos
-    val nRows = { val p = fb.field(rb, 0); if (p < 0) 0L else fb.i64(p) }
+    val nRows = { val p = fb.field(rb, 0); if (p < 0) 0L else fb.le64(p) }
     if (nRows < 0 || nRows > (1L << 30)) fail()
     // node/buffer vector lengths are 4 untrusted bytes: the whole vector
     // must FIT IN THE METADATA BUFFER before Array.tabulate allocates —
@@ -182,9 +171,9 @@ object ArrowIpc {
       if (p < 0) Array.empty[(Long, Long)]
       else {
         val (el0, n) = fb.vec(p)
-        if (el0.toLong + n.toLong * 16 > fb.end) fail()
+        if (el0.toLong + n.toLong * 16 > fb.hi) fail()
         Array.tabulate(n)(k =>
-          (fb.i64(el0 + k * 16), fb.i64(el0 + k * 16 + 8)))
+          (fb.le64(el0 + k * 16), fb.le64(el0 + k * 16 + 8)))
       }
     val nodes = struct16Vec(fb.field(rb, 1))
     val bufMeta = struct16Vec(fb.field(rb, 2))
@@ -241,13 +230,8 @@ object ArrowIpc {
   private final case class Ipc(format: String, fields: Array[FieldInfo],
       batches: Seq[Batch], compression: String)
 
-  private def le32(b: Array[Byte], i: Int): Int = {
-    if (i + 4 > b.length) fail()
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | (b(i + 3) << 24)
-  }
-
   private def walk(b: Array[Byte]): Ipc = {
+    val in = new Bytes.Window(b)
     val isFile = b.length >= 20 && b(0) == 'A' && b(1) == 'R' &&
       b(2) == 'R' && b(3) == 'O' && b(4) == 'W' && b(5) == '1' &&
       b(6) == 0 && b(7) == 0
@@ -256,7 +240,7 @@ object ArrowIpc {
       val n = b.length
       if (!(b(n - 6) == 'A' && b(n - 5) == 'R' && b(n - 4) == 'R' &&
         b(n - 3) == 'O' && b(n - 2) == 'W' && b(n - 1) == '1')) fail()
-      val footerLen = le32(b, n - 10)
+      val footerLen = in.le32(n - 10).toInt
       if (footerLen <= 0 || n - 10 - footerLen < 8) fail()
     }
     var pos = if (isFile) 8 else 0
@@ -264,14 +248,14 @@ object ArrowIpc {
     val batches = scala.collection.mutable.ArrayBuffer.empty[Batch]
     val comp = Array("")
     var sawEos = false
-    val streamEnd = if (isFile) b.length - 10 - le32(b, b.length - 10)
+    val streamEnd = if (isFile) b.length - 10 - in.le32(b.length - 10).toInt
       else b.length
     while (pos < streamEnd && !sawEos) {
-      val cont = le32(b, pos)
+      val cont = in.le32(pos).toInt
       if (cont == 0) { sawEos = true; pos += 4 } // legacy EOS
       else {
         if (cont != -1) fail() // continuation marker required
-        val metaLen = le32(b, pos + 4)
+        val metaLen = in.le32(pos + 4).toInt
         if (metaLen == 0) { sawEos = true; pos += 8 }
         else {
           if (metaLen < 0 || pos + 8 + metaLen > streamEnd) fail()
@@ -283,7 +267,7 @@ object ArrowIpc {
           }
           val headerPos = fb.field(msg, 2)
           val bodyLen = {
-            val p = fb.field(msg, 3); if (p < 0) 0L else fb.i64(p)
+            val p = fb.field(msg, 3); if (p < 0) 0L else fb.le64(p)
           }
           if (bodyLen < 0 ||
             metaFrom + metaLen + bodyLen > streamEnd) fail()
@@ -370,7 +354,7 @@ object ArrowIpc {
       ((validity(i >> 3) >> (i & 7)) & 1) == 0
 
   private def colValues(b: Array[Byte], name: UTF8String,
-      accept: Set[String])(read: (String, Array[Byte], Int) => Any)
+      accept: Set[String])(read: (String, Bytes.Window, Int) => Any)
       : GenericArrayData =
     try {
       val ipc = walk(b)
@@ -383,11 +367,12 @@ object ArrowIpc {
         if (bt.nodes.length != ipc.fields.length) fail()
         val (b0, _) = fieldBuffers(ipc, idx, bt)
         val validity = bt.buffers(b0)
+        val data = new Bytes.Window(bt.buffers(b0 + 1))
         val nullCount = bt.nodes(idx)._2
         var i = 0
         while (i < bt.nRows.toInt) {
           if (isNull(validity, i, nullCount)) out += null
-          else out += read(f.typeName, bt.buffers(b0 + 1), i)
+          else out += read(f.typeName, data, i)
           i += 1
         }
       }
@@ -398,33 +383,25 @@ object ArrowIpc {
       case _: NegativeArraySizeException => null
     }
 
-  private def leAt(d: Array[Byte], i: Int, n: Int): Long = {
-    if (i < 0 || i.toLong + n > d.length) fail()
-    var v = 0L
-    var k = 0
-    while (k < n) { v |= (d(i + k) & 0xffL) << (8 * k); k += 1 }
-    v
-  }
-
   def colI64(b: Array[Byte], name: UTF8String): GenericArrayData =
     colValues(b, name, Set("int8", "int16", "int32", "int64",
       "uint8", "uint16", "uint32")) { (tn, data, i) =>
       tn match {
-        case "int8" => leAt(data, i, 1).toByte.toLong
-        case "uint8" => leAt(data, i, 1)
-        case "int16" => leAt(data, i * 2, 2).toShort.toLong
-        case "uint16" => leAt(data, i * 2, 2)
-        case "int32" => leAt(data, i * 4, 4).toInt.toLong
-        case "uint32" => leAt(data, i * 4, 4)
-        case _ => leAt(data, i * 8, 8)
+        case "int8" => data.u8(i).toByte.toLong
+        case "uint8" => data.u8(i).toLong
+        case "int16" => data.le16(i * 2).toShort.toLong
+        case "uint16" => data.le16(i * 2)
+        case "int32" => data.le32(i * 4).toInt.toLong
+        case "uint32" => data.le32(i * 4)
+        case _ => data.le64(i * 8)
       }
     }
 
   def colF64(b: Array[Byte], name: UTF8String): GenericArrayData =
     colValues(b, name, Set("float32", "float64")) { (tn, data, i) =>
       if (tn == "float32")
-        java.lang.Float.intBitsToFloat(leAt(data, i * 4, 4).toInt).toDouble
-      else java.lang.Double.longBitsToDouble(leAt(data, i * 8, 8))
+        java.lang.Float.intBitsToFloat(data.le32(i * 4).toInt).toDouble
+      else java.lang.Double.longBitsToDouble(data.le64(i * 8))
     }
 
   def colStr(b: Array[Byte], name: UTF8String): GenericArrayData =
@@ -440,17 +417,17 @@ object ArrowIpc {
       ipc.batches.foreach { bt =>
         val (b0, _) = fieldBuffers(ipc, idx, bt)
         val validity = bt.buffers(b0)
-        val offsets = bt.buffers(b0 + 1)
+        val offsets = new Bytes.Window(bt.buffers(b0 + 1))
         val data = bt.buffers(b0 + 2)
         val nullCount = bt.nodes(idx)._2
         var i = 0
         while (i < bt.nRows.toInt) {
           if (isNull(validity, i, nullCount)) out += null
           else {
-            val s = if (wide) leAt(offsets, i * 8, 8).toInt
-              else leAt(offsets, i * 4, 4).toInt
-            val e = if (wide) leAt(offsets, i * 8 + 8, 8).toInt
-              else leAt(offsets, i * 4 + 4, 4).toInt
+            val s = if (wide) offsets.le64(i * 8).toInt
+              else offsets.le32(i * 4).toInt
+            val e = if (wide) offsets.le64(i * 8 + 8).toInt
+              else offsets.le32(i * 4 + 4).toInt
             if (s < 0 || e < s || e > data.length) fail()
             out += UTF8String.fromBytes(
               java.util.Arrays.copyOfRange(data, s, e))

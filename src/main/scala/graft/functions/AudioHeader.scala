@@ -55,10 +55,6 @@ object AudioHeader {
     StructField("sample_rate", IntegerType, nullable = false),
     StructField("bits_per_sample", IntegerType, nullable = false)))
 
-  // shared overflow-safe readers (Long returns — see graft.functions.Bytes)
-  private def le16(b: Array[Byte], i: Int): Int = Bytes.le16(b, i).toInt
-  private def le32(b: Array[Byte], i: Int): Long = Bytes.le32(b, i)
-
   private def row(fmt: String, ch: Int, rate: Int, bits: Int): InternalRow =
     new GenericInternalRow(Array[Any](UTF8String.fromString(fmt), ch, rate, bits))
 
@@ -72,13 +68,14 @@ object AudioHeader {
         b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E') {
       var p = 12
       while (p + 8 <= b.length) {
-        val size = le32(b, p + 4) // Long: a 0x7FFFFFF0 size field cannot wrap p negative
+        val size = Bytes.le32(b, p + 4) // Long: a 0x7FFFFFF0 size field cannot wrap p negative
         if (size < 0 || p + 8L + size > b.length) return null
         if (b(p) == 'f' && b(p + 1) == 'm' && b(p + 2) == 't' && b(p + 3) == ' ') {
           // fmt payload: format(2) channels(2) rate(4) byteRate(4)
           // blockAlign(2) bits(2)
           if (size < 16 || p + 8 + 16 > b.length) return null
-          return row("wav", le16(b, p + 10), le32(b, p + 12).toInt, le16(b, p + 22))
+          return row("wav", Bytes.le16(b, p + 10).toInt,
+            Bytes.le32(b, p + 12).toInt, Bytes.le16(b, p + 22).toInt)
         }
         p += (8 + size + (size & 1)).toInt // RIFF chunks are word-aligned
       }

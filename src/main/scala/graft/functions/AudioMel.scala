@@ -77,12 +77,6 @@ object AudioMel {
     * other decode ceiling here. */
   val MaxFrames: Int = 4096
 
-  @inline private def le16u(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xFF) | ((b(p + 1) & 0xFF) << 8)
-  @inline private def le32(b: Array[Byte], p: Int): Long =
-    (b(p) & 0xFFL) | ((b(p + 1) & 0xFFL) << 8) |
-      ((b(p + 2) & 0xFFL) << 16) | ((b(p + 3) & 0xFFL) << 24)
-
   /** Decoded mono 16-bit 16 kHz samples, or null (refused). */
   private def parsePcm(b: Array[Byte]): Array[Long] = {
     if (b == null || b.length < 12) return null
@@ -93,15 +87,15 @@ object AudioMel {
     var dataAt = -1
     var dataLen = 0L
     while (p + 8 <= b.length && (dataAt < 0 || !fmtOk)) {
-      val size = le32(b, p + 4)
+      val size = Bytes.le32(b, p + 4)
       if (size < 0 || p + 8 + size > b.length) return null
       if (b(p) == 'f' && b(p + 1) == 'm' && b(p + 2) == 't' &&
         b(p + 3) == ' ') {
         if (size < 16) return null
         // rate pinned to the mel layout's 16 kHz — resample first
         // (audio_resample) rather than silently mis-binning
-        fmtOk = le16u(b, p + 8) == 1 && le16u(b, p + 10) == 1 &&
-          le16u(b, p + 22) == 16 && le32(b, p + 12) == SampleRate
+        fmtOk = Bytes.le16(b, p + 8) == 1 && Bytes.le16(b, p + 10) == 1 &&
+          Bytes.le16(b, p + 22) == 16 && Bytes.le32(b, p + 12) == SampleRate
       } else if (b(p) == 'd' && b(p + 1) == 'a' && b(p + 2) == 't' &&
         b(p + 3) == 'a') {
         dataAt = p + 8
@@ -116,7 +110,7 @@ object AudioMel {
     var k = 0
     while (k < n) {
       val i = dataAt + 2 * k
-      s(k) = ((b(i + 1) << 8) | (b(i) & 0xFF)).toLong
+      s(k) = Bytes.le16(b, i).toShort.toLong
       k += 1
     }
     s

@@ -69,8 +69,6 @@ object AudioPcmStats {
     StructField("sum_sq", LongType, nullable = false),
     StructField("zero_crossings", IntegerType, nullable = false)))
 
-  private def le16u(b: Array[Byte], i: Int): Int = Bytes.le16(b, i).toInt
-  private def le32(b: Array[Byte], i: Int): Long = Bytes.le32(b, i)
 
   /** Invoked from both interpreted eval and generated code; null unless
     * the bytes are a complete mono 16-bit PCM RIFF/WAVE.
@@ -110,13 +108,13 @@ object AudioPcmStats {
     var dataAt = -1
     var dataLen = -1L
     while (p + 8 <= b.length) {
-      val size = le32(b, p + 4)
+      val size = Bytes.le32(b, p + 4)
       if (size < 0 || p + 8L + size > b.length) return null
       if (b(p) == 'f' && b(p + 1) == 'm' && b(p + 2) == 't' && b(p + 3) == ' ') {
         if (size < 16) return null
-        val t = le16u(b, p + 8)
-        if ((t == 6 || t == 7) && le16u(b, p + 10) == 1 &&
-          le16u(b, p + 22) == 8) tag = t
+        val t = Bytes.le16(b, p + 8).toInt
+        if ((t == 6 || t == 7) && Bytes.le16(b, p + 10) == 1 &&
+          Bytes.le16(b, p + 22) == 8) tag = t
       } else if (b(p) == 'd' && b(p + 1) == 'a' && b(p + 2) == 't' &&
                  b(p + 3) == 'a') {
         dataAt = p + 8
@@ -175,15 +173,15 @@ object AudioPcmStats {
     var dataAt = -1
     var dataLen = -1L
     while (p + 8 <= b.length) {
-      val size = le32(b, p + 4) // Long: a 0x7FFFFFF0 size cannot wrap p negative
+      val size = Bytes.le32(b, p + 4) // Long: a 0x7FFFFFF0 size cannot wrap p negative
       if (size < 0 || p + 8L + size > b.length) return null
       if (b(p) == 'f' && b(p + 1) == 'm' && b(p + 2) == 't' && b(p + 3) == ' ') {
         if (size < 16) return null
-        channels = le16u(b, p + 10)
-        bits = le16u(b, p + 22)
+        channels = Bytes.le16(b, p + 10).toInt
+        bits = Bytes.le16(b, p + 22).toInt
         // PCM (tag 1), 8/16/24-bit, mono (or stereo when downmixing) —
         // anything else is a null, not a guess
-        fmtOk = le16u(b, p + 8) == 1 &&
+        fmtOk = Bytes.le16(b, p + 8) == 1 &&
           (bits == 8 || bits == 16 || bits == 24) &&
           (channels == 1 || (allowStereo && channels == 2))
       } else if (b(p) == 'd' && b(p + 1) == 'a' && b(p + 2) == 't' &&
@@ -202,7 +200,7 @@ object AudioPcmStats {
       val i = dataAt + bps * idx
       bps match {
         case 1 => (b(i) & 0xff) - 128 // 8-bit WAV is unsigned, centered
-        case 2 => (b(i + 1) << 8) | (b(i) & 0xff) // sign from the high byte
+        case 2 => Bytes.le16(b, i).toShort.toInt
         case _ => (b(i + 2) << 16) | ((b(i + 1) & 0xff) << 8) | (b(i) & 0xff)
       }
     }
@@ -321,58 +319,26 @@ case class AudioFlacStats(child: Expression) extends UnaryExpression {
 
 object AudioFlacStats {
 
-  /** Control-flow signal for malformed streams — refuse-to-null, never a
-    * garbage number. Stackless singleton: thrown only on bad input, and
-    * the interesting cost there is NOT building a stack trace per blob.
+  import Bytes.{Corrupt, fail}
+
+  /** FLAC's signed fields (warmups, LPC coefficients, raw residuals):
+    * `n` bits of two's complement through the shared MSB-first reader —
+    * subframe bodies are bit-aligned; only frame and metadata headers
+    * are whole bytes.
     */
-  private object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
+  private def readSignedBits(br: Bytes.MsbBits, n: Int): Int = {
+    val v = br.bits(n)
+    (v << (32 - n)) >> (32 - n) // sign-extend
   }
 
-  /** MSB-first bit cursor over the frame payload — FLAC subframe bodies
-    * (warmups, LPC coefficients, Rice residuals) are bit-aligned; only
-    * frame and metadata headers are whole bytes.
-    */
-  private final class BitReader(b: Array[Byte], startByte: Int) {
-    private var pos: Long = startByte.toLong << 3
-    private val limit: Long = b.length.toLong << 3
-    def bytePos: Int = { // call only when byte-aligned
-      if ((pos & 7) != 0) throw Malformed
-      (pos >> 3).toInt
+  /** Rice quotient: a run of 0-bits terminated by a 1-bit. */
+  private def readUnary(br: Bytes.MsbBits): Int = {
+    var q = 0
+    while (br.bit() == 0) {
+      q += 1
+      if (q > (1 << 20)) fail() // corrupt unary run bound
     }
-    def alignByte(): Unit = pos = (pos + 7) & ~7L
-    def readBits(n: Int): Int = { // 0 <= n <= 31, unsigned result
-      if (n == 0) return 0
-      if (pos + n > limit) throw Malformed
-      var acc = 0L
-      var got = 0
-      while (got < n) {
-        val byteIdx = (pos >> 3).toInt
-        val bitOff = (pos & 7).toInt
-        val take = math.min(8 - bitOff, n - got)
-        val chunk = ((b(byteIdx) & 0xff) >> (8 - bitOff - take)) & ((1 << take) - 1)
-        acc = (acc << take) | chunk
-        got += take
-        pos += take
-      }
-      acc.toInt
-    }
-    def readSignedBits(n: Int): Int = {
-      val v = readBits(n)
-      (v << (32 - n)) >> (32 - n) // sign-extend
-    }
-    def readUnary(): Int = { // run of 0-bits terminated by a 1-bit
-      var q = 0
-      while (true) {
-        if (pos >= limit) throw Malformed
-        val bit = ((b((pos >> 3).toInt) >> (7 - (pos & 7).toInt)) & 1)
-        pos += 1
-        if (bit == 1) return q
-        q += 1
-        if (q > (1 << 20)) throw Malformed // corrupt unary run bound
-      }
-      q
-    }
+    q
   }
 
   /** One complete subframe (header + body) through the bit reader — the
@@ -381,29 +347,29 @@ object AudioFlacStats {
     * keeps its allocation-free form); FIXED/LPC share
     * [[decodePredicted]]. Wasted-bits subframes refuse, as everywhere.
     */
-  private def decodeSubframe(br: BitReader, blockSize: Int,
+  private def decodeSubframe(br: Bytes.MsbBits, blockSize: Int,
                              bps: Int): Array[Int] = {
-    val sh = br.readBits(8)
-    if ((sh & 0x80) != 0 || (sh & 1) != 0) throw Malformed
+    val sh = br.bits(8)
+    if ((sh & 0x80) != 0 || (sh & 1) != 0) fail()
     val typ = (sh >> 1) & 0x3f
     if (typ == 0) {
-      val v = br.readSignedBits(bps)
+      val v = readSignedBits(br, bps)
       val s = new Array[Int](blockSize)
       java.util.Arrays.fill(s, v)
       s
     } else if (typ == 1) {
       val s = new Array[Int](blockSize)
       var i = 0
-      while (i < blockSize) { s(i) = br.readSignedBits(bps); i += 1 }
+      while (i < blockSize) { s(i) = readSignedBits(br, bps); i += 1 }
       s
     } else if (typ >= 8 && typ <= 12) {
-      if (typ - 8 > blockSize) throw Malformed
+      if (typ - 8 > blockSize) fail()
       decodePredicted(br, blockSize, typ - 8, lpc = false, bps)
     } else if (typ >= 32) {
       val order = (typ & 0x1f) + 1
-      if (order > blockSize) throw Malformed
+      if (order > blockSize) fail()
       decodePredicted(br, blockSize, order, lpc = true, bps)
-    } else throw Malformed
+    } else fail()
   }
 
   /** Decode one FIXED/LPC subframe body (warmup + coefficients + Rice
@@ -411,49 +377,49 @@ object AudioFlacStats {
     * samples at `bps` bits (17 for a stereo SIDE channel — the spec's
     * one-extra-bit rule for difference channels).
     */
-  private def decodePredicted(br: BitReader, blockSize: Int, order: Int,
+  private def decodePredicted(br: Bytes.MsbBits, blockSize: Int, order: Int,
                               lpc: Boolean, bps: Int): Array[Int] = {
     val s = new Array[Int](blockSize)
     var i = 0
-    while (i < order) { s(i) = br.readSignedBits(bps); i += 1 }
+    while (i < order) { s(i) = readSignedBits(br, bps); i += 1 }
     var coefs: Array[Int] = null
     var shift = 0
     if (lpc) {
-      val precM1 = br.readBits(4)
-      if (precM1 == 15) throw Malformed // invalid by spec
+      val precM1 = br.bits(4)
+      if (precM1 == 15) fail() // invalid by spec
       val prec = precM1 + 1
-      shift = br.readSignedBits(5)
-      if (shift < 0) throw Malformed // negative shifts are spec-forbidden
+      shift = readSignedBits(br, 5)
+      if (shift < 0) fail() // negative shifts are spec-forbidden
       coefs = new Array[Int](order)
       var j = 0
-      while (j < order) { coefs(j) = br.readSignedBits(prec); j += 1 }
+      while (j < order) { coefs(j) = readSignedBits(br, prec); j += 1 }
     }
     // residual: 2-bit method (0=RICE 4-bit params, 1=RICE2 5-bit), then
     // 4-bit partition order; partition 0 is short by `order` warmups
-    val method = br.readBits(2)
-    if (method > 1) throw Malformed
+    val method = br.bits(2)
+    if (method > 1) fail()
     val pBits = if (method == 0) 4 else 5
     val escape = (1 << pBits) - 1
-    val po = br.readBits(4)
+    val po = br.bits(4)
     val parts = 1 << po
-    if (blockSize % parts != 0 || (blockSize >> po) < order) throw Malformed
+    if (blockSize % parts != 0 || (blockSize >> po) < order) fail()
     var idx = order
     var pi = 0
     while (pi < parts) {
       val cnt = (blockSize >> po) - (if (pi == 0) order else 0)
-      val param = br.readBits(pBits)
+      val param = br.bits(pBits)
       if (param == escape) {
-        val rawBits = br.readBits(5) // 0 = the whole partition is zeros
+        val rawBits = br.bits(5) // 0 = the whole partition is zeros
         var j = 0
         while (j < cnt) {
-          s(idx) = if (rawBits == 0) 0 else br.readSignedBits(rawBits)
+          s(idx) = if (rawBits == 0) 0 else readSignedBits(br, rawBits)
           idx += 1; j += 1
         }
       } else {
         var j = 0
         while (j < cnt) {
-          val q = br.readUnary()
-          val u = (q.toLong << param) | (br.readBits(param) & 0xffffffffL)
+          val q = readUnary(br)
+          val u = (q.toLong << param) | (br.bits(param) & 0xffffffffL)
           // zigzag unfold: even -> u/2, odd -> -(u/2)-1
           s(idx) = (if ((u & 1L) != 0) -((u >> 1) + 1) else u >> 1).toInt
           idx += 1; j += 1
@@ -496,7 +462,7 @@ object AudioFlacStats {
     */
   def stats(b: Array[Byte]): InternalRow =
     try statsOrThrow(b)
-    catch { case Malformed => null }
+    catch { case Corrupt => null }
 
   private def statsOrThrow(b: Array[Byte]): InternalRow = {
     if (b == null || b.length < 42) return null
@@ -538,7 +504,6 @@ object AudioFlacStats {
     var zc = 0
     var prev = 0
     var count = 0L
-    def s16(i: Int): Int = (b(i) << 8) | (b(i + 1) & 0xff)
     while (p < b.length) {
       // frame header: sync 11111111 111110xx (fixed-blocksize streams
       // have bit 1 = 0; variable-blocksize frames also parse — the
@@ -596,7 +561,7 @@ object AudioFlacStats {
         // truncating (L+R)/2 downmix — the [[AudioPcmDownmix]] contract,
         // so stats over stereo FLAC and stereo WAV of the same content
         // agree exactly.
-        val br = new BitReader(b, q)
+        val br = new Bytes.MsbBits(b, q, b.length)
         val bps0 = if (chanAsgn == 9) 17 else 16 // right-side: ch0 IS the side
         val bps1 = if (chanAsgn == 8 || chanAsgn == 10) 17 else 16
         val c0 = decodeSubframe(br, blockSize, bps0)
@@ -639,7 +604,7 @@ object AudioFlacStats {
       q += 1
       if (typ == 0) { // CONSTANT: one 16-bit sample, blockSize copies
         if (q + 2 > b.length) return null
-        val v = s16(q)
+        val v = Bytes.be16(b, q).toShort.toInt
         q += 2
         val a = if (v < 0) -v else v
         if (a > peak) peak = a
@@ -652,7 +617,7 @@ object AudioFlacStats {
         if (q + 2L * blockSize > b.length) return null
         var k = 0
         while (k < blockSize) {
-          val v = s16(q + 2 * k)
+          val v = Bytes.be16(b, q + 2 * k).toShort.toInt
           val a = if (v < 0) -v else v
           if (a > peak) peak = a
           sumSq += v.toLong * v
@@ -668,7 +633,7 @@ object AudioFlacStats {
         val lpc = typ >= 32
         val order = if (lpc) (typ & 0x1f) + 1 else typ - 8
         if (order > blockSize) return null
-        val br = new BitReader(b, q)
+        val br = new Bytes.MsbBits(b, q, b.length)
         val samples = decodePredicted(br, blockSize, order, lpc, 16)
         var k = 0
         while (k < blockSize) {

@@ -31,9 +31,6 @@ object AudioResample {
 
   val MaxOutSamples: Int = 1 << 24 // ~16M samples ≈ 17 min @ 16 kHz
 
-  private def le16u(b: Array[Byte], i: Int): Int = Bytes.le16(b, i).toInt
-  private def le32(b: Array[Byte], i: Int): Long = Bytes.le32(b, i)
-
   /** Invoked from both interpreted eval and generated code. */
   def resample(b: Array[Byte], dstRate: Int): Array[Byte] = {
     if (b == null || b.length < 12 || dstRate <= 0) return null
@@ -45,13 +42,13 @@ object AudioResample {
     var dataAt = -1
     var dataLen = -1L
     while (p + 8 <= b.length) {
-      val size = le32(b, p + 4)
+      val size = Bytes.le32(b, p + 4)
       if (size < 0 || p + 8L + size > b.length) return null
       if (b(p) == 'f' && b(p + 1) == 'm' && b(p + 2) == 't' && b(p + 3) == ' ') {
         if (size < 16) return null
-        srcRate = le32(b, p + 12).toInt
-        fmtOk = le16u(b, p + 8) == 1 && le16u(b, p + 10) == 1 &&
-          le16u(b, p + 22) == 16 && srcRate > 0
+        srcRate = Bytes.le32(b, p + 12).toInt
+        fmtOk = Bytes.le16(b, p + 8) == 1 && Bytes.le16(b, p + 10) == 1 &&
+          Bytes.le16(b, p + 22) == 16 && srcRate > 0
       } else if (b(p) == 'd' && b(p + 1) == 'a' && b(p + 2) == 't' &&
                  b(p + 3) == 'a') {
         dataAt = p + 8
@@ -62,10 +59,7 @@ object AudioResample {
     if (!fmtOk || dataAt < 0 || dataLen % 2 != 0) return null
     val n = (dataLen / 2).toInt
     if (n == 0) return null
-    def sample(idx: Int): Int = {
-      val i = dataAt + 2 * idx
-      (b(i + 1) << 8) | (b(i) & 0xff)
-    }
+    def sample(idx: Int): Int = Bytes.le16(b, dataAt + 2 * idx).toShort.toInt
     val nOutL = (n - 1).toLong * dstRate / srcRate + 1
     if (nOutL <= 0 || nOutL > MaxOutSamples) return null
     val nOut = nOutL.toInt

@@ -31,9 +31,6 @@ object AvifMeta {
 
   private val ImageBrands = Set("avif", "avis", "heic", "heix", "mif1")
 
-  @inline private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
   @inline private def fourcc(b: Array[Byte], i: Int): String =
     new String(b, i, 4, "US-ASCII")
 
@@ -42,7 +39,7 @@ object AvifMeta {
                       name: String): Int = {
     var p = from
     while (p + 8 <= to) {
-      val size = be32(b, p)
+      val size = Bytes.be32(b, p)
       if (size < 8 || p + size > to) return -1
       if (fourcc(b, p + 4) == name) return p
       p += size.toInt
@@ -53,28 +50,28 @@ object AvifMeta {
   def meta(b: Array[Byte]): InternalRow = {
     if (b == null || b.length < 16) return null
     // ftyp must come first
-    val ftypSize = be32(b, 0)
+    val ftypSize = Bytes.be32(b, 0)
     if (ftypSize < 16 || ftypSize > b.length || fourcc(b, 4) != "ftyp")
       return null
     val brand = fourcc(b, 8)
     if (!ImageBrands.contains(brand)) return null
     val metaAt = findBox(b, ftypSize.toInt, b.length, "meta")
     if (metaAt < 0) return null
-    val metaEnd = metaAt + be32(b, metaAt).toInt
+    val metaEnd = metaAt + Bytes.be32(b, metaAt).toInt
     // meta is a FULL box: 4 version/flags bytes after the header
     val iprpAt = findBox(b, metaAt + 12, metaEnd, "iprp")
     if (iprpAt < 0) return null
-    val iprpEnd = iprpAt + be32(b, iprpAt).toInt
+    val iprpEnd = iprpAt + Bytes.be32(b, iprpAt).toInt
     val ipcoAt = findBox(b, iprpAt + 8, iprpEnd, "ipco")
     if (ipcoAt < 0) return null
-    val ipcoEnd = ipcoAt + be32(b, ipcoAt).toInt
+    val ipcoEnd = ipcoAt + Bytes.be32(b, ipcoAt).toInt
     val ispeAt = findBox(b, ipcoAt + 8, ipcoEnd, "ispe")
     if (ispeAt < 0) return null
-    val ispeSize = be32(b, ispeAt)
+    val ispeSize = Bytes.be32(b, ispeAt)
     if (ispeSize < 20 || ispeAt + 20 > ipcoEnd) return null
     // ispe is a full box: version/flags, then u32 width, u32 height
-    val w = be32(b, ispeAt + 12)
-    val h = be32(b, ispeAt + 16)
+    val w = Bytes.be32(b, ispeAt + 12)
+    val h = Bytes.be32(b, ispeAt + 16)
     if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue) return null
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(brand), w.toInt, h.toInt))

@@ -92,10 +92,7 @@ object AvroOcf {
 
   // ---- minimal schema-JSON field extraction ---------------------------
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  @inline private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   /** Parsed field type: a primitive name, a nested record, or — for
     * the RESOLVED reader path only — a union, array, or map. */

@@ -48,38 +48,13 @@ object Bzip2 {
     t
   }
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private def fail(): Nothing = throw new Fail
-
-  private final class Bits(b: Array[Byte]) {
-    var pos = 0 // bit position
-    def bit(): Int = {
-      if ((pos >>> 3) >= b.length) fail()
-      val v = (b(pos >>> 3) >> (7 - (pos & 7))) & 1
-      pos += 1
-      v
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) { v = (v << 1) | bit(); k += 1 }
-      v
-    }
-    def bitsLong(n: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < n) { v = (v << 1) | bit(); k += 1 }
-      v
-    }
-    def alignByte(): Unit = pos = (pos + 7) & ~7
-    def atEnd: Boolean = (pos >>> 3) >= b.length
-  }
+  import Bytes.{Corrupt, fail}
 
   /** Decompress every concatenated bzip2 stream, or null. */
   def decompressAll(b: Array[Byte]): Array[Byte] =
     try decompressOrFail(b)
     catch {
-      case _: Fail | _: ArrayIndexOutOfBoundsException |
+      case Corrupt | _: ArrayIndexOutOfBoundsException |
           _: NegativeArraySizeException => null
     }
 
@@ -90,7 +65,7 @@ object Bzip2 {
     if (b == null) return null
     if (b.length == 0) fail()
     val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 16))
-    val r = new Bits(b)
+    val r = new Bytes.MsbBits(b, 0, b.length)
     while (!r.atEnd) {
       // stream header (byte-aligned): 'BZh' + level
       if (r.bits(8) != 'B' || r.bits(8) != 'Z' || r.bits(8) != 'h') fail()
@@ -117,7 +92,7 @@ object Bzip2 {
   /** One block: entropy stream → BWT string → inverse BWT → RLE1 into
     * `out`. Returns the computed block CRC (also checked here).
     */
-  private def decodeBlock(r: Bits, blockCap: Int,
+  private def decodeBlock(r: Bytes.MsbBits, blockCap: Int,
                           out: java.io.ByteArrayOutputStream): Int = {
     val wantCrc = r.bits(32)
     if (r.bit() != 0) fail() // deprecated `randomized` blocks: refuse

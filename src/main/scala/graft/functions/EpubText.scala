@@ -44,10 +44,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object EpubText {
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  @inline private def fail(): Nothing = throw Corrupt
+  import Bytes.fail
 
   /** First value of `name="..."` / `name='...'` inside `tag`, or null. */
   private def attr(tag: String, name: String): String = {

@@ -78,7 +78,7 @@ object ExifMeta {
       else if (m == 0xd9 || m == 0xda) return null
       else {
         if (p + 3 >= b.length) return null
-        val len = ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
+        val len = Bytes.be16(b, p + 2).toInt
         if (len < 2 || p + 2 + len > b.length) return null
         if (m == 0xe1 && len >= 10 &&
             b(p + 4) == 'E' && b(p + 5) == 'x' && b(p + 6) == 'i' &&
@@ -97,49 +97,41 @@ object ExifMeta {
       if (b(off) == 'I' && b(off + 1) == 'I') true
       else if (b(off) == 'M' && b(off + 1) == 'M') false
       else return null
-    def u16(i: Int): Int =
-      if (le) (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-      else ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-    def u32(i: Int): Long =
-      if (le) (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-        ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-      else ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    if (u16(off + 2) != 42) return null
-    val ifd0 = u32(off + 4)
+    if (Bytes.u16(b, off + 2, le) != 42) return null
+    val ifd0 = Bytes.u32(b, off + 4, le)
     if (ifd0 < 8 || off + ifd0 + 2 > end) return null
     val ifdAt = (off + ifd0).toInt
-    val n = u16(ifdAt)
+    val n = Bytes.u16(b, ifdAt, le).toInt
     if (ifdAt + 2 + 12 * n + 4 > end) return null
     var gpsIfd = -1L
     var i = 0
     while (i < n) {
       val e = ifdAt + 2 + 12 * i
-      if (u16(e) == 0x8825) {
-        if (u16(e + 2) != 4 || u32(e + 4) != 1L) return null
-        gpsIfd = u32(e + 8)
+      if (Bytes.u16(b, e, le) == 0x8825) {
+        if (Bytes.u16(b, e + 2, le) != 4 || Bytes.u32(b, e + 4, le) != 1L) return null
+        gpsIfd = Bytes.u32(b, e + 8, le)
       }
       i += 1
     }
     if (gpsIfd < 8 || off + gpsIfd + 2 > end) return null
     val g = (off + gpsIfd).toInt
-    val gn = u16(g)
+    val gn = Bytes.u16(b, g, le).toInt
     if (g + 2 + 12 * gn + 4 > end) return null
     var latRef = 0; var lonRef = 0
     var latAt = -1; var lonAt = -1
     i = 0
     while (i < gn) {
       val e = g + 2 + 12 * i
-      val tag = u16(e)
-      val typ = u16(e + 2)
-      val cnt = u32(e + 4)
+      val tag = Bytes.u16(b, e, le).toInt
+      val typ = Bytes.u16(b, e + 2, le).toInt
+      val cnt = Bytes.u32(b, e + 4, le)
       tag match {
         case 1 | 3 => // refs: ASCII count 2 inline
           if (typ != 2 || cnt != 2L) return null
           if (tag == 1) latRef = b(e + 8) & 0xff else lonRef = b(e + 8) & 0xff
         case 2 | 4 => // coords: RATIONAL count 3 at offset
           if (typ != 5 || cnt != 3L) return null
-          val at = off + u32(e + 8)
+          val at = off + Bytes.u32(b, e + 8, le)
           if (at < 0 || at + 24 > end) return null
           if (tag == 2) latAt = at.toInt else lonAt = at.toInt
         case _ => ()
@@ -148,9 +140,9 @@ object ExifMeta {
     }
     if (latAt < 0 || lonAt < 0) return null
     def micro(at: Int, neg: Boolean): Any = {
-      val dn = u32(at); val dd = u32(at + 4)
-      val mn = u32(at + 8); val md = u32(at + 12)
-      val sn = u32(at + 16); val sd = u32(at + 20)
+      val dn = Bytes.u32(b, at, le); val dd = Bytes.u32(b, at + 4, le)
+      val mn = Bytes.u32(b, at + 8, le); val md = Bytes.u32(b, at + 12, le)
+      val sn = Bytes.u32(b, at + 16, le); val sd = Bytes.u32(b, at + 20, le)
       if (dd == 0 || md == 0 || sd == 0) return null
       val v = (dn * 1000000L) / dd + (mn * 1000000L) / (60L * md) +
         (sn * 1000000L) / (3600L * sd)
@@ -180,7 +172,7 @@ object ExifMeta {
       else if (m == 0xd9 || m == 0xda) return null // image data: EXIF precedes SOS
       else {
         if (p + 3 >= b.length) return null
-        val len = ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
+        val len = Bytes.be16(b, p + 2).toInt
         if (len < 2 || p + 2 + len > b.length) return null
         if (m == 0xe1 && len >= 10 &&
             b(p + 4) == 'E' && b(p + 5) == 'x' && b(p + 6) == 'i' &&
@@ -202,26 +194,18 @@ object ExifMeta {
       if (b(off) == 'I' && b(off + 1) == 'I') true
       else if (b(off) == 'M' && b(off + 1) == 'M') false
       else return null
-    def u16(i: Int): Int =
-      if (le) (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-      else ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-    def u32(i: Int): Long =
-      if (le) (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-        ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-      else ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    if (u16(off + 2) != 42) return null
-    val ifd0 = u32(off + 4)
+    if (Bytes.u16(b, off + 2, le) != 42) return null
+    val ifd0 = Bytes.u32(b, off + 4, le)
     if (ifd0 < 8 || off + ifd0 + 2 > end) return null
     val ifdAt = (off + ifd0).toInt
-    val n = u16(ifdAt)
+    val n = Bytes.u16(b, ifdAt, le).toInt
     if (ifdAt + 2 + 12 * n > end) return null
     var i = 0
     while (i < n) {
       val e = ifdAt + 2 + 12 * i
-      if (u16(e) == 0x0112) { // orientation: SHORT, count 1, inline value
-        if (u16(e + 2) != 3 || u32(e + 4) != 1L) return null
-        val v = u16(e + 8)
+      if (Bytes.u16(b, e, le) == 0x0112) { // orientation: SHORT, count 1, inline value
+        if (Bytes.u16(b, e + 2, le) != 3 || Bytes.u32(b, e + 4, le) != 1L) return null
+        val v = Bytes.u16(b, e + 8, le).toInt
         return if (v >= 1 && v <= 8) Integer.valueOf(v) else null
       }
       i += 1

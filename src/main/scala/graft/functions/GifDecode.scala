@@ -39,12 +39,9 @@ private[functions] object GifDecode {
   def decode(b: Array[Byte]): Luma =
     try decodeOrNull(b)
     catch {
-      case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException =>
-        null
+      case Bytes.Corrupt | _: ArrayIndexOutOfBoundsException |
+          _: NegativeArraySizeException => null
     }
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
 
   private def decodeOrNull(b: Array[Byte]): Luma = {
     if (b == null || b.length < 14) return null
@@ -68,8 +65,8 @@ private[functions] object GifDecode {
           p += 1
         case 0x2c => // image descriptor: decode THIS frame and finish
           if (p + 10 > b.length) return null
-          val iw = le16(b, p + 5)
-          val ih = le16(b, p + 7)
+          val iw = Bytes.le16(b, p + 5).toInt
+          val ih = Bytes.le16(b, p + 7).toInt
           val ipacked = b(p + 9) & 0xff
           p += 10
           var pal = gct
@@ -133,7 +130,8 @@ private[functions] object GifDecode {
   }
 
   /** LSB-first variable-width GIF-LZW → exactly `expected` palette
-    * indices, or null on any malformation. Deferred clear handled: a
+    * indices, or null on any malformation (data that runs out refuses
+    * through the shared reader). Deferred clear handled: a
     * full 4096-entry table keeps decoding at 12 bits without growth
     * until a clear code arrives.
     */
@@ -144,23 +142,7 @@ private[functions] object GifDecode {
     val endCode = clear + 1
     val prefix = new Array[Int](4096)
     val suffix = new Array[Int](4096)
-    var bitPos = 0
-    val totalBits = data.length * 8
-    def read(n: Int): Int = {
-      if (bitPos + n > totalBits) return -1
-      var v = 0
-      var got = 0
-      while (got < n) {
-        val byteIdx = bitPos >> 3
-        val bitOff = bitPos & 7
-        val take = math.min(8 - bitOff, n - got)
-        val chunk = ((data(byteIdx) & 0xff) >> bitOff) & ((1 << take) - 1)
-        v |= chunk << got
-        got += take
-        bitPos += take
-      }
-      v
-    }
+    val codes = new Bytes.LsbBits(data, 0, data.length)
     val out = new Array[Int](expected)
     var oi = 0
     var codeSize = minCodeSize + 1
@@ -188,8 +170,7 @@ private[functions] object GifDecode {
     }
     var done = false
     while (!done && oi < expected) {
-      val code = read(codeSize)
-      if (code < 0) return null
+      val code = codes.bits(codeSize) // refuses when the data runs out
       if (code == clear) {
         codeSize = minCodeSize + 1
         next = endCode + 1

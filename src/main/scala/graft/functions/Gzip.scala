@@ -99,7 +99,7 @@ object Gzip {
     p += 10
     if ((flg & 4) != 0) { // FEXTRA
       if (p + 2 > b.length) return -1
-      p += 2 + (u8(p) | (u8(p + 1) << 8))
+      p += 2 + Bytes.le16(b, p).toInt
     }
     if ((flg & 8) != 0) { while (p < b.length && b(p) != 0) p += 1; p += 1 } // FNAME
     if ((flg & 16) != 0) { while (p < b.length && b(p) != 0) p += 1; p += 1 } // FCOMMENT
@@ -122,9 +122,8 @@ object Gzip {
       }
       val end = p + (b.length - p - inf.getRemaining)
       if (end + 8 > b.length) return -1
-      def u32(i: Int): Long =
-        (u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3).toLong << 24)) & 0xffffffffL
-      if (u32(end) != crc.getValue || u32(end + 4) != (total & 0xffffffffL)) return -1
+      if (Bytes.le32(b, end) != crc.getValue ||
+        Bytes.le32(b, end + 4) != (total & 0xffffffffL)) return -1
       end + 8
     } catch {
       case _: java.util.zip.DataFormatException => -1

@@ -39,10 +39,7 @@ object HtmlTables {
       nullable = false)))
   val rowsType: DataType = ArrayType(rowSchema, containsNull = false)
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  @inline private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   /** Is `needle` a tag opening at position `i` (name boundary: the next
     * char is whitespace, '>', or '/')?

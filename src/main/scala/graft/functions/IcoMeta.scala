@@ -30,26 +30,15 @@ object IcoMeta {
     StructField("is_png", BooleanType, nullable = false)))
   val entriesType: DataType = ArrayType(entrySchema, containsNull = false)
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  @inline private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
-  @inline private def u16(b: Array[Byte], p: Int): Int = {
-    if (p < 0 || p + 2 > b.length) fail()
-    (b(p) & 0xFF) | ((b(p + 1) & 0xFF) << 8)
-  }
-  @inline private def u32(b: Array[Byte], p: Int): Long = {
-    if (p < 0 || p + 4 > b.length) fail()
-    (b(p) & 0xFFL) | ((b(p + 1) & 0xFFL) << 8) |
-      ((b(p + 2) & 0xFFL) << 16) | ((b(p + 3) & 0xFFL) << 24)
-  }
 
   def entries(buf: Array[Byte]): GenericArrayData =
     try {
       if (buf.length < 6) fail()
-      if (u16(buf, 0) != 0 || u16(buf, 2) != 1) fail()
-      val n = u16(buf, 4)
+      val in = new Bytes.Window(buf)
+      if (in.le16(0) != 0 || in.le16(2) != 1) fail()
+      val n = in.le16(4).toInt
       if (n == 0) fail()
       val out = new Array[Any](n)
       var i = 0
@@ -58,15 +47,15 @@ object IcoMeta {
         if (e + 16 > buf.length) fail()
         val w0 = buf(e) & 0xFF
         val h0 = buf(e + 1) & 0xFF
-        val bpp = u16(buf, e + 6)
-        val size = u32(buf, e + 8)
-        val off = u32(buf, e + 12)
+        val bpp = in.le16(e + 6).toInt
+        val size = in.le32(e + 8)
+        val off = in.le32(e + 12)
         if (size < 4 || off + size > buf.length) fail()
         val p = off.toInt
         val isPng = size >= 8 &&
           (buf(p) & 0xFF) == 0x89 && buf(p + 1) == 'P' &&
           buf(p + 2) == 'N' && buf(p + 3) == 'G'
-        if (!isPng && u32(buf, p) != 40L) fail() // classic DIB only
+        if (!isPng && in.le32(p) != 40L) fail() // classic DIB only
         out(i) = new GenericInternalRow(Array[Any](
           if (w0 == 0) 256 else w0, if (h0 == 0) 256 else h0,
           bpp, size, isPng))

@@ -48,8 +48,6 @@ object ImaAdpcm {
     if (b == null || b.length < 12) return null
     if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')) return null
-    def le16(i: Int): Int = Bytes.le16(b, i).toInt
-    def le32(i: Int): Long = Bytes.le32(b, i)
     var p = 12
     var fmtOk = false
     var rate = 0
@@ -59,21 +57,21 @@ object ImaAdpcm {
     var dataAt = -1
     var dataLen = -1L
     while (p + 8 <= b.length) {
-      val size = le32(p + 4)
+      val size = Bytes.le32(b, p + 4)
       if (size < 0 || p + 8L + size > b.length) return null
       if (b(p) == 'f' && b(p + 1) == 'm' && b(p + 2) == 't' && b(p + 3) == ' ') {
         // tag 0x11, mono, 4 bits/sample, 2-byte extension: samplesPerBlock
         if (size < 20) return null
-        rate = le32(p + 12).toInt
-        blockAlign = le16(p + 20)
-        spb = le16(p + 26)
-        fmtOk = le16(p + 8) == 0x11 && le16(p + 10) == 1 &&
-          le16(p + 22) == 4 && le16(p + 24) >= 2 && rate > 0 &&
+        rate = Bytes.le32(b, p + 12).toInt
+        blockAlign = Bytes.le16(b, p + 20).toInt
+        spb = Bytes.le16(b, p + 26).toInt
+        fmtOk = Bytes.le16(b, p + 8) == 0x11 && Bytes.le16(b, p + 10) == 1 &&
+          Bytes.le16(b, p + 22) == 4 && Bytes.le16(b, p + 24) >= 2 && rate > 0 &&
           blockAlign >= 5 && spb == (blockAlign - 4) * 2 + 1
       } else if (b(p) == 'f' && b(p + 1) == 'a' && b(p + 2) == 'c' &&
           b(p + 3) == 't') {
         if (size < 4) return null
-        factSamples = le32(p + 8)
+        factSamples = Bytes.le32(b, p + 8)
       } else if (b(p) == 'd' && b(p + 1) == 'a' && b(p + 2) == 't' &&
           b(p + 3) == 'a') {
         dataAt = p + 8
@@ -97,7 +95,7 @@ object ImaAdpcm {
     var blk = 0
     while (blk < nBlocks) {
       val at = dataAt + blk * blockAlign
-      var pred = ((b(at + 1) << 8) | (b(at) & 0xff)).toShort.toInt
+      var pred = Bytes.le16(b, at).toShort.toInt
       var idx = b(at + 2) & 0xff
       if (idx > 88) return null
       emit(pred)

@@ -69,10 +69,6 @@ object ImageHeader {
     StructField("height", IntegerType, nullable = false)))
 
   // shared overflow-safe readers (Long returns — see graft.functions.Bytes)
-  private def be16(b: Array[Byte], i: Int): Int = Bytes.be16(b, i).toInt
-  private def be32(b: Array[Byte], i: Int): Int = Bytes.be32(b, i).toInt
-  private def le16(b: Array[Byte], i: Int): Int = Bytes.le16(b, i).toInt
-  private def le32(b: Array[Byte], i: Int): Int = Bytes.le32(b, i).toInt
 
   private def row(fmt: String, w: Int, h: Int): InternalRow =
     new GenericInternalRow(Array[Any](UTF8String.fromString(fmt), w, h))
@@ -88,7 +84,7 @@ object ImageHeader {
         (b(4) & 0xff) == 0x0d && (b(5) & 0xff) == 0x0a &&
         (b(6) & 0xff) == 0x1a && (b(7) & 0xff) == 0x0a &&
         b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R')
-      return row("png", be32(b, 16), be32(b, 20))
+      return row("png", Bytes.be32(b, 16).toInt, Bytes.be32(b, 20).toInt)
     // JPEG: SOI, then walk marker segments to the first frame header (SOF)
     if ((b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
       var p = 2
@@ -102,12 +98,13 @@ object ImageHeader {
         if (m == 0xd9 || m == 0xda) return null // EOI / SOS: no frame header seen
         if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc) {
           // SOF: len(2) precision(1) height(2) width(2)
-          if (p + 8 < b.length) return row("jpeg", be16(b, p + 7), be16(b, p + 5))
+          if (p + 8 < b.length)
+            return row("jpeg", Bytes.be16(b, p + 7).toInt, Bytes.be16(b, p + 5).toInt)
           return null
         }
         if (m >= 0xd0 && m <= 0xd7) { p += 2 } // standalone RSTn
         else {
-          val len = be16(b, p + 2)
+          val len = Bytes.be16(b, p + 2).toInt
           if (len < 2) return null
           p += 2 + len
         }
@@ -117,7 +114,7 @@ object ImageHeader {
     // GIF: GIF87a / GIF89a + logical screen descriptor
     if (b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8' &&
         (b(4) == '7' || b(4) == '9') && b(5) == 'a')
-      return row("gif", le16(b, 6), le16(b, 8))
+      return row("gif", Bytes.le16(b, 6).toInt, Bytes.le16(b, 8).toInt)
     // BMP: BM + a DIB header. Width/height live as le32 at 18/22 for
     // every header from the 16-byte OS/2 2.x short form up through the
     // BITMAPINFOHEADER family (dibSize >= 16); the legacy 12-byte
@@ -127,15 +124,15 @@ object ImageHeader {
     // not a negative dimension: report abs(h). Non-positive results
     // (garbage widths, h == Int.MinValue) yield null, never garbage.
     if (b.length >= 26 && b(0) == 'B' && b(1) == 'M') {
-      val dibSize = le32(b, 14)
+      val dibSize = Bytes.le32(b, 14).toInt
       if (dibSize >= 16) {
-        val w = le32(b, 18).toInt
-        val h = math.abs(le32(b, 22).toInt)
+        val w = Bytes.le32(b, 18).toInt
+        val h = math.abs(Bytes.le32(b, 22).toInt)
         return if (w > 0 && h > 0) row("bmp", w, h) else null
       }
       if (dibSize == 12) {
-        val w = le16(b, 18)
-        val h = le16(b, 20)
+        val w = Bytes.le16(b, 18).toInt
+        val h = Bytes.le16(b, 20).toInt
         return if (w > 0 && h > 0) row("bmp", w, h) else null
       }
       return null
@@ -154,15 +151,15 @@ object ImageHeader {
         if (b.length >= 30 &&
             (b(pay + 3) & 0xff) == 0x9d && (b(pay + 4) & 0xff) == 0x01 &&
             (b(pay + 5) & 0xff) == 0x2a) {
-          val w = le16(b, pay + 6) & 0x3fff
-          val h = le16(b, pay + 8) & 0x3fff
+          val w = Bytes.le16(b, pay + 6).toInt & 0x3fff
+          val h = Bytes.le16(b, pay + 8).toInt & 0x3fff
           return if (w > 0 && h > 0) row("webp", w, h) else null
         }
         return null
       }
       if (b(12) == 'V' && b(13) == 'P' && b(14) == '8' && b(15) == 'L') {
         if ((b(pay) & 0xff) == 0x2f) {
-          val v = le32(b, pay + 1)
+          val v = Bytes.le32(b, pay + 1).toInt
           val w = (v & 0x3fff) + 1
           val h = ((v >> 14) & 0x3fff) + 1
           return row("webp", w, h)
@@ -191,23 +188,22 @@ object ImageHeader {
         ((b(0) == 'I' && b(1) == 'I' && (b(2) & 0xff) == 42 && b(3) == 0) ||
          (b(0) == 'M' && b(1) == 'M' && b(2) == 0 && (b(3) & 0xff) == 42))) {
       val littleEndian = b(0) == 'I'
-      def r16(i: Int): Int = if (littleEndian) le16(b, i) else be16(b, i)
-      def r32(i: Int): Int = if (littleEndian) le32(b, i) else be32(b, i)
-      val ifd = r32(4)
+      val ifd = Bytes.u32(b, 4, littleEndian).toInt
       if (ifd < 8 || ifd + 2 > b.length) return null
-      val n = r16(ifd)
+      val n = Bytes.u16(b, ifd, littleEndian).toInt
       if (n <= 0 || ifd + 2 + 12 * n > b.length) return null
       var w = -1
       var h = -1
       var e = 0
       while (e < n) {
         val off = ifd + 2 + 12 * e
-        val tag = r16(off)
+        val tag = Bytes.u16(b, off, littleEndian).toInt
         if (tag == 256 || tag == 257) {
-          if (r32(off + 4) != 1) return null // multi-count dims: refuse
-          val v = r16(off + 2) match {
-            case 3 => r16(off + 8) // SHORT, left-justified
-            case 4 => r32(off + 8) // LONG
+          if (Bytes.u32(b, off + 4, littleEndian) != 1)
+            return null // multi-count dims: refuse
+          val v = Bytes.u16(b, off + 2, littleEndian).toInt match {
+            case 3 => Bytes.u16(b, off + 8, littleEndian).toInt // SHORT, left-justified
+            case 4 => Bytes.u32(b, off + 8, littleEndian).toInt // LONG
             case _ => return null
           }
           if (tag == 256) w = v else h = v

@@ -153,13 +153,9 @@ private[functions] object JpegDecode {
     }
   }
 
-  /** Single abort channel: thrown on any malformed structure, caught once
-    * at the decode() boundary. Stackless — decode failure is a data
-    * property, not an exceptional event worth a stack walk per blob.
-    */
-  private final class DecodeFail
-      extends RuntimeException(null, null, false, false)
-  private def fail(): Nothing = throw new DecodeFail
+  // single abort channel: thrown on any malformed structure, caught once
+  // at the decode() boundary
+  import Bytes.{Corrupt, fail}
 
   /** MSB-first bit reader over entropy-coded data: 0xFF00 unstuffing,
     * loud failure on any real marker inside the stream, byte-aligned
@@ -293,7 +289,7 @@ private[functions] object JpegDecode {
   def decode(b: Array[Byte]): Luma =
     try decodeOrFail(b, null, null)
     catch {
-      case _: DecodeFail | _: ArrayIndexOutOfBoundsException |
+      case Corrupt | _: ArrayIndexOutOfBoundsException |
           _: NegativeArraySizeException => null
     }
 
@@ -311,7 +307,7 @@ private[functions] object JpegDecode {
       else if (rgb.frameComponents != 1 && rgb.frameComponents != 3) null
       else accumulateRgb(luma.w, luma.h, rgb)
     } catch {
-      case _: DecodeFail | _: ArrayIndexOutOfBoundsException |
+      case Corrupt | _: ArrayIndexOutOfBoundsException |
           _: NegativeArraySizeException => null
     }
 
@@ -378,7 +374,7 @@ private[functions] object JpegDecode {
           acc.nY, nC)
       }
     } catch {
-      case _: DecodeFail | _: ArrayIndexOutOfBoundsException |
+      case Corrupt | _: ArrayIndexOutOfBoundsException |
           _: NegativeArraySizeException => null
     }
 
@@ -386,10 +382,7 @@ private[functions] object JpegDecode {
                            rgb: RgbReq): Luma = {
     if (b == null || b.length < 4 ||
         (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return null
-    def be16(i: Int): Int = {
-      if (i + 1 >= b.length) fail()
-      ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-    }
+    val in = new Bytes.Window(b)
     val qz = Array.ofDim[Int](4, 64)
     val qSeen = new Array[Boolean](4)
     val dcTabs = new Array[HTab](4)
@@ -423,7 +416,7 @@ private[functions] object JpegDecode {
           return finishProgressive(prog, qz(cQ(0)))
         return null
       } else if (m == 0xdb) { // DQT: one or more tables
-        val end = p + be16(p)
+        val end = p + in.be16(p).toInt
         var q = p + 2
         while (q < end) {
           val pq = (b(q) & 0xff) >> 4
@@ -437,14 +430,14 @@ private[functions] object JpegDecode {
           } else if (pq == 1) { // 16-bit precision (extended sequential)
             if (q + 129 > end) fail()
             var k = 0
-            while (k < 64) { qz(tq)(k) = be16(q + 1 + 2 * k); k += 1 }
+            while (k < 64) { qz(tq)(k) = in.be16(q + 1 + 2 * k).toInt; k += 1 }
             q += 129
           } else fail()
           qSeen(tq) = true
         }
         p = end
       } else if (m == 0xc4) { // DHT: one or more tables
-        val end = p + be16(p)
+        val end = p + in.be16(p).toInt
         var q = p + 2
         while (q < end) {
           val tc = (b(q) & 0xff) >> 4
@@ -473,10 +466,10 @@ private[functions] object JpegDecode {
         if (sofSeen) fail()
         sofSeen = true
         progressive = m == 0xc2
-        val len = be16(p)
+        val len = in.be16(p).toInt
         val prec = b(p + 2) & 0xff
-        h = be16(p + 3)
-        w = be16(p + 5)
+        h = in.be16(p + 3).toInt
+        w = in.be16(p + 5).toInt
         val nc = b(p + 7) & 0xff
         if (prec != 8 || w <= 0 || h <= 0 || nc < 1 || nc > 4 ||
             len != 8 + 3 * nc || w.toLong * h > MaxPixels) return null
@@ -502,12 +495,12 @@ private[functions] object JpegDecode {
         // arithmetic, CC conditioning: out of scope → null
         return null
       } else if (m == 0xdd) { // DRI
-        if (be16(p) != 4) fail()
-        ri = be16(p + 2)
+        if (in.be16(p) != 4) fail()
+        ri = in.be16(p + 2).toInt
         p += 4
       } else if (m == 0xda) { // SOS: decode the first scan and finish
         if (!sofSeen) return null
-        val len = be16(p)
+        val len = in.be16(p).toInt
         val ns = b(p + 2) & 0xff
         if (ns < 1 || ns > 4 || len != 6 + 2 * ns) fail()
         val scanComp = new Array[Int](ns)
@@ -579,7 +572,7 @@ private[functions] object JpegDecode {
             cH, cV, cQ, qz, ri, acc, rgb)
         }
       } else { // APPn / COM / anything else with a length field
-        val len = be16(p)
+        val len = in.be16(p).toInt
         if (len < 2) fail()
         p += len
       }

@@ -30,8 +30,7 @@ object Lz4 {
 
   val MaxOutputBytes: Int = 64 << 20
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private def fail(): Nothing = throw new Fail
+  import Bytes.{Corrupt, fail}
 
   // ---- XXH32 (public constants) ----
   private val P1 = 0x9E3779B1
@@ -51,12 +50,10 @@ object Lz4 {
         var a4 = seed - P1
         var i = from
         while (i <= until - 16) {
-          def rd(o: Int) = (b(i + o) & 0xff) | ((b(i + o + 1) & 0xff) << 8) |
-            ((b(i + o + 2) & 0xff) << 16) | ((b(i + o + 3) & 0xff) << 24)
-          a1 = Integer.rotateLeft(a1 + rd(0) * P2, 13) * P1
-          a2 = Integer.rotateLeft(a2 + rd(4) * P2, 13) * P1
-          a3 = Integer.rotateLeft(a3 + rd(8) * P2, 13) * P1
-          a4 = Integer.rotateLeft(a4 + rd(12) * P2, 13) * P1
+          a1 = Integer.rotateLeft(a1 + Bytes.le32(b, i).toInt * P2, 13) * P1
+          a2 = Integer.rotateLeft(a2 + Bytes.le32(b, i + 4).toInt * P2, 13) * P1
+          a3 = Integer.rotateLeft(a3 + Bytes.le32(b, i + 8).toInt * P2, 13) * P1
+          a4 = Integer.rotateLeft(a4 + Bytes.le32(b, i + 12).toInt * P2, 13) * P1
           i += 16
         }
         Integer.rotateLeft(a1, 1) + Integer.rotateLeft(a2, 7) +
@@ -65,9 +62,7 @@ object Lz4 {
     h += len
     var i = from + (len & ~15)
     while (i <= until - 4) {
-      val v = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-        ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-      h = Integer.rotateLeft(h + v * P3, 17) * P4
+      h = Integer.rotateLeft(h + Bytes.le32(b, i).toInt * P3, 17) * P4
       i += 4
     }
     while (i < until) {
@@ -85,27 +80,22 @@ object Lz4 {
   def decompressAll(b: Array[Byte]): Array[Byte] =
     try decompressOrFail(b)
     catch {
-      case _: Fail | _: ArrayIndexOutOfBoundsException |
+      case Corrupt | _: ArrayIndexOutOfBoundsException |
           _: NegativeArraySizeException => null
     }
 
-  private def le32(b: Array[Byte], i: Int): Long = {
-    if (i + 4 > b.length) fail()
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  }
-
   private def decompressOrFail(b: Array[Byte]): Array[Byte] = {
     if (b == null) return null
+    val in = new Bytes.Window(b)
     if (b.length < 7) fail()
     val out = new Buf(math.min(math.max(b.length * 4, 1024), 1 << 16))
     var p = 0
     var sawFrame = false
     while (p < b.length) {
-      val magic = le32(b, p)
+      val magic = in.le32(p)
       if ((magic & 0xFFFFFFF0L) == 0x184D2A50L) {
         // skippable frame: 4-byte size then payload
-        val sz = le32(b, p + 4)
+        val sz = in.le32(p + 4)
         if (p + 8L + sz > b.length) fail()
         p += 8 + sz.toInt
       } else if (magic == 0x184D2204L) {
@@ -144,6 +134,7 @@ object Lz4 {
   }
 
   private def decodeFrame(b: Array[Byte], start: Int, out: Buf): Int = {
+    val in = new Bytes.Window(b)
     var p = start
     if (p + 3 > b.length) fail()
     val flg = b(p) & 0xff
@@ -159,7 +150,7 @@ object Lz4 {
     val maxBlock = 1 << (8 + 2 * bmax) // 4..7 -> 64KB..4MB
     var descEnd = p + 2
     var declared = -1L
-    if (contentSize) { declared = readLe64(b, descEnd); descEnd += 8 }
+    if (contentSize) { declared = in.le64(descEnd); descEnd += 8 }
     if (dictId) descEnd += 4
     if (descEnd + 1 > b.length) fail()
     // header checksum byte: (XXH32(descriptor after magic, 0) >> 8) & 0xff
@@ -170,7 +161,7 @@ object Lz4 {
     val frameStart = out.n
     var end = false
     while (!end) {
-      val word = le32(b, p)
+      val word = in.le32(p)
       p += 4
       if (word == 0L) end = true
       else {
@@ -181,7 +172,7 @@ object Lz4 {
         else out.write(b, p, size)
         p += size
         if (blockChecksum) {
-          if (le32(b, p) != (xxh32(b, p - size, p, 0) & 0xFFFFFFFFL)) fail()
+          if (in.le32(p) != (xxh32(b, p - size, p, 0) & 0xFFFFFFFFL)) fail()
           p += 4
         }
       }
@@ -189,14 +180,11 @@ object Lz4 {
     val produced = out.n - frameStart
     if (declared >= 0 && declared != produced) fail()
     if (contentChecksum) {
-      if (le32(b, p) != (out.xxhFrom(frameStart) & 0xFFFFFFFFL)) fail()
+      if (in.le32(p) != (out.xxhFrom(frameStart) & 0xFFFFFFFFL)) fail()
       p += 4
     }
     p
   }
-
-  private def readLe64(b: Array[Byte], i: Int): Long =
-    le32(b, i) | (le32(b, i + 4) << 32)
 
   /** One LZ4 block: token-driven literal/match sequences. Match
     * offsets are bounded below by the FRAME start — correct for both

@@ -41,10 +41,7 @@ object MimeText {
     StructField("text", StringType, nullable = false),
     StructField("n_parts", IntegerType, nullable = false)))
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   // ---- header block ----
 

@@ -74,7 +74,7 @@ object MpegMeta {
         b(pos + 2) == 'G') { pos = b.length }
       else {
         if (pos + 4 > b.length) return null
-        val h = (u8(pos) << 24) | (u8(pos + 1) << 16) | (u8(pos + 2) << 8) | u8(pos + 3)
+        val h = Bytes.be32(b, pos).toInt
         if ((h >>> 21) != 0x7ff) return null // broken sync
         val verBits = (h >>> 19) & 3
         val ver = verBits match {
@@ -184,8 +184,7 @@ object MpegMeta {
       if (pos + 4 > end) return null
       if (major == 3) {
         // v2.3: 4-byte BE size NOT including the size field itself
-        val es = (u8(pos) << 24) | (u8(pos + 1) << 16) |
-          (u8(pos + 2) << 8) | u8(pos + 3)
+        val es = Bytes.be32(b, pos).toInt
         if (es < 0) return null
         // bounds in Long: es is an untrusted 31-bit value, `pos + 4 + es`
         // can wrap negative in Int and slip past the `pos > end` guard
@@ -221,8 +220,7 @@ object MpegMeta {
         val fsz =
           if (major == 2) (u8(pos + 3) << 16) | (u8(pos + 4) << 8) | u8(pos + 5)
           else if (major == 3)
-            (u8(pos + 4) << 24) | (u8(pos + 5) << 16) |
-              (u8(pos + 6) << 8) | u8(pos + 7)
+            Bytes.be32(b, pos + 4).toInt
           else {
             if ((u8(pos + 4) | u8(pos + 5) | u8(pos + 6) | u8(pos + 7)) >= 0x80)
               return null // v2.4 frame sizes are syncsafe
@@ -336,22 +334,6 @@ object MpegMeta {
     StructField("scalefac_scale", IntegerType, nullable = false),
     StructField("count1table_select", IntegerType, nullable = false))))
 
-  private final class SiBits(b: Array[Byte], var byteOff: Int) {
-    private var bitOff = 0
-    def take(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        if (byteOff >= b.length) throw new ArrayIndexOutOfBoundsException()
-        v = (v << 1) | ((b(byteOff) >> (7 - bitOff)) & 1)
-        bitOff += 1
-        if (bitOff == 8) { bitOff = 0; byteOff += 1 }
-        k += 1
-      }
-      v
-    }
-  }
-
   /** `mp3_sideinfo(binary)`: MPEG-1 Layer III side-information walk —
     * the step between the frame-header metadata ([[parse]]) and a full
     * sample decode. Parses every frame's side info (both granules,
@@ -374,7 +356,7 @@ object MpegMeta {
     */
   def sideInfo(b: Array[Byte]): org.apache.spark.sql.catalyst.util.GenericArrayData = {
     try sideInfoOrNull(b)
-    catch { case _: ArrayIndexOutOfBoundsException => null }
+    catch { case Bytes.Corrupt | _: ArrayIndexOutOfBoundsException => null }
   }
 
   private def sideInfoOrNull(b: Array[Byte]): org.apache.spark.sql.catalyst.util.GenericArrayData = {
@@ -391,8 +373,7 @@ object MpegMeta {
     var mdAccum = 0L // main-data bytes provided by previous frames
     while (pos < b.length) {
       if (pos + 4 > b.length) return null
-      val h = (u8(pos) << 24) | (u8(pos + 1) << 16) | (u8(pos + 2) << 8) |
-        u8(pos + 3)
+      val h = Bytes.be32(b, pos).toInt
       if ((h >>> 21) != 0x7ff) return null // sync
       if (((h >>> 19) & 3) != 3) return null // MPEG-1 only (LSF layout differs)
       if (((h >>> 17) & 3) != 1) return null // Layer III only
@@ -410,40 +391,40 @@ object MpegMeta {
       val siStart = pos + 4 + (if (protAbsent == 0) 2 else 0)
       val siBytes = if (nch == 1) 17 else 32
       if (siStart + siBytes > pos + frameSize) return null
-      val r = new SiBits(b, siStart)
-      val mdb = r.take(9)
-      r.take(if (nch == 1) 5 else 3) // private_bits
-      r.take(4 * nch) // scfsi
+      val r = new Bytes.MsbBits(b, siStart, b.length)
+      val mdb = r.bits(9)
+      r.bits(if (nch == 1) 5 else 3) // private_bits
+      r.bits(4 * nch) // scfsi
       val avail = math.min(mdAccum, 511L)
       val deficit = math.max(0L, mdb - avail).toInt
       var gr = 0
       while (gr < 2) {
         var ch = 0
         while (ch < nch) {
-          val p23 = r.take(12)
-          val bv = r.take(9)
+          val p23 = r.bits(12)
+          val bv = r.bits(9)
           if (bv > 288) return null // > 576/2 spectral pairs: nonconforming
-          val gg = r.take(8)
-          val sfc = r.take(4)
-          val wsf = r.take(1)
+          val gg = r.bits(8)
+          val sfc = r.bits(4)
+          val wsf = r.bits(1)
           var blockType = 0
           var tables: Array[Int] = null
           var r0 = -1
           var r1 = -1
           if (wsf == 1) {
-            blockType = r.take(2)
+            blockType = r.bits(2)
             if (blockType == 0) return null // forbidden with switching
-            r.take(1) // mixed_block_flag
-            tables = Array(r.take(5), r.take(5))
-            r.take(9) // subblock_gain 3x3
+            r.bits(1) // mixed_block_flag
+            tables = Array(r.bits(5), r.bits(5))
+            r.bits(9) // subblock_gain 3x3
           } else {
-            tables = Array(r.take(5), r.take(5), r.take(5))
-            r0 = r.take(4)
-            r1 = r.take(3)
+            tables = Array(r.bits(5), r.bits(5), r.bits(5))
+            r0 = r.bits(4)
+            r1 = r.bits(3)
           }
-          val pre = r.take(1)
-          val sfs = r.take(1)
-          val c1t = r.take(1)
+          val pre = r.bits(1)
+          val sfs = r.bits(1)
+          val c1t = r.bits(1)
           out += InternalRow(frames, gr, ch, mdb, deficit, p23, bv, gg, sfc,
             wsf, blockType,
             new org.apache.spark.sql.catalyst.util.GenericArrayData(
@@ -493,8 +474,7 @@ object MpegMeta {
       pos = 10 + sz + (if ((u8(5) & 0x10) != 0) 10 else 0)
     }
     if (pos + 4 > b.length) return null
-    val h = (u8(pos) << 24) | (u8(pos + 1) << 16) | (u8(pos + 2) << 8) |
-      u8(pos + 3)
+    val h = Bytes.be32(b, pos).toInt
     if ((h >>> 21) != 0x7ff || ((h >>> 19) & 3) != 3 ||
       ((h >>> 17) & 3) != 1) return null
     val protAbsent = (h >>> 16) & 1
@@ -505,25 +485,20 @@ object MpegMeta {
     val tag = new String(b, o, 4, "US-ASCII")
     if (tag != "Xing" && tag != "Info") return null
     o += 4
-    def be32(): Int = {
-      val v = (u8(o) << 24) | (u8(o + 1) << 16) | (u8(o + 2) << 8) | u8(o + 3)
-      o += 4
-      v
-    }
-    val flags = be32()
+    val flags = Bytes.be32(b, o).toInt; o += 4
     var nFrames: Any = null
     var nBytes: Any = null
     var tocP50: Any = null
     var quality: Any = null
-    if ((flags & 1) != 0) nFrames = be32()
-    if ((flags & 2) != 0) nBytes = be32()
+    if ((flags & 1) != 0) { nFrames = Bytes.be32(b, o).toInt; o += 4 }
+    if ((flags & 2) != 0) { nBytes = Bytes.be32(b, o).toInt; o += 4 }
     val hasToc = (flags & 4) != 0
     if (hasToc) {
       if (o + 100 > b.length) return null
       tocP50 = u8(o + 50)
       o += 100
     }
-    if ((flags & 8) != 0) quality = be32()
+    if ((flags & 8) != 0) { quality = Bytes.be32(b, o).toInt; o += 4 }
     InternalRow(UTF8String.fromString(tag), nFrames, nBytes, hasToc,
       tocP50, quality)
   }

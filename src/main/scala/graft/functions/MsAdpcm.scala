@@ -51,9 +51,6 @@ object MsAdpcm {
     if (b == null || b.length < 12) return null
     if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')) return null
-    def le16(i: Int): Int = Bytes.le16(b, i).toInt
-    def le16s(i: Int): Int = Bytes.le16(b, i).toShort.toInt
-    def le32(i: Int): Long = Bytes.le32(b, i)
     var p = 12
     var fmtOk = false
     var rate = 0
@@ -65,17 +62,17 @@ object MsAdpcm {
     var dataAt = -1
     var dataLen = -1L
     while (p + 8 <= b.length) {
-      val size = le32(p + 4)
+      val size = Bytes.le32(b, p + 4)
       if (size < 0 || p + 8L + size > b.length) return null
       if (b(p) == 'f' && b(p + 1) == 'm' && b(p + 2) == 't' && b(p + 3) == ' ') {
         if (size < 30) return null // 18 base + spb + nCoef + >=1 pair
-        rate = le32(p + 12).toInt
-        blockAlign = le16(p + 20)
-        val cb = le16(p + 24)
-        spb = le16(p + 26)
-        val nCoef = le16(p + 28)
-        fmtOk = le16(p + 8) == 0x02 && le16(p + 10) == 1 &&
-          le16(p + 22) == 4 && rate > 0 && blockAlign >= 8 &&
+        rate = Bytes.le32(b, p + 12).toInt
+        blockAlign = Bytes.le16(b, p + 20).toInt
+        val cb = Bytes.le16(b, p + 24).toInt
+        spb = Bytes.le16(b, p + 26).toInt
+        val nCoef = Bytes.le16(b, p + 28).toInt
+        fmtOk = Bytes.le16(b, p + 8) == 0x02 && Bytes.le16(b, p + 10) == 1 &&
+          Bytes.le16(b, p + 22) == 4 && rate > 0 && blockAlign >= 8 &&
           nCoef >= 1 && cb >= 4 + 4 * nCoef && size >= 22 + 4 * nCoef &&
           spb == (blockAlign - 7) * 2 + 2
         if (fmtOk) {
@@ -83,15 +80,15 @@ object MsAdpcm {
           c2 = new Array[Int](nCoef)
           var k = 0
           while (k < nCoef) {
-            c1(k) = le16s(p + 30 + 4 * k)
-            c2(k) = le16s(p + 32 + 4 * k)
+            c1(k) = Bytes.le16(b, p + 30 + 4 * k).toShort.toInt
+            c2(k) = Bytes.le16(b, p + 32 + 4 * k).toShort.toInt
             k += 1
           }
         }
       } else if (b(p) == 'f' && b(p + 1) == 'a' && b(p + 2) == 'c' &&
           b(p + 3) == 't') {
         if (size < 4) return null
-        factSamples = le32(p + 8)
+        factSamples = Bytes.le32(b, p + 8)
       } else if (b(p) == 'd' && b(p + 1) == 'a' && b(p + 2) == 't' &&
           b(p + 3) == 'a') {
         dataAt = p + 8
@@ -117,10 +114,10 @@ object MsAdpcm {
       val at = dataAt + blk * blockAlign
       val predIdx = b(at) & 0xff
       if (predIdx >= c1.length) return null
-      var delta = le16s(at + 1).toLong
+      var delta = Bytes.le16(b, at + 1).toShort.toLong
       if (delta <= 0) return null
-      var s1 = le16s(at + 3)
-      var s2 = le16s(at + 5)
+      var s1 = Bytes.le16(b, at + 3).toShort.toInt
+      var s2 = Bytes.le16(b, at + 5).toShort.toInt
       emit(s2) // oldest first
       emit(s1)
       val co1 = c1(predIdx)

@@ -80,11 +80,6 @@ object OggMeta {
 
   def parse(b: Array[Byte]): InternalRow = {
     @inline def u8(i: Int): Int = b(i) & 0xff
-    @inline def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    @inline def le32(i: Int): Int =
-      u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    @inline def le64(i: Int): Long =
-      (le32(i) & 0xffffffffL) | ((le32(i + 4) & 0xffffffffL) << 32)
     var pos = 0
     var nPages = 0
     var serial = 0
@@ -99,10 +94,10 @@ object OggMeta {
         b(pos + 3) != 'S') return null
       if (u8(pos + 4) != 0) return null // stream-structure version
       val hdrType = u8(pos + 5)
-      val granule = le64(pos + 6)
-      val ser = le32(pos + 14)
-      val seq = le32(pos + 18)
-      val crc = le32(pos + 22)
+      val granule = Bytes.le64(b, pos + 6)
+      val ser = Bytes.le32(b, pos + 14).toInt
+      val seq = Bytes.le32(b, pos + 18).toInt
+      val crc = Bytes.le32(b, pos + 22).toInt
       val nSegs = u8(pos + 26)
       val segBase = pos + 27
       if (segBase + nSegs > b.length) return null
@@ -130,16 +125,13 @@ object OggMeta {
     if (nPages == 0 || !sawEos || firstPayload == null) return null
     val p = firstPayload
     @inline def pu8(i: Int): Int = p(i) & 0xff
-    @inline def ple16(i: Int): Int = pu8(i) | (pu8(i + 1) << 8)
-    @inline def ple32(i: Int): Int =
-      pu8(i) | (pu8(i + 1) << 8) | (pu8(i + 2) << 16) | (pu8(i + 3) << 24)
     if (p.length >= 30 && pu8(0) == 0x01 && p(1) == 'v' && p(2) == 'o' &&
       p(3) == 'r' && p(4) == 'b' && p(5) == 'i' && p(6) == 's') {
       // Vorbis I identification header
-      if (ple32(7) != 0) return null // vorbis_version
+      if (Bytes.le32(p, 7) != 0) return null // vorbis_version
       val ch = pu8(11)
-      val rate = ple32(12)
-      val brNom = ple32(20)
+      val rate = Bytes.le32(p, 12).toInt
+      val brNom = Bytes.le32(p, 20).toInt
       if (ch == 0 || rate <= 0) return null
       if ((pu8(29) & 0x01) == 0) return null // framing bit
       val durMs =
@@ -152,8 +144,8 @@ object OggMeta {
       // Opus identification header (RFC 7845 §5.1)
       if (pu8(8) != 1) return null // version
       val ch = pu8(9)
-      val preSkip = ple16(10)
-      val rate = ple32(12)
+      val preSkip = Bytes.le16(p, 10).toInt
+      val rate = Bytes.le32(p, 12).toInt
       if (ch == 0) return null
       val outSamples = if (lastGranule < 0) 0L
         else math.max(0L, lastGranule - preSkip)
@@ -182,8 +174,6 @@ object OggMeta {
     */
   private def firstTwoPackets(b: Array[Byte]): (Array[Byte], Array[Byte]) = {
     @inline def u8(i: Int): Int = b(i) & 0xff
-    @inline def le32(i: Int): Int =
-      u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
     val done = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
     val cur = new java.io.ByteArrayOutputStream()
     var inPacket = false
@@ -197,9 +187,9 @@ object OggMeta {
         b(pos + 3) != 'S') return null
       if (u8(pos + 4) != 0) return null
       val hdrType = u8(pos + 5)
-      val ser = le32(pos + 14)
-      val seq = le32(pos + 18)
-      val crc = le32(pos + 22)
+      val ser = Bytes.le32(b, pos + 14).toInt
+      val seq = Bytes.le32(b, pos + 18).toInt
+      val crc = Bytes.le32(b, pos + 22).toInt
       val nSegs = u8(pos + 26)
       val segBase = pos + 27
       if (segBase + nSegs > b.length) return null
@@ -259,9 +249,6 @@ object OggMeta {
       id(6) == 'a' && id(7) == 'd'
     if (!isVorbis && !isOpus) return null
     @inline def u8(i: Int): Int = cm(i) & 0xff
-    @inline def le32(i: Int): Long =
-      (u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) |
-        (u8(i + 3) << 24)) & 0xffffffffL
     var p = 0
     if (isVorbis) {
       if (cm.length < 7 || u8(0) != 0x03 || cm(1) != 'v' || cm(2) != 'o' ||
@@ -275,19 +262,19 @@ object OggMeta {
       p = 8
     }
     if (p + 4 > cm.length) return null
-    val vlen = le32(p); p += 4
+    val vlen = Bytes.le32(cm, p); p += 4
     if (p + vlen > cm.length) return null
     val vendor = new String(cm, p, vlen.toInt,
       java.nio.charset.StandardCharsets.UTF_8)
     p += vlen.toInt
     if (p + 4 > cm.length) return null
-    val n = le32(p); p += 4
+    val n = Bytes.le32(cm, p); p += 4
     if (n > 4096) return null // tag-count bomb
     val tags = new Array[Any](n.toInt)
     var i = 0
     while (i < n) {
       if (p + 4 > cm.length) return null
-      val len = le32(p); p += 4
+      val len = Bytes.le32(cm, p); p += 4
       if (p + len > cm.length) return null
       val s = new String(cm, p, len.toInt,
         java.nio.charset.StandardCharsets.UTF_8)

@@ -49,10 +49,7 @@ object ParquetMeta {
     StructField("columns", ArrayType(columnSchema, containsNull = false),
       nullable = false)))
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   private val PhysTypes = Array("boolean", "int32", "int64", "int96",
     "float", "double", "byte_array", "fixed_len_byte_array")
@@ -212,8 +209,7 @@ object ParquetMeta {
     val n = b.length
     if (!(b(n - 4) == 'P' && b(n - 3) == 'A' && b(n - 2) == 'R' &&
       b(n - 1) == '1')) fail()
-    val metaLen = (b(n - 8) & 0xff) | ((b(n - 7) & 0xff) << 8) |
-      ((b(n - 6) & 0xff) << 16) | ((b(n - 5) & 0xff) << 24)
+    val metaLen = Bytes.le32(b, n - 8).toInt
     if (metaLen <= 0 || n - 8 - metaLen < 4) fail()
     val tc = new Tc(b, n - 8 - metaLen, n - 8)
     var version = -1
@@ -272,16 +268,6 @@ object ParquetMeta {
         rgIdx, new GenericArrayData(rows.toArray[Any]))
     } catch { case Corrupt => null }
 
-  /** Little-endian signed decode per the parquet statistics spec:
-    * int64 min_value/max_value are 8 bytes, int32 are 4 (sign carried
-    * by the top byte). */
-  private def leSigned(b: Array[Byte]): Long = {
-    var v = 0L
-    var k = b.length - 1
-    while (k >= 0) { v = (v << 8) | (b(k) & 0xffL); k -= 1 }
-    if (b.length == 4) v.toInt.toLong else v
-  }
-
   /** Per-column [min, max] over ALL row groups, decoded from the
     * footer statistics' `min_value`/`max_value` — int32/int64 columns
     * only, and only when every chunk of the column carries both stats
@@ -302,9 +288,14 @@ object ParquetMeta {
         val ok = widths > 0 && cs.forall(c => c.phys == cs.head.phys &&
           c.minBin != null && c.minBin.length == widths &&
           c.maxBin != null && c.maxBin.length == widths)
+        // little-endian signed per the parquet statistics spec: int64
+        // min_value/max_value are 8 bytes, int32 are 4 (sign carried by
+        // the top byte)
+        def bound(v: Array[Byte]): Long =
+          if (widths == 4) Bytes.le32(v, 0).toInt.toLong else Bytes.le64(v, 0)
         if (!ok) None
-        else Some(p -> (cs.map(c => leSigned(c.minBin)).min,
-          cs.map(c => leSigned(c.maxBin)).max))
+        else Some(p -> (cs.map(c => bound(c.minBin)).min,
+          cs.map(c => bound(c.maxBin)).max))
       }
     } catch { case Corrupt => Map.empty[String, (Long, Long)] }
 }

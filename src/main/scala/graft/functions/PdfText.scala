@@ -53,10 +53,7 @@ object PdfText {
     */
   val MaxPages: Int = 8192
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  @inline private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   // ------------------------------------------------------------ object model
   private case class Name(v: String)
@@ -531,19 +528,10 @@ object PdfText {
       var next = 258
       var width = 9
       var prev: Array[Byte] = null
-      var bitBuf = 0L
-      var bitCnt = 0
-      var p = 0
+      val codes = new Bytes.MsbBits(data, 0, data.length)
       var done = false
       while (!done) {
-        while (bitCnt < width && p < data.length) {
-          bitBuf = (bitBuf << 8) | (data(p) & 0xffL)
-          bitCnt += 8
-          p += 1
-        }
-        if (bitCnt < width) fail() // bits exhausted before EOD
-        val code = ((bitBuf >> (bitCnt - width)) & ((1L << width) - 1)).toInt
-        bitCnt -= width
+        val code = codes.bits(width) // refuses when bits run out before EOD
         if (code == 256) { next = 258; width = 9; prev = null }
         else if (code == 257) done = true
         else {

@@ -28,8 +28,7 @@ object Snappy {
 
   val MaxOutputBytes: Int = 64 << 20
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private def fail(): Nothing = throw new Fail
+  import Bytes.{Corrupt, fail}
 
   def decompressAny(b: Array[Byte]): Array[Byte] =
     try {
@@ -37,7 +36,7 @@ object Snappy {
       else if (isFramed(b)) decodeFramed(b)
       else decodeRaw(b, 0, b.length)
     } catch {
-      case _: Fail | _: ArrayIndexOutOfBoundsException |
+      case Corrupt | _: ArrayIndexOutOfBoundsException |
           _: NegativeArraySizeException => null
     }
 
@@ -96,13 +95,12 @@ object Snappy {
           } else if (tpe == 2) {
             if (p + 2 > until) fail()
             len = (tag >> 2) + 1
-            off = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
+            off = Bytes.le16(b, p).toInt
             p += 2
           } else {
             if (p + 4 > until) fail()
             len = (tag >> 2) + 1
-            val v = (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-              ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
+            val v = Bytes.le32(b, p)
             p += 4
             if (v > Int.MaxValue) fail()
             off = v.toInt
@@ -131,15 +129,13 @@ object Snappy {
     while (p < b.length) {
       if (p + 4 > b.length) fail()
       val tpe = b(p) & 0xff
-      val len = (b(p + 1) & 0xff) | ((b(p + 2) & 0xff) << 8) |
-        ((b(p + 3) & 0xff) << 16)
+      val len = Bytes.le(b, p + 1, 3).toInt
       p += 4
       if (p + len > b.length) fail()
       tpe match {
         case 0x00 => // compressed: CRC32C(uncompressed) + raw block
           if (len < 4) fail()
-          val want = (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-            ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
+          val want = Bytes.le32(b, p)
           val chunk = decodeRaw(b, p + 4, p + len)
           if (chunk.length > 65536) fail()
           if (maskedCrc(chunk, 0, chunk.length) != want) fail()
@@ -147,9 +143,7 @@ object Snappy {
           out.write(chunk, 0, chunk.length)
         case 0x01 => // uncompressed: CRC + payload
           if (len < 4 || len - 4 > 65536) fail()
-          if (maskedCrc(b, p + 4, len - 4) !=
-            ((b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-              ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24))) fail()
+          if (maskedCrc(b, p + 4, len - 4) != Bytes.le32(b, p)) fail()
           if (out.size() + len - 4 > MaxOutputBytes) fail()
           out.write(b, p + 4, len - 4)
         case 0xff => // repeated stream identifier (concatenation)

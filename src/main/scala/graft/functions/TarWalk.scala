@@ -43,10 +43,7 @@ object TarWalk {
     StructField("size", LongType, nullable = false)))
   val entriesType: DataType = ArrayType(entrySchema, containsNull = false)
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  @inline private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   private def cstr(b: Array[Byte], off: Int, len: Int): String = {
     var end = off

@@ -48,10 +48,7 @@ object TfExample {
 
   val schema: DataType = ArrayType(featureSchema, containsNull = false)
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   /** Varint at pos(0); advances pos. Max 10 bytes (64-bit). */
   private def varint(b: Array[Byte], pos: Array[Int]): Long = {
@@ -206,9 +203,6 @@ object TfExample {
   private def parseFloatList(b: Array[Byte], start: Int, end: Int): Array[Any] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     val pos = Array(start)
-    def le32(i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-        ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
     while (pos(0) < end) {
       val t = varint(b, pos)
       if ((t >>> 3).toInt == 1) {
@@ -218,12 +212,12 @@ object TfExample {
             if (e > end || (e - s) % 4 != 0) fail()
             var i = s
             while (i < e) {
-              out += java.lang.Float.intBitsToFloat(le32(i)).toDouble
+              out += java.lang.Float.intBitsToFloat(Bytes.le32(b, i).toInt).toDouble
               i += 4
             }
           case 5 =>
             if (pos(0) + 4 > end) fail()
-            out += java.lang.Float.intBitsToFloat(le32(pos(0))).toDouble
+            out += java.lang.Float.intBitsToFloat(Bytes.le32(b, pos(0)).toInt).toDouble
             pos(0) += 4
           case _ => fail()
         }

@@ -35,13 +35,6 @@ object TfRecord {
     (((crc >>> 15) | (crc << 17)) + 0xa282ead8L) & 0xFFFFFFFFL
   }
 
-  private def le(b: Array[Byte], i: Int, n: Int): Long = {
-    var v = 0L
-    var k = 0
-    while (k < n) { v |= (b(i + k) & 0xffL) << (8 * k); k += 1 }
-    v
-  }
-
   /** The raw record payloads behind the same whole-or-refuse framing
     * walk as [[entries]] — the read seam [[TfExample]] composes on
     * (shard bytes → proto payloads → feature rows, all scan-side).
@@ -52,12 +45,12 @@ object TfRecord {
     var p = 0
     while (p < b.length) {
       if (p + 12 > b.length) return null
-      val len = le(b, p, 8)
-      if (le(b, p + 8, 4) != maskedCrc(b, p, 8)) return null
+      val len = Bytes.le64(b, p)
+      if (Bytes.le32(b, p + 8) != maskedCrc(b, p, 8)) return null
       if (len < 0 || len > MaxRecordBytes || p + 12 + len + 4 > b.length)
         return null
       val n = len.toInt
-      if (le(b, p + 12 + n, 4) != maskedCrc(b, p + 12, n)) return null
+      if (Bytes.le32(b, p + 12 + n) != maskedCrc(b, p + 12, n)) return null
       out += java.util.Arrays.copyOfRange(b, p + 12, p + 12 + n)
       p += 12 + n + 4
     }
@@ -95,12 +88,12 @@ object TfRecord {
     var idx = 0
     while (p < b.length) {
       if (p + 12 > b.length) return null
-      val len = le(b, p, 8)
-      if (le(b, p + 8, 4) != maskedCrc(b, p, 8)) return null
+      val len = Bytes.le64(b, p)
+      if (Bytes.le32(b, p + 8) != maskedCrc(b, p, 8)) return null
       if (len < 0 || len > MaxRecordBytes || p + 12 + len + 4 > b.length)
         return null
       val n = len.toInt
-      if (le(b, p + 12 + n, 4) != maskedCrc(b, p + 12, n)) return null
+      if (Bytes.le32(b, p + 12 + n) != maskedCrc(b, p + 12, n)) return null
       val md = java.security.MessageDigest.getInstance("MD5")
       md.update(b, p + 12, n)
       val hex = md.digest().map("%02x".format(_)).mkString

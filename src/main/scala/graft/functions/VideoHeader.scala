@@ -55,9 +55,6 @@ object VideoHeader {
     StructField("duration_ms", LongType, nullable = false)))
 
   // shared overflow-safe readers (Long returns — see graft.functions.Bytes)
-  private def be32(b: Array[Byte], i: Int): Long = Bytes.be32(b, i)
-  private def be64(b: Array[Byte], i: Int): Long = Bytes.be64(b, i)
-  private def le32(b: Array[Byte], i: Int): Long = Bytes.le32(b, i)
   private def fourcc(b: Array[Byte], i: Int): String =
     new String(Array(b(i), b(i + 1), b(i + 2), b(i + 3)),
       java.nio.charset.StandardCharsets.US_ASCII)
@@ -73,11 +70,11 @@ object VideoHeader {
                                  typ: String): Array[Long] = {
     var p = start
     while (p + 8 <= end) {
-      var size = be32(b, p.toInt)
+      var size = Bytes.be32(b, p.toInt)
       var hdr = 8L
       if (size == 1L) {
         if (p + 16 > end) return null
-        size = be64(b, p.toInt + 8)
+        size = Bytes.be64(b, p.toInt + 8)
         hdr = 16L
       } else if (size == 0L) size = end - p // box extends to end
       if (size < hdr || p + size > end) return null
@@ -99,10 +96,10 @@ object VideoHeader {
     val (timescale, duration) =
       if (v == 0) {
         if (mvhd(0) + 20 > mvhd(1)) return null
-        (be32(b, mp + 12), be32(b, mp + 16))
+        (Bytes.be32(b, mp + 12), Bytes.be32(b, mp + 16))
       } else {
         if (mvhd(0) + 32 > mvhd(1)) return null
-        (be32(b, mp + 20), be64(b, mp + 24))
+        (Bytes.be32(b, mp + 20), Bytes.be64(b, mp + 24))
       }
     if (timescale <= 0) return null
     var w = 0L; var h = 0L
@@ -116,8 +113,8 @@ object VideoHeader {
         // matrix ends 36 bytes before width; width/height are 16.16 fixed
         val wOff = if (tv == 0) 76 else 88
         if (tkhd(0) + wOff + 8 <= tkhd(1)) {
-          w = be32(b, tp + wOff) >> 16
-          h = be32(b, tp + wOff + 4) >> 16
+          w = Bytes.be32(b, tp + wOff) >> 16
+          h = Bytes.be32(b, tp + wOff + 4) >> 16
         }
       }
     }
@@ -133,23 +130,23 @@ object VideoHeader {
     // RIFF....AVI , then chunk walk: LIST(hdrl) -> avih
     var p = 12
     while (p + 8 <= b.length) {
-      val size = le32(b, p + 4)
+      val size = Bytes.le32(b, p + 4)
       if (size < 0 || p + 8 + size > b.length) return null
       if (fourcc(b, p) == "LIST" && size >= 4 &&
           fourcc(b, p + 8) == "hdrl") {
         var q = p + 12
         val listEnd = p + 8 + size.toInt
         while (q + 8 <= listEnd) {
-          val csize = le32(b, q + 4)
+          val csize = Bytes.le32(b, q + 4)
           if (csize < 0 || q + 8 + csize > listEnd) return null
           if (fourcc(b, q) == "avih") {
             // payload: usPerFrame(4) maxBytes(4) pad(4) flags(4)
             // totalFrames(4) initial(4) streams(4) bufSize(4) w(4) h(4)
             if (csize < 40) return null
-            val usPerFrame = le32(b, q + 8)
-            val frames = le32(b, q + 24)
-            val w = le32(b, q + 40)
-            val h = le32(b, q + 44)
+            val usPerFrame = Bytes.le32(b, q + 8)
+            val frames = Bytes.le32(b, q + 24)
+            val w = Bytes.le32(b, q + 40)
+            val h = Bytes.le32(b, q + 44)
             // both fields are unsigned 32-bit, so the µs product can reach
             // ~1.8e19 and wrap a signed Long — reject before multiplying
             if (frames > 0L && usPerFrame > Long.MaxValue / frames) return null

@@ -372,7 +372,7 @@ object WarcParse {
     */
   private def inflateDeflate(b: Array[Byte]): Array[Byte] = {
     val zlib = b.length >= 2 && (b(0) & 0x0f) == 8 &&
-      (((b(0) & 0xff) << 8) | (b(1) & 0xff)) % 31 == 0
+      Bytes.be16(b, 0) % 31 == 0
     val inf = new java.util.zip.Inflater(!zlib)
     inf.setInput(b)
     val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))

@@ -33,10 +33,7 @@ private[functions] object WebpDecode {
 
   private val MaxPixels = 1 << 24
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  @inline private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   def decode(b: Array[Byte]): Luma =
     try decodeOrNull(b)
@@ -45,26 +42,6 @@ private[functions] object WebpDecode {
       case _: ArrayIndexOutOfBoundsException => null
       case _: NegativeArraySizeException => null
     }
-
-  // ---------------------------------------------------------------- bits
-  /** LSB-first forward reader over `[start, end)`. */
-  private final class Br(b: Array[Byte], start: Int, end: Int) {
-    private var pos = start
-    private var bitPos = 0
-    def bits(n: Int): Int = {
-      var acc = 0
-      var i = 0
-      while (i < n) {
-        if (pos >= end) fail()
-        acc |= (((b(pos) >> bitPos) & 1) << i)
-        bitPos += 1
-        if (bitPos == 8) { bitPos = 0; pos += 1 }
-        i += 1
-      }
-      acc
-    }
-    def bit(): Int = bits(1)
-  }
 
   // ------------------------------------------------------------- huffman
   /** Canonical prefix decoder (DEFLATE code assignment); `zeroBits`
@@ -106,7 +83,7 @@ private[functions] object WebpDecode {
       }
       s
     }
-    def decode(br: Br): Int = {
+    def decode(br: Bytes.LsbBits): Int = {
       if (single >= 0) return single
       var code = 0
       var first = 0
@@ -132,7 +109,7 @@ private[functions] object WebpDecode {
     * code-length-coded form with 16/17/18 repeats and the optional
     * max-symbol cap.
     */
-  private def readCode(br: Br, alphabetSize: Int): Huff = {
+  private def readCode(br: Bytes.LsbBits, alphabetSize: Int): Huff = {
     if (br.bit() == 1) { // simple
       val numSymbols = br.bits(1) + 1
       val first8 = br.bits(1)
@@ -193,7 +170,7 @@ private[functions] object WebpDecode {
       .take(120).toArray
   }
 
-  @inline private def prefixValue(br: Br, code: Int): Int = {
+  @inline private def prefixValue(br: Bytes.LsbBits, code: Int): Int = {
     if (code < 4) code + 1
     else {
       val extra = (code - 2) >> 1
@@ -209,7 +186,7 @@ private[functions] object WebpDecode {
   /** The spatially-coded ARGB image at (w, h). `level0` streams read
     * transforms upstream (caller) and may carry a meta-prefix image.
     */
-  private def decodeImageStream(br: Br, w: Int, h: Int, level0: Boolean,
+  private def decodeImageStream(br: Bytes.LsbBits, w: Int, h: Int, level0: Boolean,
       depth: Int): Array[Int] = {
     if (depth > 4) fail()
     if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) fail()
@@ -472,7 +449,7 @@ private[functions] object WebpDecode {
       else p += 8 + size + (size & 1)
     }
     if (vp8lAt < 0) return null
-    val br = new Br(b, vp8lAt, vp8lAt + vp8lLen)
+    val br = new Bytes.LsbBits(b, vp8lAt, vp8lAt + vp8lLen)
     if (br.bits(8) != 0x2f) fail()
     val w = br.bits(14) + 1
     val h = br.bits(14) + 1

@@ -38,8 +38,7 @@ object Xz {
 
   val MaxOutputBytes: Int = 64 << 20
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private def fail(): Nothing = throw new Fail
+  import Bytes.{Corrupt, fail}
 
   /** CRC-64/XZ: reflected, poly 0xC96C5795D7870F42, init/final ~0. */
   private val Crc64Table: Array[Long] = {
@@ -77,7 +76,7 @@ object Xz {
   def decompressAll(b: Array[Byte]): Array[Byte] =
     try decompressOrFail(b)
     catch {
-      case _: Fail | _: ArrayIndexOutOfBoundsException |
+      case Corrupt | _: ArrayIndexOutOfBoundsException |
           _: NegativeArraySizeException => null
     }
 
@@ -122,6 +121,7 @@ object Xz {
 
   private def decodeStream(b: Array[Byte], start: Int,
                            out: java.io.ByteArrayOutputStream): Int = {
+    val in = new Bytes.Window(b)
     var p = start
     // stream header: FD '7' 'z' 'X' 'Z' 00 | flags(2) | CRC32(flags)
     if (p + 12 > b.length) fail()
@@ -136,7 +136,7 @@ object Xz {
       case 0x0a => 32 // SHA-256
       case _ => fail()
     }
-    if (le32(b, p + 8) != crc32(b, p + 6, p + 8)) fail()
+    if (in.le32(p + 8) != crc32(b, p + 6, p + 8)) fail()
     p += 12
 
     // blocks until the index indicator (0x00 where a block header starts)
@@ -162,7 +162,7 @@ object Xz {
       // header padding must be zero up to the CRC
       var q = pos(0)
       while (q < p + bhs - 4) { if (b(q) != 0) fail(); q += 1 }
-      if (le32(b, p + bhs - 4) != crc32(b, p, p + bhs - 4)) fail()
+      if (in.le32(p + bhs - 4) != crc32(b, p, p + bhs - 4)) fail()
       p += bhs
 
       val outBefore = out.size()
@@ -175,9 +175,9 @@ object Xz {
       checkId match {
         case 0x00 =>
         case 0x01 =>
-          if (le32(b, p) != crc32(produced, outBefore, produced.length)) fail()
+          if (in.le32(p) != crc32(produced, outBefore, produced.length)) fail()
         case 0x04 =>
-          if (le64(b, p) != crc64(produced, outBefore, produced.length)) fail()
+          if (in.le64(p) != crc64(produced, outBefore, produced.length)) fail()
         case 0x0a =>
           val md = java.security.MessageDigest.getInstance("SHA-256")
           md.update(produced, outBefore, produced.length - outBefore)
@@ -203,29 +203,18 @@ object Xz {
     }
     p = pos(0)
     while ((p - indexStart) % 4 != 0) { if (b(p) != 0) fail(); p += 1 }
-    if (le32(b, p) != crc32(b, indexStart, p)) fail()
+    if (in.le32(p) != crc32(b, indexStart, p)) fail()
     p += 4
     val indexSize = p - indexStart
 
     // stream footer: CRC32(backward+flags) | backward(4) | flags(2) | YZ
     if (p + 12 > b.length) fail()
-    if (le32(b, p) != crc32(b, p + 4, p + 10)) fail()
-    val backward = (le32(b, p + 4) + 1) * 4
+    if (in.le32(p) != crc32(b, p + 4, p + 10)) fail()
+    val backward = (in.le32(p + 4) + 1) * 4
     if (backward != indexSize) fail()
     if (b(p + 8) != 0 || (b(p + 9) & 0xff) != checkId) fail()
     if (b(p + 10) != 'Y' || b(p + 11) != 'Z') fail()
     p + 12
-  }
-
-  private def le32(b: Array[Byte], i: Int): Long = {
-    if (i + 4 > b.length) fail()
-    ((b(i) & 0xffL)) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  }
-
-  private def le64(b: Array[Byte], i: Int): Long = {
-    if (i + 8 > b.length) fail()
-    le32(b, i) | (le32(b, i + 4) << 32)
   }
 
   // ----------------------------------------------------------------

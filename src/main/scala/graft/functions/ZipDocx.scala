@@ -72,25 +72,8 @@ object ZipDocx {
     StructField("crc_ok", BooleanType, nullable = false)))
   val entriesType: DataType = ArrayType(entrySchema, containsNull = false)
 
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  @inline private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
-  // ---- little-endian readers ------------------------------------------
-  @inline private def u16(b: Array[Byte], p: Int): Int = {
-    if (p < 0 || p + 2 > b.length) fail()
-    (b(p) & 0xFF) | ((b(p + 1) & 0xFF) << 8)
-  }
-  @inline private def u64(b: Array[Byte], p: Int): Long = {
-    if (p < 0 || p + 8 > b.length) fail()
-    u32(b, p) | (u32(b, p + 4) << 32)
-  }
-  @inline private def u32(b: Array[Byte], p: Int): Long = {
-    if (p < 0 || p + 4 > b.length) fail()
-    (b(p) & 0xFFL) | ((b(p + 1) & 0xFFL) << 8) |
-      ((b(p + 2) & 0xFFL) << 16) | ((b(p + 3) & 0xFFL) << 24)
-  }
 
   /** One decoded member: data == null ⇔ payload corrupt (crcOk false). */
   final case class Member(name: String, method: Int, compLen: Long,
@@ -99,6 +82,7 @@ object ZipDocx {
   /** Structural walk + per-member decode. Throws on a refused archive. */
   private[functions] def parseArchive(buf: Array[Byte]): Array[Member] = {
     if (buf.length < 22) fail()
+    val in = new Bytes.Window(buf)
     // End of central directory: last 0x06054b50 within sig+u16 comment reach
     var eocd = -1
     var p = buf.length - 22
@@ -106,32 +90,32 @@ object ZipDocx {
     while (eocd < 0 && p >= stop) {
       if (buf(p) == 0x50 && buf(p + 1) == 0x4B && buf(p + 2) == 0x05 &&
         buf(p + 3) == 0x06 &&
-        u16(buf, p + 20) == buf.length - (p + 22)) eocd = p
+        in.le16(p + 20) == buf.length - (p + 22)) eocd = p
       p -= 1
     }
     if (eocd < 0) fail()
-    if (u16(buf, eocd + 4) != 0 || u16(buf, eocd + 6) != 0) fail() // disks
-    var nHere = u16(buf, eocd + 8).toLong
-    var nTotal = u16(buf, eocd + 10).toLong
-    var cdSize = u32(buf, eocd + 12)
-    var cdOff = u32(buf, eocd + 16)
+    if (in.le16(eocd + 4) != 0 || in.le16(eocd + 6) != 0) fail() // disks
+    var nHere = in.le16(eocd + 8)
+    var nTotal = in.le16(eocd + 10)
+    var cdSize = in.le32(eocd + 12)
+    var cdOff = in.le32(eocd + 16)
     var dirEnd = eocd.toLong
     if (nTotal == 0xFFFFL || cdSize == 0xFFFFFFFFL ||
       cdOff == 0xFFFFFFFFL) {
       // ZIP64: locator (0x07064b50) directly precedes the EOCD and
       // points at the zip64 EOCD record (0x06064b50, 8-byte fields)
       val loc = eocd - 20
-      if (loc < 0 || u32(buf, loc) != 0x07064b50L) fail()
-      if (u32(buf, loc + 4) != 0L || u32(buf, loc + 16) != 1L) fail()
-      val z64 = u64(buf, loc + 8)
+      if (loc < 0 || in.le32(loc) != 0x07064b50L) fail()
+      if (in.le32(loc + 4) != 0L || in.le32(loc + 16) != 1L) fail()
+      val z64 = in.le64(loc + 8)
       if (z64 < 0 || z64 + 56 > loc) fail()
       val zp = z64.toInt
-      if (u32(buf, zp) != 0x06064b50L) fail()
-      if (u32(buf, zp + 16) != 0L || u32(buf, zp + 20) != 0L) fail() // disks
-      nHere = u64(buf, zp + 24)
-      nTotal = u64(buf, zp + 32)
-      cdSize = u64(buf, zp + 40)
-      cdOff = u64(buf, zp + 48)
+      if (in.le32(zp) != 0x06064b50L) fail()
+      if (in.le32(zp + 16) != 0L || in.le32(zp + 20) != 0L) fail() // disks
+      nHere = in.le64(zp + 24)
+      nTotal = in.le64(zp + 32)
+      cdSize = in.le64(zp + 40)
+      cdOff = in.le64(zp + 48)
       dirEnd = z64
     }
     if (nHere != nTotal || nTotal > MaxEntries || nTotal < 0) fail()
@@ -142,16 +126,16 @@ object ZipDocx {
     var cp = cdOff.toInt
     var i = 0
     while (i < nTotal) {
-      if (u32(buf, cp) != 0x02014b50L) fail()
-      val flags = u16(buf, cp + 8)
-      val method = u16(buf, cp + 10)
-      val crc = u32(buf, cp + 16)
-      var compLen = u32(buf, cp + 20)
-      var rawLen = u32(buf, cp + 24)
-      val nameLen = u16(buf, cp + 28)
-      val extraLen = u16(buf, cp + 30)
-      val cmtLen = u16(buf, cp + 32)
-      var lho = u32(buf, cp + 42)
+      if (in.le32(cp) != 0x02014b50L) fail()
+      val flags = in.le16(cp + 8).toInt
+      val method = in.le16(cp + 10).toInt
+      val crc = in.le32(cp + 16)
+      var compLen = in.le32(cp + 20)
+      var rawLen = in.le32(cp + 24)
+      val nameLen = in.le16(cp + 28).toInt
+      val extraLen = in.le16(cp + 30).toInt
+      val cmtLen = in.le16(cp + 32).toInt
+      var lho = in.le32(cp + 42)
       if ((flags & 0x1) != 0) fail() // encrypted
       if (method != 0 && method != 8) fail()
       if (cp + 46 + nameLen > buf.length) fail()
@@ -162,19 +146,19 @@ object ZipDocx {
       val xend = xp + extraLen
       if (xend > buf.length) fail()
       while (xp + 4 <= xend) {
-        val id = u16(buf, xp); val sz = u16(buf, xp + 2)
+        val id = in.le16(xp).toInt; val sz = in.le16(xp + 2).toInt
         if (id == 0x0001) {
           var fp = xp + 4
           val fend = xp + 4 + sz
           if (fend > xend) fail()
           if (rawLen == 0xFFFFFFFFL) {
-            if (fp + 8 > fend) fail(); rawLen = u64(buf, fp); fp += 8
+            if (fp + 8 > fend) fail(); rawLen = in.le64(fp); fp += 8
           }
           if (compLen == 0xFFFFFFFFL) {
-            if (fp + 8 > fend) fail(); compLen = u64(buf, fp); fp += 8
+            if (fp + 8 > fend) fail(); compLen = in.le64(fp); fp += 8
           }
           if (lho == 0xFFFFFFFFL) {
-            if (fp + 8 > fend) fail(); lho = u64(buf, fp); fp += 8
+            if (fp + 8 > fend) fail(); lho = in.le64(fp); fp += 8
           }
         }
         xp += 4 + sz
@@ -189,9 +173,9 @@ object ZipDocx {
       // local header: data position (central sizes are authoritative —
       // a bit-3 data-descriptor local header carries zeros there, and
       // a zip64 writer stores 32-bit markers: both ignored here)
-      if (u32(buf, lho.toInt) != 0x04034b50L) fail()
-      val lNameLen = u16(buf, lho.toInt + 26)
-      val lExtraLen = u16(buf, lho.toInt + 28)
+      if (in.le32(lho.toInt) != 0x04034b50L) fail()
+      val lNameLen = in.le16(lho.toInt + 26).toInt
+      val lExtraLen = in.le16(lho.toInt + 28).toInt
       val dataAt = lho.toInt + 30 + lNameLen + lExtraLen
       if (dataAt + compLen > buf.length) fail()
 

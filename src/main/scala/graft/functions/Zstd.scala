@@ -64,10 +64,7 @@ object Zstd {
 
   // ---------------------------------------------------------------- corrupt
   // whole-or-refuse: any malformation lands here and surfaces as null
-  private object Corrupt extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  @inline private def fail(): Nothing = throw Corrupt
+  import Bytes.{Corrupt, fail}
 
   // ---------------------------------------------------------------- xxh64
   private val P1 = 0x9E3779B185EBCA87L
@@ -80,24 +77,16 @@ object Zstd {
     * checksum hash (public xxHash spec; low 32 bits go on the wire).
     */
   def xxh64(a: Array[Byte], off: Int, len: Int): Long = {
-    @inline def u64(i: Int): Long = {
-      var v = 0L; var k = 7
-      while (k >= 0) { v = (v << 8) | (a(i + k) & 0xffL); k -= 1 }
-      v
-    }
-    @inline def u32(i: Int): Long =
-      (a(i) & 0xffL) | ((a(i + 1) & 0xffL) << 8) |
-        ((a(i + 2) & 0xffL) << 16) | ((a(i + 3) & 0xffL) << 24)
     var p = off
     val end = off + len
     var acc =
       if (len >= 32) {
         var a1 = P1 + P2; var a2 = P2; var a3 = 0L; var a4 = -P1
         while (p + 32 <= end) {
-          a1 = java.lang.Long.rotateLeft(a1 + u64(p) * P2, 31) * P1
-          a2 = java.lang.Long.rotateLeft(a2 + u64(p + 8) * P2, 31) * P1
-          a3 = java.lang.Long.rotateLeft(a3 + u64(p + 16) * P2, 31) * P1
-          a4 = java.lang.Long.rotateLeft(a4 + u64(p + 24) * P2, 31) * P1
+          a1 = java.lang.Long.rotateLeft(a1 + Bytes.le64(a, p) * P2, 31) * P1
+          a2 = java.lang.Long.rotateLeft(a2 + Bytes.le64(a, p + 8) * P2, 31) * P1
+          a3 = java.lang.Long.rotateLeft(a3 + Bytes.le64(a, p + 16) * P2, 31) * P1
+          a4 = java.lang.Long.rotateLeft(a4 + Bytes.le64(a, p + 24) * P2, 31) * P1
           p += 32
         }
         var h = java.lang.Long.rotateLeft(a1, 1) + java.lang.Long.rotateLeft(a2, 7) +
@@ -110,12 +99,12 @@ object Zstd {
       } else P5
     acc += len.toLong
     while (p + 8 <= end) {
-      acc ^= java.lang.Long.rotateLeft(u64(p) * P2, 31) * P1
+      acc ^= java.lang.Long.rotateLeft(Bytes.le64(a, p) * P2, 31) * P1
       acc = java.lang.Long.rotateLeft(acc, 27) * P1 + P4
       p += 8
     }
     if (p + 4 <= end) {
-      acc ^= u32(p) * P1
+      acc ^= Bytes.le32(a, p) * P1
       acc = java.lang.Long.rotateLeft(acc, 23) * P2 + P3
       p += 4
     }
@@ -158,25 +147,6 @@ object Zstd {
       acc
     }
     def read(n: Int): Int = { val v = peek(n); pos -= n; v }
-  }
-
-  /** Forward little-endian bit reader for FSE table descriptions. */
-  private final class FwdBits(b: Array[Byte], val start: Int, limit: Int) {
-    var bit: Int = 0
-    def read(n: Int): Int = {
-      var acc = 0
-      var i = 0
-      while (i < n) {
-        val g = bit + i
-        val byteIdx = start + (g >> 3)
-        if (byteIdx >= limit) fail()
-        acc |= (((b(byteIdx) >> (g & 7)) & 1) << i)
-        i += 1
-      }
-      bit += n
-      acc
-    }
-    def bytesConsumed: Int = (bit + 7) >> 3
   }
 
   // ------------------------------------------------------------------- FSE
@@ -246,8 +216,8 @@ object Zstd {
     */
   private def readFseTable(b: Array[Byte], start: Int, limit: Int,
       maxSymbol: Int, maxAccLog: Int): (FseTable, Int) = {
-    val br = new FwdBits(b, start, limit)
-    val accLog = br.read(4) + 5
+    val br = new Bytes.LsbBits(b, start, limit)
+    val accLog = br.bits(4) + 5
     if (accLog > maxAccLog) fail()
     val size = 1 << accLog
     var remaining = size + 1
@@ -259,22 +229,22 @@ object Zstd {
     while (remaining > 1) {
       if (charnum > maxSymbol) fail()
       if (previous0) {
-        var rep = br.read(2)
+        var rep = br.bits(2)
         while (rep == 3) {
           charnum += 3
           if (charnum > maxSymbol + 1) fail()
-          rep = br.read(2)
+          rep = br.bits(2)
         }
         charnum += rep
         if (charnum > maxSymbol) fail()
         previous0 = false
       }
       val max = (2 * threshold - 1) - remaining
-      val peeked = br.read(nbBits - 1)
+      val peeked = br.bits(nbBits - 1)
       var count =
         if ((peeked & (threshold - 1)) < max) peeked & (threshold - 1)
         else {
-          val full = peeked | (br.read(1) << (nbBits - 1))
+          val full = peeked | (br.bits(1) << (nbBits - 1))
           if (full >= threshold) full - max else full
         }
       count -= 1 // value 0 encodes the "less than 1" probability (-1)
@@ -482,15 +452,12 @@ object Zstd {
     try {
       val out = new Out(math.min(math.max(blob.length, 16) * 4, 1 << 20))
       var p = 0
-      @inline def u8(i: Int): Int = { if (i >= blob.length) fail(); blob(i) & 0xff }
-      @inline def u32(i: Int): Long =
-        u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-          (u8(i + 3).toLong << 24)
+      val in = new Bytes.Window(blob)
       while (p < blob.length) {
-        val magic = u32(p)
+        val magic = in.le32(p)
         if (magic == 0xFD2FB528L) p = decodeFrame(blob, p + 4, out, dict)
         else if ((magic & 0xFFFFFFF0L) == 0x184D2A50L) {
-          val sz = u32(p + 4)
+          val sz = in.le32(p + 4)
           if (p + 8 + sz > blob.length) fail()
           p = p + 8 + sz.toInt
         } else fail()
@@ -510,14 +477,10 @@ object Zstd {
 
   private def parseDict(d: Array[Byte]): ZDict = {
     if (d == null || d.length == 0) fail()
-    @inline def u32(i: Int): Long = {
-      if (i + 4 > d.length) fail()
-      (d(i) & 0xffL) | ((d(i + 1) & 0xffL) << 8) |
-        ((d(i + 2) & 0xffL) << 16) | ((d(i + 3) & 0xffL) << 24)
-    }
-    if (d.length < 8 || u32(0) != 0xEC30A437L)
+    val in = new Bytes.Window(d)
+    if (d.length < 8 || in.le32(0) != 0xEC30A437L)
       return new ZDict(0L, d, null, null, null, null, 1L, 4L, 8L)
-    val id = u32(4)
+    val id = in.le32(4)
     var p = 8
     val (huf, hufUsed) = readHufTable(d, p, d.length)
     p += hufUsed
@@ -526,7 +489,7 @@ object Zstd {
     val (of, ofUsed) = readFseTable(d, p, d.length, 31, 8); p += ofUsed
     val (ml, mlUsed) = readFseTable(d, p, d.length, 52, 9); p += mlUsed
     val (ll, llUsed) = readFseTable(d, p, d.length, 35, 9); p += llUsed
-    val r1 = u32(p); val r2 = u32(p + 4); val r3 = u32(p + 8)
+    val r1 = in.le32(p); val r2 = in.le32(p + 4); val r3 = in.le32(p + 8)
     p += 12
     if (r1 <= 0 || r2 <= 0 || r3 <= 0) fail()
     val content = java.util.Arrays.copyOfRange(d, p, d.length)
@@ -538,13 +501,8 @@ object Zstd {
   private def decodeFrame(blob: Array[Byte], start: Int, out: Out,
       dict: ZDict): Int = {
     var p = start
-    @inline def u8(i: Int): Int = { if (i >= blob.length) fail(); blob(i) & 0xff }
-    @inline def uLE(i: Int, n: Int): Long = {
-      var v = 0L; var k = n - 1
-      while (k >= 0) { v = (v << 8) | u8(i + k); k -= 1 }
-      v
-    }
-    val fhd = u8(p); p += 1
+    val in = new Bytes.Window(blob)
+    val fhd = in.u8(p); p += 1
     val fcsFlag = fhd >> 6
     val singleSeg = ((fhd >> 5) & 1) == 1
     if (((fhd >> 3) & 1) != 0) fail() // reserved bit
@@ -552,14 +510,14 @@ object Zstd {
     val dictFlag = fhd & 3
     var windowSize = 0L
     if (!singleSeg) {
-      val wd = u8(p); p += 1
+      val wd = in.u8(p); p += 1
       val base = 1L << (10 + (wd >> 3))
       windowSize = base + (base >> 3) * (wd & 7)
     }
     val dictBytes = dictFlag match {
       case 0 => 0; case 1 => 1; case 2 => 2; case _ => 4
     }
-    val did = if (dictBytes > 0) uLE(p, dictBytes) else 0L
+    val did = if (dictBytes > 0) in.le(p, dictBytes) else 0L
     p += dictBytes
     if (dict == null) {
       if (did != 0L) fail() // dictionary frame without a dictionary
@@ -567,10 +525,10 @@ object Zstd {
       fail() // wrong dictionary for this frame
     var fcs = -1L
     fcsFlag match {
-      case 0 => if (singleSeg) { fcs = u8(p); p += 1 }
-      case 1 => fcs = uLE(p, 2) + 256; p += 2
-      case 2 => fcs = uLE(p, 4); p += 4
-      case _ => fcs = uLE(p, 8); p += 8
+      case 0 => if (singleSeg) { fcs = in.u8(p); p += 1 }
+      case 1 => fcs = in.le(p, 2) + 256; p += 2
+      case 2 => fcs = in.le(p, 4); p += 4
+      case _ => fcs = in.le(p, 8); p += 8
     }
     if (singleSeg) windowSize = fcs
     if (windowSize > MaxWindowBytes || fcs > MaxDecodedBytes.toLong) fail()
@@ -585,7 +543,7 @@ object Zstd {
     var last = false
     while (!last) {
       if (p + 3 > blob.length) fail()
-      val bh = u8(p) | (u8(p + 1) << 8) | (u8(p + 2) << 16)
+      val bh = in.le(p, 3).toInt
       p += 3
       last = (bh & 1) == 1
       val btype = (bh >> 1) & 3
@@ -599,7 +557,7 @@ object Zstd {
           p += bsize
         case 1 => // RLE
           if (bsize > blockMax) fail()
-          val v = u8(p); p += 1
+          val v = in.u8(p); p += 1
           out.ensure(bsize)
           java.util.Arrays.fill(out.a, out.len, out.len + bsize, v.toByte)
           out.len += bsize
@@ -614,7 +572,7 @@ object Zstd {
     }
     if (fcs >= 0 && out.len - frameStart != fcs) fail()
     if (checksumFlag) {
-      val expect = uLE(p, 4); p += 4
+      val expect = in.le(p, 4); p += 4
       val got = xxh64(out.a, frameStart, out.len - frameStart) & 0xffffffffL
       if (got != expect) fail()
     }
@@ -638,10 +596,10 @@ object Zstd {
   private def decodeCompressedBlock(b: Array[Byte], start: Int, end: Int,
       out: Out, st: FrameState, frameStart: Int): Unit = {
     var p = start
-    @inline def u8(i: Int): Int = { if (i >= end) fail(); b(i) & 0xff }
+    val in = new Bytes.Window(b, 0, end)
 
     // ---- literals section
-    val h0 = u8(p)
+    val h0 = in.u8(p)
     val litType = h0 & 3
     val sizeFmt = (h0 >> 2) & 3
     var litBuf: Array[Byte] = null
@@ -649,8 +607,8 @@ object Zstd {
     litType match {
       case 0 | 1 => // raw / RLE
         val regSize = sizeFmt match {
-          case 1 => val v = h0 >> 4 | (u8(p + 1) << 4); p += 2; v
-          case 3 => val v = h0 >> 4 | (u8(p + 1) << 4) | (u8(p + 2) << 12); p += 3; v
+          case 1 => val v = h0 >> 4 | (in.u8(p + 1) << 4); p += 2; v
+          case 3 => val v = h0 >> 4 | (in.u8(p + 1) << 4) | (in.u8(p + 2) << 12); p += 3; v
           case _ => val v = h0 >> 3; p += 1; v
         }
         if (regSize > (1 << 17)) fail()
@@ -661,7 +619,7 @@ object Zstd {
           System.arraycopy(b, p, litBuf, 0, regSize)
           p += regSize
         } else {
-          val v = u8(p); p += 1
+          val v = in.u8(p); p += 1
           java.util.Arrays.fill(litBuf, v.toByte)
         }
       case _ => // compressed / treeless
@@ -671,20 +629,17 @@ object Zstd {
         sizeFmt match {
           case 0 =>
             fourStreams = false
-            val v = h0 | (u8(p + 1) << 8) | (u8(p + 2) << 16)
+            val v = in.le(p, 3).toInt
             regSize = (v >> 4) & 0x3ff; compSize = (v >> 14) & 0x3ff; p += 3
           case 1 =>
-            val v = h0 | (u8(p + 1) << 8) | (u8(p + 2) << 16)
+            val v = in.le(p, 3).toInt
             regSize = (v >> 4) & 0x3ff; compSize = (v >> 14) & 0x3ff; p += 3
           case 2 =>
-            val v = h0.toLong | (u8(p + 1).toLong << 8) |
-              (u8(p + 2).toLong << 16) | (u8(p + 3).toLong << 24)
+            val v = in.le(p, 4)
             regSize = ((v >> 4) & 0x3fff).toInt
             compSize = ((v >> 18) & 0x3fff).toInt; p += 4
           case _ =>
-            val v = h0.toLong | (u8(p + 1).toLong << 8) |
-              (u8(p + 2).toLong << 16) | (u8(p + 3).toLong << 24) |
-              (u8(p + 4).toLong << 32)
+            val v = in.le(p, 5)
             regSize = ((v >> 4) & 0x3ffff).toInt
             compSize = ((v >> 22) & 0x3ffff).toInt; p += 5
         }
@@ -702,9 +657,9 @@ object Zstd {
           hufStream(b, p, streamsEnd, tab, regSize, litBuf, 0)
         } else {
           if (streamsEnd - p < 6) fail()
-          val s1 = u8(p) | (u8(p + 1) << 8)
-          val s2 = u8(p + 2) | (u8(p + 3) << 8)
-          val s3 = u8(p + 4) | (u8(p + 5) << 8)
+          val s1 = in.le16(p).toInt
+          val s2 = in.le16(p + 2).toInt
+          val s3 = in.le16(p + 4).toInt
           val q0 = p + 6
           val s4 = streamsEnd - q0 - s1 - s2 - s3
           if (s4 <= 0) fail()
@@ -720,7 +675,7 @@ object Zstd {
     }
 
     // ---- sequences section
-    val s0 = u8(p); p += 1
+    val s0 = in.u8(p); p += 1
     var numSeq = 0
     if (s0 == 0) {
       if (p != end) fail()
@@ -729,19 +684,19 @@ object Zstd {
       out.len += litSize
       return
     } else if (s0 < 128) numSeq = s0
-    else if (s0 < 255) { numSeq = ((s0 - 128) << 8) | u8(p); p += 1 }
+    else if (s0 < 255) { numSeq = ((s0 - 128) << 8) | in.u8(p); p += 1 }
     // RFC 8878 §3.1.1.3.2.1: byte0==255 → numSeq = byte1 + (byte2<<8) +
     // 0x7F00 — ADD, not OR: byte2's high bits overlap 0x7F00, so OR would
     // lose the carry for any count in [0x8000, 0xFF00).
-    else { numSeq = (u8(p) | (u8(p + 1) << 8)) + 0x7f00; p += 2 }
+    else { numSeq = in.le16(p).toInt + 0x7f00; p += 2 }
 
-    val modes = u8(p); p += 1
+    val modes = in.u8(p); p += 1
     if ((modes & 3) != 0) fail() // reserved bits
     def pick(mode: Int, prev: FseTable, dflt: FseTable, maxSym: Int,
         maxAL: Int): FseTable = mode match {
       case 0 => dflt
       case 1 =>
-        val sym = u8(p); p += 1
+        val sym = in.u8(p); p += 1
         if (sym > maxSym) fail()
         rleTable(sym)
       case 2 =>

@@ -13,24 +13,6 @@ import graft.vesc.VescSchema
   */
 object StreamingPipeline {
 
-  /** File-source stream over an uploads directory of raw semicolon CSVs
-    * (reference S10). Schema must be supplied — streaming sources cannot
-    * infer.
-    */
-  def readRawStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    spark.readStream
-      .option("sep", ";")
-      .option("header", "true")
-      .schema(schema)
-      .csv(dir)
-      .withColumn("__ride_num",
-        regexp_extract(input_file_name(), "ride[\\s_-]*log[\\s_-]*(\\d+)", 1))
-      // regexp_extract returns '' (never null) on no match, so coalesce
-      // can't supply the fallback — mirror the batch reader's empty check
-      .withColumn("ride_id",
-        when(col("__ride_num") =!= "", col("__ride_num")).otherwise(lit("unknown")))
-      .drop("__ride_num")
-
   /** Event-time sliding windows with watermark (reference W11 in streaming
     * form): 3 s window / 500 ms slide per ride, late data beyond the
     * watermark dropped (the batch reference simply sorts + dedups — P6/W1 —

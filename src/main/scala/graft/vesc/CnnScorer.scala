@@ -171,6 +171,24 @@ object CnnScorer {
     out
   }
 
+  /** One window's model input: [[fillWindow]], then the per-channel
+    * z-score `(x - mean) / std` in float32. [[score]],
+    * [[TrunkTrainer.normalizedWindows]] and [[HeadTrainer.trunkFeatures]]
+    * all normalize through here, so training and scoring see bit-identical
+    * inputs.
+    */
+  def normalizedWindow(rows: scala.collection.Seq[scala.collection.Seq[Any]],
+                       mean: Array[Float], std: Array[Float]): Array[Array[Float]] = {
+    val mat = fillWindow(rows, mean.length)
+    var i = 0
+    while (i < mat.length) {
+      var c = 0
+      while (c < mean.length) { mat(i)(c) = (mat(i)(c) - mean(c)) / std(c); c += 1 }
+      i += 1
+    }
+    mat
+  }
+
   /** Score assembled windows: z-score normalize (broadcast stats), forward
     * pass, one row per window with 13 score columns.
     *
@@ -196,17 +214,7 @@ object CnnScorer {
       val w = bWts.value; val m = bMean.value; val s = bStd.value
       it.map { row =>
         val feats = row.getAs[scala.collection.Seq[scala.collection.Seq[Any]]](3)
-        val mat = fillWindow(feats, m.length)
-        var i = 0
-        while (i < mat.length) {
-          var c = 0
-          while (c < m.length) {
-            mat(i)(c) = (mat(i)(c) - m(c)) / s(c)
-            c += 1
-          }
-          i += 1
-        }
-        val scores = forward(mat, w)
+        val scores = forward(normalizedWindow(feats, m, s), w)
         Row.fromSeq(Seq(row.get(0), row.get(1), row.get(2)) ++ scores.toSeq)
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))

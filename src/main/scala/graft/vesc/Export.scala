@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.Json
+
 /** Rendered-deliverable export — the reference's last mile. The engine's
   * pipelines stop at TABLES (scored timeline, metric aggregates); the
   * reference user's end product is an interactive Plotly behavior timeline
@@ -57,9 +59,6 @@ object Export {
     String.format(java.util.Locale.ROOT, "%d:%02d", Int.box(m), Int.box(s))
   }
 
-  private def jstr(s: String) =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   private def jnum(d: Double) =
     if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString
     else d.toString
@@ -84,43 +83,35 @@ object Export {
     * conflict-suppressed, downsampled — [[Postprocess.displayTimeline]]
     * output): [[displayRows]] then [[renderBars]].
     */
-  def timelineBarsJson(timeline: DataFrame, stack: Boolean = false,
-                       classes: Option[Seq[String]] = None): String =
-    renderBars(displayRows(timeline), stack, classes)
+  def timelineBarsJson(timeline: DataFrame): String =
+    renderBars(displayRows(timeline))
 
   /** The figure for collected display rows. Behaviors with no value above
     * the display threshold still get a trace (all-null y), like the
-    * reference's always-added Bar.
-    *
-    * `stack` mirrors the reference's "Stack bars vertically" checkbox
-    * (app.py:331,355 — `barmode=("stack" if stack else "overlay")`);
-    * `classes` mirrors its "Plot classes" multiselect (app.py:347):
-    * when given, only the named behaviors get traces. Both default to the
-    * reference's export-everything/overlay behavior so existing callers
-    * (App streaming loop, CLI) are unchanged.
+    * reference's always-added Bar. The figure holds every behavior in
+    * overlay mode; the reference's stack checkbox and class multiselect
+    * (app.py:331,347) are applied when it is served
+    * ([[Serve.figureVariant]]). Strings are quoted with [[graft.Json.str]].
     */
-  def renderBars(display: DisplayRows, stack: Boolean = false,
-                 classes: Option[Seq[String]] = None): String = {
-    val selected = classes.map(_.toSet)
+  def renderBars(display: DisplayRows): String = {
     val rows = display.rows
     val tsec = rows.map(_.getDouble(0))
     val barWidth = math.max(1e-3, 0.9 * DisplayDt)
-    val traces = display.cfCols.zipWithIndex.collect { case (b, i) if selected.forall(_.contains(b)) =>
+    val traces = display.cfCols.zipWithIndex.map { case (b, i) =>
       val ys = rows.map(r => if (r.isNullAt(i + 1)) Double.NaN else r.getDouble(i + 1))
       val yJson = ys.map(v =>
         if (v.isNaN || v <= MinDisplayThresh) "null" else jnum(v)).mkString("[", ",", "]")
       val hoverJson = ys.zip(tsec).map { case (v, t) =>
         if (v.isNaN || v <= MinDisplayThresh) "null"
-        else jstr(String.format(java.util.Locale.ROOT,
+        else Json.str(String.format(java.util.Locale.ROOT,
           "%s: %.3f at %s", b, Double.box(v), fmtMmss(t)))
       }.mkString("[", ",", "]")
-      s"""{"type":"bar","name":${jstr(b)},"x":${tsec.map(jnum).mkString("[", ",", "]")},
+      s"""{"type":"bar","name":${Json.str(b)},"x":${tsec.map(jnum).mkString("[", ",", "]")},
          |"y":$yJson,"width":$barWidth,"hoverinfo":"text","hovertext":$hoverJson,
-         |"opacity":$BarOpacity,"marker":{"color":${jstr(ColorMap.getOrElse(b, DefaultColor))},"line":{"width":0}}}"""
+         |"opacity":$BarOpacity,"marker":{"color":${Json.str(ColorMap.getOrElse(b, DefaultColor))},"line":{"width":0}}}"""
         .stripMargin.replace("\n", "")
     }
-    val barmode = if (stack) "stack" else "overlay"
-    s"""{"data":${traces.mkString("[", ",", "]")},"layout":{"barmode":"$barmode","hovermode":"x unified","xaxis":{"title":"Time (s)"},"yaxis":{"title":"Confidence","range":[0.0,1.0]},"legend":{"orientation":"h","y":1.12},"template":"plotly_dark"}}"""
+    s"""{"data":${traces.mkString("[", ",", "]")},"layout":{"barmode":"overlay","hovermode":"x unified","xaxis":{"title":"Time (s)"},"yaxis":{"title":"Confidence","range":[0.0,1.0]},"legend":{"orientation":"h","y":1.12},"template":"plotly_dark"}}"""
   }
 
   /** Per-class masked MAE, worst first (plot_metrics.py:6-25): rows where
@@ -193,7 +184,7 @@ object Export {
       Files.write(Paths.get(s"$outDir/reliability.png"), Figures.reliabilityPng(
         rel.collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq))
     }
-    println(s"""{"exported":${graft.Json.str(outDir)},"rides":${rawPaths.length}}""")
+    println(s"""{"exported":${Json.str(outDir)},"rides":${rawPaths.length}}""")
     spark.stop()
   }
 }

@@ -303,13 +303,7 @@ object HeadTrainer {
       val wv = bWts.value; val m = bMean.value; val s = bStd.value
       it.map { row =>
         val cells = row.getAs[scala.collection.Seq[scala.collection.Seq[Any]]](2)
-        val mat = CnnScorer.fillWindow(cells, m.length)
-        var i = 0
-        while (i < mat.length) {
-          var c = 0
-          while (c < m.length) { mat(i)(c) = (mat(i)(c) - m(c)) / s(c); c += 1 }
-          i += 1
-        }
+        val mat = CnnScorer.normalizedWindow(cells, m, s)
         val pooled = CnnScorer.trunkPooled(mat, wv).map(_.toDouble).toSeq
         val y = row.getAs[scala.collection.Seq[Double]](3).toSeq
         Row(row.get(0), row.get(1), pooled, y)

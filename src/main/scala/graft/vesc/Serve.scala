@@ -30,7 +30,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *                               reference's Streamlit page
   *                               (app.py:247-366) as a served artifact.
   *  - `GET /figure`           → `timeline_bars.json` (the Plotly figure
-  *                               [[Export.timelineBarsJson]] wrote).
+  *                               [[Export.timelineBarsJson]] wrote;
+  *                               always overlay, every behavior).
   *                               `?stack=true` rewrites `layout.barmode`
   *                               to `stack` (the reference's checkbox,
   *                               app.py:331,355); `?classes=cf_a,cf_b`
@@ -273,11 +274,9 @@ object Serve {
         respondJson(ex, 404, """{"error":"uploads not enabled"}""")
       case Some(dirRaw) =>
         val dir = dirRaw.toAbsolutePath.normalize
-        val name = Option(ex.getRequestURI.getQuery).getOrElse("")
-          .split('&').collectFirst {
-            case q if q.startsWith("name=") =>
-              java.net.URLDecoder.decode(q.stripPrefix("name="), "UTF-8")
-          }.getOrElse("")
+        // the raw query is decoded exactly once: `%25` is a literal '%'
+        // and `%2B` a literal '+', both refused by SafeCsvName
+        val name = parseQuery(ex.getRequestURI.getRawQuery).getOrElse("name", "")
         if (SafeCsvName.findFirstIn(name).isEmpty) {
           respondJson(ex, 400, """{"error":"name must be a plain .csv filename"}""")
         } else {
@@ -299,7 +298,7 @@ object Serve {
                 java.nio.file.StandardCopyOption.ATOMIC_MOVE,
                 java.nio.file.StandardCopyOption.REPLACE_EXISTING)
               respondJson(ex, 200,
-                s"""{"uploaded":${"\"" + name + "\""},"bytes":${body.length}}""")
+                s"""{"uploaded":${graft.Json.str(name)},"bytes":${body.length}}""")
             }
           }
         }

@@ -422,7 +422,7 @@ object TrunkTrainer {
 
   /** Assembled windows → (id, win: dense normalized (T, C) double matrix,
     * y: per-class label means; NaN where unlabeled). The same
-    * fill/normalize seam as [[CnnScorer.score]], materialized as data so
+    * [[CnnScorer.normalizedWindow]] as [[CnnScorer.score]], materialized as data so
     * every epoch pass skips the fill work; float32 values widened to
     * double (exact), so the aggregator's `toFloat` round-trips
     * bit-identically.
@@ -449,13 +449,7 @@ object TrunkTrainer {
       val mn = bMean.value; val sd = bStd.value
       it.map { row =>
         val cells = row.getAs[scala.collection.Seq[scala.collection.Seq[Any]]](2)
-        val mat = CnnScorer.fillWindow(cells, mn.length)
-        var i = 0
-        while (i < mat.length) {
-          var c = 0
-          while (c < mn.length) { mat(i)(c) = (mat(i)(c) - mn(c)) / sd(c); c += 1 }
-          i += 1
-        }
+        val mat = CnnScorer.normalizedWindow(cells, mn, sd)
         Row(row.get(0), row.get(1),
           mat.map(_.map(_.toDouble).toSeq).toSeq,
           row.getAs[scala.collection.Seq[Double]](3).toSeq)

@@ -4,14 +4,17 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine has one session factory ([[GraftSession]]) and one function
-  * catalog ([[GraftExtensions]]). These checks scan the Scala sources so a
-  * second path cannot grow back:
+/** The engine has one session factory ([[GraftSession]]), one function
+  * catalog ([[GraftExtensions]]) and one byte reader for its decoders
+  * (`functions/Bytes`). These checks scan the Scala sources so a second
+  * path cannot grow back:
   *  - only `GraftSession.scala` builds a session;
   *  - only the five registrations whose builder closes over query data
   *    create temporary functions;
   *  - nothing registers a function on whichever session happens to be
-  *    active.
+  *    active;
+  *  - under `functions/`, only `Bytes.scala` defines a multi-byte integer
+  *    reader or a stackless refusal exception.
   */
 class SessionDisciplineSpec extends AnyFunSuite {
 
@@ -19,6 +22,11 @@ class SessionDisciplineSpec extends AnyFunSuite {
   private val Builder = "SparkSession" + ".builder()"
   private val TempFunction = "createOrReplace" + "TempFunction"
   private val ActiveSession = "getActive" + "Session"
+
+  private val ReaderDef = ("""\bdef\s+(u16|u32|u64|i16|i32|i64|le16|le32|le64|""" +
+    """be16|be32|be64|le16u|le16s|leAt|uLE|le|readLe64|leSigned|rd)\b""").r
+  private val Stackless = Seq("fillIn" + "StackTrace",
+    "RuntimeException(null, null, " + "false, false)")
 
   private val DataBound = Set("AvroOcf.scala", "BpeApply.scala",
     "EmbedSimHash.scala", "UnigramApply.scala", "WordPieceApply.scala")
@@ -61,5 +69,18 @@ class SessionDisciplineSpec extends AnyFunSuite {
     } yield s"$p:${i + 1}"
     assert(offenders.isEmpty,
       s"function registration on the active session: ${offenders.mkString(", ")}")
+  }
+
+  test("decoders read integers and refuse input only through functions/Bytes") {
+    val functions = Paths.get("src/main/scala/graft/functions")
+    val offenders = for {
+      (p, lines) <- sources
+      if p.startsWith(functions) && p.getFileName.toString != "Bytes.scala"
+      (l, i) <- lines.zipWithIndex
+      if ReaderDef.findFirstIn(l).isDefined || Stackless.exists(l.contains)
+    } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty,
+      s"byte reader or refusal signal outside functions/Bytes (call Bytes " +
+        s"instead): ${offenders.mkString(", ")}")
   }
 }

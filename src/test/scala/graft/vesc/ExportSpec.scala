@@ -38,19 +38,32 @@ class ExportSpec extends SparkSuite {
   test("stack barmode and class selection (app.py:331,347 parity)") {
     import spark.implicits._
     val timeline = Seq((0.0, 0.8, 0.9)).toDF("tsec", "cf_accel", "cf_brake")
+    // the display toggles are applied to the exported figure when served
+    val figure = Export.timelineBarsJson(timeline)
 
-    val stacked = Export.timelineBarsJson(timeline, stack = true)
+    val stacked = Serve.figureVariant(figure, stack = true, classes = None)
     assert(stacked.contains("\"barmode\":\"stack\""))
     assert(stacked.contains("cf_accel") && stacked.contains("cf_brake"))
 
-    val filtered = Export.timelineBarsJson(timeline,
-      classes = Some(Seq("cf_brake")))
+    val filtered = Serve.figureVariant(figure, stack = false,
+      classes = Some(Set("cf_brake")))
     assert(!filtered.contains("\"name\":\"cf_accel\""))
     assert(filtered.contains("\"name\":\"cf_brake\""))
     assert(filtered.contains("\"barmode\":\"overlay\""))
     // unknown names select nothing rather than erroring (UI contract)
-    assert(Export.timelineBarsJson(timeline, classes = Some(Seq("cf_nope")))
+    assert(Serve.figureVariant(figure, stack = false, classes = Some(Set("cf_nope")))
       .contains("\"data\":[]"))
+  }
+
+  test("a behavior name with a control character still yields valid figure JSON") {
+    import spark.implicits._
+    val name = "cf_odd\u0001name"
+    val timeline = Seq((0.0, 0.8)).toDF("tsec", name)
+    val json = Export.timelineBarsJson(timeline)
+    val fig = org.json4s.jackson.JsonMethods.parse(json)
+    val trace = (fig \ "data")(0)
+    assert((trace \ "name") == org.json4s.JString(name))
+    assert((trace \ "hovertext")(0) == org.json4s.JString(s"$name: 0.800 at 0:00"))
   }
 
   test("unknown behaviors fall back to the default color") {

@@ -22,6 +22,18 @@ class ServeSpec extends AnyFunSuite {
     (code, body, String.valueOf(conn.getContentType))
   }
 
+  private def post(port: Int, path: String, body: Array[Byte]): (Int, String) = {
+    val conn = URI.create(s"http://127.0.0.1:$port$path").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod("POST")
+    conn.setDoOutput(true)
+    val os = conn.getOutputStream
+    try os.write(body) finally os.close()
+    val code = conn.getResponseCode
+    val stream = if (code >= 400) conn.getErrorStream else conn.getInputStream
+    (code, new String(stream.readAllBytes(), StandardCharsets.UTF_8))
+  }
+
   test("health, figure, files, 404, and traversal guard over a real socket") {
     val dir = Files.createTempDirectory("graft_serve_")
     val figure = """{"data":[],"layout":{"barmode":"overlay"}}"""
@@ -115,6 +127,30 @@ class ServeSpec extends AnyFunSuite {
         // plotly renders it; class list comes from the figure's traces
         assert(body.contains("Plotly.react") && body.contains("t.name"))
       }
+    } finally server.stop(0)
+  }
+
+  test("upload names are decoded once and must be a plain .csv name") {
+    val dir = Files.createTempDirectory("graft_serve_up_")
+    val uploads = Files.createTempDirectory("graft_serve_uploads_")
+    val body = "ms_today;voltage\n1;42.0\n".getBytes(StandardCharsets.UTF_8)
+    val server = Serve.start(dir, 0, uploadTo = Some(uploads))
+    val port = server.getAddress.getPort
+    try {
+      // `%25` is a literal '%' and `%2B` a literal '+': neither is allowed
+      // in a name, and neither is a malformed escape or a space
+      for (q <- Seq("a%25.csv", "a%2Bb.csv", "..%2Fevil.csv", "notcsv.txt")) {
+        val (code, text) = post(port, s"/upload?name=$q", body)
+        assert(code == 400, s"$q: $code $text")
+      }
+      val (code, text) = post(port, "/upload?name=2025-09-28_13-59-59.csv", body)
+      assert(code == 200, text)
+      assert(text == """{"uploaded":"2025-09-28_13-59-59.csv","bytes":24}""")
+      val stored = Files.list(uploads).iterator()
+      val names = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (stored.hasNext) names += stored.next().getFileName.toString
+      assert(names.toList == List("2025-09-28_13-59-59.csv"))
+      assert(Files.readAllBytes(uploads.resolve(names.head)).sameElements(body))
     } finally server.stop(0)
   }
 
