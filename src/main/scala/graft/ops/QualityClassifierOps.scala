@@ -70,7 +70,7 @@ object QualityClassifierOps {
     * elementwise. Map-side combine bounds the shuffle at one array per
     * task regardless of corpus size, and per-doc work never crosses a
     * row boundary, so the whole round is a single stage + a
-    * `numBuckets`-sized reduce (the [[graft.vesc.HeadTrainer.GradAgg]]
+    * `numBuckets`-sized reduce (the [[graft.vesc.HeadTrainer.SumAgg]]
     * shape).
     */
   private class RoundGrad(w: Array[Long], numBuckets: Int)

@@ -629,9 +629,10 @@ object DataPipelineQueries extends QueryPack {
     }),
 
     // M6 distributed mini-batch gradient: one epoch-0 pass of the head
-    // trainer's gradient aggregation (graft.vesc.HeadTrainer.GradAgg —
+    // trainer's gradient aggregation (graft.vesc.HeadTrainer.headGrad —
     // map-side-combined masked-BCE loss + ∂L/∂W + ∂L/∂b per deterministic
-    // batch) over the embeddings as features with one-hot-by-label targets
+    // batch, in one flat buffer: W row-major, then b) over the embeddings
+    // as features with one-hot-by-label targets
     // (NaN-masked where (vec_id+k)%11=0). The oracle recomputes every sum
     // independently in SQL. Fixed deterministic init so both engines see
     // the same weights.
@@ -646,17 +647,17 @@ object DataPipelineQueries extends QueryPack {
         expr(s"""transform(sequence(0, ${K - 1}), k ->
                  CASE WHEN pmod(vec_id + k, 11) = 0 THEN CAST('NaN' AS DOUBLE)
                       WHEN label = k THEN 1.0D ELSE 0.0D END)""").as("y"))
-      val agg = udaf(new graft.vesc.HeadTrainer.GradAgg(w, b))
+      val agg = udaf(graft.vesc.HeadTrainer.headGrad(w.flatten ++ b, K, D))
       val r4 = (c: org.apache.spark.sql.Column) => floor(c * 1e4 + lit(0.5)) / 1e4
+      val norm = (from: Int, len: Int) => r4(expr(
+        s"sqrt(aggregate(transform(slice(g.g, $from, $len), x -> x*x), 0D, (a,x) -> a+x))"))
       rows.groupBy(col("batch_id"))
         .agg(agg(col("feat"), col("y")).as("g"))
         .select(col("batch_id"),
           col("g.labeled").as("labeled"),
           r4(col("g.loss")).as("loss"),
-          r4(expr("sqrt(aggregate(transform(g.gb, x -> x*x), 0D, (a,x) -> a+x))"))
-            .as("grad_b_norm"),
-          r4(expr("sqrt(aggregate(transform(g.gw, x -> x*x), 0D, (a,x) -> a+x))"))
-            .as("grad_w_norm"))
+          norm(K * D + 1, K).as("grad_b_norm"),
+          norm(1, K * D).as("grad_w_norm"))
         .orderBy(col("batch_id"))
     }),
 

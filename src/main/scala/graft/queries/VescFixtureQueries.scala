@@ -114,7 +114,7 @@ object VescFixtureQueries extends QueryPack {
         .orderBy(col("win_id"), col("cls"))
     }),
 
-    // M7 full-network gradient: ONE distributed TrunkGradAgg pass
+    // M7 full-network gradient: ONE distributed TrunkTrainer.gradPass
     // (masked-BCE backprop through conv/BN/res/head, frozen BN stats) over
     // the golden windows with deterministic labels, vs an independent
     // NumPy backprop (tools/golden_trunk_grad.py, FD-self-checked).

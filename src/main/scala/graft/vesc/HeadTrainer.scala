@@ -1,5 +1,7 @@
 package graft.vesc
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -7,19 +9,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Spark-native analog of the reference training loop (M6 batching + M7
-  * early stopping: model/model_training.py:109-180), scoped to the model's
-  * Linear head with the convolutional trunk frozen (transfer-learning
-  * fine-tune). Full conv backprop stays out of engine scope (SURVEY §8);
-  * this gives the loop itself — epochs, deterministic mini-batches,
-  * masked-BCE gradients, Adam, patience-based early stopping with
-  * best-weights checkpointing — a faithful distributed implementation.
+  * early stopping: model/model_training.py:109-180), and the training
+  * pieces both trainers share: the one loop ([[fit]]), the one sum
+  * aggregation ([[SumAgg]]) and the one window → model-input seam
+  * ([[modelInputs]]). `HeadTrainer.train` fine-tunes the model's Linear
+  * head with the convolutional trunk frozen (transfer learning);
+  * [[TrunkTrainer]] trains the whole network through the same loop.
   *
   * Architecture is the classic data-parallel pattern (how MLlib's own
   * optimizers are built): the dataset stays distributed and CACHED; each
   * mini-batch computes its loss+gradient as ONE aggregation with map-side
-  * partial combine ([[HeadTrainer.GradAgg]] — each task reduces its rows
-  * into a single (K·D+K)-double buffer, so the shuffle per batch moves
-  * O(tasks · K·D) bytes, never rows); the driver holds the O(K·D)
+  * partial combine ([[SumAgg]] — each task reduces its rows into a single
+  * flat buffer of one double per parameter, so the shuffle per batch moves
+  * O(tasks · parameters) doubles, never rows); the driver holds the
   * optimizer state and applies the Adam update. At 100 TB of raw telemetry
   * the pooled features are ~0.5 KB/window — the cached feature table is
   * ~4 orders of magnitude smaller than the raw scan, which is why
@@ -27,9 +29,9 @@ import org.apache.spark.sql.types._
   * is the scale-correct design.
   *
   * Loss/optimizer semantics match the reference exactly:
-  *  - masked BCE-with-logits, mean over labeled (non-NaN) targets in the
-  *    batch (model_training.py:43-50), in the numerically stable form
-  *    `max(z,0) − z·y + log1p(exp(−|z|))`;
+  *  - masked BCE-with-logits ([[TrunkGrad.bceDz]]), mean over labeled
+  *    (non-NaN) targets in the batch (model_training.py:43-50), in the
+  *    numerically stable form `max(z,0) − z·y + log1p(exp(−|z|))`;
   *  - Adam with torch defaults (β₁ 0.9, β₂ 0.999, ε 1e-8 added AFTER the
   *    sqrt), stepped once per batch INCLUDING zero-gradient batches
   *    (torch's opt.step() runs unconditionally, so momentum decay still
@@ -46,62 +48,79 @@ import org.apache.spark.sql.types._
   */
 object HeadTrainer {
 
-  /** Partial sums of one batch: flattened ∂L/∂W (K·D), ∂L/∂b (K), the
-    * summed element losses, and the labeled-target count. All four merge
+  /** Partial sums of one pass: one double per summed quantity (a pass's
+    * gradient, or its per-channel sums), the summed element losses, and
+    * the count (labeled targets, or summed elements). All three merge
     * element-wise, so the aggregation is associative and map-side
     * combinable.
     */
-  final case class GradBuf(gw: Array[Double], gb: Array[Double],
-                           loss: Double, labeled: Long)
+  final case class SumBuf(g: Array[Double], loss: Double, labeled: Long)
 
-  /** One-pass masked-BCE loss + gradient for a fixed (W, b) over rows of
-    * (features D, targets K with NaN = unlabeled). Closes over the current
-    * weights — ~K·D doubles shipped with the task closure each batch.
+  /** The sum aggregation every training pass runs: `n` doubles plus loss
+    * and count, filled row by row by `kernel`, the pass's per-row work —
+    * it adds one row's sums into the buffer array and, given the running
+    * loss, returns the running loss with the row's loss added and the
+    * row's count. The kernel closes over the current weights; they ship
+    * with the task closure each pass.
     */
-  class GradAgg(w: Array[Array[Double]], b: Array[Double])
-      extends Aggregator[(Seq[Double], Seq[Double]), GradBuf, GradBuf] {
-    private val k = b.length
-    private val d = w(0).length
+  final class SumAgg[IN](n: Int, kernel: (IN, Array[Double], Double) => (Double, Long))
+      extends Aggregator[IN, SumBuf, SumBuf] {
+    override def zero: SumBuf = SumBuf(Array.ofDim[Double](n), 0.0, 0L)
 
-    override def zero: GradBuf =
-      GradBuf(Array.ofDim[Double](k * d), Array.ofDim[Double](k), 0.0, 0L)
+    override def reduce(buf: SumBuf, row: IN): SumBuf = {
+      val (loss, count) = kernel(row, buf.g, buf.loss)
+      SumBuf(buf.g, loss, buf.labeled + count)
+    }
 
-    override def reduce(buf: GradBuf, row: (Seq[Double], Seq[Double])): GradBuf = {
-      val (x, y) = row
-      var loss = buf.loss
-      var labeled = buf.labeled
+    override def merge(a: SumBuf, b: SumBuf): SumBuf = {
+      var i = 0
+      while (i < a.g.length) { a.g(i) += b.g(i); i += 1 }
+      SumBuf(a.g, a.loss + b.loss, a.labeled + b.labeled)
+    }
+
+    override def finish(r: SumBuf): SumBuf = r
+    override def bufferEncoder: ExpressionEncoder[SumBuf] = ExpressionEncoder[SumBuf]()
+    override def outputEncoder: ExpressionEncoder[SumBuf] = ExpressionEncoder[SumBuf]()
+  }
+
+  /** Runs `agg` over all of `df` (`cols` are its input) — one job. */
+  private[vesc] def sumPass[IN: TypeTag](df: DataFrame, agg: SumAgg[IN], cols: Column*): SumBuf = {
+    val r = df.agg(udaf(agg).apply(cols: _*).as("s")).head().getStruct(0)
+    SumBuf(r.getAs[scala.collection.Seq[Double]]("g").toArray,
+      r.getAs[Double]("loss"), r.getAs[Long]("labeled"))
+  }
+
+  /** Mean loss over the labeled targets of a pass (1 when none). */
+  private[vesc] def meanLoss(s: SumBuf): Double = s.loss / math.max(s.labeled.toDouble, 1.0)
+
+  /** One-pass masked-BCE loss + gradient of the head at flat parameters
+    * `p` (W (K×D) row-major, then b (K)) over rows of (features D,
+    * targets K with NaN = unlabeled); the buffer has the same layout as
+    * `p`. Each labeled element's loss is added to the running loss in
+    * class order.
+    */
+  def headGrad(p: Array[Double], k: Int, d: Int): SumAgg[(Seq[Double], Seq[Double])] =
+    new SumAgg[(Seq[Double], Seq[Double])](k * d + k, (row, g, loss0) => {
+      val x = row._1.toArray
+      val y = row._2.toArray
+      val z = Array.tabulate(k) { kk =>
+        var acc = p(k * d + kk)
+        var j = 0
+        while (j < d) { acc += p(kk * d + j) * x(j); j += 1 }
+        acc
+      }
+      val (loss, labeled, dz) = TrunkGrad.bceDz(z, y, loss0)
       var kk = 0
       while (kk < k) {
-        val yk = y(kk)
-        if (!yk.isNaN) {
-          var z = b(kk)
-          val wk = w(kk)
+        if (!y(kk).isNaN) {
+          g(k * d + kk) += dz(kk)
           var j = 0
-          while (j < d) { z += wk(j) * x(j); j += 1 }
-          val g = 1.0 / (1.0 + math.exp(-z)) - yk
-          loss += math.max(z, 0.0) - z * yk + math.log1p(math.exp(-math.abs(z)))
-          buf.gb(kk) += g
-          j = 0
-          while (j < d) { buf.gw(kk * d + j) += g * x(j); j += 1 }
-          labeled += 1L
+          while (j < d) { g(kk * d + j) += dz(kk) * x(j); j += 1 }
         }
         kk += 1
       }
-      GradBuf(buf.gw, buf.gb, loss, labeled)
-    }
-
-    override def merge(a: GradBuf, c: GradBuf): GradBuf = {
-      var i = 0
-      while (i < a.gw.length) { a.gw(i) += c.gw(i); i += 1 }
-      i = 0
-      while (i < a.gb.length) { a.gb(i) += c.gb(i); i += 1 }
-      GradBuf(a.gw, a.gb, a.loss + c.loss, a.labeled + c.labeled)
-    }
-
-    override def finish(r: GradBuf): GradBuf = r
-    override def bufferEncoder: ExpressionEncoder[GradBuf] = ExpressionEncoder[GradBuf]()
-    override def outputEncoder: ExpressionEncoder[GradBuf] = ExpressionEncoder[GradBuf]()
-  }
+      (loss, labeled)
+    })
 
   /** M6: deterministic mini-batch assignment as a pure-arithmetic column —
     * two rounds of mask → multiplicative (Knuth) hash → high-bits shift,
@@ -162,155 +181,181 @@ object HeadTrainer {
                                bestVal: Double, bestEpoch: Int,
                                log: Seq[EpochLog], stoppedEarly: Boolean)
 
-  /** Loss-only evaluation of (W, b) over a feature table — one aggregation
-    * job (the validation pass of each epoch).
+  /** The loop's state at an epoch boundary: flat parameters `p`, Adam
+    * moments `m`/`v` and step count `t`, best-checkpoint tracking, the
+    * patience counter, and `side` — state the batches change besides `p`
+    * (the trunk's BN running stats), which travels with the best
+    * checkpoint.
     */
-  def evalLoss(df: DataFrame, w: Array[Array[Double]], b: Array[Double]): Double = {
-    val buf = gradPass(df, w, b)
-    buf.loss / math.max(buf.labeled.toDouble, 1.0)
+  private[vesc] final case class FitState[S](
+      p: Array[Double], m: Array[Double], v: Array[Double], t: Long,
+      nextEpoch: Int, bestVal: Double, bestEpoch: Int, bestP: Array[Double],
+      bad: Int, side: S)
+
+  private[vesc] object FitState {
+    def fresh[S](p: Array[Double], side: S): FitState[S] =
+      FitState(p, Array.ofDim[Double](p.length), Array.ofDim[Double](p.length),
+        0L, 0, Double.PositiveInfinity, -1, p.clone(), 0, side)
   }
 
-  private def gradPass(df: DataFrame, w: Array[Array[Double]], b: Array[Double]): GradBuf = {
-    val agg = udaf(new GradAgg(w, b))
-    val r = df.agg(agg(col("feat"), col("y")).as("g")).head()
-    val g = r.getStruct(0)
-    GradBuf(g.getAs[scala.collection.Seq[Double]]("gw").toArray,
-      g.getAs[scala.collection.Seq[Double]]("gb").toArray,
-      g.getAs[Double]("loss"), g.getAs[Long]("labeled"))
-  }
-
-  /** The training loop. `train`/`validation` need columns
-    * (id long, feat array&lt;double&gt; of size D, y array&lt;double&gt; of
-    * size K, NaN = unlabeled). Both are persisted for the epoch passes and
-    * unpersisted before returning.
+  /** The training loop, over a flat parameter vector. `trainDf`/`valDf`
+    * need an `id long` column (the batch assignment) plus whatever
+    * `batchGrad` and `valLoss` read; both are persisted for the epoch
+    * passes and unpersisted before returning. `batchGrad` gives one
+    * batch's gradient and loss sums at the current parameters and the
+    * batch's new side state; `onEpoch` sees the state after each epoch's
+    * best-restore. `start`'s arrays are updated in place. Returns the final
+    * state (its `p` and `side` are the best checkpoint's), the epoch log and
+    * whether patience stopped the run.
     */
-  def train(trainDf: DataFrame, valDf: DataFrame,
-            initW: Array[Array[Double]], initB: Array[Double],
-            cfg: TrainConfig = TrainConfig()): TrainResult = {
-    val k = initB.length
-    val d = initW(0).length
-    val w = initW.map(_.clone())
-    val b = initB.clone()
-    // Adam state
-    val mW = Array.ofDim[Double](k, d); val vW = Array.ofDim[Double](k, d)
-    val mB = Array.ofDim[Double](k); val vB = Array.ofDim[Double](k)
-    var t = 0
+  private[vesc] def fit[S](
+      trainDf: DataFrame, valDf: DataFrame, cfg: TrainConfig, start: FitState[S],
+      batchGrad: (DataFrame, Array[Double], S) => (SumBuf, S),
+      valLoss: (DataFrame, Array[Double], S) => Double,
+      onEpoch: FitState[S] => Unit): (FitState[S], Seq[EpochLog], Boolean) = {
+    val p = start.p
+    val m = start.m
+    val v = start.v
+    val n = p.length
+    var t = start.t
+    var side = start.side
 
     val cachedTrain = trainDf.persist()
     val cachedVal = valDf.persist()
     try {
-      var bestVal = Double.PositiveInfinity
-      var bestEpoch = -1
-      var bestW = w.map(_.clone()); var bestB = b.clone()
-      var bad = 0
+      var bestVal = start.bestVal
+      var bestEpoch = start.bestEpoch
+      var bestP = start.bestP
+      var bestSide = side
+      var bad = start.bad
       var stopped = false
       val log = scala.collection.mutable.ArrayBuffer.empty[EpochLog]
 
-      var epoch = 0
+      var epoch = start.nextEpoch
       while (epoch < cfg.epochs && !stopped) {
         var num = 0.0; var den = 0.0
         var bi = 0
         while (bi < cfg.batches) {
           val batch = cachedTrain.filter(batchId(col("id"), epoch, cfg.batches) === bi)
-          val g = gradPass(batch, w, b)
+          val (g, s) = batchGrad(batch, p, side)
+          side = s
           // torch parity: opt.step() runs even when the batch had no
           // labeled targets (zero gradient still moves weights through
           // momentum decay)
-          val n = math.max(g.labeled.toDouble, 1.0)
+          val nb = math.max(g.labeled.toDouble, 1.0)
           t += 1
-          val c1 = 1.0 - math.pow(cfg.beta1, t)
-          val c2 = 1.0 - math.pow(cfg.beta2, t)
-          var kk = 0
-          while (kk < k) {
-            var j = 0
-            while (j < d) {
-              val grad = g.gw(kk * d + j) / n
-              mW(kk)(j) = cfg.beta1 * mW(kk)(j) + (1 - cfg.beta1) * grad
-              vW(kk)(j) = cfg.beta2 * vW(kk)(j) + (1 - cfg.beta2) * grad * grad
-              w(kk)(j) -= cfg.lr * (mW(kk)(j) / c1) / (math.sqrt(vW(kk)(j) / c2) + cfg.adamEps)
-              j += 1
-            }
-            val gradB = g.gb(kk) / n
-            mB(kk) = cfg.beta1 * mB(kk) + (1 - cfg.beta1) * gradB
-            vB(kk) = cfg.beta2 * vB(kk) + (1 - cfg.beta2) * gradB * gradB
-            b(kk) -= cfg.lr * (mB(kk) / c1) / (math.sqrt(vB(kk) / c2) + cfg.adamEps)
-            kk += 1
+          val c1 = 1.0 - math.pow(cfg.beta1, t.toDouble)
+          val c2 = 1.0 - math.pow(cfg.beta2, t.toDouble)
+          var j = 0
+          while (j < n) {
+            val grad = g.g(j) / nb
+            m(j) = cfg.beta1 * m(j) + (1 - cfg.beta1) * grad
+            v(j) = cfg.beta2 * v(j) + (1 - cfg.beta2) * grad * grad
+            p(j) -= cfg.lr * (m(j) / c1) / (math.sqrt(v(j) / c2) + cfg.adamEps)
+            j += 1
           }
           num += g.loss // = batch-mean loss × labeled (model_training.py:141)
           den += g.labeled.toDouble
           bi += 1
         }
         val trainLoss = num / math.max(den, 1.0)
-        val valLoss = evalLoss(cachedVal, w, b)
+        val vl = valLoss(cachedVal, p, side)
 
-        val improved = valLoss + cfg.minDelta < bestVal
+        val improved = vl + cfg.minDelta < bestVal
         if (improved) {
-          bestVal = valLoss; bestEpoch = epoch; bad = 0
-          bestW = w.map(_.clone()); bestB = b.clone()
+          bestVal = vl; bestEpoch = epoch; bad = 0
+          bestP = p.clone()
+          bestSide = side
         } else {
           bad += 1
           if (bad >= cfg.patience) stopped = true
         }
         // reference parity: load_state_dict(best) runs INSIDE the epoch
         // loop (model_training.py:180) — the next epoch always resumes
-        // from the best weights; Adam m/v state is NOT reset
-        var kk = 0
-        while (kk < k) {
-          System.arraycopy(bestW(kk), 0, w(kk), 0, d)
-          kk += 1
-        }
-        System.arraycopy(bestB, 0, b, 0, k)
-        log += EpochLog(epoch, trainLoss, valLoss, improved)
+        // from the best weights (and side state); Adam m/v is NOT reset
+        System.arraycopy(bestP, 0, p, 0, n)
+        side = bestSide
+        log += EpochLog(epoch, trainLoss, vl, improved)
         epoch += 1
+        onEpoch(FitState(p, m, v, t, epoch, bestVal, bestEpoch, bestP, bad, side))
       }
-      TrainResult(bestW, bestB, bestVal, bestEpoch, log.toSeq, stopped)
+      (FitState(p, m, v, t, epoch, bestVal, bestEpoch, bestP, bad, side), log.toSeq, stopped)
     } finally {
       cachedTrain.unpersist()
       cachedVal.unpersist()
     }
   }
 
-  /** Frozen-trunk feature extraction: assembled windows → (ride_id,
-    * window_start, id, feat: 64-d pooled trunk output, y: per-class label
-    * means; all-NaN when the source logs carry no labels, matching
-    * model/vesc_dataset.py:149-158). Same `mapPartitions` seam as
-    * [[CnnScorer.score]] — broadcast weights, no shuffle.
+  /** Head training through [[fit]]. `train`/`validation` need columns
+    * (id long, feat array&lt;double&gt; of size D, y array&lt;double&gt; of
+    * size K, NaN = unlabeled).
     */
-  def trunkFeatures(windows: DataFrame, wts: CnnScorer.CnnWeights,
-                    mean: Array[Double], std: Array[Double],
-                    confCols: Seq[String] = VescSchema.ConfidenceCols,
-                    hasLabels: Boolean = true): DataFrame = {
+  def train(trainDf: DataFrame, valDf: DataFrame,
+            initW: Array[Array[Double]], initB: Array[Double],
+            cfg: TrainConfig = TrainConfig()): TrainResult = {
+    val k = initB.length
+    val d = initW(0).length
+    def pass(df: DataFrame, p: Array[Double]): SumBuf =
+      sumPass(df, headGrad(p, k, d), col("feat"), col("y"))
+    val (end, log, stopped) = fit[Unit](trainDf, valDf, cfg,
+      FitState.fresh(initW.flatten ++ initB, ()),
+      (batch, p, _) => (pass(batch, p), ()),
+      (df, p, _) => meanLoss(pass(df, p)),
+      _ => ())
+    TrainResult(Array.tabulate(k, d)((kk, j) => end.bestP(kk * d + j)),
+      end.bestP.slice(k * d, k * d + k), end.bestVal, end.bestEpoch, log,
+      stopped)
+  }
+
+  /** Assembled windows → (id, ride_id, window_start, `out`, y: per-class
+    * label means; all-NaN when the source logs carry no labels, matching
+    * model/vesc_dataset.py:149-158), where `out` is `perWindow` of the
+    * window's [[CnnScorer.normalizedWindow]] — the same `mapPartitions`
+    * seam as [[CnnScorer.score]], broadcast stats, no shuffle. `id` is
+    * `xxhash64(ride_id, window_start)`, the batch-assignment key.
+    */
+  private[vesc] def modelInputs(windows: DataFrame, mean: Array[Double],
+                                std: Array[Double], confCols: Seq[String],
+                                hasLabels: Boolean, out: StructField)
+                               (perWindow: Array[Array[Float]] => Any): DataFrame = {
     val sc = windows.sparkSession.sparkContext
-    val bWts = sc.broadcast(wts)
     val bMean = sc.broadcast(mean.map(_.toFloat))
     val bStd = sc.broadcast(std.map(_.toFloat))
-    val nClasses = confCols.length
-
     val labelCols =
       if (hasLabels) confCols.map(c => col("y_" + c).cast("double"))
       else confCols.map(_ => lit(Double.NaN))
     val projected = windows.select(
       col("ride_id"), col("window_start"),
       col("features"), array(labelCols: _*).as("__y"))
-
     val outSchema = StructType(Seq(
       StructField("ride_id", StringType),
       StructField("window_start", LongType),
-      StructField("feat", ArrayType(DoubleType)),
+      out,
       StructField("y", ArrayType(DoubleType))))
-
-    val feats = projected.mapPartitions { it =>
-      val wv = bWts.value; val m = bMean.value; val s = bStd.value
+    val rows = projected.mapPartitions { it =>
+      val mn = bMean.value; val sd = bStd.value
       it.map { row =>
         val cells = row.getAs[scala.collection.Seq[scala.collection.Seq[Any]]](2)
-        val mat = CnnScorer.normalizedWindow(cells, m, s)
-        val pooled = CnnScorer.trunkPooled(mat, wv).map(_.toDouble).toSeq
-        val y = row.getAs[scala.collection.Seq[Double]](3).toSeq
-        Row(row.get(0), row.get(1), pooled, y)
+        val mat = CnnScorer.normalizedWindow(cells, mn, sd)
+        Row(row.get(0), row.get(1), perWindow(mat),
+          row.getAs[scala.collection.Seq[Double]](3).toSeq)
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
+    rows.withColumn("id", xxhash64(col("ride_id"), col("window_start")))
+      .select("id", "ride_id", "window_start", out.name, "y")
+  }
 
-    feats.withColumn("id", xxhash64(col("ride_id"), col("window_start")))
-      .select("id", "ride_id", "window_start", "feat", "y")
+  /** Frozen-trunk feature extraction: assembled windows → (id, ride_id,
+    * window_start, feat: 64-d pooled trunk output, y) via [[modelInputs]].
+    */
+  def trunkFeatures(windows: DataFrame, wts: CnnScorer.CnnWeights,
+                    mean: Array[Double], std: Array[Double],
+                    confCols: Seq[String] = VescSchema.ConfidenceCols,
+                    hasLabels: Boolean = true): DataFrame = {
+    val bWts = windows.sparkSession.sparkContext.broadcast(wts)
+    modelInputs(windows, mean, std, confCols, hasLabels,
+      StructField("feat", ArrayType(DoubleType))) { mat =>
+      CnnScorer.trunkPooled(mat, bWts.value).map(_.toDouble).toSeq
+    }
   }
 }

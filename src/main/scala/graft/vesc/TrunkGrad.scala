@@ -12,7 +12,7 @@ import CnnScorer.{BnW, CnnWeights, ConvW, LinearW}
   *  - '''frozen stats''' (running mean/var from the checkpoint; γ/β still
   *    learned) — the fine-tuning recipe. Per-row gradients are exactly
   *    independent, so the whole batch gradient is ONE map-side-combinable
-  *    aggregation ([[TrunkTrainer.TrunkGradAgg]]).
+  *    aggregation ([[TrunkTrainer.gradPass]], a [[HeadTrainer.SumAgg]]).
   *  - '''batch statistics''' (train-mode BN, the reference's from-scratch
   *    recipe, model/model_training.py:76-103). Batch statistics couple
   *    the rows of a mini-batch in both the forward (through μ/σ²) and the
@@ -254,34 +254,14 @@ object TrunkGrad {
     Array.tabulate(pre.length, pre(0).length)((c, t) =>
       if (pre(c)(t) > 0f) dy(c)(t) else 0.0)
 
-  /** Masked-BCE loss + full-network gradient for one (window, y) row.
-    * `window` is the (T, C_in) normalized matrix; `y` the K targets with
-    * NaN = unlabeled. Gradient SUMS (not means) accumulate into `grad`
-    * (length [[nParams]]); returns (summed element loss, labeled count) —
-    * the same partial shape as [[HeadTrainer.GradAgg]], so batch means are
-    * taken once, driver-side.
-    */
   /** Forward-only masked-BCE loss of one row: the same cached forward and
-    * stable-BCE loop as [[rowGradient]] (per-row loss bit-identical) with
-    * no backward pass and no gradient buffer — the validation-eval path,
+    * [[bceDz]] as [[rowGradient]] (per-row loss bit-identical) with no
+    * backward pass and no gradient buffer — the validation-eval path,
     * ~3× cheaper than running backprop just to discard the gradient.
     */
   def rowLoss(window: Array[Array[Float]], y: Array[Double],
               wts: CnnWeights): (Double, Long) = {
-    val c = forwardCached(window, wts)
-    val k = wts.head.b.length
-    var loss = 0.0
-    var labeled = 0L
-    var o = 0
-    while (o < k) {
-      val yk = y(o)
-      if (!yk.isNaN) {
-        val z = c.logits(o)
-        loss += math.max(z, 0.0) - z * yk + math.log1p(math.exp(-math.abs(z)))
-        labeled += 1L
-      }
-      o += 1
-    }
+    val (loss, labeled, _) = bceDz(forwardCached(window, wts).logits, y)
     (loss, labeled)
   }
 
@@ -348,13 +328,14 @@ object TrunkGrad {
   }
 
   /** Phase-1 kernel: accumulate per-channel (Σx, Σx²) of `layer`'s pre-BN
-    * input into sum/sumsq, forwarding with the batch stats resolved so
-    * far (layers after `layer` still carry stale stats — harmless, the
-    * pre-activation of `layer` never reads them). Returns the element
+    * input into `sum(c)`/`sumsq(sqOff + c)` (one buffer can hold both),
+    * forwarding with the batch stats resolved so far (layers after
+    * `layer` still carry stale stats — harmless, the pre-activation of
+    * `layer` never reads them). Returns the element
     * count per channel contributed by this row.
     */
   def rowPreBnSums(window: Array[Array[Float]], wts: CnnWeights, layer: String,
-                   sum: Array[Double], sumsq: Array[Double]): Long = {
+                   sum: Array[Double], sumsq: Array[Double], sqOff: Int = 0): Long = {
     val pre = preActOf(forwardCached(window, wts), layer)
     var c = 0
     while (c < pre.length) {
@@ -363,7 +344,7 @@ object TrunkGrad {
       while (t < row.length) {
         val x = row(t).toDouble
         sum(c) += x
-        sumsq(c) += x * x
+        sumsq(sqOff + c) += x * x
         t += 1
       }
       c += 1
@@ -406,10 +387,13 @@ object TrunkGrad {
     dx
   }
 
-  /** Accumulate one row's (Σdy, Σdy·x̂) for a BN layer into outDy/outDyX. */
+  /** Accumulate one row's (Σdy, Σdy·x̂) for a BN layer into
+    * `outDy(c)`/`outDyX(dyxOff + c)`.
+    */
   private def momentsAt(xPre: Array[Array[Float]], bn: BnW,
                         dy: Array[Array[Double]],
-                        outDy: Array[Double], outDyX: Array[Double]): Unit = {
+                        outDy: Array[Double], outDyX: Array[Double],
+                        dyxOff: Int): Unit = {
     var c = 0
     while (c < xPre.length) {
       val inv = 1.0 / math.sqrt(bn.variance(c).toDouble + bn.eps.toDouble)
@@ -418,7 +402,7 @@ object TrunkGrad {
       while (ti < xPre(c).length) {
         val d = dy(c)(ti)
         outDy(c) += d
-        outDyX(c) += d * (xPre(c)(ti) - m) * inv
+        outDyX(dyxOff + c) += d * (xPre(c)(ti) - m) * inv
         ti += 1
       }
       c += 1
@@ -463,15 +447,15 @@ object TrunkGrad {
 
   /** Shared backward walker for batch-stats BN. Walks from the BCE dz
     * toward the input; at `stopAt` (a BN layer name) it accumulates that
-    * layer's moments into outDy/outDyX and returns; with stopAt == null it
-    * applies every layer's train-mode backward and accumulates the FULL
-    * gradient into `grad`. `moments` must contain every BN layer above
+    * layer's moments into outDy/outDyX (Σdy·x̂ from `dyxOff`) and returns;
+    * with stopAt == null it applies every layer's train-mode backward and
+    * accumulates the FULL gradient into `grad`. `moments` must contain every BN layer above
     * the stopping point (all five when stopAt == null).
     */
   private def backwardWithBatchBn(c: Cache, wts: CnnWeights, dz: Array[Double],
                                   moments: Map[String, BnMom], stopAt: String,
                                   grad: Array[Double], outDy: Array[Double],
-                                  outDyX: Array[Double]): Unit = {
+                                  outDyX: Array[Double], dyxOff: Int): Unit = {
     val k = wts.head.b.length
     val dHid = wts.head.w(0).length
     val full = stopAt == null
@@ -502,21 +486,21 @@ object TrunkGrad {
     var dH = Array.tabulate(c.h5.length, t4)((ch, _) => dPooled(ch) / t4)
 
     dH = reluBackward(c.b4out, dH)
-    if (stopAt == "bn4") { momentsAt(c.c4pre, wts.bn4, dH, outDy, outDyX); return }
+    if (stopAt == "bn4") { momentsAt(c.c4pre, wts.bn4, dH, outDy, outDyX, dyxOff); return }
     dH = bnBackwardTrain(c.c4pre, wts.bn4, moments("bn4"), dH,
       if (full) grad else null, if (full) offOf("bn4.g") else 0)
     dH = if (full) convBackward(c.h4, wts.conv4, dH, grad, offOf("conv4.w"))
          else convBackwardDx(wts.conv4, dH, c.h4.length, c.h4(0).length)
 
     dH = reluBackward(c.b3out, dH)
-    if (stopAt == "bn3") { momentsAt(c.c3pre, wts.bn3, dH, outDy, outDyX); return }
+    if (stopAt == "bn3") { momentsAt(c.c3pre, wts.bn3, dH, outDy, outDyX, dyxOff); return }
     dH = bnBackwardTrain(c.c3pre, wts.bn3, moments("bn3"), dH,
       if (full) grad else null, if (full) offOf("bn3.g") else 0)
     dH = if (full) convBackward(c.h3, wts.conv3, dH, grad, offOf("conv3.w"))
          else convBackwardDx(wts.conv3, dH, c.h3.length, c.h3(0).length)
 
     dH = reluBackward(c.b2out, dH)
-    if (stopAt == "bn2") { momentsAt(c.c2pre, wts.bn2, dH, outDy, outDyX); return }
+    if (stopAt == "bn2") { momentsAt(c.c2pre, wts.bn2, dH, outDy, outDyX, dyxOff); return }
     dH = bnBackwardTrain(c.c2pre, wts.bn2, moments("bn2"), dH,
       if (full) grad else null, if (full) offOf("bn2.g") else 0)
     dH = if (full) convBackward(c.h2, wts.conv2, dH, grad, offOf("conv2.w"))
@@ -524,7 +508,7 @@ object TrunkGrad {
 
     val dS2 = reluBackward(c.s2, dH)
     var dBlk = reluBackward(c.rbnOut, dS2)
-    if (stopAt == "resbn") { momentsAt(c.r2pre, wts.resBn, dBlk, outDy, outDyX); return }
+    if (stopAt == "resbn") { momentsAt(c.r2pre, wts.resBn, dBlk, outDy, outDyX, dyxOff); return }
     dBlk = bnBackwardTrain(c.r2pre, wts.resBn, moments("resbn"), dBlk,
       if (full) grad else null, if (full) offOf("resbn.g") else 0)
     dBlk = if (full) convBackward(c.r1post, wts.resConv2, dBlk, grad, offOf("res2.w"))
@@ -536,17 +520,21 @@ object TrunkGrad {
       dS2(ch)(ti) + dBlk(ch)(ti))
 
     var dB1 = reluBackward(c.b1out, dH1)
-    if (stopAt == "bn1") { momentsAt(c.c1pre, wts.bn1, dB1, outDy, outDyX); return }
+    if (stopAt == "bn1") { momentsAt(c.c1pre, wts.bn1, dB1, outDy, outDyX, dyxOff); return }
     dB1 = bnBackwardTrain(c.c1pre, wts.bn1, moments("bn1"), dB1,
       if (full) grad else null, if (full) offOf("bn1.g") else 0)
     if (full) convBackward(c.x0, wts.conv1, dB1, grad, offOf("conv1.w"))
   }
 
-  /** Masked-BCE dz (∂L/∂logit) + summed loss + labeled count. */
-  private def bceDz(logits: Array[Double], y: Array[Double]): (Double, Long, Array[Double]) = {
+  /** The masked-BCE kernel: dz (∂L/∂logit; 0 where unlabeled), `loss0`
+    * plus each labeled element's loss added in class order, and the
+    * labeled count.
+    */
+  def bceDz(logits: Array[Double], y: Array[Double],
+            loss0: Double = 0.0): (Double, Long, Array[Double]) = {
     val k = logits.length
     val dz = Array.ofDim[Double](k)
-    var loss = 0.0
+    var loss = loss0
     var labeled = 0L
     var o = 0
     while (o < k) {
@@ -562,13 +550,14 @@ object TrunkGrad {
     (loss, labeled, dz)
   }
 
-  /** Phase-2 kernel: one row's (Σdy, Σdy·x̂) contribution for `layer`,
-    * given the moments of every BN layer above it. `wts` must carry the
-    * batch stats ([[withBnStats]]).
+  /** Phase-2 kernel: one row's (Σdy, Σdy·x̂) contribution for `layer` into
+    * `outDy(c)`/`outDyX(dyxOff + c)`, given the moments of every BN layer
+    * above it. `wts` must carry the batch stats ([[withBnStats]]).
     */
   def rowBnMoments(window: Array[Array[Float]], y: Array[Double],
                    wts: CnnWeights, moments: Map[String, BnMom], layer: String,
-                   outDy: Array[Double], outDyX: Array[Double]): Unit = {
+                   outDy: Array[Double], outDyX: Array[Double],
+                   dyxOff: Int = 0): Unit = {
     val c = forwardCached(window, wts)
     val (_, labeled, dz) = bceDz(c.logits, y)
     // A zero-label row has dy ≡ 0 only down to the TOPMOST BN layer — its
@@ -577,7 +566,7 @@ object TrunkGrad {
     // with Σ over the whole batch) inject nonzero dy into this row's
     // path, so its lower-layer moments must still be accumulated.
     if (labeled == 0L && layer == BnOrder.last) return
-    backwardWithBatchBn(c, wts, dz, moments, layer, null, outDy, outDyX)
+    backwardWithBatchBn(c, wts, dz, moments, layer, null, outDy, outDyX, dyxOff)
   }
 
   /** Phase-3 kernel: one row's full train-mode-BN gradient, all batch
@@ -593,30 +582,24 @@ object TrunkGrad {
     // dy below, so it still owes conv/BN gradient contributions whenever
     // any OTHER row in the batch carries labels. (With a fully-unlabeled
     // batch all moments are zero and the walk accumulates exact zeros.)
-    backwardWithBatchBn(c, wts, dz, moments, null, grad, null, null)
+    backwardWithBatchBn(c, wts, dz, moments, null, grad, null, null, 0)
     (loss, labeled)
   }
 
+  /** Masked-BCE loss + full-network gradient for one (window, y) row.
+    * `window` is the (T, C_in) normalized matrix; `y` the K targets with
+    * NaN = unlabeled. Gradient SUMS (not means) accumulate into `grad`
+    * (length [[nParams]]); returns (summed element loss, labeled count) —
+    * the partial shape a [[HeadTrainer.SumAgg]] pass sums, so batch means
+    * are taken once, driver-side.
+    */
   def rowGradient(window: Array[Array[Float]], y: Array[Double],
                   wts: CnnWeights, grad: Array[Double]): (Double, Long) = {
     val c = forwardCached(window, wts)
     val k = wts.head.b.length
     val dHid = wts.head.w(0).length
 
-    var loss = 0.0
-    var labeled = 0L
-    val dz = Array.ofDim[Double](k)
-    var o = 0
-    while (o < k) {
-      val yk = y(o)
-      if (!yk.isNaN) {
-        val z = c.logits(o)
-        loss += math.max(z, 0.0) - z * yk + math.log1p(math.exp(-math.abs(z)))
-        dz(o) = 1.0 / (1.0 + math.exp(-z)) - yk
-        labeled += 1L
-      }
-      o += 1
-    }
+    val (loss, labeled, dz) = bceDz(c.logits, y)
     if (labeled == 0L) return (0.0, 0L)
 
     val spec = blockSpec(wts)
@@ -626,7 +609,7 @@ object TrunkGrad {
     // head
     val dPooled = Array.ofDim[Double](dHid)
     val hwOff = offOf("head.w"); val hbOff = offOf("head.b")
-    o = 0
+    var o = 0
     while (o < k) {
       val d = dz(o)
       if (d != 0.0) {

@@ -16,23 +16,30 @@ object VescPipeline {
 
   /** Bundled scorer assets (weights exported once from the reference
     * checkpoint to a neutral parquet table, plus the normalization stats) —
-    * extracted from the classpath so `analyze` works out of the box.
+    * extracted from the classpath to temp files so `analyze` works out of
+    * the box. The temp files are deleted once both are collected.
     */
   def bundled(spark: SparkSession): (CnnScorer.CnnWeights, Array[Double], Array[Double]) = {
+    val extracted = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
     def extract(name: String): String = {
       val in = getClass.getResourceAsStream("/" + name)
       require(in != null, s"bundled resource $name missing")
-      val tmp = java.nio.file.Files.createTempFile("graft_", name)
-      java.nio.file.Files.copy(in, tmp,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      in.close()
-      tmp.toString
+      try {
+        val tmp = java.nio.file.Files.createTempFile("graft_", name)
+        extracted += tmp
+        java.nio.file.Files.copy(in, tmp,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        tmp.toString
+      } finally in.close()
     }
-    val weights = CnnScorer.loadWeights(spark, extract("cnn_weights.parquet"))
-    val stats = Normalizer.load(spark, extract("norm_stats.parquet"))
-    // channel order must match the assembled window matrix (FeatureCols)
-    val (mean, std) = Normalizer.collectStats(stats, VescSchema.FeatureCols)
-    (weights, mean, std)
+    try {
+      val weights = CnnScorer.loadWeights(spark, extract("cnn_weights.parquet"))
+      val stats = Normalizer.load(spark, extract("norm_stats.parquet"))
+      // channel order must match the assembled window matrix (FeatureCols);
+      // `load` is lazy, so the stats file is read here
+      val (mean, std) = Normalizer.collectStats(stats, VescSchema.FeatureCols)
+      (weights, mean, std)
+    } finally extracted.foreach(java.nio.file.Files.deleteIfExists)
   }
 
   /** Production analysis with the bundled model. */

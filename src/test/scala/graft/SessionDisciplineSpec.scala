@@ -5,8 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine has one session factory ([[GraftSession]]), one function
-  * catalog ([[GraftExtensions]]) and one byte reader for its decoders
-  * (`functions/Bytes`). These checks scan the Scala sources so a second
+  * catalog ([[GraftExtensions]]), one byte reader for its decoders
+  * (`functions/Bytes`) and one training loop for its model trainers. These checks scan the Scala sources so a second
   * path cannot grow back:
   *  - only `GraftSession.scala` builds a session;
   *  - only the five registrations whose builder closes over query data
@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - nothing registers a function on whichever session happens to be
   *    active;
   *  - under `functions/`, only `Bytes.scala` defines a multi-byte integer
-  *    reader or a stackless refusal exception.
+  *    reader or a stackless refusal exception;
+  *  - under `vesc/`, the trainers share one sum `Aggregator`
+  *    (`HeadTrainer.SumAgg`), one masked-BCE kernel (`TrunkGrad.bceDz`)
+  *    and one Adam loop (`HeadTrainer.fit`).
   */
 class SessionDisciplineSpec extends AnyFunSuite {
 
@@ -82,5 +85,18 @@ class SessionDisciplineSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"byte reader or refusal signal outside functions/Bytes (call Bytes " +
         s"instead): ${offenders.mkString(", ")}")
+  }
+
+  test("the vesc trainers keep one sum aggregator, one masked BCE and one Adam loop") {
+    val vesc = Paths.get("src/main/scala/graft/vesc")
+    Seq(
+      "extends Aggregator" -> "sum aggregator (HeadTrainer.SumAgg)",
+      "log1p(math.exp(-math.abs(" -> "stable-BCE term (TrunkGrad.bceDz)",
+      "cfg.beta2 *" -> "Adam second-moment update (HeadTrainer.fit)"
+    ).foreach { case (needle, what) =>
+      val at = hits(needle, p => !p.startsWith(vesc))
+      assert(at.size == 1,
+        s"expected one $what under $vesc, found ${at.size}: ${at.mkString(", ")}")
+    }
   }
 }

@@ -465,4 +465,38 @@ class TrunkTrainerSpec extends SparkSuite {
     val b = TrunkGrad.flatten(resumed.weights)
     a.indices.foreach(i => assert(a(i) == b(i), s"param $i diverged after resume"))
   }
+
+  test("batch-stats BN checkpoint + resume replays the straight run bit-exactly") {
+    // train-mode batches move the BN running stats, which the checkpoint
+    // carries next to the flat parameters (TrunkState.bnStats)
+    val trainRows = (0 until 12).map(i => (i.toLong, mkWindow(i), mkY(i)))
+    val valRows = (100 until 104).map(i => (i.toLong, mkWindow(i), mkY(i)))
+    val cfg4 = HeadTrainer.TrainConfig(epochs = 4, batches = 2, patience = 8)
+    val cfg2 = cfg4.copy(epochs = 2)
+
+    val straight = TrunkTrainer.train(toDf(trainRows), toDf(valRows), wts, cfg4,
+      batchStatsBn = true)
+
+    var saved: Option[TrunkTrainer.TrunkState] = None
+    TrunkTrainer.train(toDf(trainRows), toDf(valRows), wts, cfg2,
+      onEpoch = st => saved = Some(st), batchStatsBn = true)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_bn_").toFile
+    try {
+      TrunkTrainer.saveCheckpoint(spark, dir.toString, saved.get)
+      val loaded = TrunkTrainer.loadCheckpoint(spark, dir.toString)
+      assert(loaded.nextEpoch == 2 && loaded.t == saved.get.t)
+      assert(loaded.bnStats == saved.get.bnStats)
+      assert(loaded.bnStats != TrunkTrainer.flattenBnStats(wts), "running stats never moved")
+
+      val resumed = TrunkTrainer.train(toDf(trainRows), toDf(valRows), wts, cfg4,
+        resume = Some(loaded), batchStatsBn = true)
+      assert(resumed.bestVal == straight.bestVal)
+      assert(resumed.bestEpoch == straight.bestEpoch)
+      val a = TrunkGrad.flatten(straight.weights)
+      val b = TrunkGrad.flatten(resumed.weights)
+      a.indices.foreach(i => assert(a(i) == b(i), s"param $i diverged after resume"))
+      assert(TrunkTrainer.flattenBnStats(resumed.weights) ==
+        TrunkTrainer.flattenBnStats(straight.weights), "BN running stats diverged after resume")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 }

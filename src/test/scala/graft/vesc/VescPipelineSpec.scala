@@ -46,4 +46,16 @@ class VescPipelineSpec extends SparkSuite {
     val diffs = t.sliding(2).map(a => a(1) - a(0)).toSeq
     assert(diffs.forall(d => d > 0 && d < 60), s"weird spacing: ${diffs.take(5)}")
   }
+
+  test("bundled deletes the asset files it extracts to java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val asset = """graft_.*(cnn_weights|norm_stats)\.parquet""".r
+    def assets(): Set[String] =
+      tmp.list().toSet.filter(n => asset.pattern.matcher(n).matches())
+    val before = assets()
+    val (_, mean, std) = VescPipeline.bundled(spark)
+    assert(mean.length == VescSchema.FeatureCols.length && std.length == mean.length)
+    val left = assets() -- before
+    assert(left.isEmpty, s"bundled left ${left.mkString(", ")} in $tmp")
+  }
 }

@@ -47,7 +47,8 @@ BN_NAME = {"b1": "bn1", "rb": "resbn", "b2": "bn2", "b3": "bn3", "b4": "bn4"}
 
 def batch_stats(pres, stats_dtype):
     """Per-channel (mean, biased var) over a list of (C,T) f32 arrays,
-    accumulated in float64 exactly like the engine's BnSumsAgg, then cast
+    accumulated in float64 exactly like the engine's gradPassBn stat pass
+    (TrunkGrad.rowPreBnSums into a HeadTrainer.SumAgg buffer), then cast
     to stats_dtype (float32 in production, float64 for the FD check)."""
     cat = np.concatenate([p.astype(np.float64) for p in pres], axis=1)
     m = cat.shape[1]
