@@ -28,6 +28,11 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // one VescPipeline.analyze generates ~113 classes; at Spark's default
+      // of 100 the generated-class LRU evicts them within the analysis and
+      // every later upload recompiles ~106 of them (2 s of Janino). A static
+      // conf: it must be set before the session's first query.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

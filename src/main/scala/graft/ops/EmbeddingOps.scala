@@ -263,23 +263,6 @@ object EmbeddingOps {
     takeTopK(scored, idCol, k)
   }
 
-  /** [[ivfTopKProbed]] with the codebook probe built in: train nothing,
-    * probe the `nprobe` nearest [[meanCentroids]]-style centroids.
-    *
-    * Each invocation scores the codebook afresh (an O(queries × √n)
-    * broadcast product — cheap, but not free). Callers sweeping k or
-    * nprobe should call [[probeAssignments]] ONCE at the largest nprobe,
-    * materialize it, and rank-filter into [[ivfTopKProbed]] per setting —
-    * exactly what the `embed_ann_recall` curve does.
-    */
-  def ivfTopKMultiProbe(corpus: DataFrame, queries: DataFrame, idCol: String,
-                        vecCol: String, clusterCol: String,
-                        centroids: DataFrame, k: Int, nprobe: Int,
-                        roundDigits: Int = 4): DataFrame =
-    ivfTopKProbed(corpus, queries, idCol, vecCol, clusterCol,
-      probeAssignments(queries, idCol, vecCol, centroids, nprobe, roundDigits),
-      k, roundDigits)
-
   /** Int8-style scalar-quantized ANN with exact rerank — the memory-
     * bandwidth scale path: candidate generation runs on vectors quantized
     * against ONE global symmetric scale (127/max|x| over the corpus — a

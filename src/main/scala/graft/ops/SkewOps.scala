@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-mitigation utilities for large joins and aggregations.
+/** Skew-mitigation utilities for large joins.
   *
   * AQE's skew-join splitting handles most runtime skew; salting is the
   * plan-level tool for the pathological case — one join key carrying a
@@ -26,16 +26,4 @@ object SkewOps {
       explode(sequence(lit(0), lit(saltFactor - 1))))
     salted.join(replicated, key :+ "__salt").drop("__salt")
   }
-
-  /** Two-stage skew-safe aggregation: partial aggregate on (key, salt),
-    * then final on key. For algebraic aggregates Spark's own partial
-    * aggregation already does this; use for positional/ordered aggregates
-    * (collect_list shaping) where one key would otherwise serialize.
-    */
-  def twoStageCount(df: DataFrame, key: Seq[String], saltFactor: Int): DataFrame =
-    df.withColumn("__salt", pmod(hash(df.columns.map(col): _*), lit(saltFactor)))
-      .groupBy((key :+ "__salt").map(col): _*)
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(key.map(col): _*)
-      .agg(sum(col("__partial")).as("n"))
 }

@@ -19,13 +19,32 @@ import org.apache.spark.sql.types._
   * once from the reference checkpoint — no torch anywhere. Scoring runs as
   * `mapPartitions` over assembled windows with broadcast weights+stats:
   * embarrassingly parallel, no shuffle, ~100 KB of weights per executor.
+  *
+  * One forward kernel serves scoring and training: [[Trunk]] runs the
+  * layer sequence over flat (C, T) float arrays, `conv1d` splits the
+  * padded edge steps from a branch-free interior that accumulates four
+  * output steps at once, and [[TrunkGrad]]'s backward reads the buffers a
+  * [[Trunk]] leaves behind. Each output element still adds the same terms
+  * in the same order as the plain loop nest, so the result is bit-exact
+  * (see the kernel section below).
   */
 object CnnScorer {
 
   final case class ConvW(w: Array[Array[Array[Float]]], b: Array[Float],
-                         dilation: Int, padding: Int)
+                         dilation: Int, padding: Int) {
+    def cIn: Int = w(0).length
+    def k: Int = w(0)(0).length
+    /** Output length for an input of `t` steps. */
+    def outLen(t: Int): Int = t + 2 * padding - dilation * (k - 1)
+    /** `w` in the kernel's layout: w(o)(ci)(kk) at `(o · cIn + ci) · k + kk`. */
+    @transient lazy val flat: Array[Float] = w.flatten.flatten
+  }
   final case class BnW(gamma: Array[Float], beta: Array[Float],
-                       mean: Array[Float], variance: Array[Float], eps: Float)
+                       mean: Array[Float], variance: Array[Float], eps: Float) {
+    /** 1/√(var + eps) per channel, computed in double and rounded once. */
+    @transient lazy val inv: Array[Float] =
+      variance.map(v => (1.0 / math.sqrt(v.toDouble + eps.toDouble)).toFloat)
+  }
   final case class LinearW(w: Array[Array[Float]], b: Array[Float])
 
   /** All learned parameters in forward order. */
@@ -37,110 +56,195 @@ object CnnScorer {
       conv4: ConvW, bn4: BnW,
       head: LinearW)
 
-  // ---- numerics (float32 like the reference; x is (C, T)) ----
+  // ---- the forward kernel (float32 like the reference) ----
+  //
+  // Activations are flat (C, T) arrays: channel c, step t at c·T + t.
+  // Every output element is computed with the same float32 operations in
+  // the same order as a plain nested loop over (o, t, ci, kk) — conv:
+  // bias, then w·x for (ci, kk) ascending with out-of-range taps skipped;
+  // BN: ((x − mean)·inv)·γ + β; ReLU: x > 0 ? x : 0 — and the JVM neither
+  // reassociates float arithmetic nor fuses a multiply and an add, so
+  // every activation, score and gradient is bit-identical to that loop
+  // nest (CnnKernelSpec keeps it as the oracle).
 
-  def conv1d(x: Array[Array[Float]], cw: ConvW): Array[Array[Float]] = {
-    val cIn = x.length
-    val t = x(0).length
-    val k = cw.w(0)(0).length
-    val span = cw.dilation * (k - 1)
-    val tOut = t + 2 * cw.padding - span
-    val out = Array.ofDim[Float](cw.w.length, tOut)
+  /** Conv layer over flat activations: `x` is (cIn, t), `out` receives
+    * (cOut, tOut) and tOut is returned. For 3-tap filters (every layer of
+    * this model) output channels go in pairs and steps whose taps all fall
+    * inside [0, t) go four at a time, one accumulator per (channel, step):
+    * a weight load serves four outputs, an input load two, and the eight
+    * chains of adds overlap. Padded edge steps, the remainder and other
+    * filter sizes take [[edgeStep]]. Either way an output adds the same
+    * terms in the same order.
+    */
+  def conv1d(x: Array[Float], t: Int, cw: ConvW, out: Array[Float]): Int = {
+    val w = cw.flat
+    val cIn = cw.cIn; val k = cw.k; val d = cw.dilation; val p = cw.padding
+    val cOut = cw.b.length
+    val tOut = cw.outLen(t)
+    val hi = t + p - d * (k - 1) // steps in [p, hi) read no padding
     var o = 0
-    while (o < cw.w.length) {
-      val wo = cw.w(o)
+    while (o < cOut) {
+      val o1 = math.min(o + 1, cOut - 1) // an odd last channel pairs with itself
+      val wA = o * cIn * k; val wB = o1 * cIn * k
+      val bA = cw.b(o); val bB = cw.b(o1)
       var ti = 0
       while (ti < tOut) {
-        var acc = cw.b(o)
-        var ci = 0
-        while (ci < cIn) {
-          val xi = x(ci)
-          val wk = wo(ci)
-          var kk = 0
-          while (kk < k) {
-            val src = ti - cw.padding + kk * cw.dilation
-            if (src >= 0 && src < t) acc += wk(kk) * xi(src)
-            kk += 1
+        if (k == 3 && ti >= p && ti + 4 <= hi) {
+          var a0 = bA; var a1 = bA; var a2 = bA; var a3 = bA
+          var b0 = bB; var b1 = bB; var b2 = bB; var b3 = bB
+          var ci = 0
+          while (ci < cIn) {
+            var kk = 0
+            while (kk < 3) { // a constant trip count: the JIT unrolls it
+              val u = w(wA + ci * 3 + kk); val v = w(wB + ci * 3 + kk)
+              val s = ci * t + ti - p + kk * d
+              val x0 = x(s); val x1 = x(s + 1); val x2 = x(s + 2); val x3 = x(s + 3)
+              a0 += u * x0; a1 += u * x1; a2 += u * x2; a3 += u * x3
+              b0 += v * x0; b1 += v * x1; b2 += v * x2; b3 += v * x3
+              kk += 1
+            }
+            ci += 1
           }
-          ci += 1
+          val oa = o * tOut + ti; val ob = o1 * tOut + ti
+          out(oa) = a0; out(oa + 1) = a1; out(oa + 2) = a2; out(oa + 3) = a3
+          out(ob) = b0; out(ob + 1) = b1; out(ob + 2) = b2; out(ob + 3) = b3
+          ti += 4
+        } else {
+          out(o * tOut + ti) = edgeStep(x, t, cw, wA, bA, ti)
+          out(o1 * tOut + ti) = edgeStep(x, t, cw, wB, bB, ti)
+          ti += 1
         }
-        out(o)(ti) = acc
-        ti += 1
       }
-      o += 1
+      o += 2
     }
-    out
+    tOut
   }
 
-  def batchNorm(x: Array[Array[Float]], bn: BnW): Array[Array[Float]] = {
-    val out = Array.ofDim[Float](x.length, x(0).length)
-    var c = 0
-    while (c < x.length) {
-      val inv = (1.0 / math.sqrt(bn.variance(c).toDouble + bn.eps.toDouble)).toFloat
-      val g = bn.gamma(c); val b = bn.beta(c); val m = bn.mean(c)
-      var t = 0
-      while (t < x(c).length) {
-        out(c)(t) = (x(c)(t) - m) * inv * g + b
-        t += 1
+  /** One output step that reads padding: only the taps kk in
+    * [kLo, kHi), those landing inside [0, t), are added.
+    */
+  private def edgeStep(x: Array[Float], t: Int, cw: ConvW, wo: Int, bias: Float,
+                       ti: Int): Float = {
+    val w = cw.flat
+    val k = cw.k; val d = cw.dilation; val s0 = ti - cw.padding
+    var kLo = 0
+    while (kLo < k && s0 + kLo * d < 0) kLo += 1
+    var kHi = k
+    while (kHi > kLo && s0 + (kHi - 1) * d >= t) kHi -= 1
+    var acc = bias
+    var ci = 0
+    while (ci < cw.cIn) {
+      var kk = kLo
+      while (kk < kHi) {
+        acc += w(wo + ci * k + kk) * x(ci * t + s0 + kk * d)
+        kk += 1
       }
-      c += 1
+      ci += 1
     }
-    out
+    acc
   }
 
-  def relu(x: Array[Array[Float]]): Array[Array[Float]] =
-    x.map(_.map(v => if (v > 0f) v else 0f))
+  private def relu(v: Float): Float = if (v > 0f) v else 0f
 
-  def addInPlace(a: Array[Array[Float]], b: Array[Array[Float]]): Array[Array[Float]] = {
+  /** out = ReLU(BN(pre)) elementwise over flat (C, t). */
+  private def bnRelu(pre: Array[Float], t: Int, bn: BnW, out: Array[Float]): Unit = {
+    val inv = bn.inv
     var c = 0
-    while (c < a.length) {
-      var t = 0
-      while (t < a(c).length) { a(c)(t) += b(c)(t); t += 1 }
+    while (c < bn.gamma.length) {
+      val m = bn.mean(c); val iv = inv(c); val g = bn.gamma(c); val b = bn.beta(c)
+      var i = c * t
+      val end = i + t
+      while (i < end) { out(i) = relu((pre(i) - m) * iv * g + b); i += 1 }
       c += 1
     }
-    a
+  }
+
+  /** The trunk's one layer sequence, over buffers that are reused from
+    * window to window (reallocated only when the window length changes).
+    * After [[run]] the buffers hold every activation — the cache that
+    * [[TrunkGrad]]'s backward reads: conv outputs before BN (`c1`, `r2`,
+    * `c2`, `c3`, `c4`) and layer outputs after ReLU, whose sign is the
+    * sign of the pre-ReLU value. Not thread-safe: one per task.
+    */
+  final class Trunk(val wts: CnnWeights) {
+    /** Input and layer lengths: x0 (t0), conv1 and the residual block
+      * (t1), conv2 (t2), conv3 (t3), conv4 (t4).
+      */
+    private[vesc] var t0, t1, t2, t3, t4 = -1
+    private[vesc] var x0, c1, h1, r1, r2, blk, h2, c2, h3, c3, h4, c4, h5: Array[Float] = _
+    val pooled = new Array[Float](wts.conv4.b.length)
+
+    private def alloc(t: Int): Unit = {
+      t0 = t
+      t1 = wts.conv1.outLen(t0); t2 = wts.conv2.outLen(t1)
+      t3 = wts.conv3.outLen(t2); t4 = wts.conv4.outLen(t3)
+      def buf(cw: ConvW, len: Int) = new Array[Float](cw.b.length * len)
+      x0 = new Array[Float](wts.conv1.cIn * t0)
+      c1 = buf(wts.conv1, t1); h1 = buf(wts.conv1, t1)
+      r1 = buf(wts.resConv1, t1); r2 = buf(wts.resConv2, t1)
+      blk = buf(wts.resConv2, t1); h2 = buf(wts.resConv2, t1)
+      c2 = buf(wts.conv2, t2); h3 = buf(wts.conv2, t2)
+      c3 = buf(wts.conv3, t3); h4 = buf(wts.conv3, t3)
+      c4 = buf(wts.conv4, t4); h5 = buf(wts.conv4, t4)
+    }
+
+    /** Input (T, C_in) window matrix → pooled feature vector (the
+      * `pooled` buffer, overwritten by the next call).
+      */
+    def run(window: Array[Array[Float]]): Array[Float] = {
+      val cIn = wts.conv1.cIn
+      require(window(0).length == cIn, s"window has ${window(0).length} channels, the model reads $cIn")
+      if (window.length != t0) alloc(window.length)
+      for (i <- 0 until t0; c <- 0 until cIn) x0(c * t0 + i) = window(i)(c)
+      conv1d(x0, t0, wts.conv1, c1); bnRelu(c1, t1, wts.bn1, h1)
+      // ResBlock: relu(x + BN(conv2(relu(conv1(x)))))
+      conv1d(h1, t1, wts.resConv1, r1)
+      for (i <- r1.indices) r1(i) = relu(r1(i))
+      conv1d(r1, t1, wts.resConv2, r2); bnRelu(r2, t1, wts.resBn, blk)
+      for (i <- h2.indices) h2(i) = relu(blk(i) + h1(i))
+      conv1d(h2, t1, wts.conv2, c2); bnRelu(c2, t2, wts.bn2, h3)
+      conv1d(h3, t2, wts.conv3, c3); bnRelu(c3, t3, wts.bn3, h4)
+      conv1d(h4, t3, wts.conv4, c4); bnRelu(c4, t4, wts.bn4, h5)
+      // AdaptiveAvgPool1d(1): mean over the remaining steps
+      for (c <- pooled.indices) {
+        var s = 0f
+        for (i <- c * t4 until (c + 1) * t4) s += h5(i)
+        pooled(c) = s / t4
+      }
+      pooled
+    }
+  }
+
+  /** Linear head in float32: b(o), then w(o)(j)·pooled(j) for j ascending. */
+  def logits(pooled: Array[Float], head: LinearW): Array[Float] =
+    Array.tabulate(head.b.length) { o =>
+      val row = head.w(o)
+      var acc = head.b(o)
+      var j = 0
+      while (j < row.length) { acc += row(j) * pooled(j); j += 1 }
+      acc
+    }
+
+  def sigmoid(z: Float): Float = (1.0 / (1.0 + math.exp(-z.toDouble))).toFloat
+
+  /** One conv layer on a nested (C, T) matrix, through the kernel. */
+  def conv1d(x: Array[Array[Float]], cw: ConvW): Array[Array[Float]] = {
+    val t = x(0).length
+    val out = new Array[Float](cw.b.length * cw.outLen(t))
+    val tOut = conv1d(x.flatten, t, cw, out)
+    out.grouped(tOut).toArray
   }
 
   /** Convolutional trunk only: input (T, C_in) window matrix → 64-d pooled
     * feature vector (everything before the Linear head). The head trainer
     * fine-tunes on exactly these features with the trunk frozen.
     */
-  def trunkPooled(window: Array[Array[Float]], wts: CnnWeights): Array[Float] = {
-    // (T, C) → (C, T)
-    val cIn = window(0).length
-    val t = window.length
-    val x0 = Array.ofDim[Float](cIn, t)
-    var i = 0
-    while (i < t) { var c = 0; while (c < cIn) { x0(c)(i) = window(i)(c); c += 1 }; i += 1 }
-
-    var h = relu(batchNorm(conv1d(x0, wts.conv1), wts.bn1))
-    // ResBlock: relu(x + BN(conv2(relu(conv1(x)))))
-    val blk = relu(batchNorm(
-      conv1d(relu(conv1d(h, wts.resConv1)), wts.resConv2), wts.resBn))
-    h = relu(addInPlace(blk, h))
-    h = relu(batchNorm(conv1d(h, wts.conv2), wts.bn2))
-    h = relu(batchNorm(conv1d(h, wts.conv3), wts.bn3))
-    h = relu(batchNorm(conv1d(h, wts.conv4), wts.bn4))
-
-    // AdaptiveAvgPool1d(1): mean over remaining time steps
-    h.map { ch =>
-      var s = 0f; var j = 0
-      while (j < ch.length) { s += ch(j); j += 1 }
-      s / ch.length
-    }
-  }
+  def trunkPooled(window: Array[Array[Float]], wts: CnnWeights): Array[Float] =
+    new Trunk(wts).run(window)
 
   /** Full forward pass: input (T, C_in) window matrix → 13 sigmoid scores. */
-  def forward(window: Array[Array[Float]], wts: CnnWeights): Array[Float] = {
-    val pooled = trunkPooled(window, wts)
-    // Linear + sigmoid
-    wts.head.w.zipWithIndex.map { case (row, o) =>
-      var acc = wts.head.b(o)
-      var j = 0
-      while (j < row.length) { acc += row(j) * pooled(j); j += 1 }
-      (1.0 / (1.0 + math.exp(-acc.toDouble))).toFloat
-    }
-  }
+  def forward(window: Array[Array[Float]], wts: CnnWeights): Array[Float] =
+    logits(trunkPooled(window, wts), wts.head).map(sigmoid)
 
   /** ffill-then-zero inside the window, per channel, float32 (reference
     * model/vesc_dataset.py:134-137 — author-flagged quirk, kept for parity).
@@ -190,7 +294,8 @@ object CnnScorer {
   }
 
   /** Score assembled windows: z-score normalize (broadcast stats), forward
-    * pass, one row per window with 13 score columns.
+    * pass, one row per window with 13 score columns. Each partition reuses
+    * one [[Trunk]]'s buffers for all its windows.
     *
     * The per-window forward pass is a typed `Dataset.mapPartitions` with a
     * Row encoder — NOT `df.rdd` + `createDataFrame`, which would leave
@@ -212,9 +317,10 @@ object CnnScorer {
 
     projected.mapPartitions { it =>
       val w = bWts.value; val m = bMean.value; val s = bStd.value
+      val trunk = new Trunk(w)
       it.map { row =>
         val feats = row.getAs[scala.collection.Seq[scala.collection.Seq[Any]]](3)
-        val scores = forward(normalizedWindow(feats, m, s), w)
+        val scores = logits(trunk.run(normalizedWindow(feats, m, s)), w.head).map(sigmoid)
         Row.fromSeq(Seq(row.get(0), row.get(1), row.get(2)) ++ scores.toSeq)
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))

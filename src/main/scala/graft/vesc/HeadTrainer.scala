@@ -311,13 +311,14 @@ object HeadTrainer {
     * label means; all-NaN when the source logs carry no labels, matching
     * model/vesc_dataset.py:149-158), where `out` is `perWindow` of the
     * window's [[CnnScorer.normalizedWindow]] — the same `mapPartitions`
-    * seam as [[CnnScorer.score]], broadcast stats, no shuffle. `id` is
-    * `xxhash64(ride_id, window_start)`, the batch-assignment key.
+    * seam as [[CnnScorer.score]], broadcast stats, no shuffle. `perWindow`
+    * is made once per partition, so it can keep buffers across windows.
+    * `id` is `xxhash64(ride_id, window_start)`, the batch-assignment key.
     */
   private[vesc] def modelInputs(windows: DataFrame, mean: Array[Double],
                                 std: Array[Double], confCols: Seq[String],
                                 hasLabels: Boolean, out: StructField)
-                               (perWindow: Array[Array[Float]] => Any): DataFrame = {
+                               (perWindow: () => Array[Array[Float]] => Any): DataFrame = {
     val sc = windows.sparkSession.sparkContext
     val bMean = sc.broadcast(mean.map(_.toFloat))
     val bStd = sc.broadcast(std.map(_.toFloat))
@@ -334,10 +335,11 @@ object HeadTrainer {
       StructField("y", ArrayType(DoubleType))))
     val rows = projected.mapPartitions { it =>
       val mn = bMean.value; val sd = bStd.value
+      val toValue = perWindow()
       it.map { row =>
         val cells = row.getAs[scala.collection.Seq[scala.collection.Seq[Any]]](2)
         val mat = CnnScorer.normalizedWindow(cells, mn, sd)
-        Row(row.get(0), row.get(1), perWindow(mat),
+        Row(row.get(0), row.get(1), toValue(mat),
           row.getAs[scala.collection.Seq[Double]](3).toSeq)
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
@@ -354,8 +356,9 @@ object HeadTrainer {
                     hasLabels: Boolean = true): DataFrame = {
     val bWts = windows.sparkSession.sparkContext.broadcast(wts)
     modelInputs(windows, mean, std, confCols, hasLabels,
-      StructField("feat", ArrayType(DoubleType))) { mat =>
-      CnnScorer.trunkPooled(mat, bWts.value).map(_.toDouble).toSeq
+      StructField("feat", ArrayType(DoubleType))) { () =>
+      val trunk = new CnnScorer.Trunk(bWts.value)
+      mat => trunk.run(mat).map(_.toDouble).toSeq
     }
   }
 }

@@ -35,9 +35,13 @@ object RawLogReader {
 
     // F1: date from filename → midnight UTC; F3: ts_utc = midnight + ms_today
     val datePart = regexp_extract(col("__file"), "(\\d{4})-(\\d{2})-(\\d{2})", 0)
-    // F2: ride id from parent folder name, else explicit, else unknown
-    val parent = regexp_extract(col("__file"), "([^/]+)/[^/]+$", 1)
-    val rideNum = regexp_extract(lower(parent), "ride[\\s_-]*log[\\s_-]*(\\d+)", 1)
+    // F2: ride id from parent folder name, else explicit, else unknown;
+    // input_file_name() is a URI, so a "ride log 7" folder reads "ride%20log%207"
+    val parent = regexp_extract(url_decode(col("__file")), "([^/]+)/[^/]+$", 1)
+    // (?i) on the raw name instead of lower(): the pattern is ASCII, so the
+    // ids are the same, and Spark 4's lower() initializes ICU (~2 s, once
+    // per JVM) on the first upload's critical path
+    val rideNum = regexp_extract(parent, "(?i)ride[\\s_-]*log[\\s_-]*(\\d+)", 1)
     val inferredRide = when(rideNum =!= "",
       format_string("ride_%02d", rideNum.cast("int"))).otherwise("unknown_ride_id")
 

@@ -1,6 +1,6 @@
 package graft.vesc
 
-import CnnScorer.{BnW, CnnWeights, ConvW, LinearW}
+import CnnScorer.{BnW, CnnWeights, ConvW, LinearW, Trunk}
 
 /** Full-network backpropagation for the reference CNN (M7 extension:
   * model/model_training.py:61-180): per-window gradient of the masked BCE
@@ -21,11 +21,16 @@ import CnnScorer.{BnW, CnnWeights, ConvW, LinearW}
   *    direction plus a final gradient pass — see the train-mode section
   *    below and [[TrunkTrainer.gradPassBn]].
   *
-  * Numerics: forward runs in float32 exactly like [[CnnScorer]] (same op
-  * order — TrunkTrainerSpec asserts the cached forward reproduces
-  * `CnnScorer.forward` bit-for-bit); backward accumulates in double.
-  * TrunkTrainerSpec verifies the analytic gradient against central finite
-  * differences of an independent double-precision forward replica.
+  * Numerics: the forward IS [[CnnScorer]]'s — one [[CnnScorer.Trunk]]
+  * per row, whose flat (C, T) float32 buffers (conv outputs before BN,
+  * layer outputs after ReLU) are the activation cache the backward reads;
+  * a pre-ReLU sign is read off the post-ReLU value. The backward indexes
+  * the same flat layout, (c, t) at c·T + t, and accumulates in double in
+  * the same (o, t, ci, kk) order as the plain nested loops, so gradients
+  * are bit-identical to them. CnnKernelSpec pins the forward
+  * bit-for-bit against the nested-array oracle; TrunkTrainerSpec verifies
+  * the analytic gradient against central finite differences of an
+  * independent double-precision forward replica.
   */
 object TrunkGrad {
 
@@ -97,117 +102,52 @@ object TrunkGrad {
     CnnWeights(c1, b1, r1, r2, rb, c2, b2, c3, b3, c4, b4, LinearW(hw, hb))
   }
 
-  // ---- forward with caches (float32, same op order as CnnScorer) ----
+  // ---- forward: the scorer's kernel, whose buffers are the cache ----
 
-  private final class Cache {
-    var x0: Array[Array[Float]] = _        // (C_in, T)
-    var c1pre: Array[Array[Float]] = _     // conv1 out
-    var b1out: Array[Array[Float]] = _     // bn1 out (pre-relu)
-    var h1: Array[Array[Float]] = _        // relu
-    var r1pre: Array[Array[Float]] = _     // resConv1 out
-    var r1post: Array[Array[Float]] = _    // relu
-    var r2pre: Array[Array[Float]] = _     // resConv2 out
-    var rbnOut: Array[Array[Float]] = _    // resBn out (pre-relu)
-    var s2: Array[Array[Float]] = _        // h1 + relu(rbnOut), pre-relu
-    var h2: Array[Array[Float]] = _
-    var c2pre: Array[Array[Float]] = _
-    var b2out: Array[Array[Float]] = _
-    var h3: Array[Array[Float]] = _
-    var c3pre: Array[Array[Float]] = _
-    var b3out: Array[Array[Float]] = _
-    var h4: Array[Array[Float]] = _
-    var c4pre: Array[Array[Float]] = _
-    var b4out: Array[Array[Float]] = _
-    var h5: Array[Array[Float]] = _
-    var pooled: Array[Float] = _
-    var logits: Array[Double] = _
+  private def forwardCached(window: Array[Array[Float]], wts: CnnWeights): Trunk = {
+    val c = new Trunk(wts); c.run(window); c
   }
 
-  private def forwardCached(window: Array[Array[Float]], wts: CnnWeights): Cache = {
-    import CnnScorer.{batchNorm, conv1d, relu}
-    val c = new Cache
-    val cIn = window(0).length
-    val t = window.length
-    c.x0 = Array.ofDim[Float](cIn, t)
-    var i = 0
-    while (i < t) {
-      var ch = 0
-      while (ch < cIn) { c.x0(ch)(i) = window(i)(ch); ch += 1 }
-      i += 1
-    }
-    c.c1pre = conv1d(c.x0, wts.conv1)
-    c.b1out = batchNorm(c.c1pre, wts.bn1)
-    c.h1 = relu(c.b1out)
-    c.r1pre = conv1d(c.h1, wts.resConv1)
-    c.r1post = relu(c.r1pre)
-    c.r2pre = conv1d(c.r1post, wts.resConv2)
-    c.rbnOut = batchNorm(c.r2pre, wts.resBn)
-    val blk = relu(c.rbnOut)
-    // same accumulation order as CnnScorer.addInPlace(blk, h): blk + h1
-    c.s2 = Array.tabulate(blk.length, blk(0).length)((ch, ti) => blk(ch)(ti) + c.h1(ch)(ti))
-    c.h2 = relu(c.s2)
-    c.c2pre = conv1d(c.h2, wts.conv2)
-    c.b2out = batchNorm(c.c2pre, wts.bn2)
-    c.h3 = relu(c.b2out)
-    c.c3pre = conv1d(c.h3, wts.conv3)
-    c.b3out = batchNorm(c.c3pre, wts.bn3)
-    c.h4 = relu(c.b3out)
-    c.c4pre = conv1d(c.h4, wts.conv4)
-    c.b4out = batchNorm(c.c4pre, wts.bn4)
-    c.h5 = relu(c.b4out)
-    c.pooled = c.h5.map { ch =>
-      var s = 0f; var j = 0
-      while (j < ch.length) { s += ch(j); j += 1 }
-      s / ch.length
-    }
-    c.logits = wts.head.w.zipWithIndex.map { case (row, o) =>
-      var acc = wts.head.b(o)
-      var j = 0
-      while (j < row.length) { acc += row(j) * c.pooled(j); j += 1 }
-      acc.toDouble
-    }
-    c
-  }
+  private def logits(c: Trunk): Array[Double] =
+    CnnScorer.logits(c.pooled, c.wts.head).map(_.toDouble)
 
   /** Reproduces [[CnnScorer.forward]] through the cached path (spec hook). */
   def forwardScores(window: Array[Array[Float]], wts: CnnWeights): Array[Float] =
-    forwardCached(window, wts).logits.map(z => (1.0 / (1.0 + math.exp(-z))).toFloat)
+    CnnScorer.logits(forwardCached(window, wts).pooled, wts.head).map(CnnScorer.sigmoid)
 
-  // ---- backward (double accumulation) ----
+  // ---- backward (double accumulation, flat (C, T) layout like the forward) ----
 
-  /** dL/dInput of a conv layer plus accumulation of dW/db into `gw`/`gb`
-    * (flat offsets). `dy` is (C_out, T_out); returns (C_in, T_in).
+  /** dL/dInput of a conv layer whose (C_in, t) input was `x`; `dy` is
+    * (C_out, tOut), the result (C_in, t). With `grad` non-null dW/db also
+    * accumulate into it from `off`; the moment passes pass null, they only
+    * propagate dy downward.
     */
-  private def convBackward(x: Array[Array[Float]], cw: ConvW,
-                           dy: Array[Array[Double]],
-                           grad: Array[Double], off: Int): Array[Array[Double]] = {
-    val cOut = cw.w.length
-    val cIn = x.length
-    val k = cw.w(0)(0).length
-    val t = x(0).length
-    val tOut = dy(0).length
-    val dx = Array.ofDim[Double](cIn, t)
-    val wOff = off
+  private def convBackward(x: Array[Float], t: Int, cw: ConvW, dy: Array[Double],
+                           grad: Array[Double], off: Int): Array[Double] = {
+    val cOut = cw.b.length
+    val cIn = cw.cIn
+    val k = cw.k
+    val w = cw.flat
+    val tOut = cw.outLen(t)
+    val dx = new Array[Double](cIn * t)
+    val acc = grad != null
     val bOff = off + cOut * cIn * k
     var o = 0
     while (o < cOut) {
-      val dyo = dy(o)
       var ti = 0
       while (ti < tOut) {
-        val d = dyo(ti)
+        val d = dy(o * tOut + ti)
         if (d != 0.0) {
-          grad(bOff + o) += d
+          if (acc) grad(bOff + o) += d
           var ci = 0
           while (ci < cIn) {
-            val xi = x(ci)
-            val dxi = dx(ci)
-            val base = wOff + (o * cIn + ci) * k
+            val wi = (o * cIn + ci) * k
             var kk = 0
             while (kk < k) {
               val src = ti - cw.padding + kk * cw.dilation
               if (src >= 0 && src < t) {
-                grad(base + kk) += d * xi(src)
-                dxi(src) += cw.w(o)(ci)(kk) * d
+                if (acc) grad(off + wi + kk) += d * x(ci * t + src)
+                dx(ci * t + src) += w(wi + kk) * d
               }
               kk += 1
             }
@@ -222,12 +162,11 @@ object TrunkGrad {
   }
 
   /** Frozen-stats BN backward: dγ/dβ accumulate into `grad`, returns dx. */
-  private def bnBackward(xPre: Array[Array[Float]], bn: BnW,
-                         dy: Array[Array[Double]],
-                         grad: Array[Double], off: Int): Array[Array[Double]] = {
-    val cN = xPre.length
-    val t = xPre(0).length
-    val dx = Array.ofDim[Double](cN, t)
+  private def bnBackward(xPre: Array[Float], t: Int, bn: BnW,
+                         dy: Array[Double],
+                         grad: Array[Double], off: Int): Array[Double] = {
+    val cN = bn.gamma.length
+    val dx = new Array[Double](cN * t)
     val gOff = off
     val bOff = off + cN
     var c = 0
@@ -235,24 +174,32 @@ object TrunkGrad {
       val inv = 1.0 / math.sqrt(bn.variance(c).toDouble + bn.eps.toDouble)
       val g = bn.gamma(c).toDouble
       val m = bn.mean(c).toDouble
-      var ti = 0
-      while (ti < t) {
-        val d = dy(c)(ti)
-        grad(gOff + c) += d * (xPre(c)(ti) - m) * inv
+      var i = c * t
+      while (i < (c + 1) * t) {
+        val d = dy(i)
+        grad(gOff + c) += d * (xPre(i) - m) * inv
         grad(bOff + c) += d
-        dx(c)(ti) = d * inv * g
-        ti += 1
+        dx(i) = d * inv * g
+        i += 1
       }
       c += 1
     }
     dx
   }
 
-  /** dy masked by the sign of the PRE-relu activation. */
-  private def reluBackward(pre: Array[Array[Float]],
-                           dy: Array[Array[Double]]): Array[Array[Double]] =
-    Array.tabulate(pre.length, pre(0).length)((c, t) =>
-      if (pre(c)(t) > 0f) dy(c)(t) else 0.0)
+  /** dy masked by the sign of the pre-ReLU activation, read from the
+    * post-ReLU one (x > 0 exactly when relu(x) > 0).
+    */
+  private def reluBackward(post: Array[Float], dy: Array[Double]): Array[Double] =
+    Array.tabulate(dy.length)(i => if (post(i) > 0f) dy(i) else 0.0)
+
+  /** The pooled gradient spread over the last layer's t4 steps. */
+  private def unpool(dPooled: Array[Double], t4: Int): Array[Double] =
+    Array.tabulate(dPooled.length * t4)(i => dPooled(i / t4) / t4)
+
+  /** Residual join h2 = relu(h1 + blk): dh1 = skip path + through-block path. */
+  private def addGrad(a: Array[Double], b: Array[Double]): Array[Double] =
+    Array.tabulate(a.length)(i => a(i) + b(i))
 
   /** Forward-only masked-BCE loss of one row: the same cached forward and
     * [[bceDz]] as [[rowGradient]] (per-row loss bit-identical) with no
@@ -261,7 +208,7 @@ object TrunkGrad {
     */
   def rowLoss(window: Array[Array[Float]], y: Array[Double],
               wts: CnnWeights): (Double, Long) = {
-    val (loss, labeled, _) = bceDz(forwardCached(window, wts).logits, y)
+    val (loss, labeled, _) = bceDz(logits(forwardCached(window, wts)), y)
     (loss, labeled)
   }
 
@@ -307,7 +254,7 @@ object TrunkGrad {
 
   /** Weights with the given layers' BN mean/variance slots replaced by
     * batch statistics — the forward then IS the train-mode forward for
-    * those layers, through the unchanged [[CnnScorer.batchNorm]] path.
+    * those layers, through the unchanged [[CnnScorer.Trunk]] kernel.
     */
   def withBnStats(wts: CnnWeights,
                   stats: Map[String, (Array[Float], Array[Float])]): CnnWeights = {
@@ -319,12 +266,13 @@ object TrunkGrad {
       bn4 = sub("bn4", wts.bn4))
   }
 
-  private def preActOf(c: Cache, layer: String): Array[Array[Float]] = layer match {
-    case "bn1" => c.c1pre
-    case "resbn" => c.r2pre
-    case "bn2" => c.c2pre
-    case "bn3" => c.c3pre
-    case "bn4" => c.c4pre
+  /** `layer`'s pre-BN input (the conv output) and its length. */
+  private def preActOf(c: Trunk, layer: String): (Array[Float], Int) = layer match {
+    case "bn1" => (c.c1, c.t1)
+    case "resbn" => (c.r2, c.t1)
+    case "bn2" => (c.c2, c.t2)
+    case "bn3" => (c.c3, c.t3)
+    case "bn4" => (c.c4, c.t4)
   }
 
   /** Phase-1 kernel: accumulate per-channel (Σx, Σx²) of `layer`'s pre-BN
@@ -336,20 +284,19 @@ object TrunkGrad {
     */
   def rowPreBnSums(window: Array[Array[Float]], wts: CnnWeights, layer: String,
                    sum: Array[Double], sumsq: Array[Double], sqOff: Int = 0): Long = {
-    val pre = preActOf(forwardCached(window, wts), layer)
+    val (pre, t) = preActOf(forwardCached(window, wts), layer)
     var c = 0
-    while (c < pre.length) {
-      val row = pre(c)
-      var t = 0
-      while (t < row.length) {
-        val x = row(t).toDouble
+    while (c < pre.length / t) {
+      var i = c * t
+      while (i < (c + 1) * t) {
+        val x = pre(i).toDouble
         sum(c) += x
         sumsq(sqOff + c) += x * x
-        t += 1
+        i += 1
       }
       c += 1
     }
-    pre(0).length.toLong
+    t.toLong
   }
 
   /** Train-mode BN backward: with μ/σ² treated as functions of the batch,
@@ -357,12 +304,11 @@ object TrunkGrad {
     * `grad` when non-null (full-gradient pass) and are skipped in the
     * moment passes.
     */
-  private def bnBackwardTrain(xPre: Array[Array[Float]], bn: BnW, mom: BnMom,
-                              dy: Array[Array[Double]],
-                              grad: Array[Double], off: Int): Array[Array[Double]] = {
-    val cN = xPre.length
-    val t = xPre(0).length
-    val dx = Array.ofDim[Double](cN, t)
+  private def bnBackwardTrain(xPre: Array[Float], t: Int, bn: BnW, mom: BnMom,
+                              dy: Array[Double],
+                              grad: Array[Double], off: Int): Array[Double] = {
+    val cN = bn.gamma.length
+    val dx = new Array[Double](cN * t)
     val acc = grad != null
     var c = 0
     while (c < cN) {
@@ -371,16 +317,16 @@ object TrunkGrad {
       val m = bn.mean(c).toDouble
       val mDy = mom.sumDy(c) / mom.m
       val mDyX = mom.sumDyXhat(c) / mom.m
-      var ti = 0
-      while (ti < t) {
-        val d = dy(c)(ti)
-        val xhat = (xPre(c)(ti) - m) * inv
+      var i = c * t
+      while (i < (c + 1) * t) {
+        val d = dy(i)
+        val xhat = (xPre(i) - m) * inv
         if (acc) {
           grad(off + c) += d * xhat
           grad(off + cN + c) += d
         }
-        dx(c)(ti) = g * inv * (d - mDy - xhat * mDyX)
-        ti += 1
+        dx(i) = g * inv * (d - mDy - xhat * mDyX)
+        i += 1
       }
       c += 1
     }
@@ -390,59 +336,23 @@ object TrunkGrad {
   /** Accumulate one row's (Σdy, Σdy·x̂) for a BN layer into
     * `outDy(c)`/`outDyX(dyxOff + c)`.
     */
-  private def momentsAt(xPre: Array[Array[Float]], bn: BnW,
-                        dy: Array[Array[Double]],
+  private def momentsAt(xPre: Array[Float], t: Int, bn: BnW,
+                        dy: Array[Double],
                         outDy: Array[Double], outDyX: Array[Double],
                         dyxOff: Int): Unit = {
     var c = 0
-    while (c < xPre.length) {
+    while (c < bn.gamma.length) {
       val inv = 1.0 / math.sqrt(bn.variance(c).toDouble + bn.eps.toDouble)
       val m = bn.mean(c).toDouble
-      var ti = 0
-      while (ti < xPre(c).length) {
-        val d = dy(c)(ti)
+      var i = c * t
+      while (i < (c + 1) * t) {
+        val d = dy(i)
         outDy(c) += d
-        outDyX(dyxOff + c) += d * (xPre(c)(ti) - m) * inv
-        ti += 1
+        outDyX(dyxOff + c) += d * (xPre(i) - m) * inv
+        i += 1
       }
       c += 1
     }
-  }
-
-  /** dx of a conv layer without weight-gradient accumulation — the moment
-    * passes only propagate dy downward.
-    */
-  private def convBackwardDx(cw: ConvW, dy: Array[Array[Double]],
-                             cIn: Int, tIn: Int): Array[Array[Double]] = {
-    val cOut = cw.w.length
-    val k = cw.w(0)(0).length
-    val tOut = dy(0).length
-    val dx = Array.ofDim[Double](cIn, tIn)
-    var o = 0
-    while (o < cOut) {
-      val dyo = dy(o)
-      var ti = 0
-      while (ti < tOut) {
-        val d = dyo(ti)
-        if (d != 0.0) {
-          var ci = 0
-          while (ci < cIn) {
-            val dxi = dx(ci)
-            val wo = cw.w(o)(ci)
-            var kk = 0
-            while (kk < k) {
-              val src = ti - cw.padding + kk * cw.dilation
-              if (src >= 0 && src < tIn) dxi(src) += wo(kk) * d
-              kk += 1
-            }
-            ci += 1
-          }
-        }
-        ti += 1
-      }
-      o += 1
-    }
-    dx
   }
 
   /** Shared backward walker for batch-stats BN. Walks from the BCE dz
@@ -452,18 +362,20 @@ object TrunkGrad {
     * accumulates the FULL gradient into `grad`. `moments` must contain every BN layer above
     * the stopping point (all five when stopAt == null).
     */
-  private def backwardWithBatchBn(c: Cache, wts: CnnWeights, dz: Array[Double],
+  private def backwardWithBatchBn(c: Trunk, wts: CnnWeights, dz: Array[Double],
                                   moments: Map[String, BnMom], stopAt: String,
                                   grad: Array[Double], outDy: Array[Double],
                                   outDyX: Array[Double], dyxOff: Int): Unit = {
     val k = wts.head.b.length
     val dHid = wts.head.w(0).length
     val full = stopAt == null
+    val g = if (full) grad else null
     val offOf: Map[String, Int] =
       if (full) {
         val spec = blockSpec(wts)
         spec.map(_._1).zip(spec.scanLeft(0)(_ + _._2).init).toMap
       } else Map.empty
+    def off(name: String): Int = if (full) offOf(name) else 0
 
     val dPooled = Array.ofDim[Double](dHid)
     var o = 0
@@ -482,48 +394,36 @@ object TrunkGrad {
       }
       o += 1
     }
-    val t4 = c.h5(0).length
-    var dH = Array.tabulate(c.h5.length, t4)((ch, _) => dPooled(ch) / t4)
+    var dH = unpool(dPooled, c.t4)
 
-    dH = reluBackward(c.b4out, dH)
-    if (stopAt == "bn4") { momentsAt(c.c4pre, wts.bn4, dH, outDy, outDyX, dyxOff); return }
-    dH = bnBackwardTrain(c.c4pre, wts.bn4, moments("bn4"), dH,
-      if (full) grad else null, if (full) offOf("bn4.g") else 0)
-    dH = if (full) convBackward(c.h4, wts.conv4, dH, grad, offOf("conv4.w"))
-         else convBackwardDx(wts.conv4, dH, c.h4.length, c.h4(0).length)
+    dH = reluBackward(c.h5, dH)
+    if (stopAt == "bn4") { momentsAt(c.c4, c.t4, wts.bn4, dH, outDy, outDyX, dyxOff); return }
+    dH = bnBackwardTrain(c.c4, c.t4, wts.bn4, moments("bn4"), dH, g, off("bn4.g"))
+    dH = convBackward(c.h4, c.t3, wts.conv4, dH, g, off("conv4.w"))
 
-    dH = reluBackward(c.b3out, dH)
-    if (stopAt == "bn3") { momentsAt(c.c3pre, wts.bn3, dH, outDy, outDyX, dyxOff); return }
-    dH = bnBackwardTrain(c.c3pre, wts.bn3, moments("bn3"), dH,
-      if (full) grad else null, if (full) offOf("bn3.g") else 0)
-    dH = if (full) convBackward(c.h3, wts.conv3, dH, grad, offOf("conv3.w"))
-         else convBackwardDx(wts.conv3, dH, c.h3.length, c.h3(0).length)
+    dH = reluBackward(c.h4, dH)
+    if (stopAt == "bn3") { momentsAt(c.c3, c.t3, wts.bn3, dH, outDy, outDyX, dyxOff); return }
+    dH = bnBackwardTrain(c.c3, c.t3, wts.bn3, moments("bn3"), dH, g, off("bn3.g"))
+    dH = convBackward(c.h3, c.t2, wts.conv3, dH, g, off("conv3.w"))
 
-    dH = reluBackward(c.b2out, dH)
-    if (stopAt == "bn2") { momentsAt(c.c2pre, wts.bn2, dH, outDy, outDyX, dyxOff); return }
-    dH = bnBackwardTrain(c.c2pre, wts.bn2, moments("bn2"), dH,
-      if (full) grad else null, if (full) offOf("bn2.g") else 0)
-    dH = if (full) convBackward(c.h2, wts.conv2, dH, grad, offOf("conv2.w"))
-         else convBackwardDx(wts.conv2, dH, c.h2.length, c.h2(0).length)
+    dH = reluBackward(c.h3, dH)
+    if (stopAt == "bn2") { momentsAt(c.c2, c.t2, wts.bn2, dH, outDy, outDyX, dyxOff); return }
+    dH = bnBackwardTrain(c.c2, c.t2, wts.bn2, moments("bn2"), dH, g, off("bn2.g"))
+    dH = convBackward(c.h2, c.t1, wts.conv2, dH, g, off("conv2.w"))
 
-    val dS2 = reluBackward(c.s2, dH)
-    var dBlk = reluBackward(c.rbnOut, dS2)
-    if (stopAt == "resbn") { momentsAt(c.r2pre, wts.resBn, dBlk, outDy, outDyX, dyxOff); return }
-    dBlk = bnBackwardTrain(c.r2pre, wts.resBn, moments("resbn"), dBlk,
-      if (full) grad else null, if (full) offOf("resbn.g") else 0)
-    dBlk = if (full) convBackward(c.r1post, wts.resConv2, dBlk, grad, offOf("res2.w"))
-           else convBackwardDx(wts.resConv2, dBlk, c.r1post.length, c.r1post(0).length)
-    dBlk = reluBackward(c.r1pre, dBlk)
-    dBlk = if (full) convBackward(c.h1, wts.resConv1, dBlk, grad, offOf("res1.w"))
-           else convBackwardDx(wts.resConv1, dBlk, c.h1.length, c.h1(0).length)
-    val dH1 = Array.tabulate(dS2.length, dS2(0).length)((ch, ti) =>
-      dS2(ch)(ti) + dBlk(ch)(ti))
+    val dS2 = reluBackward(c.h2, dH)
+    var dBlk = reluBackward(c.blk, dS2)
+    if (stopAt == "resbn") { momentsAt(c.r2, c.t1, wts.resBn, dBlk, outDy, outDyX, dyxOff); return }
+    dBlk = bnBackwardTrain(c.r2, c.t1, wts.resBn, moments("resbn"), dBlk, g, off("resbn.g"))
+    dBlk = convBackward(c.r1, c.t1, wts.resConv2, dBlk, g, off("res2.w"))
+    dBlk = reluBackward(c.r1, dBlk)
+    dBlk = convBackward(c.h1, c.t1, wts.resConv1, dBlk, g, off("res1.w"))
+    val dH1 = addGrad(dS2, dBlk)
 
-    var dB1 = reluBackward(c.b1out, dH1)
-    if (stopAt == "bn1") { momentsAt(c.c1pre, wts.bn1, dB1, outDy, outDyX, dyxOff); return }
-    dB1 = bnBackwardTrain(c.c1pre, wts.bn1, moments("bn1"), dB1,
-      if (full) grad else null, if (full) offOf("bn1.g") else 0)
-    if (full) convBackward(c.x0, wts.conv1, dB1, grad, offOf("conv1.w"))
+    var dB1 = reluBackward(c.h1, dH1)
+    if (stopAt == "bn1") { momentsAt(c.c1, c.t1, wts.bn1, dB1, outDy, outDyX, dyxOff); return }
+    dB1 = bnBackwardTrain(c.c1, c.t1, wts.bn1, moments("bn1"), dB1, g, off("bn1.g"))
+    if (full) convBackward(c.x0, c.t0, wts.conv1, dB1, grad, offOf("conv1.w"))
   }
 
   /** The masked-BCE kernel: dz (∂L/∂logit; 0 where unlabeled), `loss0`
@@ -559,7 +459,7 @@ object TrunkGrad {
                    outDy: Array[Double], outDyX: Array[Double],
                    dyxOff: Int = 0): Unit = {
     val c = forwardCached(window, wts)
-    val (_, labeled, dz) = bceDz(c.logits, y)
+    val (_, labeled, dz) = bceDz(logits(c), y)
     // A zero-label row has dy ≡ 0 only down to the TOPMOST BN layer — its
     // moment contribution there is identically zero, so the walk can skip.
     // BELOW that layer the batch coupling terms (−Σdy/m − x̂·Σdy·x̂/m,
@@ -576,7 +476,7 @@ object TrunkGrad {
                     wts: CnnWeights, moments: Map[String, BnMom],
                     grad: Array[Double]): (Double, Long) = {
     val c = forwardCached(window, wts)
-    val (loss, labeled, dz) = bceDz(c.logits, y)
+    val (loss, labeled, dz) = bceDz(logits(c), y)
     // No early-out on a zero-label row: with batch statistics its dz ≡ 0
     // only above the topmost BN layer — the coupling terms give it nonzero
     // dy below, so it still owes conv/BN gradient contributions whenever
@@ -599,7 +499,7 @@ object TrunkGrad {
     val k = wts.head.b.length
     val dHid = wts.head.w(0).length
 
-    val (loss, labeled, dz) = bceDz(c.logits, y)
+    val (loss, labeled, dz) = bceDz(logits(c), y)
     if (labeled == 0L) return (0.0, 0L)
 
     val spec = blockSpec(wts)
@@ -625,36 +525,31 @@ object TrunkGrad {
       o += 1
     }
 
-    // pool: mean over T4 → broadcast /T4
-    val t4 = c.h5(0).length
-    var dH = Array.tabulate(c.h5.length, t4)((ch, _) => dPooled(ch) / t4)
+    var dH = unpool(dPooled, c.t4)
 
-    dH = reluBackward(c.b4out, dH)
-    dH = bnBackward(c.c4pre, wts.bn4, dH, grad, offOf("bn4.g"))
-    dH = convBackward(c.h4, wts.conv4, dH, grad, offOf("conv4.w"))
+    dH = reluBackward(c.h5, dH)
+    dH = bnBackward(c.c4, c.t4, wts.bn4, dH, grad, offOf("bn4.g"))
+    dH = convBackward(c.h4, c.t3, wts.conv4, dH, grad, offOf("conv4.w"))
 
-    dH = reluBackward(c.b3out, dH)
-    dH = bnBackward(c.c3pre, wts.bn3, dH, grad, offOf("bn3.g"))
-    dH = convBackward(c.h3, wts.conv3, dH, grad, offOf("conv3.w"))
+    dH = reluBackward(c.h4, dH)
+    dH = bnBackward(c.c3, c.t3, wts.bn3, dH, grad, offOf("bn3.g"))
+    dH = convBackward(c.h3, c.t2, wts.conv3, dH, grad, offOf("conv3.w"))
 
-    dH = reluBackward(c.b2out, dH)
-    dH = bnBackward(c.c2pre, wts.bn2, dH, grad, offOf("bn2.g"))
-    dH = convBackward(c.h2, wts.conv2, dH, grad, offOf("conv2.w"))
+    dH = reluBackward(c.h3, dH)
+    dH = bnBackward(c.c2, c.t2, wts.bn2, dH, grad, offOf("bn2.g"))
+    dH = convBackward(c.h2, c.t1, wts.conv2, dH, grad, offOf("conv2.w"))
 
-    // residual join: h2 = relu(h1 + blk)
-    val dS2 = reluBackward(c.s2, dH)
-    var dBlk = reluBackward(c.rbnOut, dS2)
-    dBlk = bnBackward(c.r2pre, wts.resBn, dBlk, grad, offOf("resbn.g"))
-    dBlk = convBackward(c.r1post, wts.resConv2, dBlk, grad, offOf("res2.w"))
-    dBlk = reluBackward(c.r1pre, dBlk)
-    dBlk = convBackward(c.h1, wts.resConv1, dBlk, grad, offOf("res1.w"))
-    // dh1 = skip path + through-block path
-    val dH1 = Array.tabulate(dS2.length, dS2(0).length)((ch, ti) =>
-      dS2(ch)(ti) + dBlk(ch)(ti))
+    val dS2 = reluBackward(c.h2, dH)
+    var dBlk = reluBackward(c.blk, dS2)
+    dBlk = bnBackward(c.r2, c.t1, wts.resBn, dBlk, grad, offOf("resbn.g"))
+    dBlk = convBackward(c.r1, c.t1, wts.resConv2, dBlk, grad, offOf("res2.w"))
+    dBlk = reluBackward(c.r1, dBlk)
+    dBlk = convBackward(c.h1, c.t1, wts.resConv1, dBlk, grad, offOf("res1.w"))
+    val dH1 = addGrad(dS2, dBlk)
 
-    var dB1 = reluBackward(c.b1out, dH1)
-    dB1 = bnBackward(c.c1pre, wts.bn1, dB1, grad, offOf("bn1.g"))
-    convBackward(c.x0, wts.conv1, dB1, grad, offOf("conv1.w"))
+    var dB1 = reluBackward(c.h1, dH1)
+    dB1 = bnBackward(c.c1, c.t1, wts.bn1, dB1, grad, offOf("bn1.g"))
+    convBackward(c.x0, c.t0, wts.conv1, dB1, grad, offOf("conv1.w"))
 
     (loss, labeled)
   }

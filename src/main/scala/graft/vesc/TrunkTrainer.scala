@@ -268,5 +268,5 @@ object TrunkTrainer {
                         hasLabels: Boolean = true): DataFrame =
     HeadTrainer.modelInputs(windows, mean, std, confCols, hasLabels,
       StructField("win", ArrayType(ArrayType(DoubleType))))(
-      mat => mat.map(_.map(_.toDouble).toSeq).toSeq)
+      () => mat => mat.map(_.map(_.toDouble).toSeq).toSeq)
 }

@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    reader or a stackless refusal exception;
   *  - under `vesc/`, the trainers share one sum `Aggregator`
   *    (`HeadTrainer.SumAgg`), one masked-BCE kernel (`TrunkGrad.bceDz`)
-  *    and one Adam loop (`HeadTrainer.fit`).
+  *    and one Adam loop (`HeadTrainer.fit`);
+  *  - under `vesc/`, scoring and training share one CNN forward
+  *    (`CnnScorer.Trunk`): each trunk conv layer is applied once.
   */
 class SessionDisciplineSpec extends AnyFunSuite {
 
@@ -97,6 +99,22 @@ class SessionDisciplineSpec extends AnyFunSuite {
       val at = hits(needle, p => !p.startsWith(vesc))
       assert(at.size == 1,
         s"expected one $what under $vesc, found ${at.size}: ${at.mkString(", ")}")
+    }
+  }
+
+  test("the vesc CNN forward keeps one layer sequence") {
+    // a second forward (a scorer copy, a training copy) applies every
+    // trunk conv layer a second time
+    val vesc = Paths.get("src/main/scala/graft/vesc")
+    Seq("conv1", "resConv1", "resConv2", "conv2", "conv3", "conv4").foreach { layer =>
+      val applied = ("""\bconv1d\(.*\.""" + layer + """\b""").r
+      val at = for {
+        (p, lines) <- sources if p.startsWith(vesc)
+        (l, i) <- lines.zipWithIndex if applied.findFirstIn(l).isDefined
+      } yield s"$p:${i + 1}"
+      assert(at.size == 1,
+        s"expected $layer applied once under $vesc (CnnScorer.Trunk), found ${at.size}: " +
+          at.mkString(", "))
     }
   }
 }

@@ -4,7 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
@@ -13,6 +15,7 @@ import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSuite
 
@@ -21,10 +24,13 @@ import graft.SparkSuite
   * evaluates the timeline in one query. Runs on a [[SyntheticLog]], so it
   * needs no reference checkout.
   */
-class AnalyzeOnceSpec extends SparkSuite with AdaptiveSparkPlanHelper {
+class AnalyzeOnceSpec extends SparkSuite with AdaptiveSparkPlanHelper with BeforeAndAfterAll {
 
   private lazy val dir: Path = Files.createTempDirectory("graft_analyze_once_")
   private lazy val log: String = SyntheticLog.write(dir, seconds = 60).toString
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteDirectory(dir.toFile) finally super.afterAll()
 
   test("analyze's executed plan: one CSV scan, one scorer pass, no join, ≤ 3 exchanges") {
     val timeline = VescPipeline.analyze(spark, Seq(log))
@@ -70,5 +76,15 @@ class AnalyzeOnceSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(rows > 0)
     // the same figure the batch export renders for the log
     assert(figure == Export.timelineBarsJson(VescPipeline.analyze(spark, Seq(log))))
+  }
+
+  test("a second analysis of the same log compiles no new classes") {
+    // the generated-class cache holds a whole analysis, so a repeated
+    // upload reuses every class the first one compiled
+    VescPipeline.analyze(spark, Seq(log)).collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    VescPipeline.analyze(spark, Seq(log)).collect()
+    val again = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    assert(again == 0, s"$again classes compiled by the second analysis")
   }
 }

@@ -4,6 +4,8 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.commons.io.FileUtils
+
 import graft.SparkSuite
 
 /** The interactive loop, end-to-end over a real socket: POST a real
@@ -85,7 +87,11 @@ class AppSpec extends SparkSuite {
         VescPipeline.analyze(spark, Seq(uploadDir.resolve(name2).toString)))
       assert(fc2 == 200 && figure2 == batch2, "second upload did not refresh the figure")
       assert(figure1 != figure2, "two different rides produced the same figure")
-    } finally handles.stop()
+    } finally {
+      handles.stop()
+      FileUtils.deleteDirectory(exportDir.toFile)
+      FileUtils.deleteDirectory(uploadDir.toFile)
+    }
   }
 
   test("POST /upload is 404 when no upload dir is configured") {
@@ -95,6 +101,9 @@ class AppSpec extends SparkSuite {
       val (code, body) = http(server.getAddress.getPort, "POST",
         "/upload?name=a.csv", "x,y\n1,2\n".getBytes(StandardCharsets.UTF_8))
       assert(code == 404 && body.contains("not enabled"), s"$code $body")
-    } finally server.stop(0)
+    } finally {
+      server.stop(0)
+      FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 }

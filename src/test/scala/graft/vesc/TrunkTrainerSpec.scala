@@ -439,6 +439,31 @@ class TrunkTrainerSpec extends SparkSuite {
       s"loss did not decrease: ${got.log.map(_.trainLoss)}")
   }
 
+  /** `body` on a fresh temp dir that is deleted afterwards. */
+  private def withTempDir[A](prefix: String)(body: java.io.File => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("checkpoint + resume leaves nothing new in java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def entries = tmp.list().toSet
+    val before = entries
+    val trainRows = (0 until 4).map(i => (i.toLong, mkWindow(i), mkY(i)))
+    val valRows = (100 until 102).map(i => (i.toLong, mkWindow(i), mkY(i)))
+    val cfg2 = HeadTrainer.TrainConfig(epochs = 2, batches = 1, patience = 8)
+    var saved: Option[TrunkTrainer.TrunkState] = None
+    TrunkTrainer.train(toDf(trainRows), toDf(valRows), wts, cfg2.copy(epochs = 1),
+      onEpoch = st => saved = Some(st))
+    val loaded = withTempDir("graft_ckpt_") { dir =>
+      TrunkTrainer.saveCheckpoint(spark, dir.toString, saved.get)
+      TrunkTrainer.loadCheckpoint(spark, dir.toString)
+    }
+    TrunkTrainer.train(toDf(trainRows), toDf(valRows), wts, cfg2, resume = Some(loaded))
+    val left = entries -- before
+    assert(left.isEmpty, s"left in $tmp: ${left.mkString(", ")}")
+  }
+
   test("checkpoint + resume replays the straight run bit-exactly (parquet round-trip)") {
     val trainRows = (0 until 12).map(i => (i.toLong, mkWindow(i), mkY(i)))
     val valRows = (100 until 104).map(i => (i.toLong, mkWindow(i), mkY(i)))
@@ -451,9 +476,10 @@ class TrunkTrainerSpec extends SparkSuite {
     var saved: Option[TrunkTrainer.TrunkState] = None
     TrunkTrainer.train(toDf(trainRows), toDf(valRows), wts, cfg2,
       onEpoch = st => saved = Some(st))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    TrunkTrainer.saveCheckpoint(spark, dir, saved.get)
-    val loaded = TrunkTrainer.loadCheckpoint(spark, dir)
+    val loaded = withTempDir("graft_ckpt_") { dir =>
+      TrunkTrainer.saveCheckpoint(spark, dir.toString, saved.get)
+      TrunkTrainer.loadCheckpoint(spark, dir.toString)
+    }
     assert(loaded.nextEpoch == 2 && loaded.t == saved.get.t)
 
     // ...and resume for epochs 2-3: identical final weights and best-val
