@@ -28,10 +28,13 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // one VescPipeline.analyze generates ~113 classes; at Spark's default
-      // of 100 the generated-class LRU evicts them within the analysis and
-      // every later upload recompiles ~106 of them (2 s of Janino). A static
-      // conf: it must be set before the session's first query.
+      // the generated-class LRU is shared by every query of the JVM. One
+      // cold VescPipeline.analyze compiles 15 classes (measured on a
+      // 60-second ride; the window-function plan it replaced compiled
+      // ~113, more than Spark's default of 100, so each repeat upload
+      // recompiled them); the other queries of a session fill the same
+      // cache. A static conf: it must be set before the session's first
+      // query.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def getOrCreate(appName: String = "graft"): SparkSession = {

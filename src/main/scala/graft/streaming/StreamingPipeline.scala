@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType, TimestampType}
 import graft.vesc.VescSchema
 
 /** Structured Streaming mode (SURVEY §2.11): the batch operators re-expressed
@@ -406,27 +406,36 @@ object StreamingPipeline {
       .agg(max(col("bandSeen")).as("is_near_dup"),
         count(lit(1)).as("n_bands"))
 
+  /** The `binaryFile` source's fixed schema: a streaming file source
+    * needs its schema up front.
+    */
+  private val BinaryFileSchema = StructType(Seq(
+    StructField("path", StringType, nullable = false),
+    StructField("modificationTime", TimestampType, nullable = false),
+    StructField("length", LongType, nullable = false),
+    StructField("content", BinaryType, nullable = true)))
+
   /** Per-upload re-analysis, end-to-end (reference app.py:354-366: every
     * upload triggers a fresh raw → resample → window → score → timeline
     * run). The upload directory is a file-source stream; each micro-batch
-    * extracts the NEWLY arrived file paths and hands `analyze` (the exact
-    * batch pipeline — batch/stream parity by construction) their scored
-    * timeline via `onBatch`. The text source is used purely as the
-    * file-arrival signal, so any csv layout works; at real scale the same
-    * hook runs off a manifest/notification source instead of re-reading
-    * file bodies.
+    * hands `analyze` (the exact batch pipeline — batch/stream parity by
+    * construction) the NEWLY arrived file paths, and `onBatch` their scored
+    * timeline. The arrival signal is the `binaryFile` source projected to
+    * `path`: one row per new file, its body never read and no shuffle, so
+    * any csv layout works and each upload is read once, by `analyze`.
     */
   def uploadAnalysis(spark: SparkSession, uploadDir: String,
                      analyze: Seq[String] => DataFrame)
                     (onBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     spark.readStream
-      .format("text")
+      .format("binaryFile")
+      .schema(BinaryFileSchema)
       .load(uploadDir + "/*.csv")
+      .select(col("path"))
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val paths = batch.select(input_file_name().as("f")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
+        val paths = batch.collect().map(_.getString(0)).toSeq.sorted
         if (paths.nonEmpty) onBatch(analyze(paths), id)
       }
       .start()

@@ -85,35 +85,4 @@ object ExclusivityRules {
 
   def apply(df: DataFrame): DataFrame =
     applyCross(applyInternal(nanToNull(df, VescSchema.ConfidenceCols)))
-
-  /** Display-time conflict suppression (reference
-    * apply_behavior_conflict_suppression, application/app.py:170-219):
-    * groups applied sequentially; within a group the argmax (first-index
-    * tie-break) keeps its score, the rest go to 0.
-    */
-  def suppressConflicts(df: DataFrame,
-                        groups: Seq[Seq[String]] =
-                          VescSchema.DisplayConflictGroups): DataFrame =
-    groups.foldLeft(df) { (acc, group) =>
-      val present = group.filter(acc.columns.contains)
-      if (present.size <= 1) acc
-      else {
-        // np.argmax keeps the FIRST maximal column; a later column only
-        // wins if strictly greater than every earlier one.
-        val isWinner: Seq[Column] = present.zipWithIndex.map { case (c, i) =>
-          val earlier = present.take(i)
-          val later = present.drop(i + 1)
-          val beatsEarlier = earlier.map(e => col(c) > col(e))
-            .foldLeft(lit(true))(_ && _)
-          val geLater = later.map(l => col(c) >= col(l))
-            .foldLeft(lit(true))(_ && _)
-          beatsEarlier && geLater
-        }
-        val updated = present.zip(isWinner).map { case (c, win) =>
-          c -> when(win, col(c)).otherwise(lit(0.0))
-        }.toMap
-        acc.select(acc.columns.map(c =>
-          updated.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-      }
-    }
 }

@@ -1,56 +1,59 @@
 package graft.vesc
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Timeline post-processing (reference application/app.py:150-243):
   * time rebase to seconds-from-start (F14), display conflict suppression
   * (R3), and 0.5-second block downsampling (A6, remainder truncated).
+  *
+  * Each entry point is one exchange on `ride_id`, one sort on the ride's
+  * clock and one [[RidePass.perRide]] pass over each ride's rows.
   */
 object Postprocess {
 
-  /** Rebase t_mid (ms) to seconds from the per-ride start. */
-  def rebaseSeconds(scored: DataFrame): DataFrame = {
-    val wAll = Window.partitionBy(col("ride_id"))
-    scored.withColumn("tsec",
-      (col("t_mid") - min(col("t_mid")).over(wAll)) / 1000.0)
-  }
-
-  /** Display downsample: consecutive blocks of `step` windows are averaged;
-    * step = round(0.5 / median(diff tsec)); the tail remainder is dropped
-    * (reference app.py:221-243). The per-ride median spacing (exact
-    * `percentile` over the ride's diffs) and the ride's row count are
-    * window aggregates over the ride partition the diffs were computed in,
-    * so the scored input is read once: no aggregate joined back.
+  /** Display downsample: consecutive blocks of `step` rows (in `tsec`
+    * order) are averaged; step = round(`displayDt` / median(diff tsec)),
+    * the exact `percentile` over the ride's spacings; the tail remainder is
+    * dropped (reference app.py:221-243, [[RidePass.displayBlocks]]).
+    * Output: ride_id, tsec, `scoreCols`.
     */
   def downsampleForDisplay(scored: DataFrame, scoreCols: Seq[String],
                            displayDt: Double = 0.5): DataFrame = {
-    val w = Window.partitionBy(col("ride_id")).orderBy(col("tsec"))
-    val wAll = Window.partitionBy(col("ride_id"))
-    val withDiff = scored.select(col("*"),
-      (col("tsec") - lag(col("tsec"), 1).over(w)).as("__diff"),
-      (row_number().over(w) - 1).as("__rn"))
-    val step = greatest(lit(1),
-      round(lit(displayDt) / percentile(col("__diff"), lit(0.5)).over(wAll)).cast("int"))
-    val blocks = withDiff
-      .select(col("*"), step.as("__step"), count(lit(1)).over(wAll).as("__n"))
-      .filter(col("__rn") < (col("__n") - pmod(col("__n"), col("__step"))))
-      .withColumn("__block", (col("__rn") / col("__step")).cast("long"))
-    blocks
-      .groupBy(col("ride_id"), col("__block"))
-      .agg(avg(col("tsec")).as("tsec"),
-        scoreCols.map(c => avg(col(c)).as(c)): _*)
-      .drop("__block")
+    val input = scored.select((Seq("ride_id", "tsec") ++ scoreCols).map(c =>
+      if (c == "ride_id") col(c) else col(c).cast("double")): _*)
+    val out = timelineSchema(scored.schema("ride_id"), scoreCols)
+    RidePass.perRide(input, Seq(col("tsec")), out) { rows =>
+      RidePass.displayBlocks(rows.head.get(0), RidePass.Col.of(rows, 1),
+        scoreCols.indices.map(i => RidePass.Col.of(rows, 2 + i)), displayDt)
+    }
   }
 
-  /** Full display pipeline: rebase → suppress conflicts → downsample. */
+  /** Full display pipeline over scored windows (ride_id, t_mid, score_*):
+    * `score_<b>` becomes `cf_<b>`, then per ride, in `t_mid` order:
+    * suppress conflicts, rebase to seconds from the ride's first window,
+    * downsample ([[RidePass.timeline]]). Output: ride_id, tsec and the
+    * [[VescSchema.ConfidenceCols]] present.
+    */
   def displayTimeline(scored: DataFrame): DataFrame = {
-    val scoreCols = scored.columns.filter(_.startsWith("score_")).toSeq
-    val renamed = scored.withColumnsRenamed(
-      scoreCols.map(c => c -> ("cf_" + c.stripPrefix("score_"))).toMap)
-    val cfCols = VescSchema.ConfidenceCols.filter(renamed.columns.contains)
-    val suppressed = ExclusivityRules.suppressConflicts(renamed)
-    downsampleForDisplay(rebaseSeconds(suppressed), cfCols)
+    val cf = scored.columns.map(c =>
+      if (c.startsWith("score_")) "cf_" + c.stripPrefix("score_") else c)
+    val cfCols = VescSchema.ConfidenceCols.filter(cf.contains)
+    val sources = cfCols.map(c => scored.columns(cf.indexOf(c)))
+    val groups = RidePass.conflictGroups(cfCols)
+    val input = scored.select(col("ride_id") +: col("t_mid").cast("double") +:
+      sources.map(col(_).cast("double")): _*)
+    val out = timelineSchema(scored.schema("ride_id"), cfCols)
+    RidePass.perRide(input, Seq(col("t_mid")), out) { rows =>
+      RidePass.timeline(rows.head.get(0), RidePass.Col.of(rows, 1),
+        cfCols.indices.map(i => RidePass.Col.of(rows, 2 + i)), groups, Export.DisplayDt)
+    }
   }
+
+  /** A display timeline's schema: `ride`, tsec and one double per score
+    * column.
+    */
+  def timelineSchema(ride: StructField, scoreCols: Seq[String]): StructType =
+    StructType(ride +: ("tsec" +: scoreCols).map(StructField(_, DoubleType)))
 }

@@ -7,22 +7,34 @@ import org.apache.spark.sql.functions._
 /** Raw VESC Tool log ingestion (reference S1/P1/P2/F1–F3/W2/W3:
   * training_preprocessing.py:45-99, prod_preprocessing.py:10-33).
   *
-  * Reads any number of semicolon-delimited logs in one scan; per-file
-  * semantics (sample numbering, lag-diff, ride identity) are expressed as
-  * window functions partitioned by `ride_id`, so a directory of thousands of
-  * logs ingests as a single distributed job — there is no per-file driver
-  * loop anywhere.
+  * Reads any number of semicolon-delimited logs in one scan ([[scan]]);
+  * per-file semantics (sample numbering, lag-diff, ride identity) are
+  * expressed as window functions partitioned by `ride_id`, so a directory
+  * of thousands of logs ingests as a single distributed job — nothing
+  * loops over the files one by one.
   */
 object RawLogReader {
 
-  /** Read raw logs. Every column is read as string and cast to double
-    * with `try_cast` (malformed cells → null, the `errors="coerce"`
-    * semantics; a plain cast throws on them under ANSI mode); the
-    * ride date comes from the `YYYY-MM-DD` in the filename and the ride id
-    * from a `ride log NN` parent directory (overridable).
+  /** The typed scan of raw logs, in one CSV read: every kept channel read
+    * as string and cast to double with `try_cast` (malformed cells → null,
+    * the `errors="coerce"` semantics; a plain cast throws on them under
+    * ANSI mode), plus `__file` (the file's URI), `ride_id`, `ts_utc` and
+    * `__row`. The ride date comes from the `YYYY-MM-DD` in the filename and
+    * the ride id from a `ride log NN` parent directory (overridable).
+    *
+    * Sort-order contract: within a ride, (`__file`, `__row`) is file
+    * order. A bare monotonic id is NOT enough: Spark packs file splits into
+    * partitions sorted by size (descending), so a ride spanning several
+    * CSVs could be numbered with the larger file first regardless of
+    * chronology. Ordering by (file name, monotonic id) pins cross-file
+    * order to the lexicographic file name (VESC logs embed the timestamp in
+    * the name) while the monotonic id preserves line order within a file
+    * partition. [[readRaw]] numbers rows in this order; `VescPipeline`'s
+    * analysis sorts by (ms_today, `__file`, `__row`) instead, so its
+    * keep-first dedup keeps the first row in file order without numbering.
     */
-  def readRaw(spark: SparkSession, paths: Seq[String], channels: Seq[String],
-              rideId: Option[String] = None): DataFrame = {
+  def scan(spark: SparkSession, paths: Seq[String], channels: Seq[String],
+           rideId: Option[String] = None): DataFrame = {
     val raw = spark.read
       .option("sep", ";")
       .option("header", "true")
@@ -45,28 +57,25 @@ object RawLogReader {
     val inferredRide = when(rideNum =!= "",
       format_string("ride_%02d", rideNum.cast("int"))).otherwise("unknown_ride_id")
 
-    val withIds = cast
+    cast
       .withColumn("ride_id", rideId.map(lit(_): org.apache.spark.sql.Column)
         .getOrElse(inferredRide))
       .withColumn("__log_date", to_timestamp(datePart, "yyyy-MM-dd"))
       .withColumn("ts_utc",
         timestamp_millis(unix_millis(col("__log_date")) + col("ms_today").cast("long")))
       .drop("__log_date")
-
-    // W3: per-log sample numbering in file order. A bare monotonic id is
-    // NOT enough: Spark packs file splits into partitions sorted by size
-    // (descending), so a ride spanning several CSVs could be numbered with
-    // the larger file first regardless of chronology. Ordering by
-    // (file name, monotonic id) pins cross-file order to the lexicographic
-    // file name (VESC logs embed the timestamp in the name) while the
-    // monotonic id preserves line order within a file partition.
-    val w = Window.partitionBy(col("ride_id")).orderBy(col("__file"), col("__row"))
-    val numbered = withIds
       .withColumn("__row", monotonically_increasing_id())
-      .withColumn("sample_idx", (row_number().over(w) - 1).cast("long"))
+  }
 
-    // W2: lag diff in ms (float in the reference; double here)
-    numbered
+  /** Read raw logs: [[scan]], plus W3's per-log `sample_idx` in file order
+    * and W2's `dt_ms`, as window functions partitioned by `ride_id`.
+    */
+  def readRaw(spark: SparkSession, paths: Seq[String], channels: Seq[String],
+              rideId: Option[String] = None): DataFrame = {
+    val w = Window.partitionBy(col("ride_id")).orderBy(col("__file"), col("__row"))
+    scan(spark, paths, channels, rideId)
+      .withColumn("sample_idx", (row_number().over(w) - 1).cast("long"))
+      // W2: lag diff in ms (float in the reference; double here)
       .withColumn("dt_ms", col("ms_today") - lag(col("ms_today"), 1).over(w))
       .drop("__row", "__file")
   }

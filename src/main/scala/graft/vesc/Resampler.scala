@@ -1,24 +1,24 @@
 package graft.vesc
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import graft.ops.TimeSeriesOps
+import org.apache.spark.sql.types._
 
 /** 10 Hz sample-rate normalization — the computational heart of the pipeline
   * (reference normalize_sample_rate: training_preprocessing.py:101-236,
   * prod_preprocessing.py:35-153).
   *
-  * Steps, all per-`ride_id` (one shuffle on the series key; every window
-  * function shares the same (ride_id, ms_today) sort, so Spark runs them in
-  * two WindowExec passes — forward and backward frames):
+  * One exchange on `ride_id`, one sort on (ride_id, ms_today, sample_idx)
+  * and one [[RidePass.perRide]] pass; per ride:
   *
-  *  1. keep-first dedup on ms_today in file order (P6 — order-defined)
+  *  1. keep-first dedup on ms_today in file order (P6 — order-defined):
+  *     the first row of each run of equal ms_today ([[RidePass.keepFirst]])
   *  2. 100 ms grid from first to last timestamp (W4) aligned with the
-  *     original instants (J1), in one pass: `sequence`+`explode` of the grid
-  *     instants between consecutive samples
+  *     original instants (J1)
   *  3. index-weighted linear interpolation, both-direction edge fill (W6)
   *  4. strict-`>` 250 ms gap voiding of synthetic on-grid rows (W7/W8/P10)
+  *     — steps 2–4 are [[RidePass.grid]]
   *  5. grid filter + elapsed counter + timestamp rebuild + renumber
   *     (P7/W9/W10/W3) and normative column order (P3)
   *
@@ -29,61 +29,75 @@ import graft.ops.TimeSeriesOps
   */
 object Resampler {
 
-  /** @param interpCols   numeric channels to interpolate
-    * @param carryCols    per-ride constants to carry onto synthetic rows
-    *                     (ride_id is always carried)
+  /** @param interpCols   numeric channels to interpolate (double on output)
     * @param passCols     columns kept but NOT interpolated (null on
-    *                     synthetic rows): protected + cf_* labels
+    *                     synthetic rows): protected + cf_* labels. Every
+    *                     column that is not interpolated is kept so.
+    *
+    * Output: ride_id, ms_today (long), the other input columns in their
+    * order (`sample_idx` renumbered from 0, `dt_ms` = `stepMs`, `ts_utc`
+    * and `ts_pst` rebuilt from the ride's first real grid row plus the
+    * elapsed ms), then `is_real`, `_on_grid`, `_elapsed_ms` and `dt_ms` if
+    * the input lacked it. Keep-first dedup reads `sample_idx` as file
+    * order.
     */
   def resample10Hz(df: DataFrame, interpCols: Seq[String], passCols: Seq[String],
                    stepMs: Long = VescSchema.StepMs,
                    maxGapMs: Double = VescSchema.MaxGapMs): DataFrame = {
-    val key = Seq("ride_id")
-    val deduped = TimeSeriesOps.dedupKeepFirst(
-      df, Seq("ride_id", "ms_today"), col("sample_idx"))
+    val in = df.schema
+    val rest = df.columns.toSeq.filterNot(c => c == "ride_id" || c == "ms_today")
+    val pst = rest.contains("ts_utc") && rest.contains("ts_pst")
+    def rebuilt(c: String) = c == "ts_utc" || (c == "ts_pst" && pst)
+    val restFields = rest.map {
+      case c if interpCols.contains(c) => StructField(c, DoubleType)
+      case c @ ("dt_ms" | "sample_idx") => StructField(c, LongType, nullable = false)
+      case c if rebuilt(c) => StructField(c, TimestampType)
+      case c => in(c).copy(nullable = true)
+    }
+    val added =
+      if (rest.contains("dt_ms")) Nil else Seq(StructField("dt_ms", LongType, nullable = false))
+    val out = StructType(Seq(in("ride_id"), StructField("ms_today", LongType)) ++ restFields ++
+      Seq(StructField("is_real", BooleanType, nullable = false),
+        StructField("_on_grid", BooleanType, nullable = false),
+        StructField("_elapsed_ms", DoubleType)) ++ added)
+    val interpAt = interpCols.map(c => rest.indexOf(c) + 2)
+    val maxGap = maxGapMs.toLong
 
-    // grid ∪ original align (W4 + J1). ms_today is the long tick.
-    val aligned = TimeSeriesOps.gridAlign(
-      deduped.withColumn("ms_today", col("ms_today").cast("long")),
-      key, "ms_today", stepMs)
+    val input = df.select((Seq("ride_id", "ms_today") ++ rest).map(col): _*)
+    RidePass.perRide(input, Seq(col("ms_today"), col("sample_idx")), out) { rows =>
+      val (kept, g) = RidePass.resample(rows, interpAt, stepMs, maxGap)
+      val elapsed = g.tick.map(t => (t - g.tick(0)).toDouble)
+      def real(k: Int) = g.src(k) >= 0
+      // W10: the ride's first real grid row's clock plus the elapsed ms
+      def clock(f: Int): Int => Any = {
+        val start = g.src.filter(_ >= 0).flatMap(s => Option(kept(s).get(f))).minByOption(micros)
+        k => start.map(s =>
+          timestamp((Math.floorDiv(micros(s), 1000L) + elapsed(k).toLong) * 1000L, s)).orNull
+      }
+      val cells: Seq[Int => Any] = rest.zipWithIndex.map { case (c, i) =>
+        val f = i + 2
+        if (interpCols.contains(c)) g.channels(interpCols.indexOf(c)).get _
+        else c match {
+          case "dt_ms" => (_: Int) => stepMs
+          case "sample_idx" => (k: Int) => k.toLong
+          case _ if rebuilt(c) => clock(f)
+          case _ => (k: Int) => if (real(k)) kept(g.src(k)).get(f) else null
+        }
+      } ++ Seq[Int => Any](real, _ => true, elapsed(_)) ++ added.map(_ => (_: Int) => stepMs)
+      val ride = kept.head.get(0)
+      Iterator.range(0, g.length).map(k => Row.fromSeq(ride +: g.tick(k) +: cells.map(_(k))))
+    }
+  }
 
-    // W6: interpolate channels over the union index
-    val interped = TimeSeriesOps.interpolateLinear(aligned, key, "ms_today", interpCols)
+  private def micros(t: Any): Long = t match {
+    case ts: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(ts)
+    case i: java.time.Instant => DateTimeUtils.instantToMicros(i)
+  }
 
-    // W7: span between neighbouring real samples
-    val spanned = TimeSeriesOps.gapSpan(interped, key, "ms_today", col("is_real"))
-
-    // W8/P10: void interpolated values in wide gaps — applies to on-grid,
-    // not-real rows with finite neighbours on both sides, strict `>`
-    val voidTarget = col("_on_grid") && !col("is_real") &&
-      col("prev_real_tick").isNotNull && col("next_real_tick").isNotNull
-    val voided = TimeSeriesOps.voidWideGaps(
-      spanned, interpCols, maxGapMs.toLong, voidTarget)
-
-    // P7 grid filter; W9 elapsed; W10 timestamp rebuild; W3 renumber
-    val w = Window.partitionBy(key.map(col): _*).orderBy(col("ms_today"))
-    val wAll = Window.partitionBy(key.map(col): _*)
-    val gridOnly = voided
-      .filter(col("_on_grid"))
-      .withColumn("_elapsed_ms",
-        (col("ms_today") - min(col("ms_today")).over(wAll)).cast("double"))
-      .withColumn("dt_ms", lit(stepMs))
-      .withColumn("sample_idx", (row_number().over(w) - 1).cast("long"))
-
-    // rebuild event-time columns from the per-ride start + elapsed
-    val withTs =
-      if (df.columns.contains("ts_utc")) {
-        val startUtc = min(when(col("is_real"), col("ts_utc"))).over(wAll)
-        val base = gridOnly.withColumn("ts_utc",
-          timestamp_millis(unix_millis(startUtc) + col("_elapsed_ms").cast("long")))
-        if (df.columns.contains("ts_pst")) {
-          val startPst = min(when(col("is_real"), col("ts_pst"))).over(wAll)
-          base.withColumn("ts_pst",
-            timestamp_millis(unix_millis(startPst) + col("_elapsed_ms").cast("long")))
-        } else base
-      } else gridOnly
-
-    withTs.drop("prev_real_tick", "next_real_tick", "gap_span")
+  /** `us` as the external timestamp type of `like`. */
+  private def timestamp(us: Long, like: Any): Any = like match {
+    case _: java.time.Instant => DateTimeUtils.microsToInstant(us)
+    case _ => DateTimeUtils.toJavaTimestamp(us)
   }
 
   /** Training flavour: interpolate everything numeric except labels,

@@ -2,15 +2,15 @@ package graft.vesc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField}
 
 /** End-to-end pipelines — the reference's three entry points (SURVEY §3)
   * as single lazy DataFrame DAGs. The reference materializes CSV between
   * stages (app.py:113-120); here Catalyst plans the whole flow at once.
-  * [[analyze]] reads its logs in one scan and scores each window once, with
-  * no join: its exchanges are the reader's per-log numbering, the
-  * keep-first dedup on (ride, ms_today) and the per-ride layout that the
-  * grid, windows, scores and display post-processing all share
-  * (AnalyzeOnceSpec pins this shape).
+  * [[analyze]] reads its logs in one scan, shuffles once and runs the grid,
+  * windows, scores and display post-processing in one per-ride pass
+  * ([[RidePass]]): no window operator and no join (AnalyzeOnceSpec pins
+  * this shape).
   */
 object VescPipeline {
 
@@ -50,17 +50,53 @@ object VescPipeline {
 
   /** Production analysis (reference app.py:354-366): raw log(s) → scored,
     * conflict-suppressed, display-downsampled behavior timeline.
+    *
+    * One CSV scan ([[RawLogReader.scan]]), one exchange on the ride key
+    * (every log is ride `prod`), one sort on (ms_today, file, row) and one
+    * [[RidePass.perRide]] pass that runs, per ride: keep-first dedup (the
+    * sort puts the first row in file order first, so the reader's
+    * numbering is not needed), the 10 Hz grid ([[RidePass.resample]] over
+    * the model features — the production flavour's interpolated channels),
+    * the stride-aligned windows ([[RidePass.windows]]), scoring through
+    * [[CnnScorer.normalizedWindow]] and one [[CnnScorer.Trunk]], and the
+    * display post-processing ([[RidePass.timeline]]). Every value is
+    * bit-identical to composing [[Resampler.prodResample]],
+    * [[WindowAssembler.assemble]], [[CnnScorer.score]] and
+    * [[Postprocess.displayTimeline]].
     */
   def analyze(spark: SparkSession, rawPaths: Seq[String],
               weights: CnnScorer.CnnWeights,
               mean: Array[Double], std: Array[Double]): DataFrame = {
-    val raw = RawLogReader.readProd(spark, rawPaths)
-    val grid = Resampler.prodResample(raw.withColumn("ride_id",
-      coalesce(col("ride_id"), lit("prod"))))
-    val windows = WindowAssembler.assemble(
-      grid.withColumn("ride_id", lit("prod")))
-    val scored = CnnScorer.score(windows, weights, mean, std)
-    Postprocess.displayTimeline(scored)
+    val raw = RawLogReader.scan(spark, rawPaths, VescSchema.ProdChannels)
+    val feats = VescSchema.FeatureCols.filter(raw.columns.contains)
+    val cfCols = VescSchema.ConfidenceCols
+    val groups = RidePass.conflictGroups(cfCols)
+    val model = spark.sparkContext.broadcast((weights, mean.map(_.toFloat), std.map(_.toFloat)))
+    val input = raw.select(Seq(lit("prod").as("ride_id"), col("ms_today"), col("__file"),
+      col("__row")) ++ feats.map(col): _*)
+    val out = Postprocess.timelineSchema(StructField("ride_id", StringType, nullable = false),
+      cfCols)
+    val steps = WindowAssembler.Steps
+    RidePass.perRide(input, Seq(col("ms_today"), col("__file"), col("__row")), out) { rows =>
+      val (w, m, s) = model.value
+      val (_, g) = RidePass.resample(rows, feats.indices.map(4 + _), VescSchema.StepMs,
+        VescSchema.MaxGapMs.toLong)
+      val win = RidePass.windows(Array.tabulate(g.length)(_.toLong), 0,
+        new RidePass.Col(g.tick.map(_.toDouble), new Array[Boolean](g.length)),
+        RidePass.finiteCells(g.channels, g.length), feats.size, steps,
+        WindowAssembler.Stride, VescSchema.MinValidRatio)
+      val cells = IndexedSeq.tabulate(g.length)(k => g.channels.map(_.get(k)))
+      val trunk = new CnnScorer.Trunk(w)
+      val scores = cfCols.map(_ => RidePass.Col(win.length)).toIndexedSeq
+      for (i <- 0 until win.length) {
+        val k = win.start(i)
+        val z = CnnScorer.logits(trunk.run(CnnScorer.normalizedWindow(
+          cells.slice(k, k + steps), m, s)), w.head)
+        scores.indices.foreach(c => scores(c).v(i) = CnnScorer.sigmoid(z(c)).toDouble)
+      }
+      val tMid = new RidePass.Col(win.tMid, new Array[Boolean](win.length))
+      RidePass.timeline(rows.head.get(0), tMid, scores, groups, Export.DisplayDt)
+    }
   }
 
   /** Training preprocessing (reference training_preprocessing.py:280-324):

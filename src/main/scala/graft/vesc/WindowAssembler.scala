@@ -1,78 +1,65 @@
 package graft.vesc
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Sliding feature-window assembly (reference W11/A2/A3/P9:
   * model/vesc_dataset.py:103-160): 30-step windows, 5-step stride, per ride,
   * windows crossing end-of-log dropped, windows below 70% finite cells
   * dropped, per-window null-ignoring label means (all-null → 0.0).
   *
-  * One WindowExec pass per ride builds the (30 × C) matrix, the validity
-  * ratio, the label sums and the median timestamp together: every windowed
-  * aggregate shares the same (ride_id, sample_idx, rows 0..29) frame.
-  * Windows never cross `ride_id`, so the only shuffle is the partition by
-  * ride — the same layout the resampler already produced, which AQE reuses.
+  * One exchange on `ride_id`, one sort on (ride_id, sample_idx) and one
+  * [[RidePass.perRide]] pass that visits only the stride-aligned starts
+  * ([[RidePass.windows]]): each kept window's (30 × C) matrix, validity
+  * ratio, label means ([[RidePass.labelMean]]) and median timestamp are
+  * built from the ride's rows directly.
   */
 object WindowAssembler {
 
+  /** Rows per window (3 s at 10 Hz) and between window starts (0.5 s). */
+  val Steps: Int = 30
+  val Stride: Int = 5
+
+  /** Output: ride_id, window_start (the start row's sample_idx), t_mid,
+    * valid_ratio, features (`windowSteps` rows of the features as
+    * doubles, a missing cell null — the scorer's ffill + zero-fill,
+    * reference model/vesc_dataset.py:134-137, happens in
+    * [[CnnScorer.fillWindow]]) and one `y_<label>` mean per label.
+    */
   def assemble(df: DataFrame,
                featureCols: Seq[String] = VescSchema.FeatureCols,
                confCols: Seq[String] = VescSchema.ConfidenceCols,
-               windowSteps: Int = 30, strideSteps: Int = 5,
+               windowSteps: Int = Steps, strideSteps: Int = Stride,
                minValidRatio: Double = VescSchema.MinValidRatio): DataFrame = {
     val feats = featureCols.filter(df.columns.contains)
     val confs = confCols.filter(df.columns.contains)
-    val w = Window.partitionBy(col("ride_id")).orderBy(col("sample_idx"))
-      .rowsBetween(0, windowSteps - 1)
-    val wAll = Window.partitionBy(col("ride_id"))
+    val out = StructType(Seq(df.schema("ride_id"),
+      df.schema("sample_idx").copy(name = "window_start"),
+      StructField("t_mid", DoubleType),
+      StructField("valid_ratio", DoubleType),
+      StructField("features", ArrayType(ArrayType(DoubleType), containsNull = false),
+        nullable = false)) ++
+      confs.map(c => StructField("y_" + c, DoubleType)))
+    val f0 = 3
+    val y0 = f0 + feats.size
 
-    val validPerRow = feats.map(c =>
-      when(col(c).isNotNull && !isnan(col(c)), 1).otherwise(0)).reduce(_ + _)
-
-    val confAggs = confs.flatMap(c => Seq(
-      sum(when(isnan(col(c)), lit(null)).otherwise(col(c))).over(w).as(s"__sum_$c"),
-      count(when(isnan(col(c)), lit(null)).otherwise(col(c))).over(w).as(s"__cnt_$c")))
-
-    val base = df.select(
-      Seq(col("ride_id"), col("sample_idx"), col("ms_today")) ++
-        Seq(
-          collect_list(array(feats.map(c => col(c).cast("double")): _*)).over(w).as("__feat"),
-          collect_list(col("ms_today")).over(w).as("__ms"),
-          sum(validPerRow).over(w).as("__valid"),
-          count(lit(1)).over(w).as("__n"),
-          count(lit(1)).over(wAll).as("__total")) ++ confAggs: _*)
-
-    val cells = lit(windowSteps * feats.size)
-    val sortedMs = array_sort(col("__ms"))
-    val med =
-      if (windowSteps % 2 == 0)
-        (element_at(sortedMs, windowSteps / 2).cast("double") +
-          element_at(sortedMs, windowSteps / 2 + 1).cast("double")) / 2.0
-      else element_at(sortedMs, windowSteps / 2 + 1).cast("double")
-
-    val labelMeans = confs.map(c =>
-      (coalesce(col(s"__sum_$c"), lit(0.0)) /
-        greatest(col(s"__cnt_$c"), lit(1L)).cast("double")).as("y_" + c))
-
-    base
-      .filter(pmod(col("sample_idx"), lit(strideSteps)) === 0)
-      .filter(col("sample_idx") + windowSteps <= col("__total"))
-      .filter(col("__n") === windowSteps)
-      .withColumn("valid_ratio", col("__valid").cast("double") / cells)
-      .filter(col("valid_ratio") >= minValidRatio)
-      .select(
-        Seq(col("ride_id"), col("sample_idx").as("window_start"),
-          med.as("t_mid"), col("valid_ratio"), col("__feat").as("features")) ++
-          labelMeans: _*)
+    val input = df.select(Seq(col("ride_id"), col("sample_idx"), col("ms_today")) ++
+      (feats ++ confs).map(c => col(c).cast("double")): _*)
+    RidePass.perRide(input, Seq(col("sample_idx")), out) { rows =>
+      val n = rows.length
+      val from = rows.indexWhere(!_.isNullAt(1)) match { case -1 => n; case i => i }
+      val idx = rows.map(r => if (r.isNullAt(1)) 0L else r.getAs[Number](1).longValue).toArray
+      val finite = RidePass.finiteCells(feats.indices.map(i => RidePass.Col.of(rows, f0 + i)), n)
+      val w = RidePass.windows(idx, from, RidePass.Col.of(rows, 2), finite, feats.size,
+        windowSteps, strideSteps, minValidRatio)
+      val labels = confs.indices.map(i => RidePass.Col.of(rows, y0 + i))
+      Iterator.range(0, w.length).map { i =>
+        val k = w.start(i)
+        val matrix = rows.slice(k, k + windowSteps).map(_.toSeq.slice(f0, y0))
+        Row.fromSeq(Seq(rows(k).get(0), rows(k).get(1), w.tMid(i), w.validRatio(i), matrix) ++
+          labels.map(RidePass.labelMean(_, k, windowSteps)))
+      }
+    }
   }
-
-  /** `collect_list` skips nulls, which would silently misalign a window
-    * matrix with missing cells — so features are collected as fixed-width
-    * per-row arrays (array() never drops elements) and `collect_list` only
-    * ever sees non-null arrays. The ffill+zero-fill of the reference's
-    * __getitem__ (model/vesc_dataset.py:134-137) happens in the scorer,
-    * where the matrix is already materialized per window.
-    */
 }

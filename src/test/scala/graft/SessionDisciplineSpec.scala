@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (`HeadTrainer.SumAgg`), one masked-BCE kernel (`TrunkGrad.bceDz`)
   *    and one Adam loop (`HeadTrainer.fit`);
   *  - under `vesc/`, scoring and training share one CNN forward
-  *    (`CnnScorer.Trunk`): each trunk conv layer is applied once.
+  *    (`CnnScorer.Trunk`): each trunk conv layer is applied once;
+  *  - the ride path (`Resampler`, `WindowAssembler`, `Postprocess`,
+  *    `VescPipeline`, `RidePass`) plans no window function.
   */
 class SessionDisciplineSpec extends AnyFunSuite {
 
@@ -100,6 +102,21 @@ class SessionDisciplineSpec extends AnyFunSuite {
       assert(at.size == 1,
         s"expected one $what under $vesc, found ${at.size}: ${at.mkString(", ")}")
     }
+  }
+
+  test("the vesc ride path plans no window functions") {
+    // resample, windows and display run in one per-ride pass (RidePass);
+    // a window function here would bring back a WindowExec per step
+    val vesc = Paths.get("src/main/scala/graft/vesc")
+    val files = Seq("Resampler", "WindowAssembler", "Postprocess", "VescPipeline", "RidePass")
+      .map(f => vesc.resolve(f + ".scala"))
+    val offenders = for {
+      (p, lines) <- sources if files.contains(p)
+      (l, i) <- lines.zipWithIndex
+      if l.contains("expressions.Window") || l.contains("Window.partitionBy")
+    } yield s"$p:${i + 1}"
+    assert(files.forall(f => sources.exists(_._1 == f)), s"missing one of $files")
+    assert(offenders.isEmpty, s"window function on the ride path: ${offenders.mkString(", ")}")
   }
 
   test("the vesc CNN forward keeps one layer sequence") {

@@ -354,6 +354,32 @@ class StreamingSpec extends SparkSuite {
       batch.map(_.toString).sorted.toSeq)
   }
 
+  test("upload arrival signal: the scan reads only the path and plans no exchange") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val uploads = java.nio.file.Files.createTempDirectory("graft_uploads_")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val plan = try {
+      java.nio.file.Files.write(uploads.resolve("a.csv"), "ms_today;\n1;\n".getBytes("UTF-8"))
+      java.nio.file.Files.write(uploads.resolve("skip.txt"), "not a log".getBytes("UTF-8"))
+      val q = StreamingPipeline.uploadAnalysis(spark, uploads.toString,
+        paths => { seen.synchronized { seen ++= paths }; spark.emptyDataFrame })((_, _) => ())
+      try {
+        q.processAllAvailable()
+        // the micro-batch that carried the upload
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      } finally q.stop()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(uploads.toFile)
+    assert(seen.synchronized(seen.toList).map(p => new java.io.File(new java.net.URI(p)).getName)
+      == List("a.csv"))
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.map(s => (s.relation.fileFormat.isInstanceOf[BinaryFileFormat],
+      s.requiredSchema.fieldNames.toSeq)) == Seq((true, Seq("path"))), plan.treeString)
+    assert(plan.collect { case e: Exchange => e }.isEmpty, plan.treeString)
+  }
+
   test("sft ingest stream: assembleChat + pack per drop matches batch exactly") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("sft_drops_")

@@ -12,6 +12,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -20,7 +21,8 @@ import org.scalatest.BeforeAndAfterAll
 import graft.SparkSuite
 
 /** One upload is analyzed once: the production plan reads the log in one
-  * CSV scan, scores in one pass and has no join, and [[App.refresh]]
+  * CSV scan, shuffles once and runs the grid, windows, scores and display
+  * in one per-ride pass with no window operator and no join, and [[App.refresh]]
   * evaluates the timeline in one query. Runs on a [[SyntheticLog]], so it
   * needs no reference checkout.
   */
@@ -32,7 +34,7 @@ class AnalyzeOnceSpec extends SparkSuite with AdaptiveSparkPlanHelper with Befor
   override def afterAll(): Unit =
     try FileUtils.deleteDirectory(dir.toFile) finally super.afterAll()
 
-  test("analyze's executed plan: one CSV scan, one scorer pass, no join, ≤ 3 exchanges") {
+  test("analyze's executed plan: one CSV scan, one exchange, one per-ride pass") {
     val timeline = VescPipeline.analyze(spark, Seq(log))
     assert(timeline.collect().nonEmpty)
     val plan: SparkPlan = timeline.queryExecution.executedPlan
@@ -42,8 +44,9 @@ class AnalyzeOnceSpec extends SparkSuite with AdaptiveSparkPlanHelper with Befor
     assert(collect(plan) { case m: MapPartitionsExec => m }.size == 1, plan.treeString)
     assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, plan.treeString)
     assert(collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan.treeString)
+    assert(collect(plan) { case w: WindowExec => w }.isEmpty, plan.treeString)
     val exchanges = collect(plan) { case e: Exchange => e }.size
-    assert(exchanges <= 3, s"$exchanges exchanges:\n${plan.treeString}")
+    assert(exchanges == 1, s"$exchanges exchanges:\n${plan.treeString}")
   }
 
   test("App.refresh evaluates the timeline once and writes its bar count as rows") {

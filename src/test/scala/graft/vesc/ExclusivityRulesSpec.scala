@@ -122,8 +122,14 @@ class ExclusivityRulesSpec extends SparkSuite {
       Row(Double.box(0.2), Double.box(0.7)),
       Row(Double.box(0.9), Double.box(0.1)))
     val df = spark.createDataFrame(rows, sch)
-    val got = ExclusivityRules.suppressConflicts(df, Seq(Seq("cf_accel", "cf_brake")))
+    val got = DeclarativeOracle.suppressConflicts(df, Seq(Seq("cf_accel", "cf_brake")))
       .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSet
     assert(got == Set((0.4, 0.0), (0.0, 0.7), (0.9, 0.0)))
+    // the production suppression, on the same rows
+    val cf = IndexedSeq(Array(0.4, 0.2, 0.9), Array(0.4, 0.7, 0.1))
+      .map(v => new RidePass.Col(v, new Array[Boolean](3)))
+    RidePass.suppress(cf, Seq(Array(0, 1)))
+    assert((0 until 3).map(i => (cf(0).v(i), cf(1).v(i))).toSet ==
+      Set((0.4, 0.0), (0.0, 0.7), (0.9, 0.0)))
   }
 }

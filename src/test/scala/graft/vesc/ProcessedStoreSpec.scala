@@ -10,24 +10,27 @@ class ProcessedStoreSpec extends SparkSuite {
 
   test("write partitioned by ride_id and prune on read") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_").toString
-    val df = Seq(
-      ("ride_01", 0L, 1.0), ("ride_01", 100L, 2.0),
-      ("ride_02", 0L, 3.0), ("ride_03", 0L, 4.0))
-      .toDF("ride_id", "ms_today", "v")
-    ProcessedStore.write(df, dir)
+    val store = java.nio.file.Files.createTempDirectory("graft_store_")
+    val dir = store.toString
+    try {
+      val df = Seq(
+        ("ride_01", 0L, 1.0), ("ride_01", 100L, 2.0),
+        ("ride_02", 0L, 3.0), ("ride_03", 0L, 4.0))
+        .toDF("ride_id", "ms_today", "v")
+      ProcessedStore.write(df, dir)
 
-    // physical layout: one directory per ride
-    val parts = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("ride_id=")).map(_.getName).sorted
-    assert(parts.toSeq == Seq("ride_id=ride_01", "ride_id=ride_02", "ride_id=ride_03"))
+      // physical layout: one directory per ride
+      val parts = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("ride_id=")).map(_.getName).sorted
+      assert(parts.toSeq == Seq("ride_id=ride_01", "ride_id=ride_02", "ride_id=ride_03"))
 
-    val one = ProcessedStore.readRide(spark, dir, "ride_01")
-    assert(one.count() == 2)
-    // the pruned plan must carry the partition filter
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("ride_01"),
-      s"partition filter missing in plan:\n$plan")
+      val one = ProcessedStore.readRide(spark, dir, "ride_01")
+      assert(one.count() == 2)
+      // the pruned plan must carry the partition filter
+      val plan = one.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("ride_01"),
+        s"partition filter missing in plan:\n$plan")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(store.toFile)
   }
 
   test("salted join equals plain join on a skewed key") {

@@ -2,15 +2,23 @@ package graft.vesc
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import org.apache.commons.io.FileUtils
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The serving boundary: endpoints, content types, 404s, and the path
   * traversal guard — exercised over a real socket with the JDK client.
   * No Spark needed: serving reads already-materialized export artifacts.
+  * Every test deletes the directories and files it creates.
   */
 class ServeSpec extends AnyFunSuite {
+
+  /** `body` over a fresh temp directory, deleted afterwards. */
+  private def withTempDir[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally FileUtils.deleteDirectory(dir.toFile)
+  }
 
   private def get(port: Int, path: String): (Int, String, String) = {
     val conn = URI.create(s"http://127.0.0.1:$port$path").toURL
@@ -35,14 +43,21 @@ class ServeSpec extends AnyFunSuite {
   }
 
   test("health, figure, files, 404, and traversal guard over a real socket") {
-    val dir = Files.createTempDirectory("graft_serve_")
+    withTempDir("graft_serve_")(dir => withSecret(secret => guarded(dir, secret)))
+  }
+
+  private def withSecret[T](body: Path => T): T = {
+    val secret = Files.createTempFile("graft_secret_", ".txt")
+    try body(secret) finally Files.deleteIfExists(secret)
+  }
+
+  private def guarded(dir: Path, secret: Path): Unit = {
     val figure = """{"data":[],"layout":{"barmode":"overlay"}}"""
     Files.write(dir.resolve("timeline_bars.json"),
       figure.getBytes(StandardCharsets.UTF_8))
     Files.write(dir.resolve("mae.csv"),
       "behavior,mae\ncf_brake,0.1\n".getBytes(StandardCharsets.UTF_8))
     // a file OUTSIDE the export dir that traversal must not reach
-    val secret = Files.createTempFile("graft_secret_", ".txt")
     Files.write(secret, "nope".getBytes(StandardCharsets.UTF_8))
 
     val server = Serve.start(dir, 0)
@@ -77,7 +92,10 @@ class ServeSpec extends AnyFunSuite {
   }
 
   test("figure display toggles: ?stack + ?classes (app.py:331,347 parity)") {
-    val dir = Files.createTempDirectory("graft_serve_fig_")
+    withTempDir("graft_serve_fig_")(toggles)
+  }
+
+  private def toggles(dir: Path): Unit = {
     // two named traces + one name-less annotation-style entry (must survive
     // class filtering untouched)
     val figure = """{"data":[{"type":"bar","name":"cf_accel","y":[1]},""" +
@@ -111,7 +129,10 @@ class ServeSpec extends AnyFunSuite {
   }
 
   test("index page: html shell wiring /figure with stack/classes controls") {
-    val dir = Files.createTempDirectory("graft_serve_idx_")
+    withTempDir("graft_serve_idx_")(index)
+  }
+
+  private def index(dir: Path): Unit = {
     val server = Serve.start(dir, 0)
     try {
       val port = server.getAddress.getPort
@@ -131,8 +152,19 @@ class ServeSpec extends AnyFunSuite {
   }
 
   test("upload names are decoded once and must be a plain .csv name") {
-    val dir = Files.createTempDirectory("graft_serve_up_")
-    val uploads = Files.createTempDirectory("graft_serve_uploads_")
+    withTempDir("graft_serve_up_")(dir => withTempDir("graft_serve_uploads_")(upload(dir, _)))
+  }
+
+  test("an upload round trip leaves nothing new in java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def entries = tmp.list().toSet
+    val before = entries
+    withTempDir("graft_serve_up_")(dir => withTempDir("graft_serve_uploads_")(upload(dir, _)))
+    val left = entries -- before
+    assert(left.isEmpty, s"left in $tmp: ${left.mkString(", ")}")
+  }
+
+  private def upload(dir: Path, uploads: Path): Unit = {
     val body = "ms_today;voltage\n1;42.0\n".getBytes(StandardCharsets.UTF_8)
     val server = Serve.start(dir, 0, uploadTo = Some(uploads))
     val port = server.getAddress.getPort
@@ -155,11 +187,12 @@ class ServeSpec extends AnyFunSuite {
   }
 
   test("figure 404s gracefully when nothing was exported") {
-    val empty = Files.createTempDirectory("graft_serve_empty_")
-    val server = Serve.start(empty, 0)
-    try {
-      val (code, body, _) = get(server.getAddress.getPort, "/figure")
-      assert(code == 404 && body.contains("no figure"))
-    } finally server.stop(0)
+    withTempDir("graft_serve_empty_") { empty =>
+      val server = Serve.start(empty, 0)
+      try {
+        val (code, body, _) = get(server.getAddress.getPort, "/figure")
+        assert(code == 404 && body.contains("no figure"))
+      } finally server.stop(0)
+    }
   }
 }
