@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Repetition-based document quality (the Gopher/MassiveText family of
@@ -257,17 +258,14 @@ object TextQualityOps {
     val tok = arr.select(col(docId), explode(col("__l")).as("t"))
     val totals = tok.agg(count(lit(1)).as("__n"),
       count_distinct(col("t")).as("__v"))
-    val lm = tok.groupBy(col("t")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("t").asc)
-      .limit(maxVocab)
+    val lm = capped(tok.groupBy(col("t")).agg(count(lit(1)).as("c")), Nil, "t", "c", maxVocab)
     tok.join(broadcast(lm), Seq("t"), "left")
       .crossJoin(broadcast(totals))
       .groupBy(col(docId))
       .agg(count(lit(1)).as("n_tokens"),
         sum(when(col("c").isNull, 1L).otherwise(0L)).as("n_oov"),
-        (floor(avg(log((coalesce(col("c"), lit(0L)) + lit(1L)).cast("double")
-          / (col("__n") + col("__v")).cast("double"))) * 1e4 + lit(0.5)) / 1e4)
-          .as("avg_logprob"))
+        round4(avg(log((coalesce(col("c"), lit(0L)) + lit(1L)).cast("double")
+          / (col("__n") + col("__v")).cast("double")))).as("avg_logprob"))
   }
 
   /** BIGRAM conditional LM score — one order up from
@@ -291,27 +289,22 @@ object TextQualityOps {
     val arr = matToks(df, docId, textCol, Nil, "bilm-arr")
     val tok = arr.select(col(docId), explode(col("__l")).as("t"))
     val totals = tok.agg(count_distinct(col("t")).as("__v"))
-    val uni = tok.groupBy(col("t")).agg(count(lit(1)).as("c1"))
-      .orderBy(col("c1").desc, col("t").asc)
-      .limit(maxVocab)
+    val uni = capped(tok.groupBy(col("t")).agg(count(lit(1)).as("c1")), Nil, "t", "c1", maxVocab)
       .withColumnRenamed("t", "w1")
     // token array materialized into its own column BEFORE shinglesOf —
     // the documented O(tokens²) re-split trap of passing tokens() inline
     val bi = arr
       .select(col(docId), explode(TextOps.shinglesOf(col("__l"), 2)).as("b"))
       .withColumn("w1", split(col("b"), " ").getItem(0))
-    val blm = bi.groupBy(col("b")).agg(count(lit(1)).as("c2"))
-      .orderBy(col("c2").desc, col("b").asc)
-      .limit(maxVocab)
+    val blm = capped(bi.groupBy(col("b")).agg(count(lit(1)).as("c2")), Nil, "b", "c2", maxVocab)
     bi.join(broadcast(blm), Seq("b"), "left")
       .join(broadcast(uni), Seq("w1"), "left")
       .crossJoin(broadcast(totals))
       .groupBy(col(docId))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(when(col("c2").isNull, 1L).otherwise(0L)).as("n_oov2"),
-        (floor(avg(log((coalesce(col("c2"), lit(0L)) + lit(1L)).cast("double")
-          / (coalesce(col("c1"), lit(0L)) + col("__v")).cast("double"))) * 1e4
-          + lit(0.5)) / 1e4).as("avg_logprob2"))
+        round4(avg(log((coalesce(col("c2"), lit(0L)) + lit(1L)).cast("double")
+          / (coalesce(col("c1"), lit(0L)) + col("__v")).cast("double")))).as("avg_logprob2"))
   }
 
   /** INTERPOLATED TRIGRAM LM score — the next order up from
@@ -336,54 +329,9 @@ object TextQualityOps {
     */
   def trigramLogProb(df: DataFrame, docId: String, textCol: String,
                      maxVocab: Int = 65536, l3: Double = 0.6,
-                     l2: Double = 0.3, l1: Double = 0.1): DataFrame = {
-    require(math.abs(l3 + l2 + l1 - 1.0) < 1e-9, "interpolation weights must sum to 1")
-    // token arrays materialized once — five model/total branches plus the
-    // scoring join all fan out from arr, and the trigram rows feed both
-    // the capped table and the scoring join
-    val arr = matToks(df, docId, textCol, Nil, "trilm-arr")
-    val tok = arr.select(col(docId), explode(col("__l")).as("t"))
-    val totals = tok.agg(count(lit(1)).as("__n"),
-      count_distinct(col("t")).as("__v"))
-    val uni = tok.groupBy(col("t")).agg(count(lit(1)).as("cu"))
-      .orderBy(col("cu").desc, col("t").asc)
-      .limit(maxVocab)
-    val tri = arr
-      .select(col(docId), explode(TextOps.shinglesOf(col("__l"), 3)).as("g3"))
-      .withColumn("__p", split(col("g3"), " "))
-      .withColumn("b12", concat_ws(" ", col("__p").getItem(0), col("__p").getItem(1)))
-      .withColumn("b23", concat_ws(" ", col("__p").getItem(1), col("__p").getItem(2)))
-      .withColumn("w2", col("__p").getItem(1))
-      .withColumn("w3", col("__p").getItem(2))
-      .drop("__p")
-    val bi = arr.select(explode(TextOps.shinglesOf(col("__l"), 2)).as("b"))
-    val blm = bi.groupBy(col("b")).agg(count(lit(1)).as("cb"))
-      .orderBy(col("cb").desc, col("b").asc)
-      .limit(maxVocab)
-    val tlm = tri.groupBy(col("g3")).agg(count(lit(1)).as("ct"))
-      .orderBy(col("ct").desc, col("g3").asc)
-      .limit(maxVocab)
-    val c = (x: String) => coalesce(col(x), lit(0L)).cast("double")
-    tri
-      .join(broadcast(tlm), Seq("g3"), "left")
-      .join(broadcast(blm.withColumnRenamed("b", "b12")
-        .withColumnRenamed("cb", "cb12")), Seq("b12"), "left")
-      .join(broadcast(blm.withColumnRenamed("b", "b23")
-        .withColumnRenamed("cb", "cb23")), Seq("b23"), "left")
-      .join(broadcast(uni.withColumnRenamed("t", "w2")
-        .withColumnRenamed("cu", "cu2")), Seq("w2"), "left")
-      .join(broadcast(uni.withColumnRenamed("t", "w3")
-        .withColumnRenamed("cu", "cu3")), Seq("w3"), "left")
-      .crossJoin(broadcast(totals))
-      .groupBy(col(docId))
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(when(col("ct").isNull, 1L).otherwise(0L)).as("n_oov3"),
-        (floor(avg(log(
-          lit(l3) * (c("ct") + 1.0) / (c("cb12") + col("__v")) +
-            lit(l2) * (c("cb23") + 1.0) / (c("cu2") + col("__v")) +
-            lit(l1) * (c("cu3") + 1.0) / (col("__n") + col("__v"))))
-          * 1e4 + lit(0.5)) / 1e4).as("avg_logprob3"))
-  }
+                     l2: Double = 0.3, l1: Double = 0.1): DataFrame =
+    trigramMean(trigramPositions(df, docId, textCol, Nil, maxVocab, l3, l2, l1),
+      docId, Nil)
 
   /** MIN-K% PROB membership signal (Shi et al. 2023, "Detecting
     * Pretraining Data from Large Language Models"): the mean of the
@@ -407,52 +355,12 @@ object TextQualityOps {
   def minkProb(df: DataFrame, docId: String, textCol: String,
                pctK: Int = 20, maxVocab: Int = 65536): DataFrame = {
     require(pctK >= 1 && pctK <= 100)
-    // same materialization shape as trigramLogProb: tokenize once, keep
-    // the positioned trigram rows for both the capped table and scoring
-    val arr = matToks(df, docId, textCol, Nil, "mink-arr")
-    val tok = arr.select(col(docId), explode(col("__l")).as("t"))
-    val totals = tok.agg(count(lit(1)).as("__n"),
-      count_distinct(col("t")).as("__v"))
-    val uni = tok.groupBy(col("t")).agg(count(lit(1)).as("cu"))
-      .orderBy(col("cu").desc, col("t").asc).limit(maxVocab)
-    val tri = arr
-      .select(col(docId),
-        posexplode(TextOps.shinglesOf(col("__l"), 3)).as(Seq("pos", "g3")))
-      .withColumn("__p", split(col("g3"), " "))
-      .withColumn("b12", concat_ws(" ", col("__p").getItem(0), col("__p").getItem(1)))
-      .withColumn("b23", concat_ws(" ", col("__p").getItem(1), col("__p").getItem(2)))
-      .withColumn("w2", col("__p").getItem(1))
-      .withColumn("w3", col("__p").getItem(2))
-      .drop("__p")
-    val bi = arr.select(explode(TextOps.shinglesOf(col("__l"), 2)).as("b"))
-    val blm = bi.groupBy(col("b")).agg(count(lit(1)).as("cb"))
-      .orderBy(col("cb").desc, col("b").asc).limit(maxVocab)
-    val tlm = tri.groupBy(col("g3")).agg(count(lit(1)).as("ct"))
-      .orderBy(col("ct").desc, col("g3").asc).limit(maxVocab)
-    val c = (x: String) => coalesce(col(x), lit(0L)).cast("double")
-    val lpMilli = floor(log(
-      lit(0.6) * (c("ct") + 1.0) / (c("cb12") + col("__v")) +
-        lit(0.3) * (c("cb23") + 1.0) / (c("cu2") + col("__v")) +
-        lit(0.1) * (c("cu3") + 1.0) / (col("__n") + col("__v"))) * 1000)
-      .cast("long")
-    val scored = tri
-      .join(broadcast(tlm), Seq("g3"), "left")
-      .join(broadcast(blm.withColumnRenamed("b", "b12")
-        .withColumnRenamed("cb", "cb12")), Seq("b12"), "left")
-      .join(broadcast(blm.withColumnRenamed("b", "b23")
-        .withColumnRenamed("cb", "cb23")), Seq("b23"), "left")
-      .join(broadcast(uni.withColumnRenamed("t", "w2")
-        .withColumnRenamed("cu", "cu2")), Seq("w2"), "left")
-      .join(broadcast(uni.withColumnRenamed("t", "w3")
-        .withColumnRenamed("cu", "cu3")), Seq("w3"), "left")
-      .crossJoin(broadcast(totals))
-      .select(col(docId), col("pos"), lpMilli.as("lp"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(docId)).orderBy(col("lp").asc, col("pos").asc)
-    val n = org.apache.spark.sql.expressions.Window.partitionBy(col(docId))
+    val scored = trigramPositions(df, docId, textCol, Nil, maxVocab, 0.6, 0.3, 0.1)
+      .select(col(docId), col("pos"), floor(log(col("__p3")) * 1000).cast("long").as("lp"))
+    val w = Window.partitionBy(col(docId)).orderBy(col("lp").asc, col("pos").asc)
     scored
       .withColumn("__rn", row_number().over(w))
-      .withColumn("__nt", count(lit(1)).over(n))
+      .withColumn("__nt", count(lit(1)).over(Window.partitionBy(col(docId))))
       .withColumn("__k", expr(s"(__nt * $pctK + 99) div 100"))
       .groupBy(col(docId))
       .agg(first(col("__nt")).as("n_trigrams"),
@@ -463,6 +371,64 @@ object TextQualityOps {
       .withColumn("n_trigrams", col("n_trigrams").cast("long"))
       .withColumn("k_used", col("k_used").cast("long"))
   }
+
+  /** The interpolated trigram model scored at every trigram position:
+    * `(docId, keys…, pos, ct, __p3)`, with `ct` the position's capped
+    * trigram count (null when out of the table) and `__p3` its
+    * interpolated probability. Every count table, total and cap is keyed
+    * by `keys` (none, or the language column), so a keyed document is
+    * scored under its own group's counts only, with the group's V driving
+    * its add-one floors. Tokenized once; the exploded rows feed both the
+    * capped trigram table and the scoring joins.
+    */
+  private def trigramPositions(df: DataFrame, docId: String, textCol: String,
+                               keys: Seq[String], maxVocab: Int, l3: Double,
+                               l2: Double, l1: Double): DataFrame = {
+    require(math.abs(l3 + l2 + l1 - 1.0) < 1e-9, "interpolation weights must sum to 1")
+    val k = keys.map(col)
+    val arr = matToks(df, docId, textCol, k, "trilm-arr")
+    val tok = arr.select(k :+ explode(col("__l")).as("t"): _*)
+    val totals = tok.groupBy(k: _*).agg(count(lit(1)).as("__n"),
+      count_distinct(col("t")).as("__v"))
+    val uni = capped(tok.groupBy(k :+ col("t"): _*).agg(count(lit(1)).as("cu")),
+      keys, "t", "cu", maxVocab)
+    val tri = arr
+      .select(col(docId) +: k :+
+        posexplode(TextOps.shinglesOf(col("__l"), 3)).as(Seq("pos", "g3")): _*)
+      .withColumn("__p", split(col("g3"), " "))
+      .withColumn("b12", concat_ws(" ", col("__p").getItem(0), col("__p").getItem(1)))
+      .withColumn("b23", concat_ws(" ", col("__p").getItem(1), col("__p").getItem(2)))
+      .withColumn("w2", col("__p").getItem(1))
+      .withColumn("w3", col("__p").getItem(2))
+      .drop("__p")
+    val blm = capped(arr.select(k :+ explode(TextOps.shinglesOf(col("__l"), 2)).as("b"): _*)
+      .groupBy(k :+ col("b"): _*).agg(count(lit(1)).as("cb")), keys, "b", "cb", maxVocab)
+    val tlm = capped(tri.groupBy(k :+ col("g3"): _*).agg(count(lit(1)).as("ct")),
+      keys, "g3", "ct", maxVocab)
+    val c = (x: String) => coalesce(col(x), lit(0L)).cast("double")
+    withScalars(tri
+      .join(broadcast(tlm), keys :+ "g3", "left")
+      .join(broadcast(blm.withColumnRenamed("b", "b12")
+        .withColumnRenamed("cb", "cb12")), keys :+ "b12", "left")
+      .join(broadcast(blm.withColumnRenamed("b", "b23")
+        .withColumnRenamed("cb", "cb23")), keys :+ "b23", "left")
+      .join(broadcast(uni.withColumnRenamed("t", "w2")
+        .withColumnRenamed("cu", "cu2")), keys :+ "w2", "left")
+      .join(broadcast(uni.withColumnRenamed("t", "w3")
+        .withColumnRenamed("cu", "cu3")), keys :+ "w3", "left"), keys, totals)
+      .select(Seq(col(docId)) ++ k ++ Seq(col("pos"), col("ct"),
+        (lit(l3) * (c("ct") + 1.0) / (c("cb12") + col("__v")) +
+          lit(l2) * (c("cb23") + 1.0) / (c("cu2") + col("__v")) +
+          lit(l1) * (c("cu3") + 1.0) / (col("__n") + col("__v"))).as("__p3")): _*)
+  }
+
+  /** Per-document mean of [[trigramPositions]]' log-probabilities. */
+  private def trigramMean(positions: DataFrame, docId: String,
+                          keys: Seq[String]): DataFrame =
+    positions.groupBy(col(docId) +: keys.map(col): _*)
+      .agg(count(lit(1)).as("n_trigrams"),
+        sum(when(col("ct").isNull, 1L).otherwise(0L)).as("n_oov3"),
+        round4(avg(log(col("__p3")))).as("avg_logprob3"))
 
   /** MODIFIED KNESER-NEY trigram LM score — the smoothing CCNet's
     * published 5-gram filter actually uses (Kneser & Ney 1995; the
@@ -481,142 +447,24 @@ object TextQualityOps {
     * mass γ = (D₁N₁ + D₂N₂ + D₃₊N₃₊)/denominator. A context absent
     * from its (capped) table falls through to the next order whole.
     *
-    * Scale shape is [[trigramLogProb]]'s: every model table df-capped
+    * This is [[knLogProb]] at order 3: every model table df-capped
     * deterministically (magnitude desc / key asc) at `maxVocab` and
-    * broadcast — the trigram, the b12-context (counts + follower-class
-    * counts, one table so presence is consistent), the b23 continuation
-    * counts, the w2 middle-order table, the w3 unigram-continuation
-    * counts; count-of-counts and totals are two tiny aggregates over
-    * the PRE-cap tables (the cap only moves tail grams to the unseen
-    * bucket). All discount arithmetic is closed-form over integers, so
-    * the oracle replays it to the bit. `ln` takes a 1e-10 floor (a
-    * pathological corpus could zero every γ); docs with < 3 tokens are
-    * absent.
+    * broadcast; count-of-counts and totals are tiny aggregates over the
+    * PRE-cap tables. All discount arithmetic is closed-form over
+    * integers, so the oracle replays it to the bit. `ln` takes a 1e-10
+    * floor (a pathological corpus could zero every γ); docs with < 3
+    * tokens are absent.
+    *
+    * Output: (docId, n_trigrams, n_oov3, avg_logprob_kn).
     */
   def knTrigramLogProb(df: DataFrame, docId: String, textCol: String,
-                       maxVocab: Int = 65536): DataFrame = {
-    // tokenize once (doc-sized token arrays); the exploded n-gram rows
-    // and every count table stay UN-materialized — their aggregation
-    // exchanges are shared across consumers by Spark's ReuseExchange,
-    // and caching the corpus-sized exploded tables measured SLOWER than
-    // recomputing them from the cached arrays (r18 bisect).
-    val arr = matToks(df, docId, textCol, Nil, "knlm-arr")
-    val tok = arr.select(col(docId), explode(col("__l")).as("t"))
-    val vTot = tok.agg(count_distinct(col("t")).as("__v"))
-    val tri = arr
-      .select(col(docId), explode(TextOps.shinglesOf(col("__l"), 3)).as("g3"))
-      .withColumn("__p", split(col("g3"), " "))
-      .withColumn("b12", concat_ws(" ", col("__p").getItem(0), col("__p").getItem(1)))
-      .withColumn("b23", concat_ws(" ", col("__p").getItem(1), col("__p").getItem(2)))
-      .withColumn("w2", col("__p").getItem(1))
-      .withColumn("w3", col("__p").getItem(2))
-      .drop("__p")
-    val triCounts = tri.groupBy(col("g3")).agg(count(lit(1)).as("ct"))
-    // trigram-order count-of-counts (for the top-level discounts)
-    val cocT = triCounts.agg(
-      sum(when(col("ct") === 1, 1L).otherwise(0L)).as("t_n1"),
-      sum(when(col("ct") === 2, 1L).otherwise(0L)).as("t_n2"),
-      sum(when(col("ct") === 3, 1L).otherwise(0L)).as("t_n3"),
-      sum(when(col("ct") === 4, 1L).otherwise(0L)).as("t_n4"))
-    val triTypes = triCounts.withColumn("__p", split(col("g3"), " "))
-      .select(col("ct"),
-        concat_ws(" ", col("__p").getItem(0), col("__p").getItem(1)).as("b12"),
-        concat_ws(" ", col("__p").getItem(1), col("__p").getItem(2)).as("b23"))
-    // b12 context table: bigram count + follower-type counts by class —
-    // ONE table so cb12 and the γ numerator are present/absent together
-    val biCounts = arr
-      .select(explode(TextOps.shinglesOf(col("__l"), 2)).as("b"))
-      .groupBy(col("b")).agg(count(lit(1)).as("cb"))
-    val nf = triTypes.groupBy(col("b12")).agg(
-      sum(when(col("ct") === 1, 1L).otherwise(0L)).as("nf1"),
-      sum(when(col("ct") === 2, 1L).otherwise(0L)).as("nf2"),
-      sum(when(col("ct") >= 3, 1L).otherwise(0L)).as("nf3p"))
-    val ctx12 = biCounts.withColumnRenamed("b", "b12")
-      .join(nf, Seq("b12"), "left")
-      .select(col("b12"), col("cb"),
-        coalesce(col("nf1"), lit(0L)).as("nf1"),
-        coalesce(col("nf2"), lit(0L)).as("nf2"),
-        coalesce(col("nf3p"), lit(0L)).as("nf3p"))
-    // middle order: continuation counts per b23 type + their
-    // count-of-counts + the per-w2 denominators / follower classes
-    val cont23 = triTypes.groupBy(col("b23")).agg(count(lit(1)).as("n123"))
-    val cocC = cont23.agg(
-      sum(when(col("n123") === 1, 1L).otherwise(0L)).as("c_n1"),
-      sum(when(col("n123") === 2, 1L).otherwise(0L)).as("c_n2"),
-      sum(when(col("n123") === 3, 1L).otherwise(0L)).as("c_n3"),
-      sum(when(col("n123") === 4, 1L).otherwise(0L)).as("c_n4"))
-    val mid = cont23.withColumn("w2", split(col("b23"), " ").getItem(0))
-      .groupBy(col("w2")).agg(
-        sum(col("n123")).as("midden"),
-        sum(when(col("n123") === 1, 1L).otherwise(0L)).as("m1"),
-        sum(when(col("n123") === 2, 1L).otherwise(0L)).as("m2"),
-        sum(when(col("n123") >= 3, 1L).otherwise(0L)).as("m3p"))
-    // lowest order: unigram continuation counts over bigram TYPES
-    val biTypes = biCounts.withColumn("w3", split(col("b"), " ").getItem(1))
-    val contW = biTypes.groupBy(col("w3")).agg(count(lit(1)).as("nw"))
-    val nbTot = biCounts.agg(count(lit(1)).as("__nb"))
-    // deterministic df-caps (magnitude desc / key asc) on every
-    // broadcast table — the scorer's working set stays bounded
-    val tlmC = triCounts.orderBy(col("ct").desc, col("g3").asc).limit(maxVocab)
-    val ctxC = ctx12.orderBy(col("cb").desc, col("b12").asc).limit(maxVocab)
-    val c23C = cont23.orderBy(col("n123").desc, col("b23").asc).limit(maxVocab)
-    val midC = mid.orderBy(col("midden").desc, col("w2").asc).limit(maxVocab)
-    val cwC = contW.orderBy(col("nw").desc, col("w3").asc).limit(maxVocab)
-    // discounts: Y = n1/(n1+2n2); Di = i - (i+1)·Y·n(i+1)/ni, clamped
-    val disc = (n1: Column, n2: Column, n3: Column, n4: Column,
-        slot: Int, dflt: Double) => {
-      val y = n1.cast("double") / (n1 + lit(2) * n2).cast("double")
-      val (num, den, base) = slot match {
-        case 1 => (n2, n1, 1.0); case 2 => (n3, n2, 2.0); case _ => (n4, n3, 3.0)
-      }
-      when(den > 0 && (n1 + lit(2) * n2) > 0,
-        greatest(lit(base) - lit(base + 1) * y * num.cast("double")
-          / den.cast("double"), lit(0.0))).otherwise(lit(dflt))
-    }
-    val scored = tri
-      .join(broadcast(tlmC), Seq("g3"), "left")
-      .join(broadcast(ctxC), Seq("b12"), "left")
-      .join(broadcast(c23C), Seq("b23"), "left")
-      .join(broadcast(midC), Seq("w2"), "left")
-      .join(broadcast(cwC), Seq("w3"), "left")
-      .crossJoin(broadcast(cocT))
-      .crossJoin(broadcast(cocC))
-      .crossJoin(broadcast(vTot))
-      .crossJoin(broadcast(nbTot))
-    val tD1 = disc(col("t_n1"), col("t_n2"), col("t_n3"), col("t_n4"), 1, 0.5)
-    val tD2 = disc(col("t_n1"), col("t_n2"), col("t_n3"), col("t_n4"), 2, 1.0)
-    val tD3 = disc(col("t_n1"), col("t_n2"), col("t_n3"), col("t_n4"), 3, 1.5)
-    val cD1 = disc(col("c_n1"), col("c_n2"), col("c_n3"), col("c_n4"), 1, 0.5)
-    val cD2 = disc(col("c_n1"), col("c_n2"), col("c_n3"), col("c_n4"), 2, 1.0)
-    val cD3 = disc(col("c_n1"), col("c_n2"), col("c_n3"), col("c_n4"), 3, 1.5)
-    val dOf = (c: Column, d1: Column, d2: Column, d3: Column) =>
-      when(c >= 3, d3).when(c === 2, d2).when(c === 1, d1).otherwise(lit(0.0))
-    val p1 = (coalesce(col("nw"), lit(0L)) + lit(1L)).cast("double") /
-      (col("__nb") + col("__v")).cast("double")
-    val n123v = coalesce(col("n123"), lit(0L))
-    val p2 = when(col("midden").isNull, p1).otherwise(
-      greatest(n123v.cast("double") - dOf(n123v, cD1, cD2, cD3), lit(0.0))
-        / col("midden").cast("double")
-        + ((cD1 * col("m1") + cD2 * col("m2") + cD3 * col("m3p"))
-          / col("midden").cast("double")) * p1)
-    val ctv = coalesce(col("ct"), lit(0L))
-    val p3 = when(col("cb").isNull, p2).otherwise(
-      greatest(ctv.cast("double") - dOf(ctv, tD1, tD2, tD3), lit(0.0))
-        / col("cb").cast("double")
-        + ((tD1 * col("nf1") + tD2 * col("nf2") + tD3 * col("nf3p"))
-          / col("cb").cast("double")) * p2)
-    scored
-      .groupBy(col(docId))
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(when(col("ct").isNull, 1L).otherwise(0L)).as("n_oov3"),
-        (floor(avg(log(greatest(p3, lit(1e-10)))) * 1e4 + lit(0.5)) / 1e4)
-          .as("avg_logprob_kn"))
-  }
+                       maxVocab: Int = 65536): DataFrame =
+    knLogProb(df, docId, textCol, 3, Nil, maxVocab)
 
   /** PER-LANGUAGE interpolated trigram LM score — the sharding CCNet
     * actually runs (Wenzek et al. 2020 §3.2-3.3 train ONE LM per
     * language and bucket within the language): the [[trigramLogProb]]
-    * ladder with every model table, total, and cap keyed by `langCol`.
+    * model with every table, total, and cap keyed by `langCol`.
     * A French document is scored under the French counts only; the
     * per-language vocabulary size V_lang drives its own add-one floors.
     *
@@ -624,119 +472,36 @@ object TextQualityOps {
     * partials, one shuffle per order; the deterministic df-cap becomes
     * a row_number window over the MODEL table partitioned by lang
     * (gram-vocabulary-sized, never documents); per-language totals are
-    * a #langs-row broadcast joined on lang. All tables stay broadcast
-    * (≤ #langs·maxVocab rows) and the interpolation arithmetic is
-    * bit-identical to the global scorer, so the oracle replays the
-    * whole lang-keyed ladder.
+    * a #langs-row broadcast joined on lang. The interpolation arithmetic
+    * is the global scorer's, so the oracle replays the lang-keyed model.
     */
   def langTrigramLogProb(df: DataFrame, docId: String, textCol: String,
                          langCol: String, maxVocab: Int = 65536,
                          l3: Double = 0.6, l2: Double = 0.3,
-                         l1: Double = 0.1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(math.abs(l3 + l2 + l1 - 1.0) < 1e-9, "interpolation weights must sum to 1")
-    val lang = col(langCol)
-    val arr = matToks(df, docId, textCol, Seq(lang), "langlm-arr")
-    val tok = arr.select(lang, col(docId), explode(col("__l")).as("t"))
-    val totals = tok.groupBy(lang).agg(count(lit(1)).as("__n"),
-      count_distinct(col("t")).as("__v"))
-    def capped(grams: DataFrame, key: String, cnt: String): DataFrame =
-      grams.withColumn("__r", row_number().over(
-          Window.partitionBy(lang).orderBy(col(cnt).desc, col(key).asc)))
-        .filter(col("__r") <= maxVocab).drop("__r")
-    val uni = capped(tok.groupBy(lang, col("t")).agg(count(lit(1)).as("cu")),
-      "t", "cu")
-    val tri = arr
-      .select(col(docId), lang,
-        explode(TextOps.shinglesOf(col("__l"), 3)).as("g3"))
-      .withColumn("__p", split(col("g3"), " "))
-      .withColumn("b12", concat_ws(" ", col("__p").getItem(0), col("__p").getItem(1)))
-      .withColumn("b23", concat_ws(" ", col("__p").getItem(1), col("__p").getItem(2)))
-      .withColumn("w2", col("__p").getItem(1))
-      .withColumn("w3", col("__p").getItem(2))
-      .drop("__p")
-    val bi = arr.select(lang, explode(TextOps.shinglesOf(col("__l"), 2)).as("b"))
-    val blm = capped(bi.groupBy(lang, col("b")).agg(count(lit(1)).as("cb")),
-      "b", "cb")
-    val tlm = capped(tri.groupBy(lang, col("g3")).agg(count(lit(1)).as("ct")),
-      "g3", "ct")
-    val c = (x: String) => coalesce(col(x), lit(0L)).cast("double")
-    tri
-      .join(broadcast(tlm), Seq(langCol, "g3"), "left")
-      .join(broadcast(blm.withColumnRenamed("b", "b12")
-        .withColumnRenamed("cb", "cb12")), Seq(langCol, "b12"), "left")
-      .join(broadcast(blm.withColumnRenamed("b", "b23")
-        .withColumnRenamed("cb", "cb23")), Seq(langCol, "b23"), "left")
-      .join(broadcast(uni.withColumnRenamed("t", "w2")
-        .withColumnRenamed("cu", "cu2")), Seq(langCol, "w2"), "left")
-      .join(broadcast(uni.withColumnRenamed("t", "w3")
-        .withColumnRenamed("cu", "cu3")), Seq(langCol, "w3"), "left")
-      .join(broadcast(totals), Seq(langCol))
-      .groupBy(col(docId), lang)
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(when(col("ct").isNull, 1L).otherwise(0L)).as("n_oov3"),
-        (floor(avg(log(
-          lit(l3) * (c("ct") + 1.0) / (c("cb12") + col("__v")) +
-            lit(l2) * (c("cb23") + 1.0) / (c("cu2") + col("__v")) +
-            lit(l1) * (c("cu3") + 1.0) / (col("__n") + col("__v"))))
-          * 1e4 + lit(0.5)) / 1e4).as("avg_logprob3"))
-  }
+                         l1: Double = 0.1): DataFrame =
+    trigramMean(trigramPositions(df, docId, textCol, Seq(langCol), maxVocab,
+      l3, l2, l1), docId, Seq(langCol))
 
   /** PER-LANGUAGE perplexity bucketing — CCNet's published shard shape:
     * [[langTrigramLogProb]] scores under each language's own LM, then
     * head/middle/tail terciles WITHIN each language (an easy language
-    * must not crowd a hard one out of the head). Same bounded-histogram
-    * threshold machinery as [[perplexityBuckets]], with the histogram,
-    * cumulative window, and the two threshold scalars all keyed by
-    * lang — the window still runs over (lang, centi-cell) histogram
-    * rows, never documents, and assignment is a #langs-row broadcast.
+    * must not crowd a hard one out of the head). The [[bucketize]]
+    * terciles keyed by lang: the cumulative window runs over (lang,
+    * centi-cell) histogram rows, never documents, and assignment is a
+    * #langs-row broadcast.
     */
   def langPerplexityBuckets(df: DataFrame, docId: String, textCol: String,
                             langCol: String,
-                            maxVocab: Int = 65536): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = langTrigramLogProb(df, docId, textCol, langCol, maxVocab)
-      .withColumn("lp_centi", floor(col("avg_logprob3") * 100).cast("long"))
-    val lang = col(langCol)
-    val hist = scored.groupBy(lang, col("lp_centi"))
-      .agg(count(lit(1)).as("__c"))
-    val cum = hist.withColumn("__cum",
-      sum(col("__c")).over(Window.partitionBy(lang).orderBy(col("lp_centi").desc)))
-    val tot = scored.groupBy(lang).agg(count(lit(1)).as("__n"))
-    val ths = cum.join(broadcast(tot), Seq(langCol))
-      .groupBy(lang)
-      .agg(
-        max(when(col("__cum") >= expr("(__n + 2) div 3"), col("lp_centi")))
-          .as("__t1"),
-        max(when(col("__cum") >= expr("(2 * __n + 2) div 3"), col("lp_centi")))
-          .as("__t2"))
-    scored.join(broadcast(ths), Seq(langCol))
-      .select(col(docId), lang, col("avg_logprob3"), col("lp_centi"),
-        when(col("lp_centi") >= col("__t1"), "head")
-          .when(col("lp_centi") >= col("__t2"), "middle")
-          .otherwise("tail").as("ppl_bucket"))
-  }
+                            maxVocab: Int = 65536): DataFrame =
+    bucketize(langTrigramLogProb(df, docId, textCol, langCol, maxVocab),
+      docId, "avg_logprob3", Seq(langCol))
 
   /** CCNet-style PERPLEXITY BUCKETING (Wenzek et al. 2020 §3.3): score
     * every document under the corpus LM ([[trigramLogProb]]), then
     * split the corpus into equal-count head / middle / tail buckets —
     * the head is what CCNet keeps for training, the tail is dropped,
-    * the middle is the tunable margin.
-    *
-    * Scale shape — thresholds WITHOUT a corpus sort: scores are
-    * quantized to centi-log-prob integers, histogrammed (the value
-    * space is score-granularity-bounded — a few thousand cells
-    * regardless of corpus size — so the table is broadcast-sized by
-    * construction), and the two tercile boundaries fall out of one
-    * cumulative count over that bounded histogram. The only window in
-    * the plan runs over histogram CELLS, never documents; bucket
-    * assignment is a broadcast of two scalars. This is the
-    * sampled-quantile posture production CCNet uses, made exact and
-    * engine-replayable by the quantization.
-    *
-    * Tie handling is deterministic: a boundary cell's documents all
-    * land in the BETTER bucket (thresholds are inclusive maxima), so
-    * buckets are equal-count up to boundary-cell ties.
+    * the middle is the tunable margin. Thresholds come from
+    * [[bucketize]] without a corpus sort.
     *
     * Output: (docId, avg_logprob3, lp_centi, ppl_bucket); docs with
     * fewer than 3 tokens are absent (no trigram evidence), as in
@@ -744,20 +509,15 @@ object TextQualityOps {
     */
   def perplexityBuckets(df: DataFrame, docId: String, textCol: String,
                         maxVocab: Int = 65536): DataFrame =
-    bucketize(trigramLogProb(df, docId, textCol, maxVocab)
-      .withColumnRenamed("avg_logprob3", "__score"), docId)
-      .withColumnRenamed("__score", "avg_logprob3")
+    bucketize(trigramLogProb(df, docId, textCol, maxVocab), docId, "avg_logprob3", Nil)
 
   /** [[perplexityBuckets]] over the modified-KN scorer
     * ([[knTrigramLogProb]]) — CCNet's published combination: KN-smoothed
-    * LM scores into head/middle/tail terciles. Identical
-    * histogram-bounded threshold machinery.
+    * LM scores into head/middle/tail terciles.
     */
   def knPerplexityBuckets(df: DataFrame, docId: String, textCol: String,
                           maxVocab: Int = 65536): DataFrame =
-    bucketize(knTrigramLogProb(df, docId, textCol, maxVocab)
-      .withColumnRenamed("avg_logprob_kn", "__score"), docId)
-      .withColumnRenamed("__score", "avg_logprob_kn")
+    bucketize(knTrigramLogProb(df, docId, textCol, maxVocab), docId, "avg_logprob_kn", Nil)
 
   /** MODIFIED KNESER-NEY **5-gram** LM score — the exact order of
     * CCNet's published filter (Wenzek et al. 2020 use KenLM's 5-gram
@@ -774,499 +534,259 @@ object TextQualityOps {
     * continuation count — the number of distinct NEXT-higher-order raw
     * n-gram types ending in the gram (Chen & Goodman 1999 eq. 18) — and
     * each order carries its own three-discount set D₁/D₂/D₃₊ derived
-    * from that order's count-of-counts (same Y/Dᵢ arithmetic and slot
-    * defaults as [[knTrigramLogProb]]). A context missing from its
-    * (capped) denominator table falls through to the next order whole.
+    * from that order's count-of-counts. This is [[knLogProb]] at order 5:
+    * nine model tables, each df-capped and broadcast. Docs with < 5
+    * tokens are absent (no 5-gram evidence).
     *
-    * Scale shape is unchanged: nine model tables (the 5-gram LM, the
-    * w₁..w₄ context table, and a continuation + denominator table pair
-    * per middle order plus the unigram-continuation floor), each
-    * df-capped deterministically (magnitude desc / key asc) at
-    * `maxVocab` and broadcast; count-of-counts are four tiny aggregates
-    * over the PRE-cap tables; all arithmetic is closed-form over
-    * integers so the oracle replays it to the bit. Docs with < 5 tokens
-    * are absent (no 5-gram evidence).
+    * Output: (docId, n_5grams, n_oov5, avg_logprob_kn5).
     */
   def kn5LogProb(df: DataFrame, docId: String, textCol: String,
                  maxVocab: Int = 65536): DataFrame =
-    // tokenize once (doc-sized token arrays, the one expensive regex
-    // pass every branch shares); the exploded 5-gram rows and the count
-    // tables stay UN-materialized — their aggregation exchanges are
-    // shared across the nine model-table branches by ReuseExchange, and
-    // caching the corpus-sized exploded tables measured SLOWER than
-    // recomputing them from the cached arrays (r18 bisect: 15.4 s →
-    // 40-100 s with g5/g5cFull/q*c persisted).
-    kn5LogProbArr(
-      matToks(df, docId, textCol, Nil, "kn5-arr"),
-      docId, maxVocab)
-
-  /** [[kn5LogProb]] over an ALREADY-TOKENIZED frame `(docId, __l)` —
-    * the shared back half that lets callers (the per-language fan-out
-    * especially) tokenize and materialize the corpus ONCE and feed
-    * slices of that one cache through the ladder.
-    */
-  private def kn5LogProbArr(arr: DataFrame, docId: String,
-                            maxVocab: Int): DataFrame = {
-    val tok = arr.select(col(docId), explode(col("__l")).as("t"))
-    val vTot = tok.agg(count_distinct(col("t")).as("__v"))
-    val pp = (i: Int) => col("__p").getItem(i)
-    val g5 = arr
-      .select(col(docId), explode(TextOps.shinglesOf(col("__l"), 5)).as("g5"))
-      .withColumn("__p", split(col("g5"), " "))
-      .withColumn("b1234", concat_ws(" ", pp(0), pp(1), pp(2), pp(3)))
-      .withColumn("s2345", concat_ws(" ", pp(1), pp(2), pp(3), pp(4)))
-      .withColumn("c234", concat_ws(" ", pp(1), pp(2), pp(3)))
-      .withColumn("s345", concat_ws(" ", pp(2), pp(3), pp(4)))
-      .withColumn("c34", concat_ws(" ", pp(2), pp(3)))
-      .withColumn("s45", concat_ws(" ", pp(3), pp(4)))
-      .withColumn("w4", pp(3))
-      .withColumn("w5", pp(4))
-      .drop("__p")
-    // raw 5-gram counts, carrying the derived keys (all functions of g5)
-    val g5cFull = g5.groupBy(col("g5"), col("b1234"), col("s2345"),
-      col("c234")).agg(count(lit(1)).as("ct"))
-    val g5c = g5cFull.select(col("g5"), col("ct"))
-    // per-order count-of-counts helper (PRE-cap, for the discounts)
-    def coc(dfc: DataFrame, cc: String, pfx: String): DataFrame = dfc.agg(
-      sum(when(col(cc) === 1, 1L).otherwise(0L)).as(pfx + "_n1"),
-      sum(when(col(cc) === 2, 1L).otherwise(0L)).as(pfx + "_n2"),
-      sum(when(col(cc) === 3, 1L).otherwise(0L)).as(pfx + "_n3"),
-      sum(when(col(cc) === 4, 1L).otherwise(0L)).as(pfx + "_n4"))
-    val coc5 = coc(g5c, "ct", "a")
-    // raw lower-order n-gram count tables (their TYPES feed the
-    // continuation ladder), each carrying its suffix/prefix keys
-    val q4c = arr.select(explode(TextOps.shinglesOf(col("__l"), 4)).as("q4"))
-      .withColumn("__p", split(col("q4"), " "))
-      .select(col("q4"), concat_ws(" ", pp(1), pp(2), pp(3)).as("s345k"),
-        concat_ws(" ", pp(1), pp(2)).as("c34k"))
-      .groupBy(col("q4"), col("s345k"), col("c34k"))
-      .agg(count(lit(1)).as("cq4"))
-    val q3c = arr.select(explode(TextOps.shinglesOf(col("__l"), 3)).as("q3"))
-      .withColumn("__p", split(col("q3"), " "))
-      .select(col("q3"), concat_ws(" ", pp(1), pp(2)).as("s45k"),
-        pp(1).as("w4k"))
-      .groupBy(col("q3"), col("s45k"), col("w4k"))
-      .agg(count(lit(1)).as("cq3"))
-    val q2c = arr.select(explode(TextOps.shinglesOf(col("__l"), 2)).as("q2"))
-      .withColumn("__p", split(col("q2"), " "))
-      .select(col("q2"), pp(1).as("w5k"))
-      .groupBy(col("q2"), col("w5k")).agg(count(lit(1)).as("cq2"))
-    // top-order context table: raw 4-gram count + follower classes from
-    // the raw 5-gram type counts — ONE table so presence is consistent
-    val nf5 = g5cFull.groupBy(col("b1234")).agg(
-      sum(when(col("ct") === 1, 1L).otherwise(0L)).as("nf1"),
-      sum(when(col("ct") === 2, 1L).otherwise(0L)).as("nf2"),
-      sum(when(col("ct") >= 3, 1L).otherwise(0L)).as("nf3p"))
-    val ctx5 = q4c.select(col("q4").as("b1234"), col("cq4").as("cb1234"))
-      .join(nf5, Seq("b1234"), "left")
-      .select(col("b1234"), col("cb1234"),
-        coalesce(col("nf1"), lit(0L)).as("nf1"),
-        coalesce(col("nf2"), lit(0L)).as("nf2"),
-        coalesce(col("nf3p"), lit(0L)).as("nf3p"))
-    // order-4 continuation: distinct 5-gram types per 4-suffix, and the
-    // per-context (w2w3w4) denominators / follower classes
-    val cont4F = g5cFull.groupBy(col("s2345"), col("c234"))
-      .agg(count(lit(1)).as("n4"))
-    val cont4 = cont4F.select(col("s2345"), col("n4"))
-    val coc4 = coc(cont4, "n4", "b")
-    val den4 = cont4F.groupBy(col("c234")).agg(
-      sum(col("n4")).as("d4"),
-      sum(when(col("n4") === 1, 1L).otherwise(0L)).as("e4_1"),
-      sum(when(col("n4") === 2, 1L).otherwise(0L)).as("e4_2"),
-      sum(when(col("n4") >= 3, 1L).otherwise(0L)).as("e4_3p"))
-    // order-3 continuation from raw 4-gram TYPES
-    val cont3F = q4c.groupBy(col("s345k"), col("c34k"))
-      .agg(count(lit(1)).as("n3"))
-    val cont3 = cont3F.select(col("s345k").as("s345"), col("n3"))
-    val coc3 = coc(cont3, "n3", "c")
-    val den3 = cont3F.groupBy(col("c34k")).agg(
-        sum(col("n3")).as("d3"),
-        sum(when(col("n3") === 1, 1L).otherwise(0L)).as("e3_1"),
-        sum(when(col("n3") === 2, 1L).otherwise(0L)).as("e3_2"),
-        sum(when(col("n3") >= 3, 1L).otherwise(0L)).as("e3_3p"))
-      .withColumnRenamed("c34k", "c34")
-    // order-2 continuation from raw trigram TYPES
-    val cont2F = q3c.groupBy(col("s45k"), col("w4k"))
-      .agg(count(lit(1)).as("n2"))
-    val cont2 = cont2F.select(col("s45k").as("s45"), col("n2"))
-    val coc2 = coc(cont2, "n2", "d")
-    val den2 = cont2F.groupBy(col("w4k")).agg(
-        sum(col("n2")).as("d2"),
-        sum(when(col("n2") === 1, 1L).otherwise(0L)).as("e2_1"),
-        sum(when(col("n2") === 2, 1L).otherwise(0L)).as("e2_2"),
-        sum(when(col("n2") >= 3, 1L).otherwise(0L)).as("e2_3p"))
-      .withColumnRenamed("w4k", "w4")
-    // lowest order: unigram continuation counts over raw bigram TYPES
-    val contW = q2c.groupBy(col("w5k")).agg(count(lit(1)).as("nw"))
-      .withColumnRenamed("w5k", "w5")
-    val nbTot = q2c.agg(count(lit(1)).as("__nb"))
-    // deterministic df-caps (magnitude desc / key asc) on every
-    // broadcast table — the scorer's working set stays bounded
-    val g5lm = g5c.orderBy(col("ct").desc, col("g5").asc).limit(maxVocab)
-    val ctx5C = ctx5.orderBy(col("cb1234").desc, col("b1234").asc).limit(maxVocab)
-    val cont4C = cont4.orderBy(col("n4").desc, col("s2345").asc).limit(maxVocab)
-    val den4C = den4.orderBy(col("d4").desc, col("c234").asc).limit(maxVocab)
-    val cont3C = cont3.orderBy(col("n3").desc, col("s345").asc).limit(maxVocab)
-    val den3C = den3.orderBy(col("d3").desc, col("c34").asc).limit(maxVocab)
-    val cont2C = cont2.orderBy(col("n2").desc, col("s45").asc).limit(maxVocab)
-    val den2C = den2.orderBy(col("d2").desc, col("w4").asc).limit(maxVocab)
-    val cwC = contW.orderBy(col("nw").desc, col("w5").asc).limit(maxVocab)
-    // discounts: Y = n1/(n1+2n2); Di = i - (i+1)·Y·n(i+1)/ni, clamped
-    val disc = (n1: Column, n2: Column, n3: Column, n4: Column,
-        slot: Int, dflt: Double) => {
-      val y = n1.cast("double") / (n1 + lit(2) * n2).cast("double")
-      val (num, den, base) = slot match {
-        case 1 => (n2, n1, 1.0); case 2 => (n3, n2, 2.0); case _ => (n4, n3, 3.0)
-      }
-      when(den > 0 && (n1 + lit(2) * n2) > 0,
-        greatest(lit(base) - lit(base + 1) * y * num.cast("double")
-          / den.cast("double"), lit(0.0))).otherwise(lit(dflt))
-    }
-    val scored = g5
-      .join(broadcast(g5lm), Seq("g5"), "left")
-      .join(broadcast(ctx5C), Seq("b1234"), "left")
-      .join(broadcast(cont4C), Seq("s2345"), "left")
-      .join(broadcast(den4C), Seq("c234"), "left")
-      .join(broadcast(cont3C), Seq("s345"), "left")
-      .join(broadcast(den3C), Seq("c34"), "left")
-      .join(broadcast(cont2C), Seq("s45"), "left")
-      .join(broadcast(den2C), Seq("w4"), "left")
-      .join(broadcast(cwC), Seq("w5"), "left")
-      .crossJoin(broadcast(coc5)).crossJoin(broadcast(coc4))
-      .crossJoin(broadcast(coc3)).crossJoin(broadcast(coc2))
-      .crossJoin(broadcast(vTot)).crossJoin(broadcast(nbTot))
-    def d3of(pfx: String): (Column, Column, Column) = (
-      disc(col(pfx + "_n1"), col(pfx + "_n2"), col(pfx + "_n3"),
-        col(pfx + "_n4"), 1, 0.5),
-      disc(col(pfx + "_n1"), col(pfx + "_n2"), col(pfx + "_n3"),
-        col(pfx + "_n4"), 2, 1.0),
-      disc(col(pfx + "_n1"), col(pfx + "_n2"), col(pfx + "_n3"),
-        col(pfx + "_n4"), 3, 1.5))
-    val (aD1, aD2, aD3) = d3of("a")
-    val (bD1, bD2, bD3) = d3of("b")
-    val (cD1, cD2, cD3) = d3of("c")
-    val (dD1, dD2, dD3) = d3of("d")
-    val dOf = (c: Column, d1: Column, d2: Column, d3: Column) =>
-      when(c >= 3, d3).when(c === 2, d2).when(c === 1, d1).otherwise(lit(0.0))
-    val p1 = (coalesce(col("nw"), lit(0L)) + lit(1L)).cast("double") /
-      (col("__nb") + col("__v")).cast("double")
-    def mid(cnt: Column, den: Column, d1: Column, d2: Column, d3: Column,
-        e1: Column, e2: Column, e3p: Column, lower: Column): Column =
-      when(den.isNull, lower).otherwise(
-        greatest(cnt.cast("double") - dOf(cnt, d1, d2, d3), lit(0.0))
-          / den.cast("double")
-          + ((d1 * e1 + d2 * e2 + d3 * e3p) / den.cast("double")) * lower)
-    val p2 = mid(coalesce(col("n2"), lit(0L)), col("d2"), dD1, dD2, dD3,
-      col("e2_1"), col("e2_2"), col("e2_3p"), p1)
-    val p3 = mid(coalesce(col("n3"), lit(0L)), col("d3"), cD1, cD2, cD3,
-      col("e3_1"), col("e3_2"), col("e3_3p"), p2)
-    val p4 = mid(coalesce(col("n4"), lit(0L)), col("d4"), bD1, bD2, bD3,
-      col("e4_1"), col("e4_2"), col("e4_3p"), p3)
-    val ctv = coalesce(col("ct"), lit(0L))
-    val p5 = when(col("cb1234").isNull, p4).otherwise(
-      greatest(ctv.cast("double") - dOf(ctv, aD1, aD2, aD3), lit(0.0))
-        / col("cb1234").cast("double")
-        + ((aD1 * col("nf1") + aD2 * col("nf2") + aD3 * col("nf3p"))
-          / col("cb1234").cast("double")) * p4)
-    scored
-      .groupBy(col(docId))
-      .agg(count(lit(1)).as("n_5grams"),
-        sum(when(col("ct").isNull, 1L).otherwise(0L)).as("n_oov5"),
-        (floor(avg(log(greatest(p5, lit(1e-10)))) * 1e4 + lit(0.5)) / 1e4)
-          .as("avg_logprob_kn5"))
-  }
+    knLogProb(df, docId, textCol, 5, Nil, maxVocab)
 
   /** [[perplexityBuckets]] over the 5-gram modified-KN scorer
     * ([[kn5LogProb]]) — the full CCNet recipe at its published order.
     */
   def kn5PerplexityBuckets(df: DataFrame, docId: String, textCol: String,
                            maxVocab: Int = 65536): DataFrame =
-    bucketize(kn5LogProb(df, docId, textCol, maxVocab)
-      .withColumnRenamed("avg_logprob_kn5", "__score"), docId)
-      .withColumnRenamed("__score", "avg_logprob_kn5")
+    bucketize(kn5LogProb(df, docId, textCol, maxVocab), docId, "avg_logprob_kn5", Nil)
 
   /** PER-LANGUAGE 5-gram modified-KN perplexity buckets — the EXACT
     * published CCNet recipe (Wenzek et al. 2020 deploy one 5-gram KN
-    * model PER LANGUAGE and bucket within the language): one
-    * [[kn5PerplexityBuckets]] invocation per whitelisted language
-    * slice, unioned. The language list is an EXPLICIT whitelist (the
-    * way CCNet itself runs — a fixed set of supported languages, not a
-    * data-driven discovery), so plan size is bounded by the list, each
-    * language's model/thresholds see only its shard, and a regenerated
-    * corpus introducing a new language is excluded BY CONSTRUCTION on
-    * both engine and oracle sides rather than silently diverging. At
-    * cluster scale each language shard is its own independent job —
-    * the union here is the single-session rendering of that fan-out.
+    * model PER LANGUAGE and bucket within the language). The language
+    * list is an EXPLICIT whitelist (the way CCNet itself runs — a fixed
+    * set of supported languages, not a data-driven discovery), so a
+    * regenerated corpus introducing a new language is excluded BY
+    * CONSTRUCTION on both engine and oracle sides rather than silently
+    * diverging.
+    *
+    * ONE lang-keyed ladder ([[knLogProb]] keyed by `langCol`) over one
+    * tokenize pass, not a union of #langs ladders: the r18/r19 union
+    * shape was bistable at 32 cores (quiet medians flapping 36→93 s:
+    * five ladders × ~12 branches = ~60 concurrent stages contending
+    * however the shared token frame was held). Per-language counts are
+    * identical integers (grouping keys partition exactly as the filters
+    * did), so each language's rows equal [[kn5PerplexityBuckets]] on its
+    * slice.
+    *
+    * Output: (docId, avg_logprob_kn5, lp_centi, ppl_bucket, lang).
     */
   def langKn5PerplexityBuckets(df: DataFrame, docId: String, textCol: String,
                                langCol: String, langs: Seq[String],
                                maxVocab: Int = 65536): DataFrame = {
-    // ONE lang-keyed ladder instead of a union of #langs inline ladders
-    // — the [[langTrigramLogProb]] shape applied to the kn5 scorer:
-    // every model table, cap, count-of-counts row and total is keyed by
-    // `langCol`, so the whole fan-out is a single ladder's worth of
-    // stages (~12 aggregation branches) regardless of the language
-    // count, over ONE tokenize pass of the corpus instead of #langs
-    // filtered passes. The r18/r19 union shape was bistable at 32 cores
-    // (quiet medians flapping 36→93 s: five ladders × ~12 branches =
-    // ~60 concurrent stages contending however the shared token frame
-    // was held — lazy persist, per-language persists, and one shared
-    // eager checkpoint ALL measured worse than inline on the union).
-    // Grouping by language removes the stage multiplicity instead of
-    // trying to cache around it, and matches the stable single-corpus
-    // [[kn5LogProb]] shape. Per-language counts are identical integers
-    // (grouping keys partition exactly as the filters did), the caps
-    // keep the same deterministic (magnitude desc, key asc) order via a
-    // lang-partitioned row_number, and the interpolation arithmetic is
-    // unchanged — the oracle replays the per-language ladders and the
-    // rows hash-match.
-    import org.apache.spark.sql.expressions.Window
     val lang = col(langCol)
-    val arr = matToks(df.filter(lang.isin(langs: _*)), docId, textCol,
-      Seq(lang), "langkn5-arr")
-    val scored = kn5LogProbArrGrouped(arr, docId, langCol, maxVocab)
-      .withColumn("lp_centi", floor(col("avg_logprob_kn5") * 100).cast("long"))
-    val hist = scored.groupBy(lang, col("lp_centi"))
-      .agg(count(lit(1)).as("__c"))
-    val cum = hist.withColumn("__cum",
-      sum(col("__c")).over(Window.partitionBy(lang).orderBy(col("lp_centi").desc)))
-    val tot = scored.groupBy(lang).agg(count(lit(1)).as("__n"))
-    val ths = cum.join(broadcast(tot), Seq(langCol))
-      .groupBy(lang)
-      .agg(
-        max(when(col("__cum") >= expr("(__n + 2) div 3"), col("lp_centi")))
-          .as("__t1"),
-        max(when(col("__cum") >= expr("(2 * __n + 2) div 3"), col("lp_centi")))
-          .as("__t2"))
-    // column order matches the historical union shape exactly:
-    // (docId, avg_logprob_kn5, lp_centi, ppl_bucket, lang)
-    scored.join(broadcast(ths), Seq(langCol))
-      .select(col(docId), col("avg_logprob_kn5"), col("lp_centi"),
-        when(col("lp_centi") >= col("__t1"), "head")
-          .when(col("lp_centi") >= col("__t2"), "middle")
-          .otherwise("tail").as("ppl_bucket"),
-        lang)
+    bucketize(knLogProb(df.filter(lang.isin(langs: _*)), docId, textCol, 5,
+        Seq(langCol), maxVocab), docId, "avg_logprob_kn5", Seq(langCol))
+      .select(col(docId), col("avg_logprob_kn5"), col("lp_centi"), col("ppl_bucket"), lang)
   }
 
-  /** [[kn5LogProbArr]] with every model table, df-cap, count-of-counts
-    * row and total keyed by `langCol` — the grouped ladder behind
-    * [[langKn5PerplexityBuckets]]. Input: `(docId, __l, langCol)`
-    * already-tokenized rows. Per-language arithmetic is bit-identical to
-    * running [[kn5LogProbArr]] on each language slice: counts aggregate
-    * by (lang, gram) — the grouping keys partition exactly as the
-    * per-language filters did — the deterministic caps become a
-    * row_number window over the MODEL tables partitioned by lang
-    * (gram-vocabulary-sized, never documents), and the per-language
-    * scalars (V, bigram-type total, the four count-of-counts rows)
-    * become #langs-row broadcasts joined on lang instead of one-row
-    * cross joins. All broadcast tables stay bounded at
-    * #langs · maxVocab rows.
+  /** The modified-Kneser-Ney ladder at `order` (3 or 5), with every model
+    * table, df-cap, count-of-counts row and total keyed by `keys` (none,
+    * or the language column). Per key group the arithmetic is the
+    * unkeyed ladder's on that group's slice.
+    *
+    * For top-order words w₁..w_N, order m's continuation count belongs
+    * to the suffix sₘ (the last m words) and its denominator to the
+    * context cₘ (sₘ without its last word). The top order counts raw
+    * N-grams against the raw (N−1)-gram count of w₁..w_{N−1}; order N−1
+    * counts continuations from the N-gram types, each order m < N−1 from
+    * the raw (m+1)-gram types, and p₁ from the raw bigram types.
+    *
+    * Scale shape (r18/r19): the corpus is tokenized and materialized
+    * once; the exploded n-gram rows and every count table stay
+    * UN-materialized — their aggregation exchanges are shared across
+    * consumers by ReuseExchange, and caching the corpus-sized exploded
+    * tables measured SLOWER than recomputing them from the cached arrays
+    * (r18 bisect: 15.4 s → 40-100 s). Each count table groups by the gram
+    * alone and splits its keys off the counted rows: carrying the derived
+    * keys through the `groupBy` widens every shuffled row, and measured
+    * about 15 % slower at order 3 and 10 % at order 5 (sf0.1, 4 vCPUs).
+    * Each order's probability is one column built from the order below
+    * it, so the plan holds each expression once (inlined, p₁ appeared 16
+    * times at order 5 and the aggregate outgrew Janino's 64 KB method
+    * limit).
+    *
+    * Output: (docId, keys…, n_trigrams | n_5grams, n_oov3 | n_oov5,
+    * avg_logprob_kn | avg_logprob_kn5).
     */
-  private def kn5LogProbArrGrouped(arr: DataFrame, docId: String,
-                                   langCol: String, maxVocab: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val lang = col(langCol)
-    val tok = arr.select(lang, col(docId), explode(col("__l")).as("t"))
-    val vTot = tok.groupBy(lang).agg(count_distinct(col("t")).as("__v"))
-    val pp = (i: Int) => col("__p").getItem(i)
-    val g5 = arr
-      .select(col(docId), lang,
-        explode(TextOps.shinglesOf(col("__l"), 5)).as("g5"))
-      .withColumn("__p", split(col("g5"), " "))
-      .withColumn("b1234", concat_ws(" ", pp(0), pp(1), pp(2), pp(3)))
-      .withColumn("s2345", concat_ws(" ", pp(1), pp(2), pp(3), pp(4)))
-      .withColumn("c234", concat_ws(" ", pp(1), pp(2), pp(3)))
-      .withColumn("s345", concat_ws(" ", pp(2), pp(3), pp(4)))
-      .withColumn("c34", concat_ws(" ", pp(2), pp(3)))
-      .withColumn("s45", concat_ws(" ", pp(3), pp(4)))
-      .withColumn("w4", pp(3))
-      .withColumn("w5", pp(4))
-      .drop("__p")
-    // raw 5-gram counts per language, carrying the derived keys
-    val g5cFull = g5.groupBy(lang, col("g5"), col("b1234"), col("s2345"),
-      col("c234")).agg(count(lit(1)).as("ct"))
-    val g5c = g5cFull.select(lang, col("g5"), col("ct"))
-    // per-order count-of-counts helper (PRE-cap, per language)
-    def coc(dfc: DataFrame, cc: String, pfx: String): DataFrame =
-      dfc.groupBy(lang).agg(
-        sum(when(col(cc) === 1, 1L).otherwise(0L)).as(pfx + "_n1"),
-        sum(when(col(cc) === 2, 1L).otherwise(0L)).as(pfx + "_n2"),
-        sum(when(col(cc) === 3, 1L).otherwise(0L)).as(pfx + "_n3"),
-        sum(when(col(cc) === 4, 1L).otherwise(0L)).as(pfx + "_n4"))
-    val coc5 = coc(g5c, "ct", "a")
-    // raw lower-order n-gram count tables, each carrying its keys
-    val q4c = arr.select(lang, explode(TextOps.shinglesOf(col("__l"), 4)).as("q4"))
-      .withColumn("__p", split(col("q4"), " "))
-      .select(lang, col("q4"), concat_ws(" ", pp(1), pp(2), pp(3)).as("s345k"),
-        concat_ws(" ", pp(1), pp(2)).as("c34k"))
-      .groupBy(lang, col("q4"), col("s345k"), col("c34k"))
-      .agg(count(lit(1)).as("cq4"))
-    val q3c = arr.select(lang, explode(TextOps.shinglesOf(col("__l"), 3)).as("q3"))
-      .withColumn("__p", split(col("q3"), " "))
-      .select(lang, col("q3"), concat_ws(" ", pp(1), pp(2)).as("s45k"),
-        pp(1).as("w4k"))
-      .groupBy(lang, col("q3"), col("s45k"), col("w4k"))
-      .agg(count(lit(1)).as("cq3"))
-    val q2c = arr.select(lang, explode(TextOps.shinglesOf(col("__l"), 2)).as("q2"))
-      .withColumn("__p", split(col("q2"), " "))
-      .select(lang, col("q2"), pp(1).as("w5k"))
-      .groupBy(lang, col("q2"), col("w5k")).agg(count(lit(1)).as("cq2"))
-    // top-order context table per language
-    val nf5 = g5cFull.groupBy(lang, col("b1234")).agg(
-      sum(when(col("ct") === 1, 1L).otherwise(0L)).as("nf1"),
-      sum(when(col("ct") === 2, 1L).otherwise(0L)).as("nf2"),
-      sum(when(col("ct") >= 3, 1L).otherwise(0L)).as("nf3p"))
-    val ctx5 = q4c.select(lang, col("q4").as("b1234"), col("cq4").as("cb1234"))
-      .join(nf5, Seq(langCol, "b1234"), "left")
-      .select(lang, col("b1234"), col("cb1234"),
-        coalesce(col("nf1"), lit(0L)).as("nf1"),
-        coalesce(col("nf2"), lit(0L)).as("nf2"),
-        coalesce(col("nf3p"), lit(0L)).as("nf3p"))
-    // order-4 continuation per language
-    val cont4F = g5cFull.groupBy(lang, col("s2345"), col("c234"))
-      .agg(count(lit(1)).as("n4"))
-    val cont4 = cont4F.select(lang, col("s2345"), col("n4"))
-    val coc4 = coc(cont4, "n4", "b")
-    val den4 = cont4F.groupBy(lang, col("c234")).agg(
-      sum(col("n4")).as("d4"),
-      sum(when(col("n4") === 1, 1L).otherwise(0L)).as("e4_1"),
-      sum(when(col("n4") === 2, 1L).otherwise(0L)).as("e4_2"),
-      sum(when(col("n4") >= 3, 1L).otherwise(0L)).as("e4_3p"))
-    // order-3 continuation from raw 4-gram TYPES
-    val cont3F = q4c.groupBy(lang, col("s345k"), col("c34k"))
-      .agg(count(lit(1)).as("n3"))
-    val cont3 = cont3F.select(lang, col("s345k").as("s345"), col("n3"))
-    val coc3 = coc(cont3, "n3", "c")
-    val den3 = cont3F.groupBy(lang, col("c34k")).agg(
-        sum(col("n3")).as("d3"),
-        sum(when(col("n3") === 1, 1L).otherwise(0L)).as("e3_1"),
-        sum(when(col("n3") === 2, 1L).otherwise(0L)).as("e3_2"),
-        sum(when(col("n3") >= 3, 1L).otherwise(0L)).as("e3_3p"))
-      .withColumnRenamed("c34k", "c34")
-    // order-2 continuation from raw trigram TYPES
-    val cont2F = q3c.groupBy(lang, col("s45k"), col("w4k"))
-      .agg(count(lit(1)).as("n2"))
-    val cont2 = cont2F.select(lang, col("s45k").as("s45"), col("n2"))
-    val coc2 = coc(cont2, "n2", "d")
-    val den2 = cont2F.groupBy(lang, col("w4k")).agg(
-        sum(col("n2")).as("d2"),
-        sum(when(col("n2") === 1, 1L).otherwise(0L)).as("e2_1"),
-        sum(when(col("n2") === 2, 1L).otherwise(0L)).as("e2_2"),
-        sum(when(col("n2") >= 3, 1L).otherwise(0L)).as("e2_3p"))
-      .withColumnRenamed("w4k", "w4")
-    // lowest order: unigram continuation counts over raw bigram TYPES
-    val contW = q2c.groupBy(lang, col("w5k")).agg(count(lit(1)).as("nw"))
-      .withColumnRenamed("w5k", "w5")
-    val nbTot = q2c.groupBy(lang).agg(count(lit(1)).as("__nb"))
-    // deterministic df-caps per language (magnitude desc / key asc)
-    def capped(t: DataFrame, key: String, cnt: String): DataFrame =
-      t.withColumn("__r", row_number().over(
-          Window.partitionBy(lang).orderBy(col(cnt).desc, col(key).asc)))
-        .filter(col("__r") <= maxVocab).drop("__r")
-    val g5lm = capped(g5c, "g5", "ct")
-    val ctx5C = capped(ctx5, "b1234", "cb1234")
-    val cont4C = capped(cont4, "s2345", "n4")
-    val den4C = capped(den4, "c234", "d4")
-    val cont3C = capped(cont3, "s345", "n3")
-    val den3C = capped(den3, "c34", "d3")
-    val cont2C = capped(cont2, "s45", "n2")
-    val den2C = capped(den2, "w4", "d2")
-    val cwC = capped(contW, "w5", "nw")
-    // discounts: Y = n1/(n1+2n2); Di = i - (i+1)·Y·n(i+1)/ni, clamped
-    val disc = (n1: Column, n2: Column, n3: Column, n4: Column,
-        slot: Int, dflt: Double) => {
-      val y = n1.cast("double") / (n1 + lit(2) * n2).cast("double")
-      val (num, den, base) = slot match {
-        case 1 => (n2, n1, 1.0); case 2 => (n3, n2, 2.0); case _ => (n4, n3, 3.0)
-      }
-      when(den > 0 && (n1 + lit(2) * n2) > 0,
-        greatest(lit(base) - lit(base + 1) * y * num.cast("double")
-          / den.cast("double"), lit(0.0))).otherwise(lit(dflt))
+  private[ops] def knLogProb(df: DataFrame, docId: String, textCol: String,
+                             order: Int, keys: Seq[String], maxVocab: Int): DataFrame = {
+    require(order == 3 || order == 5, s"KN order $order")
+    val k = keys.map(col)
+    def on(cs: String*): Seq[String] = keys ++ cs
+    val cap = (t: DataFrame, key: String, cnt: String) => capped(t, keys, key, cnt, maxVocab)
+    val arr = matToks(df, docId, textCol, k, s"kn$order-arr")
+    val vTot = arr.select(k :+ explode(col("__l")).as("t"): _*)
+      .groupBy(k: _*).agg(count_distinct(col("t")).as("__v"))
+    // the j-grams as `__g`, split into words in `__p`
+    def grams(j: Int, lead: Column*): DataFrame =
+      arr.select(lead ++ k :+ explode(TextOps.shinglesOf(col("__l"), j)).as("__g"): _*)
+        .withColumn("__p", split(col("__g"), " "))
+    // the j-gram counts `__c`, split into words in `__p` again
+    def counts(j: Int): DataFrame = grams(j).groupBy(k :+ col("__g"): _*)
+      .agg(count(lit(1)).as("__c")).withColumn("__p", split(col("__g"), " "))
+    // words i until j of `__p`, space-joined
+    def span(i: Int, j: Int): Column =
+      if (j - i == 1) col("__p").getItem(i)
+      else concat_ws(" ", (i until j).map(col("__p").getItem(_)): _*)
+    // count-of-counts n1..n4 of one order's counts (PRE-cap)
+    def coc(t: DataFrame, cnt: String, pfx: String): DataFrame =
+      t.groupBy(k: _*).agg(
+        sum(when(col(cnt) === 1, 1L).otherwise(0L)).as(pfx + "_n1"),
+        sum(when(col(cnt) === 2, 1L).otherwise(0L)).as(pfx + "_n2"),
+        sum(when(col(cnt) === 3, 1L).otherwise(0L)).as(pfx + "_n3"),
+        sum(when(col(cnt) === 4, 1L).otherwise(0L)).as(pfx + "_n4"))
+    // follower classes: how many counts are 1, 2 and ≥ 3
+    def classes(cnt: String, pfx: String): Seq[Column] = Seq(
+      sum(when(col(cnt) === 1, 1L).otherwise(0L)).as(pfx + "1"),
+      sum(when(col(cnt) === 2, 1L).otherwise(0L)).as(pfx + "2"),
+      sum(when(col(cnt) >= 3, 1L).otherwise(0L)).as(pfx + "3"))
+    val mids = (order - 1) to 2 by -1
+    val top = grams(order, col(docId)).select(Seq(col(docId)) ++ k ++
+      Seq(col("__g"), span(0, order - 1).as("__h")) ++
+      mids.flatMap(m => Seq(span(order - m, order).as(s"__s$m"),
+        span(order - m, order - 1).as(s"__c$m"))) :+
+      span(order - 1, order).as("__w"): _*)
+    // N-gram counts with their context and order N−1's suffix/context keys
+    val topFull = counts(order).select(k ++ Seq(col("__g"), col("__c").as("__ct"),
+      span(0, order - 1).as("__h"), span(1, order).as(s"__s${order - 1}"),
+      span(1, order - 1).as(s"__c${order - 1}")): _*)
+    val topCounts = topFull.select(k ++ Seq(col("__g"), col("__ct")): _*)
+    // raw j-gram counts for 2 ≤ j < order, carrying their suffix (and,
+    // above bigrams, the suffix's context) keys
+    val raw = (2 until order).map { j =>
+      j -> counts(j).select(k ++ Seq(col("__g").as("__q"), col("__c").as("__cq"),
+        span(1, j).as("__qs")) ++ (if (j > 2) Seq(span(1, j - 1).as("__qc")) else Nil): _*)
+    }.toMap
+    // top-order context: the raw (N−1)-gram count + the follower classes
+    // of the N-gram types — ONE table so presence is consistent
+    val nf = classes("__ct", "__nf")
+    val ctx = raw(order - 1).select(k ++ Seq(col("__q").as("__h"), col("__cq").as("__hc")): _*)
+      .join(topFull.groupBy(on("__h").map(col): _*).agg(nf.head, nf.tail: _*), on("__h"), "left")
+      .select(k ++ Seq(col("__h"), col("__hc")) ++
+        (1 to 3).map(i => coalesce(col(s"__nf$i"), lit(0L)).as(s"__nf$i")): _*)
+    // middle orders: continuation counts per suffix, their count-of-counts,
+    // and the per-context denominators / follower classes
+    val middle = mids.map { m =>
+      val (s, c, n) = (s"__s$m", s"__c$m", s"__n$m")
+      val types =
+        if (m == order - 1) topFull.select(k ++ Seq(col(s), col(c)): _*)
+        else raw(m + 1).select(k ++ Seq(col("__qs").as(s), col("__qc").as(c)): _*)
+      val contF = types.groupBy(on(s, c).map(col): _*).agg(count(lit(1)).as(n))
+      val cont = contF.select(k ++ Seq(col(s), col(n)): _*)
+      val den = contF.groupBy(on(c).map(col): _*)
+        .agg(sum(col(n)).as(s"__d$m"), classes(n, s"__e${m}_"): _*)
+      (m, coc(cont, n, s"__k$m"), cap(cont, s, n), cap(den, c, s"__d$m"))
     }
-    val scored = g5
-      .join(broadcast(g5lm), Seq(langCol, "g5"), "left")
-      .join(broadcast(ctx5C), Seq(langCol, "b1234"), "left")
-      .join(broadcast(cont4C), Seq(langCol, "s2345"), "left")
-      .join(broadcast(den4C), Seq(langCol, "c234"), "left")
-      .join(broadcast(cont3C), Seq(langCol, "s345"), "left")
-      .join(broadcast(den3C), Seq(langCol, "c34"), "left")
-      .join(broadcast(cont2C), Seq(langCol, "s45"), "left")
-      .join(broadcast(den2C), Seq(langCol, "w4"), "left")
-      .join(broadcast(cwC), Seq(langCol, "w5"), "left")
-      .join(broadcast(coc5), Seq(langCol)).join(broadcast(coc4), Seq(langCol))
-      .join(broadcast(coc3), Seq(langCol)).join(broadcast(coc2), Seq(langCol))
-      .join(broadcast(vTot), Seq(langCol)).join(broadcast(nbTot), Seq(langCol))
-    def d3of(pfx: String): (Column, Column, Column) = (
-      disc(col(pfx + "_n1"), col(pfx + "_n2"), col(pfx + "_n3"),
-        col(pfx + "_n4"), 1, 0.5),
-      disc(col(pfx + "_n1"), col(pfx + "_n2"), col(pfx + "_n3"),
-        col(pfx + "_n4"), 2, 1.0),
-      disc(col(pfx + "_n1"), col(pfx + "_n2"), col(pfx + "_n3"),
-        col(pfx + "_n4"), 3, 1.5))
-    val (aD1, aD2, aD3) = d3of("a")
-    val (bD1, bD2, bD3) = d3of("b")
-    val (cD1, cD2, cD3) = d3of("c")
-    val (dD1, dD2, dD3) = d3of("d")
-    val dOf = (c: Column, d1: Column, d2: Column, d3: Column) =>
-      when(c >= 3, d3).when(c === 2, d2).when(c === 1, d1).otherwise(lit(0.0))
-    val p1 = (coalesce(col("nw"), lit(0L)) + lit(1L)).cast("double") /
-      (col("__nb") + col("__v")).cast("double")
-    def mid(cnt: Column, den: Column, d1: Column, d2: Column, d3: Column,
-        e1: Column, e2: Column, e3p: Column, lower: Column): Column =
+    // lowest order: unigram continuation counts over raw bigram TYPES
+    val contW = raw(2).groupBy(on("__qs").map(col): _*).agg(count(lit(1)).as("__nw"))
+      .withColumnRenamed("__qs", "__w")
+    val nbTot = raw(2).groupBy(k: _*).agg(count(lit(1)).as("__nb"))
+    val tables = Seq(cap(topCounts, "__g", "__ct") -> "__g", cap(ctx, "__h", "__hc") -> "__h") ++
+      middle.flatMap { case (m, _, cont, den) => Seq(cont -> s"__s$m", den -> s"__c$m") } :+
+      (cap(contW, "__w", "__nw") -> "__w")
+    val scored = withScalars(
+      tables.foldLeft(top) { case (d, (t, key)) => d.join(broadcast(t), on(key), "left") },
+      keys, (coc(topCounts, "__ct", s"__k$order") +: middle.map(_._2)) ++ Seq(vTot, nbTot): _*)
+    // discounts: Y = n1/(n1+2n2); Di = i - (i+1)·Y·n(i+1)/ni, clamped
+    def discounts(pfx: String): Seq[Column] = {
+      val n = (1 to 4).map(i => col(s"${pfx}_n$i"))
+      val y = n(0).cast("double") / (n(0) + lit(2) * n(1)).cast("double")
+      (1 to 3).map(i => when(n(i - 1) > 0 && (n(0) + lit(2) * n(1)) > 0,
+        greatest(lit(i.toDouble) - lit(i + 1.0) * y * n(i).cast("double")
+          / n(i - 1).cast("double"), lit(0.0))).otherwise(lit(i * 0.5)))
+    }
+    // one order from the order below: the discounted count over the
+    // context's denominator plus the backoff mass; an absent context
+    // falls through to `lower` whole
+    def level(cnt: Column, den: Column, d: Seq[Column], e: Seq[Column],
+              lower: Column): Column = {
+      val dOf = when(cnt >= 3, d(2)).when(cnt === 2, d(1)).when(cnt === 1, d(0))
+        .otherwise(lit(0.0))
       when(den.isNull, lower).otherwise(
-        greatest(cnt.cast("double") - dOf(cnt, d1, d2, d3), lit(0.0))
-          / den.cast("double")
-          + ((d1 * e1 + d2 * e2 + d3 * e3p) / den.cast("double")) * lower)
-    val p2 = mid(coalesce(col("n2"), lit(0L)), col("d2"), dD1, dD2, dD3,
-      col("e2_1"), col("e2_2"), col("e2_3p"), p1)
-    val p3 = mid(coalesce(col("n3"), lit(0L)), col("d3"), cD1, cD2, cD3,
-      col("e3_1"), col("e3_2"), col("e3_3p"), p2)
-    val p4 = mid(coalesce(col("n4"), lit(0L)), col("d4"), bD1, bD2, bD3,
-      col("e4_1"), col("e4_2"), col("e4_3p"), p3)
-    val ctv = coalesce(col("ct"), lit(0L))
-    val p5 = when(col("cb1234").isNull, p4).otherwise(
-      greatest(ctv.cast("double") - dOf(ctv, aD1, aD2, aD3), lit(0.0))
-        / col("cb1234").cast("double")
-        + ((aD1 * col("nf1") + aD2 * col("nf2") + aD3 * col("nf3p"))
-          / col("cb1234").cast("double")) * p4)
-    scored
-      .groupBy(col(docId), lang)
-      .agg(count(lit(1)).as("n_5grams"),
-        sum(when(col("ct").isNull, 1L).otherwise(0L)).as("n_oov5"),
-        (floor(avg(log(greatest(p5, lit(1e-10)))) * 1e4 + lit(0.5)) / 1e4)
-          .as("avg_logprob_kn5"))
+        greatest(cnt.cast("double") - dOf, lit(0.0)) / den.cast("double")
+          + ((d(0) * e(0) + d(1) * e(1) + d(2) * e(2)) / den.cast("double")) * lower)
+    }
+    val p1 = (coalesce(col("__nw"), lit(0L)) + lit(1L)).cast("double") /
+      (col("__nb") + col("__v")).cast("double")
+    val probs = mids.reverse.foldLeft(scored.withColumn("__pr1", p1)) { (d, m) =>
+      d.withColumn(s"__pr$m", level(coalesce(col(s"__n$m"), lit(0L)), col(s"__d$m"),
+        discounts(s"__k$m"), (1 to 3).map(i => col(s"__e${m}_$i")), col(s"__pr${m - 1}")))
+    }.withColumn("__prN", level(coalesce(col("__ct"), lit(0L)), col("__hc"),
+      discounts(s"__k$order"), (1 to 3).map(i => col(s"__nf$i")), col(s"__pr${order - 1}")))
+    val (nGrams, nOov, lp) =
+      if (order == 3) ("n_trigrams", "n_oov3", "avg_logprob_kn")
+      else (s"n_${order}grams", s"n_oov$order", s"avg_logprob_kn$order")
+    probs.groupBy(col(docId) +: k: _*)
+      .agg(count(lit(1)).as(nGrams),
+        sum(when(col("__ct").isNull, 1L).otherwise(0L)).as(nOov),
+        round4(avg(log(greatest(col("__prN"), lit(1e-10))))).as(lp))
   }
 
-  /** The scorer-agnostic tercile machinery shared by both bucketing
-    * fronts: centi-quantize `__score`, histogram, cumulative count over
-    * the bounded cells, inclusive threshold maxima, bucket by broadcast
-    * scalars.
+  /** Deterministic df-cap of a model table: its first `maxVocab` rows by
+    * (`cnt` desc, `key` asc) per key group. Without keys this is
+    * `orderBy` + `limit`; with keys a `row_number` partitioned by them,
+    * over the MODEL table (gram-vocabulary-sized, never documents).
     */
-  private def bucketize(scoredIn: DataFrame, docId: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // scored feeds the histogram, the total and the final assignment;
-    // the three consumers share the scorer's final exchange via
-    // ReuseExchange, so materializing here measured as pure overhead
-    // (r18 bisect: +1.2 s on the cheap trigram buckets, no gain on kn5)
-    val scored = scoredIn
-      .withColumn("lp_centi", floor(col("__score") * 100).cast("long"))
-    val hist = scored.groupBy(col("lp_centi")).agg(count(lit(1)).as("__c"))
-    // single-partition window over the BOUNDED histogram (≈ value-space
-    // cells), deliberately — never over documents
-    val cum = hist.withColumn("__cum",
-      sum(col("__c")).over(Window.orderBy(col("lp_centi").desc)))
-    val tot = scored.agg(count(lit(1)).as("__n"))
-    val ths = cum.crossJoin(broadcast(tot))
+  private def capped(t: DataFrame, keys: Seq[String], key: String, cnt: String,
+                     maxVocab: Int): DataFrame = {
+    val order = Seq(col(cnt).desc, col(key).asc)
+    if (keys.isEmpty) t.orderBy(order: _*).limit(maxVocab)
+    else t.withColumn("__r", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(order: _*)))
+      .filter(col("__r") <= maxVocab).drop("__r")
+  }
+
+  /** `df` with each per-group scalar row attached: one-row broadcast
+    * cross joins without keys, #groups-row broadcasts joined on the keys
+    * with them.
+    */
+  private def withScalars(df: DataFrame, keys: Seq[String], rows: DataFrame*): DataFrame =
+    rows.foldLeft(df)((d, r) =>
+      if (keys.isEmpty) d.crossJoin(broadcast(r)) else d.join(broadcast(r), keys))
+
+  /** ⌊x·10⁴ + ½⌋ / 10⁴: the 4-decimal rounding every LM mean leaves with. */
+  private def round4(x: Column): Column = floor(x * 1e4 + lit(0.5)) / 1e4
+
+  /** The tercile machinery behind every bucketing front, per key group
+    * (none, or the language column): centi-quantize the `score` column,
+    * histogram it, take one cumulative count over the bounded cells, and
+    * bucket by the inclusive threshold maxima.
+    *
+    * Thresholds WITHOUT a corpus sort: centi-log-prob integers span a few
+    * thousand cells regardless of corpus size, so the histogram is
+    * broadcast-sized by construction and the only window runs over its
+    * cells (single-partition without keys, deliberately), never over
+    * documents. This is the sampled-quantile posture production CCNet
+    * uses, made exact and engine-replayable by the quantization. A
+    * boundary cell's documents all land in the BETTER bucket, so buckets
+    * are equal-count up to boundary-cell ties. `scored` feeds the
+    * histogram, the total and the assignment; the three share the
+    * scorer's final exchange via ReuseExchange, so materializing it
+    * measured as pure overhead (r18 bisect: +1.2 s on the trigram
+    * buckets, no gain on kn5).
+    *
+    * Output: (docId, keys…, score, lp_centi, ppl_bucket).
+    */
+  private def bucketize(scored: DataFrame, docId: String, score: String,
+                        keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    val centi = scored.withColumn("lp_centi", floor(col(score) * 100).cast("long"))
+    val cum = centi.groupBy(k :+ col("lp_centi"): _*).agg(count(lit(1)).as("__c"))
+      .withColumn("__cum", sum(col("__c")).over(
+        Window.partitionBy(k: _*).orderBy(col("lp_centi").desc)))
+    val ths = withScalars(cum, keys, centi.groupBy(k: _*).agg(count(lit(1)).as("__n")))
+      .groupBy(k: _*)
       .agg(
         max(when(col("__cum") >= expr("(__n + 2) div 3"), col("lp_centi")))
           .as("__t1"),
         max(when(col("__cum") >= expr("(2 * __n + 2) div 3"), col("lp_centi")))
           .as("__t2"))
-    scored.crossJoin(broadcast(ths))
-      .select(col(docId), col("__score"), col("lp_centi"),
+    withScalars(centi, keys, ths)
+      .select(Seq(col(docId)) ++ k ++ Seq(col(score), col("lp_centi"),
         when(col("lp_centi") >= col("__t1"), "head")
           .when(col("lp_centi") >= col("__t2"), "middle")
-          .otherwise("tail").as("ppl_bucket"))
+          .otherwise("tail").as("ppl_bucket")): _*)
   }
 
   /** Compression-ratio quality signal (the MassiveText/Gopher-family

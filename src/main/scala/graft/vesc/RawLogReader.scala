@@ -93,11 +93,13 @@ object RawLogReader {
       (df, c) => df.withColumn(c, lit(null).cast("double")))
   }
 
-  /** Production-mode load: channels only + sample_idx + ts_utc. */
+  /** Production-mode load: channels only + sample_idx + ts_utc, every row
+    * in ride `prod`. Rows are numbered across the whole call in
+    * (`__file`, `__row`) order, so keep-first dedup on `sample_idx` keeps
+    * the first row in file order, as `VescPipeline.analyze` does.
+    */
   def readProd(spark: SparkSession, paths: Seq[String]): DataFrame =
-    readRaw(spark, paths, VescSchema.ProdChannels)
-      .drop("ride_id", "dt_ms")
-      .withColumn("ride_id", lit("prod"))
+    readRaw(spark, paths, VescSchema.ProdChannels, rideId = Some("prod")).drop("dt_ms")
 
   /** Local wall-clock timestamp truncated to milliseconds — the reference
     * formats with %f then strips to ms (training_preprocessing.py:80-86).

@@ -21,7 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - under `vesc/`, scoring and training share one CNN forward
   *    (`CnnScorer.Trunk`): each trunk conv layer is applied once;
   *  - the ride path (`Resampler`, `WindowAssembler`, `Postprocess`,
-  *    `VescPipeline`, `RidePass`) plans no window function.
+  *    `VescPipeline`, `RidePass`) plans no window function;
+  *  - `TextQualityOps` builds one Kneser–Ney ladder (`knLogProb`, every
+  *    order and grouping) and one tercile bucketizer (`bucketize`).
   */
 class SessionDisciplineSpec extends AnyFunSuite {
 
@@ -117,6 +119,20 @@ class SessionDisciplineSpec extends AnyFunSuite {
     } yield s"$p:${i + 1}"
     assert(files.forall(f => sources.exists(_._1 == f)), s"missing one of $files")
     assert(offenders.isEmpty, s"window function on the ride path: ${offenders.mkString(", ")}")
+  }
+
+  test("TextQualityOps keeps one Kneser-Ney ladder and one tercile bucketizer") {
+    // a per-order or per-language copy of the ladder brings its own
+    // count-of-counts aggregate, a copy of the terciles its own threshold
+    val tq = Paths.get("src/main/scala/graft/ops/TextQualityOps.scala")
+    assert(sources.exists(_._1 == tq), s"$tq not found")
+    Seq(
+      "_n" + "4\"" -> "count-of-counts aggregate (TextQualityOps.knLogProb)",
+      "(2 * __n + 2) " + "div 3" -> "tercile threshold (TextQualityOps.bucketize)"
+    ).foreach { case (needle, what) =>
+      val at = hits(needle, _ != tq)
+      assert(at.size == 1, s"expected one $what in $tq, found ${at.size}: ${at.mkString(", ")}")
+    }
   }
 
   test("the vesc CNN forward keeps one layer sequence") {

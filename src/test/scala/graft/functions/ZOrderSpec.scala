@@ -100,40 +100,42 @@ class ZOrderSpec extends SparkSuite {
       .withColumn("z", expr("zorder2(pb, sb)"))
       .select(col("l_partkey"), col("l_suppkey"), col("pb"), col("z"))
 
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
-    // 128 DETERMINISTIC buckets per layout (top 7 bits of the z-value /
-    // of the partkey rank), written as one directory each via
-    // partitionBy — every file carries exactly one bucket, so the
-    // footer stats measure the layout itself, not range-sampler noise
-    def write(df: DataFrame, bucket: org.apache.spark.sql.Column,
-        out: String): Unit =
-      df.withColumn("bucket", bucket)
-        .select(col("bucket"), col("l_partkey"), col("l_suppkey"))
-        .repartition(1)
-        .write.mode("overwrite").partitionBy("bucket").parquet(out)
-    write(keyed, shiftright(col("z"), 25), s"$base/zorder")
-    write(keyed, shiftright(col("pb"), 9), s"$base/bykey")
+    withTempDir("graft_zorder_") { tmp =>
+      val base = tmp.toString
+      // 128 DETERMINISTIC buckets per layout (top 7 bits of the z-value /
+      // of the partkey rank), written as one directory each via
+      // partitionBy — every file carries exactly one bucket, so the
+      // footer stats measure the layout itself, not range-sampler noise
+      def write(df: DataFrame, bucket: org.apache.spark.sql.Column,
+          out: String): Unit =
+        df.withColumn("bucket", bucket)
+          .select(col("bucket"), col("l_partkey"), col("l_suppkey"))
+          .repartition(1)
+          .write.mode("overwrite").partitionBy("bucket").parquet(out)
+      write(keyed, shiftright(col("z"), 25), s"$base/zorder")
+      write(keyed, shiftright(col("pb"), 9), s"$base/bykey")
 
-    // a box covering ~1/8 of each dimension at an unaligned offset
-    // (1/16 in) — z-order's realistic case; a box straddling the
-    // dataset midpoint would cross the curve's top-level quadrant
-    // split, its documented worst case
-    def box(lo: Long, hi: Long): (Long, Long) = {
-      val w = hi - lo + 1
-      (lo + w / 16, lo + w / 16 + w / 8)
+      // a box covering ~1/8 of each dimension at an unaligned offset
+      // (1/16 in) — z-order's realistic case; a box straddling the
+      // dataset midpoint would cross the curve's top-level quadrant
+      // split, its documented worst case
+      def box(lo: Long, hi: Long): (Long, Long) = {
+        val w = hi - lo + 1
+        (lo + w / 16, lo + w / 16 + w / 8)
+      }
+      val (pLo, pHi) = box(pmin, pmax)
+      val (sLo, sHi) = box(smin, smax)
+      val (tz, cz) = candidates(s"$base/zorder", pLo, pHi, sLo, sHi)
+      val (tk, ck) = candidates(s"$base/bykey", pLo, pHi, sLo, sHi)
+      info(s"z-order: $cz/$tz candidate row groups; 1-D sort: $ck/$tk")
+      assert(tz >= 64 && tk >= 64, "expected ~128 row groups per layout")
+      assert(cz * 2 <= ck,
+        s"z-order candidates $cz should be >= 2x fewer than 1-D sort's $ck")
+      // correctness unchanged by layout: the box returns identical counts
+      val q = (d: String) => spark.read.parquet(d)
+        .filter(col("l_partkey").between(pLo, pHi) &&
+          col("l_suppkey").between(sLo, sHi)).count()
+      assert(q(s"$base/zorder") == q(s"$base/bykey"))
     }
-    val (pLo, pHi) = box(pmin, pmax)
-    val (sLo, sHi) = box(smin, smax)
-    val (tz, cz) = candidates(s"$base/zorder", pLo, pHi, sLo, sHi)
-    val (tk, ck) = candidates(s"$base/bykey", pLo, pHi, sLo, sHi)
-    info(s"z-order: $cz/$tz candidate row groups; 1-D sort: $ck/$tk")
-    assert(tz >= 64 && tk >= 64, "expected ~128 row groups per layout")
-    assert(cz * 2 <= ck,
-      s"z-order candidates $cz should be >= 2x fewer than 1-D sort's $ck")
-    // correctness unchanged by layout: the box returns identical counts
-    val q = (d: String) => spark.read.parquet(d)
-      .filter(col("l_partkey").between(pLo, pHi) &&
-        col("l_suppkey").between(sLo, sHi)).count()
-    assert(q(s"$base/zorder") == q(s"$base/bykey"))
   }
 }

@@ -667,6 +667,42 @@ class CorpusOpsSpec extends SparkSuite {
     assert(!grouped.exists(t => t._1 == 4L || t._1 == 8L),
       "short doc and off-whitelist language must be absent")
     assert(grouped.map(_._1) == Set(1L, 2L, 3L, 5L, 6L, 7L))
+
+    def slices[T](lgs: Seq[String])(f: (org.apache.spark.sql.DataFrame, String) => Seq[T]): Set[T] =
+      lgs.flatMap(lg => f(docs.filter(col("lang") === lg), lg)).toSet
+    // the same lang-keyed ladder at order 3 against knTrigramLogProb per slice
+    val kn3 = TextQualityOps.knLogProb(docs.filter(col("lang").isin(langs: _*)),
+        "doc_id", "text", 3, Seq("lang"), maxVocab = 6)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4))).toSet
+    val kn3Sliced = slices(langs) { (d, lg) =>
+      TextQualityOps.knTrigramLogProb(d, "doc_id", "text", maxVocab = 6).collect()
+        .map(r => (r.getLong(0), lg, r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    }
+    assert(kn3 == kn3Sliced, s"kn3=${kn3.toSeq.sortBy(_._1)} sliced=${kn3Sliced.toSeq.sortBy(_._1)}")
+    assert(kn3.map(_._1) == Set(1L, 2L, 3L, 4L, 5L, 6L, 7L))
+    // the interpolated trigram per language (every language, no whitelist):
+    // scores and buckets against trigramLogProb / perplexityBuckets per slice
+    val all = Seq("en", "fr", "de")
+    val tri = TextQualityOps.langTrigramLogProb(docs, "doc_id", "text", "lang", maxVocab = 6)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4))).toSet
+    val triSliced = slices(all) { (d, lg) =>
+      TextQualityOps.trigramLogProb(d, "doc_id", "text", maxVocab = 6).collect()
+        .map(r => (r.getLong(0), lg, r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    }
+    assert(tri == triSliced, s"tri=${tri.toSeq.sortBy(_._1)} sliced=${triSliced.toSeq.sortBy(_._1)}")
+    assert(tri.map(_._1) == (1L to 8L).toSet)
+    val buckets = TextQualityOps.langPerplexityBuckets(docs, "doc_id", "text", "lang",
+        maxVocab = 6)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3),
+        r.getString(4))).toSet
+    val bucketsSliced = slices(all) { (d, lg) =>
+      TextQualityOps.perplexityBuckets(d, "doc_id", "text", maxVocab = 6).collect()
+        .map(r => (r.getLong(0), lg, r.getDouble(1), r.getLong(2), r.getString(3))).toSeq
+    }
+    assert(buckets == bucketsSliced,
+      s"buckets=${buckets.toSeq.sortBy(_._1)} sliced=${bucketsSliced.toSeq.sortBy(_._1)}")
   }
 
   test("containment: embedded document scores ~1 one-way while Jaccard stays low") {

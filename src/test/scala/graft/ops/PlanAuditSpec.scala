@@ -128,41 +128,43 @@ class PlanAuditSpec extends SparkSuite {
     // bounds-pruned read: ONE parquet scan over the surviving files +
     // the residual filter — no exchange, no join (the skip decision
     // happened driver-side in the manifest fold)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pa17_")
-      .toString
-    Seq((1L, 1.0), (9L, 2.0)).toDF("id", "x").write.parquet(s"$dir/data/a")
-    Seq((20L, 3.0), (29L, 4.0)).toDF("id", "x")
-      .write.parquet(s"$dir/data/b")
-    IcebergOps.icebergCommit(dir, 0, Seq("data/a", "data/b"),
-      statsCols = Seq("id"))
-    val pruned = IcebergOps.readIcebergBoundsPruned(spark, dir, 0,
-      "id", 0L, 10L)
-    val pp = pruned.queryExecution.executedPlan.toString
-    assert(!pp.contains("Exchange") && !pp.contains("Join"),
-      s"bounds-pruned read shuffles or joins:\n$pp")
-    assert(pruned.inputFiles.forall(!_.contains("data/b")),
-      "bounds pruning failed to drop the disjoint file")
-    // evolved read: per-schema-group scans + static projections,
-    // unioned — no exchange, no join, however many schema versions
-    val ev = java.nio.file.Files.createTempDirectory("graft_pa17e_")
-      .toString
-    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$ev/data/u0")
-    Seq((2L, "b", 0.5)).toDF("id", "v", "s").write.parquet(s"$ev/data/u1")
-    IcebergOps.icebergCommitEvolved(ev, 0,
-      Seq((1, "id", "long"), (2, "v", "string")), Seq("data/u0"))
-    IcebergOps.icebergCommitEvolved(ev, 1,
-      Seq((1, "id", "long"), (2, "v", "string"), (3, "s", "double")),
-      Seq("data/u1"))
-    val ep = IcebergOps.readIcebergEvolved(spark, ev, 1)
-      .queryExecution.executedPlan.toString
-    assert(!ep.contains("Exchange") && !ep.contains("Join"),
-      s"evolved read shuffles or joins:\n$ep")
-    // incremental changes: delta-file scans + a literal change column,
-    // unioned — no exchange, no join
-    val cp = IcebergOps.readIcebergChanges(spark, ev, 0, 1)
-      .queryExecution.executedPlan.toString
-    assert(!cp.contains("Exchange") && !cp.contains("Join"),
-      s"changes read shuffles or joins:\n$cp")
+    withTempDir("graft_pa17_") { tmp =>
+      val dir = tmp.toString
+      Seq((1L, 1.0), (9L, 2.0)).toDF("id", "x").write.parquet(s"$dir/data/a")
+      Seq((20L, 3.0), (29L, 4.0)).toDF("id", "x")
+        .write.parquet(s"$dir/data/b")
+      IcebergOps.icebergCommit(dir, 0, Seq("data/a", "data/b"),
+        statsCols = Seq("id"))
+      val pruned = IcebergOps.readIcebergBoundsPruned(spark, dir, 0,
+        "id", 0L, 10L)
+      val pp = pruned.queryExecution.executedPlan.toString
+      assert(!pp.contains("Exchange") && !pp.contains("Join"),
+        s"bounds-pruned read shuffles or joins:\n$pp")
+      assert(pruned.inputFiles.forall(!_.contains("data/b")),
+        "bounds pruning failed to drop the disjoint file")
+      // evolved read: per-schema-group scans + static projections,
+      // unioned — no exchange, no join, however many schema versions
+      withTempDir("graft_pa17e_") { tmpE =>
+        val ev = tmpE.toString
+        Seq((1L, "a")).toDF("id", "v").write.parquet(s"$ev/data/u0")
+        Seq((2L, "b", 0.5)).toDF("id", "v", "s").write.parquet(s"$ev/data/u1")
+        IcebergOps.icebergCommitEvolved(ev, 0,
+          Seq((1, "id", "long"), (2, "v", "string")), Seq("data/u0"))
+        IcebergOps.icebergCommitEvolved(ev, 1,
+          Seq((1, "id", "long"), (2, "v", "string"), (3, "s", "double")),
+          Seq("data/u1"))
+        val ep = IcebergOps.readIcebergEvolved(spark, ev, 1)
+          .queryExecution.executedPlan.toString
+        assert(!ep.contains("Exchange") && !ep.contains("Join"),
+          s"evolved read shuffles or joins:\n$ep")
+        // incremental changes: delta-file scans + a literal change column,
+        // unioned — no exchange, no join
+        val cp = IcebergOps.readIcebergChanges(spark, ev, 0, 1)
+          .queryExecution.executedPlan.toString
+        assert(!cp.contains("Exchange") && !cp.contains("Join"),
+          s"changes read shuffles or joins:\n$cp")
+      }
+    }
   }
 
   test("scd2Apply joins history against a BROADCAST per-id first-seq table") {

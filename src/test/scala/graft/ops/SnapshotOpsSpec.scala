@@ -36,34 +36,36 @@ class SnapshotOpsSpec extends SparkSuite {
 
   test("time travel: scan reads exactly the manifest's units, old versions stay stable") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_snap_").toString
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.parquet(s"$dir/data/u0")
-    Seq((3L, "c")).toDF("id", "v").write.parquet(s"$dir/data/u1")
-    Seq((4L, "d")).toDF("id", "v").write.parquet(s"$dir/data/u2")
-    SnapshotOps.commitManifest(dir, 1, Seq("data/u0", "data/u1"))
-    SnapshotOps.commitManifest(dir, 2, Seq("data/u0", "data/u2"))
-    // v1 sees u0+u1 only; the u2 append is invisible
-    val v1 = SnapshotOps.readVersion(spark, dir, 1)
-    assert(v1.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
-    // machine-asserted pruning: the relation's file list is exactly
-    // the manifest's units — u2 never appears in the v1 scan
-    val files1 = v1.inputFiles.toSeq
-    assert(files1.nonEmpty && files1.forall(f =>
-      f.contains("data/u0") || f.contains("data/u1")), files1.toString)
-    // v2 sees the retirement of u1 and the append of u2
-    val v2 = SnapshotOps.readVersion(spark, dir, 2)
-    assert(v2.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L))
-    assert(v2.inputFiles.forall(f => !f.contains("data/u1")))
-    // a version is immutable: re-commit with a different list refuses
-    intercept[IllegalArgumentException] {
-      SnapshotOps.commitManifest(dir, 1, Seq("data/u0"))
-    }
-    // idempotent re-commit of the identical list is fine
-    SnapshotOps.commitManifest(dir, 1, Seq("data/u0", "data/u1"))
-    // missing version refuses loudly
-    intercept[IllegalArgumentException] {
-      SnapshotOps.readVersion(spark, dir, 9)
+    withTempDir("graft_snap_") { tmp =>
+      val dir = tmp.toString
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+        .write.parquet(s"$dir/data/u0")
+      Seq((3L, "c")).toDF("id", "v").write.parquet(s"$dir/data/u1")
+      Seq((4L, "d")).toDF("id", "v").write.parquet(s"$dir/data/u2")
+      SnapshotOps.commitManifest(dir, 1, Seq("data/u0", "data/u1"))
+      SnapshotOps.commitManifest(dir, 2, Seq("data/u0", "data/u2"))
+      // v1 sees u0+u1 only; the u2 append is invisible
+      val v1 = SnapshotOps.readVersion(spark, dir, 1)
+      assert(v1.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+      // machine-asserted pruning: the relation's file list is exactly
+      // the manifest's units — u2 never appears in the v1 scan
+      val files1 = v1.inputFiles.toSeq
+      assert(files1.nonEmpty && files1.forall(f =>
+        f.contains("data/u0") || f.contains("data/u1")), files1.toString)
+      // v2 sees the retirement of u1 and the append of u2
+      val v2 = SnapshotOps.readVersion(spark, dir, 2)
+      assert(v2.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L))
+      assert(v2.inputFiles.forall(f => !f.contains("data/u1")))
+      // a version is immutable: re-commit with a different list refuses
+      intercept[IllegalArgumentException] {
+        SnapshotOps.commitManifest(dir, 1, Seq("data/u0"))
+      }
+      // idempotent re-commit of the identical list is fine
+      SnapshotOps.commitManifest(dir, 1, Seq("data/u0", "data/u1"))
+      // missing version refuses loudly
+      intercept[IllegalArgumentException] {
+        SnapshotOps.readVersion(spark, dir, 9)
+      }
     }
   }
 
@@ -135,16 +137,17 @@ class SnapshotOpsSpec extends SparkSuite {
   }
 
   test("manifest commit rejects unencodable unit paths") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_snapq_")
-      .toString
-    intercept[IllegalArgumentException] {
-      SnapshotOps.commitManifest(dir, 1, Seq("data/u,0"))
+    withTempDir("graft_snapq_") { tmp =>
+      val dir = tmp.toString
+      intercept[IllegalArgumentException] {
+        SnapshotOps.commitManifest(dir, 1, Seq("data/u,0"))
+      }
+      intercept[IllegalArgumentException] {
+        SnapshotOps.commitManifest(dir, 1, Seq("data/\"u0\""))
+      }
+      // nothing half-committed after the refusals
+      assert(!new java.io.File(dir, "manifests/v1.json").exists())
     }
-    intercept[IllegalArgumentException] {
-      SnapshotOps.commitManifest(dir, 1, Seq("data/\"u0\""))
-    }
-    // nothing half-committed after the refusals
-    assert(!new java.io.File(dir, "manifests/v1.json").exists())
   }
 
   test("delta log: fold, time travel behind a checkpoint, scan list == log state") {

@@ -66,7 +66,13 @@ class RidePassSpec extends SparkSuite with BeforeAndAfterAll {
     val ride = Files.createDirectories(dir.resolve("ride log 4"))
     val pair = Seq(SyntheticLog.write(ride, 40, 14, edges = true),
       SyntheticLog.write(ride, 40, 15, malformed = true, name = "2025-03-04_10-30-00.csv"))
-    val cases = rides.map(Seq(_)) :+ pair.map(_.toString)
+    // the same pair in two ride folders: one call numbers and deduplicates
+    // them together, still the first file's row first
+    val apart = Seq(
+      SyntheticLog.write(Files.createDirectories(dir.resolve("ride log 8")), 40, 14, edges = true),
+      SyntheticLog.write(Files.createDirectories(dir.resolve("ride log 9")), 40, 15,
+        malformed = true, name = "2025-03-04_10-30-00.csv"))
+    val cases = rides.map(Seq(_)) :+ pair.map(_.toString) :+ apart.map(_.toString)
     val cells = cases.map { paths =>
       same(VescPipeline.analyze(spark, paths, weights, mean, std),
         DeclarativeOracle.analyze(spark, paths, weights, mean, std))

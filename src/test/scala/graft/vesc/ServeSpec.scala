@@ -4,21 +4,15 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
-import org.apache.commons.io.FileUtils
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** The serving boundary: endpoints, content types, 404s, and the path
   * traversal guard — exercised over a real socket with the JDK client.
-  * No Spark needed: serving reads already-materialized export artifacts.
+  * No Spark session starts: serving reads already-materialized export
+  * artifacts, and the suite takes only `withTempDir` from [[SparkSuite]].
   * Every test deletes the directories and files it creates.
   */
-class ServeSpec extends AnyFunSuite {
-
-  /** `body` over a fresh temp directory, deleted afterwards. */
-  private def withTempDir[T](prefix: String)(body: Path => T): T = {
-    val dir = Files.createTempDirectory(prefix)
-    try body(dir) finally FileUtils.deleteDirectory(dir.toFile)
-  }
+class ServeSpec extends SparkSuite {
 
   private def get(port: Int, path: String): (Int, String, String) = {
     val conn = URI.create(s"http://127.0.0.1:$port$path").toURL

@@ -439,12 +439,6 @@ class TrunkTrainerSpec extends SparkSuite {
       s"loss did not decrease: ${got.log.map(_.trainLoss)}")
   }
 
-  /** `body` on a fresh temp dir that is deleted afterwards. */
-  private def withTempDir[A](prefix: String)(body: java.io.File => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try body(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
-
   test("checkpoint + resume leaves nothing new in java.io.tmpdir") {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def entries = tmp.list().toSet
