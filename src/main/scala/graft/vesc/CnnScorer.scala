@@ -335,8 +335,16 @@ object CnnScorer {
   def loadCheckpoint(path: String): CnnWeights =
     fromTensors(TorchCheckpoint.stateDict(path))
 
+  /** The neutral weight table's columns: one row per tensor. */
+  val WeightSchema: StructType = StructType(Seq(
+    StructField("layer", StringType), StructField("shape", ArrayType(IntegerType)),
+    StructField("data", ArrayType(FloatType))))
+
+  /** Read with [[WeightSchema]], so the load is one Spark job (no footer
+    * inference).
+    */
   def loadWeights(spark: SparkSession, path: String): CnnWeights = {
-    val rows = spark.read.parquet(path).collect()
+    val rows = spark.read.schema(WeightSchema).parquet(path).collect()
     val tensors: Map[String, (Seq[Int], Array[Float])] = rows.map { r =>
       val name = r.getAs[String]("layer")
       val shape = r.getAs[scala.collection.Seq[Int]]("shape").toSeq

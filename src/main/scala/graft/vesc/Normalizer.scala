@@ -2,6 +2,7 @@ package graft.vesc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Per-channel normalization statistics (reference A1/M1:
   * model/normalize.py:37-75, model/model_training.py:39-41).
@@ -41,7 +42,15 @@ object Normalizer {
     stats.coalesce(1).write.mode("overwrite").parquet(path)
 
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(StatsSchema).parquet(path)
+
+  /** The columns [[fit]] produces and [[load]] reads; declared, so a load
+    * infers no schema from the file footers. A stats file without `n` (the
+    * bundled one) reads it as null.
+    */
+  val StatsSchema: StructType = StructType(Seq(StructField("channel", StringType),
+    StructField("mean", DoubleType), StructField("std", DoubleType),
+    StructField("n", LongType)))
 
   /** Collect stats into channel order for the scorer. */
   def collectStats(stats: DataFrame, featureCols: Seq[String]):

@@ -12,9 +12,10 @@ import org.apache.spark.sql.types.StructType
   * over one ride's rows.
   *
   * '''Sort-order contract.''' [[perRide]] is the only Spark plan: one
-  * exchange on `ride_id`, one sort on (`ride_id`, the caller's order) and
-  * one `mapPartitions` that hands each ride's rows, in that order, to a
-  * function of this object. The callers sort by
+  * exchange on `ride_id` (none when the caller has a single ride), one
+  * sort on (`ride_id`, the caller's order) and one `mapPartitions` that
+  * hands each ride's rows, in that order, to a function of this object.
+  * The callers sort by
   *  - (ms_today, file order) to resample: keep-first dedup is then "the
   *    first row of each run of equal ms_today", the grid is one forward
   *    pass and interpolation one forward and one backward scan;
@@ -61,11 +62,16 @@ object RidePass {
     * `ride_id` and one sort on (`ride_id` +: `order`) within it: `pass`
     * maps each ride's rows, in that order, to rows of schema `out`. One
     * `mapPartitions` serves every ride of a partition.
+    *
+    * With `oneRide` the caller vouches that every row of `df` is one ride:
+    * its partitions are then coalesced into the pass's single task
+    * instead (no exchange, so the plan runs as one stage). The rows and
+    * their order within the ride are the same either way.
     */
-  def perRide(df: DataFrame, order: Seq[Column], out: StructType)(
+  def perRide(df: DataFrame, order: Seq[Column], out: StructType, oneRide: Boolean = false)(
       pass: IndexedSeq[Row] => Iterator[Row]): DataFrame = {
     require(df.columns.head == "ride_id", s"first column ${df.columns.head} is not ride_id")
-    df.repartition(col("ride_id"))
+    (if (oneRide) df.coalesce(1) else df.repartition(col("ride_id")))
       .sortWithinPartitions(col("ride_id") +: order: _*)
       .mapPartitions { rows =>
         val in = rows.buffered

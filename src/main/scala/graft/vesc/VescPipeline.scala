@@ -7,10 +7,10 @@ import org.apache.spark.sql.types.{StringType, StructField}
 /** End-to-end pipelines — the reference's three entry points (SURVEY §3)
   * as single lazy DataFrame DAGs. The reference materializes CSV between
   * stages (app.py:113-120); here Catalyst plans the whole flow at once.
-  * [[analyze]] reads its logs in one scan, shuffles once and runs the grid,
-  * windows, scores and display post-processing in one per-ride pass
-  * ([[RidePass]]): no window operator and no join (AnalyzeOnceSpec pins
-  * this shape).
+  * [[analyze]] reads its logs in one scan and runs the grid, windows,
+  * scores and display post-processing in one per-ride pass ([[RidePass]]):
+  * no exchange, no window operator and no join (AnalyzeOnceSpec pins this
+  * shape).
   */
 object VescPipeline {
 
@@ -51,12 +51,17 @@ object VescPipeline {
   /** Production analysis (reference app.py:354-366): raw log(s) → scored,
     * conflict-suppressed, display-downsampled behavior timeline.
     *
-    * One CSV scan ([[RawLogReader.scan]]), one exchange on the ride key
-    * (every log is ride `prod`), one sort on (ms_today, file, row) and one
-    * [[RidePass.perRide]] pass that runs, per ride: keep-first dedup (the
-    * sort puts the first row in file order first, so the reader's
-    * numbering is not needed), the 10 Hz grid ([[RidePass.resample]] over
-    * the model features — the production flavour's interpolated channels),
+    * One CSV scan ([[RawLogReader.scan]], its header read on the driver),
+    * one sort on (ms_today, file, row) and one [[RidePass.perRide]] pass.
+    * Every row is ride `prod`, so the call is one ride whatever the number
+    * of logs: the scan's splits are coalesced into the pass's single task,
+    * the plan has no exchange, and a `collect` is one Spark job of one
+    * stage.
+    *
+    * The pass runs, per ride: keep-first dedup (the sort puts the first row
+    * in file order first, so the reader's numbering is not needed), the
+    * 10 Hz grid ([[RidePass.resample]] over the model features — the
+    * production flavour's interpolated channels),
     * the stride-aligned windows ([[RidePass.windows]]), scoring through
     * [[CnnScorer.normalizedWindow]] and one [[CnnScorer.Trunk]], and the
     * display post-processing ([[RidePass.timeline]]). Every value is
@@ -77,7 +82,8 @@ object VescPipeline {
     val out = Postprocess.timelineSchema(StructField("ride_id", StringType, nullable = false),
       cfCols)
     val steps = WindowAssembler.Steps
-    RidePass.perRide(input, Seq(col("ms_today"), col("__file"), col("__row")), out) { rows =>
+    val order = Seq(col("ms_today"), col("__file"), col("__row"))
+    RidePass.perRide(input, order, out, oneRide = true) { rows =>
       val (w, m, s) = model.value
       val (_, g) = RidePass.resample(rows, feats.indices.map(4 + _), VescSchema.StepMs,
         VescSchema.MaxGapMs.toLong)

@@ -22,6 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (`CnnScorer.Trunk`): each trunk conv layer is applied once;
   *  - the ride path (`Resampler`, `WindowAssembler`, `Postprocess`,
   *    `VescPipeline`, `RidePass`) plans no window function;
+  *  - the vesc read path (`RawLogReader`, `VescPipeline`, `CnnScorer`,
+  *    `Normalizer`) declares every schema it reads;
   *  - `TextQualityOps` builds one Kneser–Ney ladder (`knLogProb`, every
   *    order and grouping) and one tercile bucketizer (`bucketize`).
   */
@@ -119,6 +121,22 @@ class SessionDisciplineSpec extends AnyFunSuite {
     } yield s"$p:${i + 1}"
     assert(files.forall(f => sources.exists(_._1 == f)), s"missing one of $files")
     assert(offenders.isEmpty, s"window function on the ride path: ${offenders.mkString(", ")}")
+  }
+
+  test("the vesc read path infers no schema") {
+    // an inferred schema costs a Spark job before the read (CSV header,
+    // parquet footers): each reader names its schema with .schema( right
+    // after .read
+    val vesc = Paths.get("src/main/scala/graft/vesc")
+    val files = Seq("RawLogReader", "VescPipeline", "CnnScorer", "Normalizer")
+      .map(f => vesc.resolve(f + ".scala"))
+    val read = """\.read\b(?!Stream|\s*\(|\.schema\()""".r
+    val offenders = for {
+      (p, lines) <- sources if files.contains(p)
+      (l, i) <- lines.zipWithIndex if read.findFirstIn(l).isDefined
+    } yield s"$p:${i + 1}"
+    assert(files.forall(f => sources.exists(_._1 == f)), s"missing one of $files")
+    assert(offenders.isEmpty, s"a read without .schema(: ${offenders.mkString(", ")}")
   }
 
   test("TextQualityOps keeps one Kneser-Ney ladder and one tercile bucketizer") {

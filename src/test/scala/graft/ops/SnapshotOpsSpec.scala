@@ -152,97 +152,102 @@ class SnapshotOpsSpec extends SparkSuite {
 
   test("delta log: fold, time travel behind a checkpoint, scan list == log state") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_delta_").toString
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/data/u0")
-    Seq((3L, "c")).toDF("id", "v").write.parquet(s"$dir/data/u1")
-    Seq((4L, "d")).toDF("id", "v").write.parquet(s"$dir/data/u2")
-    SnapshotOps.deltaCommit(dir, 0, Seq("data/u0", "data/u1"))
-    SnapshotOps.deltaCommit(dir, 1, adds = Seq("data/u2"),
-      removes = Seq("data/u1"))
-    SnapshotOps.deltaCheckpoint(spark, dir, 1)
-    SnapshotOps.deltaCommit(dir, 2, Seq("data/u1")) // re-add after remove
-    // v0 must ignore the v1 checkpoint (time travel behind it)
-    assert(SnapshotOps.deltaFiles(spark, dir, 0).toSet ==
-      Set("data/u0", "data/u1"))
-    // v1 resolves from the checkpoint alone
-    assert(SnapshotOps.deltaFiles(spark, dir, 1).toSet ==
-      Set("data/u0", "data/u2"))
-    // v2 = checkpoint + JSON tail; last action per path wins
-    assert(SnapshotOps.deltaFiles(spark, dir, 2).toSet ==
-      Set("data/u0", "data/u2", "data/u1"))
-    val v1 = SnapshotOps.readDeltaVersion(spark, dir, 1)
-    assert(v1.select("id").as[Long].collect().sorted.toSeq ==
-      Seq(1L, 2L, 4L))
-    // machine-asserted: the scan's file list is exactly the log state
-    assert(v1.inputFiles.forall(f => !f.contains("data/u1")))
-    // a commit is immutable; a divergent re-commit refuses
-    intercept[IllegalArgumentException] {
-      SnapshotOps.deltaCommit(dir, 2, Seq("data/u0"))
-    }
-    SnapshotOps.deltaCommit(dir, 2, Seq("data/u1")) // identical: fine
-    // missing version refuses loudly
-    intercept[IllegalArgumentException] {
-      SnapshotOps.deltaFiles(spark, dir, 9)
-    }
-    // SECOND checkpoint at v2 (written by resolving THROUGH checkpoint 1):
-    // reading v1 afterwards must pick checkpoint 1 — the latest ≤ target,
-    // never the newer one — and v2 resolves from checkpoint 2
-    SnapshotOps.deltaCheckpoint(spark, dir, 2)
-    assert(SnapshotOps.deltaFiles(spark, dir, 1).toSet ==
-      Set("data/u0", "data/u2"))
-    assert(SnapshotOps.readDeltaVersion(spark, dir, 1)
-      .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L))
-    assert(SnapshotOps.deltaFiles(spark, dir, 2).toSet ==
-      Set("data/u0", "data/u2", "data/u1"))
-    // the new checkpoint is spec-conformant: protocol + metaData rows
-    // and the full add schema readable by any parquet reader
-    val cp2 = spark.read.parquet(
-      s"$dir/_delta_log/${"0" * 19}2.checkpoint.parquet")
-    assert(cp2.columns.toSet == Set("protocol", "metaData", "add"))
-    assert(cp2.where("protocol.minReaderVersion = 1").count() == 1)
-    assert(cp2.where("metaData.id is not null").count() == 1)
-    assert(cp2.where("add.path is not null")
-      .selectExpr("add.partitionValues", "add.size", "add.modificationTime",
-        "add.dataChange").count() == 3)
+    withTempDir("graft_delta_") { dirPath =>
+      val dir = dirPath.toString
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/data/u0")
+      Seq((3L, "c")).toDF("id", "v").write.parquet(s"$dir/data/u1")
+      Seq((4L, "d")).toDF("id", "v").write.parquet(s"$dir/data/u2")
+      SnapshotOps.deltaCommit(dir, 0, Seq("data/u0", "data/u1"))
+      SnapshotOps.deltaCommit(dir, 1, adds = Seq("data/u2"),
+        removes = Seq("data/u1"))
+      SnapshotOps.deltaCheckpoint(spark, dir, 1)
+      SnapshotOps.deltaCommit(dir, 2, Seq("data/u1")) // re-add after remove
+      // v0 must ignore the v1 checkpoint (time travel behind it)
+      assert(SnapshotOps.deltaFiles(spark, dir, 0).toSet ==
+        Set("data/u0", "data/u1"))
+      // v1 resolves from the checkpoint alone
+      assert(SnapshotOps.deltaFiles(spark, dir, 1).toSet ==
+        Set("data/u0", "data/u2"))
+      // v2 = checkpoint + JSON tail; last action per path wins
+      assert(SnapshotOps.deltaFiles(spark, dir, 2).toSet ==
+        Set("data/u0", "data/u2", "data/u1"))
+      val v1 = SnapshotOps.readDeltaVersion(spark, dir, 1)
+      assert(v1.select("id").as[Long].collect().sorted.toSeq ==
+        Seq(1L, 2L, 4L))
+      // machine-asserted: the scan's file list is exactly the log state
+      assert(v1.inputFiles.forall(f => !f.contains("data/u1")))
+      // a commit is immutable; a divergent re-commit refuses
+      intercept[IllegalArgumentException] {
+        SnapshotOps.deltaCommit(dir, 2, Seq("data/u0"))
+      }
+      SnapshotOps.deltaCommit(dir, 2, Seq("data/u1")) // identical: fine
+      // missing version refuses loudly
+      intercept[IllegalArgumentException] {
+        SnapshotOps.deltaFiles(spark, dir, 9)
+      }
+      // SECOND checkpoint at v2 (written by resolving THROUGH checkpoint 1):
+      // reading v1 afterwards must pick checkpoint 1 — the latest ≤ target,
+      // never the newer one — and v2 resolves from checkpoint 2
+      SnapshotOps.deltaCheckpoint(spark, dir, 2)
+      assert(SnapshotOps.deltaFiles(spark, dir, 1).toSet ==
+        Set("data/u0", "data/u2"))
+      assert(SnapshotOps.readDeltaVersion(spark, dir, 1)
+        .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L))
+      assert(SnapshotOps.deltaFiles(spark, dir, 2).toSet ==
+        Set("data/u0", "data/u2", "data/u1"))
+      // the new checkpoint is spec-conformant: protocol + metaData rows
+      // and the full add schema readable by any parquet reader
+      val cp2 = spark.read.parquet(
+        s"$dir/_delta_log/${"0" * 19}2.checkpoint.parquet")
+      assert(cp2.columns.toSet == Set("protocol", "metaData", "add"))
+      assert(cp2.where("protocol.minReaderVersion = 1").count() == 1)
+      assert(cp2.where("metaData.id is not null").count() == 1)
+      assert(cp2.where("add.path is not null")
+        .selectExpr("add.partitionValues", "add.size", "add.modificationTime",
+          "add.dataChange").count() == 3)
 
-    // a reader-version gate above 1 refuses the whole read
-    val gated = java.nio.file.Files.createTempDirectory("graft_deltag_")
-      .toString
-    new java.io.File(gated, "_delta_log").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(gated, "_delta_log",
-        "0" * 19 + "0.json"),
-      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7}}"""
-        .getBytes("UTF-8"))
-    intercept[IllegalArgumentException] {
-      SnapshotOps.deltaFiles(spark, gated, 0)
+      // a reader-version gate above 1 refuses the whole read
+      withTempDir("graft_deltag_") { gatedPath =>
+        val gated = gatedPath.toString
+        new java.io.File(gated, "_delta_log").mkdirs()
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(gated, "_delta_log",
+            "0" * 19 + "0.json"),
+          """{"protocol":{"minReaderVersion":3,"minWriterVersion":7}}"""
+            .getBytes("UTF-8"))
+        intercept[IllegalArgumentException] {
+          SnapshotOps.deltaFiles(spark, gated, 0)
+        }
+        // a checkpoint whose protocol gates reader >= 2 refuses even though
+        // the JSON prefix it collapsed is gone (deletion-vector tables etc.)
+        withTempDir("graft_deltac_") { cpGatedPath =>
+          val cpGated = cpGatedPath.toString
+          new java.io.File(cpGated, "_delta_log").mkdirs()
+          Seq(("p", """{"minReaderVersion":2,"minWriterVersion":5}"""))
+            .toDF("kind", "js")
+            .selectExpr("from_json(js, 'struct<minReaderVersion:int," +
+              "minWriterVersion:int>') AS protocol")
+            .coalesce(1).write.parquet(
+              s"$cpGated/_delta_log/${"0" * 19}0.checkpoint.parquet")
+          val e2 = intercept[IllegalArgumentException] {
+            SnapshotOps.deltaFiles(spark, cpGated, 0)
+          }
+          assert(e2.getMessage.contains("reader version 2"))
+          // and a checkpoint with NO protocol column is non-conformant: refuse
+          withTempDir("graft_deltab_") { cpBarePath =>
+            val cpBare = cpBarePath.toString
+            new java.io.File(cpBare, "_delta_log").mkdirs()
+            Seq("data/x").toDF("path").selectExpr("struct(path) AS add")
+              .coalesce(1).write.parquet(
+                s"$cpBare/_delta_log/${"0" * 19}0.checkpoint.parquet")
+            val e3 = intercept[IllegalArgumentException] {
+              SnapshotOps.deltaFiles(spark, cpBare, 0)
+            }
+            assert(e3.getMessage.contains("no protocol column"))
+          }
+        }
+      }
     }
-    // a checkpoint whose protocol gates reader >= 2 refuses even though
-    // the JSON prefix it collapsed is gone (deletion-vector tables etc.)
-    val cpGated = java.nio.file.Files.createTempDirectory("graft_deltac_")
-      .toString
-    new java.io.File(cpGated, "_delta_log").mkdirs()
-    Seq(("p", """{"minReaderVersion":2,"minWriterVersion":5}"""))
-      .toDF("kind", "js")
-      .selectExpr("from_json(js, 'struct<minReaderVersion:int," +
-        "minWriterVersion:int>') AS protocol")
-      .coalesce(1).write.parquet(
-        s"$cpGated/_delta_log/${"0" * 19}0.checkpoint.parquet")
-    val e2 = intercept[IllegalArgumentException] {
-      SnapshotOps.deltaFiles(spark, cpGated, 0)
-    }
-    assert(e2.getMessage.contains("reader version 2"))
-    // and a checkpoint with NO protocol column is non-conformant: refuse
-    val cpBare = java.nio.file.Files.createTempDirectory("graft_deltab_")
-      .toString
-    new java.io.File(cpBare, "_delta_log").mkdirs()
-    Seq("data/x").toDF("path").selectExpr("struct(path) AS add")
-      .coalesce(1).write.parquet(
-        s"$cpBare/_delta_log/${"0" * 19}0.checkpoint.parquet")
-    val e3 = intercept[IllegalArgumentException] {
-      SnapshotOps.deltaFiles(spark, cpBare, 0)
-    }
-    assert(e3.getMessage.contains("no protocol column"))
   }
 
   test("scd2 refuses seq 0 in the log and unknown ops") {

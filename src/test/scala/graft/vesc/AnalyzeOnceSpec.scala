@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -21,10 +22,11 @@ import org.scalatest.BeforeAndAfterAll
 import graft.SparkSuite
 
 /** One upload is analyzed once: the production plan reads the log in one
-  * CSV scan, shuffles once and runs the grid, windows, scores and display
-  * in one per-ride pass with no window operator and no join, and [[App.refresh]]
-  * evaluates the timeline in one query. Runs on a [[SyntheticLog]], so it
-  * needs no reference checkout.
+  * CSV scan, shuffles not at all (every log of a call is one ride) and runs
+  * the grid, windows, scores and display in one per-ride pass with no
+  * window operator and no join, so an analysis is one Spark job;
+  * [[App.refresh]] evaluates the timeline in one query. Runs on
+  * [[SyntheticLog]]s, so it needs no reference checkout.
   */
 class AnalyzeOnceSpec extends SparkSuite with AdaptiveSparkPlanHelper with BeforeAndAfterAll {
 
@@ -34,10 +36,25 @@ class AnalyzeOnceSpec extends SparkSuite with AdaptiveSparkPlanHelper with Befor
   override def afterAll(): Unit =
     try FileUtils.deleteDirectory(dir.toFile) finally super.afterAll()
 
-  test("analyze's executed plan: one CSV scan, one exchange, one per-ride pass") {
-    val timeline = VescPipeline.analyze(spark, Seq(log))
-    assert(timeline.collect().nonEmpty)
-    val plan: SparkPlan = timeline.queryExecution.executedPlan
+  private lazy val assets = VescPipeline.bundled(spark)
+
+  /** `body`'s value and the number of Spark jobs it started. */
+  private def jobs[T](body: => T): (T, Int) = {
+    val started = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain(spark.sparkContext)
+      (out, started.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The operators every analysis plans once or never, whatever its inputs. */
+  private def assertPerRidePass(plan: SparkPlan): Unit = {
     val scans = collect(plan) { case s: FileSourceScanExec => s }
     assert(scans.size == 1 && scans.head.relation.fileFormat.isInstanceOf[CSVFileFormat],
       s"scans: ${scans.map(_.nodeName)}")
@@ -45,8 +62,43 @@ class AnalyzeOnceSpec extends SparkSuite with AdaptiveSparkPlanHelper with Befor
     assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, plan.treeString)
     assert(collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan.treeString)
     assert(collect(plan) { case w: WindowExec => w }.isEmpty, plan.treeString)
-    val exchanges = collect(plan) { case e: Exchange => e }.size
-    assert(exchanges == 1, s"$exchanges exchanges:\n${plan.treeString}")
+  }
+
+  private def exchanges(plan: SparkPlan): Int = collect(plan) { case e: Exchange => e }.size
+
+  test("one log: one CSV scan, no exchange, one per-ride pass, one Spark job") {
+    val (w, m, s) = assets
+    val (timeline, started) = jobs {
+      val t = VescPipeline.analyze(spark, Seq(log), w, m, s)
+      assert(t.collect().nonEmpty)
+      t
+    }
+    val plan = timeline.queryExecution.executedPlan
+    assertPerRidePass(plan)
+    assert(exchanges(plan) == 0, s"${exchanges(plan)} exchanges:\n${plan.treeString}")
+    assert(started == 1, s"analyze through collect ran $started Spark jobs")
+  }
+
+  test("two logs: still one ride, no exchange, one Spark job") {
+    val (w, m, s) = assets
+    withTempDir("graft_analyze_two_") { other =>
+      val second = SyntheticLog.write(other, seconds = 30, seed = 2).toString
+      val (timeline, started) = jobs {
+        val t = VescPipeline.analyze(spark, Seq(log, second), w, m, s)
+        assert(t.collect().nonEmpty)
+        t
+      }
+      val plan = timeline.queryExecution.executedPlan
+      assertPerRidePass(plan)
+      assert(exchanges(plan) == 0, s"${exchanges(plan)} exchanges:\n${plan.treeString}")
+      assert(started == 1, s"analyze through collect ran $started Spark jobs")
+    }
+  }
+
+  test("a cold bundled load runs two Spark jobs") {
+    // one per asset read; declared schemas leave no parquet footer job
+    val (_, started) = jobs(VescPipeline.bundled(spark))
+    assert(started == 2, s"bundled ran $started Spark jobs")
   }
 
   test("App.refresh evaluates the timeline once and writes its bar count as rows") {

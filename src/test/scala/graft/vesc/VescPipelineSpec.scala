@@ -58,4 +58,17 @@ class VescPipelineSpec extends SparkSuite {
     val left = assets() -- before
     assert(left.isEmpty, s"bundled left ${left.mkString(", ")} in $tmp")
   }
+
+  test("Normalizer.load returns the stats table save wrote, n included") {
+    withTempDir("graft_norm_stats_") { dir =>
+      val log = SyntheticLog.write(dir, seconds = 5).toString
+      val stats = Normalizer.fit(RawLogReader.readProd(spark, Seq(log)))
+      val path = dir.resolve("stats.parquet").toString
+      Normalizer.save(stats, path)
+      val loaded = Normalizer.load(spark, path)
+      assert(loaded.schema.map(f => f.name -> f.dataType) ==
+        stats.schema.map(f => f.name -> f.dataType))
+      assert(loaded.collect().toSet == stats.collect().toSet)
+    }
+  }
 }
