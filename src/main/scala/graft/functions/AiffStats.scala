@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 /** AIFF (Audio IFF) sample decode + stats — the big-endian sibling of
@@ -27,25 +26,6 @@ import org.apache.spark.sql.types._
   * Scale: scan-side expression over one blob, embarrassingly parallel;
   * same cost shape as the WAV/FLAC/G.711 decoders it sits beside.
   */
-case class AiffStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AiffStats.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_aiff_stats"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    AiffStats.stats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AiffStats.stats($c);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildInternal(newChild: Expression): AiffStats =
-    copy(child = newChild)
-}
-
 object AiffStats {
 
   val schema: StructType = StructType(Seq(

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -298,6 +296,7 @@ object ArrowIpc {
   // public entry points
   // ---------------------------------------------------------------
 
+  /** `arrow_audit(binary)` → shard-QA struct or null. */
   def audit(b: Array[Byte]): InternalRow =
     try {
       val ipc = walk(b)
@@ -383,6 +382,7 @@ object ArrowIpc {
       case _: NegativeArraySizeException => null
     }
 
+  /** `arrow_col_i64(binary, name)` → array<long> or null. */
   def colI64(b: Array[Byte], name: UTF8String): GenericArrayData =
     colValues(b, name, Set("int8", "int16", "int32", "int64",
       "uint8", "uint16", "uint32")) { (tn, data, i) =>
@@ -397,6 +397,7 @@ object ArrowIpc {
       }
     }
 
+  /** `arrow_col_f64(binary, name)` → array<double> or null. */
   def colF64(b: Array[Byte], name: UTF8String): GenericArrayData =
     colValues(b, name, Set("float32", "float64")) { (tn, data, i) =>
       if (tn == "float32")
@@ -404,6 +405,7 @@ object ArrowIpc {
       else java.lang.Double.longBitsToDouble(data.le64(i * 8))
     }
 
+  /** `arrow_col_str(binary, name)` → array<string> or null. */
   def colStr(b: Array[Byte], name: UTF8String): GenericArrayData =
     try {
       val ipc = walk(b)
@@ -441,82 +443,4 @@ object ArrowIpc {
       case _: IndexOutOfBoundsException => null
       case _: NegativeArraySizeException => null
     }
-}
-
-/** `arrow_audit(binary)` → shard-QA struct or null. */
-case class ArrowAudit(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrowIpc.auditSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "arrow_audit"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ArrowIpc.audit(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ArrowIpc.audit($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): ArrowAudit =
-    copy(child = newChild)
-}
-
-private[functions] abstract class ArrowColBase extends BinaryExpression {
-  override def nullable: Boolean = true
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (binary, string)")
-}
-
-/** `arrow_col_i64(binary, name)` → array<long> or null. */
-case class ArrowColI64(left: Expression, right: Expression)
-    extends ArrowColBase {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "arrow_col_i64"
-  override def nullSafeEval(b: Any, n: Any): Any =
-    ArrowIpc.colI64(b.asInstanceOf[Array[Byte]], n.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.ArrowIpc.colI64($b, $n);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): ArrowColI64 = copy(left = l, right = r)
-}
-
-/** `arrow_col_f64(binary, name)` → array<double> or null. */
-case class ArrowColF64(left: Expression, right: Expression)
-    extends ArrowColBase {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def prettyName: String = "arrow_col_f64"
-  override def nullSafeEval(b: Any, n: Any): Any =
-    ArrowIpc.colF64(b.asInstanceOf[Array[Byte]], n.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.ArrowIpc.colF64($b, $n);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): ArrowColF64 = copy(left = l, right = r)
-}
-
-/** `arrow_col_str(binary, name)` → array<string> or null. */
-case class ArrowColStr(left: Expression, right: Expression)
-    extends ArrowColBase {
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "arrow_col_str"
-  override def nullSafeEval(b: Any, n: Any): Any =
-    ArrowIpc.colStr(b.asInstanceOf[Array[Byte]], n.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.ArrowIpc.colStr($b, $n);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): ArrowColStr = copy(left = l, right = r)
 }

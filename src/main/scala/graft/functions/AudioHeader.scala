@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,30 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *    5-bit field packed across bytes 18–21 of the stream (actual bit
   *    unpacking, not byte reads).
   */
-case class AudioHeader(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = AudioHeader.schema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"audio_header needs binary, got ${child.dataType}")
-
-  override def nullSafeEval(input: Any): Any =
-    AudioHeader.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioHeader.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioHeader =
-    copy(child = newChild)
-}
-
 object AudioHeader {
 
   val schema: StructType = StructType(Seq(

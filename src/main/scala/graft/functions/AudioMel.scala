@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
 
 /** Mel-filterbank energies over decoded PCM — the speech-curation gate
   * stats-only signals can't provide (silence/music/speech priors need
@@ -151,13 +148,17 @@ object AudioMel {
     out
   }
 
-  /** Mel band energies of the first window, or null (refused). */
+  /** `audio_mel(binary)` → array<long> mel band energies or null.
+    *
+    * Mel band energies of the first window, or null (refused). */
   def mel(b: Array[Byte]): GenericArrayData = {
     val s = parsePcm(b)
     if (s == null) null else new GenericArrayData(windowEnergies(s, 0))
   }
 
-  /** Per-frame Σs² energies on the SAME framing grid as [[melFrames]]
+  /** `audio_frame_energy(binary)` → array<long> per-frame Σs² or null.
+    *
+    * Per-frame Σs² energies on the SAME framing grid as [[melFrames]]
     * ([[HopSamples]] hop, [[WindowSamples]] window, tail zero-padded) —
     * the time-domain signal VAD gates on: no DFT needed to know where
     * the silence is, so voice-activity segmentation costs a scan, not
@@ -184,7 +185,9 @@ object AudioMel {
     new GenericArrayData(out)
   }
 
-  /** The full mel SPECTROGRAM — one [[NumMels]]-band energy row per
+  /** `audio_mel_frames(binary)` → array<array<long>> spectrogram or null.
+    *
+    * The full mel SPECTROGRAM — one [[NumMels]]-band energy row per
     * [[HopSamples]]-hop frame (50% window overlap, the standard
     * speech-feature grain): frame f covers samples [f·hop, f·hop+64),
     * the tail zero-padded. Refuses past [[MaxFrames]] like every other
@@ -203,70 +206,4 @@ object AudioMel {
     }
     new GenericArrayData(frames)
   }
-}
-
-/** `audio_mel(binary)` → array<long> mel band energies or null. */
-case class AudioMelExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_mel"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    AudioMel.mel(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioMel.mel($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): AudioMelExpr =
-    copy(child = newChild)
-}
-
-/** `audio_mel_frames(binary)` → array<array<long>> spectrogram or null. */
-case class AudioMelFramesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_mel_frames"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    AudioMel.melFrames(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioMel.melFrames($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(
-      newChild: Expression): AudioMelFramesExpr =
-    copy(child = newChild)
-}
-
-/** `audio_frame_energy(binary)` → array<long> per-frame Σs² or null. */
-case class AudioFrameEnergyExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_frame_energy"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    AudioMel.frameEnergies(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioMel.frameEnergies($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(
-      newChild: Expression): AudioFrameEnergyExpr =
-    copy(child = newChild)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
@@ -37,30 +35,6 @@ import org.apache.spark.sql.types._
   * call, the [[ImageHash]] pattern); each blob is decoded once and
   * reduced to four integers before anything shuffles.
   */
-case class AudioPcmStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = AudioPcmStats.schema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"audio_pcm_stats needs binary, got ${child.dataType}")
-
-  override def nullSafeEval(input: Any): Any =
-    AudioPcmStats.stats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioPcmStats.stats($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioPcmStats =
-    copy(child = newChild)
-}
-
 object AudioPcmStats {
 
   val schema: StructType = StructType(Seq(
@@ -69,13 +43,16 @@ object AudioPcmStats {
     StructField("sum_sq", LongType, nullable = false),
     StructField("zero_crossings", IntegerType, nullable = false)))
 
-
   /** Invoked from both interpreted eval and generated code; null unless
     * the bytes are a complete mono 16-bit PCM RIFF/WAVE.
     */
   def stats(b: Array[Byte]): InternalRow = statsImpl(b, allowStereo = false)
 
-  /** Like [[stats]], but also accepts STEREO 16-bit PCM, downmixing each
+  /** `audio_pcm_downmix(bin)` — [[AudioPcmStats]] semantics extended to
+    * stereo via truncating (L+R)/2 downmix; see
+    * [[AudioPcmStats.statsDownmix]].
+    *
+    * Like [[stats]], but also accepts STEREO 16-bit PCM, downmixing each
     * frame to `(L + R) / 2` with Java's truncating integer division —
     * deliberately truncation, not floor, because SQL engines' integer
     * division (`//` in DuckDB) truncates toward zero and the oracle
@@ -87,7 +64,11 @@ object AudioPcmStats {
     */
   def statsDownmix(b: Array[Byte]): InternalRow = statsImpl(b, allowStereo = true)
 
-  /** G.711 COMPANDED WAV — the telephony/speech-corpus encoding (call
+  /** `audio_g711_stats(bin)` — [[AudioPcmStats]]'s stats contract over
+    * G.711 μ-law / A-law companded mono WAV; see
+    * [[AudioPcmStats.statsG711]].
+    *
+    * G.711 COMPANDED WAV — the telephony/speech-corpus encoding (call
     * recordings, IVR dumps, much of the classic ASR world ships μ-law
     * or A-law, not linear PCM): RIFF walk as in [[statsImpl]] but
     * format tag 7 (μ-law) or 6 (A-law), 8 bits, MONO; each byte expands
@@ -224,54 +205,6 @@ object AudioPcmStats {
   }
 }
 
-/** `audio_pcm_downmix(bin)` — [[AudioPcmStats]] semantics extended to
-  * stereo via truncating (L+R)/2 downmix; see
-  * [[AudioPcmStats.statsDownmix]].
-  */
-case class AudioPcmDownmix(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AudioPcmStats.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_pcm_downmix"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"audio_pcm_downmix needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    AudioPcmStats.statsDownmix(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioPcmStats.statsDownmix($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): AudioPcmDownmix =
-    copy(child = newChild)
-}
-
-/** `audio_g711_stats(bin)` — [[AudioPcmStats]]'s stats contract over
-  * G.711 μ-law / A-law companded mono WAV; see
-  * [[AudioPcmStats.statsG711]].
-  */
-case class AudioG711Stats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AudioPcmStats.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_g711_stats"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"audio_g711_stats needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    AudioPcmStats.statsG711(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioPcmStats.statsG711($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): AudioG711Stats =
-    copy(child = newChild)
-}
-
 /** `audio_flac_stats(bin)` — the [[AudioPcmStats]] stats struct decoded
   * from a native FLAC stream: magic + metadata-block walk (STREAMINFO
   * required: mono, 16-bit), then real frame parsing — sync code,
@@ -297,26 +230,6 @@ case class AudioG711Stats(child: Expression) extends UnaryExpression {
   * (when nonzero) — a truncated stream refuses rather than returning
   * stats over a prefix.
   */
-case class AudioFlacStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AudioPcmStats.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_flac_stats"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"audio_flac_stats needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    AudioFlacStats.stats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioFlacStats.stats($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): AudioFlacStats =
-    copy(child = newChild)
-}
-
 object AudioFlacStats {
 
   import Bytes.{Corrupt, fail}
@@ -558,7 +471,7 @@ object AudioFlacStats {
         // starts mid-byte), so the whole channel pair goes through the
         // bit reader; SIDE channels carry bps+1 = 17 bits (the spec's
         // extra bit for difference channels). Reconstruct L/R, then the
-        // truncating (L+R)/2 downmix — the [[AudioPcmDownmix]] contract,
+        // truncating (L+R)/2 downmix — the `audio_pcm_downmix` contract,
         // so stats over stereo FLAC and stereo WAV of the same content
         // agree exactly.
         val br = new Bytes.MsbBits(b, q, b.length)

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType}
-
 /** `audio_resample(wav, dst_rate) → wav` — LINEAR-interpolation
   * resampling of mono 16-bit PCM RIFF/WAVE to a target rate, the
   * rate-normalization step every speech pipeline runs before feature
@@ -90,27 +85,4 @@ object AudioResample {
     System.arraycopy(data, 0, out, 44, data.length)
     out
   }
-}
-
-/** See [[AudioResample]]. */
-case class AudioResampleExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "audio_resample"
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (binary, int), got " +
-        s"(${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(b: Any, r: Any): Any =
-    AudioResample.resample(b.asInstanceOf[Array[Byte]], r.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, r) => s"""
-      ${ev.value} = graft.functions.AudioResample.resample($b, $r);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AudioResampleExpr =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -47,6 +46,7 @@ object AvifMeta {
     -1
   }
 
+  /** `avif_meta(binary)` → (brand, width, height) or null (refused). */
   def meta(b: Array[Byte]): InternalRow = {
     if (b == null || b.length < 16) return null
     // ftyp must come first
@@ -76,25 +76,4 @@ object AvifMeta {
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(brand), w.toInt, h.toInt))
   }
-}
-
-/** `avif_meta(binary)` → (brand, width, height) or null (refused). */
-case class AvifMetaExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AvifMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "avif_meta"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    AvifMeta.meta(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AvifMeta.meta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): AvifMetaExpr =
-    copy(child = newChild)
 }

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
-
 /** bzip2 decompression as a scan-side expression — the Wikipedia-dump
   * mile (every `*-pages-articles.xml.bz2` drop, plus plenty of academic
   * corpus archives). Full from-spec decode of the public format:
@@ -50,7 +46,10 @@ object Bzip2 {
 
   import Bytes.{Corrupt, fail}
 
-  /** Decompress every concatenated bzip2 stream, or null. */
+  /** `bzip2_decompress(binary)` → concatenated decompressed payload of
+    * every bzip2 stream in the blob, or null.
+    *
+    * Decompress every concatenated bzip2 stream, or null. */
   def decompressAll(b: Array[Byte]): Array[Byte] =
     try decompressOrFail(b)
     catch {
@@ -292,27 +291,4 @@ object Bzip2 {
     if (got != wantCrc) fail()
     got
   }
-}
-
-/** `bzip2_decompress(binary)` → concatenated decompressed payload of
-  * every bzip2 stream in the blob, or null.
-  */
-case class Bunzip2All(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "bzip2_decompress"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Bzip2.decompressAll(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Bzip2.decompressAll($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Bunzip2All =
-    copy(child = newChild)
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -171,6 +170,8 @@ object CharsetDecode {
     if (ok && multi) "utf-8" else "windows-1252"
   }
 
+  /** `charset_decode(body binary, charset string)` → UTF-8 text (null on
+    * unknown charset name — the loud-refusal path). */
   def decode(body: Array[Byte], name: UTF8String): UTF8String = {
     if (name == null) return null
     val s = decodeString(body, name.toString)
@@ -211,6 +212,8 @@ object CharsetDecode {
       case _ => null
     }
 
+  /** `charset_encode(text string, charset string)` → bytes (null when a
+    * character falls outside the target repertoire — refuse, don't '?'). */
   def encode(text: UTF8String, name: UTF8String): Array[Byte] = {
     if (text == null || name == null) return null
     canonical(name.toString) match {
@@ -265,55 +268,5 @@ case class CharsetDetect(left: Expression, right: Expression)
   }
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): CharsetDetect =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `charset_decode(body binary, charset string)` → UTF-8 text (null on
-  * unknown charset name — the loud-refusal path). */
-case class CharsetDecodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "charset_decode"
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (binary, string), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(body: Any, name: Any): Any =
-    CharsetDecode.decode(body.asInstanceOf[Array[Byte]],
-      name.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.CharsetDecode.decode($b, $n);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): CharsetDecodeExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `charset_encode(text string, charset string)` → bytes (null when a
-  * character falls outside the target repertoire — refuse, don't '?'). */
-case class CharsetEncodeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "charset_encode"
-  override def checkInputDataTypes() =
-    if (left.dataType == StringType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (string, string), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(text: Any, name: Any): Any =
-    CharsetDecode.encode(text.asInstanceOf[UTF8String],
-      name.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, n) => s"""
-      ${ev.value} = graft.functions.CharsetDecode.encode($t, $n);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): CharsetEncodeExpr =
     copy(left = newLeft, right = newRight)
 }

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** EPUB → text as one scan-side expression — the e-book corpus source
@@ -98,6 +95,7 @@ object EpubText {
     dir + h
   }
 
+  /** `epub_text(binary)` → reading-order text, or null (refused). */
   def epubText(buf: Array[Byte]): UTF8String =
     try {
       val members = ZipDocx.parseArchive(buf)
@@ -170,6 +168,7 @@ object EpubText {
       """<rootfiles><rootfile full-path="OEBPS/content.opf" media-type="application/oebps-package+xml"/>""" +
       """</rootfiles></container>""").getBytes("UTF-8")
 
+  /** `epub_doc(binary)` → one deterministic EPUB around the text. */
   def epubDoc(text: Array[Byte]): Array[Byte] = {
     val s = new String(text, java.nio.charset.StandardCharsets.UTF_8)
     val lines = s.split("\n", -1)
@@ -201,43 +200,4 @@ object EpubText {
         ("META-INF/container.xml", ContainerXml),
         ("OEBPS/content.opf", opf)) ++ chapters)
   }
-}
-
-/** `epub_text(binary)` → reading-order text, or null (refused). */
-case class EpubTextExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "epub_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    EpubText.epubText(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.EpubText.epubText($c);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildInternal(newChild: Expression): EpubTextExpr =
-    copy(child = newChild)
-}
-
-/** `epub_doc(binary)` → one deterministic EPUB around the text. */
-case class EpubDocExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "epub_doc"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    EpubText.epubDoc(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.EpubText.epubDoc($c);")
-  override protected def withNewChildInternal(newChild: Expression): EpubDocExpr =
-    copy(child = newChild)
 }

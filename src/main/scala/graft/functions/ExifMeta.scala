@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** `jpeg_exif_orientation(binary)` → the EXIF orientation tag (1-8), or
@@ -24,30 +23,6 @@ import org.apache.spark.sql.types._
   * guess. Scan-side expression; reads only marker headers and the one
   * APP1 segment, never entropy data.
   */
-case class JpegExifOrientation(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "jpeg_exif_orientation"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ExifMeta.orientation(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("exifOri")
-      s"""
-      Integer $tmp = graft.functions.ExifMeta.orientationBoxed($c);
-      ${ev.isNull} = $tmp == null;
-      ${ev.value} = ${ev.isNull} ? -1 : $tmp.intValue();
-    """
-    })
-  override protected def withNewChildInternal(newChild: Expression): JpegExifOrientation =
-    copy(child = newChild)
-}
-
 object ExifMeta {
 
   val gpsSchema: org.apache.spark.sql.types.StructType =
@@ -57,7 +32,9 @@ object ExifMeta {
       org.apache.spark.sql.types.StructField("lon_micro",
         org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** GPS coordinates from the EXIF GPS IFD — the image PRIVACY-SCRUB
+  /** `jpeg_gps(binary)` → (lat_micro, lon_micro) or null (no GPS IFD).
+    *
+    * GPS coordinates from the EXIF GPS IFD — the image PRIVACY-SCRUB
     * signal (geotagged uploads leak home addresses; curation gates
     * detect and strip them): IFD0 tag 0x8825 → GPS IFD → tags 1-4
     * (latitude/longitude refs + degree/minute/second RATIONALs),
@@ -66,7 +43,7 @@ object ExifMeta {
     * value is engine-exact. Null when the JPEG carries no GPS IFD or
     * any field is malformed — presence itself is the gate.
     */
-  def gps(b: Array[Byte]): Any = {
+  def gps(b: Array[Byte]): InternalRow = {
     if (b == null || b.length < 4 ||
         (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return null
     var p = 2
@@ -91,7 +68,7 @@ object ExifMeta {
     null
   }
 
-  private def gpsFromTiff(b: Array[Byte], off: Int, end: Int): Any = {
+  private def gpsFromTiff(b: Array[Byte], off: Int, end: Int): InternalRow = {
     if (off + 8 > end) return null
     val le =
       if (b(off) == 'I' && b(off + 1) == 'I') true
@@ -157,10 +134,8 @@ object ExifMeta {
       Array[Any](lat.asInstanceOf[Long], lon.asInstanceOf[Long]))
   }
 
-  def orientation(b: Array[Byte]): Any = orientationBoxed(b)
-
-  /** Boxed Integer (or null) — one shape for interpreted and codegen. */
-  def orientationBoxed(b: Array[Byte]): Integer = {
+  /** The orientation tag (1-8), or null. */
+  def orientation(b: Array[Byte]): Integer = {
     if (b == null || b.length < 4 ||
         (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return null
     var p = 2
@@ -212,26 +187,4 @@ object ExifMeta {
     }
     null
   }
-}
-
-/** `jpeg_gps(binary)` → (lat_micro, lon_micro) or null (no GPS IFD). */
-case class JpegGps(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ExifMeta.gpsSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "jpeg_gps"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ExifMeta.gps(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-        graft.functions.ExifMeta.gps($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): JpegGps =
-    copy(child = newChild)
 }

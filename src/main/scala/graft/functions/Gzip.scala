@@ -3,10 +3,6 @@ package graft.functions
 import java.io.ByteArrayOutputStream
 import java.util.zip.{CRC32, Deflater, Inflater}
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
-
 /** Gzip member codec as scan-side expressions — the compression layer of
   * real web-crawl inputs. Common Crawl WARC/WET/WAT files are a
   * CONCATENATION of independent gzip members, one per record (the
@@ -28,7 +24,9 @@ object Gzip {
     */
   val MaxInflatedBytes: Int = 64 << 20
 
-  /** One deterministic gzip member (RFC 1952): fixed header — MTIME=0,
+  /** `gzip_member(binary)` → one deterministic RFC 1952 member.
+    *
+    * One deterministic gzip member (RFC 1952): fixed header — MTIME=0,
     * XFL=0, OS=255 (unknown) — so equal payloads produce equal bytes on
     * any JVM; DEFLATE at the default level; CRC32 + ISIZE trailer.
     */
@@ -48,7 +46,16 @@ object Gzip {
     out.toByteArray
   }
 
-  /** Container magic sniff for [[CodecProbe]]. */
+  /** `codec_probe(binary)` → `'gzip' | 'zstd' | 'bz2' | 'empty' | 'unknown'` by
+    * container magic: gzip `1F 8B`, zstd frame `28 B5 2F FD`
+    * (0xFD2FB528 LE) and zstd skippable frames `5? 2A 4D 18`
+    * (0x184D2A50-5F LE). Both codecs DECODE on the crawl read path since
+    * round 10 (gzip via the JDK, zstd via the from-spec [[Zstd]]
+    * decoder); the probe routes [[graft.ops.WebOps.segmentAudit]]'s
+    * per-codec accounting, and unknown-magic segments still quarantine
+    * loudly (the WARC whole-or-refuse posture), never parse as garbage
+    * or silently drop as "malformed gzip".
+    */
   def probe(b: Array[Byte]): org.apache.spark.unsafe.types.UTF8String = {
     val name =
       if (b.length == 0) "empty"
@@ -71,7 +78,11 @@ object Gzip {
     org.apache.spark.unsafe.types.UTF8String.fromString(name)
   }
 
-  /** Inflate EVERY member of a concatenated-gzip stream and return the
+  /** `gunzip_all(binary)` → concatenated payloads of every gzip member, or
+    * null on any malformation (strict: a crawl file either parses whole or
+    * is quarantined — no silent partials).
+    *
+    * Inflate EVERY member of a concatenated-gzip stream and return the
     * concatenated payloads — the crawl-file read path. Null (never a
     * partial buffer, never garbage) on: bad magic, unsupported
     * compression method, header flags pointing past the buffer, CRC or
@@ -129,77 +140,4 @@ object Gzip {
       case _: java.util.zip.DataFormatException => -1
     } finally inf.end()
   }
-}
-
-/** `codec_probe(binary)` → `'gzip' | 'zstd' | 'bz2' | 'empty' | 'unknown'` by
-  * container magic: gzip `1F 8B`, zstd frame `28 B5 2F FD`
-  * (0xFD2FB528 LE) and zstd skippable frames `5? 2A 4D 18`
-  * (0x184D2A50-5F LE). Both codecs DECODE on the crawl read path since
-  * round 10 (gzip via the JDK, zstd via the from-spec [[Zstd]]
-  * decoder); the probe routes [[graft.ops.WebOps.segmentAudit]]'s
-  * per-codec accounting, and unknown-magic segments still quarantine
-  * loudly (the WARC whole-or-refuse posture), never parse as garbage
-  * or silently drop as "malformed gzip".
-  */
-case class CodecProbe(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  // Inherits nullability from the child: declaring nullable=false over a
-  // nullable binary child would let nullSafeCodeGen skip the null check
-  // and NPE the task on a null blob (r9 ADVICE).
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "codec_probe"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Gzip.probe(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Gzip.probe($c);")
-  override protected def withNewChildInternal(newChild: Expression): CodecProbe =
-    copy(child = newChild)
-}
-
-/** `gzip_member(binary)` → one deterministic RFC 1952 member. */
-case class GzipMember(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "gzip_member"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Gzip.compress(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Gzip.compress($c);")
-  override protected def withNewChildInternal(newChild: Expression): GzipMember =
-    copy(child = newChild)
-}
-
-/** `gunzip_all(binary)` → concatenated payloads of every gzip member, or
-  * null on any malformation (strict: a crawl file either parses whole or
-  * is quarantined — no silent partials).
-  */
-case class GunzipAll(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "gunzip_all"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Gzip.inflateAll(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Gzip.inflateAll($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): GunzipAll =
-    copy(child = newChild)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnaryExpression
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,23 +34,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scan-side expression: one walk per page, no shuffle — classification
   * on top is plain relational arithmetic over the struct fields.
   */
-case class HtmlBlocks(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HtmlBlocks.schema
-  override def prettyName: String = "html_blocks"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlBlocks.blocks(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlBlocks.blocks($c);")
-  override protected def withNewChildInternal(newChild: Expression): HtmlBlocks =
-    copy(child = newChild)
-}
-
 object HtmlBlocks {
 
   val schema: DataType = ArrayType(StructType(Seq(

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,29 +22,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * 0-based document-order index among KEPT images. Resolution against
   * the page URL is the caller's step ([[graft.ops.UrlOps.resolveUrl]]).
   */
-case class HtmlImages(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
+object HtmlImages {
+
+  val schema: DataType = ArrayType(StructType(Seq(
     StructField("src", StringType, nullable = false),
     StructField("alt", StringType, nullable = false),
     StructField("title", StringType, nullable = false),
     StructField("pos", IntegerType, nullable = false))),
     containsNull = false)
-  override def prettyName: String = "html_images"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlImages.extract(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlImages.extract($c);")
-  override protected def withNewChildInternal(newChild: Expression): HtmlImages =
-    copy(child = newChild)
-}
-
-object HtmlImages {
 
   def extract(in: UTF8String): GenericArrayData = {
     val s = in.toString

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `html_links(string)` → the href values of `<a>` elements, in document
@@ -21,24 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * dropped; everything else is returned verbatim (resolution against
   * the base URL is the caller's step — [[graft.ops.UrlOps.resolveUrl]]).
   */
-case class HtmlLinks(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "html_links"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlLinks.extract(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlLinks.extract($c);")
-  override protected def withNewChildInternal(newChild: Expression): HtmlLinks =
-    copy(child = newChild)
-}
-
 object HtmlLinks {
+
+  val anchorsType: DataType = ArrayType(StructType(Seq(
+    StructField("href", StringType, nullable = false),
+    StructField("anchor", StringType, nullable = false))),
+    containsNull = false)
 
   private val Containers = Array("script", "style", "noscript", "template")
 
@@ -122,7 +108,13 @@ object HtmlLinks {
   private def decodeEntities(u: String): String =
     u.replace("&amp;", "&").replace("&#38;", "&").replace("&#x26;", "&")
 
-  /** `html_anchors` eval: (href, anchor-text) pairs. Same tag/container
+  /** `html_anchors(string)` → `array<struct<href, anchor>>` — outlinks
+    * WITH their anchor text, the IR signal [[HtmlLinks]] drops: anchor
+    * text is a human-written description of the TARGET page (the classic
+    * ranking/labeling side-channel), so per-target anchor aggregation is
+    * a standard corpus-enrichment join.
+    *
+    * `html_anchors` eval: (href, anchor-text) pairs. Same tag/container
     * discipline as [[extract]]; the anchor text is the visible text to
     * the first `</a>`, inline markup stripped, entities decoded,
     * whitespace collapsed ([[HtmlToText]] rules). href-less `<a>` (pure
@@ -203,31 +195,4 @@ object HtmlLinks {
     }
     out.toString
   }
-}
-
-/** `html_anchors(string)` → `array<struct<href, anchor>>` — outlinks
-  * WITH their anchor text, the IR signal [[HtmlLinks]] drops: anchor
-  * text is a human-written description of the TARGET page (the classic
-  * ranking/labeling side-channel), so per-target anchor aggregation is
-  * a standard corpus-enrichment join.
-  */
-case class HtmlAnchors(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("href", StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("anchor", StringType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "html_anchors"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlLinks.anchors(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlLinks.anchors($c);")
-  override protected def withNewChildInternal(newChild: Expression): HtmlAnchors =
-    copy(child = newChild)
 }

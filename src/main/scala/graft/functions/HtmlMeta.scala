@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,24 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * against fetched-language guesses must be able to tell "absent" from
   * "declared empty".
   */
-case class HtmlMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HtmlMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "html_meta"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlMeta.extract(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlMeta.extract($c);")
-  override protected def withNewChildInternal(newChild: Expression): HtmlMeta =
-    copy(child = newChild)
-}
-
 object HtmlMeta {
 
   val schema: StructType = StructType(Seq(
@@ -56,7 +37,11 @@ object HtmlMeta {
     StructField("value", StringType, nullable = false))),
     containsNull = false)
 
-  /** OpenGraph (`property="og:*"`), twitter-card (`name="twitter:*"`),
+  /** `html_og(string)` → OpenGraph/twitter-card (key, value) rows in
+    * document order, first occurrence per key, or null only for a null
+    * page (no properties → empty array, not null).
+    *
+    * OpenGraph (`property="og:*"`), twitter-card (`name="twitter:*"`),
     * and article (`property="article:*"` — the OG structured-property
     * namespace publishers attach author/section/published_time under)
     * meta extraction — the social-metadata channel image-text pair
@@ -191,28 +176,6 @@ object HtmlMeta {
     HtmlToText.extract(UTF8String.fromString(raw)).toString
 }
 
-/** `html_og(string)` → OpenGraph/twitter-card (key, value) rows in
-  * document order, first occurrence per key, or null only for a null
-  * page (no properties → empty array, not null).
-  */
-case class HtmlOg(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HtmlMeta.ogSchema
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "html_og"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlMeta.extractOg(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlMeta.extractOg($c);")
-  override protected def withNewChildInternal(newChild: Expression): HtmlOg =
-    copy(child = newChild)
-}
-
 /** `html_jsonld(string)` → the raw payloads of every
   * `<script type="application/ld+json">` block in document order —
   * the schema.org STRUCTURED-DATA channel (articles, products,
@@ -227,25 +190,6 @@ case class HtmlOg(child: Expression) extends UnaryExpression {
   * (`get_json_object` / `from_json`) — this expression only lifts the
   * payloads out of markup.
   */
-case class HtmlJsonLd(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
-  override def prettyName: String = "html_jsonld"
-  override def checkInputDataTypes() =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlJsonLd.extract(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlJsonLd.extract($c);")
-  override protected def withNewChildInternal(newChild: Expression): HtmlJsonLd =
-    copy(child = newChild)
-}
-
 object HtmlJsonLd {
 
   def extract(html: org.apache.spark.unsafe.types.UTF8String)

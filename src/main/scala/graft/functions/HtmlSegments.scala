@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,23 +27,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape: scan-side codegen'd expression, one walk per page.
   */
-case class HtmlSegments(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HtmlSegments.schema
-  override def prettyName: String = "html_segments"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlSegments.segments(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlSegments.segments($c);")
-  override protected def withNewChildInternal(newChild: Expression): HtmlSegments =
-    copy(child = newChild)
-}
-
 object HtmlSegments {
 
   val schema: DataType = ArrayType(StructType(Seq(

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -70,6 +69,7 @@ object HtmlTables {
   private val AllBounds = Array("<table", "</table", "<tr", "</tr",
     "<td", "<th", "</td", "</th")
 
+  /** `html_tables(string)` → per-row structs, or null (refused). */
   def tables(in: UTF8String): GenericArrayData =
     try {
       val s = in.toString
@@ -122,24 +122,4 @@ object HtmlTables {
       if (inTable) fail() // unterminated table
       new GenericArrayData(out.toArray)
     } catch { case Corrupt => null }
-}
-
-/** `html_tables(string)` → per-row structs, or null (refused). */
-case class HtmlTablesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HtmlTables.rowsType
-  override def nullable: Boolean = true
-  override def prettyName: String = "html_tables"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlTables.tables(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.HtmlTables.tables($c);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildInternal(newChild: Expression): HtmlTablesExpr =
-    copy(child = newChild)
 }

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** HTML → visible text as one scan-side pass — the extraction step
@@ -35,23 +32,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * markup (typically 5-10× the visible text) is discarded before
   * anything shuffles.
   */
-case class HtmlToText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "html_to_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    HtmlToText.extract(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlToText.extract($c);")
-  override protected def withNewChildInternal(newChild: Expression): HtmlToText =
-    copy(child = newChild)
-}
-
 object HtmlToText {
 
   /** Elements whose content is invisible (or metadata, for `title`) and

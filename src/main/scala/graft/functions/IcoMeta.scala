@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -32,7 +31,7 @@ object IcoMeta {
 
   import Bytes.{Corrupt, fail}
 
-
+  /** `ico_entries(binary)` → per-image rows or null (refused). */
   def entries(buf: Array[Byte]): GenericArrayData =
     try {
       if (buf.length < 6) fail()
@@ -63,25 +62,4 @@ object IcoMeta {
       }
       new GenericArrayData(out)
     } catch { case Corrupt => null }
-}
-
-/** `ico_entries(binary)` → per-image rows or null (refused). */
-case class IcoEntriesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IcoMeta.entriesType
-  override def nullable: Boolean = true
-  override def prettyName: String = "ico_entries"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    IcoMeta.entries(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.IcoMeta.entries($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): IcoEntriesExpr =
-    copy(child = newChild)
 }

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
-
 /** IMA/DVI ADPCM (WAV format tag 0x11) → 16-bit PCM WAV — the
   * compressed-audio sample-decode mile: 4-bit adaptive-delta nibbles
   * expand through the published step/index tables (the IMA "Recommended
@@ -44,6 +40,7 @@ object ImaAdpcm {
   /** Decompression-bomb ceiling shared with the resampler's posture. */
   private val MaxSamples = 1 << 24
 
+  /** `adpcm_to_pcm(binary)` → decoded 16-bit PCM WAV bytes, or null. */
   def decode(b: Array[Byte]): Array[Byte] = {
     if (b == null || b.length < 12) return null
     if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
@@ -134,25 +131,4 @@ object ImaAdpcm {
     System.arraycopy(data, 0, out, 44, data.length)
     out
   }
-}
-
-/** `adpcm_to_pcm(binary)` → decoded 16-bit PCM WAV bytes, or null. */
-case class AdpcmToPcm(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "adpcm_to_pcm"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ImaAdpcm.decode(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ImaAdpcm.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): AdpcmToPcm =
-    copy(child = newChild)
 }

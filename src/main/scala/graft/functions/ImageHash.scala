@@ -1,116 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-
-/** Perceptual image hashes over REAL pixel data — `image_ahash(bin)` and
-  * `image_dhash(bin)` decode an uncompressed 24-bit BMP (the format whose
-  * pixel layout is ~30 lines of header walk + stride arithmetic — no
-  * codec library) and produce the classic 64-bit average-hash /
-  * difference-hash, or null for anything that is not a decodable BMP.
-  *
-  * This composes the multimodal seam with the dedup family: where
-  * [[SimHash64]] fingerprints token streams, these fingerprint pixels,
-  * and the SAME hamming-band near-dup join works downstream (a 4×16-bit
-  * band equality is pigeonhole-complete for hamming ≤ 3 and a strong
-  * recall prefilter beyond).
-  *
-  * Definitions (all integer arithmetic, so an oracle can replay them
-  * exactly):
-  *  - grayscale: `(299·r + 587·g + 114·b) / 1000` per pixel.
-  *  - block grid: cell (bx,by) of a gw×gh grid covers x ∈
-  *    [bx·W/gw, (bx+1)·W/gw) (floor division), same for y; cell value =
-  *    pixel-gray sum / cell pixel count.
-  *  - aHash: 8×8 grid; mean = Σcells/64; bit (by·8+bx) set iff
-  *    cell ≥ mean.
-  *  - dHash: 9×8 grid; bit (by·8+bx) set iff cell(bx,by) < cell(bx+1,by)
-  *    (horizontal gradient sign).
-  *
-  * Scale shape: scan-side expression inside WholeStageCodegen (static
-  * call, same pattern as [[ImageHeader]]); each blob is decoded once and
-  * reduced to 8 bytes before anything shuffles — the hash, not the
-  * image, is what the dedup join carries.
-  */
-abstract class ImageHash64 extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-}
-
-case class AHash64(child: Expression) extends ImageHash64 {
-  override def prettyName: String = "image_ahash"
-  override def nullSafeEval(input: Any): Any =
-    ImageHash.ahash(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long __h = graft.functions.ImageHash.ahash($c);
-      ${ev.isNull} = __h == null;
-      ${ev.value} = __h == null ? 0L : __h.longValue();
-    """)
-  override protected def withNewChildInternal(newChild: Expression): AHash64 =
-    copy(child = newChild)
-}
 
 /** `image_resize_gray(bin, gw, gh)` → row-major `array<int>` of the
   * gw×gh block-mean grayscale grid (see [[ImageHash.resizeGray]]).
   */
-case class ImageResizeGray(first: Expression, second: Expression,
-    third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_resize_gray"
-  override def checkInputDataTypes() =
-    if (first.dataType == BinaryType && second.dataType == IntegerType &&
-        third.dataType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (binary, int, int)")
-  override def nullSafeEval(b: Any, gw: Any, gh: Any): Any =
-    ImageHash.resizeGray(b.asInstanceOf[Array[Byte]],
-      gw.asInstanceOf[Int], gh.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, gw, gh) => s"""
-      ${ev.value} = graft.functions.ImageHash.resizeGray($b, $gw, $gh);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): ImageResizeGray = copy(first = f, second = s, third = t)
-}
-
-case class PHash64(child: Expression) extends ImageHash64 {
-  override def prettyName: String = "image_phash"
-  override def nullSafeEval(input: Any): Any =
-    ImageHash.phash(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long __ph = graft.functions.ImageHash.phash($c);
-      ${ev.isNull} = __ph == null;
-      ${ev.value} = __ph == null ? 0L : __ph.longValue();
-    """)
-  override protected def withNewChildInternal(newChild: Expression): PHash64 =
-    copy(child = newChild)
-}
-
-case class DHash64(child: Expression) extends ImageHash64 {
-  override def prettyName: String = "image_dhash"
-  override def nullSafeEval(input: Any): Any =
-    ImageHash.dhash(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long __h = graft.functions.ImageHash.dhash($c);
-      ${ev.isNull} = __h == null;
-      ${ev.value} = __h == null ? 0L : __h.longValue();
-    """)
-  override protected def withNewChildInternal(newChild: Expression): DHash64 =
-    copy(child = newChild)
-}
-
 object ImageHash {
 
   /** Decoded grayscale image: row-major top-down `gray(y*w + x)`. */
@@ -358,6 +252,34 @@ object ImageHash {
       .fromPrimitiveArray(cells(g, gw, gh))
   }
 
+  /** Perceptual image hashes over REAL pixel data — `image_ahash(bin)` and
+    * `image_dhash(bin)` decode an uncompressed 24-bit BMP (the format whose
+    * pixel layout is ~30 lines of header walk + stride arithmetic — no
+    * codec library) and produce the classic 64-bit average-hash /
+    * difference-hash, or null for anything that is not a decodable BMP.
+    *
+    * This composes the multimodal seam with the dedup family: where
+    * [[SimHash64]] fingerprints token streams, these fingerprint pixels,
+    * and the SAME hamming-band near-dup join works downstream (a 4×16-bit
+    * band equality is pigeonhole-complete for hamming ≤ 3 and a strong
+    * recall prefilter beyond).
+    *
+    * Definitions (all integer arithmetic, so an oracle can replay them
+    * exactly):
+    *  - grayscale: `(299·r + 587·g + 114·b) / 1000` per pixel.
+    *  - block grid: cell (bx,by) of a gw×gh grid covers x ∈
+    *    [bx·W/gw, (bx+1)·W/gw) (floor division), same for y; cell value =
+    *    pixel-gray sum / cell pixel count.
+    *  - aHash: 8×8 grid; mean = Σcells/64; bit (by·8+bx) set iff
+    *    cell ≥ mean.
+    *  - dHash: 9×8 grid; bit (by·8+bx) set iff cell(bx,by) < cell(bx+1,by)
+    *    (horizontal gradient sign).
+    *
+    * Scale shape: scan-side expression inside WholeStageCodegen (static
+    * call, same pattern as [[ImageHeader]]); each blob is decoded once and
+    * reduced to 8 bytes before anything shuffles — the hash, not the
+    * image, is what the dedup join carries.
+    */
   def ahash(b: Array[Byte]): java.lang.Long = {
     val g = decode(b)
     if (g == null) return null

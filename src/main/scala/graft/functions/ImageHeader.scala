@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,30 +36,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - BMP: BM + BITMAPINFOHEADER width/height (little-endian 32-bit;
   *    height may be negative = top-down, reported as stored).
   */
-case class ImageHeader(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ImageHeader.schema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"image_header needs binary, got ${child.dataType}")
-
-  override def nullSafeEval(input: Any): Any =
-    ImageHeader.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ImageHeader.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ImageHeader =
-    copy(child = newChild)
-}
-
 object ImageHeader {
 
   val schema: StructType = StructType(Seq(

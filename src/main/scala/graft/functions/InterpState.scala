@@ -34,6 +34,7 @@ case class InterpState(tick: Expression, values: Seq[Expression])
     extends DeclarativeAggregate {
 
   override def children: Seq[Expression] = tick +: values
+  override def prettyName: String = "interp_state"
   override def nullable: Boolean = false
   override def checkInputDataTypes(): TypeCheckResult =
     if (values.nonEmpty) TypeCheckResult.TypeCheckSuccess

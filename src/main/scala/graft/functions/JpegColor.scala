@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
@@ -25,31 +23,6 @@ import org.apache.spark.sql.types._
   * All-integer arithmetic (block mean = dc·q₀·125 + 128000, truncating
   * means) so a DuckDB oracle replays the statistics exactly.
   */
-case class JpegColorStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = JpegColorStats.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "jpeg_color_stats"
-
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-
-  override def nullSafeEval(input: Any): Any =
-    JpegColorStats.eval(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.JpegColorStats.eval($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): JpegColorStats =
-    copy(child = newChild)
-}
-
 object JpegColorStats {
 
   val schema: StructType = StructType(Seq(
@@ -84,31 +57,6 @@ object JpegColorStats {
   * with truncating mean division; real-file agreement with the JDK
   * ImageIO decoder is pinned in JpegRgbStatsSpec.
   */
-case class JpegRgbStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = JpegRgbStats.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "jpeg_rgb_stats"
-
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-
-  override def nullSafeEval(input: Any): Any =
-    JpegRgbStats.eval(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.JpegRgbStats.eval($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): JpegRgbStats =
-    copy(child = newChild)
-}
-
 object JpegRgbStats {
 
   val schema: StructType = StructType(Seq(

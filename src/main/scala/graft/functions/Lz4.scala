@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
-
 /** LZ4 frame decompression as a scan-side expression — the fourth leg
   * of the archive codec matrix (fast-tier dataset shards and cache
   * files ship `.lz4`). Full from-spec decode of the public frame and
@@ -77,6 +73,9 @@ object Lz4 {
     h
   }
 
+  /** `lz4_decompress(binary)` → concatenated decompressed payload of
+    * every LZ4 frame in the blob, or null.
+    */
   def decompressAll(b: Array[Byte]): Array[Byte] =
     try decompressOrFail(b)
     catch {
@@ -233,27 +232,4 @@ object Lz4 {
     }
   }
 
-}
-
-/** `lz4_decompress(binary)` → concatenated decompressed payload of
-  * every LZ4 frame in the blob, or null.
-  */
-case class Lz4Decompress(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "lz4_decompress"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Lz4.decompressAll(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Lz4.decompressAll($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Lz4Decompress =
-    copy(child = newChild)
 }

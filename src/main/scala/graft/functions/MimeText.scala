@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -310,6 +308,9 @@ object MimeText {
 
   // ---- public entry points ----
 
+  /** `eml_text(binary)` → struct<subject, from_addr, date, text,
+    * n_parts>, null on refusal.
+    */
   def message(b: Array[Byte]): InternalRow =
     try {
       val counter = Array(0)
@@ -324,7 +325,9 @@ object MimeText {
         math.max(counter(0), 1))
     } catch { case Corrupt => null }
 
-  /** mbox framing: a message per `From ` separator line (mboxo; body
+  /** `mbox_messages(binary)` → array<binary>, null when not mbox.
+    *
+    * mbox framing: a message per `From ` separator line (mboxo; body
     * lines a writer stuffed to `>From ` are NOT unstuffed — that is
     * the mboxo round trip). Null when the buffer doesn't start with a
     * `From ` line.
@@ -352,48 +355,4 @@ object MimeText {
     closeAt(b.length)
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `eml_text(binary)` → struct<subject, from_addr, date, text,
-  * n_parts>, null on refusal.
-  */
-case class EmlText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MimeText.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "eml_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    MimeText.message(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MimeText.message($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): EmlText =
-    copy(child = newChild)
-}
-
-/** `mbox_messages(binary)` → array<binary>, null when not mbox. */
-case class MboxMessages(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "mbox_messages"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    MimeText.mboxMessages(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MimeText.mboxMessages($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): MboxMessages =
-    copy(child = newChild)
 }

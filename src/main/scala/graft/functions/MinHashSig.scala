@@ -25,6 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class MinHashSig(child: Expression, shingleN: Int, numHashes: Int)
     extends UnaryExpression {
+  override def prettyName: String = "graft_minhash_sig"
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -51,6 +49,7 @@ object MpegMeta {
   private val SrV2 = Array(22050, 24000, 16000)
   private val SrV25 = Array(11025, 12000, 8000)
 
+  /** `audio_mpeg_meta(binary)` → frame-walk metadata struct or null. */
   def parse(b: Array[Byte]): InternalRow = {
     @inline def u8(i: Int): Int = b(i) & 0xff
     var pos = 0
@@ -139,7 +138,11 @@ object MpegMeta {
       StructField("value", StringType, nullable = false))),
       containsNull = false))))
 
-  /** ID3v2.2/2.3/2.4 text-frame walk per the published informal specs:
+  /** `id3_tags(binary)` → ID3v2 version + text-frame (key, value) rows
+    * in frame order, or null on any refusal — the MP3 curation-metadata
+    * sibling of `audio_ogg_tags`.
+    *
+    * ID3v2.2/2.3/2.4 text-frame walk per the published informal specs:
     * 10-byte header (syncsafe tag size), optional extended header
     * (v2.3 non-syncsafe-excluding-itself vs v2.4
     * syncsafe-including-itself — the classic trap), then frames —
@@ -278,7 +281,10 @@ object MpegMeta {
     StructField("track", IntegerType),
     StructField("genre_id", IntegerType)))
 
-  /** ID3v1 / v1.1 trailing tag — the 128-byte fixed block at the END
+  /** `id3v1_tags(binary)` → the trailing 128-byte ID3v1/v1.1 tag block,
+    * or null when the file carries none.
+    *
+    * ID3v1 / v1.1 trailing tag — the 128-byte fixed block at the END
     * of the file ("TAG" + title[30] + artist[30] + album[30] + year[4]
     * + comment[30] + genre[1]; v1.1 carves the comment's last two
     * bytes into a zero marker + track number). The legacy fallback for
@@ -334,7 +340,10 @@ object MpegMeta {
     StructField("scalefac_scale", IntegerType, nullable = false),
     StructField("count1table_select", IntegerType, nullable = false))))
 
-  /** `mp3_sideinfo(binary)`: MPEG-1 Layer III side-information walk —
+  /** `mp3_sideinfo(binary)` → per-(frame, granule, channel) side-info rows
+    * with the bit-reservoir audit, or null.
+    *
+    * `mp3_sideinfo(binary)`: MPEG-1 Layer III side-information walk —
     * the step between the frame-header metadata ([[parse]]) and a full
     * sample decode. Parses every frame's side info (both granules,
     * mono and stereo layouts, optional CRC-16 skip) and audits the BIT
@@ -452,7 +461,9 @@ object MpegMeta {
     StructField("toc_p50", IntegerType), // TOC[50] — the mid-file seek point
     StructField("quality", IntegerType)))
 
-  /** `mp3_xing(binary)`: the Xing/Info VBR header every LAME-family
+  /** `mp3_xing(binary)` → the first frame's Xing/Info VBR header, or null.
+    *
+    * `mp3_xing(binary)`: the Xing/Info VBR header every LAME-family
     * encoder writes into the FIRST frame's (otherwise empty) main-data
     * region — frame count, byte count, the 100-point seek TOC, quality.
     * This is how a crawler gets an honest duration for a VBR stream
@@ -516,7 +527,9 @@ object MpegMeta {
   private val AdtsRates = Array(96000, 88200, 64000, 48000, 44100, 32000,
     24000, 22050, 16000, 12000, 11025, 8000, 7350)
 
-  /** ADTS (AAC transport) frame walk — ISO 13818-7 / 14496-3 framing:
+  /** `audio_adts_meta(binary)` → ADTS frame-walk metadata struct or null.
+    *
+    * ADTS (AAC transport) frame walk — ISO 13818-7 / 14496-3 framing:
     * 12-bit sync, version, profile, sampling-frequency index, channel
     * configuration, 13-bit frame length, raw-data-block count (each
     * block = 1024 samples), optional CRC. Whole-or-refuse like
@@ -562,137 +575,4 @@ object MpegMeta {
     if (frames == 0) return null
     InternalRow(version, profile, sr, channels, frames, samples * 1000L / sr)
   }
-}
-
-/** `audio_mpeg_meta(binary)` → frame-walk metadata struct or null. */
-case class MpegAudioMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MpegMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_mpeg_meta"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    MpegMeta.parse(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MpegMeta.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): MpegAudioMeta =
-    copy(child = newChild)
-}
-
-/** `audio_adts_meta(binary)` → ADTS frame-walk metadata struct or null. */
-case class AdtsAudioMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MpegMeta.adtsSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_adts_meta"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    MpegMeta.adtsParse(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MpegMeta.adtsParse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): AdtsAudioMeta =
-    copy(child = newChild)
-}
-
-/** `mp3_sideinfo(binary)` → per-(frame, granule, channel) side-info rows
-  * with the bit-reservoir audit, or null.
-  */
-case class Mp3SideInfo(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MpegMeta.sideSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "mp3_sideinfo"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    MpegMeta.sideInfo(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MpegMeta.sideInfo($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Mp3SideInfo =
-    copy(child = newChild)
-}
-
-/** `id3_tags(binary)` → ID3v2 version + text-frame (key, value) rows
-  * in frame order, or null on any refusal — the MP3 curation-metadata
-  * sibling of `audio_ogg_tags`.
-  */
-case class Id3Tags(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MpegMeta.id3Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "id3_tags"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    MpegMeta.id3Tags(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MpegMeta.id3Tags($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Id3Tags =
-    copy(child = newChild)
-}
-
-/** `id3v1_tags(binary)` → the trailing 128-byte ID3v1/v1.1 tag block,
-  * or null when the file carries none.
-  */
-case class Id3v1Tags(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MpegMeta.id3v1Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "id3v1_tags"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    MpegMeta.id3v1Tags(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MpegMeta.id3v1Tags($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Id3v1Tags =
-    copy(child = newChild)
-}
-
-/** `mp3_xing(binary)` → the first frame's Xing/Info VBR header, or null. */
-case class Mp3Xing(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MpegMeta.xingSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "mp3_xing"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    MpegMeta.xingParse(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MpegMeta.xingParse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): Mp3Xing =
-    copy(child = newChild)
 }

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
-
 /** Microsoft ADPCM (WAV format tag 0x0002) → 16-bit PCM WAV — the
   * second compressed-audio sample-decode path next to [[ImaAdpcm]].
   * Each nibble corrects a two-tap linear prediction
@@ -47,6 +43,7 @@ object MsAdpcm {
 
   private val MaxSamples = 1 << 24
 
+  /** `msadpcm_to_pcm(binary)` → decoded 16-bit PCM WAV bytes, or null. */
   def decode(b: Array[Byte]): Array[Byte] = {
     if (b == null || b.length < 12) return null
     if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
@@ -157,25 +154,4 @@ object MsAdpcm {
     System.arraycopy(data, 0, out, 44, data.length)
     out
   }
-}
-
-/** `msadpcm_to_pcm(binary)` → decoded 16-bit PCM WAV bytes, or null. */
-case class MsAdpcmToPcm(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "msadpcm_to_pcm"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    MsAdpcm.decode(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MsAdpcm.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): MsAdpcmToPcm =
-    copy(child = newChild)
 }

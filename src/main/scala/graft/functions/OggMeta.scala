@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,6 +76,7 @@ object OggMeta {
     crc
   }
 
+  /** `audio_ogg_meta(binary)` → Ogg page-walk metadata struct or null. */
   def parse(b: Array[Byte]): InternalRow = {
     @inline def u8(i: Int): Int = b(i) & 0xff
     var pos = 0
@@ -229,7 +228,9 @@ object OggMeta {
     if (done.length < 2) null else (done(0), done(1))
   }
 
-  /** Vorbis comment / OpusTags metadata (packet 2 of the stream):
+  /** `audio_ogg_tags(binary)` → comment-header struct or null.
+    *
+    * Vorbis comment / OpusTags metadata (packet 2 of the stream):
     * vendor string + ordered `KEY=value` tag list (RFC 7845 §5.2 and
     * the Vorbis I comment-header spec share the layout; Vorbis adds a
     * framing bit, OpusTags forbids one). Whole-or-refuse: bad lengths,
@@ -298,46 +299,4 @@ object OggMeta {
       UTF8String.fromString(vendor),
       new org.apache.spark.sql.catalyst.util.GenericArrayData(tags))
   }
-}
-
-/** `audio_ogg_tags(binary)` → comment-header struct or null. */
-case class OggAudioTags(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = OggMeta.tagsSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_ogg_tags"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    OggMeta.parseTags(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.OggMeta.parseTags($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): OggAudioTags =
-    copy(child = newChild)
-}
-
-/** `audio_ogg_meta(binary)` → Ogg page-walk metadata struct or null. */
-case class OggAudioMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = OggMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_ogg_meta"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    OggMeta.parse(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.OggMeta.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): OggAudioMeta =
-    copy(child = newChild)
 }

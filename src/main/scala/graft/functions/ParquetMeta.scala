@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -254,6 +252,7 @@ object ParquetMeta {
     (version, numRows, createdBy, rgIdx, cols.toSeq)
   }
 
+  /** `parquet_footer(binary)` → footer-audit struct or null. */
   def parse(b: Array[Byte]): InternalRow =
     try {
       val (version, numRows, createdBy, rgIdx, cols) = walkFooter(b)
@@ -298,25 +297,4 @@ object ParquetMeta {
           cs.map(c => bound(c.maxBin)).max))
       }
     } catch { case Corrupt => Map.empty[String, (Long, Long)] }
-}
-
-/** `parquet_footer(binary)` → footer-audit struct or null. */
-case class ParquetFooter(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ParquetMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "parquet_footer"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ParquetMeta.parse(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ParquetMeta.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): ParquetFooter =
-    copy(child = newChild)
 }

@@ -2,9 +2,6 @@ package graft.functions
 
 import java.util.zip.Inflater
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** PDF text extraction (a BOUNDED subset of ISO 32000-1) — the
@@ -756,7 +753,9 @@ object PdfText {
     }
   }
 
-  /** Extract visible text, or null on anything outside the subset. */
+  /** `pdf_text(binary)` → extracted text or null (outside the subset).
+    *
+    * Extract visible text, or null on anything outside the subset. */
   def extract(b: Array[Byte]): UTF8String = {
     try {
       val doc = new Doc(b)
@@ -781,7 +780,9 @@ object PdfText {
 
   // ------------------------------------------------------------- the writer
 
-  /** One deterministic single-page PDF around `text` (Latin-1 bytes):
+  /** `pdf_doc(binary)` → one deterministic single-page PDF.
+    *
+    * One deterministic single-page PDF around `text` (Latin-1 bytes):
     * catalog → pages → page → Flate content stream with one `Td` and a
     * `Tj` per line (lines joined by `T*`), byte-exact xref offsets.
     */
@@ -830,43 +831,4 @@ object PdfText {
     w("%%EOF\n")
     out.toByteArray
   }
-}
-
-/** `pdf_text(binary)` → extracted text or null (outside the subset). */
-case class PdfTextExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pdf_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    PdfText.extract(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PdfText.extract($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): PdfTextExpr =
-    copy(child = newChild)
-}
-
-/** `pdf_doc(binary)` → one deterministic single-page PDF. */
-case class PdfDocExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "pdf_doc"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    PdfText.write(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PdfText.write($c);")
-  override protected def withNewChildInternal(newChild: Expression): PdfDocExpr =
-    copy(child = newChild)
 }

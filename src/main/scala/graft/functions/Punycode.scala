@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** IDN host decoding — RFC 3492 Punycode, from spec, for the
@@ -126,28 +122,11 @@ object Punycode {
     out.mkString(".")
   }
 
-  /** Codegen entry point. */
+  /** `idn_decode(host: string) → string` — see [[Punycode]].
+    *
+    * Codegen entry point. */
   def eval(host: UTF8String): UTF8String = {
     val d = decodeHost(host.toString)
     if (d == null) null else UTF8String.fromString(d)
   }
-}
-
-/** `idn_decode(host: string) → string` — see [[Punycode]]. */
-case class IdnDecodeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "idn_decode"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    Punycode.eval(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Punycode.eval($c);
-      ${ev.isNull} = ${ev.value} == null;""")
-  override protected def withNewChildInternal(newChild: Expression): IdnDecodeExpr =
-    copy(child = newChild)
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -41,7 +40,9 @@ object RobotsTxt {
 
   val schema: DataType = ArrayType(ruleSchema, containsNull = false)
 
-  /** `Crawl-delay:` for one agent — the de-facto politeness-interval
+  /** `robots_crawl_delay(txt, agent)` → whole seconds or -1 (none).
+    *
+    * `Crawl-delay:` for one agent — the de-facto politeness-interval
     * extension (not in RFC 9309 but honored by most large crawlers):
     * group selection matches the RULES parser exactly (consecutive
     * User-agent lines share the following block; an exact-agent group
@@ -98,7 +99,9 @@ object RobotsTxt {
     else -1
   }
 
-  /** `Sitemap:` directive extraction — the standard frontier-seeding
+  /** `robots_sitemaps(string)` → Sitemap-directive URLs in file order.
+    *
+    * `Sitemap:` directive extraction — the standard frontier-seeding
     * discovery channel (sitemaps.org protocol; RFC 9309 treats it as
     * an other-record line): group-INDEPENDENT per the de-facto
     * standard (a Sitemap line applies regardless of surrounding
@@ -126,6 +129,7 @@ object RobotsTxt {
     new GenericArrayData(out.toArray)
   }
 
+  /** `robots_rules(string)` → flattened (agent, allow, path) rule rows. */
   def parse(txt: UTF8String): GenericArrayData = {
     val out = new scala.collection.mutable.ArrayBuffer[GenericInternalRow]
     var agents = List.empty[String]
@@ -162,7 +166,9 @@ object RobotsTxt {
     new GenericArrayData(out.toArray[Any])
   }
 
-  /** Specificity (pattern length) when `pattern` matches `path` per RFC
+  /** `robots_match_len(pattern, path)` → specificity or -1.
+    *
+    * Specificity (pattern length) when `pattern` matches `path` per RFC
     * 9309 wildcard semantics, else -1. Patterns are PREFIX matches
     * unless `$`-anchored; `*` spans any characters.
     *
@@ -205,82 +211,4 @@ object RobotsTxt {
           wildMatch(pat, pi + 1, s, si + 1, anchored, budget)
     }
   }
-}
-
-/** `robots_rules(string)` → flattened (agent, allow, path) rule rows. */
-case class RobotsRules(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = RobotsTxt.schema
-  override def prettyName: String = "robots_rules"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    RobotsTxt.parse(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RobotsTxt.parse($c);")
-  override protected def withNewChildInternal(newChild: Expression): RobotsRules =
-    copy(child = newChild)
-}
-
-/** `robots_match_len(pattern, path)` → specificity or -1. */
-case class RobotsMatchLen(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "robots_match_len"
-  override def checkInputDataTypes() =
-    if (left.dataType == StringType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (string, string), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(pattern: Any, path: Any): Any =
-    RobotsTxt.matchLen(pattern.asInstanceOf[UTF8String], path.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (p, s) =>
-      s"${ev.value} = graft.functions.RobotsTxt.matchLen($p, $s);")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): RobotsMatchLen =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `robots_sitemaps(string)` → Sitemap-directive URLs in file order. */
-case class RobotsSitemaps(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "robots_sitemaps"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    RobotsTxt.sitemaps(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RobotsTxt.sitemaps($c);")
-  override protected def withNewChildInternal(newChild: Expression): RobotsSitemaps =
-    copy(child = newChild)
-}
-
-/** `robots_crawl_delay(txt, agent)` → whole seconds or -1 (none). */
-case class RobotsCrawlDelay(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "robots_crawl_delay"
-  override def checkInputDataTypes() =
-    if (left.dataType == StringType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (string, string), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(txt: Any, agent: Any): Any =
-    RobotsTxt.crawlDelay(txt.asInstanceOf[UTF8String],
-      agent.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, a) =>
-      s"${ev.value} = graft.functions.RobotsTxt.crawlDelay($t, $a);")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): RobotsCrawlDelay =
-    copy(left = newLeft, right = newRight)
 }

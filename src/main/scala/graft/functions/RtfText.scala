@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** RTF → visible text (`rtf_text(string)`) in the [[HtmlToText]]
@@ -35,6 +32,7 @@ object RtfText {
     "pict", "header", "headerl", "headerr", "headerf", "footer", "footerl",
     "footerr", "footerf", "ftnsep", "ftnsepc")
 
+  /** `rtf_text(string)` → visible text or null (not RTF / torn). */
   def extract(in: UTF8String): UTF8String = {
     if (in == null) return null
     val s = in.toString
@@ -160,25 +158,4 @@ object RtfText {
     }
     UTF8String.fromString(sb.toString)
   }
-}
-
-/** `rtf_text(string)` → visible text or null (not RTF / torn). */
-case class RtfTextExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rtf_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    RtfText.extract(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.RtfText.extract($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): RtfTextExpr =
-    copy(child = newChild)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `sentence_split(string)` → `array<string>` — deterministic rule-based
@@ -26,23 +23,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape: scan-side codegen'd expression, one pass per document.
   */
-case class SentenceSplit(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "sentence_split"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    SentenceSplit.split(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SentenceSplit.split($c);")
-  override protected def withNewChildInternal(newChild: Expression): SentenceSplit =
-    copy(child = newChild)
-}
-
 object SentenceSplit {
 
   /** Tokens whose trailing period is part of the token, not a boundary.

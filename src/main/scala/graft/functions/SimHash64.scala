@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: SimHash fingerprint of a token array.
@@ -23,25 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * The width is fixed at 60 bits. SQL name `simhash64`, installed on every
   * session by the [[graft.GraftExtensions]] catalog.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes() =
-    if (child.dataType.isInstanceOf[ArrayType]) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"simhash64 needs array<string>, got ${child.dataType}")
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHash64.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
 object SimHash64 {
 
   /** Fingerprint width: the 60 bits of a token's first 15 md5 hex chars. */

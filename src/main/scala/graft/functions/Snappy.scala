@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
-
 /** Snappy decompression as a scan-side expression — raw blocks (the
   * Hadoop/parquet codec payload) and the framing format (the
   * `x-snappy-framed` stream layout: sNaPpY identifier, compressed /
@@ -30,6 +26,9 @@ object Snappy {
 
   import Bytes.{Corrupt, fail}
 
+  /** `snappy_decompress(binary)` → decompressed payload (framed stream
+    * or raw block, auto-detected), or null.
+    */
   def decompressAny(b: Array[Byte]): Array[Byte] =
     try {
       if (b == null) null
@@ -156,27 +155,4 @@ object Snappy {
     }
     out.toByteArray
   }
-}
-
-/** `snappy_decompress(binary)` → decompressed payload (framed stream
-  * or raw block, auto-detected), or null.
-  */
-case class SnappyDecompress(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "snappy_decompress"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Snappy.decompressAny(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Snappy.decompressAny($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): SnappyDecompress =
-    copy(child = newChild)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,26 +35,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale shape: scan-side codegen'd expression; subtitle text never
   * shuffles un-parsed.
   */
-case class SubtitleCues(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = SubtitleCues.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "subtitle_cues"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    SubtitleCues.parse(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.SubtitleCues.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): SubtitleCues =
-    copy(child = newChild)
-}
-
 object SubtitleCues {
 
   val schema: DataType = ArrayType(StructType(Seq(

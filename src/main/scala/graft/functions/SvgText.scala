@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,6 +36,7 @@ object SvgText {
   private def closeAt(s: String, i: Int, name: String): Boolean =
     s.regionMatches(true, i + 2, name, 0, name.length)
 
+  /** `svg_text(binary)` → visible SVG text or null for non-SVG bytes. */
   def extract(b: Array[Byte]): UTF8String = {
     // same cheap non-XML gate as the header's SVG branch
     var j = 0
@@ -142,25 +141,4 @@ object SvgText {
     }
     -1
   }
-}
-
-/** `svg_text(binary)` → visible SVG text or null for non-SVG bytes. */
-case class SvgTextExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "svg_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    SvgText.extract(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.SvgText.extract($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): SvgTextExpr =
-    copy(child = newChild)
 }

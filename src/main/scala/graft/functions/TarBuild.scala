@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -31,6 +29,10 @@ import org.apache.spark.sql.types._
   * construction.
   */
 object TarBuild {
+  /** `tar_build`'s input: (name, data) members, any field names. */
+  val membersType: DataType = ArrayType(StructType(Seq(
+    StructField("name", StringType), StructField("data", BinaryType))))
+
   /** 1 GiB — far above the 100–500 MB WebDataset convention; a shard
     * bigger than this is a sharding bug, not a big shard. */
   val MaxBytes: Long = 1L << 30
@@ -39,6 +41,7 @@ object TarBuild {
     StructField("name", StringType, nullable = false),
     StructField("data", BinaryType, nullable = false)))
 
+  /** `tar_build(array<struct<name,data>>)` → binary ustar archive. */
   def build(entries: ArrayData): Array[Byte] = {
     val n = entries.numElements()
     require(n > 0, "tar_build: empty archive (no entries)")
@@ -65,36 +68,4 @@ object TarBuild {
     if (tail == 0) body
     else java.util.Arrays.copyOf(body, body.length + (10240 - tail))
   }
-}
-
-/** `tar_build(array<struct<name,data>>)` → binary ustar archive. */
-case class TarBuildExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "tar_build"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(st: StructType, _)
-        if st.length == 2 && st.fields(0).dataType == StringType &&
-          st.fields(1).dataType == BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs array<struct<name:string,data:binary>>, " +
-            s"got $other")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    TarBuild.build(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TarBuild.build($c)")
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : TarBuildExpr = copy(child = newChild)
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -128,6 +127,7 @@ object TarWalk {
     out.toArray
   }
 
+  /** `tar_entries(binary)` → per-member rows or null (refused). */
   def entries(buf: Array[Byte]): GenericArrayData =
     try {
       val ms = parse(buf)
@@ -135,6 +135,9 @@ object TarWalk {
         UTF8String.fromString(m.name), UTF8String.fromString(m.typeflag),
         m.size)): Any))
     } catch { case Corrupt => null }
+
+  /** `tar_entry(binary, name)` → member bytes or null. */
+  def entry(buf: Array[Byte], name: UTF8String): Array[Byte] = entry(buf, name.toString)
 
   def entry(buf: Array[Byte], name: String): Array[Byte] =
     try {
@@ -149,7 +152,9 @@ object TarWalk {
       null
     } catch { case Corrupt => null }
 
-  /** Deterministic single-member tar around the bytes (name `doc.txt`,
+  /** `tar_pack(binary)` → one deterministic single-member tar.
+    *
+    * Deterministic single-member tar around the bytes (name `doc.txt`,
     * mode 0644, uid/gid 0, mtime 0, ustar 00).
     */
   def pack(data: Array[Byte]): Array[Byte] =
@@ -192,66 +197,4 @@ object TarWalk {
     }
     out
   }
-}
-
-/** `tar_entries(binary)` → per-member rows or null (refused). */
-case class TarEntriesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TarWalk.entriesType
-  override def nullable: Boolean = true
-  override def prettyName: String = "tar_entries"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    TarWalk.entries(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TarWalk.entries($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): TarEntriesExpr =
-    copy(child = newChild)
-}
-
-/** `tar_entry(binary, name)` → member bytes or null. */
-case class TarEntryExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "tar_entry"
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (binary, string), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(blob: Any, name: Any): Any =
-    TarWalk.entry(blob.asInstanceOf[Array[Byte]], name.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.TarWalk.entry($b, $n.toString());
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): TarEntryExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `tar_pack(binary)` → one deterministic single-member tar. */
-case class TarPackExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "tar_pack"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    TarWalk.pack(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TarWalk.pack($c);")
-  override protected def withNewChildInternal(newChild: Expression): TarPackExpr =
-    copy(child = newChild)
 }

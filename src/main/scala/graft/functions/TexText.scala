@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** LaTeX/TeX source → visible text as one scan-side pass — the arXiv
@@ -71,23 +68,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * training_preprocessing.py:1-40); this operator feeds the same
   * text-cleaning surface from raw crawled TeX.
   */
-case class TexText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "tex_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs string, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    TexText.extract(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TexText.extract($c);")
-  override protected def withNewChildInternal(newChild: Expression): TexText =
-    copy(child = newChild)
-}
-
 object TexText {
 
   private val Floats = Set(

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -88,6 +86,9 @@ object TfExample {
     (s, s + n.toInt)
   }
 
+  /** `tf_example_features(binary)` → array of per-feature rows, or null
+    * on any wire-format violation (whole-or-refuse).
+    */
   def parse(b: Array[Byte]): GenericArrayData =
     try {
       val out = scala.collection.mutable.ArrayBuffer.empty[Any]
@@ -254,27 +255,4 @@ object TfExample {
     if (pos(0) != end) fail()
     out.toArray
   }
-}
-
-/** `tf_example_features(binary)` → array of per-feature rows, or null
-  * on any wire-format violation (whole-or-refuse).
-  */
-case class TfExampleFeatures(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TfExample.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "tf_example_features"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    TfExample.parse(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TfExample.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): TfExampleFeatures =
-    copy(child = newChild)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -23,7 +21,7 @@ object TfRecord {
 
   val MaxRecordBytes: Int = 64 << 20
 
-  private val schema = ArrayType(StructType(Seq(
+  val entriesType: DataType = ArrayType(StructType(Seq(
     StructField("idx", IntegerType, nullable = false),
     StructField("n_bytes", LongType, nullable = false),
     StructField("payload_md5", StringType, nullable = false))), false)
@@ -35,7 +33,10 @@ object TfRecord {
     (((crc >>> 15) | (crc << 17)) + 0xa282ead8L) & 0xFFFFFFFFL
   }
 
-  /** The raw record payloads behind the same whole-or-refuse framing
+  /** `tfrecord_payloads(binary)` → array<binary> of record payloads, or
+    * null on any framing/CRC violation (whole-or-refuse).
+    *
+    * The raw record payloads behind the same whole-or-refuse framing
     * walk as [[entries]] — the read seam [[TfExample]] composes on
     * (shard bytes → proto payloads → feature rows, all scan-side).
     */
@@ -81,6 +82,9 @@ object TfRecord {
     out.toByteArray
   }
 
+  /** `tfrecord_entries(binary)` → array<struct<idx, n_bytes,
+    * payload_md5>>, or null on any framing/CRC violation.
+    */
   def entries(b: Array[Byte]): GenericArrayData = {
     if (b == null) return null
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
@@ -104,55 +108,4 @@ object TfRecord {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `tfrecord_entries(binary)` → array<struct<idx, n_bytes,
-  * payload_md5>>, or null on any framing/CRC violation.
-  */
-case class TfRecordEntries(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    StructType(Seq(
-      StructField("idx", IntegerType, nullable = false),
-      StructField("n_bytes", LongType, nullable = false),
-      StructField("payload_md5", StringType, nullable = false))), false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "tfrecord_entries"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    TfRecord.entries(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TfRecord.entries($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): TfRecordEntries =
-    copy(child = newChild)
-}
-
-/** `tfrecord_payloads(binary)` → array<binary> of record payloads, or
-  * null on any framing/CRC violation (whole-or-refuse).
-  */
-case class TfRecordPayloads(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "tfrecord_payloads"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    TfRecord.payloads(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TfRecord.payloads($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): TfRecordPayloads =
-    copy(child = newChild)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
@@ -36,29 +34,6 @@ import org.apache.spark.sql.types._
   * call, the [[ImageHash]] pattern); each blob reduces to eight ints
   * before anything shuffles.
   */
-case class Utf8Stats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = Utf8Stats.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "utf8_stats"
-
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"utf8_stats needs binary, got ${child.dataType}")
-
-  override def nullSafeEval(input: Any): Any =
-    Utf8Stats.stats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Utf8Stats.stats($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Utf8Stats =
-    copy(child = newChild)
-}
-
 object Utf8Stats {
 
   val schema: StructType = StructType(Seq(

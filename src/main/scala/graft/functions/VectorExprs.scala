@@ -111,7 +111,6 @@ object VectorMath {
 
 private[graft] trait VectorBinary extends BinaryExpression {
   protected def wantFloating: Boolean
-  protected def fname: String
   override def nullable: Boolean = true
   protected lazy val kindL: Int = VectorKind.of(left.dataType)
   protected lazy val kindR: Int = VectorKind.of(right.dataType)
@@ -120,7 +119,7 @@ private[graft] trait VectorBinary extends BinaryExpression {
       if (wantFloating) VectorKind.floating(k) else VectorKind.integral(k)
     if (ok(kindL) && ok(kindR)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$fname needs two array<${if (wantFloating) "float|double" else "int|bigint"}> args, " +
+      s"$prettyName needs two array<${if (wantFloating) "float|double" else "int|bigint"}> args, " +
         s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
   }
   /** Static method on VectorMath this expression compiles to. */
@@ -138,7 +137,7 @@ private[graft] trait VectorBinary extends BinaryExpression {
 /** `vec_dot(a, b)` — double dot product. */
 case class DotProduct(left: Expression, right: Expression) extends VectorBinary {
   override protected def wantFloating = true
-  override protected def fname = "vec_dot"
+  override def prettyName: String = "vec_dot"
   override def dataType: DataType = DoubleType
   override protected def staticCall = "dot"
   override protected def boxedType = "java.lang.Double"
@@ -151,7 +150,7 @@ case class DotProduct(left: Expression, right: Expression) extends VectorBinary 
 /** `cosine_sim(a, b)` — cosine similarity in one pass. */
 case class CosineSim(left: Expression, right: Expression) extends VectorBinary {
   override protected def wantFloating = true
-  override protected def fname = "cosine_sim"
+  override def prettyName: String = "cosine_sim"
   override def dataType: DataType = DoubleType
   override protected def staticCall = "cosine"
   override protected def boxedType = "java.lang.Double"
@@ -164,7 +163,7 @@ case class CosineSim(left: Expression, right: Expression) extends VectorBinary {
 /** `vec_dot_int(a, b)` — exact integer dot product for quantized vectors. */
 case class DotProductInt(left: Expression, right: Expression) extends VectorBinary {
   override protected def wantFloating = false
-  override protected def fname = "vec_dot_int"
+  override def prettyName: String = "vec_dot_int"
   override def dataType: DataType = LongType
   override protected def staticCall = "dotInt"
   override protected def boxedType = "java.lang.Long"
@@ -176,13 +175,14 @@ case class DotProductInt(left: Expression, right: Expression) extends VectorBina
 
 /** `vec_norm_l2(a)` — L2 norm. */
 case class L2Norm(child: Expression) extends UnaryExpression {
+  override def prettyName: String = "vec_norm_l2"
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   private lazy val kind: Int = VectorKind.of(child.dataType)
   override def checkInputDataTypes(): TypeCheckResult =
     if (VectorKind.floating(kind)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"vec_norm_l2 needs array<float|double>, got ${child.dataType.simpleString}")
+      s"$prettyName needs array<float|double>, got ${child.dataType.simpleString}")
   override def nullSafeEval(a: Any): Any =
     VectorMath.normL2(a.asInstanceOf[ArrayData], kind)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -46,33 +44,6 @@ import org.apache.spark.sql.types._
   * (frames/k) pairs of ints before anything shuffles, and only sampled
   * frames' bytes are ever read.
   */
-case class VideoFrameSample(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = VideoFrames.schema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"video_frame_sample needs (binary, int), got " +
-        s"(${left.dataType}, ${right.dataType})")
-
-  override def nullSafeEval(bin: Any, k: Any): Any =
-    VideoFrames.sample(bin.asInstanceOf[Array[Byte]], k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, k) => s"""
-      ${ev.value} = graft.functions.VideoFrames.sample($b, $k);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): VideoFrameSample =
-    copy(left = newLeft, right = newRight)
-}
-
 object VideoFrames {
 
   val schema: DataType = ArrayType(StructType(Seq(
@@ -137,7 +108,15 @@ object VideoFrames {
     */
   def sample(b: Array[Byte], k: Int): ArrayData = scan(b, k, hash = false)
 
-  /** [[sample]]'s fingerprint twin: every k-th frame reduced to its
+  /** `video_frame_ahash(bin, k)` → `array<struct<frame_idx, fhash>>` —
+    * [[sample]]'s fingerprint twin: every k-th frame of an
+    * AVI/MP4 reduced to a 64-bit aHash-rule hash (bit j = contiguous
+    * pixel-block j's mean luma ≥ the frame mean). The per-video hash
+    * signature is what video perceptual dedup bands on — identical
+    * refusal contract as the sampler (null on compressed codecs,
+    * inconsistent tables, or out-of-range byte spans, never garbage).
+    *
+    * [[sample]]'s fingerprint twin: every k-th frame reduced to its
     * 64-bit aHash-rule hash — the signature video near-dup bands on. */
   def sampleHash(b: Array[Byte], k: Int): ArrayData = scan(b, k, hash = true)
 
@@ -274,39 +253,4 @@ object VideoFrames {
     if (sampleIdx < nSamples) return null
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `video_frame_ahash(bin, k)` → `array<struct<frame_idx, fhash>>` —
-  * [[VideoFrameSample]]'s fingerprint twin: every k-th frame of an
-  * AVI/MP4 reduced to a 64-bit aHash-rule hash (bit j = contiguous
-  * pixel-block j's mean luma ≥ the frame mean). The per-video hash
-  * signature is what video perceptual dedup bands on — identical
-  * refusal contract as the sampler (null on compressed codecs,
-  * inconsistent tables, or out-of-range byte spans, never garbage).
-  */
-case class VideoFrameAHash(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = VideoFrames.hashSchema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"video_frame_ahash needs (binary, int), got " +
-        s"(${left.dataType}, ${right.dataType})")
-
-  override def nullSafeEval(bin: Any, k: Any): Any =
-    VideoFrames.sampleHash(bin.asInstanceOf[Array[Byte]], k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, k) => s"""
-      ${ev.value} = graft.functions.VideoFrames.sampleHash($b, $k);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): VideoFrameAHash =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,30 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - AVI: RIFF `AVI ` LIST walk to `hdrl`→`avih` (µs-per-frame ×
   *    total-frames → duration, little-endian width/height).
   */
-case class VideoHeader(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = VideoHeader.schema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"video_header needs binary, got ${child.dataType}")
-
-  override def nullSafeEval(input: Any): Any =
-    VideoHeader.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VideoHeader.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): VideoHeader =
-    copy(child = newChild)
-}
-
 object VideoHeader {
 
   val schema: StructType = StructType(Seq(

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -46,7 +45,9 @@ object WarcParse {
 
   val schema: DataType = ArrayType(recordSchema, containsNull = false)
 
-  /** One HTTP header's value from a response payload: the header block
+  /** `http_header(binary, name)` → one header's value or null.
+    *
+    * One HTTP header's value from a response payload: the header block
     * (up to CRLFCRLF, bytes decoded Latin-1 — header bytes are ASCII
     * in practice and Latin-1 never fails), status line skipped, names
     * case-insensitive, FIRST match wins, value trimmed. Null when the
@@ -78,6 +79,7 @@ object WarcParse {
     null
   }
 
+  /** `warc_records(binary)` → array of parsed records, null on malformation. */
   def parse(buf: Array[Byte]): GenericArrayData = {
     val out = new scala.collection.mutable.ArrayBuffer[GenericInternalRow]
     var pos = 0
@@ -162,7 +164,9 @@ object WarcParse {
   private def ascii(buf: Array[Byte], from: Int, to: Int): String =
     new String(buf, from, to - from, java.nio.charset.StandardCharsets.US_ASCII)
 
-  /** Body of an HTTP message: everything past the first CRLFCRLF, or
+  /** `http_body(binary)` → bytes past the HTTP header block, null if none.
+    *
+    * Body of an HTTP message: everything past the first CRLFCRLF, or
     * null when no header/body split exists (the caller is looking at a
     * non-HTTP payload — metadata records, DNS records).
     */
@@ -172,7 +176,15 @@ object WarcParse {
     else java.util.Arrays.copyOfRange(payload, split, payload.length)
   }
 
-  /** HTTP status code from the status line, or -1 (→ null) when the
+  /** [[status]], null where it is -1. */
+  def statusOrNull(payload: Array[Byte]): Integer = {
+    val c = status(payload)
+    if (c < 0) null else c
+  }
+
+  /** `http_status(binary)` → response status code, null for non-HTTP.
+    *
+    * HTTP status code from the status line, or -1 (→ null) when the
     * payload is not an HTTP response message.
     */
   def status(payload: Array[Byte]): Int = {
@@ -202,7 +214,10 @@ object WarcParse {
   // ENTITY decoding: Transfer-Encoding de-framing + Content-Encoding
   // ----------------------------------------------------------------
 
-  /** Fully decoded entity body of an HTTP response — what [[body]]
+  /** `http_entity(binary)` → transfer- and content-decoded entity body
+    * (chunked de-framed, gzip/deflate/zstd undone), null on refusal.
+    *
+    * Fully decoded entity body of an HTTP response — what [[body]]
     * pretends the raw bytes already are. Real crawl captures are
     * frequently `Transfer-Encoding: chunked` (hex-size-line framing,
     * RFC 9112 §7.1) and/or `Content-Encoding: gzip|deflate|zstd`
@@ -219,7 +234,10 @@ object WarcParse {
     */
   def entity(payload: Array[Byte]): Array[Byte] = decodeEntity(payload)._2
 
-  /** Refusal-class verdict for [[entity]]: `ok`, `not_http`,
+  /** `http_entity_verdict(binary)` → `'ok'` or the refusal class of
+    * [[entity]] — the countable quarantine signal.
+    *
+    * Refusal-class verdict for [[entity]]: `ok`, `not_http`,
     * `chunked_malformed`, `length_overrun`,
     * `unsupported_transfer_encoding:<te>`,
     * `unsupported_content_encoding:<ce>`, `content_decode_failed:<ce>`.
@@ -342,7 +360,10 @@ object WarcParse {
     null
   }
 
-  /** Chunk-frame `body` with `size`-byte chunks (RFC 9112 §7.1) — the
+  /** `http_chunk_frame(binary, int)` → the chunked transfer coding of the
+    * bytes — the construction-side inverse of [[entity]]'s de-framing.
+    *
+    * Chunk-frame `body` with `size`-byte chunks (RFC 9112 §7.1) — the
     * construction-side inverse of [[dechunk]], used to build chunked
     * response fixtures scan-side so the decode path is certified as a
     * round trip against bytes an independent HTTP stack would emit.
@@ -390,167 +411,4 @@ object WarcParse {
       case _: java.util.zip.DataFormatException => null
     } finally inf.end()
   }
-}
-
-/** `warc_records(binary)` → array of parsed records, null on malformation. */
-case class WarcRecords(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WarcParse.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "warc_records"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    WarcParse.parse(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WarcParse.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): WarcRecords =
-    copy(child = newChild)
-}
-
-/** `http_body(binary)` → bytes past the HTTP header block, null if none. */
-case class HttpBody(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "http_body"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    WarcParse.body(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WarcParse.body($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): HttpBody =
-    copy(child = newChild)
-}
-
-/** `http_entity(binary)` → transfer- and content-decoded entity body
-  * (chunked de-framed, gzip/deflate/zstd undone), null on refusal.
-  */
-case class HttpEntity(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "http_entity"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    WarcParse.entity(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WarcParse.entity($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): HttpEntity =
-    copy(child = newChild)
-}
-
-/** `http_entity_verdict(binary)` → `'ok'` or the refusal class of
-  * [[HttpEntity]] — the countable quarantine signal.
-  */
-case class HttpEntityVerdict(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  // a null payload yields a null verdict (UnaryExpression null
-  // propagation); declaring non-nullable would let the optimizer and
-  // non-null-guarded codegen mishandle nullable children
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "http_entity_verdict"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    WarcParse.entityVerdict(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WarcParse.entityVerdict($c);
-    """)
-  override protected def withNewChildInternal(newChild: Expression): HttpEntityVerdict =
-    copy(child = newChild)
-}
-
-/** `http_chunk_frame(binary, int)` → the chunked transfer coding of the
-  * bytes — the construction-side inverse of [[HttpEntity]]'s de-framing.
-  */
-case class HttpChunkFrame(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "http_chunk_frame"
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (binary, int), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(body: Any, size: Any): Any =
-    WarcParse.chunkFrame(body.asInstanceOf[Array[Byte]],
-      size.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.WarcParse.chunkFrame($b, $n);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): HttpChunkFrame =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `http_status(binary)` → response status code, null for non-HTTP. */
-case class HttpStatus(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "http_status"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any = {
-    val c = WarcParse.status(input.asInstanceOf[Array[Byte]])
-    if (c < 0) null else c
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WarcParse.status($c);
-      ${ev.isNull} = ${ev.value} < 0;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): HttpStatus =
-    copy(child = newChild)
-}
-
-/** `http_header(binary, name)` → one header's value or null. */
-case class HttpHeader(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "http_header"
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (binary, string), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(payload: Any, name: Any): Any =
-    WarcParse.header(payload.asInstanceOf[Array[Byte]],
-      name.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (p, n) => s"""
-      ${ev.value} = graft.functions.WarcParse.header($p, $n);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): HttpHeader =
-    copy(left = newLeft, right = newRight)
 }

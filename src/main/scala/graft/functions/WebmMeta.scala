@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -134,6 +132,7 @@ object WebmMeta {
     }
   }
 
+  /** `video_webm_meta(binary)` → EBML walk metadata struct or null. */
   def parse(b: Array[Byte]): InternalRow = {
     val w = new Walk(b)
     val limit = b.length
@@ -254,25 +253,4 @@ object WebmMeta {
       if (rate > 0) Integer.valueOf(rate) else null,
       if (channels > 0) Integer.valueOf(channels) else null)
   }
-}
-
-/** `video_webm_meta(binary)` → EBML walk metadata struct or null. */
-case class WebmVideoMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WebmMeta.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "video_webm_meta"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    WebmMeta.parse(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WebmMeta.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): WebmVideoMeta =
-    copy(child = newChild)
 }

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
-
 /** XZ / LZMA2 decompression as a scan-side expression — the third
   * leg of the crawl-archive compression matrix next to gzip/zstd/bz2
   * (HF dataset drops and source tarballs ship `.xz`). Full from-spec
@@ -73,6 +69,9 @@ object Xz {
     c.getValue
   }
 
+  /** `xz_decompress(binary)` → concatenated decompressed payload of every
+    * XZ stream in the blob, or null.
+    */
   def decompressAll(b: Array[Byte]): Array[Byte] =
     try decompressOrFail(b)
     catch {
@@ -517,27 +516,4 @@ object Xz {
       if (code != 0) fail()
     }
   }
-}
-
-/** `xz_decompress(binary)` → concatenated decompressed payload of every
-  * XZ stream in the blob, or null.
-  */
-case class XzDecompress(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "xz_decompress"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Xz.decompressAll(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Xz.decompressAll($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): XzDecompress =
-    copy(child = newChild)
 }

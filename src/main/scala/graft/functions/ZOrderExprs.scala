@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
-
 /** Morton (Z-order) interleave — the multi-dimensional clustering key
   * behind lakehouse data skipping (Delta/Iceberg `OPTIMIZE ZORDER BY`):
   * rows laid out in z-value order put records that are close in BOTH
@@ -39,32 +34,13 @@ object ZOrderExprs {
     x
   }
 
-  /** Invoked from both interpreted eval and generated code. */
+  /** `zorder2(a: long, b: long) → long` — see [[ZOrderExprs]].
+    *
+    * Invoked from both interpreted eval and generated code. */
   def z2(a: Long, b: Long): Long = {
     if (a < 0L || a > 0x7fffffffL || b < 0L || b > 0x7fffffffL)
       throw new IllegalArgumentException(
         s"zorder2: inputs must be in [0, 2^31), got ($a, $b)")
     spread(a) | (spread(b) << 1)
   }
-}
-
-/** `zorder2(a: long, b: long) → long` — see [[ZOrderExprs]]. */
-case class ZOrder2Expr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "zorder2"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (bigint, bigint), got " +
-        s"(${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ZOrderExprs.z2(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ZOrderExprs.z2($a, $b);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ZOrder2Expr =
-    copy(left = newLeft, right = newRight)
 }

@@ -2,8 +2,7 @@ package graft.functions
 
 import java.util.zip.{CRC32, Inflater}
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -73,7 +72,6 @@ object ZipDocx {
   val entriesType: DataType = ArrayType(entrySchema, containsNull = false)
 
   import Bytes.{Corrupt, fail}
-
 
   /** One decoded member: data == null ⇔ payload corrupt (crcOk false). */
   final case class Member(name: String, method: Int, compLen: Long,
@@ -228,6 +226,8 @@ object ZipDocx {
     } catch { case Corrupt => null }
 
   /** zip_entry: decoded member bytes, or null. */
+  def entry(buf: Array[Byte], name: UTF8String): Array[Byte] = entry(buf, name.toString)
+
   def entry(buf: Array[Byte], name: String): Array[Byte] =
     try {
       val ms = parseArchive(buf)
@@ -857,165 +857,4 @@ object ZipDocx {
     w32(cdSize); w32(cdAt); w16(0)
     out.toByteArray
   }
-}
-
-/** `zip_entries(binary)` → per-member audit rows or null (refused). */
-case class ZipEntriesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ZipDocx.entriesType
-  override def nullable: Boolean = true
-  override def prettyName: String = "zip_entries"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ZipDocx.entries(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ZipDocx.entries($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): ZipEntriesExpr =
-    copy(child = newChild)
-}
-
-/** `zip_entry(binary, name)` → decoded member bytes or null. */
-case class ZipEntryExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "zip_entry"
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (binary, string), got (${left.dataType}, ${right.dataType})")
-  override def nullSafeEval(blob: Any, name: Any): Any =
-    ZipDocx.entry(blob.asInstanceOf[Array[Byte]], name.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.ZipDocx.entry($b, $n.toString());
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): ZipEntryExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `docx_text(binary)` → document text or null (outside the subset). */
-case class DocxTextExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "docx_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ZipDocx.docxText(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ZipDocx.docxText($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): DocxTextExpr =
-    copy(child = newChild)
-}
-
-/** `docx_doc(binary)` → one deterministic docx around the text. */
-case class DocxDocExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "docx_doc"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ZipDocx.docxDoc(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ZipDocx.docxDoc($c);")
-  override protected def withNewChildInternal(newChild: Expression): DocxDocExpr =
-    copy(child = newChild)
-}
-
-/** `xlsx_text(binary)` → workbook TSV text or null (outside subset). */
-case class XlsxTextExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "xlsx_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ZipDocx.xlsxText(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ZipDocx.xlsxText($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): XlsxTextExpr =
-    copy(child = newChild)
-}
-
-/** `xlsx_doc(binary)` → one deterministic xlsx around TSV text. */
-case class XlsxDocExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "xlsx_doc"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ZipDocx.xlsxDoc(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ZipDocx.xlsxDoc($c);")
-  override protected def withNewChildInternal(newChild: Expression): XlsxDocExpr =
-    copy(child = newChild)
-}
-
-/** `pptx_text(binary)` → slide text or null (outside the subset). */
-case class PptxTextExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "pptx_text"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ZipDocx.pptxText(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ZipDocx.pptxText($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): PptxTextExpr =
-    copy(child = newChild)
-}
-
-/** `pptx_doc(binary)` → one deterministic pptx (slide per line). */
-case class PptxDocExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "pptx_doc"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    ZipDocx.pptxDoc(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ZipDocx.pptxDoc($c);")
-  override protected def withNewChildInternal(newChild: Expression): PptxDocExpr =
-    copy(child = newChild)
 }

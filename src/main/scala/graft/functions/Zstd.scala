@@ -1,16 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
-
 /** Zstandard frame codec as scan-side expressions — the OTHER
   * compression layer of real web-crawl inputs, written FROM SPEC
   * (RFC 8878: frame/block framing, FSE a.k.a. tANS entropy tables,
   * canonical Huffman literals with FSE-compressed weights, the
   * three-slot repeat-offset history, XXH64 content checksums). Newer
   * Common Crawl dumps ship zstd-compressed segments; round 9 could only
-  * DETECT them ([[CodecProbe]]) and quarantine — this closes the
+  * DETECT them (`codec_probe`, [[Gzip.probe]]) and quarantine — this closes the
   * engine's crawl first mile for the format.
   *
   * Decode posture mirrors [[Gzip.inflateAll]]: whole-or-refuse — null
@@ -44,7 +40,10 @@ object Zstd {
     */
   val MaxWindowBytes: Long = Gzip.MaxInflatedBytes.toLong
 
-  /** Codec-routing decompression for the crawl read path: gzip magic →
+  /** `decompress_any(binary)` → payload via whichever of the two crawl
+    * codecs the magic declares, or null (unknown codec / malformed).
+    *
+    * Codec-routing decompression for the crawl read path: gzip magic →
     * [[Gzip.inflateAll]], zstd frame/skippable magic →
     * [[decompressAll]], empty → empty (a zero-record file), anything
     * else → null. One blob, one codec — mixed-codec FILES don't exist
@@ -428,13 +427,20 @@ object Zstd {
     }
   }
 
-  /** Decode every frame (regular or skippable) of `blob`, returning the
+  /** `zunstd_all(binary)` → concatenated content of every zstd frame, or
+    * null on any malformation (the [[Gzip.inflateAll]] whole-or-refuse
+    * posture for RFC 8878 streams).
+    *
+    * Decode every frame (regular or skippable) of `blob`, returning the
     * concatenated content or null on ANY malformation.
     */
   def decompressAll(blob: Array[Byte]): Array[Byte] =
     decompressFrames(blob, null)
 
-  /** [[decompressAll]] with a dictionary (RFC 8878 §5): magic-framed
+  /** `zunstd_dict(binary, binary)` → dictionary-assisted decode of every
+    * frame, or null (wrong/missing dictionary, any malformation).
+    *
+    * [[decompressAll]] with a dictionary (RFC 8878 §5): magic-framed
     * trained dictionaries carry an ID, entropy tables (Huffman + the
     * OF/ML/LL FSE trio) and starting repeat offsets; anything without
     * the magic is a raw-content dictionary. Frames whose
@@ -806,7 +812,9 @@ object Zstd {
 
   // --------------------------------------------------------------- encoder
 
-  /** One deterministic single-segment zstd frame over RAW blocks with an
+  /** `zstd_frame(binary)` → one deterministic RAW-block zstd frame.
+    *
+    * One deterministic single-segment zstd frame over RAW blocks with an
     * XXH64 content checksum — spec-valid (any conformant decoder reads
     * it), byte-stable across JVMs (no compressor heuristics), and the
     * engine-side half of the round-trip oracle gates. Payloads ≤ 128 KB
@@ -845,95 +853,4 @@ object Zstd {
     w32(xxh64(raw, 0, n) & 0xffffffffL)
     out.toByteArray
   }
-}
-
-/** `zunstd_all(binary)` → concatenated content of every zstd frame, or
-  * null on any malformation (the [[Gzip.inflateAll]] whole-or-refuse
-  * posture for RFC 8878 streams).
-  */
-case class ZstdDecompress(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "zunstd_all"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Zstd.decompressAll(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Zstd.decompressAll($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): ZstdDecompress =
-    copy(child = newChild)
-}
-
-/** `decompress_any(binary)` → payload via whichever of the two crawl
-  * codecs the magic declares, or null (unknown codec / malformed).
-  */
-case class DecompressAny(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "decompress_any"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Zstd.decompressAny(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Zstd.decompressAny($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildInternal(newChild: Expression): DecompressAny =
-    copy(child = newChild)
-}
-
-/** `zstd_frame(binary)` → one deterministic RAW-block zstd frame. */
-case class ZstdFrame(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "zstd_frame"
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs binary, got ${child.dataType}")
-  override def nullSafeEval(input: Any): Any =
-    Zstd.compressRaw(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Zstd.compressRaw($c);")
-  override protected def withNewChildInternal(newChild: Expression): ZstdFrame =
-    copy(child = newChild)
-}
-
-/** `zunstd_dict(binary, binary)` → dictionary-assisted decode of every
-  * frame, or null (wrong/missing dictionary, any malformation).
-  */
-case class ZstdDecompressDict(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "zunstd_dict"
-  override def checkInputDataTypes() =
-    if (left.dataType == BinaryType && right.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (binary, binary)")
-  override def nullSafeEval(blob: Any, dict: Any): Any =
-    Zstd.decompressAllDict(blob.asInstanceOf[Array[Byte]],
-      dict.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, d) => s"""
-      ${ev.value} = graft.functions.Zstd.decompressAllDict($b, $d);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): ZstdDecompressDict =
-    copy(left = newLeft, right = newRight)
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   *
   * The decode story has two layers:
   *
-  *  - '''header decode is REAL''': [[graft.functions.ImageHeader]] parses
+  *  - '''header decode is REAL''': [[graft.functions.ImageHeader.parse]] parses
   *    actual PNG/JPEG/GIF/BMP container headers (dimensions + format) as a
   *    codegen'd scan-side expression — the decision data (route, filter,
   *    size-bucket) a curation pipeline needs before paying for pixels.

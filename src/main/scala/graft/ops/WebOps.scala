@@ -303,7 +303,7 @@ object WebOps {
 
   /** Per-segment QUARANTINE accounting — the loud-refusal companion to
     * [[extractPages]]: for every crawl file, its sniffed container codec
-    * ([[graft.functions.CodecProbe]] — gzip vs zstd frame/skippable
+    * (`codec_probe`, [[graft.functions.Gzip.probe]] — gzip vs zstd frame/skippable
     * magic vs unknown), whether the segment is quarantined (unknown
     * codec, OR a gzip/zstd stream that fails the strict whole-or-refuse
     * decode — since round 10 both codecs DECODE, [[graft.functions.Zstd]]
@@ -413,7 +413,7 @@ object WebOps {
     * `urls` must carry (`host`, `path`) columns; `robots` is one row
     * per host with its robots.txt content. Steps, all hosts-sized until
     * the final URL join:
-    *  1. parse each file once ([[graft.functions.RobotsRules]]) and
+    *  1. parse each file once (`robots_rules`, [[graft.functions.RobotsTxt.parse]]) and
     *     flatten to (host, agent, allow, path) rule rows;
     *  2. RFC group selection: a group naming `agent` exactly beats the
     *     `*` group, which beats nothing; losing groups are DISCARDED,

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 import graft.vesc.VescSchema
 
 /** Structured Streaming mode (SURVEY §2.11): the batch operators re-expressed
@@ -406,14 +407,13 @@ object StreamingPipeline {
       .agg(max(col("bandSeen")).as("is_near_dup"),
         count(lit(1)).as("n_bands"))
 
-  /** The `binaryFile` source's fixed schema: a streaming file source
-    * needs its schema up front.
+  /** The files arriving under `glob`, one row each (`path`,
+    * `modificationTime`, `length`, `content`): the `binaryFile` source with
+    * its own fixed schema, since a streaming file source needs its schema
+    * up front. A column that is never selected is never read.
     */
-  private val BinaryFileSchema = StructType(Seq(
-    StructField("path", StringType, nullable = false),
-    StructField("modificationTime", TimestampType, nullable = false),
-    StructField("length", LongType, nullable = false),
-    StructField("content", BinaryType, nullable = true)))
+  private def binaryFiles(spark: SparkSession, glob: String): DataFrame =
+    spark.readStream.format("binaryFile").schema(BinaryFileFormat.schema).load(glob)
 
   /** Per-upload re-analysis, end-to-end (reference app.py:354-366: every
     * upload triggers a fresh raw → resample → window → score → timeline
@@ -428,10 +428,7 @@ object StreamingPipeline {
                      analyze: Seq[String] => DataFrame)
                     (onBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream
-      .format("binaryFile")
-      .schema(BinaryFileSchema)
-      .load(uploadDir + "/*.csv")
+    binaryFiles(spark, uploadDir + "/*.csv")
       .select(col("path"))
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -503,7 +500,7 @@ object StreamingPipeline {
     * are sized for.
     */
   def crawlStream(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.WebOps.extractPages(crawlFiles(spark, dir), col("content"))
+    graft.ops.WebOps.extractPages(binaryFiles(spark, dir), col("content"))
   }
 
   /** Streaming FORMAT-DISPATCH ingestion — [[crawlStream]] widened to
@@ -517,7 +514,7 @@ object StreamingPipeline {
     * crawl. Output: (uri, fmt, doc_text).
     */
   def docFormatsStream(spark: SparkSession, dir: String): DataFrame = {
-    val recs = crawlFiles(spark, dir)
+    val recs = binaryFiles(spark, dir)
       .select(explode(call_function("warc_records",
         call_function("decompress_any", col("content")))).as("rec"))
       .select(col("rec.target_uri").as("uri"),
@@ -555,7 +552,7 @@ object StreamingPipeline {
     * Output: (src, fmt, n_rows) — one row per shard file.
     */
   def shardStream(spark: SparkSession, dir: String): DataFrame = {
-    shardProject(crawlFiles(spark, dir))
+    shardProject(binaryFiles(spark, dir))
   }
 
   /** The shared batch/stream projection behind [[shardStream]]. */
@@ -577,23 +574,9 @@ object StreamingPipeline {
           .otherwise(lit(-1L)))
       .select(col("src"), col("fmt"), col("n_rows"))
 
-  private def crawlFiles(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .format("binaryFile")
-      .schema(StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("modificationTime",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("length",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content",
-          org.apache.spark.sql.types.BinaryType))))
-      .load(dir)
-
   /** Streaming FRONTIER discovery — the loop that makes a crawler: as
     * crawl segments land, every fetched page's outlinks are extracted
-    * ([[graft.functions.HtmlLinks]]), resolved against their page
+    * (`html_links`, [[graft.functions.HtmlLinks.extract]]), resolved against their page
     * ([[graft.ops.UrlOps.resolveUrl]]), canonicalized
     * ([[graft.ops.UrlOps.canonicalizeUrl]] — scheme/tracking/fragment
     * variants of one page must not enqueue twice), and emitted ONCE:
@@ -620,7 +603,7 @@ object StreamingPipeline {
     * that bounds every downstream state.
     */
   private def discoveredUrls(spark: SparkSession, dir: String): DataFrame = {
-    val pages = crawlFiles(spark, dir)
+    val pages = binaryFiles(spark, dir)
       .select(col("modificationTime").as("seg_time"), col("content"))
       .select(col("seg_time"), explode(
         call_function("warc_records", call_function("gunzip_all", col("content"))))

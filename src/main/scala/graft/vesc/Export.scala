@@ -118,41 +118,39 @@ object Export {
     * the target is null are excluded per class; one aggregation pass over
     * all classes at once (unpivot → groupBy), no per-class jobs.
     */
-  def maeTable(scoredLabeled: DataFrame): DataFrame = {
-    val behaviors = scoredLabeled.columns.filter(c =>
-      c.startsWith("cf_") && scoredLabeled.columns.contains("pred_" + c)).toSeq.sorted
-    require(behaviors.nonEmpty, "need cf_<b> target and pred_cf_<b> prediction columns")
-    val stacked = scoredLabeled.select(behaviors.map(b =>
-      struct(lit(b).as("behavior"), col(b).cast("double").as("y"),
-        col("pred_" + b).cast("double").as("p")).as(b)): _*)
-      .select(explode(array(behaviors.map(col): _*)).as("r"))
-      .select(col("r.behavior"), col("r.y"), col("r.p"))
-    stacked.filter(col("y").isNotNull)
+  def maeTable(scoredLabeled: DataFrame): DataFrame =
+    labeledPairs(scoredLabeled)
       .groupBy(col("behavior"))
       .agg(round(avg(abs(col("p") - col("y"))), 4).as("mae"),
         count(lit(1)).as("n"))
       .orderBy(col("mae").desc, col("behavior"))
-  }
 
   /** Reliability diagram bins (plot_metrics.py:28-43): pooled non-null
     * (prediction, target) pairs across all classes, 10 equal-width bins on
     * the prediction, mean prediction vs mean target per bin.
     */
-  def reliabilityTable(scoredLabeled: DataFrame): DataFrame = {
-    val behaviors = scoredLabeled.columns.filter(c =>
-      c.startsWith("cf_") && scoredLabeled.columns.contains("pred_" + c)).toSeq.sorted
-    require(behaviors.nonEmpty, "need cf_<b> target and pred_cf_<b> prediction columns")
-    val stacked = scoredLabeled.select(behaviors.map(b =>
-      struct(col(b).cast("double").as("y"),
-        col("pred_" + b).cast("double").as("p")).as(b)): _*)
-      .select(explode(array(behaviors.map(col): _*)).as("r"))
-      .select(col("r.y"), col("r.p"))
-    stacked.filter(col("y").isNotNull)
+  def reliabilityTable(scoredLabeled: DataFrame): DataFrame =
+    labeledPairs(scoredLabeled)
       .withColumn("bin", least(floor(col("p") * 10), lit(9)).cast("long"))
       .groupBy(col("bin"))
       .agg(round(avg(col("p")), 4).as("mean_pred"),
         round(avg(col("y")), 4).as("mean_target"), count(lit(1)).as("n"))
       .orderBy(col("bin"))
+
+  /** Every class's (behavior, target y, prediction p) pair with a non-null
+    * target: one row per (row, class), unpivoted in one pass over the
+    * `cf_<b>` target / `pred_cf_<b>` prediction column pairs.
+    */
+  private def labeledPairs(scoredLabeled: DataFrame): DataFrame = {
+    val behaviors = scoredLabeled.columns.filter(c =>
+      c.startsWith("cf_") && scoredLabeled.columns.contains("pred_" + c)).toSeq.sorted
+    require(behaviors.nonEmpty, "need cf_<b> target and pred_cf_<b> prediction columns")
+    scoredLabeled.select(behaviors.map(b =>
+      struct(lit(b).as("behavior"), col(b).cast("double").as("y"),
+        col("pred_" + b).cast("double").as("p")).as(b)): _*)
+      .select(explode(array(behaviors.map(col): _*)).as("r"))
+      .select(col("r.behavior"), col("r.y"), col("r.p"))
+      .filter(col("y").isNotNull)
   }
 
   def main(args: Array[String]): Unit = {

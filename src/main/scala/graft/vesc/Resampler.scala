@@ -104,28 +104,26 @@ object Resampler {
     * protected columns, and ms_today; order per the training layout.
     */
   def trainingResample(df: DataFrame): DataFrame = {
-    val nonInterp = (VescSchema.ConfidenceCols ++ VescSchema.ProtectedCols ++
-      Seq("ms_today", "ride_id", "ts_utc", "ts_pst", "video_ts_anchor", "dt_ms")).toSet
-    val interpCols = df.columns.filter(c =>
-      !nonInterp.contains(c) &&
-        Set("double", "float", "long", "integer")
-          .contains(df.schema(c).dataType.typeName)).toSeq
-    val out = resample10Hz(df, interpCols,
+    val out = resample10Hz(df,
+      interpolated(df, VescSchema.ConfidenceCols ++ VescSchema.ProtectedCols ++
+        Seq("ms_today", "ride_id", "ts_utc", "ts_pst", "video_ts_anchor", "dt_ms")),
       VescSchema.ConfidenceCols ++ VescSchema.ProtectedCols)
     reorder(out.drop("is_real"), VescSchema.TrainingOutputOrder)
   }
 
   /** Production flavour. */
   def prodResample(df: DataFrame): DataFrame = {
-    val nonInterp = (VescSchema.ProtectedCols ++
-      Seq("ms_today", "ride_id", "ts_utc")).toSet
-    val interpCols = df.columns.filter(c =>
-      !nonInterp.contains(c) &&
-        Set("double", "float", "long", "integer")
-          .contains(df.schema(c).dataType.typeName)).toSeq
-    val out = resample10Hz(df, interpCols, VescSchema.ProtectedCols)
+    val out = resample10Hz(df,
+      interpolated(df, VescSchema.ProtectedCols ++ Seq("ms_today", "ride_id", "ts_utc")),
+      VescSchema.ProtectedCols)
     reorder(out.drop("is_real"), VescSchema.ProdOutputOrder)
   }
+
+  /** The numeric columns of `df` outside `nonInterp`, in column order:
+    * the ones the grid interpolates. */
+  private def interpolated(df: DataFrame, nonInterp: Seq[String]): Seq[String] =
+    df.columns.filter(c => !nonInterp.contains(c) &&
+      Set("double", "float", "long", "integer").contains(df.schema(c).dataType.typeName)).toSeq
 
   /** P3: normative order first, remaining columns appended. */
   def reorder(df: DataFrame, desired: Seq[String]): DataFrame = {

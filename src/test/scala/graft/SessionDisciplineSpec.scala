@@ -15,6 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    active;
   *  - under `functions/`, only `Bytes.scala` defines a multi-byte integer
   *    reader or a stackless refusal exception;
+  *  - under `functions/`, a function that calls one static method is a
+  *    catalog row (`StaticFn`), not a hand-written expression class;
   *  - under `vesc/`, the trainers share one sum `Aggregator`
   *    (`HeadTrainer.SumAgg`), one masked-BCE kernel (`TrunkGrad.bceDz`)
   *    and one Adam loop (`HeadTrainer.fit`);
@@ -92,6 +94,24 @@ class SessionDisciplineSpec extends AnyFunSuite {
     } yield s"$p:${i + 1}"
     assert(offenders.isEmpty,
       s"byte reader or refusal signal outside functions/Bytes (call Bytes " +
+        s"instead): ${offenders.mkString(", ")}")
+  }
+
+  test("static functions are catalog rows") {
+    // only the shell and the expressions that are more than one static
+    // call (data-bound, plan-time sizes, vector-kind dispatch, a
+    // non-propagating argument) write their own Catalyst expression
+    val functions = Paths.get("src/main/scala/graft/functions")
+    val allowed = (DataBound.map(_.getFileName.toString) ++ Set("StaticCall.scala",
+      "MinHashSig.scala", "VectorExprs.scala", "CharsetDecode.scala")).map(functions.resolve)
+    val expression = """extends\s+[\w.]*(Unary|Binary|Ternary)Expression\b|\bdoGenCode\b""".r
+    val offenders = for {
+      (p, lines) <- sources if p.startsWith(functions) && !allowed.contains(p)
+      (l, i) <- lines.zipWithIndex if expression.findFirstIn(l).isDefined
+    } yield s"$p:${i + 1}"
+    assert(allowed.forall(f => sources.exists(_._1 == f)), s"missing one of $allowed")
+    assert(offenders.isEmpty,
+      s"expression class outside the shell (add a StaticFn row to GraftExtensions.statics " +
         s"instead): ${offenders.mkString(", ")}")
   }
 

@@ -11,7 +11,7 @@ class ExifSpec extends SparkSuite {
     h.replaceAll("\\s", "").grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 
   private def ori(h: String): Option[Int] =
-    Option(ExifMeta.orientationBoxed(hexBytes(h))).map(_.intValue)
+    Option(ExifMeta.orientation(hexBytes(h))).map(_.intValue)
 
   private def exifLE(v: Int): String =
     f"FFD8 FFE1 0022 457869660000 49492A0008000000 0100 12010300 01000000 $v%02X000000 00000000 FFD9"
