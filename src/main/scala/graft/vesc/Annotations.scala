@@ -35,7 +35,7 @@ object Annotations {
     val perCol = confCols.map { c =>
       val behavior = "cf_" + c.stripPrefix("conf_")
       ls.select(
-          col("id").cast("long").as("anno_row"),
+          col("id").cast(LongType).as("anno_row"),
           from_json(col(c), rangeSchema).as("ranges"))
         .select(col("anno_row"), posexplode(col("ranges")).as(Seq("item_idx", "r")))
         .select(
@@ -70,11 +70,11 @@ object Annotations {
       try_to_timestamp(s, lit("yyyy-MM-dd HH:mm:ss.SSS")),
       try_to_timestamp(s))
     val parts = split(s, ":")
-    val secs = element_at(parts, -1).cast("double")
-    val mins = element_at(parts, -2).cast("long")
-    val hrs = when(size(parts) >= 3, element_at(parts, -3).cast("long")).otherwise(0L)
-    val offsetUs = ((hrs * 3600 + mins * 60).cast("double") + secs) * 1e6
-    when(isAbsolute, unix_micros(asTs)).otherwise(offsetUs.cast("long"))
+    val secs = element_at(parts, -1).cast(DoubleType)
+    val mins = element_at(parts, -2).cast(LongType)
+    val hrs = when(size(parts) >= 3, element_at(parts, -3).cast(LongType)).otherwise(0L)
+    val offsetUs = ((hrs * 3600 + mins * 60).cast(DoubleType) + secs) * 1e6
+    when(isAbsolute, unix_micros(asTs)).otherwise(offsetUs.cast(LongType))
   }
 
   /** Apply annotation ranges to a processed log: for each sample and
@@ -111,7 +111,7 @@ object Annotations {
       .agg(aggs.head, aggs.tail: _*)
 
     val applied = behaviors.foldLeft(grouped) { (df, b) =>
-      val existing = if (logCols.contains(b)) col(b) else lit(null).cast("double")
+      val existing = if (logCols.contains(b)) col(b) else lit(null).cast(DoubleType)
       df.withColumn(b, coalesce(col("__new_" + b), existing))
     }
     applied.drop(behaviors.map("__new_" + _): _*).drop("__us")

@@ -1,5 +1,9 @@
 package graft.vesc
 
+import java.util.concurrent.{ForkJoinPool, ForkJoinTask}
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.spark.{TaskContext, TaskKilledException}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,6 +23,8 @@ import org.apache.spark.sql.types._
   * once from the reference checkpoint — no torch anywhere. Scoring runs as
   * `mapPartitions` over assembled windows with broadcast weights+stats:
   * embarrassingly parallel, no shuffle, ~100 KB of weights per executor.
+  * Inside one task, [[scoreRanges]] spreads a ride's windows over the
+  * task's thread and the JVM's common pool (`VescPipeline.analyze`).
   *
   * One forward kernel serves scoring and training: [[Trunk]] runs the
   * layer sequence over flat (C, T) float arrays, `conv1d` splits the
@@ -164,7 +170,7 @@ object CnnScorer {
     * After [[run]] the buffers hold every activation — the cache that
     * [[TrunkGrad]]'s backward reads: conv outputs before BN (`c1`, `r2`,
     * `c2`, `c3`, `c4`) and layer outputs after ReLU, whose sign is the
-    * sign of the pre-ReLU value. Not thread-safe: one per task.
+    * sign of the pre-ReLU value. Not thread-safe: one per worker.
     */
   final class Trunk(val wts: CnnWeights) {
     /** Input and layer lengths: x0 (t0), conv1 and the residual block
@@ -324,6 +330,50 @@ object CnnScorer {
         Row.fromSeq(Seq(row.get(0), row.get(1), row.get(2)) ++ scores.toSeq)
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
+  }
+
+  /** One range per core: the calling thread and each worker of the JVM's
+    * common pool. The pool is shared JVM-wide, so concurrent passes share
+    * its workers rather than each adding more.
+    */
+  def coreRanges: Int = ForkJoinPool.getCommonPoolParallelism + 1
+
+  /** The 13 sigmoid scores of windows `0 until n`, scored in `ranges`
+    * contiguous index ranges: the first on the calling thread, the others
+    * as tasks of the common pool. `input(i)` builds window i's model input
+    * (it is called from every range at once). Each range runs its own
+    * [[Trunk]] and each window writes its scores at its own index, so the
+    * result is bit-identical to one sequential [[Trunk]] over the windows
+    * in order, for any number of ranges.
+    *
+    * The first exception of any range is rethrown here once every range
+    * has stopped; the other ranges stop at their next window. Inside a
+    * Spark task, the task thread's `TaskContext` is read before the fan-out
+    * (the pool's workers have none), every range stops at its next window
+    * once the task is killed, and the kill is rethrown here.
+    */
+  def scoreRanges(wts: CnnWeights, n: Int, ranges: Int)(
+      input: Int => Array[Array[Float]]): Array[Array[Float]] = {
+    val out = new Array[Array[Float]](n)
+    val task = TaskContext.get() // null outside a Spark task
+    val failure = new AtomicReference[Throwable]
+    def range(r: Int): Unit = try {
+      val trunk = new Trunk(wts)
+      var i = (n.toLong * r / ranges).toInt
+      val end = (n.toLong * (r + 1) / ranges).toInt
+      while (i < end && failure.get == null && (task == null || !task.isInterrupted())) {
+        out(i) = logits(trunk.run(input(i)), wts.head).map(sigmoid)
+        i += 1
+      }
+    } catch { case t: Throwable => failure.compareAndSet(null, t) }
+    val workers = (1 until ranges).map { r =>
+      ForkJoinTask.adapt(new Runnable { def run(): Unit = range(r) }).fork()
+    }
+    range(0)
+    workers.foreach(_.join())
+    Option(failure.get).foreach(throw _)
+    if (task != null && task.isInterrupted()) throw new TaskKilledException
+    out
   }
 
   // ---- weight loading (neutral parquet: layer, shape, data) ----

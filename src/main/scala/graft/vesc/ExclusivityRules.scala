@@ -2,6 +2,7 @@ package graft.vesc
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Behavior-exclusivity resolution (reference
   * apply_behavior_exclusivity_rules:
@@ -65,7 +66,7 @@ object ExclusivityRules {
         val anyPos = m1 > 0 || m2 > 0
         def resolve(c: String, losing: Column): Column =
           when(anyPos && losing, lit(0.0))
-            .when(anyPos && m1 === m2, lit(null).cast("double"))
+            .when(anyPos && m1 === m2, lit(null).cast(DoubleType))
             .otherwise(col(c))
         val out1 = p1.map(c => c -> resolve(c, m2 > m1))
         val out2 = p2.map(c => c -> resolve(c, m1 > m2))

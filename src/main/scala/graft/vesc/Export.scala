@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.Json
 
@@ -131,7 +132,7 @@ object Export {
     */
   def reliabilityTable(scoredLabeled: DataFrame): DataFrame =
     labeledPairs(scoredLabeled)
-      .withColumn("bin", least(floor(col("p") * 10), lit(9)).cast("long"))
+      .withColumn("bin", least(floor(col("p") * 10), lit(9)).cast(LongType))
       .groupBy(col("bin"))
       .agg(round(avg(col("p")), 4).as("mean_pred"),
         round(avg(col("y")), 4).as("mean_target"), count(lit(1)).as("n"))
@@ -146,8 +147,8 @@ object Export {
       c.startsWith("cf_") && scoredLabeled.columns.contains("pred_" + c)).toSeq.sorted
     require(behaviors.nonEmpty, "need cf_<b> target and pred_cf_<b> prediction columns")
     scoredLabeled.select(behaviors.map(b =>
-      struct(lit(b).as("behavior"), col(b).cast("double").as("y"),
-        col("pred_" + b).cast("double").as("p")).as(b)): _*)
+      struct(lit(b).as("behavior"), col(b).cast(DoubleType).as("y"),
+        col("pred_" + b).cast(DoubleType).as("p")).as(b)): _*)
       .select(explode(array(behaviors.map(col): _*)).as("r"))
       .select(col("r.behavior"), col("r.y"), col("r.p"))
       .filter(col("y").isNotNull)

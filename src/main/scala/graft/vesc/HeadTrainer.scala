@@ -323,7 +323,7 @@ object HeadTrainer {
     val bMean = sc.broadcast(mean.map(_.toFloat))
     val bStd = sc.broadcast(std.map(_.toFloat))
     val labelCols =
-      if (hasLabels) confCols.map(c => col("y_" + c).cast("double"))
+      if (hasLabels) confCols.map(c => col("y_" + c).cast(DoubleType))
       else confCols.map(_ => lit(Double.NaN))
     val projected = windows.select(
       col("ride_id"), col("window_start"),

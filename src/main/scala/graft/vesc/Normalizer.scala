@@ -23,7 +23,7 @@ object Normalizer {
     val aggs = feats.flatMap { c =>
       val v = when(col(c).isNotNull && !isnan(col(c)), col(c))
       Seq(sum(v).as(s"__s_$c"), sum(v * v).as(s"__q_$c"),
-        count(v).cast("double").as(s"__n_$c"))
+        count(v).cast(DoubleType).as(s"__n_$c"))
     }
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
     val stats = feats.zipWithIndex.map { case (c, i) =>

@@ -22,8 +22,8 @@ object Postprocess {
   def downsampleForDisplay(scored: DataFrame, scoreCols: Seq[String],
                            displayDt: Double = 0.5): DataFrame = {
     val input = scored.select((Seq("ride_id", "tsec") ++ scoreCols).map(c =>
-      if (c == "ride_id") col(c) else col(c).cast("double")): _*)
-    val out = timelineSchema(scored.schema("ride_id"), scoreCols)
+      if (c == "ride_id") col(c) else col(c).cast(DoubleType)): _*)
+    val out = timelineSchema(input.schema.head, scoreCols)
     RidePass.perRide(input, Seq(col("tsec")), out) { rows =>
       RidePass.displayBlocks(rows.head.get(0), RidePass.Col.of(rows, 1),
         scoreCols.indices.map(i => RidePass.Col.of(rows, 2 + i)), displayDt)
@@ -42,9 +42,9 @@ object Postprocess {
     val cfCols = VescSchema.ConfidenceCols.filter(cf.contains)
     val sources = cfCols.map(c => scored.columns(cf.indexOf(c)))
     val groups = RidePass.conflictGroups(cfCols)
-    val input = scored.select(col("ride_id") +: col("t_mid").cast("double") +:
-      sources.map(col(_).cast("double")): _*)
-    val out = timelineSchema(scored.schema("ride_id"), cfCols)
+    val input = scored.select(col("ride_id") +: col("t_mid").cast(DoubleType) +:
+      sources.map(col(_).cast(DoubleType)): _*)
+    val out = timelineSchema(input.schema.head, cfCols)
     RidePass.perRide(input, Seq(col("t_mid")), out) { rows =>
       RidePass.timeline(rows.head.get(0), RidePass.Col.of(rows, 1),
         cfCols.indices.map(i => RidePass.Col.of(rows, 2 + i)), groups, Export.DisplayDt)

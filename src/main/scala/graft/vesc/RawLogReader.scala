@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField,
+  StructType}
 
 /** Raw VESC Tool log ingestion (reference S1/P1/P2/F1–F3/W2/W3:
   * training_preprocessing.py:45-99, prod_preprocessing.py:10-33).
@@ -28,6 +29,11 @@ object RawLogReader {
 
   /** The CSV options of every raw log read. */
   private val Csv = Map("sep" -> ";", "header" -> "true")
+
+  /** The text source's one-column schema, for listing the logs as [[scan]]
+    * does.
+    */
+  private val TextLine = StructType(Seq(StructField("value", StringType)))
 
   /** The all-string schema Spark's CSV header inference gives `paths`,
     * read on the driver without a Spark job.
@@ -51,7 +57,7 @@ object RawLogReader {
     * RawLogReaderSpec checks it against (split sizes included).
     */
   def header(spark: SparkSession, paths: Seq[String]): StructType = {
-    val relation = spark.read.schema("value STRING").text(paths: _*).queryExecution.analyzed
+    val relation = spark.read.schema(TextLine).text(paths: _*).queryExecution.analyzed
       .collectFirst { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r }.get
     if (relation.location.inputFiles.isEmpty)
       throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "CSV"))
@@ -111,7 +117,7 @@ object RawLogReader {
   def scan(spark: SparkSession, paths: Seq[String], channels: Seq[String]): DataFrame = {
     val raw = spark.read.schema(header(spark, paths)).options(Csv).csv(paths: _*)
     val present = channels.filter(raw.columns.contains)
-    raw.select(present.map(c => col(c).try_cast("double").as(c)) ++
+    raw.select(present.map(c => col(c).try_cast(DoubleType).as(c)) ++
       Seq(input_file_name().as("__file"), monotonically_increasing_id().as("__row")): _*)
   }
 
@@ -134,14 +140,14 @@ object RawLogReader {
     // per JVM) on the first upload's critical path
     val rideNum = regexp_extract(parent, "(?i)ride[\\s_-]*log[\\s_-]*(\\d+)", 1)
     val inferredRide = when(rideNum =!= "",
-      format_string("ride_%02d", rideNum.cast("int"))).otherwise("unknown_ride_id")
+      format_string("ride_%02d", rideNum.cast(IntegerType))).otherwise("unknown_ride_id")
     val tsUtc = timestamp_millis(
-      unix_millis(to_timestamp(datePart, "yyyy-MM-dd")) + col("ms_today").cast("long"))
+      unix_millis(to_timestamp(datePart, "yyyy-MM-dd")) + col("ms_today").cast(LongType))
     val w = Window.partitionBy(col("ride_id")).orderBy(col("__file"), col("__row"))
     raw.select(raw.columns.toSeq.diff(Seq("__file", "__row")).map(col) ++ Seq(
         rideId.fold(inferredRide)(lit).as("ride_id"), tsUtc.as("ts_utc"),
         col("__file"), col("__row")): _*)
-      .withColumn("sample_idx", (row_number().over(w) - 1).cast("long"))
+      .withColumn("sample_idx", (row_number().over(w) - 1).cast(LongType))
       // W2: lag diff in ms (float in the reference; double here)
       .withColumn("dt_ms", col("ms_today") - lag(col("ms_today"), 1).over(w))
       .drop("__row", "__file")
@@ -154,10 +160,10 @@ object RawLogReader {
   def readTraining(spark: SparkSession, paths: Seq[String],
                    rideId: Option[String] = None): DataFrame = {
     val base = readRaw(spark, paths, VescSchema.TrainingChannels, rideId)
-      .withColumn("video_ts_anchor", lit(null).cast("string"))
+      .withColumn("video_ts_anchor", lit(null).cast(StringType))
       .withColumn("ts_pst", toPstMillis(col("ts_utc")))
     VescSchema.ConfidenceCols.foldLeft(base)(
-      (df, c) => df.withColumn(c, lit(null).cast("double")))
+      (df, c) => df.withColumn(c, lit(null).cast(DoubleType)))
   }
 
   /** Production-mode load: channels only + sample_idx + ts_utc, every row

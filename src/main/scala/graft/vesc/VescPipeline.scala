@@ -63,8 +63,13 @@ object VescPipeline {
     * 10 Hz grid ([[RidePass.resample]] over the model features — the
     * production flavour's interpolated channels),
     * the stride-aligned windows ([[RidePass.windows]]), scoring through
-    * [[CnnScorer.normalizedWindow]] and one [[CnnScorer.Trunk]], and the
-    * display post-processing ([[RidePass.timeline]]). Every value is
+    * [[CnnScorer.normalizedWindow]] and [[CnnScorer.scoreRanges]], and the
+    * display post-processing ([[RidePass.timeline]]). The scoring, the
+    * largest block of the pass, runs on every core inside the one task:
+    * the windows are split into one contiguous index range per core
+    * ([[CnnScorer.coreRanges]]), one on the task's thread and one on each
+    * worker of the JVM's common pool, each with its own
+    * [[CnnScorer.Trunk]]. Every value is
     * bit-identical to composing [[Resampler.prodResample]],
     * [[WindowAssembler.assemble]], [[CnnScorer.score]] and
     * [[Postprocess.displayTimeline]].
@@ -92,14 +97,12 @@ object VescPipeline {
         RidePass.finiteCells(g.channels, g.length), feats.size, steps,
         WindowAssembler.Stride, VescSchema.MinValidRatio)
       val cells = IndexedSeq.tabulate(g.length)(k => g.channels.map(_.get(k)))
-      val trunk = new CnnScorer.Trunk(w)
-      val scores = cfCols.map(_ => RidePass.Col(win.length)).toIndexedSeq
-      for (i <- 0 until win.length) {
+      val perWindow = CnnScorer.scoreRanges(w, win.length, CnnScorer.coreRanges) { i =>
         val k = win.start(i)
-        val z = CnnScorer.logits(trunk.run(CnnScorer.normalizedWindow(
-          cells.slice(k, k + steps), m, s)), w.head)
-        scores.indices.foreach(c => scores(c).v(i) = CnnScorer.sigmoid(z(c)).toDouble)
+        CnnScorer.normalizedWindow(cells.slice(k, k + steps), m, s)
       }
+      val scores = cfCols.indices.map(c =>
+        new RidePass.Col(perWindow.map(_(c).toDouble), new Array[Boolean](win.length)))
       val tMid = new RidePass.Col(win.tMid, new Array[Boolean](win.length))
       RidePass.timeline(rows.head.get(0), tMid, scores, groups, Export.DisplayDt)
     }

@@ -3,6 +3,7 @@ package graft.vesc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** W13: video-timestamp anchoring for label-time synchronization (reference
   * insert_video_timestamp_anchor_point + format_video_ts,
@@ -37,12 +38,12 @@ object VideoAnchor {
     */
   def formatVideoTs(ms: Column): Column = {
     val msInHour = pmod(ms, lit(3600000L))
-    val h = ((ms - msInHour) / lit(3600000L)).cast("long")
+    val h = ((ms - msInHour) / lit(3600000L)).cast(LongType)
     val msInMin = pmod(ms, lit(60000L))
-    val m = ((msInHour - msInMin) / lit(60000L)).cast("long")
-    val tenths = floor(msInMin.cast("double") / 100.0 + lit(0.5)).cast("long")
+    val m = ((msInHour - msInMin) / lit(60000L)).cast(LongType)
+    val tenths = floor(msInMin.cast(DoubleType) / 100.0 + lit(0.5)).cast(LongType)
     format_string("%02d:%02d:%02d.%d", h, m,
-      (tenths / 10).cast("long"), pmod(tenths, lit(10L)))
+      (tenths / 10).cast(LongType), pmod(tenths, lit(10L)))
   }
 
   /** Insert `video_ts_anchor` per ride. `logTime` is a naive local

@@ -34,8 +34,10 @@ object WindowAssembler {
                minValidRatio: Double = VescSchema.MinValidRatio): DataFrame = {
     val feats = featureCols.filter(df.columns.contains)
     val confs = confCols.filter(df.columns.contains)
-    val out = StructType(Seq(df.schema("ride_id"),
-      df.schema("sample_idx").copy(name = "window_start"),
+    val input = df.select(Seq(col("ride_id"), col("sample_idx"), col("ms_today")) ++
+      (feats ++ confs).map(c => col(c).cast(DoubleType)): _*)
+    val out = StructType(Seq(input.schema(0),
+      input.schema(1).copy(name = "window_start"),
       StructField("t_mid", DoubleType),
       StructField("valid_ratio", DoubleType),
       StructField("features", ArrayType(ArrayType(DoubleType), containsNull = false),
@@ -44,8 +46,6 @@ object WindowAssembler {
     val f0 = 3
     val y0 = f0 + feats.size
 
-    val input = df.select(Seq(col("ride_id"), col("sample_idx"), col("ms_today")) ++
-      (feats ++ confs).map(c => col(c).cast("double")): _*)
     RidePass.perRide(input, Seq(col("sample_idx")), out) { rows =>
       val n = rows.length
       val from = rows.indexWhere(!_.isNullAt(1)) match { case -1 => n; case i => i }

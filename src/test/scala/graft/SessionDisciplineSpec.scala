@@ -27,7 +27,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the vesc read path (`RawLogReader`, `VescPipeline`, `CnnScorer`,
   *    `Normalizer`) declares every schema it reads;
   *  - `TextQualityOps` builds one Kneser–Ney ladder (`knLogProb`, every
-  *    order and grouping) and one tercile bucketizer (`bucketize`).
+  *    order and grouping) and one tercile bucketizer (`bucketize`);
+  *  - under `src/main`, only `CnnScorer.scoreRanges` fans work out to
+  *    threads (the common pool), besides `Bench`'s shutdown hook;
+  *  - under `vesc/`, no type or expression is written as SQL text, so the
+  *    first analysis in a JVM does not start Spark's SQL parser.
   */
 class SessionDisciplineSpec extends AnyFunSuite {
 
@@ -187,5 +191,37 @@ class SessionDisciplineSpec extends AnyFunSuite {
         s"expected $layer applied once under $vesc (CnnScorer.Trunk), found ${at.size}: " +
           at.mkString(", "))
     }
+  }
+
+  test("one fan-out: only the scorer helper starts threads") {
+    // a second thread pool beside the common pool would oversubscribe the
+    // cores that every analyze call shares
+    val main = Paths.get("src/main/scala")
+    val allowed = Set("vesc/CnnScorer.scala", "Bench.scala").map(f => main.resolve("graft/" + f))
+    val fanOut = Seq("new " + "Thread", "Executors" + ".", "ForkJoin" + "Pool",
+      ".parallel" + "()", "Completable" + "Future", "scala" + ".concurrent")
+    val offenders = for {
+      (p, lines) <- sources if p.startsWith(main) && !allowed.contains(p)
+      (l, i) <- lines.zipWithIndex if fanOut.exists(l.contains)
+    } yield s"$p:${i + 1}"
+    assert(allowed.forall(f => sources.exists(_._1 == f)), s"missing one of $allowed")
+    val bench = sources.find(_._1 == main.resolve("graft/Bench.scala")).get._2
+    assert(bench.filter(l => fanOut.exists(l.contains)).forall(_.contains("addShutdownHook")),
+      "Bench starts a thread other than its shutdown hook")
+    assert(offenders.isEmpty,
+      s"threads outside CnnScorer.scoreRanges: ${offenders.mkString(", ")}")
+  }
+
+  test("the vesc path parses no SQL text") {
+    // a type string or SQL expression starts Spark's ANTLR parser, about
+    // 0.3 s on the first analysis of a cold JVM; name types as DataType
+    // objects and build expressions with Column functions
+    val vesc = Paths.get("src/main/scala/graft/vesc")
+    val sqlText = ("""\b(try_)?cast\("|\bschema\("|\bexpr\(|\bselect""" + """Expr\(""").r
+    val offenders = for {
+      (p, lines) <- sources if p.startsWith(vesc)
+      (l, i) <- lines.zipWithIndex if sqlText.findFirstIn(l).isDefined
+    } yield s"$p:${i + 1}"
+    assert(offenders.isEmpty, s"SQL text under $vesc: ${offenders.mkString(", ")}")
   }
 }
