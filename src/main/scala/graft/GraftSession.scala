@@ -29,8 +29,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // the generated-class LRU is shared by every query of the JVM. One
-      // cold VescPipeline.analyze compiles 15 classes (measured on a
-      // 60-second ride; the window-function plan it replaced compiled
+      // cold VescPipeline.analyze compiles 5 classes (measured on a
+      // 60-second ride after `bundled`; 11 with the CSV scan and sort it
+      // replaced, and the window-function plan before those compiled
       // ~113, more than Spark's default of 100, so each repeat upload
       // recompiled them); the other queries of a session fill the same
       // cache. A static conf: it must be set before the session's first

@@ -417,26 +417,25 @@ object StreamingPipeline {
 
   /** Per-upload re-analysis, end-to-end (reference app.py:354-366: every
     * upload triggers a fresh raw → resample → window → score → timeline
-    * run). The upload directory is a file-source stream; each micro-batch
-    * hands `analyze` (the exact batch pipeline — batch/stream parity by
-    * construction) the NEWLY arrived file paths, and `onBatch` their scored
-    * timeline. The arrival signal is the `binaryFile` source projected to
-    * `path`: one row per new file, its body never read and no shuffle, so
-    * any csv layout works and each upload is read once, by `analyze`.
+    * run). The upload directory is a file-source stream of `binaryFile`
+    * rows (`path`, `modificationTime`, `length`, `content`); each
+    * micro-batch's rows ARE `analyze`'s input (the exact batch pipeline's
+    * core, [[graft.vesc.VescPipeline.analyzeLogs]]: batch/stream parity by
+    * construction), and `onBatch` gets the scored timeline. The
+    * micro-batch's scan is each upload's only read: no job lists the new
+    * paths first and nothing reads a file twice, so an upload costs the one
+    * Spark job `onBatch` runs.
     */
   def uploadAnalysis(spark: SparkSession, uploadDir: String,
-                     analyze: Seq[String] => DataFrame)
+                     analyze: DataFrame => DataFrame)
                     (onBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : org.apache.spark.sql.streaming.StreamingQuery =
     binaryFiles(spark, uploadDir + "/*.csv")
-      .select(col("path"))
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val paths = batch.collect().map(_.getString(0)).toSeq.sorted
-        if (paths.nonEmpty) onBatch(analyze(paths), id)
+        onBatch(analyze(batch), id)
       }
       .start()
-  }
 
   /** Streaming SFT/packing last mile — [[uploadAnalysis]]'s posture on
     * the post-training surface: a watched directory of conversation

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardCopyOption}
 
 import com.sun.net.httpserver.HttpServer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The reference application's interactive loop, composed end-to-end
@@ -17,11 +17,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Every piece already exists as a tested component — [[Serve]] accepts
   * the upload and drops it (atomic rename) into the directory that
   * [[graft.streaming.StreamingPipeline.uploadAnalysis]] watches; each
-  * micro-batch runs the EXACT batch pipeline [[VescPipeline.analyze]]
-  * over the newly-arrived logs (batch/stream parity by construction);
-  * this object adds the last seam: the foreachBatch callback that
-  * re-materializes the [[Export]] artifacts so the next `GET /figure`
-  * returns the new ride's scored timeline.
+  * micro-batch's `binaryFile` rows are the input of the EXACT batch
+  * pipeline's core, [[VescPipeline.analyzeLogs]] (batch/stream parity by
+  * construction, and each upload read once); this object adds the last
+  * seam: the foreachBatch callback that re-materializes the [[Export]]
+  * artifacts so the next `GET /figure` returns the new ride's scored
+  * timeline. The figure shows one ride: when a micro-batch carries
+  * several uploads, it is the newest ([[newest]]: the greatest
+  * `modificationTime`, then the greatest path). The batch's rows meet in
+  * one task, which picks the newest and analyzes it alone, inside the
+  * same pass (`analyzeLogs`' `keep`), so the choice costs no Spark job,
+  * no exchange and no operator of its own.
   *
   * Scale shape: the serving side stays a dumb file server over
   * already-materialized artifacts (object storage + CDN at real scale);
@@ -69,6 +75,14 @@ object App {
       s"""{"batch":$batchId,"rows":${display.rows.length}}""")
   }
 
+  /** The newest upload among rows of the `binaryFile` source: the file
+    * with the greatest `modificationTime`, and among those the greatest
+    * `path`.
+    */
+  private def newest(rows: Iterator[Row]): Iterator[Row] =
+    rows.maxByOption(r => (r.getAs[java.sql.Timestamp]("modificationTime").getTime,
+      r.getAs[String]("path"))).iterator
+
   /** Start the loop: serving on `host:port` (0 = ephemeral), uploads
     * into `uploadDir`, artifacts in `exportDir`. The bundled scorer
     * assets are loaded ONCE here — not per upload — so a micro-batch
@@ -81,7 +95,9 @@ object App {
     val (weights, mean, std) = VescPipeline.bundled(spark)
     val query = graft.streaming.StreamingPipeline.uploadAnalysis(
       spark, uploadDir.toString,
-      paths => VescPipeline.analyze(spark, paths, weights, mean, std)) {
+      // the batch's rows meet in one task (a coalesce, not an exchange),
+      // which analyzes the newest alone
+      batch => VescPipeline.analyzeLogs(batch.coalesce(1), weights, mean, std, keep = newest)) {
       (timeline, batchId) => refresh(exportDir, timeline, batchId)
     }
     val server = Serve.start(exportDir, port, host, uploadTo = Some(uploadDir))

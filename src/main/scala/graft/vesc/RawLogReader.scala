@@ -1,16 +1,12 @@
 package graft.vesc
 
+import java.nio.charset.StandardCharsets
+
 import com.univocity.parsers.csv.CsvParser
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.FileStatus
-import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
-import org.apache.hadoop.mapreduce.TaskAttemptID
-import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField,
@@ -19,106 +15,167 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
 /** Raw VESC Tool log ingestion (reference S1/P1/P2/F1–F3/W2/W3:
   * training_preprocessing.py:45-99, prod_preprocessing.py:10-33).
   *
-  * Reads any number of semicolon-delimited logs in one scan ([[scan]]);
-  * per-file semantics (sample numbering, lag-diff, ride identity) are
-  * expressed as window functions partitioned by `ride_id`, so a directory
-  * of thousands of logs ingests as a single distributed job — nothing
-  * loops over the files one by one.
+  * One reader, one read per log: every log is one `binaryFile` row
+  * ([[logs]]: its path and its bytes), and [[parse]] turns those bytes
+  * into the wanted channels by that file's own header, so logs whose
+  * headers order (or lack) channels differently read each value under its
+  * own name. The parse runs inside the task that holds the row: the CSV
+  * scan, its driver-side header and its cast code are gone. A log is one
+  * task's row and one in-memory array, so the `binaryFile` limit of 2 GB
+  * per file applies (VESC logs are megabytes).
   */
 object RawLogReader {
 
-  /** The CSV options of every raw log read. */
-  private val Csv = Map("sep" -> ";", "header" -> "true")
-
-  /** The text source's one-column schema, for listing the logs as [[scan]]
-    * does.
+  /** The logs at `paths` (files, directories or globs, as any Spark file
+    * read lists them): one row per file, its `path` (the Hadoop path
+    * string) and its `content`.
     */
-  private val TextLine = StructType(Seq(StructField("value", StringType)))
+  def logs(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(BinaryFileFormat.schema).format("binaryFile").load(paths: _*)
+      .select(col("path"), col("content"))
 
-  /** The all-string schema Spark's CSV header inference gives `paths`,
-    * read on the driver without a Spark job.
-    *
-    * Header rule: the inference takes the first non-blank line (one with a
-    * character other than a space) that its text scan yields, partition by
-    * partition. The scan cuts every file into splits of the scan's split
-    * size (a file whose codec cannot split is one split), sorts the splits
-    * by length, largest first and ties in listing order, and reads from
-    * each the lines that start in it. So the header usually is the first
-    * non-blank line of the file with the largest first split, but a split
-    * of blank lines hands on to the next split in that order, which may be
-    * another file's. The files are Spark's own listing of `paths` (globs,
-    * directories, hidden and empty files, `PATH_NOT_FOUND` as for the scan
-    * itself); the line is tokenized with the scan's CSV settings and the
-    * names are made safe with Spark's rules (an empty name becomes `_c<i>`,
-    * a case-insensitive duplicate gets its index appended). As with the
-    * inference, no file is an error and only blank lines an empty schema.
-    *
-    * The rule restates Spark's inference, so it holds for the Spark version
-    * RawLogReaderSpec checks it against (split sizes included).
+  /** One log's channels in line order: `channels(c)` holds the wanted
+    * channel c for each of the `rows` data lines.
     */
-  def header(spark: SparkSession, paths: Seq[String]): StructType = {
-    val relation = spark.read.schema(TextLine).text(paths: _*).queryExecution.analyzed
-      .collectFirst { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r }.get
-    if (relation.location.inputFiles.isEmpty)
-      throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "CSV"))
-    val listed = relation.location.listFiles(Nil, Nil)
-    val maxSplit = FilePartition.maxSplitBytes(spark, listed)
-    val conf = spark.sessionState.newHadoopConf()
-    val codecs = new CompressionCodecFactory(conf)
-    def splits(f: FileStatus): Seq[FileSplit] = codecs.getCodec(f.getPath) match {
-      case null | _: SplittableCompressionCodec => (0L until f.getLen by maxSplit).map(at =>
-        new FileSplit(f.getPath, at, math.min(maxSplit, f.getLen - at), Array.empty[String]))
-      case _ => Seq(new FileSplit(f.getPath, 0, f.getLen, Array.empty[String]))
-    }
-    val options = new CSVOptions(Csv, true, spark.sessionState.conf.sessionLocalTimeZone)
-    val names = listed.flatMap(_.files.map(_.fileStatus)).flatMap(splits)
-      .sortBy(_.getLength)(Ordering[Long].reverse)
-      .iterator.flatMap(firstNonBlank(_, conf))
-      .nextOption()
-      .fold(Array.empty[String]) { line =>
-        CSVUtils.makeSafeHeader(new CsvParser(options.asParserSettings).parseLine(line),
-          spark.sessionState.conf.caseSensitiveAnalysis, options)
+  final class Log(val rows: Int, val channels: IndexedSeq[RidePass.Col])
+
+  /** A tokenizer of log lines with Spark's CSV reader settings for
+    * `sep ";"` and a header; given `picked` (ascending token positions), it
+    * returns only those tokens, in that order, as Spark's reader does for
+    * the columns a query reads (a picked token past the line's end is
+    * empty).
+    */
+  private def tokenizer(picked: Seq[Int] = Nil): CsvParser = {
+    val settings = new CSVOptions(Map("sep" -> ";", "header" -> "true"), true, "UTC")
+      .asParserSettings
+    if (picked.nonEmpty) settings.selectIndexes(picked.map(Integer.valueOf): _*)
+    new CsvParser(settings)
+  }
+
+  /** The wanted `channels` of one log's bytes, by the rules of Spark's CSV
+    * reader on that one file (`sep ";"`, a header, each cell then
+    * `try_cast` to double):
+    *
+    *  - Lines end at `\n`, `\r` or `\r\n`, as Hadoop's line reader splits
+    *    them; a UTF-8 byte-order mark at the start of the file is skipped.
+    *  - A line that is empty after `String.trim` (spaces, tabs, other
+    *    control characters) is dropped; the first line left is the header,
+    *    the others are data lines.
+    *  - Each line is tokenized by univocity with Spark's parser settings,
+    *    on its own (a quote never spans a line end).
+    *  - A channel is the header column whose name equals it ignoring case
+    *    (Spark's analyzer resolution). It reads as null in every row when
+    *    no column has that name, or when Spark's `makeSafeHeader` would
+    *    rename the column: an empty name, or a name that appears twice
+    *    ignoring case.
+    *  - A data line's cell is its token at the channel's position (a short
+    *    line has none; a long line's extra tokens are ignored). An empty
+    *    token is null; any other is `java.lang.Double.parseDouble`, else
+    *    Spark's special literals (`inf`, `-infinity`, `nan`, … in any case),
+    *    else null: `try_cast`'s string → double rule.
+    *
+    * The bytes are decoded one line at a time, and only the wanted
+    * channels' tokens are materialized, so a log's other columns and its
+    * blank lines cost a scan of their bytes and nothing more.
+    *
+    * Departure from Spark, by design: Spark reads the column names from
+    * the first line that is not blank after trimming spaces only, but
+    * skips as blank, and drops as the header, the first line not blank
+    * after `String.trim`. A tab-only line before the header thus becomes
+    * Spark's one column name while the real header is dropped; here the
+    * header is the real one (RawLogReaderParitySpec).
+    */
+  def parse(content: Array[Byte], channels: Seq[String]): Log = {
+    val bounds = lines(content)
+    def line(i: Int) =
+      new String(content, bounds(2 * i), bounds(2 * i + 1) - bounds(2 * i), StandardCharsets.UTF_8)
+    val n = math.max(bounds.length / 2 - 1, 0)
+    val out = channels.map(_ => RidePass.Col(n)).toIndexedSeq
+    val at = if (n == 0) channels.map(_ => -1) else columns(tokenizer().parseLine(line(0)), channels)
+    val picked = at.filter(_ >= 0).distinct.sorted
+    // each channel's place among the picked tokens, or -1
+    val slot = at.map(picked.indexOf(_)).toArray
+    val csv = if (picked.isEmpty) null else tokenizer(picked)
+    var r = 0
+    while (r < n) {
+      val tokens = if (csv == null) null else csv.parseLine(line(r + 1))
+      var c = 0
+      while (c < slot.length) {
+        val k = slot(c)
+        cell(out(c), r, if (k >= 0 && tokens != null && k < tokens.length) tokens(k) else null)
+        c += 1
       }
-    StructType(names.map(StructField(_, StringType)))
+      r += 1
+    }
+    new Log(n, out)
   }
 
-  /** The first line of `split` with a character other than a space, among
-    * the lines the text scan reads from it (Hadoop's line reader: those
-    * starting in the split, with `\n`, `\r` or `\r\n` line ends).
+  /** The lines of `content` that are not blank, as (start, end) byte
+    * offsets, pairwise: lines end at `\n`, `\r` or `\r\n`, a leading UTF-8
+    * byte-order mark is skipped, and a line is blank when every byte is at
+    * most U+0020, which is `String.trim`'s rule on its UTF-8 decoding (a
+    * byte of a multi-byte character is never below 0x80).
     */
-  private def firstNonBlank(split: FileSplit, conf: Configuration): Option[String] = {
-    val reader = new LineRecordReader()
-    try {
-      reader.initialize(split, new TaskAttemptContextImpl(conf, new TaskAttemptID()))
-      Iterator.continually(reader.nextKeyValue()).takeWhile(identity)
-        .map(_ => reader.getCurrentValue.toString).find(_.exists(_ != ' '))
-    } finally reader.close()
+  private def lines(content: Array[Byte]): Array[Int] = {
+    val out = Array.newBuilder[Int]
+    var start = if (content.length >= 3 && content(0) == 0xEF.toByte &&
+      content(1) == 0xBB.toByte && content(2) == 0xBF.toByte) 3 else 0
+    var blank = true
+    var i = start
+    while (i <= content.length) {
+      if (i == content.length || content(i) == '\n' || content(i) == '\r') {
+        if (!blank) { out += start; out += i }
+        if (i + 1 < content.length && content(i) == '\r' && content(i + 1) == '\n') i += 1
+        start = i + 1
+        blank = true
+      } else if ((content(i) & 0xFF) > 0x20) blank = false
+      i += 1
+    }
+    out.result()
   }
 
-  /** The typed scan of raw logs, in one CSV read with the [[header]]
-    * schema (each file's first line skipped as the header): every kept
-    * channel read as string and cast to double with `try_cast` (malformed
-    * cells → null, the `errors="coerce"` semantics; a plain cast throws on
-    * them under ANSI mode), then `__file` (the file's URI) and `__row`, a
-    * row id increasing in line order within each scan split. Nothing else:
-    * ride identity and `ts_utc` are [[readRaw]]'s.
+  /** Each channel's position in the header `names`, or −1. */
+  private def columns(names: Array[String], channels: Seq[String]): IndexedSeq[Int] = {
+    val lower = names.map(n => if (n == null) null else n.toLowerCase)
+    def safe(i: Int) = names(i) != null && names(i).nonEmpty && lower.count(_ == lower(i)) == 1
+    channels.map(w => names.indices.find(i => safe(i) && names(i).equalsIgnoreCase(w))
+      .getOrElse(-1)).toIndexedSeq
+  }
+
+  /** Row `r` of `col` := `try_cast(token AS DOUBLE)`, null for a missing
+    * or empty token.
+    */
+  private def cell(col: RidePass.Col, r: Int, token: String): Unit =
+    if (token == null || token.isEmpty) col.isNull(r) = true
+    else try col.v(r) = java.lang.Double.parseDouble(token)
+    catch {
+      case _: NumberFormatException =>
+        Cast.processFloatingPointSpecialLiterals(token, false) match {
+          case d: java.lang.Double => col.v(r) = d
+          case _ => col.isNull(r) = true
+        }
+    }
+
+  /** The typed scan of raw logs: one [[logs]] read, each log [[parse]]d
+    * in its task, one row per data line with every wanted channel (null
+    * where the log lacks it), then `__file` (the log's path) and `__row`
+    * (the line's index among the log's data lines). Nothing else: ride
+    * identity and `ts_utc` are [[readRaw]]'s.
     *
     * Sort-order contract: within a ride, (`__file`, `__row`) is file
-    * order. A bare monotonic id is NOT enough: Spark packs file splits into
-    * partitions sorted by size (descending), so a ride spanning several
-    * CSVs could be numbered with the larger file first regardless of
-    * chronology. Ordering by (file name, monotonic id) pins cross-file
-    * order to the lexicographic file name (VESC logs embed the timestamp in
-    * the name) while the monotonic id preserves line order within a file
-    * partition. [[readRaw]] numbers rows in this order; `VescPipeline`'s
-    * analysis sorts by (ms_today, `__file`, `__row`) instead, so its
-    * keep-first dedup keeps the first row in file order without numbering.
+    * order, the lexicographic path first (VESC logs embed the timestamp in
+    * the name), then line order. [[readRaw]] numbers rows in this order.
     */
   def scan(spark: SparkSession, paths: Seq[String], channels: Seq[String]): DataFrame = {
-    val raw = spark.read.schema(header(spark, paths)).options(Csv).csv(paths: _*)
-    val present = channels.filter(raw.columns.contains)
-    raw.select(present.map(c => col(c).try_cast(DoubleType).as(c)) ++
-      Seq(input_file_name().as("__file"), monotonically_increasing_id().as("__row")): _*)
+    val out = StructType(channels.map(StructField(_, DoubleType)) ++ Seq(
+      StructField("__file", StringType, nullable = false),
+      StructField("__row", LongType, nullable = false)))
+    logs(spark, paths).mapPartitions(_.flatMap { file =>
+      val path = file.getString(0)
+      val log = parse(file.getAs[Array[Byte]](1), channels)
+      Iterator.range(0, log.rows).map(r =>
+        Row.fromSeq(log.channels.map(_.get(r)) :+ path :+ r.toLong))
+    })(Encoders.row(out))
   }
 
   /** Read raw logs: the [[scan]]'s channels, then `ride_id` and `ts_utc`,
@@ -132,9 +189,8 @@ object RawLogReader {
     val raw = scan(spark, paths, channels)
     // F1: date from filename → midnight UTC; F3: ts_utc = midnight + ms_today
     val datePart = regexp_extract(col("__file"), "(\\d{4})-(\\d{2})-(\\d{2})", 0)
-    // F2: ride id from parent folder name, else explicit, else unknown;
-    // input_file_name() is a URI, so a "ride log 7" folder reads "ride%20log%207"
-    val parent = regexp_extract(url_decode(col("__file")), "([^/]+)/[^/]+$", 1)
+    // F2: ride id from parent folder name, else explicit, else unknown
+    val parent = regexp_extract(col("__file"), "([^/]+)/[^/]+$", 1)
     // (?i) on the raw name instead of lower(): the pattern is ASCII, so the
     // ids are the same, and Spark 4's lower() initializes ICU (~2 s, once
     // per JVM) on the first upload's critical path
@@ -169,7 +225,7 @@ object RawLogReader {
   /** Production-mode load: channels only + sample_idx + ts_utc, every row
     * in ride `prod`. Rows are numbered across the whole call in
     * (`__file`, `__row`) order, so keep-first dedup on `sample_idx` keeps
-    * the first row in file order, as `VescPipeline.analyze` does.
+    * the first row in file order.
     */
   def readProd(spark: SparkSession, paths: Seq[String]): DataFrame =
     readRaw(spark, paths, VescSchema.ProdChannels, rideId = Some("prod")).drop("dt_ms")

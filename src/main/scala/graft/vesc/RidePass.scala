@@ -12,15 +12,18 @@ import org.apache.spark.sql.types.StructType
   * over one ride's rows.
   *
   * '''Sort-order contract.''' [[perRide]] is the only Spark plan: one
-  * exchange on `ride_id` (none when the caller has a single ride), one
-  * sort on (`ride_id`, the caller's order) and one `mapPartitions` that
-  * hands each ride's rows, in that order, to a function of this object.
-  * The callers sort by
+  * exchange on `ride_id`, one sort on (`ride_id`, the caller's order) and
+  * one `mapPartitions` that hands each ride's rows, in that order, to a
+  * function of this object. The callers sort by
   *  - (ms_today, file order) to resample: keep-first dedup is then "the
   *    first row of each run of equal ms_today", the grid is one forward
   *    pass and interpolation one forward and one backward scan;
   *  - sample_idx to assemble windows: a window is 30 consecutive rows;
   *  - t_mid (or tsec) to post-process for display.
+  * `VescPipeline.analyze` needs no Spark sort: each log is one ride, read
+  * whole inside one task, and [[resampleLog]] orders its lines by an index
+  * sort on (ms_today, nulls first under [[compare]]; line), the order the
+  * Spark sort on (ms_today, file, row) gives one file.
   *
   * '''Bit-identity.''' Every value equals, bit for bit, what the
   * declarative Spark plans these functions replaced computed (RidePassSpec
@@ -62,16 +65,11 @@ object RidePass {
     * `ride_id` and one sort on (`ride_id` +: `order`) within it: `pass`
     * maps each ride's rows, in that order, to rows of schema `out`. One
     * `mapPartitions` serves every ride of a partition.
-    *
-    * With `oneRide` the caller vouches that every row of `df` is one ride:
-    * its partitions are then coalesced into the pass's single task
-    * instead (no exchange, so the plan runs as one stage). The rows and
-    * their order within the ride are the same either way.
     */
-  def perRide(df: DataFrame, order: Seq[Column], out: StructType, oneRide: Boolean = false)(
+  def perRide(df: DataFrame, order: Seq[Column], out: StructType)(
       pass: IndexedSeq[Row] => Iterator[Row]): DataFrame = {
     require(df.columns.head == "ride_id", s"first column ${df.columns.head} is not ride_id")
-    (if (oneRide) df.coalesce(1) else df.repartition(col("ride_id")))
+    df.repartition(col("ride_id"))
       .sortWithinPartitions(col("ride_id") +: order: _*)
       .mapPartitions { rows =>
         val in = rows.buffered
@@ -107,16 +105,41 @@ object RidePass {
   })
 
   /** Resample one ride's rows, sorted by (ms_today, file order) with
-    * ms_today (any numeric type, integral) at field 1: keep-first dedup,
-    * then [[grid]] over the fields `channels`. Returns the kept rows, which
-    * [[Grid.src]] indexes, and the grid.
+    * ms_today (any numeric type, integral) at field 1: [[resampleLog]]
+    * over the fields `channels`, whose sort keeps the rows' order. Returns
+    * the kept rows, which [[Grid.src]] indexes, and the grid.
     */
   def resample(rows: IndexedSeq[Row], channels: Seq[Int], stepMs: Long,
                maxGapMs: Long): (IndexedSeq[Row], Grid) = {
-    val kept = keepFirst(rows.map(_.get(1))).toIndexedSeq.map(rows)
-    val tick = kept.map(r => if (r.isNullAt(1)) 0L else r.getAs[Number](1).longValue).toArray
-    (kept, grid(tick, kept.head.isNullAt(1), channels.map(Col.of(kept, _)).toIndexedSeq,
-      stepMs, maxGapMs))
+    val (kept, g) = resampleLog(Col.of(rows, 1), channels.map(Col.of(rows, _)).toIndexedSeq,
+      stepMs, maxGapMs)
+    (ArraySeq.unsafeWrapArray(kept).map(rows), g)
+  }
+
+  /** Resample one log's samples, given in line order: `ms` is ms_today
+    * and `channels` the columns to interpolate. The samples are ordered by
+    * an index sort on (ms_today, nulls first under [[compare]]; line),
+    * which is the Spark sort on (ms_today, file, row) for one file; then
+    * keep-first dedup and [[grid]]. Returns the kept samples, which
+    * [[Grid.src]] indexes, and the grid; both empty when there are no
+    * samples.
+    */
+  def resampleLog(ms: Col, channels: IndexedSeq[Col], stepMs: Long,
+                  maxGapMs: Long): (Array[Int], Grid) = {
+    val byTick: Ordering[Int] = (a, b) =>
+      if (ms.isNull(a) || ms.isNull(b)) {
+        if (ms.isNull(a) != ms.isNull(b)) (if (ms.isNull(a)) -1 else 1)
+        else Integer.compare(a, b)
+      } else {
+        val c = compare(ms.v(a), ms.v(b))
+        if (c != 0) c else Integer.compare(a, b)
+      }
+    val sorted = Array.range(0, ms.length).sorted(byTick)
+    val kept = keepFirst(ArraySeq.unsafeWrapArray(sorted).map(ms.get)).map(sorted)
+    val tick = kept.map(i => if (ms.isNull(i)) 0L else ms.v(i).toLong)
+    def gather(c: Col) = new Col(kept.map(c.v), kept.map(c.isNull))
+    (kept, grid(tick, kept.nonEmpty && ms.isNull(kept(0)), channels.map(gather), stepMs,
+      maxGapMs))
   }
 
   /** A ride's 10 Hz grid: `tick` (ms_today) ascending, `src` the input

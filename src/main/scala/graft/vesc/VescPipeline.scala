@@ -1,16 +1,16 @@
 package graft.vesc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField}
 
 /** End-to-end pipelines — the reference's three entry points (SURVEY §3)
   * as single lazy DataFrame DAGs. The reference materializes CSV between
   * stages (app.py:113-120); here Catalyst plans the whole flow at once.
-  * [[analyze]] reads its logs in one scan and runs the grid, windows,
-  * scores and display post-processing in one per-ride pass ([[RidePass]]):
-  * no exchange, no window operator and no join (AnalyzeOnceSpec pins this
-  * shape).
+  * [[analyze]] reads each log's bytes once and runs the parse, grid,
+  * windows, scores and display post-processing per log in one
+  * `mapPartitions` ([[RidePass]]): no CSV scan, no sort, no exchange, no
+  * window operator and no join (AnalyzeOnceSpec pins this shape).
   */
 object VescPipeline {
 
@@ -49,49 +49,62 @@ object VescPipeline {
   }
 
   /** Production analysis (reference app.py:354-366): raw log(s) → scored,
-    * conflict-suppressed, display-downsampled behavior timeline.
-    *
-    * One CSV scan ([[RawLogReader.scan]], its header read on the driver),
-    * one sort on (ms_today, file, row) and one [[RidePass.perRide]] pass.
-    * Every row is ride `prod`, so the call is one ride whatever the number
-    * of logs: the scan's splits are coalesced into the pass's single task,
-    * the plan has no exchange, and a `collect` is one Spark job of one
-    * stage.
-    *
-    * The pass runs, per ride: keep-first dedup (the sort puts the first row
-    * in file order first, so the reader's numbering is not needed), the
-    * 10 Hz grid ([[RidePass.resample]] over the model features — the
-    * production flavour's interpolated channels),
-    * the stride-aligned windows ([[RidePass.windows]]), scoring through
-    * [[CnnScorer.normalizedWindow]] and [[CnnScorer.scoreRanges]], and the
-    * display post-processing ([[RidePass.timeline]]). The scoring, the
-    * largest block of the pass, runs on every core inside the one task:
-    * the windows are split into one contiguous index range per core
-    * ([[CnnScorer.coreRanges]]), one on the task's thread and one on each
-    * worker of the JVM's common pool, each with its own
-    * [[CnnScorer.Trunk]]. Every value is
-    * bit-identical to composing [[Resampler.prodResample]],
-    * [[WindowAssembler.assemble]], [[CnnScorer.score]] and
-    * [[Postprocess.displayTimeline]].
+    * conflict-suppressed, display-downsampled behavior timeline, one ride
+    * per log. The logs are one `binaryFile` read ([[RawLogReader.logs]])
+    * handed to [[analyzeLogs]], so a call is one Spark job with no
+    * exchange, and each log is read once.
     */
   def analyze(spark: SparkSession, rawPaths: Seq[String],
               weights: CnnScorer.CnnWeights,
-              mean: Array[Double], std: Array[Double]): DataFrame = {
-    val raw = RawLogReader.scan(spark, rawPaths, VescSchema.ProdChannels)
-    val feats = VescSchema.FeatureCols.filter(raw.columns.contains)
+              mean: Array[Double], std: Array[Double]): DataFrame =
+    analyzeLogs(RawLogReader.logs(spark, rawPaths), weights, mean, std)
+
+  /** The analysis of `logs`, rows of the `binaryFile` source (its `path`
+    * and `content` are read, any other column only by `keep`; an upload
+    * micro-batch is such a table): one `mapPartitions` over them, each log
+    * one ride whose `ride_id` is its path, so `analyzeLogs(a ∪ b)` is
+    * `analyzeLogs(a) ∪ analyzeLogs(b)`. `keep` picks, from each
+    * partition's rows, the logs to analyze (all by default); a caller
+    * that picks among all of `logs` coalesces them into one partition
+    * first, as [[App]] does to analyze only the newest upload. Picking
+    * inside the pass adds no operator: a Dataset operator of its own would
+    * cost a cold upload two more generated classes and a second
+    * conversion of every row.
+    *
+    * Per log, inside the task that holds its row: [[RawLogReader.parse]]
+    * reads ms_today and the model features by the log's own header, then
+    * the 10 Hz grid ([[RidePass.resampleLog]]: an index sort by (ms_today,
+    * line), keep-first dedup, the grid over the model features), the
+    * stride-aligned windows ([[RidePass.windows]]), scoring through
+    * [[CnnScorer.normalizedWindow]] and [[CnnScorer.scoreRanges]], and the
+    * display post-processing ([[RidePass.timeline]]). No row is built per
+    * line. The scoring, the largest block of the pass, runs on every core
+    * inside the task: the windows are split into one contiguous index
+    * range per core ([[CnnScorer.coreRanges]]), one on the task's thread
+    * and one on each worker of the JVM's common pool, each with its own
+    * [[CnnScorer.Trunk]]. Every value is bit-identical to composing
+    * [[RawLogReader.readProd]], [[Resampler.prodResample]],
+    * [[WindowAssembler.assemble]], [[CnnScorer.score]] and
+    * [[Postprocess.displayTimeline]] on the log alone. A log is one row
+    * and one task, so a log is bounded by `binaryFile`'s 2 GB per file
+    * (VESC logs are megabytes); a call's logs spread over its tasks.
+    */
+  def analyzeLogs(logs: DataFrame, weights: CnnScorer.CnnWeights,
+                  mean: Array[Double], std: Array[Double],
+                  keep: Iterator[Row] => Iterator[Row] = identity): DataFrame = {
+    val feats = VescSchema.FeatureCols
     val cfCols = VescSchema.ConfidenceCols
     val groups = RidePass.conflictGroups(cfCols)
-    val model = spark.sparkContext.broadcast((weights, mean.map(_.toFloat), std.map(_.toFloat)))
-    val input = raw.select(Seq(lit("prod").as("ride_id"), col("ms_today"), col("__file"),
-      col("__row")) ++ feats.map(col): _*)
+    val model = logs.sparkSession.sparkContext
+      .broadcast((weights, mean.map(_.toFloat), std.map(_.toFloat)))
     val out = Postprocess.timelineSchema(StructField("ride_id", StringType, nullable = false),
       cfCols)
     val steps = WindowAssembler.Steps
-    val order = Seq(col("ms_today"), col("__file"), col("__row"))
-    RidePass.perRide(input, order, out, oneRide = true) { rows =>
+    logs.mapPartitions(rows => keep(rows).flatMap { file =>
       val (w, m, s) = model.value
-      val (_, g) = RidePass.resample(rows, feats.indices.map(4 + _), VescSchema.StepMs,
-        VescSchema.MaxGapMs.toLong)
+      val log = RawLogReader.parse(file.getAs[Array[Byte]]("content"), "ms_today" +: feats)
+      val (_, g) = RidePass.resampleLog(log.channels.head, log.channels.tail,
+        VescSchema.StepMs, VescSchema.MaxGapMs.toLong)
       val win = RidePass.windows(Array.tabulate(g.length)(_.toLong), 0,
         new RidePass.Col(g.tick.map(_.toDouble), new Array[Boolean](g.length)),
         RidePass.finiteCells(g.channels, g.length), feats.size, steps,
@@ -104,8 +117,8 @@ object VescPipeline {
       val scores = cfCols.indices.map(c =>
         new RidePass.Col(perWindow.map(_(c).toDouble), new Array[Boolean](win.length)))
       val tMid = new RidePass.Col(win.tMid, new Array[Boolean](win.length))
-      RidePass.timeline(rows.head.get(0), tMid, scores, groups, Export.DisplayDt)
-    }
+      RidePass.timeline(file.getAs[String]("path"), tMid, scores, groups, Export.DisplayDt)
+    })(Encoders.row(out))
   }
 
   /** Training preprocessing (reference training_preprocessing.py:280-324):

@@ -26,6 +26,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `VescPipeline`, `RidePass`) plans no window function;
   *  - the vesc read path (`RawLogReader`, `VescPipeline`, `CnnScorer`,
   *    `Normalizer`) declares every schema it reads;
+  *  - under `vesc/`, raw logs have one reader: only `RawLogReader`
+  *    tokenizes CSV, and only `Annotations` reads a CSV through Spark;
   *  - `TextQualityOps` builds one Kneser–Ney ladder (`knLogProb`, every
   *    order and grouping) and one tercile bucketizer (`bucketize`);
   *  - under `src/main`, only `CnnScorer.scoreRanges` fans work out to
@@ -161,6 +163,27 @@ class SessionDisciplineSpec extends AnyFunSuite {
     } yield s"$p:${i + 1}"
     assert(files.forall(f => sources.exists(_._1 == f)), s"missing one of $files")
     assert(offenders.isEmpty, s"a read without .schema(: ${offenders.mkString(", ")}")
+  }
+
+  test("the vesc raw logs have one reader") {
+    // a second tokenizer or a Spark CSV read of a log would read its
+    // channels by some other header rule than RawLogReader.parse's
+    val vesc = Paths.get("src/main/scala/graft/vesc")
+    def under(p: Path, names: String*) = p.startsWith(vesc) && !names.map(n =>
+      vesc.resolve(n + ".scala")).contains(p)
+    val tokenizer = for {
+      (p, lines) <- sources if under(p, "RawLogReader")
+      (l, i) <- lines.zipWithIndex if Seq("Csv" + "Parser", "Univocity" + "Parser").exists(l.contains)
+    } yield s"$p:${i + 1}"
+    // a CSV call is a write when its statement says .write within two lines
+    val csvRead = for {
+      (p, lines) <- sources if under(p, "Annotations")
+      (l, i) <- lines.zipWithIndex
+      if l.contains(".csv" + "(") || l.contains("format(\"" + "csv\")")
+      if !lines.slice((i - 2).max(0), i + 1).exists(_.contains(".write"))
+    } yield s"$p:${i + 1}"
+    assert(tokenizer.isEmpty, s"CSV tokenizer outside RawLogReader: ${tokenizer.mkString(", ")}")
+    assert(csvRead.isEmpty, s"CSV read outside Annotations: ${csvRead.mkString(", ")}")
   }
 
   test("TextQualityOps keeps one Kneser-Ney ladder and one tercile bucketizer") {

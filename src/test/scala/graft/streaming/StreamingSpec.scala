@@ -333,8 +333,9 @@ class StreamingSpec extends SparkSuite {
     val uploads = java.nio.file.Files.createTempDirectory("graft_uploads_")
     val results = scala.collection.mutable.ArrayBuffer
       .empty[Array[org.apache.spark.sql.Row]]
+    val (w, m, s) = graft.vesc.VescPipeline.bundled(spark)
     val q = StreamingPipeline.uploadAnalysis(spark, uploads.toString,
-      paths => graft.vesc.VescPipeline.analyze(spark, paths)) {
+      logs => graft.vesc.VescPipeline.analyzeLogs(logs, w, m, s)) {
       (timeline, _) => results.synchronized { results += timeline.collect() }
     }
 
@@ -354,30 +355,55 @@ class StreamingSpec extends SparkSuite {
       batch.map(_.toString).sorted.toSeq)
   }
 
-  test("upload arrival signal: the scan reads only the path and plans no exchange") {
+  test("upload micro-batch: its one scan is the upload's only read") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
     val uploads = java.nio.file.Files.createTempDirectory("graft_uploads_")
-    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
-    val plan = try {
-      java.nio.file.Files.write(uploads.resolve("a.csv"), "ms_today;\n1;\n".getBytes("UTF-8"))
+    val (w, m, s) = graft.vesc.VescPipeline.bundled(spark)
+    val timelines = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val rides = scala.collection.mutable.ArrayBuffer.empty[String]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val micro = try {
+      graft.vesc.SyntheticLog.write(uploads, seconds = 10, name = "a.csv")
       java.nio.file.Files.write(uploads.resolve("skip.txt"), "not a log".getBytes("UTF-8"))
       val q = StreamingPipeline.uploadAnalysis(spark, uploads.toString,
-        paths => { seen.synchronized { seen ++= paths }; spark.emptyDataFrame })((_, _) => ())
+        logs => graft.vesc.VescPipeline.analyzeLogs(logs, w, m, s)) { (timeline, _) =>
+        timelines.synchronized {
+          timelines += timeline
+          rides ++= timeline.collect().map(_.getString(0))
+        }
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
       try {
         q.processAllAvailable()
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
         // the micro-batch that carried the upload
         q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
-      } finally q.stop()
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        q.stop()
+      }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(uploads.toFile)
-    assert(seen.synchronized(seen.toList).map(p => new java.io.File(new java.net.URI(p)).getName)
-      == List("a.csv"))
-    val scans = plan.collect { case s: FileSourceScanExec => s }
+    val (batches, names) = timelines.synchronized((timelines.toList, rides.toList))
+    assert(batches.size == 1 && names.nonEmpty && names.forall(_.endsWith("/a.csv")), names)
+    assert(jobs.get == 1, s"the upload's micro-batch ran ${jobs.get} Spark jobs")
+    // the micro-batch scan reads each new file once, body included, and
+    // the analysis reads the micro-batch's rows, no file
+    val scans = micro.collect { case s: FileSourceScanExec => s }
     assert(scans.map(s => (s.relation.fileFormat.isInstanceOf[BinaryFileFormat],
-      s.requiredSchema.fieldNames.toSeq)) == Seq((true, Seq("path"))), plan.treeString)
-    assert(plan.collect { case e: Exchange => e }.isEmpty, plan.treeString)
+      s.requiredSchema.fieldNames.toSeq.sorted)) ==
+      Seq((true, Seq("content", "length", "modificationTime", "path"))), micro.treeString)
+    val analysis = batches.head.queryExecution.executedPlan
+    assert(analysis.collect { case s: FileSourceScanExec => s }.isEmpty, analysis.treeString)
+    Seq(micro, analysis).foreach(p =>
+      assert(p.collect { case e: Exchange => e }.isEmpty, p.treeString))
   }
 
   test("sft ingest stream: assembleChat + pack per drop matches batch exactly") {

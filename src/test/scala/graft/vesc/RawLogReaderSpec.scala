@@ -1,10 +1,8 @@
 package graft.vesc
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.expressions.Lower
 import org.apache.spark.sql.functions.col
 
@@ -13,9 +11,11 @@ import graft.SparkSuite
 /** Malformed numeric cells read as null (the reference's
   * `errors="coerce"`), also under ANSI mode, where a plain cast throws;
   * the ride id comes from a `ride log NN` parent directory in any case,
-  * without a `lower()` in the plan. The header read on the driver gives
-  * the schema Spark's own CSV inference gives, and the readers keep their
-  * columns.
+  * without a `lower()` in the plan. Each log is read by its own header,
+  * so logs of one ride that order or lack channels differently read every
+  * value under its own name, and the readers keep their columns.
+  * ([[RawLogReaderParitySpec]] checks the parser against Spark's CSV
+  * reader cell by cell.)
   */
 class RawLogReaderSpec extends SparkSuite {
 
@@ -48,69 +48,30 @@ class RawLogReaderSpec extends SparkSuite {
     } finally FileUtils.deleteDirectory(root.toFile)
   }
 
-  private def write(dir: Path, name: String, lines: String*): Path =
-    Files.write(dir.resolve(name), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-
-  /** The driver-read schema is Spark's inferred one for `paths`. */
-  private def assertInferred(paths: String*): Unit = {
-    val inferred = spark.read.option("sep", ";").option("header", "true").csv(paths: _*).schema
-    assert(RawLogReader.header(spark, paths) == inferred, paths.mkString(", "))
-  }
-
-  test("the driver-read header equals Spark's inferred schema") {
-    withTempDir("graft_raw_header_") { dir =>
-      assertInferred(SyntheticLog.write(dir, seconds = 2).toString)
-      // an empty name, a trailing separator, a case-insensitive and an exact duplicate
-      assertInferred(write(dir, "names.csv", "a;;B;b;x;x;", "1;2;3;4;5;6;").toString)
-      assertInferred(write(dir, "blank_first.csv", "", "  ", "", "ms_today;erpm", "1;2").toString)
-      // a tab is not blank to the inference (it trims spaces only)
-      assertInferred(write(dir, "tab_first.csv", "", "\t", "ms_today;erpm", "1;2").toString)
-      assertInferred(write(dir, "only_blank.csv", "", " ", "").toString)
-      val rides = Files.createDirectories(dir.resolve("ride log 3"))
-      SyntheticLog.write(rides, seconds = 2)
-      write(rides, "2025-03-04_10-05-00.csv", "ms_today;roll", "1;2")
-      write(rides, "_hidden.csv", "hidden;columns", "1;2")
-      assertInferred(rides.toString)
-      assertInferred(rides.toString + "/*.csv")
-      val empty = Files.createDirectories(dir.resolve("empty"))
-      Seq(intercept[AnalysisException](RawLogReader.header(spark, Seq(empty.toString))),
-        intercept[AnalysisException](spark.read.option("header", "true").csv(empty.toString))
-      ).foreach(e => assert(e.getCondition == "UNABLE_TO_INFER_SCHEMA", e.getMessage))
-    }
-  }
-
-  test("the header comes from the largest split, the first listed among equals, that is not blank") {
-    withTempDir("graft_raw_split_") { dir =>
-      // different sizes and headers; the largest is neither first nor last by name
-      write(dir, "a.csv", "small;x", "1;2")
-      write(dir, "b.csv", "large;y" +: Seq.fill(200)("1;2"): _*)
-      write(dir, "c.csv", "medium;z" +: Seq.fill(20)("1;2"): _*)
-      assertInferred(dir.toString)
-      assert(RawLogReader.header(spark, Seq(dir.toString)).fieldNames.toSeq == Seq("large", "y"))
-      assertInferred(Seq("a", "b", "c").map(f => dir.resolve(f + ".csv").toString): _*)
-      assertInferred(Seq("c", "a").map(f => dir.resolve(f + ".csv").toString): _*)
-      // splits capped below every file's size: all first splits tie
-      val conf = Seq("spark.sql.files.maxPartitionBytes" -> "8",
-        "spark.sql.files.openCostInBytes" -> "0")
-      val before = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-      try {
-        conf.foreach { case (k, v) => spark.conf.set(k, v) }
-        assertInferred(dir.toString)
-        assertInferred(Seq("c", "b", "a").map(f => dir.resolve(f + ".csv").toString): _*)
-        // blank lines filling the first two splits; the header starts in the
-        // short last split, so the inference reads on in the next file
-        val lead = write(dir, "lead.csv", Seq.fill(17)("") :+ "lead;w": _*).toString
-        val leadFirst = lead +: Seq("c", "a").map(f => dir.resolve(f + ".csv").toString)
-        assertInferred(leadFirst: _*)
-        assert(RawLogReader.header(spark, leadFirst).fieldNames.toSeq == Seq("medium", "z"))
-        // the header starts in a full split: it is read from the same file
-        val leadFull = write(dir, "lead_full.csv", Seq.fill(12)("") :+ "full;v" :+ "1;2": _*)
-        assertInferred(leadFull.toString +: leadFirst.tail: _*)
-        assertInferred(dir.toString)
-      } finally before.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+  test("each log reads its channels by its own header; a missing channel is null") {
+    withTempDir("graft_raw_own_header_") { root =>
+      val dir = Files.createDirectories(root.resolve("ride log 5"))
+      val prod = VescSchema.ProdChannels
+      val shuffled = new scala.util.Random(3).shuffle(prod)
+      // one ride of three logs: the default layout, its channels reordered
+      // and without roll; the same seed, so the same cells
+      Seq(("2025-03-04_10-00-00.csv", prod), ("2025-03-04_11-00-00.csv", shuffled),
+        ("2025-03-04_12-00-00.csv", prod.filterNot(_ == "roll"))).foreach {
+        case (name, columns) => SyntheticLog.write(dir, seconds = 5, name = name, columns = columns)
       }
+      val raw = RawLogReader.readTraining(spark, Seq(dir.toString))
+      assert(raw.select("ride_id").distinct().collect().map(_.getString(0)).toSeq == Seq("ride_05"))
+      val rows = raw.orderBy("sample_idx").collect()
+      assert(rows.length % 3 == 0 && rows.length > 0)
+      val n = rows.length / 3
+      val (first, reordered, lacking) = (rows.take(n), rows.slice(n, 2 * n), rows.drop(2 * n))
+      def cells(rs: Array[org.apache.spark.sql.Row], c: String) = rs.map(_.getAs[Any](c)).toSeq
+      prod.foreach { c =>
+        assert(cells(reordered, c) == cells(first, c), c)
+        if (c != "roll") assert(cells(lacking, c) == cells(first, c), c)
+      }
+      assert(cells(lacking, "roll").forall(_ == null))
+      assert(cells(first, "roll").forall(_ != null))
     }
   }
 
@@ -122,8 +83,9 @@ class RawLogReaderSpec extends SparkSuite {
         prod ++ Seq("ride_id", "ts_utc", "sample_idx", "dt_ms"))
       assert(RawLogReader.readProd(spark, path).columns.toSeq ==
         prod ++ Seq("ride_id", "ts_utc", "sample_idx"))
+      // every training channel, the GNSS ones the log lacks as nulls
       assert(RawLogReader.readTraining(spark, path).columns.toSeq ==
-        VescSchema.TrainingChannels.filter(prod.contains) ++
+        VescSchema.TrainingChannels ++
           Seq("ride_id", "ts_utc", "sample_idx", "dt_ms", "video_ts_anchor", "ts_pst") ++
           VescSchema.ConfidenceCols)
     }

@@ -60,22 +60,27 @@ class RidePassSpec extends SparkSuite with BeforeAndAfterAll {
   private def frame(schema: StructType, rows: Seq[Seq[Any]]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*), schema)
 
+  /** The declarative plans' timeline of each log alone, its ride id the
+    * log's path, over all of `paths`.
+    */
+  private def oracle(paths: Seq[String]): DataFrame = paths.map { p =>
+    val ride = RawLogReader.logs(spark, Seq(p)).select("path").head().getString(0)
+    DeclarativeOracle.analyze(spark, Seq(p), weights, mean, std).withColumn("ride_id", lit(ride))
+  }.reduce(_ union _)
+
   test("analyze: every timeline cell equals the declarative plan's") {
-    // two logs of one ride whose clocks overlap: deduplicated across files,
-    // the first file's row first
+    // two logs of one ride folder whose clocks overlap, and the same pair
+    // in two ride folders: each log is its own ride either way
     val ride = Files.createDirectories(dir.resolve("ride log 4"))
     val pair = Seq(SyntheticLog.write(ride, 40, 14, edges = true),
       SyntheticLog.write(ride, 40, 15, malformed = true, name = "2025-03-04_10-30-00.csv"))
-    // the same pair in two ride folders: one call numbers and deduplicates
-    // them together, still the first file's row first
     val apart = Seq(
       SyntheticLog.write(Files.createDirectories(dir.resolve("ride log 8")), 40, 14, edges = true),
       SyntheticLog.write(Files.createDirectories(dir.resolve("ride log 9")), 40, 15,
         malformed = true, name = "2025-03-04_10-30-00.csv"))
     val cases = rides.map(Seq(_)) :+ pair.map(_.toString) :+ apart.map(_.toString)
     val cells = cases.map { paths =>
-      same(VescPipeline.analyze(spark, paths, weights, mean, std),
-        DeclarativeOracle.analyze(spark, paths, weights, mean, std))
+      same(VescPipeline.analyze(spark, paths, weights, mean, std), oracle(paths))
     }
     assert(cells.forall(_ > 0) && cells.sum > 1000, cells)
   }
@@ -91,7 +96,7 @@ class RidePassSpec extends SparkSuite with BeforeAndAfterAll {
       val paths = Seq(head(samples))
       val got = VescPipeline.analyze(spark, paths, weights, mean, std)
       assert(got.count() == timeline, s"$samples samples")
-      same(got, DeclarativeOracle.analyze(spark, paths, weights, mean, std))
+      same(got, oracle(paths))
     }
   }
 

@@ -11,7 +11,10 @@ import java.nio.file.{Files, Path}
   * `current_motor` cell reads `1.2.3`. With `edges`, the log also has a
   * gap of exactly 250 ms and one of 260 ms, an empty and a `NaN` feature
   * cell, an empty `erpm` on its first row and one row without `ms_today`.
-  * Every log's clock starts at 10:00:00, whatever its file `name`.
+  * Every log's clock starts at 10:00:00, whatever its file `name`. With
+  * `columns` (a reordering or a subset of the production channels), the
+  * header and each line hold those channels in that order, every kept
+  * cell as in the default layout.
   */
 object SyntheticLog {
 
@@ -19,7 +22,8 @@ object SyntheticLog {
 
   def write(dir: Path, seconds: Int, seed: Long = 1,
             malformed: Boolean = false, edges: Boolean = false,
-            name: String = "2025-03-04_10-00-00.csv"): Path = {
+            name: String = "2025-03-04_10-00-00.csv",
+            columns: Seq[String] = VescSchema.ProdChannels): Path = {
     val rng = new scala.util.Random(seed)
     val channels = VescSchema.ProdChannels
     val n = seconds * 20
@@ -38,9 +42,11 @@ object SyntheticLog {
       rng.nextDouble() * 580 + 20, rng.nextDouble() * 2 * math.Pi))
     val swap = n / 3
     val order = (0 until n).map(i => if (i == swap) i + 1 else if (i == swap + 1) swap else i)
+    val picked = columns.map(channels.indexOf)
+    require(picked.forall(_ >= 0), s"not production channels: $columns")
     val lines = order.filterNot(dropped.contains).map { i =>
       val el = (ms(i) - start) / 1000.0
-      channels.zip(shape).map {
+      picked.map(c => (channels(c), shape(c))).map {
         case ("ms_today", _) if edges && i == n / 7 => ""
         case ("ms_today", _) => ms(i).toString
         case ("fault_code", _) => "0"
@@ -53,7 +59,7 @@ object SyntheticLog {
       }.mkString("", ";", ";")
     }
     val path = dir.resolve(name)
-    Files.write(path, (channels.mkString("", ";", ";") +: lines).mkString("\n")
+    Files.write(path, (columns.mkString("", ";", ";") +: lines).mkString("\n")
       .getBytes(StandardCharsets.UTF_8))
     path
   }
