@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.spark.sql.SparkSession
+import graft.streaming.{NearDupBench, StreamBench, StreamMeter}
+
 /** Benchmark entry: runs every SparkEntry query against
   * $SPARK_GRAFT_SF_DIR, forcing full evaluation through the noop sink
   * (a bare count() lets Catalyst prune the projections being measured).
@@ -64,9 +67,11 @@ object Bench {
     * quiet-vs-artifact ratio calibrates the box band for a re-measure. */
   private val ControlQueries = Seq("o3_topk_per_group", "j1_grid_align")
 
+  /** Median of `xs`; -1 (the no-sample marker) when empty. */
   private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2)
+    if (s.isEmpty) -1.0
+    else if (s.size % 2 == 1) s(s.size / 2)
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
@@ -140,8 +145,8 @@ object Bench {
     }
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    @volatile var streaming: Option[graft.streaming.StreamBench.Result] = None
-    @volatile var neardup: Option[graft.streaming.NearDupBench.Result] = None
+    @volatile var streaming: Option[StreamBench.Result] = None
+    @volatile var neardup: Option[NearDupBench.Result] = None
     @volatile var passesCompleted = 0
     @volatile var budgetHit = false
 
@@ -258,34 +263,24 @@ object Bench {
     //    + band-key state ceiling vs the analytic bound.
     val streamRuns =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_STREAM_RUNS", "3").toInt.max(1)
-    if (wanted.isEmpty || wanted.contains("streaming_resample")) {
-      try {
-        val rs = (1 to streamRuns).map { _ =>
-          val r = graft.streaming.StreamBench.run(spark)
-          streaming = Some(r); flush() // keep a kill-surviving partial row
-          r
-        }
-        val mid = rs.sortBy(_.seconds).apply((rs.size - 1) / 2)
-        streaming = Some(mid.copy(
-          maxStateRows = rs.map(_.maxStateRows).max,
-          rowsPerSec = mid.inputRows / math.max(mid.seconds, 1e-9)))
-      } catch { case e: Throwable => recordError("streaming_resample", e) }
-      flush()
-    }
-    if (wanted.isEmpty || wanted.contains("streaming_neardup")) {
-      try {
-        val rs = (1 to streamRuns).map { _ =>
-          val r = graft.streaming.NearDupBench.run(spark)
-          neardup = Some(r); flush()
-          r
-        }
-        val mid = rs.sortBy(_.seconds).apply((rs.size - 1) / 2)
-        neardup = Some(mid.copy(
-          maxStateRows = rs.map(_.maxStateRows).max,
-          docsPerSec = mid.inputDocs / math.max(mid.seconds, 1e-9)))
-      } catch { case e: Throwable => recordError("streaming_neardup", e) }
-      flush()
-    }
+    def streamRow[R <: StreamMeter.Row](name: String, run: SparkSession => R, keep: R => Unit)
+                                       (withCeiling: (R, Long) => R): Unit =
+      if (wanted.isEmpty || wanted.contains(name)) {
+        try {
+          val rs = (1 to streamRuns).map { _ =>
+            val r = run(spark)
+            keep(r); flush() // keep a kill-surviving partial row
+            r
+          }
+          val mid = rs.sortBy(_.seconds).apply((rs.size - 1) / 2)
+          keep(withCeiling(mid, rs.map(_.maxStateRows).max))
+        } catch { case e: Throwable => recordError(name, e) }
+        flush()
+      }
+    streamRow[StreamBench.Result]("streaming_resample", StreamBench.run(_),
+      r => streaming = Some(r))((r, max) => r.copy(maxStateRows = max))
+    streamRow[NearDupBench.Result]("streaming_neardup", NearDupBench.run(_),
+      r => neardup = Some(r))((r, max) => r.copy(maxStateRows = max))
 
     // INTERLEAVED passes: whole query set per pass, median per query ACROSS
     // passes. This VM stalls for minutes at a time; with back-to-back runs
@@ -411,12 +406,6 @@ object Bench {
       }
     }
     spark.stop()
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) -1.0
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
     val medians = (targets ++ controls).map(n => n -> median(samples(n))).toMap
     // patch the artifact in place, preserving everything else
     val m = Json.mapper

@@ -8,8 +8,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expression: apply a learned BPE merge table to one word,
   * returning the merged subword symbols joined by single spaces.
   *
-  * Why this exists next to [[graft.ops.TextOps.bpeSpaced]] (the codegen'd
-  * `replace` chain): the chain's expression DEPTH equals the merge count —
+  * Why this is not a codegen'd `replace` chain (the shape of the oracle's
+  * [[graft.ops.TextOps.bpeTokensSql]]): the chain's expression DEPTH equals
+  * the merge count —
   * fine at the 24-rule demo table, but a real tokenizer vocabulary
   * (32k merges) would blow past JIT/codegen method limits into interpreted
   * mode, or fail to compile outright. Here the table is plan-time DATA, not

@@ -84,23 +84,6 @@ object DecontamOps {
     grams.sorted
   }
 
-  /** Per-ROW contamination flag against a driver-collected benchmark
-    * set ([[benchNgramHashes]]) — a pure scan-side expression with NO
-    * join and NO aggregation, which is what an append-mode stream
-    * needs when its one allowed stateful op is already spent on dedup.
-    * Exactly [[ngramOverlap]]'s `is_contaminated` for the same n.
-    */
-  def ngramFlagRow(textCol: String, benchHashes: Seq[String],
-                   n: Int): Column = {
-    val grams = expr(
-      s"CASE WHEN size(regexp_extract_all(lower($textCol), '$TokPat', 0)) " +
-        s">= $n THEN transform(sequence(1, " +
-        s"size(regexp_extract_all(lower($textCol), '$TokPat', 0)) - ${n - 1}), " +
-        s"i -> md5(concat_ws(' ', slice(regexp_extract_all(lower($textCol), " +
-        s"'$TokPat', 0), i, $n)))) ELSE array() END")
-    arrays_overlap(grams, typedLit(benchHashes))
-  }
-
   private val ShingleN = 3
   private val NumHashes = 8
   private val Bands = 4

@@ -60,10 +60,6 @@ object IcebergOps {
       StructField("file_size_in_bytes", LongType, nullable = false))),
       nullable = false)))
 
-  /** The unpartitioned entry schema (back-compat surface). */
-  val manifestEntrySchemaUnpartitioned: StructType =
-    manifestEntrySchema(Nil)
-
   /** One (field-id → serialized value) pair of the spec's
     * `lower_bounds`/`upper_bounds` — Iceberg encodes these int-keyed
     * maps in avro as ARRAYS of key/value records (avro map keys must
@@ -582,16 +578,6 @@ object IcebergOps {
     }
     out.toSeq
   }
-
-  /** Live data-file paths of `snapshotId`, resolved through the
-    * CURRENT metadata json (version-hint, falling back to the highest
-    * vN.metadata.json) → that snapshot's manifest list → manifests.
-    * Refuses loudly on format-version ≠ 1, an unknown snapshot id, or
-    * a manifest outside the Avro subset (null from the decoder).
-    */
-  def icebergFiles(spark: org.apache.spark.sql.SparkSession,
-                   tableDir: String, snapshotId: Long): Seq[String] =
-    icebergEntries(tableDir, snapshotId)._2.map(_._1)
 
   /** The CURRENT metadata json: (version, parsed root). Resolution is
     * version-hint first, falling back to the highest vN on disk. */

@@ -144,18 +144,4 @@ object ImportanceOps {
       (dom, avg.toLong, w.toLong)
     }.toSeq.toDF("domain", "avg_weight_ppm", "weight_ppm")
   }
-
-  /** The selection step: importance-weighted top slice — keep documents
-    * whose log_ratio clears `minLogRatio` (the paper resamples
-    * proportionally to the weights; a threshold is the deterministic,
-    * rank-free variant — no global sort, each row decides locally).
-    */
-  def dsirSelect(df: DataFrame, docId: String, textCol: String,
-                 isTarget: Column, minLogRatio: Double,
-                 numBuckets: Int = 128): DataFrame =
-    df.join(
-      dsirLogRatio(df, docId, textCol, isTarget, numBuckets)
-        .filter(col("log_ratio") >= minLogRatio)
-        .select(col(docId), col("log_ratio")),
-      Seq(docId))
 }

@@ -15,7 +15,6 @@ import org.apache.spark.sql.types._
   *    actual PNG/JPEG/GIF/BMP container headers (dimensions + format) as a
   *    codegen'd scan-side expression — the decision data (route, filter,
   *    size-bucket) a curation pipeline needs before paying for pixels.
-  *    [[withMediaMeta]] exposes it alongside length/hash/mime.
   *  - '''pixel decode is a pluggable seam''': full JPEG/audio/video
   *    decoding needs native codec libraries that are intentionally NOT
   *    part of this engine; [[decodeFeatures]] takes any `Decoder` and the
@@ -24,27 +23,6 @@ import org.apache.spark.sql.types._
   *    tested end-to-end.
   */
 object MultimodalOps {
-
-  /** Canonical metadata for an opaque media blob. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("mime", StringType),
-    StructField("n_bytes", LongType),
-    StructField("sha_hex", StringType),
-    StructField("image", graft.functions.ImageHeader.schema)))
-
-  /** Attach metadata to a binary column: byte length + content hash + mime
-    * guess from magic bytes + parsed image header (format/width/height,
-    * null for non-images). Pure codegen'd expressions, no UDF.
-    */
-  def withMediaMeta(df: DataFrame, binCol: String): DataFrame = {
-    df.withColumn(binCol + "_meta", struct(
-      when(hex(substring(col(binCol), 1, 2)) === "FFD8", "image/jpeg")
-        .when(hex(substring(col(binCol), 1, 4)) === "89504E47", "image/png")
-        .otherwise("application/octet-stream").as("mime"),
-      octet_length(col(binCol)).cast("long").as("n_bytes"),
-      sha2(col(binCol), 256).as("sha_hex"),
-      call_function("image_header", col(binCol)).as("image")))
-  }
 
   /** Band-sign audio fingerprints over a mel spectrogram
     * (`array<array<long>>` from `audio_mel_frames`) — the

@@ -147,8 +147,4 @@ object PiiOps {
         col("n_email") + col("n_phone") + col("n_ssn") +
           col("n_ipv4_valid") + col("n_card_luhn") + col("n_iban_valid"))
   }
-
-  /** Shape-level redaction of all six classes into `outCol`. */
-  def redact(df: DataFrame, textCol: String, outCol: String): DataFrame =
-    df.withColumn(outCol, expr(sql.redacted(textCol, duck = false)))
 }

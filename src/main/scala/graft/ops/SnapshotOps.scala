@@ -127,73 +127,6 @@ object SnapshotOps {
         col("valid_to").isNull.as("is_current"): _*)
   }
 
-  /** INCREMENTAL SCD2 — the streaming sibling of [[scd2History]]:
-    * fold ONE batch of changelog entries onto an existing history
-    * table (the output shape of scd2History: payload + `valid_from`,
-    * `valid_to`, `is_current`). Open intervals of touched ids close
-    * at the id's first batch seq; the batch's own chain folds with
-    * the same keyed lead() window. Applying batches in arrival order
-    * is provably equal to one scd2History over the concatenated log
-    * (StreamingSpec pins the parity).
-    *
-    * Refuses loudly on: duplicate (id, seq) inside the batch (the
-    * scd2History posture), and a batch seq at or below a touched
-    * id's latest `valid_from` — cross-batch disorder must surface,
-    * not silently interleave history.
-    *
-    * Scale shape: one window keyed by id over the BATCH, one join of
-    * history against the batch's per-id first-seq table (broadcast —
-    * a micro-batch is small by construction); untouched history rows
-    * pass through without a shuffle on the history side beyond the
-    * id-keyed join.
-    */
-  def scd2Apply(history: DataFrame, log: DataFrame, idCol: String,
-                seqCol: String, opCol: String): DataFrame = {
-    val metaCols = Seq("valid_from", "valid_to", "is_current")
-    val payload = history.columns
-      .filterNot(c => c == idCol || metaCols.contains(c)).toSeq
-    val checkedSeq = when(col(seqCol) > 0, col(seqCol).cast("long"))
-      .otherwise(raise_error(lit("scd2Apply: log seq must be > 0")))
-    val events = log.select(
-      col(idCol) +: checkedSeq.as("__seq") +:
-        when(col(opCol).isin("upsert", "delete"), col(opCol))
-          .otherwise(raise_error(concat(
-            lit("scd2Apply: unknown op '"), col(opCol), lit("'"))))
-          .as("__op") +: payload.map(col): _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("__seq"), col("__op"))
-    val dupW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol), col("__seq"))
-    val folded = events
-      .withColumn("__seq",
-        when(count(lit(1)).over(dupW) > 1, raise_error(concat(
-          lit("scd2Apply: duplicate log entries for id '"),
-          col(idCol).cast("string"), lit("' at seq "),
-          col("__seq").cast("string")))).otherwise(col("__seq")))
-      .withColumn("valid_to", lead(col("__seq"), 1).over(w))
-    val newRows = folded.where(col("__op") === "upsert")
-      .select(col(idCol) +: payload.map(col) :+
-        col("__seq").as("valid_from") :+ col("valid_to") :+
-        col("valid_to").isNull.as("is_current"): _*)
-    val firstSeq = folded.groupBy(col(idCol))
-      .agg(min(col("__seq")).as("__first"))
-    val updated = history
-      .join(broadcast(firstSeq), Seq(idCol), "left")
-      .withColumn("valid_from",
-        when(col("__first").isNotNull && col("valid_from") >= col("__first"),
-          raise_error(concat(lit("scd2Apply: batch seq "),
-            col("__first").cast("string"),
-            lit(" is not after id '"), col(idCol).cast("string"),
-            lit("' latest interval")))).otherwise(col("valid_from")))
-      .withColumn("valid_to",
-        when(col("is_current") && col("__first").isNotNull, col("__first"))
-          .otherwise(col("valid_to")))
-      .withColumn("is_current",
-        col("is_current") && col("__first").isNull)
-      .drop("__first")
-    updated.unionByName(newRows.select(updated.columns.map(col): _*))
-  }
-
   // ---------------------------------------------------------------
   // Manifest-file SNAPSHOT ISOLATION — the lakehouse time-travel read
   // (Iceberg/Delta shape, minimal): a version IS its complete

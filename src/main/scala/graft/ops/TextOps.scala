@@ -31,21 +31,6 @@ object TextOps {
         i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
       .otherwise(array().cast("array<string>"))
 
-  /** ROUGE-N overlap between candidate and reference TOKEN ARRAYS —
-    * the summarization/extraction eval metric at corpus scale
-    * (Lin 2004): clipped multiset n-gram matches over reference length
-    * (recall), candidate length (precision), and their F1. Pure HOF
-    * arithmetic over two bounded arrays, scan-side; the clipped count
-    * is exact integer work, the three ratios are 4dp-quantized so an
-    * oracle replays them. Degenerate inputs (either side shorter than
-    * n) score 0, never null/NaN.
-    *
-    * Callers project token arrays into their own columns first (the
-    * [[shinglesOf]] contract).
-    */
-  def rougeN(cand: Column, ref: Column, n: Int): Column =
-    rougeFromGrams(shinglesOf(cand, n), shinglesOf(ref, n))
-
   /** SQuAD-style answer metrics (Rajpurkar et al. 2016) over
     * pre-normalized TOKEN ARRAYS: exact match (order-sensitive array
     * equality) and unigram multiset-overlap F1 — which collapses to
@@ -74,7 +59,11 @@ object TextOps {
         .otherwise(lit(0L)).as("f1_e4"))
   }
 
-  /** [[rougeN]] over PRE-MATERIALIZED gram array columns. The clipped
+  /** ROUGE-N overlap (Lin 2004) between two PRE-MATERIALIZED gram array
+    * columns ([[shinglesOf]] of the candidate and reference tokens):
+    * clipped multiset n-gram matches over reference length (recall),
+    * candidate length (precision) and their F1, 4dp-quantized so an
+    * oracle replays them; degenerate inputs score 0. The clipped
     * match references its inputs once per lambda element; passing a
     * shinglesOf EXPRESSION here would re-evaluate the whole gram
     * construction per reference inside the (interpreted) nested HOFs —
@@ -114,44 +103,10 @@ object TextOps {
     ("o", "o"), ("i", "s"), ("i", "t"), ("a", "l"), ("e", "d"),
     ("in", "g"), ("a", "r"), ("o", "f"), ("t", "o"))
 
-  /** Apply BPE merges to one word, in rank order, each merge replacing
-    * every current non-overlapping occurrence left-to-right — the
-    * subword-nmt `apply_bpe` definition (merges are applied in the order
-    * they were learned; a well-formed table lists a pair only after both
-    * of its components exist, so rank order is also dependency order).
-    *
-    * The trick that keeps this a pure codegen'd expression chain — no
-    * UDF, no loop, and REPLAYABLE VERBATIM IN SQL for the oracle — is
-    * the symbol encoding: the word becomes `"  s1  s2  ...  "` (symbols
-    * joined by TWO spaces, double-space guards at both ends), and merge
-    * (a,b)→ab is `replace(s, " a  b ", " ab ")`. Each pattern consumes
-    * one of the two boundary spaces on each side and the replacement
-    * restores it, so consecutive matches stay matchable ("a b a b" →
-    * "ab ab" in one pass) while `replace`'s resume-after-replacement
-    * scan gives exactly the left-to-right non-overlap BPE needs
-    * ("a a a" → "aa a"). The double separator makes a symbol boundary
-    * unforgeable: " a  b " can never match inside a larger symbol.
-    *
-    * Scale shape: one chained string expression per word inside
-    * `transform`, fully inside WholeStageCodegen, zero shuffle; the
-    * merge table is compiled into the plan (the moral equivalent of a
-    * broadcast — every executor holds the table, no join).
-    */
-  def bpeSpaced(word: Column, merges: Seq[(String, String)]): Column = {
-    val init = concat(lit("  "), regexp_replace(word, "(.)", "$1  "))
-    merges.foldLeft(init) { case (acc, (a, b)) =>
-      replace(acc, lit(s" $a  $b "), lit(s" $a$b "))
-    }
-  }
-
-  /** BPE token array of one word: merge, trim the guards, split on the
-    * double separator.
-    */
-  def bpeTokens(word: Column, merges: Seq[(String, String)] = DefaultBpeMerges): Column =
-    split(trim(bpeSpaced(word, merges)), "  ")
-
-  /** The same merge chain as DuckDB SQL over a word expression — the
-    * oracle replays the identical ranks, not a reimplementation.
+  /** BPE merges applied to one word in rank order (subword-nmt
+    * `apply_bpe`) as a DuckDB SQL `replace` chain over a word expression:
+    * the oracle of [[graft.functions.BpeApply]], replaying the identical
+    * ranks, not a reimplementation.
     */
   def bpeTokensSql(wordExpr: String,
                    merges: Seq[(String, String)] = DefaultBpeMerges): String = {
@@ -163,8 +118,8 @@ object TextOps {
   }
 
   /** BPE merge TRAINING — learn the `nMerges` highest-count merges from a
-    * corpus (the counterpart of [[bpeTokens]], which only applies a given
-    * table). The shape every production tokenizer trainer uses:
+    * corpus (the counterpart of [[bpeTokensSql]], which only applies a
+    * given table). The shape every production tokenizer trainer uses:
     *
     *  1. ONE distributed corpus pass builds the (word, freq) vocabulary —
     *     the only work that tracks corpus size — capped DETERMINISTICALLY
@@ -429,20 +384,14 @@ object TextOps {
   def cardCandidates(text: Column): Column =
     filter(regexp_extract_all(text, lit(CardRe), lit(0)), c => luhnOk(c))
 
-  /** Redact Luhn-valid card numbers with `<CARD>`, leaving checksum-
-    * failing digit runs (order numbers, SKUs) untouched — checksum-gated
-    * PII scrubbing, the pass regex-only pipelines cannot express. A
-    * candidate's characters are regex-inert (digits, spaces, dashes), so
-    * the fold's per-candidate `regexp_replace` is a literal replace.
-    */
-  def scrubCards(text: Column): Column =
-    scrubCardsFrom(cardCandidates(text), text)
-
-  /** [[scrubCards]] over an ALREADY-COMPUTED candidate array column —
+  /** Redact Luhn-valid card numbers with `<CARD>`, given the text's
+    * ALREADY-COMPUTED [[cardCandidates]] array column —
     * callers that also count the candidates project them into their own
     * column first, so the extract+Luhn pass (an interpreted HOF tree
     * that codegen subexpression elimination cannot deduplicate) runs
-    * once per row instead of once per consumer.
+    * once per row instead of once per consumer. A candidate's characters
+    * are regex-inert (digits, spaces, dashes), so each `regexp_replace` is
+    * a literal replace.
     */
   def scrubCardsFrom(cands: Column, text: Column): Column =
     aggregate(cands, text,

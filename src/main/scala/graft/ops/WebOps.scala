@@ -256,8 +256,7 @@ object WebOps {
   def extractPages(files: DataFrame, blob: Column): DataFrame = {
     // the ENTITY, not the raw body: a chunked or gzip'd capture must
     // never leak framing/compressed bytes into corpus text — refusals
-    // (entity_verdict != 'ok') contribute zero rows here and are
-    // COUNTED by httpAudit, the same posture as segmentAudit
+    // (entity_verdict != 'ok') contribute zero rows here
     extractRecords(files, blob)
       .filter(col("http_status") === 200 && col("entity_verdict") === "ok")
       .select(col("record_id"), col("target_uri"), col("http_status"),
@@ -284,21 +283,6 @@ object WebOps {
         call_function("charset_detect", col("entity"), col("__ct"))))
       .select(col("record_id"), col("target_uri"), col("http_status"),
         call_function("html_to_text", col("__txt")).as("text"))
-  }
-
-  /** Per-response entity-decode accounting — the HTTP-layer sibling of
-    * [[segmentAudit]]: verdict counts across all response records, so
-    * a 100 TB ingest can ALERT on `n_refused != 0` (a brotli rollout
-    * at a major host, a chunked-framing bug) instead of silently
-    * shipping the subset it could decode. One scan-side projection,
-    * one bounded agg (≤ verdict classes × files rows pre-agg).
-    */
-  def httpAudit(files: DataFrame, blob: Column): DataFrame = {
-    extractRecords(files, blob)
-      .filter(col("warc_type") === "response")
-      .groupBy(col("entity_verdict"))
-      .agg(count(lit(1)).as("n_records"),
-        sum(octet_length(col("payload")).cast("long")).as("n_payload_bytes"))
   }
 
   /** Per-segment QUARANTINE accounting — the loud-refusal companion to
@@ -428,11 +412,9 @@ object WebOps {
     * usually already partitioned by); step 4 is a max-struct agg — no
     * window, no sort.
     */
-  /** The rule group that governs `agent` per host: specific-agent rules
-    * when any exist, else the `*` group — the RFC 9309 group-selection
-    * step shared by [[robotsFilter]] and [[robotsRuleArrays]].
-    */
-  private def agentRuleGroup(robots: DataFrame, agent: String): DataFrame = {
+  def robotsFilter(urls: DataFrame, robots: DataFrame, agent: String): DataFrame = {
+    // RFC group selection: the specific-agent rules of a host when any
+    // exist, else its `*` group
     val rules = robots
       .select(col("host"),
         explode(call_function("robots_rules", col("txt"))).as("r"))
@@ -443,24 +425,7 @@ object WebOps {
           .when(col("agent") === "*", 1).otherwise(0))
       .filter(col("rank") > 0)
     val best = rules.groupBy(col("host")).agg(max(col("rank")).as("rank"))
-    rules.join(best, Seq("host", "rank"))
-  }
-
-  /** Per-host rule ARRAYS — the broadcastable robots gate for STREAMS:
-    * one row per host with its governing rules collected, so a streaming
-    * frontier can evaluate the best-match verdict scan-side (a
-    * stream-static join plus array HOFs) without any streaming
-    * aggregation. Robots tables are host-cardinality — broadcast-sized
-    * at any crawl scale.
-    */
-  def robotsRuleArrays(robots: DataFrame, agent: String): DataFrame = {
-    agentRuleGroup(robots, agent)
-      .groupBy(col("host"))
-      .agg(collect_list(struct(col("allow"), col("rule_path"))).as("rules"))
-  }
-
-  def robotsFilter(urls: DataFrame, robots: DataFrame, agent: String): DataFrame = {
-    val group = agentRuleGroup(robots, agent)
+    val group = rules.join(best, Seq("host", "rank"))
     val verdicts = urls
       .join(group, Seq("host"), "left")
       .withColumn("mlen",

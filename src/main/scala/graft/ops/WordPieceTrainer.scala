@@ -105,26 +105,4 @@ object WordPieceTrainer {
     }
     out.toSeq
   }
-
-  /** Greedy longest-match-first WordPiece INFERENCE (the published
-    * algorithm: repeatedly take the longest vocab piece matching a
-    * prefix of the rest of the word, `##`-prefixed after the first
-    * piece; a word with any unmatchable position becomes one `[UNK]`).
-    */
-  def encodeWord(w: String, vocab: Set[String]): Seq[String] = {
-    val out = mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < w.length) {
-      var j = w.length
-      var hit: String = null
-      while (hit == null && j > i) {
-        val cand = (if (i == 0) "" else "##") + w.substring(i, j)
-        if (vocab.contains(cand)) hit = cand else j -= 1
-      }
-      if (hit == null) return Seq("[UNK]")
-      out += hit
-      i = j
-    }
-    out.toSeq
-  }
 }

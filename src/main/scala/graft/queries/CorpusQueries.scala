@@ -481,7 +481,7 @@ object CorpusQueries extends QueryPack {
         .orderBy(col("doc_id"))
     }),
 
-    // ROUGE-1/2 eval (TextOps.rougeN): candidate = lead-12 tokens,
+    // ROUGE-1/2 eval (TextOps.rougeFromGrams): candidate = lead-12 tokens,
     // reference = tokens 5..20 — an overlapping extractive pair whose
     // clipped-multiset matches vary with each doc's repetition. The
     // oracle replays the gram construction, clipping, and 4dp ratios.

@@ -17,35 +17,12 @@ object NearDupBench {
 
   final case class Result(inputDocs: Long, bandRows: Long, seconds: Double,
                           docsPerSec: Double, maxStateRows: Long,
-                          bandKeyBound: Long, horizonCycles: Int)
+                          bandKeyBound: Long, horizonCycles: Int) extends StreamMeter.Row
 
   def run(spark: SparkSession, docsPerGen: Int = 4000, gens: Int = 4): Result = {
     implicit val s: SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-
-    val maxState = new java.util.concurrent.atomic.AtomicLong(0L)
-    val bandRows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        e.progress.stateOperators.foreach(so =>
-          maxState.getAndAccumulate(so.numRowsTotal, math.max _))
-        if (e.progress.sink.numOutputRows > 0)
-          bandRows.addAndGet(e.progress.sink.numOutputRows)
-      }
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val query = StreamingPipeline
-      .nearDupStream(input.toDF().toDF("doc_id", "ts", "text"),
-        "ts", "doc_id", "text", watermark = "2 seconds", retainMs = 2000L)
-      .writeStream.format("noop")
-      .outputMode(OutputMode.Append())
-      .start()
 
     // ~40-token synthetic docs; every 10th repeats base text (i - i%10) so
     // each batch carries real duplicate hits, and the +gen salt keeps
@@ -56,36 +33,29 @@ object NearDupBench {
       (0 until 40).map(t => s"w${(base * 31 + t * 7) % 4096}_g$g").mkString(" ")
     }
 
+    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
     val baseMs = 1700000000000L
-    var inputDocs = 0L
-    val t0 = System.nanoTime()
-    var seconds = 0.0
-    try {
-      (0 until gens).foreach { g =>
-        val genStart = baseMs + g * 60000L
-        val rows = (0 until docsPerGen).map { i =>
-          ((g.toLong * docsPerGen + i),
-            new java.sql.Timestamp(genStart + i), text(g, i))
-        }
-        input.addData(rows)
-        inputDocs += rows.size
-        query.processAllAvailable()
+    val m = StreamMeter.measure(spark, gens)(StreamingPipeline
+      .nearDupStream(input.toDF().toDF("doc_id", "ts", "text"),
+        "ts", "doc_id", "text", watermark = "2 seconds", retainMs = 2000L)
+      .writeStream.format("noop")
+      .outputMode(OutputMode.Append())
+      .start()) { g =>
+      val genStart = baseMs + g * 60000L
+      val rows = (0 until docsPerGen).map { i =>
+        ((g.toLong * docsPerGen + i),
+          new java.sql.Timestamp(genStart + i), text(g, i))
       }
-      seconds = (System.nanoTime() - t0) / 1e9
-    } finally {
-      query.stop()
-      Thread.sleep(200)
-      query.recentProgress.foreach(p => p.stateOperators.foreach(so =>
-        maxState.getAndAccumulate(so.numRowsTotal, math.max _)))
-      spark.streams.removeListener(listener)
+      input.addData(rows)
+      rows.size.toLong
     }
 
     // distinct texts per generation = docsPerGen·0.9 (every 10th repeats);
     // the watermark keeps ≤ 2 generations of band keys live
     val bound = 2L * 4L * math.ceil(docsPerGen * 0.9).toLong
-    Result(inputDocs, bandRows.get(), seconds,
-      docsPerSec = inputDocs / math.max(seconds, 1e-9),
-      maxStateRows = maxState.get(),
+    Result(m.inputRows, m.outputRows, m.seconds,
+      docsPerSec = m.inputRows / math.max(m.seconds, 1e-9),
+      maxStateRows = m.maxStateRows,
       bandKeyBound = bound,
       horizonCycles = gens - 1)
   }

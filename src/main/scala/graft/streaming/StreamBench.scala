@@ -13,13 +13,13 @@ import org.apache.spark.sql.streaming.OutputMode
   * bound (≈ one generation + the not-yet-expired previous one), never the
   * total ride count. Deterministic input (fixed epoch base, fixed
   * cadence), memory-source → noop sink, throughput = input rows / wall
-  * seconds over `processAllAvailable` barriers.
+  * seconds over `processAllAvailable` barriers ([[StreamMeter]]).
   */
 object StreamBench {
 
   final case class Result(inputRows: Long, outputRows: Long, seconds: Double,
                           rowsPerSec: Double, maxStateRows: Long,
-                          activeRideBound: Long, watermarkCycles: Int)
+                          activeRideBound: Long, watermarkCycles: Int) extends StreamMeter.Row
 
   def run(spark: SparkSession, ridesPerGen: Int = 80, samplesPerRide: Int = 800,
           gens: Int = 4): Result = {
@@ -27,74 +27,32 @@ object StreamBench {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
-    // every progress event flows through a listener, so the state ceiling
-    // is measured over ALL micro-batches — recentProgress alone is a
-    // bounded rolling buffer (default 100 entries) and could silently
-    // drop early batches from the "measured" claim. AtomicLongs because
-    // the listener runs on the event-bus thread and the driver thread
-    // reads the totals after stop(): plain vars carry no visibility
-    // guarantee across that handoff.
-    val maxState = new java.util.concurrent.atomic.AtomicLong(0L)
-    val outputRows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        e.progress.stateOperators.foreach(so =>
-          maxState.getAndAccumulate(so.numRowsTotal, math.max _))
-        if (e.progress.sink.numOutputRows > 0)
-          outputRows.addAndGet(e.progress.sink.numOutputRows)
-      }
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-
     val input = MemoryStream[StreamingPipeline.TimedSample]
-    val query = StreamingPipeline
+    val base = 1700000000000L // fixed epoch ms — deterministic event time
+    val stepMs = 300L         // 300 ms cadence → ~3 grid rows per sample pair
+    val m = StreamMeter.measure(spark, gens)(StreamingPipeline
       .resampleStreamExpiring(input.toDS(), watermark = "2 seconds",
         closeAfterMs = 2000L)
       .writeStream.format("noop")
       .outputMode(OutputMode.Append())
-      .start()
-
-    val base = 1700000000000L // fixed epoch ms — deterministic event time
-    val stepMs = 300L         // 300 ms cadence → ~3 grid rows per sample pair
-    var inputRows = 0L
-
-    val t0 = System.nanoTime()
-    var seconds = 0.0
-    try {
-      (0 until gens).foreach { g =>
-        // generation g: its own ride keys, event time 60 s past generation
-        // g-1 — the first sample of gen g pushes the watermark far beyond
-        // gen g-1's last sample + closeAfter, expiring all of its state
-        val genStart = base + g * 60000L
-        val rows = for {
-          r <- 0 until ridesPerGen
-          i <- 0 until samplesPerRide
-        } yield StreamingPipeline.TimedSample(
-          s"g${g}_r$r", new java.sql.Timestamp(genStart + i * stepMs),
-          (i % 17).toDouble)
-        input.addData(rows)
-        inputRows += rows.size
-        query.processAllAvailable()
-      }
-      seconds = (System.nanoTime() - t0) / 1e9
-    } finally {
-      query.stop()
-      // listener events are delivered asynchronously; give the bus a
-      // moment, then also fold in recentProgress as a backstop
-      Thread.sleep(200)
-      query.recentProgress.foreach { p =>
-        p.stateOperators.foreach(so =>
-          maxState.getAndAccumulate(so.numRowsTotal, math.max _))
-      }
-      spark.streams.removeListener(listener)
+      .start()) { g =>
+      // generation g: its own ride keys, event time 60 s past generation
+      // g-1 — the first sample of gen g pushes the watermark far beyond
+      // gen g-1's last sample + closeAfter, expiring all of its state
+      val genStart = base + g * 60000L
+      val rows = for {
+        r <- 0 until ridesPerGen
+        i <- 0 until samplesPerRide
+      } yield StreamingPipeline.TimedSample(
+        s"g${g}_r$r", new java.sql.Timestamp(genStart + i * stepMs),
+        (i % 17).toDouble)
+      input.addData(rows)
+      rows.size.toLong
     }
 
-    Result(inputRows, outputRows.get(), seconds,
-      rowsPerSec = inputRows / math.max(seconds, 1e-9),
-      maxStateRows = maxState.get(),
+    Result(m.inputRows, m.outputRows, m.seconds,
+      rowsPerSec = m.inputRows / math.max(m.seconds, 1e-9),
+      maxStateRows = m.maxStateRows,
       activeRideBound = 2L * ridesPerGen,
       watermarkCycles = gens - 1)
   }

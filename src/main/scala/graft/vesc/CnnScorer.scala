@@ -282,10 +282,9 @@ object CnnScorer {
   }
 
   /** One window's model input: [[fillWindow]], then the per-channel
-    * z-score `(x - mean) / std` in float32. [[score]],
-    * [[TrunkTrainer.normalizedWindows]] and [[HeadTrainer.trunkFeatures]]
-    * all normalize through here, so training and scoring see bit-identical
-    * inputs.
+    * z-score `(x - mean) / std` in float32. [[score]] and the trainers'
+    * [[HeadTrainer.modelInputs]] both normalize through here, so training
+    * and scoring see bit-identical inputs.
     */
   def normalizedWindow(rows: scala.collection.Seq[scala.collection.Seq[Any]],
                        mean: Array[Float], std: Array[Float]): Array[Array[Float]] = {

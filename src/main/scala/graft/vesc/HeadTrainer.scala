@@ -149,15 +149,6 @@ object HeadTrainer {
   private val MixA = 2654435761L // Knuth's multiplicative constant
   private val MixB = 40503L
 
-  /** Same assignment for a local replica (parity tests). */
-  def batchIdLocal(id: Long, epoch: Int, nBatches: Int): Long = {
-    val folded = id ^ (id >>> 20) ^ (id >>> 40)
-    val r1 = ((folded & MixMask) * MixA + epoch.toLong * MixB) >> 12
-    val r2 = ((r1 & MixMask) * MixA) >> 12
-    val v = r2 % nBatches
-    if (v < 0) v + nBatches else v
-  }
-
   /** The batch-id arithmetic as engine-neutral SQL (for oracles). The `>>`
     * high-bit folds assume a NON-NEGATIVE id expression (true of the
     * oracle's vec_id); negative xxhash ids are only ever assigned through
@@ -345,20 +336,5 @@ object HeadTrainer {
     }(org.apache.spark.sql.Encoders.row(outSchema))
     rows.withColumn("id", xxhash64(col("ride_id"), col("window_start")))
       .select("id", "ride_id", "window_start", out.name, "y")
-  }
-
-  /** Frozen-trunk feature extraction: assembled windows → (id, ride_id,
-    * window_start, feat: 64-d pooled trunk output, y) via [[modelInputs]].
-    */
-  def trunkFeatures(windows: DataFrame, wts: CnnScorer.CnnWeights,
-                    mean: Array[Double], std: Array[Double],
-                    confCols: Seq[String] = VescSchema.ConfidenceCols,
-                    hasLabels: Boolean = true): DataFrame = {
-    val bWts = windows.sparkSession.sparkContext.broadcast(wts)
-    modelInputs(windows, mean, std, confCols, hasLabels,
-      StructField("feat", ArrayType(DoubleType))) { () =>
-      val trunk = new CnnScorer.Trunk(bWts.value)
-      mat => trunk.run(mat).map(_.toDouble).toSeq
-    }
   }
 }

@@ -13,23 +13,6 @@ import org.apache.spark.sql.types._
   */
 object Postprocess {
 
-  /** Display downsample: consecutive blocks of `step` rows (in `tsec`
-    * order) are averaged; step = round(`displayDt` / median(diff tsec)),
-    * the exact `percentile` over the ride's spacings; the tail remainder is
-    * dropped (reference app.py:221-243, [[RidePass.displayBlocks]]).
-    * Output: ride_id, tsec, `scoreCols`.
-    */
-  def downsampleForDisplay(scored: DataFrame, scoreCols: Seq[String],
-                           displayDt: Double = 0.5): DataFrame = {
-    val input = scored.select((Seq("ride_id", "tsec") ++ scoreCols).map(c =>
-      if (c == "ride_id") col(c) else col(c).cast(DoubleType)): _*)
-    val out = timelineSchema(input.schema.head, scoreCols)
-    RidePass.perRide(input, Seq(col("tsec")), out) { rows =>
-      RidePass.displayBlocks(rows.head.get(0), RidePass.Col.of(rows, 1),
-        scoreCols.indices.map(i => RidePass.Col.of(rows, 2 + i)), displayDt)
-    }
-  }
-
   /** Full display pipeline over scored windows (ride_id, t_mid, score_*):
     * `score_<b>` becomes `cf_<b>`, then per ride, in `t_mid` order:
     * suppress conflicts, rebase to seconds from the ride's first window,

@@ -111,10 +111,6 @@ object TrunkGrad {
   private def logits(c: Trunk): Array[Double] =
     CnnScorer.logits(c.pooled, c.wts.head).map(_.toDouble)
 
-  /** Reproduces [[CnnScorer.forward]] through the cached path (spec hook). */
-  def forwardScores(window: Array[Array[Float]], wts: CnnWeights): Array[Float] =
-    CnnScorer.logits(forwardCached(window, wts).pooled, wts.head).map(CnnScorer.sigmoid)
-
   // ---- backward (double accumulation, flat (C, T) layout like the forward) ----
 
   /** dL/dInput of a conv layer whose (C_in, t) input was `x`; `dy` is

@@ -157,9 +157,9 @@ object TrunkTrainer {
     * resume training EXACTLY where it stopped (weights, Adam moments and
     * step count, best-checkpoint tracking, patience counter, and — for
     * batch-stats BN mode — the BN running statistics, which train-mode
-    * batches mutate). One row of parquet via
-    * [[saveCheckpoint]]/[[loadCheckpoint]]: the fault-tolerance story of
-    * a multi-day cluster run (S9 for the trainer, not just the scorer).
+    * batches mutate). `train`'s `onEpoch` hands it out and `resume` takes
+    * it back (one row of parquet round-trips it): the fault-tolerance story
+    * of a multi-day cluster run (S9 for the trainer, not just the scorer).
     */
   final case class TrunkState(p: Seq[Double], m: Seq[Double], v: Seq[Double],
                               t: Long, nextEpoch: Int, bestVal: Double,
@@ -185,26 +185,6 @@ object TrunkTrainer {
       l -> (mean, varb)
     }.toMap
     TrunkGrad.withBnStats(wts, stats)
-  }
-
-  def saveCheckpoint(spark: org.apache.spark.sql.SparkSession, path: String,
-                     st: TrunkState): Unit = {
-    import spark.implicits._
-    Seq(st).toDS().write.mode("overwrite").parquet(path)
-  }
-
-  def loadCheckpoint(spark: org.apache.spark.sql.SparkSession,
-                     path: String): TrunkState = {
-    import spark.implicits._
-    val df = spark.read.parquet(path)
-    // checkpoints written before the bnStats slot existed (frozen-BN-only
-    // builds) lack the column; the encoder does not apply case-class
-    // defaults, so supply the empty vector explicitly for forward compat
-    val compat =
-      if (df.columns.contains("bnStats")) df
-      else df.withColumn("bnStats",
-        org.apache.spark.sql.functions.typedLit(Seq.empty[Double]))
-    compat.as[TrunkState].head()
   }
 
   /** Full-network training through [[HeadTrainer.fit]], over the flat

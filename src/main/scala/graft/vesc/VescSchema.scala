@@ -35,9 +35,6 @@ object VescSchema {
     "cf_carve_left", "cf_carve_right", "cf_ascent", "cf_descent",
     "cf_traction_loss", "cf_idle", "cf_forward", "cf_reverse")
 
-  val GnssCols: Seq[String] = Seq(
-    "gnss_lon", "gnss_lat", "gnss_alt", "gnss_gVel", "gnss_vVel")
-
   /** The 24 model input features, in model channel order. */
   val FeatureCols: Seq[String] = Seq(
     "speed_meters_per_sec", "erpm", "duty_cycle", "current_in", "current_motor",
@@ -122,8 +119,6 @@ object VescSchema {
 
   val StepMs: Long = 100L
   val MaxGapMs: Double = 250.0
-  val WindowMs: Int = 3000
-  val StrideMs: Int = 500
   val MinValidRatio: Double = 0.7
   val LocalTz: String = "America/Los_Angeles"
 }

@@ -5,7 +5,7 @@ import graft.SparkSuite
 
 /** BPE contract tests across the three formulations:
   *
-  *  - plan-time replace chain (TextOps.bpeSpaced — oracle-replayable),
+  *  - plan-time replace chain (BpeChain, the twin of TextOps.bpeTokensSql),
   *  - runtime-looping native expression (functions.BpeApply — the 32k-rule
   *    scale path),
   *  - driver-side incremental trainer (BpeTrainer) vs a from-scratch
@@ -31,7 +31,7 @@ class BpeSpec extends SparkSuite {
     val words = corpusWords.union(adversarial.toDF("w"))
     val both = words.select(
         col("w"),
-        array_join(TextOps.bpeTokens(col("w")), " ").as("chain"),
+        array_join(BpeChain.bpeTokens(col("w")), " ").as("chain"),
         call_function("graft_bpe_apply", col("w")).as("rt"))
       .collect()
     assert(both.nonEmpty)

@@ -291,7 +291,7 @@ class CorpusOpsSpec extends SparkSuite {
     import spark.implicits._
     def seg(word: String, merges: Seq[(String, String)]): List[String] =
       Seq(word).toDF("w")
-        .select(TextOps.bpeTokens(col("w"), merges).as("t"))
+        .select(BpeChain.bpeTokens(col("w"), merges).as("t"))
         .as[List[String]].head()
 
     // expectations from an independent Python replay of subword-nmt
@@ -328,7 +328,7 @@ class CorpusOpsSpec extends SparkSuite {
     // learned table round-trips through the applier: o|t|h|e|r → he →
     // t+he → the+r leaves o|ther
     val seg = Seq("other").toDF("w")
-      .select(TextOps.bpeTokens(col("w"), merges.map(m => (m._1, m._2))).as("t"))
+      .select(BpeChain.bpeTokens(col("w"), merges.map(m => (m._1, m._2))).as("t"))
       .as[List[String]].head()
     assert(seg == List("o", "ther"))
     // single-char-word corpora have no pairs: training stops empty

@@ -10,6 +10,11 @@ import graft.SparkSuite
 class IcebergOpsSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Live data-file paths of `snapshotId`, through the current metadata
+    * json → that snapshot's manifest list → manifests. */
+  private def icebergFiles(tableDir: String, snapshotId: Long): Seq[String] =
+    IcebergOps.icebergEntries(tableDir, snapshotId)._2.map(_._1)
+
   test("iceberg: commit fold, time travel, scan list == manifest state") {
     withTempDir("graft_iceberg_") { dirPath =>
       val dir = dirPath.toString
@@ -21,11 +26,11 @@ class IcebergOpsSpec extends SparkSuite {
         removes = Seq("data/u1"))
       IcebergOps.icebergCommit(dir, 2, Seq("data/u1")) // re-add after remove
       // every snapshot resolves through the CURRENT (v3) metadata json
-      assert(IcebergOps.icebergFiles(spark, dir, 0).toSet ==
+      assert(icebergFiles(dir, 0).toSet ==
         Set("data/u0", "data/u1"))
-      assert(IcebergOps.icebergFiles(spark, dir, 1).toSet ==
+      assert(icebergFiles(dir, 1).toSet ==
         Set("data/u0", "data/u2"))
-      assert(IcebergOps.icebergFiles(spark, dir, 2).toSet ==
+      assert(icebergFiles(dir, 2).toSet ==
         Set("data/u0", "data/u2", "data/u1"))
       val s1 = IcebergOps.readIcebergSnapshot(spark, dir, 1)
       assert(s1.select("id").as[Long].collect().sorted.toSeq ==
@@ -34,7 +39,7 @@ class IcebergOpsSpec extends SparkSuite {
       assert(s1.inputFiles.forall(f => !f.contains("data/u1")))
       // unknown snapshot id refuses loudly
       intercept[IllegalArgumentException] {
-        IcebergOps.icebergFiles(spark, dir, 9)
+        icebergFiles(dir, 9)
       }
       // a divergent re-commit refuses; an identical one is idempotent —
       // and the refusal must leave the PUBLISHED chain byte-identical
@@ -107,7 +112,7 @@ class IcebergOpsSpec extends SparkSuite {
         new java.io.File(md, "version-hint.text").toPath,
         "1".getBytes("UTF-8"))
       val e = intercept[IllegalArgumentException] {
-        IcebergOps.icebergFiles(spark, dir, 0)
+        icebergFiles(dir, 0)
       }
       assert(e.getMessage.contains("format-version 3 unsupported"))
     }
@@ -122,17 +127,17 @@ class IcebergOpsSpec extends SparkSuite {
       java.nio.file.Files.write(mFile.toPath,
         java.util.Arrays.copyOfRange(whole, 0, whole.length - 7))
       intercept[IllegalArgumentException] {
-        IcebergOps.icebergFiles(spark, dir, 0)
+        icebergFiles(dir, 0)
       }
       // manifest-list length pin also catches silent truncation upstream
       val lFile = new java.io.File(dir, "metadata/snap-0.avro")
       java.nio.file.Files.write(mFile.toPath, whole) // restore manifest
       val lWhole = java.nio.file.Files.readAllBytes(lFile.toPath)
-      assert(IcebergOps.icebergFiles(spark, dir, 0) == Seq("data/p0"))
+      assert(icebergFiles(dir, 0) == Seq("data/p0"))
       java.nio.file.Files.write(lFile.toPath,
         java.util.Arrays.copyOfRange(lWhole, 0, lWhole.length - 7))
       intercept[IllegalArgumentException] {
-        IcebergOps.icebergFiles(spark, dir, 0)
+        icebergFiles(dir, 0)
       }
     }
   }
@@ -208,12 +213,12 @@ class IcebergOpsSpec extends SparkSuite {
         java.nio.file.Files.write(mFile.toPath, b)
         // either resolves (the flip hit a benign byte) or refuses with the
         // named IllegalArgumentException — never an index/NPE escape
-        try IcebergOps.icebergFiles(spark, dir, 0)
+        try icebergFiles(dir, 0)
         catch { case _: IllegalArgumentException => () }
         i += 1
       }
       java.nio.file.Files.write(mFile.toPath, whole)
-      assert(IcebergOps.icebergFiles(spark, dir, 0).toSet ==
+      assert(icebergFiles(dir, 0).toSet ==
         Set("data/p0", "data/p1"))
     }
   }
@@ -272,9 +277,9 @@ class IcebergOpsSpec extends SparkSuite {
       IcebergOps.icebergCommit(dir, 1, Seq("data/p1"))
       // drop the hint: the reader must fall back to max(vN)
       new java.io.File(dir, "metadata/version-hint.text").delete()
-      assert(IcebergOps.icebergFiles(spark, dir, 1).toSet ==
+      assert(icebergFiles(dir, 1).toSet ==
         Set("data/p0", "data/p1"))
-      assert(IcebergOps.icebergFiles(spark, dir, 0) == Seq("data/p0"))
+      assert(icebergFiles(dir, 0) == Seq("data/p0"))
     }
   }
 
@@ -292,7 +297,7 @@ class IcebergOpsSpec extends SparkSuite {
         new java.io.File(dir, "metadata/version-hint.text").toPath),
         "UTF-8").trim
       assert(hint == "3")
-      assert(IcebergOps.icebergFiles(spark, dir, 2).toSet ==
+      assert(icebergFiles(dir, 2).toSet ==
         Set("data/p0", "data/p1", "data/p2"))
     }
   }
@@ -318,7 +323,7 @@ class IcebergOpsSpec extends SparkSuite {
       val theirs = s"$dir/theirs"
       graft.queries.IcebergInteropFixture.write(theirs, abs)
       def canon(table: String, sid: Long): Set[String] =
-        IcebergOps.icebergFiles(spark, table, sid).map(p =>
+        icebergFiles(table, sid).map(p =>
           new java.io.File(p.stripPrefix("file:")).getCanonicalPath).toSet
       (0L to 2L).foreach { sid =>
         assert(canon(ours, sid) == canon(theirs, sid),
@@ -373,7 +378,7 @@ class IcebergOpsSpec extends SparkSuite {
         .select("id").as[Long].collect().sorted.toSeq ==
         Seq(1L, 2L, 3L, 4L, 5L))
       // delete files are referenced metadata, not orphans; never data
-      assert(IcebergOps.icebergFiles(spark, dir, 1).toSet == Set(f0, f1))
+      assert(icebergFiles(dir, 1).toSet == Set(f0, f1))
       assert(IcebergOps.orphanFiles(dir) == Nil)
       // v2 chains continue: snapshot 2 adds a file, deletes carry forward
       val f2 = oneFile(Seq((9L, "z")), "u2")
@@ -459,15 +464,15 @@ class IcebergOpsSpec extends SparkSuite {
       assert(!new java.io.File(dir, "data/gone").exists())
       assert(IcebergOps.orphanFiles(dir) == Nil)
       // retained snapshots stay readable; the expired one refuses
-      assert(IcebergOps.icebergFiles(spark, dir, 2).toSet ==
+      assert(icebergFiles(dir, 2).toSet ==
         Set("data/keep", "data/late"))
-      assert(IcebergOps.icebergFiles(spark, dir, 1) == Seq("data/keep"))
+      assert(icebergFiles(dir, 1) == Seq("data/keep"))
       intercept[IllegalArgumentException] {
-        IcebergOps.icebergFiles(spark, dir, 0)
+        icebergFiles(dir, 0)
       }
       // the current snapshot is always protected, even at retainLast=1
       assert(IcebergOps.expireSnapshots(dir, retainLast = 1) == Seq(1L))
-      assert(IcebergOps.icebergFiles(spark, dir, 2).toSet ==
+      assert(icebergFiles(dir, 2).toSet ==
         Set("data/keep", "data/late"))
       // expiring when nothing qualifies is a no-op
       assert(IcebergOps.expireSnapshots(dir, retainLast = 5) == Nil)
@@ -599,7 +604,7 @@ class IcebergOpsSpec extends SparkSuite {
         Seq((40L, 6.5)).toDF("id", "x").write.parquet(s"$dir/data/b3")
         IcebergOps.icebergCommit(dir, 1, Seq("data/b3"),
           statsCols = Seq("id", "x"))
-        assert(IcebergOps.icebergFiles(spark, dir, 1).toSet ==
+        assert(icebergFiles(dir, 1).toSet ==
           Set("data/b0", "data/b1", "data/b2", "data/b3"))
         assert(IcebergOps.boundsPrunedFiles(dir, 1, "id", 35L, 50L) ==
           Seq("data/b3"))
@@ -831,7 +836,7 @@ class IcebergOpsSpec extends SparkSuite {
       // manifests are re-referenced, zero data files touched
       IcebergOps.icebergCommitPartitioned(dir, 1, Seq("lang", "region"),
         Seq("data/lax" -> Seq("a", "x"), "data/lay" -> Seq("a", "y")))
-      assert(IcebergOps.icebergFiles(spark, dir, 1).toSet ==
+      assert(icebergFiles(dir, 1).toSet ==
         Set("data/la", "data/lb", "data/lax", "data/lay"))
       // per-file tuples reflect each file's OWN spec
       val maps = IcebergOps.icebergEntries(dir, 1)._2.toMap

@@ -18,24 +18,6 @@ class MultimodalSpec extends SparkSuite {
       .withColumn("blob", encode(col("text"), "UTF-8").cast("binary"))
   }
 
-  test("media metadata: byte length, hash, mime fallback") {
-    val out = MultimodalOps.withMediaMeta(docs, "blob")
-      .select(col("id"), col("blob_meta.n_bytes"), col("blob_meta.mime"),
-        col("blob_meta.sha_hex"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(out.map(t => (t._1, t._2)) == Set((1L, 11L), (2L, 0L), (3L, 43L)))
-    assert(out.forall(_._3 == "application/octet-stream"))
-  }
-
-  test("jpeg magic bytes detected") {
-    import spark.implicits._
-    val jpeg = Seq((1L, Array[Byte](0xFF.toByte, 0xD8.toByte, 0x01, 0x02)))
-      .toDF("id", "blob")
-    val mime = MultimodalOps.withMediaMeta(jpeg, "blob")
-      .select(col("blob_meta.mime")).collect()(0).getString(0)
-    assert(mime == "image/jpeg")
-  }
-
   // ---- real header decode (graft.functions.ImageHeader) ----
 
   private def hexBytes(hx: String): Array[Byte] =
@@ -259,18 +241,6 @@ class MultimodalSpec extends SparkSuite {
       "00000010 7472616B" + "00000008 746B6864")
     val gotV = parseVideoDf(Seq((1L, mp4EmptyTkhd)))
     assert(gotV(1L).contains(("mp4", 0, 0, 2000L)))
-  }
-
-  test("withMediaMeta exposes the parsed image header next to length/hash") {
-    import spark.implicits._
-    val png = hexBytes("89504E470D0A1A0A 0000000D 49484452 00000010 00000020 0806000000")
-    val rows = MultimodalOps.withMediaMeta(
-        Seq((1L, png), (2L, "plain".getBytes("UTF-8"))).toDF("id", "blob"), "blob")
-      .select(col("id"), col("blob_meta.mime"), col("blob_meta.image.width"),
-        col("blob_meta.image"))
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(rows(1L).getString(1) == "image/png" && rows(1L).getInt(2) == 16)
-    assert(rows(2L).isNullAt(3), "non-image blob must carry a null image header")
   }
 
   // ---- perceptual hashes over real BMP pixel data (ImageHash) ----

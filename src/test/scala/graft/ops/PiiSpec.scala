@@ -69,7 +69,8 @@ class PiiSpec extends SparkSuite {
       java.util.List.of(Row(1L, dirty)),
       StructType(Seq(StructField("doc_id", LongType),
         StructField("t", StringType))))
-    val red = PiiOps.redact(df, "t", "clean")
+    // the redaction query `text_pii_redact` projects
+    val red = df.withColumn("clean", expr(PiiOps.sql.redacted("t", duck = false)))
     val txt = red.collect()(0).getAs[String]("clean")
     assert(txt.contains("<EMAIL>") && txt.contains("<PHONE>") &&
       txt.contains("<SSN>") && txt.contains("<IP>") &&

@@ -167,21 +167,6 @@ class PlanAuditSpec extends SparkSuite {
     }
   }
 
-  test("scd2Apply joins history against a BROADCAST per-id first-seq table") {
-    import spark.implicits._
-    val hist = SnapshotOps.scd2History(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
-      Seq((1L, 1L, "upsert", "a1")).toDF("id", "seq", "op", "v"),
-      "id", "seq", "op")
-    val batch = Seq((1L, 5L, "upsert", "a5")).toDF("id", "seq", "op", "v")
-    val p = SnapshotOps.scd2Apply(hist, batch, "id", "seq", "op")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin"),
-      "the first-seq table must broadcast — history must not shuffle")
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"))
-  }
-
   test("near-dup pair generation never plans a cartesian product") {
     Seq("dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash_hamming",
       "dedup_embed_cosine", "dedup_substring_runs", "dedup_semdedup",

@@ -10,6 +10,29 @@ import graft.functions.WordPieceApply
   */
 class WordPieceSpec extends AnyFunSuite {
 
+  /** Greedy longest-match-first WordPiece inference (the published
+    * algorithm: repeatedly take the longest vocab piece matching a prefix
+    * of the rest of the word, `##`-prefixed after the first piece; a word
+    * with any unmatchable position becomes one `[UNK]`) — the reference
+    * encoder the native [[WordPieceApply]] is held to.
+    */
+  private def encodeWord(w: String, vocab: Set[String]): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = 0
+    while (i < w.length) {
+      var j = w.length
+      var hit: String = null
+      while (hit == null && j > i) {
+        val cand = (if (i == 0) "" else "##") + w.substring(i, j)
+        if (vocab.contains(cand)) hit = cand else j -= 1
+      }
+      if (hit == null) return Seq("[UNK]")
+      out += hit
+      i = j
+    }
+    out.toSeq
+  }
+
   test("likelihood selection prefers rare-symbol pairs over frequent pairs") {
     // "ab" appears 100x (common symbols), "xq" 2x (rare symbols):
     // score(ab) = 100/(100·100) = 0.01 < score(xq) = 2/(2·2) = 0.5 —
@@ -45,12 +68,12 @@ class WordPieceSpec extends AnyFunSuite {
     val vocab = Set("un", "##aff", "##able", "##ffa", "a", "##b", "##l", "##e",
       "##a", "##f")
     // longest-first at pos 0: "un"; then "##aff" (len 5 beats ##a/##f)
-    assert(WordPieceTrainer.encodeWord("unaffable", vocab) ==
+    assert(encodeWord("unaffable", vocab) ==
       Seq("un", "##aff", "##able"))
     // unmatchable start → [UNK]
-    assert(WordPieceTrainer.encodeWord("zoo", vocab) == Seq("[UNK]"))
+    assert(encodeWord("zoo", vocab) == Seq("[UNK]"))
     // unmatchable middle → whole word [UNK]
-    assert(WordPieceTrainer.encodeWord("unz", vocab) == Seq("[UNK]"))
+    assert(encodeWord("unz", vocab) == Seq("[UNK]"))
   }
 
   test("native expression agrees with the reference encoder") {

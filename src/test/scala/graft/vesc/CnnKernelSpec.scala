@@ -1,6 +1,7 @@
 package graft.vesc
 
 import java.lang.Float.floatToRawIntBits
+import java.lang.Double.doubleToRawLongBits
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -10,8 +11,8 @@ import CnnScorer.{BnW, CnnWeights, ConvW}
 
 /** The flat forward kernel ([[CnnScorer.Trunk]], `CnnScorer.conv1d`) is
   * bit-identical to the plain nested-array forward it replaced, which this
-  * spec keeps as the oracle: every score, pooled feature and cached-path
-  * score is compared by raw float bits on seeded windows, including
+  * spec keeps as the oracle: every score, pooled feature and training-path
+  * loss is compared by raw bits on seeded windows, including
   * all-zero, all −0.0, ±1e30 (overflow to ±inf inside the trunk),
   * subnormal and single-hot-channel windows and windows of several
   * lengths (edge, interior and remainder steps; buffer reallocation).
@@ -100,13 +101,16 @@ class CnnKernelSpec extends SparkSuite {
     }
   }
 
-  private def oracleHead(pooled: Array[Float], w: CnnWeights): Array[Float] =
+  private def oracleLogits(pooled: Array[Float], w: CnnWeights): Array[Float] =
     w.head.w.zipWithIndex.map { case (row, o) =>
       var acc = w.head.b(o)
       var j = 0
       while (j < row.length) { acc += row(j) * pooled(j); j += 1 }
-      (1.0 / (1.0 + math.exp(-acc.toDouble))).toFloat
+      acc
     }
+
+  private def oracleHead(pooled: Array[Float], w: CnnWeights): Array[Float] =
+    oracleLogits(pooled, w).map(z => (1.0 / (1.0 + math.exp(-z.toDouble))).toFloat)
 
   private def oracleForward(window: Array[Array[Float]], w: CnnWeights): Array[Float] =
     oracleHead(oraclePooled(window, w), w)
@@ -159,7 +163,13 @@ class CnnKernelSpec extends SparkSuite {
       val scores = oracleHead(pooled, wts)
       assertBits(s"$name forward", CnnScorer.forward(win, wts), scores)
       assertBits(s"$name trunkPooled", CnnScorer.trunkPooled(win, wts), pooled)
-      assertBits(s"$name forwardScores", TrunkGrad.forwardScores(win, wts), scores)
+      // the training forward, seen through its masked-BCE loss: the oracle
+      // logits' loss, bit for bit (class 0 unlabeled)
+      val y = Array.tabulate(scores.length)(k => if (k == 0) Double.NaN else (k % 3) / 2.0)
+      val (loss, labeled, _) = TrunkGrad.bceDz(oracleLogits(pooled, wts).map(_.toDouble), y)
+      val (gotLoss, gotLabeled) = TrunkGrad.rowLoss(win, y, wts)
+      assert(doubleToRawLongBits(gotLoss) == doubleToRawLongBits(loss) && gotLabeled == labeled,
+        s"$name rowLoss: $gotLoss vs $loss")
     }
   }
 

@@ -81,7 +81,7 @@ class HeadTrainerSpec extends SparkSuite {
       var num = 0.0; var den = 0.0
       var bi = 0
       while (bi < cfg.batches) {
-        val batch = train.filter(r => HeadTrainer.batchIdLocal(r._1, epoch, cfg.batches) == bi)
+        val batch = train.filter(r => SpecHooks.batchIdLocal(r._1, epoch, cfg.batches) == bi)
         val (gw, gb, loss, labeled) = pass(batch)
         val n = math.max(labeled.toDouble, 1.0)
         t += 1
@@ -176,7 +176,22 @@ class HeadTrainerSpec extends SparkSuite {
     assert(joined > 0)
     // and matches the local replica exactly
     e0.collect().foreach { r =>
-      assert(r.getLong(1) == HeadTrainer.batchIdLocal(r.getLong(0), 0, nB))
+      assert(r.getLong(1) == SpecHooks.batchIdLocal(r.getLong(0), 0, nB))
+    }
+  }
+
+  /** Frozen-trunk features of assembled windows through
+    * [[HeadTrainer.modelInputs]]: (id, ride_id, window_start, feat: the
+    * 64-d pooled trunk output, y).
+    */
+  private def trunkFeatures(windows: org.apache.spark.sql.DataFrame,
+                            wts: CnnScorer.CnnWeights, mean: Array[Double],
+                            std: Array[Double]) = {
+    val bWts = spark.sparkContext.broadcast(wts)
+    HeadTrainer.modelInputs(windows, mean, std, VescSchema.ConfidenceCols,
+      hasLabels = true, StructField("feat", ArrayType(DoubleType))) { () =>
+      val trunk = new CnnScorer.Trunk(bWts.value)
+      mat => trunk.run(mat).map(_.toDouble).toSeq
     }
   }
 
@@ -208,7 +223,7 @@ class HeadTrainerSpec extends SparkSuite {
     val windows = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
 
-    val feats = HeadTrainer.trunkFeatures(windows, weights, mean, std)
+    val feats = trunkFeatures(windows, weights, mean, std)
       .orderBy("window_start").collect()
     val scored = CnnScorer.score(windows, weights, mean, std)
       .orderBy("window_start").collect()

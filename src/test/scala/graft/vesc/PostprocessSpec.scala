@@ -57,7 +57,7 @@ class PostprocessSpec extends SparkSuite {
       StructField("cf_a", DoubleType), StructField("cf_b", DoubleType))))
     def blocks(df: DataFrame) =
       df.collect().toSeq.sortBy(r => (r.getString(0), r.getDouble(1)))
-    val got = blocks(Postprocess.downsampleForDisplay(scored, Seq("cf_a", "cf_b")))
+    val got = blocks(SpecHooks.downsampleForDisplay(scored, Seq("cf_a", "cf_b")))
     val want = blocks(downsampleJoin(scored, Seq("cf_a", "cf_b")))
     assert(got.map(_.getString(0)).distinct == Seq("a", "b", "c"))
     assert(got.count(_.getString(0) == "a") == 10 && got.count(_.getString(0) == "b") == 20)

@@ -203,7 +203,7 @@ class RidePassSpec extends SparkSuite with BeforeAndAfterAll {
     val rows = for ((ride, n, dt) <- Seq(("a", 33, 0.1), ("b", 2, 0.3)); i <- 0 until n)
       yield Seq[Any](ride, i * dt, if (rng.nextDouble() < 0.3) null else rng.nextDouble())
     val df = frame(schema, rows)
-    same(Postprocess.downsampleForDisplay(df, Seq("cf_a")),
+    same(SpecHooks.downsampleForDisplay(df, Seq("cf_a")),
       DeclarativeOracle.downsampleForDisplay(df, Seq("cf_a")))
   }
 }

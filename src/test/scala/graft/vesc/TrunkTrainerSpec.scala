@@ -33,6 +33,17 @@ class TrunkTrainerSpec extends SparkSuite {
     Array.fill(T, C)((rng.nextDouble() * 4 - 2).toFloat)
   }
 
+  /** A [[TrunkTrainer.TrunkState]] checkpoint as one row of parquet. */
+  private def saveCheckpoint(path: String, st: TrunkTrainer.TrunkState): Unit = {
+    import spark.implicits._
+    Seq(st).toDS().write.mode("overwrite").parquet(path)
+  }
+
+  private def loadCheckpoint(path: String): TrunkTrainer.TrunkState = {
+    import spark.implicits._
+    spark.read.parquet(path).as[TrunkTrainer.TrunkState].head()
+  }
+
   private def mkY(seed: Int): Array[Double] =
     Array.tabulate(K)(k =>
       if ((seed + k) % 5 == 0) Double.NaN else ((seed + k) % 3) / 2.0)
@@ -79,15 +90,6 @@ class TrunkTrainerSpec extends SparkSuite {
       loss += math.max(z, 0.0) - z * y(o) + math.log1p(math.exp(-math.abs(z)))
     }
     loss
-  }
-
-  test("cached forward reproduces CnnScorer.forward bit-for-bit") {
-    (0 until 4).foreach { s =>
-      val win = mkWindow(s)
-      val a = TrunkGrad.forwardScores(win, wts)
-      val b = CnnScorer.forward(win, wts)
-      assert(a.toSeq == b.toSeq, s"window $s")
-    }
   }
 
   test("analytic gradient matches finite differences of the double forward") {
@@ -380,7 +382,7 @@ class TrunkTrainerSpec extends SparkSuite {
       var bi = 0
       while (bi < cfg.batches) {
         val w = TrunkGrad.unflatten(p, wts)
-        val batch = train.filter(r => HeadTrainer.batchIdLocal(r._1, epoch, cfg.batches) == bi)
+        val batch = train.filter(r => SpecHooks.batchIdLocal(r._1, epoch, cfg.batches) == bi)
         val (g, _, labeled) = pass(batch, w)
         val nb = math.max(labeled.toDouble, 1.0)
         t += 1
@@ -450,8 +452,8 @@ class TrunkTrainerSpec extends SparkSuite {
     TrunkTrainer.train(toDf(trainRows), toDf(valRows), wts, cfg2.copy(epochs = 1),
       onEpoch = st => saved = Some(st))
     val loaded = withTempDir("graft_ckpt_") { dir =>
-      TrunkTrainer.saveCheckpoint(spark, dir.toString, saved.get)
-      TrunkTrainer.loadCheckpoint(spark, dir.toString)
+      saveCheckpoint(dir.toString, saved.get)
+      loadCheckpoint(dir.toString)
     }
     TrunkTrainer.train(toDf(trainRows), toDf(valRows), wts, cfg2, resume = Some(loaded))
     val left = entries -- before
@@ -471,8 +473,8 @@ class TrunkTrainerSpec extends SparkSuite {
     TrunkTrainer.train(toDf(trainRows), toDf(valRows), wts, cfg2,
       onEpoch = st => saved = Some(st))
     val loaded = withTempDir("graft_ckpt_") { dir =>
-      TrunkTrainer.saveCheckpoint(spark, dir.toString, saved.get)
-      TrunkTrainer.loadCheckpoint(spark, dir.toString)
+      saveCheckpoint(dir.toString, saved.get)
+      loadCheckpoint(dir.toString)
     }
     assert(loaded.nextEpoch == 2 && loaded.t == saved.get.t)
 
@@ -502,8 +504,8 @@ class TrunkTrainerSpec extends SparkSuite {
       onEpoch = st => saved = Some(st), batchStatsBn = true)
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_bn_").toFile
     try {
-      TrunkTrainer.saveCheckpoint(spark, dir.toString, saved.get)
-      val loaded = TrunkTrainer.loadCheckpoint(spark, dir.toString)
+      saveCheckpoint(dir.toString, saved.get)
+      val loaded = loadCheckpoint(dir.toString)
       assert(loaded.nextEpoch == 2 && loaded.t == saved.get.t)
       assert(loaded.bnStats == saved.get.bnStats)
       assert(loaded.bnStats != TrunkTrainer.flattenBnStats(wts), "running stats never moved")
